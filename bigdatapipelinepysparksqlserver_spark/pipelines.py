@@ -102,7 +102,7 @@ def run_pipeline_1(
     # single-flight check (C5) with stale-crash takeover (C4)
     fresh = [
         r.id
-        for r in ledger.read().collect()
+        for r in ledger.rows()
         if r.pipeline_status == RUNNING
         and r.exec_start is not None
         and (now - r.exec_start) < timedelta(minutes=stale_running_minutes)

@@ -142,17 +142,16 @@ class IncrementalMart:
             .select([f.name for f in CLIENT_SKETCH_PARTIAL.fields])
         )
 
+        # every partial keeps exactly the year_months that still have paid
+        # rows, so one collect over ``rows`` serves all three drops
+        kept = {r.year_month for r in rows.select("year_month").distinct().collect()}
+        stale = [(ym,) for ym in changed if ym not in kept]
         for partial, fresh in (
             (self.sales_partial, sales),
             (self.client_partial, pairs),
             (self.client_sketch_partial, sketches),
         ):
-            kept = {
-                r.year_month
-                for r in fresh.select("year_month").distinct().collect()
-            }
             partial.overwrite_partitions(fresh)
-            stale = [(ym,) for ym in changed if ym not in kept]
             if stale and partial.exists():
                 partial.drop_partition_values(stale)
 

@@ -106,7 +106,7 @@ def cdc_roundtrip_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
                 int(full.n),
                 str(full.amt),
             )
-            for r in ledger.read().orderBy("id").collect()
+            for r in ledger.rows()
         ]
         return spark.createDataFrame(
             rows,
@@ -351,7 +351,7 @@ def cdc_snapshot_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         statuses = {
             int(r.id): (r.pipeline_status, r.validation_status)
-            for r in ledger.read().collect()
+            for r in ledger.rows()
         }
         rows = [
             (1, *statuses[1], rows1, snap1, True),

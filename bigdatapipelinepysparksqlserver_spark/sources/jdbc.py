@@ -56,6 +56,28 @@ def normalize_identifier_quote(raw: str | None) -> str:
     return (raw or '"').strip()
 
 
+# SQLSTATEs for "table does not exist": Derby, SQL Server
+MISSING_TABLE_SQLSTATES = frozenset({"42X05", "42S02"})
+
+
+def is_missing_table(spark: SparkSession, exc: BaseException) -> bool:
+    """True when a JDBC read failed because the table does not exist:
+    some ``java.sql.SQLException`` in the Java cause chain carries one
+    of ``MISSING_TABLE_SQLSTATES``."""
+    from py4j.java_gateway import is_instance_of
+
+    gateway = spark.sparkContext._gateway
+    j = getattr(exc, "java_exception", None) or getattr(exc, "_origin", None)
+    while j is not None:
+        if (
+            is_instance_of(gateway, j, "java.sql.SQLException")
+            and j.getSQLState() in MISSING_TABLE_SQLSTATES
+        ):
+            return True
+        j = j.getCause()
+    return False
+
+
 def jdbc_scan_options(
     cfg: JdbcConfig,
     table: str,
@@ -307,7 +329,12 @@ class JdbcSourceTables:
     def read(self, name: str) -> DataFrame:
         try:
             df = read_jdbc(self.spark, self.cfg, name)
-        except Exception:  # table not created yet → legitimately empty
+        except Exception as e:
+            # a table not created yet is legitimately empty; any other
+            # failure (auth, network, missing database) must not read
+            # as "no rows", or the CDC loader would miss tombstones
+            if not is_missing_table(self.spark, e):
+                raise
             return self.spark.createDataFrame([], self.schemas[name])
         # normalize to the canonical schema (column order + exact types)
         return df.select(

@@ -109,6 +109,27 @@ def test_jdbc_truncate_overwrite_staging_protocol(spark, derby_cfg):
     assert read_jdbc(spark, derby_cfg, "STG").count() == 7
 
 
+def test_jdbc_source_read_fails_loud_except_missing_table(spark, derby_cfg):
+    """Only "table does not exist" reads as an empty source table; any
+    other failure (here: a database that is not there) must raise, or
+    the CDC loader would read an outage as "no rows" and miss deletes."""
+    from bigdatapipelinepysparksqlserver_spark.schemas import SALES
+    from bigdatapipelinepysparksqlserver_spark.sources.jdbc import JdbcSourceTables
+
+    empty = JdbcSourceTables(spark, derby_cfg).read("sales")
+    assert empty.schema == SALES
+    assert empty.collect() == []
+
+    gone = JdbcConfig(
+        url=f"jdbc:derby:{tempfile.mkdtemp(prefix='derby_')}/absent;create=false",
+        user="app",
+        password="app",
+        driver="org.apache.derby.jdbc.EmbeddedDriver",
+    )
+    with pytest.raises(Exception, match="not found"):
+        JdbcSourceTables(spark, gone).read("sales")
+
+
 @pytest.mark.slow
 def test_cdc_pipeline_with_jdbc_source(spark, derby_cfg, tmp_path):
     """The reference's real topology: SQL database as CDC source. The
