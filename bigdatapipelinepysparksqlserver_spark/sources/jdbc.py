@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+from py4j.java_gateway import is_instance_of
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 
 
@@ -60,14 +62,12 @@ def normalize_identifier_quote(raw: str | None) -> str:
 MISSING_TABLE_SQLSTATES = frozenset({"42X05", "42S02"})
 
 
-def is_missing_table(spark: SparkSession, exc: BaseException) -> bool:
+def is_missing_table(spark: SparkSession, exc: Py4JJavaError) -> bool:
     """True when a JDBC read failed because the table does not exist:
     some ``java.sql.SQLException`` in the Java cause chain carries one
     of ``MISSING_TABLE_SQLSTATES``."""
-    from py4j.java_gateway import is_instance_of
-
     gateway = spark.sparkContext._gateway
-    j = getattr(exc, "java_exception", None) or getattr(exc, "_origin", None)
+    j = exc.java_exception
     while j is not None:
         if (
             is_instance_of(gateway, j, "java.sql.SQLException")
@@ -329,7 +329,7 @@ class JdbcSourceTables:
     def read(self, name: str) -> DataFrame:
         try:
             df = read_jdbc(self.spark, self.cfg, name)
-        except Exception as e:
+        except Py4JJavaError as e:
             # a table not created yet is legitimately empty; any other
             # failure (auth, network, missing database) must not read
             # as "no rows", or the CDC loader would miss tombstones
