@@ -31,6 +31,7 @@ engine takes the clock as a parameter for deterministic tests.
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
 from datetime import datetime, timedelta
 
@@ -161,8 +162,9 @@ class RunLedger:
     def _write(self, rows: list[Row]) -> None:
         """Replace the ledger with ``rows``: write a hidden temp file,
         ``os.replace`` it onto ``DATA_FILE``, then delete everything
-        else in the directory (Spark-writer parts and markers, temp
-        files of interrupted writes). Readers see the old ledger or the
+        else in the directory (Spark-writer parts and markers, the
+        ``_temporary/`` tree of an interrupted Spark append, temp files
+        of interrupted writes). Readers see the old ledger or the
         new one, never neither."""
         os.makedirs(self.path, exist_ok=True)
         internal = [LEDGER.toInternal(r) for r in rows]
@@ -177,7 +179,11 @@ class RunLedger:
         os.replace(tmp, os.path.join(self.path, self.DATA_FILE))
         for n in os.listdir(self.path):
             if n != self.DATA_FILE:
-                os.remove(os.path.join(self.path, n))
+                p = os.path.join(self.path, n)
+                if os.path.isdir(p):
+                    shutil.rmtree(p)
+                else:
+                    os.remove(p)
 
 
 def _running_row(run_id: int, now: datetime, previous_cutoff: datetime | None,

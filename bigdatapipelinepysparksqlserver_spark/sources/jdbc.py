@@ -58,8 +58,10 @@ def normalize_identifier_quote(raw: str | None) -> str:
     return (raw or '"').strip()
 
 
-# SQLSTATEs for "table does not exist": Derby, SQL Server
-MISSING_TABLE_SQLSTATES = frozenset({"42X05", "42S02"})
+# SQLSTATEs for "table does not exist": Derby (42X05); SQL Server error
+# 208 "Invalid object name", which mssql-jdbc reports as S0002 by default
+# and as the X/Open 42S02 only when the URL sets xopenStates=true
+MISSING_TABLE_SQLSTATES = frozenset({"42X05", "S0002", "42S02"})
 
 
 def is_missing_table(spark: SparkSession, exc: Py4JJavaError) -> bool:

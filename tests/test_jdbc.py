@@ -130,6 +130,31 @@ def test_jdbc_source_read_fails_loud_except_missing_table(spark, derby_cfg):
         JdbcSourceTables(spark, gone).read("sales")
 
 
+@pytest.mark.parametrize("state", ["42X05", "S0002", "42S02"])
+def test_is_missing_table_walks_cause_chain(spark, state):
+    """Each listed SQLState marks a missing table wherever it sits in the
+    cause chain (SQL Server error 208 is S0002 unless the URL sets
+    xopenStates=true, then 42S02); other states, and chains without a
+    SQLException, do not."""
+    from py4j.protocol import Py4JJavaError
+
+    from bigdatapipelinepysparksqlserver_spark.sources.jdbc import is_missing_table
+
+    jvm = spark._jvm
+
+    def failure(sql_state):
+        cause = jvm.java.sql.SQLException("Invalid object name 'removed'.", sql_state, 208)
+        outer = jvm.java.lang.RuntimeException(
+            "Job aborted", jvm.java.lang.RuntimeException("task failed", cause)
+        )
+        return Py4JJavaError("An error occurred while calling o1.load.", outer)
+
+    assert is_missing_table(spark, failure(state))
+    assert not is_missing_table(spark, failure("08S01"))  # connection failure
+    plain = Py4JJavaError("x", jvm.java.lang.IllegalStateException(state))
+    assert not is_missing_table(spark, plain)
+
+
 @pytest.mark.slow
 def test_cdc_pipeline_with_jdbc_source(spark, derby_cfg, tmp_path):
     """The reference's real topology: SQL database as CDC source. The

@@ -141,6 +141,9 @@ def test_spark_written_ledger_migrates_on_first_mutation(spark, tmp_path):
     ]
     spark.createDataFrame(old, LEDGER).repartition(2).write.parquet(path)
     assert len(_visible(path)) == 2 and "_SUCCESS" in os.listdir(path)
+    # a Spark append killed mid-job leaves its staging tree behind
+    os.makedirs(os.path.join(path, "_temporary", "0"))
+    open(os.path.join(path, "_temporary", "0", "part-00000.parquet"), "wb").close()
 
     led = RunLedger(spark, path)
     assert led.rows() == old
