@@ -11,8 +11,10 @@ current_cutoff) — the boundary semantics that make CDC exactly-once
    deletes  (tombstone deleted_date in window, from `removed`)
 2. re-extract ONLY those partitions from the source, denormalized
    through the dim joins (J1)
-3. dynamic-partition-overwrite them into the lake (M6) — rebuild
-   naturally omits deleted rows (tombstones need no replay)
+3. replace those year_months in the lake with the extract in one
+   ``apply_rebuild`` (M6) — rebuild naturally omits deleted rows
+   (tombstones need no replay), and a partition the extract no longer
+   produces is dropped by the same call
 
 Known, intentional semantics (README.md:76 / SURVEY §7.5 risk 6):
 a record BACKDATED to before previous_cutoff whose row was inserted
@@ -125,48 +127,24 @@ class IncrementalLoader:
     ) -> list[int]:
         """Full incremental load; returns the rebuilt partition list.
 
-        Delete-to-empty cleanup: dynamic overwrite can only REPLACE
-        partitions present in the extract — a changed partition whose
-        rows were ALL deleted in this window produces no extract rows and
-        would silently keep its stale lake data forever. So after the
-        overwrite, any lake (year_month, country) partition under a
-        changed year_month that the extract no longer contains is dropped
-        explicitly. Both partition listings are partition-value scans
-        (tiny collects), bounded by the change set.
+        Delete-to-empty: a changed partition whose rows were ALL deleted
+        in this window produces no extract rows. ``apply_rebuild``
+        replaces every changed year_month WHOLE, so such a partition is
+        removed by the same write that rebuilds the rest — for both lake
+        kinds, with no partition-listing job.
         """
         parts = self.changed_partition_list(previous_cutoff, current_cutoff)
         if not parts:
             return []
         extract = self.extract_partitions(parts, current_cutoff)
-        if hasattr(self.lake, "apply_rebuild"):
-            # SnapshotLakeTable: the whole rebuild — changed-partition
-            # replace AND delete-to-empty cleanup — is one manifest swap
-            # (a single visibility event for concurrent readers), and
-            # the kept/stale diff job below is unnecessary: entries
-            # under a changed year_month the extract no longer produces
-            # simply drop out of the next manifest. Post-rebuild
-            # compaction is moot too — every live partition is wholly
-            # owned by the txn that last rebuilt it, so cross-run
-            # fragmentation cannot occur.
-            self.lake.apply_rebuild(extract, changed_year_months=parts)
-            return parts
-        pcols = list(self.lake.partition_cols)
-        kept = {
-            tuple(r[c] for c in pcols)
-            for r in extract.select(*pcols).distinct().collect()
-        }
-        self.lake.overwrite_partitions(extract)
-        if self.lake.exists():
-            existing = {
-                tuple(r[c] for c in pcols)
-                for r in self.lake.partitions()
-                .where(F.col("year_month").isin(parts))
-                .collect()
-            }
-            stale = sorted(existing - kept)
-            if stale:
-                self.lake.drop_partition_values(stale)
-        if self.compact_target_bytes is not None and self.lake.exists():
+        self.lake.apply_rebuild(extract, changed_year_months=parts)
+        # a SnapshotLakeTable needs no compaction: each live partition is
+        # wholly owned by the txn that last rebuilt it
+        if (
+            self.compact_target_bytes is not None
+            and isinstance(self.lake, LakeTable)
+            and self.lake.exists()
+        ):
             self.lake.compact_partitions(
                 target_file_bytes=self.compact_target_bytes,
                 only_under=[f"year_month={p}" for p in parts],

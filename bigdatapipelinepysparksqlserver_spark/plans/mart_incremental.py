@@ -20,9 +20,10 @@ re-aggregate everything. This module maintains the marts in two levels:
    megabytes where the lake is terabytes.
 
 ``refresh(changed)`` recomputes only the partials of partitions the CDC
-loader just rebuilt (partition-pruned lake scan), dynamic-overwrites
-them, and drops partials of partitions that vanished (delete-to-empty,
-same cleanup contract as ``plans.incremental``). Refresh cost is
+loader just rebuilt (partition-pruned lake scan) and replaces those
+year_months in each partial with one ``apply_rebuild``, which also
+drops partials of partitions that vanished (delete-to-empty, same
+contract as ``plans.incremental``). Refresh cost is
 ∝ change set; the full-scan path remains available as the bootstrap /
 repair / validation twin (``pipelines.mart_*_df``).
 """
@@ -117,10 +118,11 @@ class IncrementalMart:
     def refresh(self, changed: list[int]) -> None:
         """Recompute the partials of ``changed`` year_months only.
 
-        Idempotent (C4): dynamic overwrite rewrites each changed
-        partition to a pure function of the lake's current content, so
-        replays converge. Partitions with no surviving paid rows are
-        dropped from the partials (dynamic overwrite cannot clean them).
+        Idempotent (C4): each partial's changed year_months are
+        replaced whole by a pure function of the lake's current content,
+        so replays converge. A year_month with no surviving paid rows
+        has no fresh rows and is dropped by the same ``apply_rebuild``,
+        so the refresh runs no collect of its own.
         """
         if not changed:
             return
@@ -141,19 +143,12 @@ class IncrementalMart:
             .agg(F.hll_sketch_agg("client_id").alias("sk"))
             .select([f.name for f in CLIENT_SKETCH_PARTIAL.fields])
         )
-
-        # every partial keeps exactly the year_months that still have paid
-        # rows, so one collect over ``rows`` serves all three drops
-        kept = {r.year_month for r in rows.select("year_month").distinct().collect()}
-        stale = [(ym,) for ym in changed if ym not in kept]
         for partial, fresh in (
             (self.sales_partial, sales),
             (self.client_partial, pairs),
             (self.client_sketch_partial, sketches),
         ):
-            partial.overwrite_partitions(fresh)
-            if stale and partial.exists():
-                partial.drop_partition_values(stale)
+            partial.apply_rebuild(fresh, changed_year_months=changed)
 
     # -- final marts (small aggregates over partials) ---------------------
 

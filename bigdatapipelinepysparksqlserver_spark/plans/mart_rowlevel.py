@@ -201,7 +201,7 @@ class RowLevelMart:
         """new partial rows for ``touched`` year_months = old partial
         ⟗ delta with per-counter signed addition; groups whose count
         falls to 0 drop out; partitions with no surviving groups drop
-        from the partial's manifest."""
+        from the partial's manifest in the same publish."""
         old = partial.read().where(F.col("year_month").isin(touched))
         o, d = old.alias("o"), delta.alias("d")
         cond = reduce(
@@ -220,13 +220,7 @@ class RowLevelMart:
         fresh = merged.where(F.col(counters[0]) > 0).select(
             [f.name for f in partial.schema.fields]
         )
-        kept = {
-            r.year_month for r in fresh.select("year_month").distinct().collect()
-        }
-        partial.overwrite_partitions(fresh)
-        stale = [(ym,) for ym in touched if ym not in kept]
-        if stale:
-            partial.drop_partition_values(stale)
+        partial.apply_rebuild(fresh, changed_year_months=touched)
 
     def refresh_to(self, to_mid: int | None = None) -> list[int]:
         """Fold the change feed from the applied snapshot up to

@@ -7,8 +7,9 @@ only ``master`` and resource conf change, never the plan code.
 
 Defaults chosen for 100 TB-scale behavior:
 - AQE on (runtime coalescing, skew-join splitting, dynamic join re-plan)
-- dynamic partition overwrite (atomic-ish partition rebuild, reference's
-  drop-partition+insert collapses to one op — ``load_sales_history.py:172-173``)
+- dynamic partition overwrite, which ``LakeTable.compact_partitions``
+  needs to rewrite partitions in place (the CDC rebuild's staged swap
+  does not depend on it)
 - Arrow for any pandas interchange (the reference's driver-side pandas funnel
   is eliminated, but Pandas-UDF extension ops use Arrow batches)
 """

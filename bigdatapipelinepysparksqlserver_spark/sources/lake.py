@@ -2,17 +2,22 @@
 
 The reference manages a Hive table partitioned by (year_month, country)
 with explicit drop-partition + insert (`load_sales_history.py:101-103,
-:170-177`). Spark-first, that two-step collapses into ONE operation:
-``partitionOverwriteMode=dynamic`` + ``mode("overwrite")`` rewrites only
-the partitions present in the incoming DataFrame and leaves every other
-partition untouched — atomic per partition, idempotent on retry (C4).
+:170-177`). Here that two-step is ONE staged swap
+(:meth:`LakeTable.overwrite_partitions`): the incoming DataFrame is
+written once into a hidden ``_stage-<uuid>`` directory under the table
+root, then directory renames swap each written partition in for its
+live twin. ``replace`` names leading-key values to replace WHOLE, so a
+value the new data no longer produces is removed in the same swap —
+delete-to-empty cleanup needs no partition-listing job. Unrelated
+partitions are never touched, and the write does not depend on the
+session's ``partitionOverwriteMode``.
 
 Path-based tables (no metastore dependency) so the same code runs under
 plain local Spark, a Hive metastore, or a lakehouse catalog.
 
 Scale notes:
-- dynamic overwrite touches exactly the changed partitions — rebuild cost
-  is proportional to the CHANGE SET, never the table (the whole point of
+- the swap touches exactly the changed partitions — rebuild cost is
+  proportional to the CHANGE SET, never the table (the whole point of
   partition-grain CDC at 100 TB).
 - writes coalesce to a bounded file count per partition to avoid the
   small-files problem the reference calls out (README.md:62).
@@ -21,12 +26,17 @@ Scale notes:
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 from collections.abc import Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schemas import LAKE_PARTITION_COLS
+from .lake_snapshot import escape_partition_value
+
+STAGE_PREFIX = "_stage-"
 
 
 class LakeTable:
@@ -80,23 +90,89 @@ class LakeTable:
         full-window extract)."""
         self._writer(df).mode("overwrite").parquet(self.path)
 
-    def overwrite_partitions(self, df: DataFrame) -> None:
-        """M6 — dynamic partition overwrite: replaces exactly the partitions
-        present in ``df`` (the drop+insert of load_sales_history.py:172-173
-        as one atomic-per-partition op). Requires
-        spark.sql.sources.partitionOverwriteMode=dynamic (session factory
-        sets it; asserted here because static mode would TRUNCATE the
-        table — a silent data-loss failure mode)."""
-        mode = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        if (mode or "").lower() != "dynamic":
-            raise RuntimeError(
-                "partitionOverwriteMode must be 'dynamic' for partition-grain "
-                f"overwrite (got {mode!r}); static mode would drop unrelated partitions"
-            )
-        if not self.exists():
-            self.write_full(df)
+    def overwrite_partitions(self, df: DataFrame, replace: Sequence = ()) -> None:
+        """M6 — staged partition swap: the drop+insert of
+        load_sales_history.py:172-173 as one write plus directory renames.
+
+        ``df`` is written once into ``<root>/_stage-<uuid>`` (a name
+        without ``=``, so Spark's file index and :meth:`exists` ignore
+        it). Then every leaf partition ``df`` produced replaces its live
+        twin, and every leading-key value in ``replace`` is replaced as
+        a whole directory — removed outright when ``df`` has no rows for
+        it, which is the delete-to-empty case. Partitions outside both
+        sets are never touched, whatever the session's
+        ``partitionOverwriteMode``. Replaced directories move into the
+        stage directory, which is deleted on the way out.
+
+        An exception before the first rename leaves the live table
+        untouched. Each partition swap is two renames (live out, new
+        in), so a partition is never a mix of old and new files, but a
+        multi-partition swap is not atomic as a whole — the same
+        per-partition commit Spark's dynamic overwrite makes, and a
+        crash mid-swap is repaired by re-running the rebuild.
+        :class:`~.lake_snapshot.SnapshotLakeTable` is the lake with one
+        visibility event. Single writer: a ``_stage-*`` directory found
+        at the start of a write is a killed writer's leftover and is
+        deleted, so two concurrent writers on one table are not
+        supported (nor were they under dynamic overwrite)."""
+        self._sweep_stages()
+        stage = os.path.join(self.path, f"{STAGE_PREFIX}{uuid.uuid4().hex}")
+        try:
+            self._writer(df).mode("errorifexists").parquet(stage)
+            self._swap_in(stage, replace)
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
+
+    def apply_rebuild(self, df: DataFrame, changed_year_months: Sequence = ()) -> None:
+        """One CDC rebuild: replace every partition under
+        ``changed_year_months`` with ``df``'s rows for it, dropping those
+        ``df`` no longer produces (same contract as
+        :meth:`~.lake_snapshot.SnapshotLakeTable.apply_rebuild`)."""
+        self.overwrite_partitions(df, replace=changed_year_months)
+
+    def _sweep_stages(self) -> None:
+        if not os.path.isdir(self.path):
             return
-        self._writer(df).mode("overwrite").parquet(self.path)
+        for name in os.listdir(self.path):
+            if name.startswith(STAGE_PREFIX):
+                shutil.rmtree(os.path.join(self.path, name))
+
+    def _swap_in(self, stage: str, replace: Sequence) -> None:
+        """Move the staged partitions into the live table (see
+        :meth:`overwrite_partitions`)."""
+        lead = self.partition_cols[0]
+        whole = {f"{lead}={escape_partition_value(v)}" for v in replace}
+        rels = sorted(whole) + [
+            rel
+            for rel in self._leaf_rels(stage, 0)
+            if rel.split(os.sep, 1)[0] not in whole
+        ]
+        trash = os.path.join(stage, "_replaced")
+        os.mkdir(trash)
+        for i, rel in enumerate(rels):
+            live, new = os.path.join(self.path, rel), os.path.join(stage, rel)
+            if os.path.isdir(live):
+                os.rename(live, os.path.join(trash, str(i)))
+            if os.path.isdir(new):
+                os.makedirs(os.path.dirname(live), exist_ok=True)
+                os.rename(new, live)
+
+    def _leaf_rels(self, base: str, level: int) -> list[str]:
+        """Leaf partition directories under ``base`` (which sits at
+        partition depth ``level``), relative to ``base``."""
+        if not os.path.isdir(base):
+            return []
+        key = f"{self.partition_cols[level]}="
+        out = []
+        for name in os.listdir(base):
+            if not name.startswith(key):
+                continue
+            if level + 1 == len(self.partition_cols):
+                out.append(name)
+            else:
+                sub = self._leaf_rels(os.path.join(base, name), level + 1)
+                out.extend(os.path.join(name, rel) for rel in sub)
+        return out
 
     def drop_partitions(self, values: Sequence[int | str], key: str | None = None) -> None:
         """S5 — explicit partition drop (ALTER TABLE ... DROP PARTITION).
@@ -108,8 +184,6 @@ class LakeTable:
         key = key or self.partition_cols[0]
         if key != self.partition_cols[0]:
             raise ValueError(f"can only drop on leading partition key {self.partition_cols[0]!r}")
-        import shutil
-
         for v in values:
             d = os.path.join(self.path, f"{key}={v}")
             if os.path.isdir(d):
@@ -117,13 +191,10 @@ class LakeTable:
 
     def drop_partition_values(self, rows: Sequence[Sequence]) -> None:
         """Drop fully-qualified partitions, one (value per partition col,
-        in ``partition_cols`` order) tuple each — the cleanup path for
-        partitions whose content disappeared entirely (dynamic overwrite
-        can only REPLACE partitions present in the incoming frame; an
-        all-rows-deleted partition is present in nothing and needs an
-        explicit drop)."""
-        import shutil
-
+        in ``partition_cols`` order) tuple each. Rebuilds do not need it
+        (``overwrite_partitions``' ``replace`` removes partitions whose
+        content disappeared); this is the explicit retention/cleanup
+        drop below the leading key."""
         root = os.path.abspath(self.path)
         for vals in rows:
             if len(vals) != len(self.partition_cols):

@@ -1,8 +1,8 @@
 """Snapshot-isolated partitioned lake — manifest-versioned publishes.
 
 Closes the last dirty-read window in the engine (VERDICT r8 #1): the
-plain :class:`~.lake.LakeTable` rebuild relies on Spark's dynamic
-partition overwrite, which commits PER PARTITION — a reader concurrent
+plain :class:`~.lake.LakeTable` rebuild swaps partition directories
+in one at a time, so it commits PER PARTITION — a reader concurrent
 with a multi-partition CDC rebuild can observe some partitions new and
 some old. The reference's mart publish avoids exactly this with a
 staging→final transactional swap (`load_sales_mart.py:92-102`); this

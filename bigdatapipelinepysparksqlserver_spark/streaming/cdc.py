@@ -8,8 +8,8 @@ Spark-native deployment can run the same semantics continuously:
 - the 5-minute cutoff lag ≙ ``withWatermark`` (late-data tolerance)
 - the per-run half-open window ≙ micro-batch boundaries (each batch is
   exactly-once within the query's checkpoint)
-- the partition rebuild ≙ a ``foreachBatch`` sink doing dynamic
-  partition overwrite per micro-batch
+- the partition rebuild ≙ a ``foreachBatch`` sink doing a partition
+  overwrite (``LakeTable.overwrite_partitions``) per micro-batch
 
 Everything here takes/returns DataFrames so the same transformations
 compose on a batch frame in tests (Structured Streaming's unified
@@ -190,8 +190,8 @@ def streaming_interval_join(
 def foreach_batch_partition_overwrite(
     lake: LakeTable, transform: Callable[[DataFrame], DataFrame] | None = None
 ) -> Callable[[DataFrame, int], None]:
-    """foreachBatch sink: each micro-batch dynamic-partition-overwrites
-    the lake partitions it touches — the continuous version of
+    """foreachBatch sink: each micro-batch overwrites the lake
+    partitions it touches — the continuous version of
     ``plans.incremental`` (C2/M6). Idempotent per batch (C4): replays
     rewrite the same partitions to the same content.
     """
@@ -268,7 +268,7 @@ def foreach_batch_incremental_mart(
     micro-batch must be a PARTITION-COMPLETE re-extract — the full
     rebuilt content of every partition it touches, the shape
     ``plans.incremental.IncrementalLoader.extract_partitions`` produces —
-    because dynamic overwrite REPLACES touched partitions wholesale.
+    because the overwrite REPLACES touched partitions wholesale.
     Raw per-row appends would erase a partition's earlier rows.
 
     Idempotent per batch (C4): both steps rewrite state to a pure

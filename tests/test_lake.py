@@ -25,15 +25,129 @@ def test_dynamic_overwrite_touches_only_present_partitions(spark, tmp_path):
     assert got == {(9, 202401, "PT"), (2, 202401, "ES"), (3, 202402, "PT")}
 
 
-def test_static_mode_guard(spark, tmp_path):
-    lake = LakeTable(spark, str(tmp_path / "lake"))
-    lake.write_full(_df(spark, [(1, "a", 202401, "PT")]))
+def _tree(root):
+    """{relative file path: bytes} for every file under ``root``."""
+    out = {}
+    for d, _dirs, files in os.walk(root):
+        for n in files:
+            p = os.path.join(d, n)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = fh.read()
+    return out
+
+
+def _stages(root):
+    return [n for n in os.listdir(root) if n.startswith("_stage-")]
+
+
+def test_static_session_mode_replaces_only_df_partitions(spark, tmp_path):
+    """The staged swap does not depend on partitionOverwriteMode: under
+    a static session it still replaces only the partitions ``df``
+    produces and leaves every other partition byte-identical.
+    compact_partitions still writes in place, so it keeps its guard."""
+    root = str(tmp_path / "lake")
+    lake = LakeTable(spark, root)
+    lake.write_full(
+        _df(spark, [(1, "a", 202401, "PT"), (2, "b", 202401, "ES"), (3, "c", 202402, "PT")])
+    )
+    untouched = {
+        rel: data
+        for rel, data in _tree(root).items()
+        if not rel.startswith(os.path.join("year_month=202401", "country=PT"))
+    }
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
     try:
+        lake.overwrite_partitions(
+            _df(spark, [(9, "z", 202401, "PT"), (4, "d", 202403, "PT")])
+        )
         with pytest.raises(RuntimeError, match="dynamic"):
-            lake.overwrite_partitions(_df(spark, [(2, "b", 202402, "PT")]))
+            lake.compact_partitions(target_file_bytes=1, min_files=1)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    after = _tree(root)
+    assert {rel: after.get(rel) for rel in untouched} == untouched
+    got = {(r.id, r.year_month, r.country) for r in lake.read().collect()}
+    assert got == {(9, 202401, "PT"), (2, 202401, "ES"), (3, 202402, "PT"), (4, 202403, "PT")}
+    assert _stages(root) == []
+
+
+def test_apply_rebuild_replaces_changed_year_months_whole(spark, tmp_path):
+    """A changed year_month is replaced as a whole directory: a leaf the
+    new data no longer produces disappears, and a changed year_month
+    with no rows at all is removed (delete-to-empty)."""
+    root = str(tmp_path / "lake")
+    lake = LakeTable(spark, root)
+    lake.write_full(
+        _df(
+            spark,
+            [(1, "a", 202401, "PT"), (2, "b", 202401, "ES"),
+             (3, "c", 202402, "PT"), (5, "e", 202404, "PT")],
+        )
+    )
+    lake.apply_rebuild(
+        _df(spark, [(9, "z", 202401, "PT")]), changed_year_months=[202401, 202402]
+    )
+    got = {(r.id, r.year_month, r.country) for r in lake.read().collect()}
+    assert got == {(9, 202401, "PT"), (5, 202404, "PT")}
+    assert sorted(n for n in os.listdir(root) if not n.startswith((".", "_"))) == [
+        "year_month=202401", "year_month=202404"
+    ]
+    assert os.listdir(os.path.join(root, "year_month=202401")) == ["country=PT"]
+    lake.apply_rebuild(
+        _df(spark, [(9, "z", 202401, "PT")]).limit(0),
+        changed_year_months=[202401, 202404],
+    )
+    assert not lake.exists() and lake.read().count() == 0
+    assert _stages(root) == []
+
+
+def test_swap_failure_before_first_rename_leaves_table_untouched(
+    spark, tmp_path, monkeypatch
+):
+    """An exception after the stage write and before the first rename
+    must leave the live table byte-identical and remove the stage."""
+    root = str(tmp_path / "lake")
+    lake = LakeTable(spark, root)
+    lake.write_full(_df(spark, [(1, "a", 202401, "PT"), (2, "b", 202402, "PT")]))
+    before = _tree(root)
+
+    class Injected(Exception):
+        pass
+
+    def boom(*_a, **_kw):
+        raise Injected()
+
+    monkeypatch.setattr(os, "rename", boom)
+    with pytest.raises(Injected):
+        lake.overwrite_partitions(_df(spark, [(9, "z", 202401, "PT")]))
+    monkeypatch.undo()
+    assert _tree(root) == before
+    assert _stages(root) == []
+
+
+def test_leftover_stage_is_invisible_and_swept(spark, tmp_path):
+    """A hard-killed writer leaves a ``_stage-*`` directory holding
+    complete partition data. Readers must not see it, and the next
+    overwrite_partitions removes it."""
+    import shutil
+
+    root = str(tmp_path / "lake")
+    lake = LakeTable(spark, root)
+    lake.write_full(_df(spark, [(1, "a", 202401, "PT")]))
+    leftover = os.path.join(root, "_stage-deadbeef")
+    shutil.copytree(
+        os.path.join(root, "year_month=202401"),
+        os.path.join(leftover, "year_month=202401"),
+    )
+    assert lake.read().count() == 1
+
+    empty = LakeTable(spark, str(tmp_path / "empty"))
+    shutil.copytree(leftover, os.path.join(empty.path, "_stage-deadbeef"))
+    assert not empty.exists() and empty.read().count() == 0
+
+    lake.overwrite_partitions(_df(spark, [(2, "b", 202402, "PT")]))
+    assert _stages(root) == []
+    assert {r.id for r in lake.read().collect()} == {1, 2}
 
 
 def test_partitions_listing_and_drop(spark, tmp_path):

@@ -5,6 +5,7 @@ delete-to-empty partitions."""
 
 from __future__ import annotations
 
+import os
 from datetime import datetime, timedelta
 
 import pytest
@@ -196,4 +197,47 @@ def test_bootstrap_equals_refresh_path(spark, env):
     gen.insert_sales(150, batch=1, now=T1, spread_days=20)
     run_pipeline_1(spark, src, lake, ledger, now=T1)
     mart.bootstrap()
+    _assert_marts_match_full(lake, mart)
+
+
+def test_cycle_runs_no_partition_listing_or_drop(spark, env, tmp_path, monkeypatch):
+    """Regression guard for the one-write rebuild: a full scheduler
+    cycle (lake load + incremental mart refresh) on a plain LakeTable
+    lists no partitions and drops none — every rebuild, delete-to-empty
+    included, is one staged swap — and leaves no stage directory."""
+    from bigdatapipelinepysparksqlserver_spark.pipelines import (
+        MartPublisher,
+        sales_pipeline_cycle,
+    )
+
+    src, gen, lake, ledger, mart = env
+    calls = []
+
+    def spy(name):
+        real = getattr(LakeTable, name)
+
+        def wrapper(self, *a, **kw):
+            calls.append(name)
+            return real(self, *a, **kw)
+
+        return wrapper
+
+    for name in ("partitions", "drop_partition_values"):
+        monkeypatch.setattr(LakeTable, name, spy(name))
+    cycle = sales_pipeline_cycle(
+        spark, src, lake, ledger, MartPublisher(str(tmp_path / "mart")), partials=mart
+    )
+    gen.insert_sales(60, batch=1, now=T1, spread_days=40)
+    cycle(T1)
+    gen.insert_sales(10, batch=2, now=T2 - timedelta(hours=1), spread_days=1)
+    assert gen.delete_sales(batch=2, now=T2 - timedelta(hours=1), p=0.5) > 0
+    rep = cycle(T2)
+    assert rep["pipeline_1"]["validation"].status == "SUCCESSFUL"
+    assert calls == []
+    roots = [lake.path] + [
+        t.path for t in (mart.sales_partial, mart.client_partial, mart.client_sketch_partial)
+    ]
+    assert all(
+        not n.startswith("_stage-") for r in roots for n in os.listdir(r)
+    )
     _assert_marts_match_full(lake, mart)
