@@ -1,10 +1,12 @@
 """Deduplication operators — exact, MinHash+LSH, SimHash, n-gram Jaccard.
 
 All pure DataFrame/Catalyst expressions (xxhash64, transform, explode) —
-zero Python UDFs, so the whole pipeline stays inside whole-stage codegen
-and Tungsten. These are the LLM-training-data dedup primitives designed for
-100 TB corpora: every shuffle key is a fixed-width hash, never a document
-body.
+no per-document Python UDFs, so the whole pipeline stays inside
+whole-stage codegen and Tungsten. The one Python pass is the per-partition
+union-find in ``connected_components_star``, which reads only the (small)
+verified pair list. These are the LLM-training-data dedup primitives
+designed for 100 TB corpora: every shuffle key is a fixed-width hash,
+never a document body.
 """
 
 from __future__ import annotations
@@ -876,133 +878,70 @@ def hamming_neighbors_wide(
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    id1: str = "id1",
-    id2: str = "id2",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Duplicate clusters from a pair list: connected components by
-    iterative min-label propagation. Returns (doc_id, component) where
-    ``component`` is the smallest doc id reachable from ``doc_id`` —
-    i.e. the cluster's canonical representative.
-
-    This is the step that turns pairwise near-dup MATCHES into dedup
-    GROUPS (keep the canonical doc, drop the rest). It is genuinely
-    iterative — no single SQL expression computes transitive closure —
-    so it runs a driver loop of DataFrame rounds:
-
-    label_{t+1}(v) = min(label_t(v), min over neighbors u of label_t(u))
-
-    converging in O(diameter) rounds; near-dup graphs are unions of
-    small dense clusters, so the diameter — and the round count — is
-    tiny regardless of corpus size. Each round is one join + one
-    groupBy on the (small) edge list, with the previous labels
-    localCheckpoint()ed to sever the exponentially deepening lineage
-    (the classic iterative-algorithm failure mode). Convergence is
-    detected by an exact per-round change count; ``max_iter`` bounds
-    pathological chains — if the cap is hit, a chain longer than
-    ``max_iter`` hops keeps more than one label (components OVER-split,
-    never wrongly merged; raise ``max_iter`` or pre-collapse exact dups
-    if corpus graphs ever get that stringy).
-    """
-    sym = edges.select(
-        F.col(id1).alias("src"), F.col(id2).alias("dst")
-    ).unionByName(edges.select(F.col(id2).alias("src"), F.col(id1).alias("dst")))
-    sym = sym.persist()
-    labels, free_prev = tracked_local_checkpoint(
-        sym.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("component", F.col("doc_id"))
-    )
-    for _ in range(max_iter):
-        neighbor_min = (
-            sym.join(labels, sym["dst"] == labels["doc_id"])
-            .groupBy(F.col("src").alias("doc_id"))
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        updated, free_new = tracked_local_checkpoint(
-            labels.join(neighbor_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
-                ).alias("component"),
-                (F.coalesce(F.col("nbr_min"), F.col("component")) < F.col("component"))
-                .cast("long")
-                .alias("__changed"),
-            )
-        )  # sever lineage: O(1) plan depth per round
-        changed = updated.agg(F.sum("__changed")).first()[0] or 0
-        # round materialized (the checkpoint is eager) → free the
-        # previous round's blocks now instead of stranding one per round
-        free_prev()
-        free_prev = free_new
-        labels = updated.drop("__changed")
-        if changed == 0:
-            break
-    sym.unpersist()
-    # the returned plan projects the FINAL checkpoint — its free handle
-    # joins the caching scope (a freed checkpoint is unexecutable, so
-    # the harness releases it only after materialization)
-    scoped_release(free_prev)
-    return labels
-
-
 def connected_components_star(
     edges: DataFrame,
     id1: str = "id1",
     id2: str = "id2",
     max_iter: int = 50,
 ) -> DataFrame:
-    """Connected components by alternating large-star / small-star edge
-    rewriting (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14). Returns (doc_id, component) like
-    :func:`connected_components`, with component = the cluster minimum.
+    """Connected components of an undirected pair list: returns
+    (doc_id, component) for every node on an edge, with component = the
+    smallest id in its cluster (the canonical representative a dedup run
+    keeps). This is the step that turns pairwise near-dup MATCHES into
+    dedup GROUPS.
 
-    Why a second algorithm: min-label propagation needs O(diameter)
-    rounds — fine for near-dup graphs (unions of small dense cliques),
-    pathological for stringy graphs (a length-L chain takes L rounds,
-    each a full shuffle). Star contraction halves tree heights every
-    round and provably converges in O(log² n) rounds (O(log n) in
-    practice) *independent of diameter* — the right default at 100 TB
-    where one adversarial chain would otherwise serialize the job.
+    Two phases, one code path:
 
-    Each round is two groupBy+join passes over the edge list, no
-    collect_list (high-degree nodes never materialize their
-    neighborhood in one row — the min is a map-side-combinable agg):
+    1. Local contraction (Łącki et al., "Connected Components at Scale
+       via Local Contractions", arXiv:1807.10727). The (hi, lo)-oriented
+       distinct edges go through one narrow ``mapInPandas`` pass that
+       runs an exact numpy union-find over each partition's edges
+       (min-label hooking plus pointer jumping) and emits one
+       (node, local minimum) star edge per non-root node. Contraction
+       preserves connectivity and keeps hi > lo, so the answer is exact
+       for any partitioning; a component whose edges all sit in one
+       partition comes out as a finished star. Near-dup boards are
+       unions of small dense clusters over a small edge list, so at the
+       sizes AQE coalesces into one partition every component is local
+       and the star-forest test below passes before any round runs.
+    2. Large-star / small-star rounds (Kiveris et al., "Connected
+       Components in MapReduce and Beyond", SoCC'14) on whatever the
+       contraction left, i.e. components split across partitions.
+       Each round halves tree heights and the rounds converge in
+       O(log² n) (O(log n) in practice) *independent of diameter*, so
+       one adversarial chain cannot serialize the job at scale. Each
+       round is two groupBy+join passes over the edge list, no
+       collect_list (high-degree nodes never materialize their
+       neighborhood in one row — the min is a map-side-combinable agg):
 
-      large-star: m(u) = min(Γ(u) ∪ {u}) over the SYMMETRIC edge set;
-                  every neighbor v > u re-attaches to m(u).
-      small-star: on (hi, lo)-oriented edges, m(hi) = min(Γ≤(hi));
-                  hi and its smaller neighbors all re-attach to m(hi).
+         large-star: m(u) = min(Γ(u) ∪ {u}) over the SYMMETRIC edge set;
+                     every neighbor v > u re-attaches to m(u).
+         small-star: on (hi, lo)-oriented edges, m(hi) = min(Γ≤(hi));
+                     hi and its smaller neighbors all re-attach to m(hi).
 
-    Both preserve connectivity and strictly shrink a potential
-    function, so the fixed point — star graphs rooted at each
-    component's minimum — is reached without oscillation. Convergence
-    is detected by the STAR-FOREST test itself (r11): the edge set is
-    a fixed point iff no ``lo`` endpoint also appears as a ``hi`` (all
-    (hi, lo) rows keep hi > lo, so a component whose lo-set and hi-set
-    are disjoint is exactly a star rooted at its minimum — the fixed
-    point the rounds provably reach). The test is one map-side-
-    combinable aggregate over the round's checkpointed output (union
-    both endpoint roles, group by node, nonempty both-roles set ⇒ not
-    yet a star), so it replaces the old (edge-count, hash-sum)
-    fingerprint — which could only detect a fixed point by running one
-    EXTRA full round and comparing — and the loop now stops one round
-    (≈ 6 exchanges over the edge list) earlier, with the same exact
-    output. Checked BEFORE each round too, so an already-contracted
-    input (all-pair-components near-dup boards) skips the loop
-    entirely. Per-round localCheckpoint severs lineage;
-    each round EAGERLY materializes its checkpoint and then frees the
-    previous round's blocks (r5 — the loop used to strand one
-    edge-list-sized checkpoint per round until GC noticed). The inputs
-    the FINAL lazy plan still references (base edges, node list, last
-    round) are registered in the caching scope, released by the harness
-    after materialization — unpersisting them here would strand the
-    returned plan on lineage a localCheckpoint no longer has.
+       Both preserve connectivity and strictly shrink a potential
+       function, so the fixed point — star graphs rooted at each
+       component's minimum — is reached without oscillation.
+
+    Convergence is detected by the STAR-FOREST test, checked before each
+    round: the (hi, lo) edge set is a fixed point iff no ``lo`` endpoint
+    also appears as a ``hi`` and every hi carries one lo. It is one
+    map-side-combinable aggregate over the round's checkpointed output.
+
+    The contracted edges are localCheckpointed once (the node list is
+    derived from them: every node of a nontrivial local component
+    appears there as hi or as lo). Each round EAGERLY materializes its
+    own checkpoint and then frees the previous round's blocks, so the
+    loop never strands one edge-list-sized checkpoint per round. The
+    inputs the FINAL lazy plan still references (contracted edges, node
+    list, last round) are registered in the caching scope, released by
+    the harness after materialization — unpersisting them here would
+    strand the returned plan on lineage a localCheckpoint no longer has.
     """
-    deduped = scoped_local_checkpoint(
+    import numpy as np
+    import pandas as pd
+
+    oriented = (
         edges.select(
             F.greatest(F.col(id1), F.col(id2)).alias("hi"),
             F.least(F.col(id1), F.col(id2)).alias("lo"),
@@ -1010,20 +949,59 @@ def connected_components_star(
         .where(F.col("hi") != F.col("lo"))
         .distinct()
     )
+
+    def contract(batches):
+        his, los = [], []
+        for pdf in batches:
+            his.append(pdf["hi"].to_numpy())
+            los.append(pdf["lo"].to_numpy())
+        if not his:
+            return
+        hi, lo = np.concatenate(his), np.concatenate(los)
+        # node values → dense indices; np.unique sorts, so the smallest
+        # index of a component is also its smallest id
+        node, idx = np.unique(np.concatenate([hi, lo]), return_inverse=True)
+        a, b = idx[: len(hi)], idx[len(hi):]
+        label = np.arange(len(node))  # label[i] <= i, same component
+        while True:
+            # hook each endpoint's root onto the smaller root, then jump
+            # pointers until every node points straight at its root
+            la, lb = label[a], label[b]
+            m = np.minimum(la, lb)
+            np.minimum.at(label, la, m)
+            np.minimum.at(label, lb, m)
+            while True:
+                jumped = label[label]
+                if np.array_equal(jumped, label):
+                    break
+                label = jumped
+            if np.array_equal(label[a], label[b]):
+                break
+        leaf = label != np.arange(len(node))
+        yield pd.DataFrame({"hi": node[leaf], "lo": node[label[leaf]]})
+
+    contracted = scoped_local_checkpoint(
+        oriented.mapInPandas(contract, oriented.schema)
+    )
     nodes = scoped_persist(
-        deduped.select(F.col("hi").alias("doc_id"))
-        .union(deduped.select("lo"))
+        contracted.select(F.col("hi").alias("doc_id"))
+        .union(contracted.select("lo"))
         .distinct()
     )
+
     def _is_star_forest(df: DataFrame) -> bool:
         # hi > lo holds for every row, so the edge set is the fixed
         # point (stars rooted at each component minimum) iff (a) no
         # node plays both roles AND (b) every hi appears in exactly one
         # edge — a hi carrying two distinct lo's is an uncontracted
         # wedge (e.g. {(2,0),(2,1)}: roles disjoint, still one round
-        # from the fixpoint {(1,0),(2,0)}). Rows are distinct, so
-        # SUM(role) counts a hi's edges. One union + one node-keyed
-        # aggregate, map-side-combinable; take(1) on violations.
+        # from the fixpoint {(1,0),(2,0)}). SUM(role) counts a hi's
+        # rows. Round outputs are distinct; the contracted edges may
+        # repeat a (hi, lo) that two partitions both emitted, which
+        # reads as nhi > 1 and only costs one extra round (the round's
+        # distinct removes it), never a wrong answer. One union + one
+        # node-keyed aggregate, map-side-combinable; take(1) on
+        # violations.
         viol = (
             df.select(F.col("hi").alias("n"), F.lit(1).alias("s"))
             .union(df.select(F.col("lo"), F.lit(0)))
@@ -1033,8 +1011,8 @@ def connected_components_star(
         )
         return viol.isEmpty()
 
-    cur = deduped
-    free_prev = None  # never free deduped mid-loop: nodes reads it lazily
+    cur = contracted
+    free_prev = None  # never free contracted mid-loop: nodes reads it lazily
     for _ in range(max_iter):
         if _is_star_forest(cur):
             break

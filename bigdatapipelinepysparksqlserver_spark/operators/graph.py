@@ -1,10 +1,11 @@
 """Graph analytics over relational edge lists.
 
-Connected components live in ``operators/dedup.py`` (min-label
-propagation and the O(log n) star-contraction form, built for dup
-clustering); this module adds rank propagation — PageRank in FIXED-
-POINT INTEGER arithmetic, so every iteration is exact, order-free,
-and replayable on any engine.
+Connected components live in ``operators/dedup.py``
+(``connected_components_star``: per-partition union-find contraction,
+then diameter-independent star rounds, built for dup clustering); this
+module adds rank propagation — PageRank in FIXED-POINT INTEGER
+arithmetic, so every iteration is exact, order-free, and replayable on
+any engine.
 
 Why integers: float PageRank sums contributions per node in shuffle
 order — nondeterministic low-order bits per run AND per engine, which

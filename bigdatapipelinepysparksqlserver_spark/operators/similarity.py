@@ -941,9 +941,15 @@ def semantic_dedup(
     LINEAR in N when the codebook is sized to constant occupancy
     (``2**recommended_bits(N)`` cells ≈ N/80 — the registered query's
     policy). Assignment is a scan-side projection over literal
-    centroids (no shuffle); components use diameter-independent
-    star-contraction; the representative window partitions by
-    component (dup-group-sized, never global). Recall note: a pair
+    centroids (no shuffle). Components come from
+    ``connected_components_star``: a per-partition union-find contracts
+    the verified pairs, and diameter-independent star rounds run only
+    for components split across partitions. Near-dup groups are small
+    cliques, so at the sizes AQE coalesces the pair list into one
+    partition no round runs, and the build's eager Spark work is the
+    codebook collect, the contracted-edge checkpoint and one star-forest
+    test. The representative window partitions by component
+    (dup-group-sized, never global). Recall note: a pair
     split across two cells is not examined — inherent to the
     cluster-partition design (the paper's accepted trade); raise
     recall with a finer threshold INSIDE cells, not more cells.
@@ -962,10 +968,11 @@ def semantic_dedup(
 
     cells = _collect_codebook(codebook, cell_col, cent_col, "semantic_dedup")
     # persist the assignment (r12): it is consumed by the pair
-    # enumeration (eagerly materialized through the components loop's
-    # first checkpoint) AND by the final members join — without the
-    # cache the C-way argmax-cosine projection over every vector ran
-    # twice per query (guide §5: reused and expensive to recompute).
+    # enumeration (eagerly materialized through the components'
+    # contracted-edge checkpoint) AND by the final members join —
+    # without the cache the C-way argmax-cosine projection over every
+    # vector ran twice per query (guide §5: reused and expensive to
+    # recompute).
     assigned = scoped_persist(
         ivf_assign_with_cos(vectors, cells, id_col=id_col, vec_col=vec_col)
     )

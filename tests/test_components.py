@@ -1,18 +1,47 @@
 """Connected components (duplicate clustering): hand-built graphs plus a
-property test against a brute-force union-find reference — run against
-BOTH implementations (min-label propagation and large/small-star)."""
+property test against a brute-force union-find reference, with and
+without the large/small-star rounds that follow the per-partition local
+contraction."""
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 import pytest
 from hypothesis import given, settings, strategies as st
 
+from bigdatapipelinepysparksqlserver_spark.operators import dedup
 from bigdatapipelinepysparksqlserver_spark.operators.dedup import (
-    connected_components,
     connected_components_star,
 )
 
-ALGOS = [connected_components, connected_components_star]
+ALGOS = [connected_components_star]
+
+
+@contextmanager
+def _star_rounds(spark, coalesce: bool = True):
+    """Count the large/small-star rounds ``connected_components_star``
+    runs (each round checkpoints through ``tracked_local_checkpoint``;
+    the contracted edges go through ``scoped_local_checkpoint``, which
+    this does not count). With ``coalesce=False`` AQE keeps every shuffle
+    partition, so a small graph's edges stay spread over several
+    partitions and the local contraction cannot finish it."""
+    rounds = []
+    real = dedup.tracked_local_checkpoint
+
+    def counting(df):
+        rounds.append(1)
+        return real(df)
+
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    dedup.tracked_local_checkpoint = counting
+    spark.conf.set(key, str(coalesce).lower())
+    try:
+        yield rounds
+    finally:
+        dedup.tracked_local_checkpoint = real
+        spark.conf.set(key, prev)
 
 
 def _components_bruteforce(edges):
@@ -32,7 +61,7 @@ def _components_bruteforce(edges):
     return {v: find(v) for v in parent}
 
 
-@pytest.mark.parametrize("algo", ALGOS, ids=["label", "star"])
+@pytest.mark.parametrize("algo", ALGOS, ids=["star"])
 def test_chain_and_islands(spark, algo):
     edges = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 20)]
     got = {
@@ -42,18 +71,40 @@ def test_chain_and_islands(spark, algo):
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
 
 
-@pytest.mark.parametrize("algo", ALGOS, ids=["label", "star"])
+@pytest.mark.parametrize("algo", ALGOS, ids=["star"])
 def test_long_chain_converges(spark, algo):
-    # a path graph has maximal diameter for its size — worst case for
-    # min-label propagation round count, and the case star contraction
-    # exists to collapse in O(log n) rounds
+    # a path graph has maximal diameter for its size, the case star
+    # contraction exists to collapse in O(log n) rounds; its edges are
+    # spread over four partitions, so the rounds must finish what the
+    # local contraction leaves
     n = 12
     edges = [(i, i + 1) for i in range(n)]
-    got = {
-        r.doc_id: r.component
-        for r in algo(spark.createDataFrame(edges, "id1 long, id2 long")).collect()
-    }
+    with _star_rounds(spark, coalesce=False) as rounds:
+        got = {
+            r.doc_id: r.component
+            for r in algo(spark.createDataFrame(edges, "id1 long, id2 long")).collect()
+        }
     assert got == {i: 0 for i in range(n + 1)}
+    assert len(rounds) >= 1
+
+
+def test_partition_local_components_need_no_star_round(spark):
+    """When AQE coalesces a small pair list into one partition, every
+    component is local: the union-find contraction alone returns exact
+    labels, no star round runs, and the id type passes through."""
+    import pyspark.sql.types as T
+
+    chain = [(i, i + 1) for i in range(12)]  # diameter 12
+    clique = [(a, b) for a in (40, 41, 42, 43) for b in (40, 41, 42, 43) if a < b]
+    wedge = [(52, 50), (52, 51)]  # roles disjoint, still not a star
+    edges = chain + clique + wedge + [(7, 3)]  # a chord, reversed
+    df = spark.createDataFrame(edges, "id1 int, id2 int")
+    with _star_rounds(spark) as rounds:
+        out = connected_components_star(df)
+        got = {r.doc_id: r.component for r in out.collect()}
+    assert got == _components_bruteforce(edges)
+    assert rounds == []
+    assert [f.dataType for f in out.schema.fields] == [T.IntegerType()] * 2
 
 
 def test_star_handles_duplicate_and_reversed_edges(spark):
@@ -77,26 +128,28 @@ def test_star_handles_duplicate_and_reversed_edges(spark):
 )
 @pytest.mark.slow
 def test_components_equal_union_find(spark, edges):
-    expected = _components_bruteforce(edges)
-    for algo in ALGOS:
+    # a fixed 16-edge chain beside the random graph, over four
+    # uncoalesced partitions, so every example runs star rounds
+    edges = edges + [(i, i + 1) for i in range(100, 116)]
+    with _star_rounds(spark, coalesce=False) as rounds:
         got = {
             r.doc_id: r.component
-            for r in algo(spark.createDataFrame(edges, "id1 long, id2 long")).collect()
+            for r in connected_components_star(
+                spark.createDataFrame(edges, "id1 long, id2 long")
+            ).collect()
         }
-        assert got == expected, algo.__name__
+    assert got == _components_bruteforce(edges)
+    assert len(rounds) >= 1
 
 
 @pytest.mark.slow
 def test_star_contraction_frees_intermediate_round_checkpoints(spark):
     """The iterative loop must not strand one checkpoint per round: after
     running on a long chain (many contraction rounds), the persistent-RDD
-    count may exceed the baseline only by the plan's LIVE inputs (base
-    edges, node list, final round — ≤3), and release_caches() returns it
-    to baseline."""
+    count may exceed the baseline only by the plan's LIVE inputs
+    (contracted edges, node list, final round — ≤3), and release_caches()
+    returns it to baseline."""
     from bigdatapipelinepysparksqlserver_spark.caching import release_caches
-    from bigdatapipelinepysparksqlserver_spark.operators.dedup import (
-        connected_components_star,
-    )
 
     def n_cached() -> int:
         return spark.sparkContext._jsc.getPersistentRDDs().size()
@@ -105,13 +158,15 @@ def test_star_contraction_frees_intermediate_round_checkpoints(spark):
     spark.catalog.clearCache()
     base = n_cached()
 
-    # one 200-node chain → multiple star rounds (diameter-independent,
-    # but still ≥4 rounds at this length)
+    # one 200-node chain over four uncoalesced partitions: the local
+    # contraction leaves pieces that only star rounds can join
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(200)], "id1 long, id2 long"
     )
-    out = connected_components_star(edges)
-    rows = out.collect()
+    with _star_rounds(spark, coalesce=False) as rounds:
+        out = connected_components_star(edges)
+        rows = out.collect()
+    assert len(rounds) >= 2  # so an intermediate round exists to free
     assert {r.component for r in rows} == {0}
     assert len(rows) == 201
     live = n_cached() - base

@@ -86,3 +86,36 @@ def test_plan_report_cannot_lag_registry():
     assert set(mod.SKIP) <= set(REGISTRY)
     for reason in mod.SKIP.values():
         assert reason.strip()
+
+
+def test_plan_stats_counts_each_subplan_section(tmp_path):
+    """tools/plan_stats.py deduplicates node ids per section: a subquery
+    section that numbers its nodes from (1) again adds its operators
+    instead of being skipped as repeats of the main plan's ids."""
+    import importlib.util
+    import os
+
+    spec = importlib.util.spec_from_file_location(
+        "plan_stats",
+        os.path.join(os.path.dirname(__file__), "..", "tools", "plan_stats.py"),
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    dump = tmp_path / "two_sections.txt"
+    dump.write_text(
+        "== Physical Plan ==\n"
+        "(1) Scan parquet \n"
+        "(2) Exchange\n"
+        "(3) HashAggregate\n"
+        "(2) Exchange\n"
+        "\n"
+        "===== Subqueries =====\n"
+        "\n"
+        "Subquery:1 Hosting operator id = 3 Hosting Expression = x\n"
+        "(1) Scan parquet \n"
+        "(2) Exchange\n"
+        "(3) SortMergeJoin\n"
+    )
+    assert mod.stats(str(dump)) == {
+        "Scan": 2, "Exchange": 2, "HashAggregate": 1, "SortMergeJoin": 1,
+    }

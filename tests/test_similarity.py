@@ -271,6 +271,42 @@ def test_semantic_dedup_pair_budget_guard(spark):
         ).collect()
 
 
+def test_semantic_dedup_build_job_bound(spark):
+    """semantic_dedup runs its eager Spark jobs while the plan is built
+    (codebook collect, the contracted-edge checkpoint, the star-forest
+    test). On this corpus every duplicate group is a clique inside one
+    coalesced partition, so the local contraction finishes it and no
+    star round runs. Measured: 14 jobs; before the contraction the same
+    build ran 25, the rest being star rounds and their star-forest
+    tests."""
+    from bigdatapipelinepysparksqlserver_spark.caching import release_caches
+    from bigdatapipelinepysparksqlserver_spark.operators.similarity import (
+        semantic_dedup,
+    )
+
+    rows = [(10 + i, _vec(0, 0.01 * i)) for i in range(4)]
+    rows += [(20 + i, _vec(7, 0.02 * i)) for i in range(3)]
+    rows += [(30, _vec(33))]
+    vectors = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    codebook = spark.createDataFrame(
+        [(0, _vec(0)), (1, _vec(7)), (2, _vec(33))],
+        "cell int, centroid array<double>",
+    )
+    sc = spark.sparkContext
+    group = f"semantic-dedup-build-{id(vectors)}"
+    sc.setJobGroup(group, "semantic_dedup build")
+    try:
+        out = semantic_dedup(vectors, codebook, threshold=0.9)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    got = {(r.vec_id, r.component) for r in out.collect()}
+    release_caches()
+    assert got == {(i, 10) for i in range(10, 14)} | {(i, 20) for i in (20, 21, 22)}
+    assert jobs <= 14, f"{jobs} Spark jobs while building semantic_dedup"
+
+
 def test_assignment_blas_path_matches_literal(spark):
     """Large codebooks switch assignment to the Arrow/numpy path
     (MapInPandas in the plan); small ones stay on the literal scan-side

@@ -6,6 +6,11 @@ that reads it) and AQE Initial/Final duplication don't inflate counts.
 A cached build's nodes appear once, which matches runtime (the cache is
 computed once).
 
+Node ids are deduplicated per SECTION: a ``===== ... =====`` header
+(subqueries, adaptively optimized-out exchanges) or a ``Subquery:N``
+header starts a new one, since a subplan section may number its nodes
+from (1) again.
+
 Usage: python tools/plan_stats.py plans/r12/<query>_<suffix>.txt ...
 """
 
@@ -15,15 +20,21 @@ import re
 import sys
 
 
+SECTION = re.compile(r"^(=====.*=====|Subquery:\d+ )")
+
+
 def stats(path: str) -> dict:
     counts: dict[str, int] = {}
     seen: set[int] = set()
     for line in open(path):
+        if SECTION.match(line):
+            seen.clear()
+            continue
         m = re.match(r"^\((\d+)\) ([A-Za-z][A-Za-z0-9_]*)", line)
         if not m:
             continue
         nid = int(m.group(1))
-        if nid in seen:  # details repeated per AQE sub-plan section
+        if nid in seen:  # a node listed twice within one section
             continue
         seen.add(nid)
         name = m.group(2)
