@@ -20,37 +20,6 @@ from bigdatapipelinepysparksqlserver_spark.caching import release_caches  # noqa
 from bigdatapipelinepysparksqlserver_spark.queries import REGISTRY  # noqa: E402
 from bigdatapipelinepysparksqlserver_spark.session import get_spark  # noqa: E402
 
-# Floor-relative grading (VERDICT r8 #8): the shared box carries
-# ambient load from OUTSIDE the container that swings same-tree totals
-# ±20-40% between rounds, making absolute per-round deltas unreadable.
-# Each headliner's FLOOR is its best recorded per-query wall across all
-# BENCH_r*.json history at sf0.1 (min-of-N on an idle box, identical or
-# slower plans) — a run's vs_floor ratio therefore separates "the box
-# is loaded" (every ratio inflates together; see loadavg) from "this
-# query regressed" (one ratio inflates alone, persistently).
-FLOORS_S = {
-    "ann_topk_cosine": 0.517,  # r10
-    "asof_attribution": 0.451,  # r10
-    "bm25_store_probe": 2.909,  # r10
-    "decontaminate": 0.512,  # r9
-    "doc_winnow_span_scrub_apply": 4.175,  # r11 (new headliner)
-    "decontaminate_spans": 1.229,  # r11
-    "dedup_exact": 0.139,  # r11
-    "dedup_minhash": 1.306,  # r10
-    "mart_client_count": 0.529,    # r11
-    "mart_sales_agg": 0.781,  # r10
-    "part_copurchase_pagerank": 3.554,  # r11
-    "semantic_dedup": 4.024,  # r9
-    "sessionize": 0.917,  # r11
-    "text_quality_score": 0.397,  # r11
-    "text_repetition_score": 0.567,  # r11
-    "tpch_q1": 0.693,              # r4
-    "tpch_q18": 0.552,  # r11
-    "tpch_q3": 0.592,  # r11
-    "tpch_q5": 0.572,  # r9
-}
-
-
 def _loadavg() -> list[float]:
     try:
         with open("/proc/loadavg") as f:
@@ -106,9 +75,6 @@ def main() -> None:
         timings[name] = round(best, 3)
 
     total = round(sum(timings.values()), 3)
-    vs_floor = {
-        n: round(t / FLOORS_S[n], 3) for n, t in timings.items() if n in FLOORS_S
-    }
     print(
         json.dumps(
             {
@@ -116,8 +82,6 @@ def main() -> None:
                 "value": total,
                 "unit": "sec",
                 "queries": timings,
-                "floors": {n: FLOORS_S[n] for n in timings if n in FLOORS_S},
-                "vs_floor": vs_floor,
                 "loadavg_before": load_before,
                 "loadavg_after": _loadavg(),
                 "runs_per_query": 5,

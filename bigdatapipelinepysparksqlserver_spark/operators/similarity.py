@@ -6,6 +6,11 @@ random-hyperplane LSH bucketing (sign-bit signatures → bucket join →
 exact verify), which avoids the full cross product the same way
 MinHash-LSH does for text dedup.
 
+Every top-k here is candidate generation followed by ONE shared exact
+re-rank (:func:`_exact_rerank`): the index — none, LSH buckets, IVF
+cells, PQ codes — only decides which (query, neighbor) pairs get
+scored; scoring, ranking and rounding are the same code for all.
+
 All arithmetic is native Catalyst expressions (`zip_with`/`aggregate`
 fold over the array) — no Python UDFs, so the scan stays inside
 whole-stage codegen. Values are cast to double BEFORE multiplication so
@@ -58,22 +63,46 @@ def brute_force_topk(
 
     Returns (query_id, neighbor_id, cosine, rank), self-matches excluded.
     """
-    # norms hoisted to the per-side projections (r11): norm() is an
-    # interpreted HOF fold over the vector, and inside the per-pair
-    # cosine it re-ran once per (query, neighbor) pair and side; hoisted
-    # it runs once per vector row. dot/(qn·nn) is exactly what cosine()
-    # expands to — same fold order, bit-identical result.
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("query_vec"),
-        norm(F.col(vec_col)).alias("__qn"),
+    pairs = _side(vectors, "neighbor", id_col, vec_col).crossJoin(
+        F.broadcast(_side(queries, "query", id_col, vec_col))
     )
-    pairs = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("neighbor_vec"),
-        norm(F.col(vec_col)).alias("__nn"),
-    ).crossJoin(F.broadcast(q))
-    scored = pairs.where(F.col("query_id") != F.col("neighbor_id")).select(
+    return _exact_rerank(pairs.where(F.col("query_id") != F.col("neighbor_id")), k)
+
+
+def _side(
+    df: DataFrame, role: str, id_col: str, vec_col: str, *extra
+) -> DataFrame:
+    """One side of a top-k pair: ``({role}_id, {role}_vec, norm)`` with
+    ``role`` "query" (norm ``__qn``) or "neighbor" (norm ``__nn``), plus
+    ``extra`` columns (join keys).
+
+    The norm is hoisted to the side projection: norm() is an interpreted
+    HOF fold over the vector, and inside the per-pair cosine it would
+    re-run once per (query, neighbor) pair and side; here it runs once
+    per vector row.
+    """
+    return df.select(
+        F.col(id_col).alias(f"{role}_id"),
+        F.col(vec_col).alias(f"{role}_vec"),
+        norm(F.col(vec_col)).alias("__qn" if role == "query" else "__nn"),
+        *extra,
+    )
+
+
+def _exact_rerank(cands: DataFrame, k: int) -> DataFrame:
+    """The exact tail of every top-k in this module: score candidate
+    pairs ``(query_id, neighbor_id, query_vec, __qn, neighbor_vec,
+    __nn)`` by cosine, rank each query's candidates by (cosine desc,
+    neighbor_id asc), keep ranks ≤ k, round cosines to 6 dp.
+
+    ``dot / (__qn·__nn)`` is exactly what cosine() expands to — same
+    fold order, bit-identical result — with the norms hoisted to the
+    sides (:func:`_side`). Which pairs arrive here — self-match filter
+    and candidate dedup included — is the caller's candidate generation.
+
+    Returns (query_id, neighbor_id, cosine, rank).
+    """
+    scored = cands.select(
         "query_id",
         "neighbor_id",
         (
@@ -88,10 +117,7 @@ def brute_force_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_raw", 6).alias("cosine"),
-            "rank",
+            "query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine"), "rank"
         )
     )
 
@@ -270,85 +296,35 @@ def lsh_topk(
     bucket) pair. Recall tunes by (bits ↓, tables ↑); cost by the
     inverse.
     """
-    buckets = hyperplane_buckets(F.col(vec_col), dim=dim, bits=bits, tables=tables)
-    # norms hoisted per vector row (r11, bit-identical — see
-    # brute_force_topk): once per side row instead of once per candidate
-    v = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("neighbor_vec"),
-        norm(F.col(vec_col)).alias("__nn"),
-        F.explode(buckets).alias("tb"),
-    ).select("neighbor_id", "neighbor_vec", "__nn", "tb.table", "tb.bucket")
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("query_vec"),
-        norm(F.col(vec_col)).alias("__qn"),
-        F.explode(buckets).alias("tb"),
-    ).select("query_id", "query_vec", "__qn", "tb.table", "tb.bucket")
+    v, q = _lsh_sides(vectors, queries, id_col, vec_col, dim, bits, tables)
     cands = (
         v.join(F.broadcast(q), ["table", "bucket"])
         .where(F.col("query_id") != F.col("neighbor_id"))
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = cands.select(
-        "query_id",
-        "neighbor_id",
-        (
-            dot(F.col("query_vec"), F.col("neighbor_vec"))
-            / (F.col("__qn") * F.col("__nn"))
-        ).alias("cos_raw"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_raw", 6).alias("cosine"),
-            "rank",
-        )
-    )
+    return _exact_rerank(cands, k)
 
 
-def ivf_topk(
+def _lsh_sides(
     vectors: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    k: int = 10,
-    seed: int = 42,
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: k-means coarse quantizer →
-    probe the n_probe nearest centroid cells → exact cosine re-rank.
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    bits: int,
+    tables: int,
+) -> tuple[DataFrame, DataFrame]:
+    """Both sides of a hyperplane-LSH bucket join, one row per (vector,
+    table): the corpus as (neighbor_id, neighbor_vec, __nn, table,
+    bucket) — signed once, during its scan (a pure projection) — and
+    the queries as (query_id, query_vec, __qn, table, bucket)."""
+    buckets = hyperplane_buckets(F.col(vec_col), dim=dim, bits=bits, tables=tables)
 
-    The alternative scale path to hyperplane LSH: centroids ADAPT to the
-    data distribution (better cell balance on clustered embeddings than
-    data-oblivious hyperplanes). Since round 4 this is a thin
-    TRAIN-THEN-DELEGATE wrapper: it trains the coarse quantizer (seeded
-    Spark ML KMeans over L2-normalized vectors) and hands the resulting
-    codebook to :func:`ivf_codebook_topk`, so the search path is ONE
-    implementation regardless of where the codebook came from. The
-    production shape trains offline (``tools/train_ivf_codebook.py``)
-    and versions the codebook as an artifact; use this wrapper only for
-    ad-hoc/exploratory searches where retraining per query is acceptable.
-    """
-    codebook = train_ivf_codebook(
-        vectors, vec_col=vec_col, n_centroids=n_centroids, seed=seed
-    )
-    return ivf_codebook_topk(
-        vectors,
-        queries,
-        codebook,
-        id_col=id_col,
-        vec_col=vec_col,
-        n_probe=n_probe,
-        k=k,
-    )
+    def signed(df: DataFrame, role: str) -> DataFrame:
+        sd = _side(df, role, id_col, vec_col, F.explode(buckets).alias("tb"))
+        return sd.select(*sd.columns[:3], "tb.table", "tb.bucket")
+
+    return signed(vectors, "neighbor"), signed(queries, "query")
 
 
 def train_ivf_codebook(
@@ -363,7 +339,9 @@ def train_ivf_codebook(
 
     L2-normalization makes Euclidean KMeans approximate spherical
     k-means (||â−b̂||² = 2−2·cos on unit vectors), matching the
-    argmax-cosine assignment :func:`ivf_codebook_topk` performs.
+    argmax-cosine assignment :func:`ivf_codebook_topk` performs (compose
+    the two for an ad-hoc train-then-search; production trains offline,
+    ``tools/train_ivf_codebook.py``, and versions the codebook).
     Centroid components are rounded to 6 dp so a codebook serialized to
     text (the versioned-artifact path) reproduces the exact same doubles
     when pasted into an oracle SQL literal.
@@ -581,7 +559,7 @@ def ivf_codebook_topk(
 ) -> DataFrame:
     """IVF approximate top-k with an EXTERNALLY-TRAINED codebook — the
     production IVF shape (the quantizer is trained offline and versioned
-    as an artifact; :func:`ivf_topk` is the train-inline variant).
+    as an artifact; :func:`train_ivf_codebook` trains one).
 
     The codebook (cell, centroid) is collected driver-side — it is
     model-scale by contract, exactly what a KMeans model broadcast would
@@ -636,24 +614,7 @@ def ivf_codebook_topk(
         .where(F.col("query_id") != F.col("neighbor_id"))
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = cands.select(
-        "query_id",
-        "neighbor_id",
-        (
-            dot(F.col("query_vec"), F.col("neighbor_vec"))
-            / (F.col("__qn") * F.col("__nn"))
-        ).alias("cos_raw"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine"), "rank"
-        )
-    )
+    return _exact_rerank(cands, k)
 
 
 def write_ivf_partitioned(
@@ -762,46 +723,38 @@ def ivf_partitioned_topk(
     ``PartitionFilters`` in the executed plan.
     """
     cells = _collect_codebook(codebook, cell_col, cent_col, "ivf_partitioned_topk")
-    qrows = queries.select(id_col, vec_col).collect()
+    q, probe_cells = _ivf_probe_queries(spark, queries, cells, id_col, vec_col, n_probe)
+    store = spark.read.parquet(store_path).where(F.col("cell").isin(probe_cells))
+    cands = (
+        _side(store, "neighbor", id_col, vec_col, "cell")
+        .join(F.broadcast(q), "cell")
+        .where(F.col("query_id") != F.col("neighbor_id"))
+        .dropDuplicates(["query_id", "neighbor_id"])
+    )
+    return _exact_rerank(cands, k)
+
+
+def _ivf_probe_queries(
+    spark, queries: DataFrame, cells, id_col: str, vec_col: str, n_probe: int
+) -> tuple[DataFrame, list[int]]:
+    """Driver-side IVF probe for the store searches: collect the query
+    set (broadcast-small by contract) and pick each query's ``n_probe``
+    best cells with :func:`_ivf_py_scores` (ties to the lowest cell).
+
+    Returns the probe side (query_id, cell, query_vec, __qn) — one row
+    per (query, probed cell) — and the sorted union of probed cells, the
+    literal ``cell IN (…)`` partition-pruning set.
+    """
     probe_rows = []
-    for r in qrows:
+    for r in queries.select(id_col, vec_col).collect():
         scores = _ivf_py_scores(list(r[vec_col]), cells)
         scores.sort(key=lambda t: (-t[0], t[1]))
         for _, cell in scores[:n_probe]:
             probe_rows.append((int(r[id_col]), cell, [float(x) for x in r[vec_col]]))
-    probe_cells = sorted({c for _, c, _ in probe_rows})
-    # norms hoisted per row (r11, bit-identical — see brute_force_topk)
-    store = (
-        spark.read.parquet(store_path)
-        .where(F.col("cell").isin(probe_cells))
-        .withColumn("__nn", norm(F.col(vec_col)))
-    )
-    q_df = spark.createDataFrame(
-        probe_rows, f"query_id long, cell int, query_vec array<double>"
+    q = spark.createDataFrame(
+        probe_rows, "query_id long, cell int, query_vec array<double>"
     ).withColumn("__qn", norm(F.col("query_vec")))
-    cands = (
-        store.join(F.broadcast(q_df), "cell")
-        .where(F.col("query_id") != F.col(id_col))
-        .dropDuplicates(["query_id", id_col])
-    )
-    scored = cands.select(
-        "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        (
-            dot(F.col("query_vec"), F.col(vec_col))
-            / (F.col("__qn") * F.col("__nn"))
-        ).alias("cos_raw"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine"), "rank"
-        )
-    )
+    return q, sorted({c for _, c, _ in probe_rows})
 
 
 # Past this many cells the literal-struct assignment expression stops
@@ -1223,7 +1176,7 @@ def pq_sub_codebooks(
     n_codes: int = 16,
 ):
     """Deterministic sub-codebooks: the first ``n_codes`` vectors'
-    slices per subspace — the ``ann_ivf_codebook_topk`` stand-in
+    slices per subspace — the first-ids codebook stand-in
     convention (production trains per-subspace k-means offline, e.g.
     via :func:`kmeans_refine` on the slices, and versions the result).
     Returns ``[[(code, centroid_slice), …] per subspace]``; collect is
@@ -1393,39 +1346,12 @@ def pq_topk(
     recon = codes.withColumn("__cb", cb_lit).select(
         F.col(id_col), recon_expr.alias("__recon")
     )
-    # brute_force_topk wants one vec_col name on both sides; the query
-    # side stays RAW (asymmetric ADC) — inline the same plan shape
-    # norms hoisted per row (r11, bit-identical — see brute_force_topk);
-    # the neighbor norm is over the RECONSTRUCTED vector, once per code
-    # row instead of once per (query, neighbor) pair
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("query_vec"),
-        norm(F.col(vec_col)).alias("__qn"),
+    # the query side stays RAW (asymmetric ADC); the neighbor norm is over
+    # the RECONSTRUCTED vector, once per code row
+    pairs = _side(recon, "neighbor", id_col, "__recon").crossJoin(
+        F.broadcast(_side(queries, "query", id_col, vec_col))
     )
-    pairs = recon.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("__recon").alias("neighbor_vec"),
-        norm(F.col("__recon")).alias("__nn"),
-    ).crossJoin(F.broadcast(q))
-    scored = pairs.where(F.col("query_id") != F.col("neighbor_id")).select(
-        "query_id",
-        "neighbor_id",
-        (
-            dot(F.col("query_vec"), F.col("neighbor_vec"))
-            / (F.col("__qn") * F.col("__nn"))
-        ).alias("cos_raw"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine"), "rank"
-        )
-    )
+    return _exact_rerank(pairs.where(F.col("query_id") != F.col("neighbor_id")), k)
 
 
 # ---------------------------------------------------------------------------
@@ -1548,53 +1474,21 @@ def ivfpq_topk(
     axes engaged.
     """
     cells = _collect_codebook(codebook, cell_col, cent_col, "ivfpq_topk")
-    qrows = queries.select(id_col, vec_col).collect()
-    probe_rows = []
-    for r in qrows:
-        scores = _ivf_py_scores(list(r[vec_col]), cells)
-        scores.sort(key=lambda t: (-t[0], t[1]))
-        for _, cell in scores[:n_probe]:
-            probe_rows.append((int(r[id_col]), cell, [float(x) for x in r[vec_col]]))
-    probe_cells = sorted({c for _, c, _ in probe_rows})
+    q, probe_cells = _ivf_probe_queries(spark, queries, cells, id_col, vec_col, n_probe)
     recon_expr, cb_lit = pq_reconstruct(F.col("codes"), sub_codebooks)
     store = (
         spark.read.parquet(store_path)
         .where(F.col("cell").isin(probe_cells))
         .withColumn("__cb", cb_lit)
-        .select(
-            F.col(id_col).alias("neighbor_id"),
-            "cell",
-            recon_expr.alias("__recon"),
-        )
-        # norm hoisted per reconstructed row (r11, bit-identical)
-        .withColumn("__nn", norm(F.col("__recon")))
+        .select(id_col, "cell", recon_expr.alias("__recon"))
     )
-    q_df = spark.createDataFrame(
-        probe_rows, "query_id long, cell int, query_vec array<double>"
-    ).withColumn("__qn", norm(F.col("query_vec")))
     cands = (
-        store.join(F.broadcast(q_df), "cell")
+        _side(store, "neighbor", id_col, "__recon", "cell")
+        .join(F.broadcast(q), "cell")
         .where(F.col("query_id") != F.col("neighbor_id"))
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = cands.select(
-        "query_id",
-        "neighbor_id",
-        (
-            dot(F.col("query_vec"), F.col("__recon"))
-            / (F.col("__qn") * F.col("__nn"))
-        ).alias("cos_raw"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine"), "rank"
-        )
-    )
+    return _exact_rerank(cands, k)
 
 
 def ivfpq_store_append_batch(
@@ -1608,33 +1502,26 @@ def ivfpq_store_append_batch(
     cell_col: str = "cell",
     cent_col: str = "centroid",
 ) -> None:
-    """Append one ingest batch to a growing IVFPQ store: the batch's
-    vectors get BOTH quantizations in one projection (same literal
-    codebooks as :func:`write_ivfpq_store` — mixing codebooks across
-    batches would break assignment↔probe agreement) and land under
-    ``{path}/batch=N`` partitioned by cell. Same layout/exactly-once
-    contract as :func:`ivf_store_append_batch` (two-level partition
-    discovery keeps ``cell IN (…)`` pruning inside every batch level;
-    overwriting the batch's own dir makes replays idempotent), and
-    :func:`~..operators.stores.compact_store_batches` flattens it —
-    the payload-generic cell re-home covers PQ-coded rows unchanged.
+    """Append one ingest batch to a growing IVFPQ store: the batch is
+    encoded and written by :func:`write_ivfpq_store` itself (same
+    literal codebooks — mixing codebooks across batches would break
+    assignment↔probe agreement) into ``{path}/batch=N``, partitioned by
+    cell. Same layout/exactly-once contract as
+    :func:`ivf_store_append_batch` (two-level partition discovery keeps
+    ``cell IN (…)`` pruning inside every batch level; overwriting the
+    batch's own dir makes replays idempotent), and
+    :func:`~..operators.stores.compact_store_batches` flattens it — the
+    payload-generic cell re-home covers PQ-coded rows unchanged.
     """
-    cells = _collect_codebook(
-        codebook, cell_col, cent_col, "ivfpq_store_append_batch"
-    )
-    if not cells:
-        raise ValueError("ivfpq_store_append_batch: empty codebook")
-    (
-        vectors.select(F.col(id_col), F.col(vec_col).alias("__v"))
-        .withColumn("__vnorm", F.expr(_IVF_VNORM_SQL))
-        .select(
-            id_col,
-            F.expr(_pq_codes_expr(sub_codebooks)).alias("codes"),
-            F.expr(_ivf_argmax_sql(cells)).alias("cell"),
-        )
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{path}/batch={batch_id}")
+    write_ivfpq_store(
+        vectors,
+        codebook,
+        sub_codebooks,
+        f"{path}/batch={batch_id}",
+        id_col=id_col,
+        vec_col=vec_col,
+        cell_col=cell_col,
+        cent_col=cent_col,
     )
 
 
@@ -1795,24 +1682,11 @@ def lsh_multiprobe_topk(
     The recall/storage trade this buys at 100 TB: extra probes fan out
     the QUERY side only (query-count × (bits+1) rows — broadcast-sized),
     while the corpus keeps exactly L signatures per vector; recall
-    comparable to ~L·(bits+1) tables at the index storage of L. The
-    corpus side of the plan is byte-identical to :func:`lsh_topk`.
+    comparable to ~L·(bits+1) tables at the index storage of L. Both
+    sides come from :func:`_lsh_sides`, shared with :func:`lsh_topk`;
+    only the query side's Hamming-1 fan-out is this function's own.
     """
-    buckets = hyperplane_buckets(F.col(vec_col), dim=dim, bits=bits, tables=tables)
-    # norms hoisted per vector row (r11, bit-identical — see
-    # brute_force_topk)
-    v = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("neighbor_vec"),
-        norm(F.col(vec_col)).alias("__nn"),
-        F.explode(buckets).alias("tb"),
-    ).select("neighbor_id", "neighbor_vec", "__nn", "tb.table", "tb.bucket")
-    q0 = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("query_vec"),
-        norm(F.col(vec_col)).alias("__qn"),
-        F.explode(buckets).alias("tb"),
-    ).select("query_id", "query_vec", "__qn", "tb.table", "tb.bucket")
+    v, q0 = _lsh_sides(vectors, queries, id_col, vec_col, dim, bits, tables)
     probe_set = F.array(
         F.col("bucket"),
         *[F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(bits)],
@@ -1829,24 +1703,4 @@ def lsh_multiprobe_topk(
         .where(F.col("query_id") != F.col("neighbor_id"))
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = cands.select(
-        "query_id",
-        "neighbor_id",
-        (
-            dot(F.col("query_vec"), F.col("neighbor_vec"))
-            / (F.col("__qn") * F.col("__nn"))
-        ).alias("cos_raw"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_raw", 6).alias("cosine"),
-            "rank",
-        )
-    )
+    return _exact_rerank(cands, k)

@@ -84,7 +84,6 @@ def run_pipeline_1(
     now: datetime,
     lag_minutes: int = 5,
     stale_running_minutes: int = 60,
-    compact_target_bytes: int | None = None,
 ) -> dict:
     """One incremental load + validation cycle. Returns a run report.
 
@@ -120,7 +119,6 @@ def run_pipeline_1(
         loader = IncrementalLoader(
             src.read("sales"), src.read("clients"), src.read("products"),
             src.read("removed"), lake,
-            compact_target_bytes=compact_target_bytes,
         )
         parts = loader.run(prev, cur)
         ledger.finish_run(run_id, now, SUCCESSFUL)

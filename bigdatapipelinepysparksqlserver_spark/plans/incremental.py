@@ -49,22 +49,12 @@ class IncrementalLoader:
         products: DataFrame,
         removed: DataFrame,
         lake: LakeTable,
-        compact_target_bytes: int | None = None,
     ):
         self.sales = sales
         self.clients = clients
         self.products = products
         self.removed = removed
         self.lake = lake
-        # optional post-rebuild compaction of JUST-TOUCHED partitions: a
-        # 15-min-cadence CDC pipeline (reference sales_pipeline_dag.py:5)
-        # accretes one small file set per cycle per changed partition —
-        # the fragmentation the reference explicitly designed against
-        # (README.md:62). With a target set, every run() ends by
-        # repairing the partitions it rewrote (cost ∝ change set via
-        # only_under; healthy partitions untouched, so steady-state runs
-        # compact nothing).
-        self.compact_target_bytes = compact_target_bytes
 
     # -- step 1: work list -------------------------------------------------
 
@@ -138,15 +128,4 @@ class IncrementalLoader:
             return []
         extract = self.extract_partitions(parts, current_cutoff)
         self.lake.apply_rebuild(extract, changed_year_months=parts)
-        # a SnapshotLakeTable needs no compaction: each live partition is
-        # wholly owned by the txn that last rebuilt it
-        if (
-            self.compact_target_bytes is not None
-            and isinstance(self.lake, LakeTable)
-            and self.lake.exists()
-        ):
-            self.lake.compact_partitions(
-                target_file_bytes=self.compact_target_bytes,
-                only_under=[f"year_month={p}" for p in parts],
-            )
         return parts

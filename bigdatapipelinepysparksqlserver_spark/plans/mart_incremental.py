@@ -35,7 +35,6 @@ from datetime import datetime
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
-    BinaryType,
     DecimalType,
     IntegerType,
     LongType,
@@ -70,16 +69,6 @@ CLIENT_PAIRS_PARTIAL = StructType(
     ]
 )
 
-CLIENT_SKETCH_PARTIAL = StructType(
-    [
-        StructField("country", StringType()),
-        StructField("gender", StringType()),
-        StructField("sk", BinaryType()),
-        StructField("year_month", IntegerType()),
-    ]
-)
-
-
 class IncrementalMart:
     """Maintains both mart partial tables under ``root`` and serves the
     final mart aggregates from them."""
@@ -98,12 +87,6 @@ class IncrementalMart:
             f"{root}/client_pairs_partial",
             partition_cols=("year_month",),
             schema=CLIENT_PAIRS_PARTIAL,
-        )
-        self.client_sketch_partial = LakeTable(
-            spark,
-            f"{root}/client_sketch_partial",
-            partition_cols=("year_month",),
-            schema=CLIENT_SKETCH_PARTIAL,
         )
 
     # -- partial maintenance ----------------------------------------------
@@ -138,15 +121,9 @@ class IncrementalMart:
         pairs = rows.select(
             "country", "gender", "client_id", "year_month"
         ).distinct()
-        sketches = (
-            rows.groupBy("year_month", "country", "gender")
-            .agg(F.hll_sketch_agg("client_id").alias("sk"))
-            .select([f.name for f in CLIENT_SKETCH_PARTIAL.fields])
-        )
         for partial, fresh in (
             (self.sales_partial, sales),
             (self.client_partial, pairs),
-            (self.client_sketch_partial, sketches),
         ):
             partial.apply_rebuild(fresh, changed_year_months=changed)
 
@@ -186,39 +163,6 @@ class IncrementalMart:
                 F.sum("paid_amount").cast(DecimalType(28, 2)).alias("paid_amount"),
             )
             .withColumn("refresh_date", F.lit(refresh))
-        )
-
-    def client_count_sketched(self, refresh: datetime) -> DataFrame:
-        """Approximate twin of :meth:`client_count` via RE-AGGREGATABLE
-        HLL sketches (Datasketches ``hll_sketch_agg`` / ``hll_union_agg``).
-
-        Scale trade-off: the exact path's partial is the distinct client
-        TUPLES per partition — worst case O(clients) rows per partition.
-        The sketch partial (maintained by ``refresh`` alongside the exact
-        tables) is a fixed ~KB binary per (partition, group) regardless
-        of client count, and sketches MERGE exactly (unlike plain
-        approx_count_distinct numbers, which cannot be re-summed without
-        double-counting clients active in several partitions).
-        ±~2% error at the default lgConfigK=12; the mart's reconciliation
-        contract stays on the exact path — this is the
-        dashboard/estimation tier.
-        """
-        return (
-            self.client_sketch_partial.read()
-            .groupBy("country", "gender")
-            .agg(
-                F.hll_sketch_estimate(F.hll_union_agg("sk")).alias(
-                    "client_count_approx"
-                )
-            )
-            .select(
-                "country",
-                decode_map("gender", {"M": "Male", "F": "Female"}, "Other").alias(
-                    "gender"
-                ),
-                "client_count_approx",
-                F.lit(refresh).alias("refresh_date"),
-            )
         )
 
     def bootstrap(self) -> None:

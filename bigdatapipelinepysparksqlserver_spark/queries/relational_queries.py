@@ -939,11 +939,10 @@ def sketch_distinct_clients(spark: SparkSession, sf_dir: str) -> DataFrame:
     its yardstick, THIS registered query pays the exact-distinct Expand
     shuffle alongside the sketch — it is the VALIDATION form, run at
     scales where exact is still affordable (or on a sample). The
-    production approx-only forms — a bare ``approx_count_distinct``
-    projection, and the persisted re-aggregatable HLL partials in
-    `plans/mart_incremental.py` (`client_count_sketched`) — carry no
-    exact twin; their contract is exactly the corridor this query
-    demonstrates: fixed ~1.5 KB per group regardless of cardinality,
+    production approx-only form — a bare ``approx_count_distinct``
+    projection — carries no exact twin; its contract is exactly the
+    corridor this query demonstrates: fixed ~1.5 KB per group regardless
+    of cardinality,
     associative merge, the only viable shape when per-group distinct
     cardinality approaches memory. Exactness policy unchanged:
     reconciliation paths stay exact (reference validates equality);

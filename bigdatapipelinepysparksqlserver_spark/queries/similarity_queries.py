@@ -7,10 +7,10 @@ oracle-checked: the planes are literal constants
 (operators/similarity.py hyperplane_constants), so DuckDB reproduces the
 bucket assignment with list_dot_product sign tests. The IVF variants are
 oracle-checked too: `ann_ivf_topk` searches against the offline-trained
-versioned codebook artifact whose 6-dp centroid literals replay in SQL,
-and `ann_ivf_codebook_topk` demonstrates the caller-supplied-codebook
-shape. (Inline KMeans training exists only in the `ivf_topk` operator
-wrapper, outside any registered query path.)
+versioned codebook artifact whose 6-dp centroid literals replay in SQL.
+(KMeans training — `train_ivf_codebook`, run by
+`tools/train_ivf_codebook.py` — stays outside every registered query
+path.)
 """
 
 from __future__ import annotations
@@ -24,7 +24,6 @@ from ..operators.similarity import (
     brute_force_topk,
     embedding_near_duplicates,
     hyperplane_constants,
-    ivf_topk,
     lsh_topk,
     recommended_bits,
 )
@@ -310,9 +309,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-rank. The data-adaptive alternative to ``ann_lsh_topk`` —
     centroid cells balance on clustered embeddings where oblivious
     hyperplanes don't; n_probe is the recall/cost dial. Fully
-    oracle-checked since the artifact's 6-dp literals replay in SQL
-    (the inline-KMeans trainer is `operators/similarity.py ivf_topk`,
-    now itself a train-then-delegate wrapper over the same search)."""
+    oracle-checked since the artifact's 6-dp literals replay in SQL."""
     from ..operators.similarity import ivf_codebook_topk
 
     art = _load_ivf_artifact()
@@ -395,76 +392,6 @@ JOIN v v1 ON v1.vec_id = c.id1
 JOIN v v2 ON v2.vec_id = c.id2
 WHERE list_cosine_similarity(v1.emb, v2.emb) >= {EMB_NEARDUP_THRESHOLD}
 """
-
-
-IVF_N_CELLS = 16
-IVF_N_PROBE = 4
-
-ANN_IVF_CODEBOOK_ORACLE = f"""
-WITH v AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
-),
-cb AS (SELECT vec_id AS cell, emb AS cent FROM v WHERE vec_id < {IVF_N_CELLS}),
-asg AS (
-  SELECT v.vec_id, c.cell,
-         ROW_NUMBER() OVER (
-           PARTITION BY v.vec_id
-           ORDER BY list_cosine_similarity(v.emb, c.cent) DESC, c.cell ASC
-         ) AS rn
-  FROM v, cb c
-),
-assigned AS (SELECT vec_id AS neighbor_id, cell FROM asg WHERE rn = 1),
-qprobe AS (
-  SELECT v.vec_id AS query_id, c.cell,
-         ROW_NUMBER() OVER (
-           PARTITION BY v.vec_id
-           ORDER BY list_cosine_similarity(v.emb, c.cent) DESC, c.cell ASC
-         ) AS rn
-  FROM v, cb c WHERE v.vec_id < {N_QUERY_VECS}
-),
-probes AS (SELECT query_id, cell FROM qprobe WHERE rn <= {IVF_N_PROBE}),
-cand AS (
-  SELECT DISTINCT p.query_id, a.neighbor_id
-  FROM probes p JOIN assigned a ON a.cell = p.cell
-  WHERE a.neighbor_id <> p.query_id
-),
-scored AS (
-  SELECT c.query_id, c.neighbor_id,
-         list_cosine_similarity(q.emb, n.emb) AS cos_raw
-  FROM cand c
-  JOIN v q ON q.vec_id = c.query_id
-  JOIN v n ON n.vec_id = c.neighbor_id
-)
-SELECT query_id, neighbor_id, ROUND(cos_raw, 6) AS cosine,
-       CAST(ROW_NUMBER() OVER (
-         PARTITION BY query_id ORDER BY cos_raw DESC, neighbor_id ASC
-       ) AS INT) AS rank
-FROM scored
-QUALIFY rank <= {TOP_K}
-"""
-
-
-@query("ann_ivf_codebook_topk", oracle=ANN_IVF_CODEBOOK_ORACLE)
-def ann_ivf_codebook_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF top-k with an externally-supplied codebook (here: the first 16
-    embeddings as a deterministic stand-in for an offline-trained
-    quantizer — the production shape, where the codebook is a versioned
-    artifact). Assignment is argmax-cosine over literal centroids — a
-    pure scan-side projection — so the entire index+search pipeline is
-    oracle-checked; the train-inline KMeans variant (`ann_ivf_topk`)
-    stays rows-only because the training itself is not replayable in
-    SQL."""
-    from ..operators.similarity import ivf_codebook_topk
-
-    emb = Catalog(spark, sf_dir).embeddings
-    codebook = emb.where(F.col("vec_id") < IVF_N_CELLS).select(
-        F.col("vec_id").alias("cell"), F.col("embedding").alias("centroid")
-    )
-    q = emb.where(F.col("vec_id") < N_QUERY_VECS)
-    return ivf_codebook_topk(
-        emb, q, codebook, id_col="vec_id", vec_col="embedding",
-        n_probe=IVF_N_PROBE, k=TOP_K,
-    )
 
 
 # --------------------------------------------------------------------------
@@ -810,9 +737,9 @@ def semantic_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     POLICY-SIZED from the start: cells = ``2**recommended_bits(N)``
     (constant ~80-vector occupancy → pair work LINEAR in N — the same
     pinned half-away sizing contract the LSH oracles replay), with the
-    first-C embeddings as the deterministic codebook stand-in (the
-    ``ann_ivf_codebook_topk`` convention — production swaps in the
-    offline-trained versioned artifact, same argmax projection). The
+    first-C embeddings as the deterministic codebook stand-in
+    (production swaps in the offline-trained versioned artifact, same
+    argmax projection). The
     SF-adaptive oracle recomputes C from COUNT(*) and replays
     assignment, in-cell pair verification, star components, and the
     min-cent-cos representative choice in one static SQL string valid

@@ -298,14 +298,13 @@ def test_retries_exhausted_reraises_and_single_flight_not_retried(spark, env, mo
 
 @pytest.mark.slow
 def test_compaction_hook_bounds_file_counts_across_cycles(spark, env):
-    """The optional post-rebuild compaction hook (VERDICT r5 #7): a
-    15-min-cadence pipeline accretes small files per cycle — with
-    compact_target_bytes set, every run() ends by repairing exactly the
-    partitions it touched, so per-partition file counts stay bounded
-    across N cycles instead of growing with run count."""
+    """A 15-min-cadence pipeline must not accrete small files per cycle:
+    the staged-swap rebuild writes each touched partition as one file,
+    so per-partition file counts stay bounded across N cycles instead
+    of growing with run count — with no compaction pass at all."""
     src, gen, lake, ledger = env
     gen.insert_sales(120, batch=1, now=T1, spread_days=3)
-    run_pipeline_1(spark, src, lake, ledger, now=T1, compact_target_bytes=64 << 20)
+    run_pipeline_1(spark, src, lake, ledger, now=T1)
 
     # 5 more daily cycles, each inserting into the SAME few partitions
     # (sale_date = stamp − U(0, 1 day), inside every cycle's window)
@@ -313,43 +312,12 @@ def test_compaction_hook_bounds_file_counts_across_cycles(spark, env):
     for cycle in range(2, 7):
         t = t + timedelta(days=1)
         gen.insert_sales(40, batch=cycle, now=t - timedelta(hours=1), spread_days=1)
-        rep = run_pipeline_1(
-            spark, src, lake, ledger, now=t, compact_target_bytes=64 << 20
-        )
+        rep = run_pipeline_1(spark, src, lake, ledger, now=t)
         assert rep["validation"].status == SUCCESSFUL
         assert rep["rebuilt_partitions"]
 
-    # every partition merged back to the single file its byte size wants
+    # every partition is the single file its rebuild wrote
     stats = lake.partition_file_stats()
     assert stats
     for rel, nfiles, nbytes in stats:
         assert nfiles == 1, (rel, nfiles, nbytes)
-
-
-@pytest.mark.slow
-def test_compaction_hook_scopes_to_touched_partitions(spark, env, monkeypatch):
-    """Cost ∝ change set: the hook must pass only the just-rebuilt
-    year_month dirs to compact_partitions (a lake-wide walk per cycle
-    would defeat the point at 100 TB)."""
-    from bigdatapipelinepysparksqlserver_spark.sources.lake import LakeTable
-
-    src, gen, lake, ledger = env
-    gen.insert_sales(100, batch=1, now=T1, spread_days=40)
-    run_pipeline_1(spark, src, lake, ledger, now=T1)
-
-    seen = []
-    real = LakeTable.compact_partitions
-
-    def spy(self, *a, **kw):
-        seen.append(kw.get("only_under"))
-        return real(self, *a, **kw)
-
-    monkeypatch.setattr(LakeTable, "compact_partitions", spy)
-    gen.insert_sales(30, batch=2, now=T2 - timedelta(hours=1), spread_days=1)
-    rep = run_pipeline_1(
-        spark, src, lake, ledger, now=T2, compact_target_bytes=64 << 20
-    )
-    assert seen and seen[0] is not None
-    assert sorted(seen[0]) == sorted(
-        f"year_month={p}" for p in rep["rebuilt_partitions"]
-    )

@@ -8,8 +8,8 @@ import pytest
 from bigdatapipelinepysparksqlserver_spark.operators.similarity import (
     brute_force_topk,
     ivf_codebook_topk,
-    ivf_topk,
     lsh_topk,
+    train_ivf_codebook,
 )
 from bigdatapipelinepysparksqlserver_spark.sources.catalog import Catalog
 
@@ -47,9 +47,10 @@ def test_approximate_results_are_subset_quality(spark, emb):
     codebook = emb.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cell"), F.col("embedding").alias("centroid")
     )
+    trained = train_ivf_codebook(emb, n_centroids=8)
     for approx_df in (
         lsh_topk(emb, q, dim=64, k=5, bits=4),
-        ivf_topk(emb, q, n_centroids=8, n_probe=3, k=5),
+        ivf_codebook_topk(emb, q, trained, n_probe=3, k=5),
         ivf_codebook_topk(emb, q, codebook, n_probe=3, k=5),
     ):
         for r in approx_df.collect():
@@ -58,10 +59,17 @@ def test_approximate_results_are_subset_quality(spark, emb):
 
 @pytest.mark.slow
 def test_ivf_deterministic(spark, emb):
+    """Seeded KMeans training plus the codebook search is repeatable:
+    two independent train-then-search runs return identical rows."""
     q = emb.where(F.col("vec_id") < 3)
-    a = sorted(map(str, ivf_topk(emb, q, n_centroids=8, n_probe=2, k=5).collect()))
-    b = sorted(map(str, ivf_topk(emb, q, n_centroids=8, n_probe=2, k=5).collect()))
-    assert a == b
+
+    def train_then_search():
+        codebook = train_ivf_codebook(emb, n_centroids=8)
+        return sorted(
+            map(str, ivf_codebook_topk(emb, q, codebook, n_probe=2, k=5).collect())
+        )
+
+    assert train_then_search() == train_then_search()
 
 
 @pytest.mark.slow

@@ -51,9 +51,6 @@ def audit(plan: str) -> dict:
         "take_ordered": "TakeOrderedAndProject" in plan,
         "hazard_cartesian": "CartesianProduct" in plan,
         "hazard_py_udf": "BatchEvalPython" in plan,
-        "hazard_global_window": bool(
-            re.search(r"Window \[[^\]]*\](?!, \[)", plan) and False
-        ),  # global windows are banned by tests/test_plans.py; keep column for the report
     }
 
 
