@@ -75,10 +75,16 @@ def reconcile_aggs(df: DataFrame, count_col: str, sum_col: str) -> DataFrame:
     (load_sales_history.py:225-232); run against any source twin and compared
     for exact equality. Sum is decimal → exact, order-independent.
     """
-    return df.agg(
+    return df.agg(*reconcile_cols(count_col, sum_col))
+
+
+def reconcile_cols(count_col: str, sum_col: str) -> "list[Column]":
+    """The two aggregate columns of :func:`reconcile_aggs`, for callers
+    that collect them another way (``DataFrame.observe``)."""
+    return [
         F.coalesce(F.count(count_col), F.lit(0)).alias("sale_count"),
         F.coalesce(F.sum(dec(sum_col)), F.lit(0).cast("decimal(18,2)")).alias("paid_sum"),
-    )
+    ]
 
 
 def next_run_id(ledger: DataFrame, id_col: str = "id") -> DataFrame:

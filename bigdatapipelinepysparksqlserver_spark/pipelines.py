@@ -5,10 +5,16 @@ machine (C5 — a RUNNING row blocks a second concurrent start).
 
 Pipeline 1 (`sales_pipeline_1.py` → `load_sales_history.py`):
   ledger start → changed partitions → extract+denormalize → partition
-  rebuild → ledger finish → reconcile → ledger validation verdict.
+  rebuild → ledger finish → validation start → reconcile → ledger
+  validation verdict. With mart partials (the scheduled incremental
+  cycle), the validation step first refreshes the partials from one
+  read-back of the rebuilt partitions, and that same scan gives
+  reconcile its lake-side COUNT/SUM.
 Pipeline 2 (`sales_pipeline_2.py` → `load_sales_mart.py`):
-  two mart aggregations over the lake → staging write → atomic swap
-  publish (M4+M5 as a directory-rename transaction).
+  two mart aggregations (over the lake, or over the partials) →
+  staging write → atomic swap publish (M4+M5 as a directory-rename
+  transaction). It runs whatever the validation verdict, as the
+  reference's DAG does.
 
 Clock injection throughout (SURVEY §7.5 risk 3).
 """
@@ -84,8 +90,15 @@ def run_pipeline_1(
     now: datetime,
     lag_minutes: int = 5,
     stale_running_minutes: int = 60,
+    partials: "IncrementalMart | None" = None,
 ) -> dict:
     """One incremental load + validation cycle. Returns a run report.
+
+    With ``partials``, validation refreshes the mart partials of the
+    rebuilt partitions (:meth:`~.plans.mart_incremental.IncrementalMart.
+    refresh`), whose one read-back of the lake also yields the lake-side
+    totals reconcile compares against its source re-query; pipeline 2
+    then only stages and publishes (see :func:`sales_pipeline_cycle`).
 
     Single-flight vs crash recovery: a RUNNING ledger row either belongs
     to a live concurrent run (block it — C5) or to a run that died before
@@ -127,7 +140,11 @@ def run_pipeline_1(
         raise
 
     ledger.start_validation(run_id, now)
-    res = reconcile(src.read("sales"), lake.read(), parts, cur)
+    if partials is None:
+        res = reconcile(src.read("sales"), lake.read(), parts, cur)
+    else:
+        totals = partials.refresh(parts)
+        res = reconcile(src.read("sales"), None, parts, cur, lake_totals=totals)
     ledger.finish_validation(run_id, now, res.status)
     return {
         "run_id": run_id,
@@ -352,11 +369,9 @@ def run_pipeline_2(
     :func:`run_pipeline_2_incremental`.
     """
     lake_df = lake.read()
-    mart.write_staging("sales_history_1", mart_client_count_df(lake_df, now))
-    mart.write_staging("sales_history_2", mart_sales_agg_df(lake_df, now))
-    mart.publish("sales_history_1")
-    mart.publish("sales_history_2")
-    return {"published": ["sales_history_1", "sales_history_2"], "refresh": now}
+    return _publish_marts(
+        mart, mart_client_count_df(lake_df, now), mart_sales_agg_df(lake_df, now), now
+    )
 
 
 def run_pipeline_2_incremental(
@@ -373,8 +388,14 @@ def run_pipeline_2_incremental(
     :func:`run_pipeline_2`'s full lake scan cannot.
     """
     partials.refresh(changed_partitions)
-    mart.write_staging("sales_history_1", partials.client_count(now))
-    mart.write_staging("sales_history_2", partials.sales_agg(now))
+    return _publish_marts(mart, partials.client_count(now), partials.sales_agg(now), now)
+
+
+def _publish_marts(
+    mart: MartPublisher, client_count: DataFrame, sales_agg: DataFrame, now: datetime
+) -> dict:
+    mart.write_staging("sales_history_1", client_count)
+    mart.write_staging("sales_history_2", sales_agg)
     mart.publish("sales_history_1")
     mart.publish("sales_history_2")
     return {"published": ["sales_history_1", "sales_history_2"], "refresh": now}
@@ -514,13 +535,17 @@ def sales_pipeline_cycle(
     """The reference DAG's task chain ``run_pipeline_1 >>
     run_pipeline_2`` as one schedulable cycle: incremental lake load +
     validation, then mart refresh — incremental when ``partials`` is
-    supplied (the 15-minute-cadence form), full-scan otherwise."""
+    supplied (the 15-minute-cadence form), full-scan otherwise. With
+    ``partials``, pipeline 1's validation step refreshes them from the
+    same read-back that reconcile checks, so pipeline 2 only stages and
+    publishes — the result equals ``run_pipeline_1 >>
+    run_pipeline_2_incremental`` with one lake read-back fewer."""
 
     def _cycle(fire: datetime) -> dict:
-        rep1 = run_pipeline_1(spark, src, lake, ledger, now=fire)
+        rep1 = run_pipeline_1(spark, src, lake, ledger, now=fire, partials=partials)
         if partials is not None:
-            rep2 = run_pipeline_2_incremental(
-                spark, partials, mart, rep1["rebuilt_partitions"], now=fire
+            rep2 = _publish_marts(
+                mart, partials.client_count(fire), partials.sales_agg(fire), fire
             )
         else:
             rep2 = run_pipeline_2(spark, lake, mart, now=fire)

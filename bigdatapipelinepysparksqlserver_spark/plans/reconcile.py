@@ -8,6 +8,14 @@ risk 1).
 
 Empty change-set short-circuits to SUCCESSFUL (load_sales_history.py:
 205-207).
+
+The scheduled cycle with mart partials (``pipelines.run_pipeline_1(...,
+partials=...)``) hands in ``lake_totals`` instead of aggregating the
+lake here: :meth:`~.mart_incremental.IncrementalMart.refresh` observes
+these totals on the lake scan that feeds its sales partial, so they are
+still a read-back of the files as written, never the rebuild's own
+numbers. The source half is always this module's independent
+re-query, which is what catches late backdated rows.
 """
 
 from __future__ import annotations
@@ -35,15 +43,19 @@ class ReconcileResult:
 
 def reconcile(
     source_sales: DataFrame,
-    lake_df: DataFrame,
+    lake_df: DataFrame | None,
     partitions: list[int],
     current_cutoff: datetime,
+    lake_totals: tuple | None = None,
 ) -> ReconcileResult:
     """Compare source vs lake COUNT/SUM over ``partitions``.
 
     Source side mirrors the T-SQL half (load_sales_history.py:213-218):
     year_month IN (...) AND sale_date < cutoff; lake side the SparkSQL
     half (:225-232). Both aggregates are single-row — collect is free.
+    ``lake_totals`` — ``(count, sum)`` already read back from the lake's
+    files over ``partitions`` — replaces the lake-side aggregate, and
+    ``lake_df`` is then not read.
     """
     if not partitions:
         return ReconcileResult(SUCCESSFUL, 0, 0, 0, 0)
@@ -52,13 +64,14 @@ def reconcile(
         F.col("year_month").isin(partitions)
         & (F.col("sale_date") < F.lit(current_cutoff))
     )
-    lk = lake_df.where(F.col("year_month").isin(partitions))
-
     s = reconcile_aggs(src, "id", "paid").first()
-    l = reconcile_aggs(lk, "id", "paid").first()  # noqa: E741
+    if lake_totals is None:
+        lk = lake_df.where(F.col("year_month").isin(partitions))
+        lake_totals = tuple(reconcile_aggs(lk, "id", "paid").first())
+    lake_count, lake_sum = lake_totals
 
-    ok = s.sale_count == l.sale_count and s.paid_sum == l.paid_sum
+    ok = s.sale_count == lake_count and s.paid_sum == lake_sum
     return ReconcileResult(
         SUCCESSFUL if ok else FAILED,
-        s.sale_count, s.paid_sum, l.sale_count, l.paid_sum,
+        s.sale_count, s.paid_sum, lake_count, lake_sum,
     )

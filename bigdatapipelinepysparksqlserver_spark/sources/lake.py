@@ -19,8 +19,12 @@ Scale notes:
 - the swap touches exactly the changed partitions — rebuild cost is
   proportional to the CHANGE SET, never the table (the whole point of
   partition-grain CDC at 100 TB).
-- writes coalesce to a bounded file count per partition to avoid the
-  small-files problem the reference calls out (README.md:62).
+- every write lands one file per partition, avoiding the small-files
+  problem the reference calls out (README.md:62), and runs on every
+  core: the hash repartition on the partition keys has a fixed count
+  (the session's default parallelism), because AQE coalesces a keyed
+  shuffle of small data — a CDC change set — into one task, which then
+  writes every partition's file in turn.
 """
 
 from __future__ import annotations
@@ -34,7 +38,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schemas import LAKE_PARTITION_COLS
-from .lake_snapshot import escape_partition_value
+from .lake_snapshot import escape_partition_value, one_file_per_partition
 
 STAGE_PREFIX = "_stage-"
 
@@ -304,12 +308,13 @@ class LakeTable:
             ],
         )
         # the common case — fragmented partitions merging to 1 file each —
-        # is ONE keyed-repartition job regardless of how many partitions
-        # qualify (cost bounded by one shuffle of the fragmented data).
-        # Splits are rarer and need an exact file count, which only an
-        # explicit repartition(n) gives (AQE coalesces keyed shuffles of
-        # small data back into one task, silently undoing a salt), so
-        # each oversized partition is its own round-robin rewrite.
+        # is ONE write through the table's writer regardless of how many
+        # partitions qualify: its keyed repartition (fixed at the
+        # default parallelism) sends each partition to one task, so one
+        # file. Splits are rarer and need an exact file count per
+        # partition, which a keyed shuffle cannot give (every row of a
+        # partition hashes to the same task), so each oversized
+        # partition is its own round-robin repartition(want) rewrite.
         merge_rels = [rel for rel, want in todo if want == 1]
         if merge_rels:
             frag = self.read().where(rel_expr.isin(merge_rels))
@@ -346,17 +351,13 @@ class LakeTable:
         return self.read().select(*self.partition_cols).distinct()
 
     def _writer(self, df: DataFrame):
-        # hash-repartition on the partition keys: every row of one lake
-        # partition lands in one shuffle task → exactly one file per
-        # partition (small-files avoidance, README.md:62). A partition
-        # too big for one file is compact_partitions' split path, which
-        # uses an explicit round-robin repartition instead.
-        ordered = df.select(
-            *[c for c in df.columns if c not in self.partition_cols],
-            *self.partition_cols,
+        # one file per partition, written by every core (see
+        # one_file_per_partition). A partition too big for one file is
+        # compact_partitions' split path, which uses an explicit
+        # round-robin repartition instead.
+        return one_file_per_partition(df, self.partition_cols).write.partitionBy(
+            *self.partition_cols
         )
-        out = ordered.repartition(*[F.col(c) for c in self.partition_cols])
-        return out.write.partitionBy(*self.partition_cols)
 
 
 def write_bucketed_table(

@@ -134,6 +134,22 @@ def escape_partition_value(v) -> str:
     )
 
 
+def one_file_per_partition(df: DataFrame, partition_cols: Sequence[str]) -> DataFrame:
+    """``df`` with its partition columns moved last, hash-repartitioned
+    on them into ``defaultParallelism`` shuffle partitions: every row of
+    one table partition lands in one task, so a ``partitionBy`` write
+    gives exactly one file per partition (small-files avoidance,
+    README.md:62), and the write stage runs on every core. The count is
+    fixed because AQE coalesces a keyed shuffle of small data into one
+    task, which then writes every file in turn; a repartition with an
+    explicit count is never coalesced."""
+    ordered = df.select(
+        *[c for c in df.columns if c not in partition_cols], *partition_cols
+    )
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return ordered.repartition(n, *[F.col(c) for c in partition_cols])
+
+
 def unescape_partition_value(s: str):
     """Directory-name form -> raw value (None for the Hive null dir)."""
     if s == _HIVE_NULL:
@@ -1706,13 +1722,10 @@ class SnapshotLakeTable:
             except ValueError:
                 self._proto.abort(nxt)
                 raise
-        # one file per partition via the partition-key hash repartition
-        # (same small-files stance as LakeTable._writer); the write is
-        # invisible — nothing references txn=<nxt> yet
-        ordered = df.select(
-            *[c for c in df.columns if c not in self.partition_cols],
-            *self.partition_cols,
-        )
+        # one file per partition, same repartition as LakeTable's
+        # writer; the write is invisible — nothing references txn=<nxt>
+        # yet
+        ordered = one_file_per_partition(df, self.partition_cols)
         try:
             # schema-evolution gate BEFORE the data write: a refused
             # (type-changing) publish aborts its claim without having
@@ -1730,8 +1743,7 @@ class SnapshotLakeTable:
             # finding). The claimed dir is freshly created and empty,
             # so append is write-equivalent and never deletes it.
             (
-                ordered.repartition(*[F.col(c) for c in self.partition_cols])
-                .write.partitionBy(*self.partition_cols)
+                ordered.write.partitionBy(*self.partition_cols)
                 .mode("append")
                 .parquet(txn_dir)
             )

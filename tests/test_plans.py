@@ -97,17 +97,13 @@ def all_plans(spark):
 
 def test_no_cartesian_products_anywhere(all_plans):
     """Every registered query except the documented brute-force ANN
-    baselines must be cartesian-free. ann_ivf_topk's query×centroid
-    cross join is broadcast-size by construction (n_queries × 16);
-    tpch_q22's is a 1-row scalar-aggregate broadcast (the legitimate
-    scalar-subquery shape)."""
+    baselines must be cartesian-free. tpch_q22's cross join is a 1-row
+    scalar-aggregate broadcast (the legitimate scalar-subquery shape)."""
     allowed = {
         "ann_topk_cosine",
         "ann_topk_quantized",  # same broadcast query-side cross join
         "ann_topk_pq",  # same, over reconstructed vectors
-        "ann_lsh_topk",
         "emb_neardup_exact",
-        "ann_ivf_topk",
         "tpch_q22",
         "tpch_q11",  # 1-row threshold broadcast (scalar-subquery shape)
         "doc_length_deciles",  # 1-row percentile-edges broadcast (same shape)
