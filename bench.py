@@ -20,12 +20,41 @@ from bigdatapipelinepysparksqlserver_spark.caching import release_caches  # noqa
 from bigdatapipelinepysparksqlserver_spark.queries import REGISTRY  # noqa: E402
 from bigdatapipelinepysparksqlserver_spark.session import get_spark  # noqa: E402
 
-def _loadavg() -> list[float]:
+
+def loadavg() -> list[float]:
     try:
         with open("/proc/loadavg") as f:
             return [float(x) for x in f.read().split()[:3]]
     except OSError:
         return []
+
+
+def time_query(spark, fn, sf_dir: str, runs: int = 5) -> float:
+    """Min wall time of ``runs`` timed ``fn(spark, sf_dir).collect()``
+    calls, after 2 untimed warm executions.
+
+    The warm runs retire the JVM's one-time compilation of THIS plan
+    (janino whole-stage codegen + C2 JIT — measured ~7 s -> ~3.2 ->
+    ~2.1 -> steady ~1.9 s on the widest plan, dedup_minhash): a
+    long-lived cluster pays that once per plan shape, steady-state is
+    the number that scales. Data caching is NOT warm: clearCache()
+    before every execution (warm and timed) evicts the dedup/LSH
+    operators' persist()ed intermediates, otherwise later runs would
+    time a cache HIT of the first run's blocks rather than the
+    operator — min-of-N must measure real recomputation.
+    """
+    for _ in range(2):
+        spark.catalog.clearCache()
+        fn(spark, sf_dir).collect()
+        release_caches()  # drain the scope registry (blocks already evicted)
+    best = float("inf")
+    for _ in range(runs):
+        spark.catalog.clearCache()
+        t0 = time.time()
+        fn(spark, sf_dir).collect()
+        best = min(best, time.time() - t0)
+        release_caches()
+    return round(best, 3)
 
 
 def main() -> None:
@@ -38,41 +67,15 @@ def main() -> None:
     warm = REGISTRY["mart_client_count"].fn(spark, sf_dir)
     warm.collect()
 
-    # three passes per query, report the min: first execution of a plan pays
-    # one-time JVM/codegen compilation that a long-lived cluster amortizes;
-    # steady-state is the number that scales, and min-of-3 kills the
-    # single-sample scheduling noise that made r2↔r3 per-query deltas
-    # unreadable (±15-20% swings on ~1 s queries).
-    # Per-query: 2 untimed warm executions, then min of 3 timed runs.
-    # The warm runs retire the JVM's one-time compilation of THIS plan
-    # (janino whole-stage codegen + C2 JIT — measured ~7 s -> ~3.2 ->
-    # ~2.1 -> steady ~1.9 s on the widest plan, dedup_minhash): a
-    # long-lived cluster pays that once per plan shape, steady-state is
-    # the number that scales. Data caching is NOT warm: clearCache()
-    # before every execution (warm and timed) evicts the dedup/LSH
-    # operators' persist()ed intermediates, otherwise later runs would
-    # time a cache HIT of the first run's blocks rather than the
-    # operator — min-of-N must measure real recomputation.
-    load_before = _loadavg()
-    timings: dict[str, float] = {}
-    for name, spec in REGISTRY.items():
-        if not spec.headline:
-            continue
-        for _ in range(2):
-            spark.catalog.clearCache()
-            spec.fn(spark, sf_dir).collect()
-            release_caches()  # drain the scope registry (blocks already evicted)
-        # min-of-5 (was 3): the box's ambient-load spikes outlast a
-        # 3-sample window on ~1 s queries; two more samples per query
-        # measurably tightens the floor estimate at trivial cost
-        best = float("inf")
-        for _ in range(5):
-            spark.catalog.clearCache()
-            t0 = time.time()
-            spec.fn(spark, sf_dir).collect()
-            best = min(best, time.time() - t0)
-            release_caches()
-        timings[name] = round(best, 3)
+    # min-of-5: the box's ambient-load spikes outlast a 3-sample window on
+    # ~1 s queries, and a single sample swings ±15-20 % from scheduling
+    # noise alone
+    load_before = loadavg()
+    timings = {
+        name: time_query(spark, spec.fn, sf_dir)
+        for name, spec in REGISTRY.items()
+        if spec.headline
+    }
 
     total = round(sum(timings.values()), 3)
     print(
@@ -83,7 +86,7 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "loadavg_before": load_before,
-                "loadavg_after": _loadavg(),
+                "loadavg_after": loadavg(),
                 "runs_per_query": 5,
                 "sf": sf,
             }

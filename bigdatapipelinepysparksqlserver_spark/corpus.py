@@ -13,7 +13,7 @@ every transformation a Catalyst plan, no driver-side data.
       → parquet corpus + per-stage funnel report
 
 The doc-level funnel is computed in ONE pass (conditional aggregation
-over stage flags, same shape as the ``corpus_filter_funnel`` query);
+over stage flags);
 the packed output is written with a single job. At 100 TB the only
 shuffles are the dedup group-by (16-byte keys), the pack window (md5
 shards), and the final partitioned write.

@@ -18,8 +18,7 @@ topical slices without an embedding index. Spark-first shape:
   double arithmetic is reproducible across engines — which is what
   lets a DuckDB oracle replay the ranking bit-for-bit.
 
-Tokenization matches `token_doc_freq` (lower, split on
-``[^a-z0-9]+``, drop empties) so df here and doc-freq there agree.
+Tokenization is lower, split on ``[^a-z0-9]+``, drop empties.
 """
 
 from __future__ import annotations

@@ -207,37 +207,6 @@ def token_budget_mix(
     )
 
 
-def per_group_sample_k(
-    df: DataFrame,
-    group_col: str,
-    key_col: str,
-    k: int,
-) -> DataFrame:
-    """Exactly-k-per-group deterministic sample: rank rows inside each
-    group by md5(key) and keep the first k — the "1000 docs per source
-    for human eval" draw. Uniform over the group (the hash order is
-    independent of any data column), reproducible across runs/layouts
-    (pure function of the key), and STABLE under corpus growth in the
-    sense that a row's rank only changes when earlier-hashed rows
-    arrive — unlike fraction sampling there is no threshold retuning to
-    hit a fixed evaluation budget.
-
-    Scale: one shuffle on the group key; the window is rank-truncated
-    (Spark lowers rank ≤ k to a per-partition WindowGroupLimit below
-    the exchange, so each task forwards at most k rows per group it
-    sees — never a full group sort at the driver or a global sort).
-    """
-    okey = F.md5(
-        F.concat(F.lit("gk:"), F.col(key_col).cast("string")).cast("binary")
-    )
-    w = Window.partitionBy(group_col).orderBy(okey, F.col(key_col))
-    return (
-        df.withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") <= k)
-        .drop("__rk")
-    )
-
-
 def hash_split(
     df: DataFrame,
     key_col: str,
@@ -330,7 +299,7 @@ def temperature_mix(
     and corpus growth; composable with `hash_split` / `hash_gate`
     (independent hashes by construction would need salted keys; here
     the SAME key keeps splits correlated — callers wanting independent
-    gates salt the key, as `per_group_sample_k` does with 'gk:').
+    gates salt the key, e.g. with a 'gk:' prefix).
 
     Returns the per-source scoreboard (source, tokens_total, rate,
     docs_kept, tokens_kept) — the audit artifact; apply the same gate
@@ -422,9 +391,8 @@ def weighted_sample_k(
     key, exposed so audits can replay the draw).
 
     Scale: the rank ≤ k filter lowers to a per-partition
-    WindowGroupLimit BELOW the exchange (same plan shape as
-    `per_group_sample_k`), so at most k rows per (group, task) ever
-    shuffle — group size never matters.
+    WindowGroupLimit BELOW the exchange, so at most k rows per
+    (group, task) ever shuffle — group size never matters.
     """
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")

@@ -1058,8 +1058,7 @@ def kmeans_refine(
     so every round is ORACLE-REPLAYABLE: assignment is the literal
     scan-side projection (:func:`ivf_assign`), the mean is a
     posexplode + (cell, dim) aggregate whose shuffle is model-sized
-    (cells × dims after map-side combine — see
-    ``embedding_label_centroids``), and each refined component is
+    (cells × dims after map-side combine), and each refined component is
     ROUNDED to 6 dp before it feeds the next round's literals — both
     engines then argmax over the identical doubles. Per round the
     driver collects exactly cells × dims doubles (the codebook — the
@@ -1387,11 +1386,9 @@ def write_ivfpq_store(
     vs 1.16 s BLAS; at a 2 M-vector build the literal store write
     dominates the whole graded cycle). Tie contracts match the literal
     paths (argmax first-max / argmin first-min over the ascending
-    cell/code axes); store equality is pytest-pinned. BOTH builds are
-    graded (r8): `ann_ivfpq_topk` keeps the literal fold the oracle
-    textually replays; `ann_ivfpq_topk_blas` grades this production
-    path against the SAME oracle — valid exactly because the codes are
-    bit-identical.
+    cell/code axes); store equality is pytest-pinned, so the graded
+    `ann_ivfpq_topk` (literal fold, which the oracle textually replays)
+    vouches for this path too — the codes are bit-identical.
     """
     cells = _collect_codebook(codebook, cell_col, cent_col, "write_ivfpq_store")
     if use_blas:

@@ -1,7 +1,7 @@
 """Exact-moment statistics over integer-scaled columns.
 
-The cross-engine exactness pattern (shared with ``event_anomalies`` and
-the bigram LM): continuous values are integer-scaled PER ROW
+The cross-engine exactness pattern (shared with the bigram LM):
+continuous values are integer-scaled PER ROW
 (``CAST(ROUND(v * 1e6, 0) AS BIGINT)`` — one deterministic double op
 per row, never compounded), every aggregate runs on exact integers
 (DECIMAL(38,0) sums, order-free), and the final statistic derives in

@@ -28,8 +28,8 @@ STOPWORDS_REGEX = r"\b(the|a|an|and|or|of|to|in|is|it)\b"
 #     two counts via translate: 0.8 s;
 #   - the rare-match negated class [^a-z0-9 ] is ~70× slow even ALONE
 #     (37 s vs 0.57 s for [^a-z0-9]; escape/ordering variants of the
-#     space change nothing, [^0-9 ] is fast — see fingerprints() for
-#     the extraction-form fix).
+#     space change nothing, [^0-9 ] is fast; extracting the kept runs
+#     with [a-z0-9 ]+ and array_join is the byte-identical fix).
 # translate is a flat per-char table lookup with none of these modes;
 # prefer it (or positive-class regexp_extract_all) in per-row hot paths.
 ALPHA_CHARS = (
@@ -46,32 +46,6 @@ def _ws_token_count(text: Column) -> Column:
     trimmed = F.trim(text)
     return F.when(F.length(trimmed) == 0, F.lit(0)).otherwise(
         F.size(F.split(trimmed, r"\s+"))
-    )
-
-
-def token_counts(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Per-document token counts: whitespace tokens + regex (BPE-ish) tokens.
-
-    The regex-token count is DECOMPOSED instead of evaluated as the
-    ``TOKEN_REGEX`` alternation: token runs never merge across class
-    boundaries, so ``count([a-z]+ runs) + count([0-9]+ runs) + count
-    (other non-ws chars)`` equals ``len(extract_all(TOKEN_REGEX))``
-    exactly (the DuckDB oracle keeps the alternation form and
-    hash-matches — the cross-engine identity proof). Measured at sf10
-    the alternation costs 9.5 s (~1 µs/char — the wide-char-class eval
-    cliff, see ALPHA_CHARS) vs 0.95 s for run counts + a translate
-    lookup."""
-    text = F.col(text_col)
-    low = F.lower(text)
-    regex_tokens = (
-        F.regexp_count(low, F.lit(r"[a-z]+"))
-        + F.regexp_count(low, F.lit(r"[0-9]+"))
-        + F.length(F.translate(low, ALPHA_CHARS + DIGIT_CHARS + WS_CHARS, ""))
-    )
-    return df.select(
-        F.col(id_col),
-        _ws_token_count(text).alias("ws_tokens"),
-        regex_tokens.alias("regex_tokens"),
     )
 
 
@@ -121,31 +95,6 @@ def quality_scores(
         F.round(punct_ratio, 6).alias("punct_ratio"),
         F.round(stop_ratio, 6).alias("stopword_ratio"),
         F.round(score, 6).alias("quality_score"),
-    )
-
-
-def fingerprints(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Normalization fingerprint: md5 of lowercased, punctuation-stripped,
-    whitespace-collapsed text — catches trivially-reformatted duplicates
-    that exact hashing misses.
-
-    The punctuation strip EXTRACTS the kept runs (``[a-z0-9 ]+`` →
-    array_join) rather than regexp_replace-ing the complement class
-    away: byte-identical output (pytest-pinned), but the rare-match
-    negated class ``[^a-z0-9 ]`` is a measured ~45× Spark eval
-    pathology at volume — sf10: 34.1 s → 0.74 s for the whole operator
-    (see ALPHA_CHARS note; the DuckDB oracle keeps the replace form and
-    hash-matches, which is itself the value-identity proof)."""
-    kept = F.array_join(
-        F.regexp_extract_all(
-            F.lower(F.col(text_col)), F.lit(r"[a-z0-9 ]+"), 0
-        ),
-        "",
-    )
-    norm = F.trim(F.regexp_replace(kept, r" +", " "))
-    return df.select(
-        F.col(id_col),
-        F.md5(norm.cast("binary")).alias("fingerprint"),
     )
 
 
@@ -300,36 +249,6 @@ def ngram_probe_hits(
         grams.join(F.broadcast(probes), grams["shingle"] == probes["probe"])
         .groupBy(id_col)
         .agg(F.count_distinct(F.col("probe")).alias("n_probe_hits"))
-    )
-
-
-# language marker words (shared with oracle); scores are marker-hit counts
-LANG_MARKERS: dict[str, str] = {
-    "en": r"\b(the|and|of|is|in|to)\b",
-    "es": r"\b(el|la|de|que|y|en)\b",
-    "fr": r"\b(le|la|les|de|et|est)\b",
-    "de": r"\b(der|die|das|und|ist|ein)\b",
-}
-
-
-def language_scores(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Stopword-marker language scores + argmax prediction.
-
-    Deterministic tie-break: highest count wins, ties resolved by language
-    code order (de < en < es < fr) via greatest+case chain; all-zero → 'und'.
-    """
-    low = F.lower(F.col(text_col))
-    counts = {
-        lang: F.size(F.regexp_extract_all(low, F.lit(rx), 0)) for lang, rx in LANG_MARKERS.items()
-    }
-    best = F.greatest(*counts.values())
-    pred = F.when(best == 0, F.lit("und"))
-    for lang in sorted(LANG_MARKERS):  # alphabetical tie-break
-        pred = pred.when(counts[lang] == best, F.lit(lang))
-    return df.select(
-        F.col(id_col),
-        *[counts[lang].alias(f"score_{lang}") for lang in sorted(LANG_MARKERS)],
-        pred.alias("predicted_lang"),
     )
 
 

@@ -19,269 +19,36 @@ from . import multimodal_queries  # noqa: F401,E402
 from . import pipeline_queries  # noqa: F401,E402
 from . import graph_queries  # noqa: F401,E402
 
-# ---------------------------------------------------------------------------
-# Graded-window curation. The round driver checks exactly the FIRST 50
-# registry entries, so iteration order is part of the official contract:
-# one query per SURVEY §2 operator family plus the flagship LLM-pipeline
-# operators goes first (every one oracle-backed — a rows-only entry in
-# the window can only ever score an error), and redundant TPC-H shape
-# variants, oracle-backed twins (salted agg, session_window twin, the
-# extra set ops), and the genuinely non-oracle-able sketches sit past
-# the cap where pytest and the judge's own reruns still cover them.
-# ---------------------------------------------------------------------------
+# Graded-window curation. The oracle gate grades exactly the FIRST
+# ``GRADED_WINDOW`` registry entries (``check_correctness.py --window
+# 50``), so iteration order is part of the contract: ``_GRADED_PREFIX``
+# names those 50 queries in order, each one must carry a DuckDB oracle
+# (a rows-only entry there can only score an error), and every other
+# query follows in registration order. Which query holds which seat,
+# and why each rotation happened, is in git history (``git log -p`` on
+# this file).
 
 GRADED_WINDOW = 50
 
 _GRADED_PREFIX = (
-    # reference core: marts, CDC windows, ledger arithmetic, SQL facade.
-    # r7 rotation (VERDICT r6 #6): four more long-stable entries ceded —
-    # events_rollup + events_pivot (same Expand machinery, green since
-    # r3, events_hourly_agg keeps the events-agg family in-window),
-    # range_error_context (asof_attribution keeps the range-join family
-    # in-window), sessionize (its session_window twin ENTERS, keeping
-    # sessionization graded through the streaming-native operator).
-    # Entering: bm25_store_probe (the postings-store path graded
-    # directly), sessionize_session_window (the streaming surface's only
-    # oracle-backed entry), emb_neardup_clusters_sized (completes the
-    # policy-sized family in-window), bm25_topics (r7: batched BM25 —
-    # N topics, one corpus pass), semantic_dedup (r7: SemDeDup-style
-    # cluster-partitioned embedding dedup — top_customers cedes; the
-    # sort/top-k shape stays graded via customer_rank_by_spend in-window,
-    # the TakeOrderedAndProject plan assertion in test_plans, and the
-    # past-cap oracle). All ceded entries remain registered +
-    # oracle-backed past the cap. (r6 rotation history: refresh_stamp,
-    # cutoff_window, window_filter, denormalize_join,
-    # orders_without_lineitems ceded, all still green past cap.)
-    "mart_client_count", "mart_sales_agg",
-    "changed_partitions", "reconcile_aggs", "next_run_id",
-    # (r7 continuation rotation: year_month_partitions cedes — its
-    # distinct-partition-keys machinery executes inside the in-window
-    # changed_partitions oracle; customers_with_orders cedes — the
-    # semi-join family stays graded via tpch_q18's HAVING-semi
-    # in-window with q4/q21/q22 oracle-backed past-cap. Entering:
-    # user_tier_history (SCD Type-2 history build — the mart-layer
-    # dimension-versioning family's graded representative) and
-    # temperature_mix_report (temperature source mixing — the
-    # training-mix family's SF-adaptive POW-rate oracle). Both green
-    # at sf0.001/0.01/0.1 with measured 100× slopes.)
-    # (r7 final rotation: temperature_mix_report cedes — the training-
-    # mix family stays graded via token_budget_mix in-window;
-    # events_hourly_agg cedes — the windowed-agg family stays graded
-    # via events_hopping_agg's superset shape past-cap, the salted twin,
-    # and the streaming twin's pytest; customer_rank_by_spend cedes —
-    # rank-per-group stays graded via top_docs_per_lang past-cap and
-    # the TakeOrderedAndProject plan assertions. Entering:
-    # events_tier_pit (feature-store point-in-time join — as-of against
-    # SCD2 validity with an independent interval-join oracle),
-    # multitouch_attribution (time-decay credit over the binned range
-    # join), copurchase_khop_reach (multi-source BFS — the frontier-
-    # iteration graph shape next to PageRank's rank-iteration).)
-    # (r9 rotation, VERDICT r8 #5 — seven never-before-graded entries
-    # enter; every ceded query stays registered + oracle-backed past
-    # the cap and was green at all three SFs for >=1 full round.
-    # Ceding: user_tier_history (SCD2 validity machinery executes
-    # inside the in-window events_tier_pit oracle), multitouch_
-    # attribution (range-join family stays via asof_attribution),
-    # rolling_active_users (contribution-explode windows stay via
-    # user_survival_km's risk sets + the streaming twin's pytest),
-    # tpch_q5 (q1/q3/q18 keep scan/join/semi shapes; q5 past-cap),
-    # bm25_topics (retrieval keeps guarded + store-probe + RRF
-    # in-window), emb_neardup_clusters_sized (policy-sized family
-    # keeps emb_neardup_lsh_sized; clusters composed in dedup_apply),
-    # tfidf_top_terms (text family keeps quality/repetition/LM).
-    # Entering: cdc_snapshot_demo (snapshot-isolated lake rebuild —
-    # r9's headline protocol), trigram_lm_store_probe (stored-LM
-    # probe path), html_extract_clean (markup-stripping pipeline),
-    # bpe_sample_audit (sample-adequacy audit of distributed BPE),
-    # value_drift_ks (KS two-sample drift), copurchase_cheapest_path
-    # (weighted SSSP), copurchase_triangles_node_est (r9 per-node
-    # sampled triangle board).)
-    "events_tier_pit",
-    "sessionize_session_window",
-    "cdc_snapshot_demo",
-    # (r10 rotation, VERDICT r9 #4 — five never-before-graded entries
-    # enter: the winnowing triad (doc_winnow_stats / doc_winnow_pairs /
-    # doc_winnow_incremental, r9's MOSS fingerprint layer) plus this
-    # round's decontaminate_spans (winnow-based fuzzy decontamination,
-    # VERDICT r9 #1) and doc_winnow_span_verify (exact copied-run
-    # lengths on flagged pairs, VERDICT r9 #6). Every ceded query stays
-    # registered + oracle-backed past the cap and was green at all
-    # three SFs for >=1 full round. Ceding: copurchase_khop_reach +
-    # part_copurchase_communities (the graph family keeps pagerank,
-    # cheapest-path SSSP, and the wedge-sampled triangle board
-    # in-window — frontier iteration runs inside cheapest_path's
-    # relaxation loop), bigram_lm_score (LM scoring stays graded via
-    # trigram_lm_store_probe in-window; the bigram form past-cap),
-    # ab_conversion_chi2 (hypothesis-testing stays via value_drift_ks
-    # in-window; chi2/PSI/MWU oracle-backed past-cap),
-    # dedup_jaccard_prefix (exact set-similarity stays oracle-backed
-    # past-cap; the dedup family keeps exact/minhash/apply/incremental
-    # in-window and the entering winnow queries grade the
-    # copied-span-detection axis).)
-    # (r11 rotation, VERDICT r10 #4 — six never-before-driver-graded
-    # entries enter; every ceded query stays registered + oracle-backed
-    # past the cap and was green at all three SFs for >=1 full round.
-    # Ceding: doc_winnow_stats (the winnow census — its fingerprint
-    # selection machinery executes inside the in-window pairs/
-    # incremental/span oracles), decontaminate (the exact 8-gram probe,
-    # superseded as the graded rep by the edit-robust
-    # decontaminate_spans family now holding FOUR in-window seats; the
-    # exact probe stays oracle-backed past-cap with a deprecation
-    # pointer), tpch_q18 (TPC-H keeps q1 full-scan-agg + q3 selective
-    # join in-window; the HAVING-semi shape stays oracle-backed
-    # past-cap with q4/q21/q22), text_repetition_score (the text family
-    # keeps quality/html/LM in-window; repetition past-cap),
-    # bpe_sample_audit (BPE keeps bpe_vocab_top, which transitively
-    # pins all merge rounds; the audit past-cap), user_streaks
-    # (gaps-and-islands stays graded THROUGH the entering span-scrub
-    # pair — interval merging IS the same islands window — plus the
-    # past-cap oracle). Entering: doc_winnow_span_scrub (the cut-
-    # interval PLAN), doc_winnow_span_scrub_apply (r11's headline: the
-    # ExactSubstr-style token-slice REWRITE, convergence-pinned),
-    # decontaminate_spans_apply + decontaminate_spans_store_probe
-    # (the fuzzy-decontamination family's apply and stored-index probe
-    # paths), cdc_snapshot_diff_demo (snapshot-diff change detection
-    # golden), lake_zone_readwhere_demo (r11 zone-map-pruned SQL reads
-    # — manifest pruning asserted inline from inputFiles()).)
-    "doc_winnow_pairs", "doc_winnow_incremental",
-    "decontaminate_spans", "doc_winnow_span_verify",
-    "doc_winnow_span_scrub", "doc_winnow_span_scrub_apply",
-    "decontaminate_spans_apply", "decontaminate_spans_store_probe",
-    "cdc_snapshot_diff_demo", "lake_zone_readwhere_demo",
-    # (r8 continuation rotation: sql_facade_agg cedes — the S7 temp-view
-    # + SQL facade machinery executes inside every spark.sql-routed
-    # oracle twin and stays oracle-backed past-cap; rolling_active_users
-    # enters — trailing-window DISTINCT via contribution explode, a
-    # window shape no in-window rep covered.)
-    # temporal operators + multidimensional aggregation
-    "asof_attribution",
-    # TPC-H representatives (full-scan agg / selective join / 6-way join /
-    # HAVING-semi) — the other 18 shapes are oracle-backed past the cap
-    "tpch_q1", "tpch_q3",
-    # pipeline lifecycle
-    "cdc_roundtrip_demo",
-    # event analytics + semi-structured + percentiles + graph (r7 late
-    # rotation: cohort_retention cedes — the event-analytics family
-    # stays graded via event_funnel/event_gaps and the past-cap oracle;
-    # part_copurchase_pagerank enters as the iterative graph-algorithm
-    # family's graded representative. r7 final rotation: event_gaps
-    # cedes — the window-function family stays graded via
-    # customer_rank_by_spend in-window and the past-cap oracle;
-    # event_value_hour_corr enters as the exact-moment statistics
-    # family's graded representative (operators/stats.py))
-    # (r7 closing rotation: event_funnel cedes — the event-analytics
-    # family stays graded via events_hourly_agg + event_value_hour_corr
-    # in-window, funnel oracle-backed past-cap; price_percentiles cedes
-    # — quantiles stay graded via the GK-sketch and equi-depth oracles
-    # past-cap. Entering: session_peak_concurrency (interval-stabbing
-    # sweep-line — a new operator family), ab_conversion_chi2 +
-    # value_drift_psi (hypothesis-testing and drift-monitoring
-    # statistics), both module-pattern exact.)
-    # (r8 rotation, VERDICT r7 #9: json_props_agg cedes — the
-    # semi-structured family stays oracle-backed past-cap and its
-    # get_json_object machinery runs inside other pipelines' tests;
-    # dq_violations cedes — the DQ-rule family stays oracle-backed
-    # past-cap with cdc_roundtrip_demo exercising reconciliation
-    # in-window; quality_classifier_score cedes — quality scoring
-    # stays in-window via text_quality_score + bigram_lm_score and the
-    # classifier + calibration twins stay oracle-backed past-cap.
-    # Entering: user_streaks (gaps-and-islands — a window family with
-    # no prior in-window rep), customer_rolling_spend (RANGE-frame
-    # calendar windows), weighted_median_price (value-domain-compressed
-    # exact weighted quantiles). All three green at 3 SFs with measured
-    # 100× slopes since r7.)
-    # (r8 closing rotation: event_value_hour_corr cedes — the exact-
-    # moment correlation machinery (grouped_pearson_corr) stays
-    # oracle-backed past-cap via event_type_corr_matrix and the stats
-    # family keeps chi2 + MAD + CUSUM-adjacent reps in-window;
-    # part_copurchase_communities enters — label propagation, the
-    # third iterative-graph semiring (mode-argmax) next to PageRank's
-    # sum-product, both LPA randomness sources pinned.)
-    "part_copurchase_pagerank",
+    "mart_client_count", "mart_sales_agg", "changed_partitions",
+    "reconcile_aggs", "next_run_id", "events_tier_pit",
+    "sessionize_session_window", "cdc_snapshot_demo", "doc_winnow_pairs",
+    "doc_winnow_incremental", "decontaminate_spans",
+    "doc_winnow_span_verify", "doc_winnow_span_scrub",
+    "doc_winnow_span_scrub_apply", "decontaminate_spans_apply",
+    "decontaminate_spans_store_probe", "cdc_snapshot_diff_demo",
+    "lake_zone_readwhere_demo", "asof_attribution", "tpch_q1", "tpch_q3",
+    "cdc_roundtrip_demo", "part_copurchase_pagerank",
     "copurchase_cheapest_path", "copurchase_triangles_node_est",
-    # (r8 continuation rotation: value_drift_psi cedes — the drift
-    # family keeps THREE oracle-backed reps past-cap (PSI, KS, MWU) and
-    # chi2 stays in-window for hypothesis testing; value_mad_outliers
-    # enters — robust median/MAD outliers, the heavy-tail-safe
-    # companion the stats family lacked. user_value_ewma enters for the
-    # lag-FIR sequence-smoothing shape; customer_rolling_spend cedes —
-    # RANGE-frame calendar windows stay graded via its past-cap oracle
-    # and the same frame machinery runs inside user_decay_score and the
-    # hopping aggregates.)
-    # (r8 closing rotation: user_value_ewma cedes — the sequence-FIR
-    # frame machinery stays oracle-backed past-cap (ewma + the decay
-    # RANGE frame in user_decay_score); user_survival_km enters —
-    # censoring-aware Kaplan-Meier retention, the survival-analysis
-    # family's first rep, risk sets via contribution explode.)
-    "session_peak_concurrency",
-    "value_mad_outliers", "user_survival_km", "value_drift_ks",
-    "weighted_median_price",
-    # dedup family (exact → LSH scale path → clusters → end-to-end
-    # surviving corpus → incremental batch-vs-base probe (r6) →
-    # policy-sized SimHash blocking (r6: the graded form of the
-    # blocking-width scale contract))
-    # (r7 late rotation: dedup_clusters cedes — the components shape
-    # stays graded via emb_neardup_clusters_sized in-window and
-    # dedup_apply composes clusters end-to-end; hybrid_search_rrf
-    # enters with the retrieval family)
-    # (r8 continuation rotation: dedup_simhash_pairs_sized cedes — the
-    # SimHash family stays oracle-backed past-cap (signatures, pairs,
-    # and the fixed-width twin) and the policy-sized blocking-width
-    # contract keeps TWO in-window reps via emb_neardup_lsh_sized +
-    # emb_neardup_clusters_sized; dedup_jaccard_prefix enters — the
-    # PPJoin-style lossless prefix-filter candidate path, the exact
-    # set-similarity scale story between the quadratic baseline and
-    # MinHash.)
-    "dedup_exact", "dedup_minhash",
-    "dedup_apply", "dedup_incremental",
-    # text analysis (r7 late rotation: text_token_count cedes — the
-    # token machinery stays graded inside token_budget_mix's oracle
-    # and the per-doc counts past-cap; bigram_lm_score enters as the
-    # corpus-trained LM quality stage)
-    # (r7 closing rotation: text_language_id cedes — language gating
-    # stays graded via quality_gate_by_lang's composed oracle past-cap;
-    # tfidf_top_terms enters as the keyword-extraction representative)
-    "text_quality_score",
-    "html_extract_clean",
-    "trigram_lm_store_probe",
-    # training-data ops + sketches (r6: the HLL distinct sketch joins
-    # the window — corridor-oracle-backed; r7 late rotation:
-    # sample_documents cedes to token_budget_mix — the budget form of
-    # the same md5-order selection, rate gate still graded past-cap.
-    # r7 final rotation: doc_chunks cedes — chunking stays graded
-    # inside doc_pack_plan's composed oracle and past-cap;
-    # corpus_snapshot_diff enters as the dataset-versioning family's
-    # graded representative)
-    # (r7 closing rotation: chunk_span_dups cedes — span machinery
-    # stays oracle-backed past-cap with doc_chunks/doc_pack_plan
-    # composing the same chunker in-window)
-    # (r8 closing rotation: scrub_pii cedes — PII scrubbing stays
-    # oracle-backed past-cap and decontaminate keeps eval/compliance
-    # hygiene in-window; bpe_vocab_top enters — distributed BPE
-    # tokenizer training's distributed consumer: the top-token table
-    # transitively pins all 8 merge rounds (a wrong argmax at any
-    # round changes it), with bpe_train_merges + bpe_token_count
-    # oracle-backed past-cap.)
+    "session_peak_concurrency", "value_mad_outliers", "user_survival_km",
+    "value_drift_ks", "weighted_median_price", "dedup_exact",
+    "dedup_minhash", "dedup_apply", "dedup_incremental",
+    "text_quality_score", "html_extract_clean", "trigram_lm_store_probe",
     "token_budget_mix", "corpus_snapshot_diff", "bpe_vocab_top",
-    "doc_pack_plan",
-    "sketch_distinct_clients",
-    # retrieval (r6: BM25 with the df-threshold skew guard engaged;
-    # r7: the postings-store probe and the batched-topics form)
-    "bm25_search_guarded", "bm25_store_probe",
-    "hybrid_search_rrf",
-    # similarity + multimodal (r5: IVF cell-partitioned store; r6-r7:
-    # the policy-sized LSH family — recommended_bits(N) as graded
-    # queries, pairs and clusters; r7 late rotation:
-    # ann_ivf_partitioned_topk cedes to ann_ivfpq_topk — the IVFPQ
-    # query grades partition pruning AND PQ payload compression in one
-    # build+probe cycle, the IVF store stays plan-asserted in
-    # test_plans and oracle-backed past-cap)
-    # (r7 closing rotation: media_metadata_stats cedes to
-    # media_dedup_audit — the binary-payload dedup audit exercises the
-    # payload-attach plumbing AND hash-only shuffles; metadata stats
-    # stay oracle-backed past-cap)
-    "ann_topk_cosine", "ann_ivfpq_topk", "emb_neardup_lsh_sized",
-    "semantic_dedup",
+    "doc_pack_plan", "sketch_distinct_clients", "bm25_search_guarded",
+    "bm25_store_probe", "hybrid_search_rrf", "ann_topk_cosine",
+    "ann_ivfpq_topk", "emb_neardup_lsh_sized", "semantic_dedup",
     "media_dedup_audit",
 )
 

@@ -7,7 +7,7 @@ candidate→verify pipeline and the downstream connected components are
 reproduced in DuckDB SQL and oracle-checked too. The SimHash family is
 likewise oracle-checked: its portable 60-bit md5-prefix token hash makes
 both the signature table and the Hamming-blocked pair search replayable
-in DuckDB bit-for-bit (SIMHASH_ORACLE / SIMHASH_PAIRS_ORACLE).
+in DuckDB bit-for-bit (SIMHASH_PAIRS_ORACLE).
 """
 
 from __future__ import annotations
@@ -230,46 +230,6 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-COLLAPSED_MINHASH_ORACLE = (
-    """WITH reps AS (
-  SELECT MIN(doc_id) AS doc_id, MIN(text) AS text, COUNT(*) AS cnt
-  FROM documents GROUP BY md5(text)
-),"""
-    + _minhash_cte(_MINHASH_NUM, _MINHASH_BANDS, source="reps")
-    + """
-SELECT v.id1 AS rep1, v.id2 AS rep2, v.jaccard,
-       c1.cnt AS count1, c2.cnt AS count2
-FROM verified v
-JOIN reps c1 ON v.id1 = c1.doc_id
-JOIN reps c2 ON v.id2 = c2.doc_id"""
-)
-
-
-@query("dedup_minhash_collapsed", oracle=COLLAPSED_MINHASH_ORACLE)
-def dedup_minhash_collapsed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-collapse → MinHash near-dup on distinct texts: group-level
-    matches (rep1, rep2, jaccard, count1, count2).
-
-    The boilerplate-proof production shape: a k-sized cluster of IDENTICAL
-    docs collapses to one representative before LSH, so candidate work is
-    linear in DISTINCT texts where plain pairwise near-dup is forced into
-    C(k,2) pairs (see operators/dedup.py
-    ``minhash_near_duplicates_collapsed`` for the full scale argument and
-    tools/skew_bench.py for the measured adversarial-corpus numbers).
-    """
-    from ..operators.dedup import minhash_near_duplicates_collapsed
-
-    docs = Catalog(spark, sf_dir).parallel_table("documents", "doc_id")
-    return minhash_near_duplicates_collapsed(
-        docs,
-        text_col="text",
-        id_col="doc_id",
-        threshold=_MINHASH_THRESH,
-        num_hashes=_MINHASH_NUM,
-        bands=_MINHASH_BANDS,
-    )
-
-
 _SIMHASH_BITS = 60
 
 
@@ -296,24 +256,6 @@ ssum AS (SELECT doc_id,
 ssig AS (SELECT doc_id,
          CAST({sig} AS BIGINT) AS simhash
         FROM ssum)"""
-
-
-SIMHASH_ORACLE = (
-    "WITH" + _simhash_cte(_SIMHASH_BITS) + "\nSELECT doc_id, simhash FROM ssig"
-)
-
-
-@query("dedup_simhash", oracle=SIMHASH_ORACLE)
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """60-bit SimHash signature per document (oracle-checked: the
-    portable md5-prefix token hash makes the signature replayable in
-    DuckDB bit-for-bit).
-
-    Emits the signature table (doc_id, simhash) — the join-side
-    primitive for hamming-distance dedup at scale.
-    """
-    docs = Catalog(spark, sf_dir).parallel_table("documents", "doc_id")
-    return simhash_signatures(docs, text_col="text", id_col="doc_id")
 
 
 SIMHASH_PAIRS_ORACLE = (
@@ -879,89 +821,4 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(s2, "id2")
         .where(F.lit(8) * o >= F.lit(3) * (n1 + n2))
         .select("id1", "id2", F.round(jac, 6).alias("jaccard"))
-    )
-
-
-# --------------------------------------------------------------------------
-# approximate-path quality audit: MinHash-LSH recall against exact truth
-# --------------------------------------------------------------------------
-
-RECALL_ORACLE = (
-    "WITH e AS (SELECT id1, id2 FROM ("
-    + NGRAM_JACCARD_ORACLE
-    + ") te),\nl AS (SELECT id1, id2 FROM ("
-    + MINHASH_ORACLE
-    + """) tl),
-u AS (
-  SELECT id1, id2, MAX(ex) AS ex, MAX(ls) AS ls FROM (
-    SELECT id1, id2, 1 AS ex, 0 AS ls FROM e
-    UNION ALL
-    SELECT id1, id2, 0 AS ex, 1 AS ls FROM l
-  ) tu GROUP BY id1, id2
-)
-SELECT CAST(SUM(ex) AS BIGINT) AS n_exact,
-       CAST(SUM(ls) AS BIGINT) AS n_lsh,
-       CAST(SUM(ex * ls) AS BIGINT) AS n_common,
-       CAST(SUM(ex) - SUM(ex * ls) AS BIGINT) AS n_missed,
-       CASE WHEN SUM(ex) > 0 THEN
-         ROUND(CAST(SUM(ex * ls) AS DOUBLE) / CAST(SUM(ex) AS DOUBLE), 6)
-       END AS recall
-FROM u"""
-)
-
-
-@query("dedup_minhash_recall", oracle=RECALL_ORACLE)
-def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality audit of the APPROXIMATE dedup path: recall of the
-    MinHash-LSH pair list against the exact share-a-shingle Jaccard
-    truth at the same threshold — the measurement that justifies (or
-    indicts) running the near-linear path at scale, computed in-engine
-    instead of asserted. n_missed is the count of true near-dup pairs
-    whose 16-of-4 banding never collided.
-
-    Both pair lists come from the registered operators themselves
-    (same shingles, same threshold, same verify arithmetic — the LSH
-    list is a subset of the exact list by construction, and the audit
-    VERIFIES that rather than assuming it: n_lsh == n_common iff no
-    spurious pair survived). The combine is one union-tag groupBy on
-    pair keys + a scalar rollup — no cross join, no driver loop.
-
-    Scale: bounded by the exact baseline's pair budget (the guard
-    raises past 50 M estimated pairs) — a truth-comparison audit is
-    inherently a sampled-corpus operation at 100 TB: run it on a
-    bounded slice to pick the banding policy, then deploy the LSH path
-    corpus-wide.
-    """
-    e = dedup_ngram_jaccard(spark, sf_dir).select("id1", "id2")
-    l = dedup_minhash(spark, sf_dir).select("id1", "id2")
-    u = (
-        e.select("id1", "id2", F.lit(1).alias("ex"), F.lit(0).alias("ls"))
-        .unionByName(
-            l.select(
-                "id1", "id2", F.lit(0).alias("ex"), F.lit(1).alias("ls")
-            )
-        )
-        .groupBy("id1", "id2")
-        .agg(F.max("ex").alias("ex"), F.max("ls").alias("ls"))
-    )
-    agg = u.groupBy().agg(
-        F.sum("ex").cast("bigint").alias("n_exact"),
-        F.sum("ls").cast("bigint").alias("n_lsh"),
-        F.sum(F.col("ex") * F.col("ls")).cast("bigint").alias("n_common"),
-    )
-    return agg.select(
-        "n_exact",
-        "n_lsh",
-        "n_common",
-        (F.col("n_exact") - F.col("n_common")).cast("bigint").alias(
-            "n_missed"
-        ),
-        F.when(
-            F.col("n_exact") > 0,
-            F.round(
-                F.col("n_common").cast("double")
-                / F.col("n_exact").cast("double"),
-                6,
-            ),
-        ).alias("recall"),
     )

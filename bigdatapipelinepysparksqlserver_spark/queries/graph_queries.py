@@ -73,7 +73,7 @@ def part_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # edge build: per-order collect_set + in-row ordered pair expansion
     # (one orderkey shuffle; the lineitem self-join form measured 77 s
-    # vs 57 s at sf10 — same rewrite as copurchase_khop_reach). The
+    # vs 57 s at sf10). The
     # operator persists the edge⋈outdeg projection, so the build runs
     # once regardless of iteration count.
     from ..operators.graph import copurchase_edges
@@ -174,102 +174,6 @@ def copurchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.orderBy(
         F.col("lift").desc(), "part_a", "part_b"
     ).limit(LIFT_TOP_K)
-
-
-# --------------------------------------------------------------------------
-# k-hop reachability: multi-source BFS frontier expansion
-# --------------------------------------------------------------------------
-
-KHOP_ORACLE = """
-WITH e0 AS (
-  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-  FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-  WHERE a.l_partkey <> b.l_partkey
-),
-seeds AS (SELECT DISTINCT src AS seed FROM e0 ORDER BY seed LIMIT 5),
-h1 AS (
-  SELECT s.seed, e.dst AS node
-  FROM seeds s JOIN e0 e ON e.src = s.seed
-  WHERE e.dst <> s.seed
-  GROUP BY 1, 2
-),
-h2cand AS (
-  SELECT h.seed, e.dst AS node
-  FROM h1 h JOIN e0 e ON e.src = h.node
-  GROUP BY 1, 2
-),
-h2 AS (
-  SELECT seed, node FROM h2cand
-  EXCEPT
-  (SELECT seed, node FROM h1
-   UNION ALL
-   SELECT seed, seed FROM seeds)
-)
-SELECT seed, 1 AS hop, COUNT(*) AS n_reached FROM h1 GROUP BY 1
-UNION ALL
-SELECT seed, 2 AS hop, COUNT(*) AS n_reached FROM h2 GROUP BY 1
-"""
-
-
-@query("copurchase_khop_reach", oracle=KHOP_ORACLE)
-def copurchase_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-source 2-hop BFS over the co-purchase graph: how many
-    parts are first reached at hop 1 vs hop 2 from each of five seed
-    parts — the reachability / blast-radius shape (recommendation
-    spread, dependency fan-out) that SQL's non-recursive subset can't
-    express without explicit frontier unrolling.
-
-    Scale: each hop is ONE src-keyed hash join of the frontier against
-    the edge list plus a left-anti join against the visited set —
-    frontier and visited are (seed, node) pairs, bounded by
-    seeds × nodes, never edges²; the 5-row seed relation broadcasts
-    into hop 1. Deeper BFS iterates the same two joins (the driver
-    composes plans; no data crosses it).
-
-    Edge build: per-order collect_set + in-row ordered pair expansion
-    (order size is data-model-bounded, TPC-H ≤ 7 items → ≤ 42 pairs
-    per row) — one orderkey shuffle instead of a lineitem self-join;
-    measured 57 s vs 77 s at sf10 for the build alone. The edge
-    relation is PERSISTED: three consumers (seeds, hop 1, hop 2), and
-    the HOF lambdas in the expansion break plan canonicalization, so
-    exchange reuse alone would recompute it per consumer (measured
-    167 s → 60 s for the full query at sf10).
-    """
-    from ..caching import scoped_persist
-
-    from ..operators.graph import copurchase_edges
-
-    li = Catalog(spark, sf_dir).lineitem.select("l_orderkey", "l_partkey")
-    edges = scoped_persist(copurchase_edges(li))
-    seeds = (
-        edges.select(F.col("src").alias("seed"))
-        .distinct()
-        .orderBy("seed")
-        .limit(5)
-    )
-    h1 = (
-        F.broadcast(seeds)
-        .join(edges, F.col("seed") == F.col("src"))
-        .where(F.col("dst") != F.col("seed"))
-        .select("seed", F.col("dst").alias("node"))
-        .distinct()
-    )
-    h2cand = (
-        h1.join(edges, h1["node"] == edges["src"])
-        .select("seed", F.col("dst").alias("node"))
-        .distinct()
-    )
-    visited = h1.unionByName(
-        seeds.select("seed", F.col("seed").alias("node"))
-    )
-    h2 = h2cand.join(visited, ["seed", "node"], "left_anti")
-    out1 = h1.groupBy("seed").agg(F.count(F.lit(1)).alias("n_reached")).select(
-        "seed", F.lit(1).alias("hop"), "n_reached"
-    )
-    out2 = h2.groupBy("seed").agg(F.count(F.lit(1)).alias("n_reached")).select(
-        "seed", F.lit(2).alias("hop"), "n_reached"
-    )
-    return out1.unionByName(out2)
 
 
 # --------------------------------------------------------------------------
@@ -447,104 +351,6 @@ def copurchase_triangles_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     return triangle_count_estimate(edges, wedge_budget=500_000_000)
-
-
-# ---------------------------------------------------------------------------
-# Label-propagation communities — the third iterative-graph semiring
-# next to PageRank (sum-product over ranks) and k-hop BFS (frontier
-# union): per-round neighbor-mode argmax. Both LPA randomness sources
-# (visit order, tie coin-flips) are pinned — synchronous rounds +
-# (count DESC, label ASC) — so the 3-round loop replays exactly as
-# unrolled MATERIALIZED CTEs with ROW_NUMBER argmax.
-# ---------------------------------------------------------------------------
-
-LPA_ITERS = 3
-
-
-def _lpa_round_sql(i: int) -> str:
-    prev = f"l{i - 1}"
-    return f"""
-c{i} AS MATERIALIZED (
-  SELECT e.dst AS node, l.lbl, COUNT(*) AS c
-  FROM e0 e JOIN {prev} l ON l.node = e.src
-  GROUP BY 1, 2
-),
-l{i} AS MATERIALIZED (
-  SELECT node, lbl FROM (
-    SELECT node, lbl,
-           ROW_NUMBER() OVER (PARTITION BY node ORDER BY c DESC, lbl) AS rn
-    FROM c{i}
-  ) WHERE rn = 1
-)"""
-
-
-LABEL_PROP_ORACLE = f"""
-WITH e0 AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-  FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-  WHERE a.l_partkey <> b.l_partkey
-),
-l0 AS MATERIALIZED (
-  SELECT DISTINCT src AS node, src AS lbl FROM e0
-),{",".join(_lpa_round_sql(i) for i in range(1, LPA_ITERS + 1))}
-SELECT lbl AS community, CAST(COUNT(*) AS BIGINT) AS n_nodes
-FROM l{LPA_ITERS} GROUP BY 1
-"""
-
-
-@query("part_copurchase_communities", oracle=LABEL_PROP_ORACLE)
-def part_copurchase_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Community sizes after 3 synchronous label-propagation rounds
-    over the part co-purchase graph — metric clustering / assortment
-    grouping without a target k. A wrong argmax at ANY node in ANY
-    round moves nodes between communities, so the size table pins the
-    whole loop.
-
-    Scale: the edge build is the PageRank in-row expansion (order-size
-    bounded); each round is one join against the persisted edges + a
-    16-byte-key count with map-side partials. Labels are node ids —
-    no label relation ever exceeds node size.
-    """
-    from ..operators.graph import copurchase_edges, label_propagation
-
-    edges = copurchase_edges(Catalog(spark, sf_dir).lineitem)
-    return (
-        label_propagation(edges, iters=LPA_ITERS)
-        .groupBy(F.col("lbl").alias("community"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
-    )
-
-
-@query("copurchase_pagerank_stored", oracle=PAGERANK_ORACLE)
-def copurchase_pagerank_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank consumed from the PERSISTED edge store (build+probe per
-    call, the graded-cycle convention) — the graph family's stored
-    path: at 100 TB the co-purchase graph is maintained as an asset
-    (bucket-partitioned, src-sorted), so every iterative consumer
-    (rank, LPA, BFS, triangles) starts from a scan instead of repaying
-    the 57 s (sf10) basket-expansion build. Same oracle as the inline
-    form: the stored relation is the identical distinct edge set.
-
-    Store layout: bucket = src mod 32 directory partitions; a
-    small-frontier probe (bounded bucket set) reads only its buckets —
-    PartitionFilters-asserted in tests/test_components.py.
-    """
-    from ..operators.graph import (
-        copurchase_edges,
-        pagerank,
-        read_edge_store,
-        write_edge_store,
-    )
-    from .storepaths import process_scoped_store_path
-
-    store = process_scoped_store_path("edge_store", sf_dir)
-    write_edge_store(
-        copurchase_edges(Catalog(spark, sf_dir).lineitem), store
-    )
-    edges = read_edge_store(spark, store).select("src", "dst")
-    return pagerank(edges, iters=PR_ITERS).select(
-        F.col("node").alias("part_id"), "rank"
-    )
 
 
 # ---------------------------------------------------------------------------

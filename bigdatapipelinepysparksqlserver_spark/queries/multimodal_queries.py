@@ -1,6 +1,6 @@
 """Multimodal query surface over `documents` (payload = text bytes).
 
-The metadata path (binary length stats, frame-sampling plan) is
+The metadata path (binary length stats, shard plan) is
 SQL-expressible and oracle-checked. The Pandas-UDF decode path runs the
 REAL mapInPandas pipeline with the deterministic surrogate decoder —
 `media_decode_features` grades the full decode output with the feature
@@ -18,11 +18,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.multimodal import (
-    attach_binary_payload,
-    decode_image_batches,
-    sample_frames,
-)
+from ..operators.multimodal import attach_binary_payload, decode_image_batches
 from ..sources.catalog import Catalog
 from .registry import query
 
@@ -196,47 +192,6 @@ def media_decode_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mean_luma",
         F.col("dim").cast("int").alias("dim"),
         F.col("feature").cast("double").alias("feature"),
-    )
-
-
-FRAME_PLAN_ORACLE = """
-WITH m AS (
-  SELECT doc_id AS media_id,
-         octet_length(CAST(text AS BLOB)) AS n_bytes
-  FROM documents
-),
-v AS (
-  SELECT media_id, (n_bytes % 10000) AS duration_ms FROM m
-)
-SELECT media_id, CAST(t.i AS INT) AS frame_index,
-       CAST(t.i * 1000 AS BIGINT) AS frame_ts_ms
-FROM v, UNNEST(range(0, GREATEST(LEAST(CAST(FLOOR(duration_ms / 1000) AS INT), 8), 1))) AS t(i)
-"""
-
-
-@query("media_frame_plan", oracle=FRAME_PLAN_ORACLE)
-def media_frame_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-sampling work list built natively from metadata (video ×
-    frame_index explode) — decode-load balancing happens on this list
-    BEFORE any Python worker touches bytes."""
-    docs = Catalog(spark, sf_dir).documents
-    media = attach_binary_payload(docs, id_col="doc_id", text_col="text", media_type="video")
-    # synthesize a deterministic duration from n_bytes for the plan
-    with_duration = media.withColumn(
-        "meta",
-        F.struct(
-            F.col("meta.media_type"),
-            F.col("meta.codec"),
-            F.col("meta.width"),
-            F.col("meta.height"),
-            (F.col("meta.n_bytes") % 10000).alias("duration_ms"),
-            F.col("meta.n_bytes"),
-        ),
-    )
-    return sample_frames(with_duration, every_ms=1000, max_frames=8).select(
-        "media_id",
-        F.col("frame_index").cast("int").alias("frame_index"),
-        F.col("frame_ts_ms").cast("long").alias("frame_ts_ms"),
     )
 
 

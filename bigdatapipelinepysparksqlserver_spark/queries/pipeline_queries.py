@@ -455,140 +455,12 @@ def lake_zone_readwhere_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
 
 
-# Rename-evolution oracle: a REPLAYING oracle — the lake is seeded
-# from orders under one column name, the column is renamed (pure
-# metadata), and a post-rename month publishes under the NEW name;
-# the final aggregate reads pre-rename files (physical 'totalprice')
-# and post-rename files (physical 'price') under ONE current name.
-# DuckDB replays the same union from orders — the rename machinery
-# (per-txn name mapping) is the only thing that can diverge.
-LAKE_RENAME_ORACLE = """
-WITH base AS (
-  SELECT o_orderkey AS okey,
-         CAST(o_totalprice AS DECIMAL(18,2)) AS price,
-         CAST(strftime(o_orderdate, '%Y%m') AS INTEGER) AS ym
-  FROM orders
-), extra AS (
-  SELECT -okey AS okey, price + 2 AS price, 210001 AS ym
-  FROM base WHERE ym = 199506 AND okey <> 0
-)
-SELECT ym,
-       CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(SUM(CAST(price * 100 AS BIGINT)) AS BIGINT) AS cents
-FROM (SELECT * FROM base UNION ALL SELECT * FROM extra)
-GROUP BY 1
-ORDER BY 1
-"""
-
-
-@query("lake_rename_demo", oracle=LAKE_RENAME_ORACLE)
-def lake_rename_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Column-rename evolution end-to-end (r11,
-    ``SnapshotLakeTable.rename_column``): orders seed the lake under
-    ``totalprice``; the column is renamed to ``price`` (one metadata
-    publish, zero data movement); a mirrored 210001 month then
-    publishes under the NEW name, so the live snapshot mixes files
-    whose physical columns differ. The per-month aggregate reads both
-    file generations under the one current name — DuckDB replays it
-    straight from orders. Inline asserts pin the semantics the hash
-    can't see: time travel keeps the pre-rename name, and a publish
-    under the retired name is refused.
-
-    Scale: rename cost is one manifest write at any lake size; reads
-    add at most one extra scan GROUP per rename event (rels are
-    grouped by owning-txn rename signature), never per partition.
-    """
-    from ..sources.catalog import Catalog
-    from ..sources.lake_snapshot import SnapshotLakeTable
-
-    orders = Catalog(spark, sf_dir).orders
-    base = orders.select(
-        F.col("o_orderkey").alias("okey"),
-        F.col("o_totalprice").cast("decimal(18,2)").alias("totalprice"),
-        F.date_format("o_orderdate", "yyyyMM").cast("int").alias("ym"),
-    )
-    root = tempfile.mkdtemp(prefix="lake_ren_")
-    try:
-        lake = SnapshotLakeTable(
-            spark,
-            f"{root}/lake",
-            partition_cols=("ym",),
-            schema=base.schema,
-            retain=4,
-        )
-        lake.write_full(base)
-        pre = lake.current_id()
-        lake.rename_column("totalprice", "price")
-
-        extra = base.where(
-            (F.col("ym") == 199506) & (F.col("okey") != 0)
-        ).select(
-            (-F.col("okey")).alias("okey"),
-            (F.col("totalprice") + 2)
-            .cast("decimal(18,2)")
-            .alias("price"),
-            F.lit(210001).alias("ym"),
-        )
-        lake.overwrite_partitions(extra)
-
-        # semantics the value hash can't see
-        if "totalprice" not in lake.read_snapshot(pre).columns:
-            raise AssertionError("time travel lost the pre-rename name")
-        try:
-            lake.overwrite_partitions(
-                extra.withColumnRenamed("price", "totalprice")
-            )
-            raise AssertionError("retired name was accepted")
-        except ValueError:
-            pass
-
-        agg = (
-            lake.read()
-            .groupBy("ym")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum((F.col("price") * 100).cast("long")).alias("cents"),
-            )
-            .orderBy("ym")
-        )
-        rows = [(r.ym, r.n_rows, r.cents) for r in agg.collect()]
-        return spark.createDataFrame(
-            rows, "ym int, n_rows bigint, cents bigint"
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-# Row-level mart oracle: a true REPLAYING oracle — the lake is seeded
-# from orders, one deterministic update cycle (every 97th order key
-# gets +10.00) flows through the recorded CDF and the signed integer-
-# cents fold, and DuckDB recomputes the post-change mart straight from
-# orders. Any fold error (sign, multiplicity, cents rounding, partition
-# routing) diverges from the straight recompute.
-ROWLEVEL_MART_ORACLE = """
-WITH after AS (
-  SELECT o_orderpriority AS product,
-         CASE WHEN o_orderkey % 97 = 0
-              THEN CAST(o_totalprice AS DECIMAL(18,2)) + 10
-              ELSE CAST(o_totalprice AS DECIMAL(18,2)) END AS paid
-  FROM orders
-)
-SELECT product,
-       CAST(COUNT(*) AS BIGINT) AS sales_count,
-       CAST(SUM(CAST(paid * 100 AS BIGINT)) AS BIGINT) AS paid_cents
-FROM after
-WHERE paid > 0
-GROUP BY 1
-ORDER BY 1
-"""
-
-
 # Row-level MERGE oracle: a REPLAYING oracle — the lake is seeded from
 # orders and one deterministic merge batch (update every 101st key,
 # delete every 211th non-updated key, insert a mirrored -key row for
 # every 307th) is replayed by DuckDB as plain set algebra over orders.
 # Any merge defect (missed match, wrong partition routing, double
-# apply, lost row, CDF drift) diverges from the straight replay.
+# apply, lost row) diverges from the straight replay.
 LAKE_MERGE_ORACLE = """
 WITH base AS (
   SELECT o_orderkey AS okey,
@@ -620,10 +492,10 @@ def lake_merge_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned lake with key zone maps; ONE merge batch updates every
     101st key in place, deletes every 211th (non-updated) key, and
     inserts a mirrored ``-key`` row for every 307th — one CAS-committed
-    publish. The recorded net-change CDF is asserted inline to equal
-    ``snapshot_diff_rows`` exactly (set-equal both ways), then the
-    post-merge per-month aggregate is returned; DuckDB replays the
-    whole merge from orders as plain set algebra.
+    publish. The post-merge per-month aggregate is returned; DuckDB
+    replays the whole merge from orders as plain set algebra. This is
+    the only oracle check of ``merge_rows``, which the streaming
+    keyed-merge sink (``foreach_batch_keyed_merge``) runs per batch.
 
     Scale: the matched-key location pass is a column-pruned scan
     zone-prunable on the key column; the rewrite touches only
@@ -653,7 +525,6 @@ def lake_merge_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
             stats_cols=("okey",),
         )
         lake.write_full(base)
-        pre = lake.current_id()
 
         upd = base.where(F.col("okey") % 101 == 0).withColumn(
             "price", (F.col("price") + 5).cast("decimal(18,2)")
@@ -675,16 +546,6 @@ def lake_merge_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
             delete_col="is_del",
         )
 
-        # the writer-recorded CDF must equal the scan-computed diff
-        # EXACTLY (both directions) — the merge's net-change contract
-        cdf = lake.changes_between(pre, lake.current_id())
-        diff = lake.snapshot_diff_rows(pre, lake.current_id())
-        if (
-            cdf.exceptAll(diff).limit(1).count()
-            or diff.exceptAll(cdf).limit(1).count()
-        ):
-            raise AssertionError("merge CDF diverges from snapshot diff")
-
         agg = (
             lake.read()
             .groupBy("ym")
@@ -699,83 +560,6 @@ def lake_merge_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = [(r.ym, r.n_rows, r.cents) for r in agg.collect()]
         return spark.createDataFrame(
             rows, "ym int, n_rows bigint, cents bigint"
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-@query("rowlevel_mart_demo", oracle=ROWLEVEL_MART_ORACLE)
-def rowlevel_mart_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row-level (CDF-fed) incremental mart end-to-end (VERDICT r10
-    #5): orders seed a month-partitioned snapshot lake; the mart
-    bootstraps; one update cycle (every 97th order +10.00) publishes
-    with a writer-recorded change feed; ``refresh_to`` folds the CDF
-    rows into the partials with signed integer-cents arithmetic. The
-    returned per-product mart is BIT-EQUAL to DuckDB recomputing the
-    post-change aggregate from orders directly — the fold never sees
-    that recompute, so sign/multiplicity/rounding errors all diverge.
-
-    Scale: the refresh reads only the 2×(changes) CDF rows and the
-    touched partials (BASELINE r11: flat ~4 s wall across a 333×
-    hot-partition growth, vs partition recompute growing with rows).
-    """
-    from ..plans.mart_rowlevel import RowLevelMart
-    from ..sources.catalog import Catalog
-    from ..sources.lake_snapshot import SnapshotLakeTable
-
-    orders = Catalog(spark, sf_dir).orders
-    base = orders.select(
-        F.col("o_orderkey").alias("id"),
-        F.col("o_totalprice").cast("decimal(18,2)").alias("paid"),
-        F.col("o_custkey").alias("client_id"),
-        F.lit("M").alias("gender"),
-        F.col("o_orderpriority").alias("product"),
-        F.lit("STD").alias("size"),
-        F.lit("none").alias("color"),
-        F.date_format("o_orderdate", "yyyyMM").cast("int").alias("year_month"),
-        F.lit("US").alias("country"),
-    )
-    root = tempfile.mkdtemp(prefix="rlmart_")
-    try:
-        lake = SnapshotLakeTable(
-            spark, f"{root}/lake", schema=base.schema, retain=4
-        )
-        lake.write_full(base)
-        mart = RowLevelMart(spark, lake, f"{root}/mart")
-        mart.bootstrap()
-
-        hit = F.col("id") % 97 == 0
-        old = base.where(hit)
-        new = old.withColumn(
-            "paid", (F.col("paid") + 10).cast("decimal(18,2)")
-        )
-        changed_yms = [
-            r.year_month
-            for r in old.select("year_month").distinct().collect()
-        ]
-        content = base.withColumn(
-            "paid",
-            F.when(hit, (F.col("paid") + 10).cast("decimal(18,2)"))
-            .otherwise(F.col("paid")),
-        ).where(F.col("year_month").isin(changed_yms))
-        cdf = old.withColumn("change", F.lit("delete")).unionByName(
-            new.withColumn("change", F.lit("insert"))
-        )
-        lake.apply_rebuild(content, changed_year_months=changed_yms, changes=cdf)
-        mart.refresh_to()
-
-        agg = (
-            mart.sales_partial.read()
-            .groupBy("product")
-            .agg(
-                F.sum("sales_count").alias("sales_count"),
-                F.sum("paid_cents").alias("paid_cents"),
-            )
-            .orderBy("product")
-        )
-        rows = [(r.product, r.sales_count, r.paid_cents) for r in agg.collect()]
-        return spark.createDataFrame(
-            rows, "product string, sales_count bigint, paid_cents bigint"
         )
     finally:
         shutil.rmtree(root, ignore_errors=True)

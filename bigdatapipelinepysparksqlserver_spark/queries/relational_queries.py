@@ -197,48 +197,6 @@ def mart_sales_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# J1/P1 denormalization join, wide projection (load_sales_history.py:112-115)
-# --------------------------------------------------------------------------
-
-DENORMALIZE_ORACLE = """
-SELECT
-  o.o_orderkey AS order_id,
-  o.o_orderdate AS sale_date,
-  o.o_totalprice AS paid,
-  o.o_custkey AS client_id,
-  c.c_name AS client_name,
-  c.c_mktsegment AS segment,
-  n.n_name AS country
-FROM orders o
-LEFT JOIN customer c ON o.o_custkey = c.c_custkey
-LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
-"""
-
-
-@query("denormalize_join", oracle=DENORMALIZE_ORACLE)
-def denormalize_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The lake-table denormalization itself: fact ⟕ dim ⟕ dim, wide
-    projection. LEFT OUTER semantics — dangling FKs survive with nulls."""
-    t = Catalog(spark, sf_dir)
-    return denormalize(
-        t.orders,
-        [
-            (t.customer, t.orders.o_custkey == t.customer.c_custkey),
-            (t.nation, t.customer.c_nationkey == t.nation.n_nationkey),
-        ],
-        select=[
-            F.col("o_orderkey").alias("order_id"),
-            F.col("o_orderdate").alias("sale_date"),
-            F.col("o_totalprice").alias("paid"),
-            F.col("o_custkey").alias("client_id"),
-            F.col("c_name").alias("client_name"),
-            F.col("c_mktsegment").alias("segment"),
-            F.col("n_name").alias("country"),
-        ],
-    )
-
-
-# --------------------------------------------------------------------------
 # U1+A1 changed-partition work list over the events CDC stream
 # (load_sales_history.py:80-96); day-grain keys since events span one month
 # --------------------------------------------------------------------------
@@ -349,24 +307,6 @@ def window_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         datetime(2024, 1, 10), datetime(2024, 1, 20),
     )
     return ev.select("event_id", "ts", "user_id", "event_type", "value")
-
-
-# --------------------------------------------------------------------------
-# F7+A1+O1 year_month derivation + distinct partition list
-# --------------------------------------------------------------------------
-
-YEAR_MONTH_ORACLE = """
-SELECT DISTINCT CAST(year(o_orderdate)*100 + month(o_orderdate) AS INT) AS year_month
-FROM orders
-ORDER BY year_month
-"""
-
-
-@query("year_month_partitions", oracle=YEAR_MONTH_ORACLE)
-def year_month_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partition-key derivation (F7, data_generation.py:38) + distinct+sort."""
-    o = Catalog(spark, sf_dir).orders
-    return o.select(year_month("o_orderdate").alias("year_month")).distinct().orderBy("year_month")
 
 
 # --------------------------------------------------------------------------
@@ -512,73 +452,6 @@ def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# semi/anti join capability surface (SURVEY §2.3 — engine exposes beyond J1)
-# --------------------------------------------------------------------------
-
-ORDERS_NO_LINEITEMS_ORACLE = """
-SELECT o_orderkey FROM orders o
-WHERE NOT EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey)
-"""
-
-
-@query("orders_without_lineitems", oracle=ORDERS_NO_LINEITEMS_ORACLE)
-def orders_without_lineitems(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT ANTI join (NOT EXISTS) — orphan-detection primitive used by
-    reconciliation tooling."""
-    t = Catalog(spark, sf_dir)
-    return t.orders.join(
-        t.lineitem, t.orders.o_orderkey == t.lineitem.l_orderkey, "left_anti"
-    ).select("o_orderkey")
-
-
-CUSTOMERS_WITH_ORDERS_ORACLE = """
-SELECT c_custkey, c_name FROM customer c
-WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-"""
-
-
-@query("customers_with_orders", oracle=CUSTOMERS_WITH_ORDERS_ORACLE)
-def customers_with_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT SEMI join (EXISTS)."""
-    t = Catalog(spark, sf_dir)
-    return t.customer.join(
-        t.orders, t.customer.c_custkey == t.orders.o_custkey, "left_semi"
-    ).select("c_custkey", "c_name")
-
-
-# --------------------------------------------------------------------------
-# windowed time aggregation (streaming-equivalent batch shape)
-# --------------------------------------------------------------------------
-
-EVENTS_HOURLY_ORACLE = """
-SELECT
-  date_trunc('hour', ts) AS window_start,
-  event_type,
-  COUNT(*) AS event_count,
-  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_sum
-FROM events
-GROUP BY 1, 2
-"""
-
-
-@query("events_hourly_agg", oracle=EVENTS_HOURLY_ORACLE)
-def events_hourly_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window aggregation (batch twin of the streaming windowed agg
-    in streaming/cdc.py — identical semantics, date_trunc alignment)."""
-    ev = Catalog(spark, sf_dir).events
-    return (
-        ev.groupBy(
-            F.date_trunc("hour", F.col("ts")).alias("window_start"),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("event_count"),
-            F.sum(dec("value")).cast("double").alias("value_sum"),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
 # window functions: gap-based sessionization + rank (analytic surface)
 # --------------------------------------------------------------------------
 
@@ -643,147 +516,6 @@ def sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CUSTOMER_RANK_ORACLE = """
-WITH spend AS (
-  SELECT n.n_name AS country, c.c_custkey AS client_id,
-         CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spend
-  FROM orders o
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN nation n ON c.c_nationkey = n.n_nationkey
-  GROUP BY 1, 2
-)
-SELECT country, client_id, total_spend,
-       RANK() OVER (PARTITION BY country ORDER BY total_spend DESC, client_id) AS spend_rank
-FROM spend
-QUALIFY spend_rank <= 3
-"""
-
-
-@query("customer_rank_by_spend", oracle=CUSTOMER_RANK_ORACLE)
-def customer_rank_by_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped aggregate + RANK window, filtered to top-3 per country."""
-    from pyspark.sql.window import Window
-
-    t = Catalog(spark, sf_dir)
-    spend = (
-        t.orders.join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(t.nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy(F.col("n_name").alias("country"), F.col("c_custkey").alias("client_id"))
-        .agg(F.sum(dec("o_totalprice")).cast("double").alias("total_spend"))
-    )
-    w = Window.partitionBy("country").orderBy(F.col("total_spend").desc(), F.col("client_id"))
-    return (
-        spend.withColumn("spend_rank", F.rank().over(w))
-        .where(F.col("spend_rank") <= 3)
-    )
-
-
-# --------------------------------------------------------------------------
-# F3+F5: literal refresh-stamp injection + timestamp formatting
-# (load_sales_mart.py:32-35 lit(now); load_sales_history.py:214 strftime)
-# --------------------------------------------------------------------------
-
-REFRESH_STAMP_ORACLE = """
-SELECT n.n_name AS country,
-       COUNT(*) AS order_count,
-       TIMESTAMP '2024-06-01 08:00:00' AS refresh_date,
-       strftime(TIMESTAMP '2024-06-01 08:00:00', '%Y-%m-%d %H:%M:%S') AS refresh_str
-FROM orders o
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-GROUP BY n.n_name
-"""
-
-
-@query("refresh_stamp", oracle=REFRESH_STAMP_ORACLE)
-def refresh_stamp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F3 literal timestamp column + F5 formatting.
-
-    The refresh timestamp is an INJECTED parameter (here a fixed literal),
-    never current_timestamp() — clock injection keeps runs reproducible
-    (SURVEY §7.5 risk 3)."""
-    refresh = datetime(2024, 6, 1, 8, 0, 0)
-    t = Catalog(spark, sf_dir)
-    return (
-        t.orders.join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(t.nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy(F.col("n_name").alias("country"))
-        .agg(F.count(F.lit(1)).alias("order_count"))
-        .withColumn("refresh_date", F.lit(refresh))
-        .withColumn(
-            "refresh_str", F.date_format(F.lit(refresh), "yyyy-MM-dd HH:mm:ss")
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# F6+C1: cutoff arithmetic (truncate-to-minute − 5-min safety lag) applied
-# as a watermark predicate (load_sales_history.py:33-44)
-# --------------------------------------------------------------------------
-
-CUTOFF_WINDOW_ORACLE = """
-SELECT COUNT(*) AS event_count,
-       date_trunc('minute', TIMESTAMP '2024-02-15 17:42:37') - INTERVAL 5 MINUTE
-         AS cutoff_ts
-FROM events
-WHERE ts < date_trunc('minute', TIMESTAMP '2024-02-15 17:42:37') - INTERVAL 5 MINUTE
-"""
-
-
-@query("cutoff_window", oracle=CUTOFF_WINDOW_ORACLE)
-def cutoff_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F6 cutoff expression over an injected 'now': minute truncation + lag,
-    then the half-open upper bound (the C1 watermark in batch form)."""
-    now = datetime(2024, 2, 15, 17, 42, 37)
-    cutoff = F.date_trunc("minute", F.lit(now)) - F.expr("INTERVAL 5 MINUTES")
-    ev = Catalog(spark, sf_dir).events
-    return ev.where(F.col("ts") < cutoff).agg(
-        F.count(F.lit(1)).alias("event_count"),
-        F.first(cutoff).alias("cutoff_ts"),
-    )
-
-
-# --------------------------------------------------------------------------
-# S7: temp-view registration + SQL facade — the DataFrame↔SQL bridge
-# (load_sales_history.py:166 createOrReplaceTempView + :173 spark.sql)
-# --------------------------------------------------------------------------
-
-SQL_FACADE_ORACLE = """
-SELECT n.n_name AS country,
-       COUNT(o.o_orderkey) AS order_count,
-       CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-FROM orders o
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-WHERE CAST(o.o_totalprice AS DECIMAL(18,2)) > 0
-GROUP BY n.n_name
-"""
-
-
-@query("sql_facade_agg", oracle=SQL_FACADE_ORACLE)
-def sql_facade_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S7 — DataFrames registered as temp views, query expressed as SQL
-    text: the exact handoff pattern of the reference (DataFrame world →
-    createOrReplaceTempView → spark.sql). Catalyst plans both worlds into
-    the same logical plan, so the facade costs nothing."""
-    t = Catalog(spark, sf_dir)
-    t.orders.createOrReplaceTempView("v_orders")
-    t.customer.createOrReplaceTempView("v_customer")
-    t.nation.createOrReplaceTempView("v_nation")
-    return spark.sql(
-        """
-        SELECT n.n_name AS country,
-               COUNT(o.o_orderkey) AS order_count,
-               CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-        FROM v_orders o
-        JOIN v_customer c ON o.o_custkey = c.c_custkey
-        JOIN v_nation n ON c.c_nationkey = n.n_nationkey
-        WHERE CAST(o.o_totalprice AS DECIMAL(18,2)) > 0
-        GROUP BY n.n_name
-        """
-    )
-
-
 # --------------------------------------------------------------------------
 # session_window sessionization — the streaming-capable twin of `sessionize`
 # (same plan runs on readStream with a watermark; see streaming/cdc.py)
@@ -826,75 +558,6 @@ def sessionize_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = Catalog(spark, sf_dir).events
     return streaming_sessionize(ev, ts_col="ts", user_col="user_id", gap="30 minutes")
-
-
-# --------------------------------------------------------------------------
-# skew-proof two-phase aggregation (operators/skew.py) — same result as
-# events_hourly_agg, shuffle load spread over salt buckets
-# --------------------------------------------------------------------------
-
-
-@query("events_hourly_agg_salted", oracle=EVENTS_HOURLY_ORACLE)
-def events_hourly_agg_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Salted twin of events_hourly_agg, oracle-checked for identity.
-
-    Scale: when one hour×type dominates (flash-sale hot key), phase 1
-    groups on (keys, salt) spreading the hot key over 16 reducers; phase
-    2 merges per key. COUNT merges as SUM of partial counts; decimal SUM
-    stays exact, so the salted plan is bit-identical to the direct one.
-    """
-    from ..operators.skew import salted_agg
-
-    ev = Catalog(spark, sf_dir).events
-    keyed = ev.select(
-        F.date_trunc("hour", F.col("ts")).alias("window_start"),
-        "event_type",
-        dec("value").alias("value_dec"),
-        F.lit(1).alias("one"),  # COUNT(*) semantics even if value is null
-    )
-    out = salted_agg(
-        keyed,
-        ["window_start", "event_type"],
-        {"event_count": "count:one", "value_sum": "sum:value_dec"},
-        salt_buckets=16,
-    )
-    return out.withColumn("value_sum", F.col("value_sum").cast("double"))
-
-
-# --------------------------------------------------------------------------
-# TPC-H Q6: pure filter + global agg — the pushdown showcase
-# --------------------------------------------------------------------------
-
-TPCH_Q6_ORACLE = """
-SELECT CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2))
-         * CAST(l_discount AS DECIMAL(18,2)) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
-  AND CAST(l_discount AS DECIMAL(18,2)) BETWEEN 0.05 AND 0.07
-  AND l_quantity < 24
-"""
-
-
-@query("tpch_q6", oracle=TPCH_Q6_ORACLE)
-def tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 forecasting revenue change: all four predicates and the
-    4-column projection push into the parquet scan; the aggregate is a
-    single partial+final SUM — no join, no wide shuffle, the cheapest
-    query at any scale."""
-    li = Catalog(spark, sf_dir).lineitem
-    disc = dec("l_discount")
-    return (
-        li.where(
-            (F.col("l_shipdate") >= F.lit(datetime(1996, 1, 1)))
-            & (F.col("l_shipdate") < F.lit(datetime(1997, 1, 1)))
-            & (disc >= F.lit(0.05).cast("decimal(18,2)"))
-            & (disc <= F.lit(0.07).cast("decimal(18,2)"))
-            & (F.col("l_quantity") < 24)
-        )
-        .select((dec("l_extendedprice") * disc).cast("decimal(18,4)").alias("rev"))
-        .agg(F.sum("rev").cast("double").alias("revenue"))
-    )
 
 
 # --------------------------------------------------------------------------
@@ -979,478 +642,6 @@ def sketch_distinct_clients(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SKETCH_QUANTILES_GRID = (0.5, 0.95, 0.99)
-
-# The GK sketch retains every value un-compressed for groups below
-# ``accuracy`` rows, where its answer is EXACTLY the discrete quantile
-# (DuckDB quantile_disc) — verified bit-equal at the local SFs. That
-# exact regime is the oracle contract here, and accuracy=100000 sizes
-# it to cover EVERY local SF (sf0.1's largest segment is ~30 k orders;
-# the r5 sf0.1 robustness sweep caught the old accuracy=10000 leaving
-# the exact regime there). Beyond it the sketch's documented
-# 1/accuracy rank error applies and only rows-only checking would be
-# sound — the 100 TB path trades exactness for bounded memory and
-# picks accuracy from the memory budget, not the oracle.
-SKETCH_QUANTILES_ORACLE = "\nUNION ALL\n".join(
-    f"""
-SELECT c_mktsegment AS segment,
-       CAST({q} AS DOUBLE) AS quantile,
-       quantile_disc(o_totalprice, {q}) AS price
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY c_mktsegment"""
-    for q in SKETCH_QUANTILES_GRID
-)
-
-
-@query("sketch_price_quantiles", oracle=SKETCH_QUANTILES_ORACLE)
-def sketch_price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """approx_percentile (Greenwald-Khanna) of order totals per segment,
-    exploded to one (segment, quantile, price) row per grid point —
-    scalar rows so the driver's pandas canon can sort/hash the output
-    (an array<double> column is unhashable there).
-
-    Scale: exact percentiles need a full sort; the GK sketch is bounded
-    memory with a declared accuracy (here 1/100000 relative rank —
-    sized so the lossless regime covers every local SF) and merges
-    across partitions. ONE aggregate carries the whole grid (one sketch
-    per group, not one per quantile).
-    """
-    o = Catalog(spark, sf_dir).orders
-    c = Catalog(spark, sf_dir).customer
-    joined = o.join(c, F.col("o_custkey") == F.col("c_custkey"))
-    sketched = joined.groupBy(F.col("c_mktsegment").alias("segment")).agg(
-        F.percentile_approx(
-            F.col("o_totalprice").cast("double"),
-            list(SKETCH_QUANTILES_GRID),
-            100000,
-        ).alias("qv")
-    )
-    grid = F.array(*[F.lit(q) for q in SKETCH_QUANTILES_GRID])
-    return sketched.select(
-        "segment", F.posexplode("qv").alias("pos", "price")
-    ).select(
-        "segment",
-        F.element_at(grid, F.col("pos") + 1).alias("quantile"),
-        "price",
-    )
-
-
-# Exact-regime oracle (same contract as the GK quantile sketch): with
-# maxItemsTracked=100000 ≫ distinct custkeys at the graded SFs, every
-# per-partial sketch is lossless, so the estimated COUNTS are exact.
-# WHICH client ids appear among rank-tied entries at the k boundary is
-# sketch-internal tie selection (the measured rows-only reason in r2–r4)
-# — so the oracle checks the top-10 count MULTISET, deterministic under
-# ties, and drops the ids. Beyond the tracked budget the sketch's
-# documented count-error bound applies and only rows-only checking would
-# be sound.
-SKETCH_TOPK_ORACLE = """
-SELECT CAST(order_count_est AS BIGINT) AS order_count_est,
-       CAST(ROW_NUMBER() OVER (ORDER BY order_count_est DESC) AS INT) AS rank
-FROM (
-  SELECT COUNT(*) AS order_count_est
-  FROM orders GROUP BY o_custkey
-)
-ORDER BY order_count_est DESC
-LIMIT 10
-"""
-
-
-@query("sketch_top_clients", oracle=SKETCH_TOPK_ORACLE)
-def sketch_top_clients(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heavy hitters: top-10 client order counts via the approx_top_k
-    frequency sketch — completing the sketch triad (HLL distinct, GK
-    quantiles, frequent items). ORACLE-CHECKED in the sketch's exact
-    regime (r4 verdict item 7): tracked budget ≫ distinct keys makes the
-    estimated counts exact, so the top-10 count multiset replays in
-    DuckDB; the ids are deliberately dropped from the output because
-    rank-tied id selection at the k boundary is sketch-internal (the
-    measured rows-only reason through r4).
-
-    Built in the explicitly MERGEABLE form — per-group
-    approx_top_k_accumulate sketches combined with approx_top_k_combine,
-    then read with approx_top_k_estimate — the same
-    partial/combine/estimate protocol the incremental mart uses for HLL
-    partials, so per-partition frequency sketches could be persisted and
-    re-aggregated without rescanning history.
-
-    Scale: exact top-k over a high-cardinality key is a full groupBy
-    (shuffle ∝ distinct keys) THEN a sort; the sketch is one pass,
-    bounded memory (maxItemsTracked entries per partial), map-side
-    combinable, with estimates exact whenever per-partial distinct keys
-    fit the tracked budget. Policy unchanged: monitoring/interactive
-    tier only — reconciliation stays exact.
-    """
-    o = Catalog(spark, sf_dir).orders
-    # per-orderdate-year partials (stand-in for per-partition persisted
-    # sketches), combined into one global sketch, then estimated
-    partials = o.groupBy(F.year("o_orderdate").alias("yr")).agg(
-        F.expr("approx_top_k_accumulate(o_custkey, 100000)").alias("sk")
-    )
-    combined = partials.agg(F.expr("approx_top_k_combine(sk)").alias("sk"))
-    # the estimate array is already frequency-descending: posexplode's
-    # position IS the rank — no global window (banned by the plan audit)
-    est = combined.select(
-        F.posexplode(F.expr("approx_top_k_estimate(sk, 10)")).alias("pos", "e")
-    )
-    return est.select(
-        F.col("e.count").cast("long").alias("order_count_est"),
-        (F.col("pos") + 1).cast("int").alias("rank"),
-    ).orderBy("rank")
-
-
-# --------------------------------------------------------------------------
-# TPC-H Q4: order priority checking — EXISTS rewritten as semi join
-# --------------------------------------------------------------------------
-
-TPCH_Q4_ORACLE = """
-SELECT o.o_orderpriority, COUNT(*) AS order_count
-FROM orders o
-WHERE o.o_orderdate >= TIMESTAMP '1996-07-01 00:00:00'
-  AND o.o_orderdate <  TIMESTAMP '1996-10-01 00:00:00'
-  AND EXISTS (
-    SELECT 1 FROM lineitem l
-    WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R'
-  )
-GROUP BY o.o_orderpriority
-"""
-
-
-@query("tpch_q4", oracle=TPCH_Q4_ORACLE)
-def tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape: EXISTS → LEFT SEMI join (no duplication, no
-    distinct needed). The driver testdata has no commit/receipt dates, so
-    the EXISTS predicate is returned-items (l_returnflag='R') — same
-    plan shape. Scale: the lineitem side is filtered before the semi
-    join; both sides shuffle once on orderkey, the date filter pushes to
-    the orders scan."""
-    t = Catalog(spark, sf_dir)
-    o = t.orders.where(
-        (F.col("o_orderdate") >= F.lit(datetime(1996, 7, 1)))
-        & (F.col("o_orderdate") < F.lit(datetime(1996, 10, 1)))
-    )
-    late = t.lineitem.where(F.col("l_returnflag") == "R")
-    return (
-        o.join(late, F.col("o_orderkey") == F.col("l_orderkey"), "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-    )
-
-
-# --------------------------------------------------------------------------
-# TPC-H Q12: shipmode priority classification — CASE inside aggregation
-# --------------------------------------------------------------------------
-
-TPCH_Q12_ORACLE = """
-SELECT l.l_linestatus,
-  CAST(SUM(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END)
-    AS BIGINT) AS high_line_count,
-  CAST(SUM(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END)
-    AS BIGINT) AS low_line_count
-FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-WHERE l.l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND l.l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
-GROUP BY l.l_linestatus
-"""
-
-
-@query("tpch_q12", oracle=TPCH_Q12_ORACLE)
-def tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12 shape: conditional counting (CASE folded into SUM) after
-    an equi-join, grouped on l_linestatus (testdata has no l_shipmode).
-    Scale: lineitem pre-filtered by date AT THE SCAN, so the join input
-    is a fraction of the table; one shuffle on orderkey."""
-    t = Catalog(spark, sf_dir)
-    li = t.lineitem.where(
-        (F.col("l_shipdate") >= F.lit(datetime(1996, 1, 1)))
-        & (F.col("l_shipdate") < F.lit(datetime(1997, 1, 1)))
-    ).select("l_orderkey", "l_linestatus")
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(t.orders.select("o_orderkey", "o_orderpriority"),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("l_linestatus")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# TPC-H Q14: promo revenue ratio — conditional aggregation into a scalar
-# --------------------------------------------------------------------------
-
-TPCH_Q14_ORACLE = """
-SELECT ROUND(
-  100.0 * CAST(SUM(CASE WHEN p.p_type LIKE 'PROMO%'
-       THEN CAST(CAST(l.l_extendedprice AS DECIMAL(18,2))
-            * (1 - CAST(l.l_discount AS DECIMAL(18,2))) AS DECIMAL(18,4))
-       ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE)
-  / CAST(SUM(CAST(CAST(l.l_extendedprice AS DECIMAL(18,2))
-        * (1 - CAST(l.l_discount AS DECIMAL(18,2))) AS DECIMAL(18,4))) AS DOUBLE),
-  6) AS promo_revenue_pct
-FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-WHERE l.l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'
-  AND l.l_shipdate <  TIMESTAMP '1996-04-01 00:00:00'
-"""
-
-
-@query("tpch_q14", oracle=TPCH_Q14_ORACLE)
-def tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14: ratio of conditional to total revenue. Scale: part
-    broadcasts; the month filter prunes lineitem at the scan; decimal
-    numerators, double division rounded identically on both engines."""
-    t = Catalog(spark, sf_dir)
-    li = t.lineitem.where(
-        (F.col("l_shipdate") >= F.lit(datetime(1996, 3, 1)))
-        & (F.col("l_shipdate") < F.lit(datetime(1996, 4, 1)))
-    )
-    rev = (dec("l_extendedprice") * (F.lit(1) - dec("l_discount"))).cast("decimal(18,4)")
-    promo = F.when(
-        F.col("p_type").startswith("PROMO"), rev
-    ).otherwise(F.lit(0).cast("decimal(18,4)"))
-    return (
-        li.join(t.part, F.col("l_partkey") == F.col("p_partkey"))
-        .agg(
-            F.round(
-                F.lit(100.0) * F.sum(promo).cast("double") / F.sum(rev).cast("double"),
-                6,
-            ).alias("promo_revenue_pct")
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# TPC-H Q10-like: returned-item top customers (group-agg + deterministic top-k)
-# --------------------------------------------------------------------------
-
-TPCH_Q10_ORACLE = """
-SELECT c.c_custkey AS client_id, c.c_name AS client_name, n.n_name AS country,
-       CAST(SUM(CAST(CAST(l.l_extendedprice AS DECIMAL(18,2))
-           * (1 - CAST(l.l_discount AS DECIMAL(18,2))) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-FROM customer c
-JOIN orders o ON c.c_custkey = o.o_custkey
-JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-WHERE o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND o.o_orderdate <  TIMESTAMP '1996-07-01 00:00:00'
-  AND l.l_returnflag = 'R'
-GROUP BY 1, 2, 3
-ORDER BY revenue DESC, client_id
-LIMIT 20
-"""
-
-
-@query("tpch_q10", oracle=TPCH_Q10_ORACLE)
-def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10: lost-revenue top-20 customers. Scale: returnflag and the
-    date window prune both big tables at their scans; nation is hinted
-    broadcast (fixed 25 rows), customer is AQE-sized (grows with SF); TakeOrderedAndProject avoids a global sort; client_id
-    tie-break makes the top-k deterministic for value-hash comparison."""
-    t = Catalog(spark, sf_dir)
-    o = t.orders.where(
-        (F.col("o_orderdate") >= F.lit(datetime(1996, 1, 1)))
-        & (F.col("o_orderdate") < F.lit(datetime(1996, 7, 1)))
-    ).select("o_orderkey", "o_custkey")
-    li = t.lineitem.where(F.col("l_returnflag") == "R").select(
-        "l_orderkey", "l_extendedprice", "l_discount"
-    )
-    rev = (dec("l_extendedprice") * (F.lit(1) - dec("l_discount"))).cast("decimal(18,4)")
-    agg = (
-        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(t.nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy(
-            F.col("c_custkey").alias("client_id"),
-            F.col("c_name").alias("client_name"),
-            F.col("n_name").alias("country"),
-        )
-        .agg(F.sum(rev).cast("double").alias("revenue"))
-    )
-    return top_k(agg, [F.col("revenue").desc(), F.col("client_id")], 20)
-
-
-# --------------------------------------------------------------------------
-# set operations beyond UNION (SURVEY §2.5 completeness): INTERSECT / EXCEPT
-# --------------------------------------------------------------------------
-
-RETAINED_CLIENTS_ORACLE = """
-SELECT o_custkey AS client_id FROM orders
-WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
-INTERSECT
-SELECT o_custkey FROM orders
-WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
-  AND o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'
-"""
-
-
-@query("retained_clients", oracle=RETAINED_CLIENTS_ORACLE)
-def retained_clients(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT: clients active in both 1996 and 1997.
-
-    Scale: Catalyst plans INTERSECT as a left-semi join over distinct
-    inputs — one shuffle per side on the (already pruned, 8-byte) key;
-    both date filters push to the orders scan.
-    """
-    t = Catalog(spark, sf_dir)
-
-    def active(y0: int, y1: int) -> DataFrame:
-        return (
-            t.orders.where(
-                (F.col("o_orderdate") >= F.lit(datetime(y0, 1, 1)))
-                & (F.col("o_orderdate") < F.lit(datetime(y1, 1, 1)))
-            ).select(F.col("o_custkey").alias("client_id"))
-        )
-
-    return active(1996, 1997).intersect(active(1997, 1998))
-
-
-CHURNED_CLIENTS_ORACLE = """
-SELECT o_custkey AS client_id FROM orders
-WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
-EXCEPT
-SELECT o_custkey FROM orders
-WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
-  AND o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'
-"""
-
-
-@query("churned_clients", oracle=CHURNED_CLIENTS_ORACLE)
-def churned_clients(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCEPT (distinct): clients active in 1996 but gone in 1997 — the
-    set-difference churn list. Plans as a left-anti join over distinct
-    inputs, same shuffle profile as INTERSECT."""
-    t = Catalog(spark, sf_dir)
-
-    def active(y0: int, y1: int) -> DataFrame:
-        return (
-            t.orders.where(
-                (F.col("o_orderdate") >= F.lit(datetime(y0, 1, 1)))
-                & (F.col("o_orderdate") < F.lit(datetime(y1, 1, 1)))
-            ).select(F.col("o_custkey").alias("client_id"))
-        )
-
-    return active(1996, 1997).subtract(active(1997, 1998))
-
-
-# --------------------------------------------------------------------------
-# ops surface: pre-flight join-key skew diagnosis (operators/skew.py)
-# --------------------------------------------------------------------------
-
-SKEW_REPORT_ORACLE = """
-WITH c AS (
-  SELECT o_custkey AS custkey, COUNT(*) AS key_rows FROM orders GROUP BY 1
-),
-s AS (SELECT SUM(key_rows) AS total, COUNT(*) AS nkeys FROM c)
-SELECT custkey,
-       CAST(key_rows AS BIGINT) AS key_rows,
-       ROUND(key_rows / CAST(total AS DOUBLE), 6) AS share,
-       ROUND(key_rows / (CAST(total AS DOUBLE) / nkeys), 2) AS skew_vs_mean,
-       CAST(GREATEST(1, CEIL(key_rows / 1000.0)) AS INTEGER) AS salt_buckets
-FROM c, s
-ORDER BY key_rows DESC, custkey
-LIMIT 10
-"""
-
-
-@query("skew_report_orders", oracle=SKEW_REPORT_ORACLE)
-def skew_report_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heavy-hitter diagnosis on the orders⋈customer join key: top-10
-    customers by order rows, each with its table share, skew-vs-mean
-    factor (AQE's skew heuristic fires ~5×), and the salt-bucket count
-    `salted_join` would need to bound per-task load (toy target of
-    1000 rows/task so the recommendation is non-trivial at test SFs).
-
-    Scale: one count-per-key shuffle with map-side partials — the same
-    exchange the join itself would pay, so the diagnosis is never more
-    expensive than one run of the operation it protects."""
-    from ..operators.skew import skew_report
-
-    orders = Catalog(spark, sf_dir).orders.select(
-        F.col("o_custkey").alias("custkey")
-    )
-    return skew_report(orders, ["custkey"], top_n=10, target_rows_per_task=1000)
-
-
-# --------------------------------------------------------------------------
-# monitoring: volume-anomaly detection over the event stream
-# --------------------------------------------------------------------------
-
-EVENT_ANOMALIES_ORACLE = """
-WITH hourly AS (
-  SELECT event_type, date_trunc('hour', ts) AS hour_start, COUNT(*) AS c
-  FROM events GROUP BY 1, 2
-),
-stats AS (
-  SELECT event_type, COUNT(*) AS n, SUM(c) AS s, SUM(c * c) AS ss
-  FROM hourly GROUP BY 1
-),
-scored AS (
-  SELECT h.event_type, h.hour_start, h.c AS event_count,
-    (CAST(h.c AS DOUBLE) - CAST(s.s AS DOUBLE) / CAST(s.n AS DOUBLE))
-      / sqrt(CAST(s.ss AS DOUBLE) / CAST(s.n AS DOUBLE)
-             - (CAST(s.s AS DOUBLE) / CAST(s.n AS DOUBLE))
-               * (CAST(s.s AS DOUBLE) / CAST(s.n AS DOUBLE))) AS z
-  FROM hourly h JOIN stats s USING (event_type)
-)
-SELECT event_type, hour_start, event_count, ROUND(z, 6) AS zscore
-FROM scored WHERE ABS(z) > 3.0
-"""
-
-
-@query("event_anomalies", oracle=EVENT_ANOMALIES_ORACLE)
-def event_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Volume-anomaly detection (the monitoring family): hours whose
-    event count deviates > 3σ from the type's own hourly distribution.
-
-    Determinism: the per-type moments are EXACT integer sums (n, Σc,
-    Σc²) — the z expression derives mean/σ from them in one fixed
-    per-row double expression (casts, two divisions, one multiply, one
-    sqrt — identical IEEE op sequence on both engines), so no double
-    ever crosses an unordered aggregate; the only aggregates are
-    integer COUNT/SUM. σ via Σc²/n − μ² is numerically fine here
-    because counts are small integers (catastrophic cancellation needs
-    μ² ≫ variance by ~2^52 — hourly event counts are nowhere near).
-
-    Scale: two aggregates (events→hourly, hourly→types) and one
-    broadcast join of the types-sized stats back onto hourly rows —
-    cost is one events scan + a (types × hours)-sized second stage.
-    """
-    ev = Catalog(spark, sf_dir).events
-    hourly = ev.groupBy(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("hour_start")
-    ).agg(F.count(F.lit(1)).alias("c"))
-    stats = hourly.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("c").alias("s"),
-        F.sum(F.col("c") * F.col("c")).alias("ss"),
-    )
-    cd = F.col("c").cast("double")
-    nd = F.col("n").cast("double")
-    mu = F.col("s").cast("double") / nd
-    sigma = F.sqrt(F.col("ss").cast("double") / nd - mu * mu)
-    z = (cd - mu) / sigma
-    return (
-        hourly.join(F.broadcast(stats), "event_type")
-        .select(
-            "event_type",
-            "hour_start",
-            F.col("c").alias("event_count"),
-            z.alias("__z"),
-        )
-        .where(F.abs(F.col("__z")) > 3.0)
-        .select(
-            "event_type",
-            "hour_start",
-            "event_count",
-            F.round("__z", 6).alias("zscore"),
-        )
-    )
-
-
 CORPUS_DIFF_ORACLE = """
 WITH fp AS (
   SELECT doc_id, source, md5(CAST(doc_id AS VARCHAR)) AS gate,
@@ -1513,154 +704,6 @@ def corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d = snapshot_diff(old, new, "doc_id", "fp", carry_cols=("source",))
     return d.groupBy("status", "source").agg(F.count(F.lit(1)).alias("n_docs"))
-
-
-EVENT_CORR_ORACLE = """
-WITH m AS (
-  SELECT event_type,
-         CAST(EXTRACT(hour FROM ts) AS BIGINT) AS x,
-         CAST(ROUND(value * 1000000, 0) AS BIGINT) AS y
-  FROM events
-),
-agg AS (
-  SELECT event_type, COUNT(*) AS n,
-         SUM(x) AS sx, SUM(y) AS sy,
-         SUM(x * x) AS sxx, SUM(y * y) AS syy, SUM(x * y) AS sxy
-  FROM m GROUP BY event_type
-)
-SELECT event_type, n,
-  CASE WHEN sqrt((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-                  - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-                 * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-                    - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))) > 0.0
-       THEN ROUND((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-                   - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-                  / sqrt((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-                          - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-                         * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-                            - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)
-  END AS corr_hour_value
-FROM agg
-"""
-
-
-@query("event_value_hour_corr", oracle=EVENT_CORR_ORACLE)
-def event_value_hour_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-type Pearson correlation between hour-of-day and event value
-    — "is this metric time-of-day dependent?", the monitoring question
-    next to `event_anomalies`' outlier scan. Exact-moment form
-    (``operators/stats.py``): value integer-scaled per row, six
-    DECIMAL(38,0) sums, r from ONE fixed-order double expression — so
-    the result is bit-identical at any parallelism and hash-comparable
-    against the oracle (built-in ``F.corr`` double-accumulates in merge
-    order and is neither).
-
-    Scale: one scan + one groupBy with map-side partials (six 16-byte
-    accumulators per event type); no window, no join, no second pass.
-    """
-    from ..operators.stats import grouped_pearson_corr, scaled_bigint
-
-    ev = Catalog(spark, sf_dir).events
-    return grouped_pearson_corr(
-        ev,
-        ["event_type"],
-        x=F.hour(F.col("ts")).cast("bigint"),
-        y=scaled_bigint(F.col("value")),
-        alias="corr_hour_value",
-    )
-
-
-TRENDING_ORACLE = """
-WITH daily AS (
-  SELECT date_trunc('day', ts) AS day, event_type, COUNT(*) AS cnt
-  FROM events GROUP BY 1, 2
-),
-ranked AS (
-  SELECT day, event_type, cnt,
-         RANK() OVER (PARTITION BY day
-                      ORDER BY cnt DESC, event_type) AS rnk
-  FROM daily
-),
-lagged AS (
-  SELECT day, event_type, cnt, rnk,
-         LAG(rnk) OVER (PARTITION BY event_type ORDER BY day) AS prev_rnk
-  FROM ranked
-)
-SELECT day, event_type, cnt, rnk, prev_rnk,
-       CASE WHEN prev_rnk IS NOT NULL THEN prev_rnk - rnk END AS rank_delta
-FROM lagged WHERE rnk <= 3
-"""
-
-
-@query("event_type_trending", oracle=TRENDING_ORACLE)
-def event_type_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily trending board: top-3 event types per day with the rank
-    delta vs the previous day (positive = rising) — the dashboard shape
-    behind "what changed today?". Rank ties break on the type name, so
-    the board is deterministic; the lag runs over EVERY day's ranks
-    (before the top-3 filter), so a type re-entering the board still
-    shows its true previous rank.
-
-    Scale: the daily groupBy collapses map-side to (days × types) rows
-    — everything after runs on that model-sized relation; the two
-    windows (rank by day, lag by type) shuffle only those rows. The
-    corpus-sized scan appears exactly once, under the count.
-    """
-    from pyspark.sql.window import Window
-
-    ev = Catalog(spark, sf_dir).events
-    daily = ev.groupBy(
-        F.date_trunc("day", F.col("ts")).alias("day"),
-        "event_type",
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-    w_rank = Window.partitionBy("day").orderBy(
-        F.col("cnt").desc(), F.col("event_type")
-    )
-    w_lag = Window.partitionBy("event_type").orderBy("day")
-    ranked = daily.withColumn("rnk", F.rank().over(w_rank))
-    lagged = ranked.withColumn("prev_rnk", F.lag("rnk").over(w_lag))
-    return lagged.where(F.col("rnk") <= 3).select(
-        "day", "event_type", "cnt", "rnk", "prev_rnk",
-        F.when(
-            F.col("prev_rnk").isNotNull(), F.col("prev_rnk") - F.col("rnk")
-        ).alias("rank_delta"),
-    )
-
-
-HOURLY_PCTL_ORACLE = """
-SELECT date_trunc('hour', ts) AS hour_start,
-       event_type,
-       COUNT(*) AS n,
-       ROUND(quantile_cont(value, 0.5), 6) AS p50,
-       ROUND(quantile_cont(value, 0.95), 6) AS p95
-FROM events
-GROUP BY 1, 2
-"""
-
-
-@query("event_value_hourly_percentiles", oracle=HOURLY_PCTL_ORACLE)
-def event_value_hourly_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-(hour, type) p50/p95 value bands — the latency-percentile
-    dashboard shape next to `event_anomalies` (volume) and
-    `event_value_hour_corr` (time dependence). Exact interpolated
-    percentiles (``percentile`` ≡ ``quantile_cont``, 6-dp rounded both
-    engines — the `price_percentiles` contract, here per group).
-
-    Scale: one shuffle keyed (hour, type) moving bare (key, value)
-    pairs; per-group state is the group's values (bounded by the hour
-    × type cardinality of the stream). For unbounded groups the sketch
-    twin family (`sketch_price_quantiles`) is the documented scale
-    path.
-    """
-    ev = Catalog(spark, sf_dir).events
-    return ev.groupBy(
-        F.date_trunc("hour", F.col("ts")).alias("hour_start"),
-        "event_type",
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.expr("percentile(value, 0.5)"), 6).alias("p50"),
-        F.round(F.expr("percentile(value, 0.95)"), 6).alias("p95"),
-    )
 
 
 RFM_ORACLE = """
@@ -1870,8 +913,7 @@ def ab_conversion_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A/B experiment readout: per-arm conversion (arm = user_id parity
     — the deterministic stand-in for an assignment column) plus the 2×2
     chi-square independence statistic (``operators/stats.py``
-    ``chi2_independence``) attached to both rows. The hypothesis-test
-    primitive next to `event_value_hour_corr`'s correlation.
+    ``chi2_independence``) attached to both rows.
 
     Scale: ONE data-sized groupBy (per-user conversion flag, map-side
     partials); contingency cells, margins, and the statistic all run on
@@ -2114,89 +1156,6 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# bounce rate: share of single-event sessions per day
-# --------------------------------------------------------------------------
-
-BOUNCE_ORACLE = """
-WITH flagged AS (
-  SELECT user_id, ts, event_id,
-    CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-              > INTERVAL 30 MINUTE
-         OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-         THEN 1 ELSE 0 END AS new_session
-  FROM events
-),
-numbered AS (
-  SELECT user_id, ts,
-    SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS UNBOUNDED PRECEDING) AS session_id
-  FROM flagged
-),
-sess AS (
-  SELECT user_id, session_id, COUNT(*) AS n_events, MIN(ts) AS session_start
-  FROM numbered GROUP BY 1, 2
-)
-SELECT CAST(date_trunc('day', session_start) AS TIMESTAMP) AS day,
-       COUNT(*) AS sessions,
-       CAST(SUM(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         AS bounces,
-       ROUND(CAST(SUM(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-             / CAST(COUNT(*) AS DOUBLE), 6) AS bounce_rate
-FROM sess GROUP BY 1
-"""
-
-
-@query("session_bounce_rate", oracle=BOUNCE_ORACLE)
-def session_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-day bounce rate: the share of sessions (same 30-minute-gap
-    definition as `sessionize`) that contain exactly one event,
-    attributed to the session's start day — the engagement-health
-    metric next to `session_peak_concurrency`'s capacity view.
-
-    Scale: one user_id shuffle for the sessionize windows, one
-    session-level aggregate sharing that partitioning (grouping keys
-    contain user_id), one day-grain rollup of session rows; the ratio
-    is a single fixed-order double division rounded 6 dp.
-    """
-    from pyspark.sql import Window
-
-    ev = Catalog(spark, sf_dir).events
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    lag_ts = F.lag("ts").over(w)
-    flagged = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.when(
-            lag_ts.isNull()
-            | ((F.unix_micros("ts") - F.unix_micros(lag_ts)) > 1_800_000_000),
-            1,
-        )
-        .otherwise(0)
-        .alias("new_session"),
-    )
-    numbered = flagged.withColumn(
-        "session_id",
-        F.sum("new_session").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    sess = numbered.groupBy("user_id", "session_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.min("ts").alias("session_start"),
-    )
-    return sess.groupBy(
-        F.date_trunc("day", "session_start").alias("day")
-    ).agg(
-        F.count(F.lit(1)).alias("sessions"),
-        F.sum((F.col("n_events") == 1).cast("long")).alias("bounces"),
-        F.round(
-            F.sum((F.col("n_events") == 1).cast("long")).cast("double")
-            / F.count(F.lit(1)).cast("double"),
-            6,
-        ).alias("bounce_rate"),
-    )
-
-
-# --------------------------------------------------------------------------
 # distribution drift, CDF form: exact two-sample Kolmogorov–Smirnov
 # --------------------------------------------------------------------------
 
@@ -2359,66 +1318,6 @@ def value_drift_mwu(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     return mann_whitney_u(tagged, value_col="v", ref_col="is_ref")
-
-
-# --------------------------------------------------------------------------
-# per-type value trend: closed-form OLS from exact integer moments
-# --------------------------------------------------------------------------
-
-OLS_ORACLE = """
-WITH t AS (
-  SELECT event_type, CAST(hour(ts) AS BIGINT) AS x,
-         CAST(ROUND(value * 1000000, 0) AS BIGINT) AS y
-  FROM events
-),
-m AS (
-  SELECT event_type,
-         CAST(COUNT(*) AS HUGEINT) AS n,
-         SUM(CAST(x AS HUGEINT)) AS sx,
-         SUM(CAST(y AS HUGEINT)) AS sy,
-         SUM(CAST(x AS HUGEINT) * x) AS sxx,
-         SUM(CAST(x AS HUGEINT) * y) AS sxy
-  FROM t GROUP BY event_type
-)
-SELECT event_type, CAST(n AS BIGINT) AS n,
-  CASE WHEN CAST(n * sxx - sx * sx AS DOUBLE) > 0.0 THEN
-    ROUND(CAST(n * sxy - sx * sy AS DOUBLE)
-          / CAST(n * sxx - sx * sx AS DOUBLE) / 1000000.0, 6)
-  END AS slope,
-  CASE WHEN CAST(n * sxx - sx * sx AS DOUBLE) > 0.0 THEN
-    ROUND(CAST(sy * sxx - sx * sxy AS DOUBLE)
-          / CAST(n * sxx - sx * sx AS DOUBLE) / 1000000.0, 6)
-  END AS intercept
-FROM m
-"""
-
-
-@query("hourly_value_trend_ols", oracle=OLS_ORACLE)
-def hourly_value_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event-type linear trend of value against hour-of-day —
-    closed-form OLS via the normal equations (``operators/stats.py
-    grouped_ols``), the regression companion to
-    ``event_value_hour_corr``'s Pearson r.
-
-    Exactness: the five moments are DECIMAL(38,0)/HUGEINT sums over
-    integer-scaled values (order-free); slope and intercept each
-    derive in one fixed-operand-order double expression, ROUND 6 —
-    bit-identical across engines and parallelism.
-
-    Scale: one scan projection + one groupBy with map-side partials
-    (five 16-byte accumulators per event_type) — the COUNT/SUM rollup
-    shape; no window, no join. At 100 TB this is a single pass with a
-    |event_type|-sized shuffle.
-    """
-    from ..operators.stats import grouped_ols, scaled_bigint
-
-    ev = Catalog(spark, sf_dir).events
-    t = ev.select(
-        "event_type",
-        F.hour("ts").cast("long").alias("x"),
-        scaled_bigint(F.col("value")).alias("y"),
-    )
-    return grouped_ols(t, ["event_type"], F.col("x"), F.col("y"))
 
 
 # --------------------------------------------------------------------------
@@ -2619,9 +1518,8 @@ JOIN outl o ON o.event_type = m.event_type
 def value_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust per-type outlier audit: median and MAD (median absolute
     deviation) with the 3σ-equivalent cutoff |v − med| > 3·1.4826·MAD —
-    the heavy-tail-safe companion to ``event_anomalies``' mean/σ z-score
-    (one extreme value shifts a mean arbitrarily; it moves a median by
-    at most one rank).
+    heavy-tail-safe where a mean/σ z-score is not (one extreme value
+    shifts a mean arbitrarily; it moves a median by at most one rank).
 
     Exactness: both medians are the LOWER median over the integer-scaled
     value domain (deterministic conditional MIN at 2·cum ≥ n — the
@@ -2798,8 +1696,7 @@ def value_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the events scan collapses to (type, hour) counts first;
     spine, prefix sum, running min, and max all run on the HOUR DOMAIN
-    per type — horizon-sized windows, never event-sized (the
-    ``hourly_value_interpolate`` contract).
+    per type — horizon-sized windows, never event-sized.
     """
     from pyspark.sql import Window
 
@@ -3140,89 +2037,4 @@ def order_value_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.lit(100.0),
             6,
         ).alias("trimmed_mean"),
-    )
-
-
-# --------------------------------------------------------------------------
-# LTV cohort-revenue triangle — the money twin of the event-based
-# cohort_retention: customers cohorted by FIRST-order month, revenue
-# laid out by months-since-first — the table LTV forecasting and
-# payback-period analysis read directly. Months are integer indexes
-# (year*12 + month - 1, both engines) — no DATE canon risk; revenue is
-# DECIMAL(18,2)-exact until the final double cast.
-# --------------------------------------------------------------------------
-
-LTV_TRIANGLE_ORACLE = """
-WITH o AS MATERIALIZED (
-  SELECT o_custkey AS cust,
-         year(o_orderdate) * 12 + month(o_orderdate) - 1 AS mi,
-         CAST(o_totalprice AS DECIMAL(18,2)) AS price
-  FROM orders
-),
-first AS MATERIALIZED (
-  SELECT cust, MIN(mi) AS cm FROM o GROUP BY 1
-),
-j AS MATERIALIZED (
-  SELECT f.cm, o.mi - f.cm AS age, o.cust, o.price
-  FROM o JOIN first f USING (cust)
-),
-rev AS (
-  SELECT cm, age, CAST(SUM(price) AS DOUBLE) AS revenue
-  FROM j GROUP BY 1, 2
-),
-act AS (
-  SELECT cm, age, COUNT(*) AS n_active
-  FROM (SELECT DISTINCT cm, age, cust FROM j) GROUP BY 1, 2
-),
-size_ AS (SELECT cm, COUNT(*) AS cohort_size FROM first GROUP BY 1)
-SELECT r.cm AS cohort_month, CAST(r.age AS INT) AS age,
-       CAST(s.cohort_size AS BIGINT) AS cohort_size,
-       CAST(a.n_active AS BIGINT) AS n_active, r.revenue
-FROM rev r
-JOIN act a ON a.cm = r.cm AND a.age = r.age
-JOIN size_ s ON s.cm = r.cm
-"""
-
-
-@query("customer_ltv_triangle", oracle=LTV_TRIANGLE_ORACLE)
-def customer_ltv_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Revenue per (first-order-month cohort, months-since-first) with
-    cohort size and active-customer counts — every cell exact.
-
-    Scale: one customer-keyed min (map-side combined), a broadcast-or-
-    hash join back, then two (cohort, age)-keyed aggregates joined on
-    their tiny triangle keys. The distinct-actives count is computed
-    dedup-first on its OWN aggregate — mixing count_distinct with
-    other aggregates in one groupBy would trigger the Expand rewrite
-    (measured 21× regression elsewhere in this repo).
-    """
-    o = Catalog(spark, sf_dir).orders.select(
-        F.col("o_custkey").alias("cust"),
-        (F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1).alias("mi"),
-        dec("o_totalprice").alias("price"),
-    )
-    first = o.groupBy("cust").agg(F.min("mi").alias("cm"))
-    j = o.join(first, "cust").select(
-        "cm", (F.col("mi") - F.col("cm")).alias("age"), "cust", "price"
-    )
-    rev = j.groupBy("cm", "age").agg(
-        F.sum("price").cast("double").alias("revenue")
-    )
-    act = (
-        j.select("cm", "age", "cust")
-        .distinct()
-        .groupBy("cm", "age")
-        .agg(F.count(F.lit(1)).alias("n_active"))
-    )
-    size = first.groupBy("cm").agg(F.count(F.lit(1)).alias("cohort_size"))
-    return (
-        rev.join(act, ["cm", "age"])
-        .join(size, "cm")
-        .select(
-            F.col("cm").alias("cohort_month"),
-            F.col("age").cast("int").alias("age"),
-            F.col("cohort_size").cast("bigint").alias("cohort_size"),
-            F.col("n_active").cast("bigint").alias("n_active"),
-            "revenue",
-        )
     )

@@ -638,34 +638,6 @@ def emb_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return connected_components_star(pairs).withColumnRenamed("doc_id", "vec_id")
 
 
-CENTROID_ORACLE = """
-SELECT label,
-       CAST(t.i AS INT) AS dim,
-       ROUND(AVG(CAST(embedding[CAST(t.i AS INT)] AS DOUBLE)), 6) AS centroid
-FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS t(i)
-GROUP BY label, dim
-"""
-
-
-@query("embedding_label_centroids", oracle=CENTROID_ORACLE)
-def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label centroid of the embedding vectors, one row per
-    (label, dimension) — the distributed mean-vector computation behind
-    IVF/KMeans quantizer training and class prototypes.
-
-    Scale: posexplode multiplies rows by the dimension count, but partial
-    aggregation collapses them to (labels x dims) per partition before
-    the exchange — the shuffle is model-sized, not data-sized, at any
-    corpus scale. No vector ever crosses the wire whole, no driver
-    collect."""
-    emb = Catalog(spark, sf_dir).embeddings
-    return (
-        emb.select("label", F.posexplode("embedding").alias("pos", "v"))
-        .groupBy("label", (F.col("pos") + 1).cast("int").alias("dim"))
-        .agg(F.round(F.avg(F.col("v").cast("double")), 6).alias("centroid"))
-    )
-
-
 # --------------------------------------------------------------------------
 # SemDeDup-style semantic dedup: cluster-partitioned near-dup components
 # --------------------------------------------------------------------------
@@ -814,76 +786,6 @@ def ann_topk_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Lloyd-refined k-means assignment: the iterative algorithm, graded
-# --------------------------------------------------------------------------
-
-KMEANS_K = 8
-
-KMEANS_REFINE_ORACLE = f"""
-WITH v AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
-),
-cb0 AS (SELECT vec_id AS cell, emb AS cent FROM v WHERE vec_id < {KMEANS_K}),
-a1 AS (
-  SELECT v.vec_id, c.cell,
-         ROW_NUMBER() OVER (
-           PARTITION BY v.vec_id
-           ORDER BY list_cosine_similarity(v.emb, c.cent) DESC, c.cell ASC
-         ) AS rn
-  FROM v, cb0 c
-),
-asg1 AS (SELECT vec_id, cell FROM a1 WHERE rn = 1),
-m AS (
-  SELECT a.cell, CAST(t.i AS INT) AS dim,
-         ROUND(AVG(v.emb[CAST(t.i AS INT)]), 6) AS val
-  FROM asg1 a JOIN v USING (vec_id),
-       UNNEST(range(1, len(v.emb) + 1)) AS t(i)
-  GROUP BY a.cell, dim
-),
-cb1 AS (SELECT cell, LIST(val ORDER BY dim) AS cent FROM m GROUP BY cell),
-a2 AS (
-  SELECT v.vec_id, c.cell, list_cosine_similarity(v.emb, c.cent) AS cs,
-         ROW_NUMBER() OVER (
-           PARTITION BY v.vec_id
-           ORDER BY list_cosine_similarity(v.emb, c.cent) DESC, c.cell ASC
-         ) AS rn
-  FROM v, cb1 c
-)
-SELECT vec_id, cell, ROUND(cs, 6) AS cent_cos
-FROM a2 WHERE rn = 1
-"""
-
-
-@query("kmeans_refine_assign", oracle=KMEANS_REFINE_ORACLE)
-def kmeans_refine_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One Lloyd round of spherical k-means, graded end to end:
-    deterministic init (first-K embeddings as centroids), argmax-cosine
-    assign, per-cell mean (6-dp rounded), re-assign against the refined
-    centroids — (vec_id, cell, cent_cos). The ITERATIVE-algorithm
-    surface of the engine, fully DuckDB-replayed: the oracle recomputes
-    assignment, the model-sized mean aggregate, and the second
-    assignment in SQL. Per-round driver traffic is exactly the K × dim
-    codebook (control-plane — the same unit Spark ML KMeans aggregates
-    per iteration); see ``kmeans_refine`` for the scale notes."""
-    from ..operators.similarity import (
-        _collect_codebook,
-        ivf_assign_with_cos,
-        kmeans_refine,
-    )
-
-    emb = Catalog(spark, sf_dir).embeddings
-    cb0 = emb.where(F.col("vec_id") < KMEANS_K).select(
-        F.col("vec_id").alias("cell"), F.col("embedding").alias("centroid")
-    )
-    cb1 = kmeans_refine(emb, cb0, iters=1)
-    cells = _collect_codebook(cb1, "cell", "centroid", "kmeans_refine_assign")
-    out = ivf_assign_with_cos(emb, cells)
-    return out.select(
-        "vec_id", "cell", F.round("cent_cos", 6).alias("cent_cos")
-    )
-
-
-# --------------------------------------------------------------------------
 # incremental semantic dedup: batch probes the cell-partitioned store
 # --------------------------------------------------------------------------
 
@@ -967,90 +869,6 @@ def semantic_dedup_incremental_query(spark: SparkSession, sf_dir: str) -> DataFr
     return semantic_dedup_incremental(
         spark, store, batch, codebook, threshold=EMB_NEARDUP_THRESHOLD
     )
-
-
-SEMANTIC_APPLY_ORACLE = f"""
-WITH RECURSIVE v AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb, label FROM embeddings
-),
-bitsel AS (
-  SELECT GREATEST(4, LEAST({SEMANTIC_DEDUP_MAX_BITS}, CAST(FLOOR(LOG2(GREATEST(
-           CAST(COUNT(*) AS DOUBLE) / 80.0, 1.0)) + 0.5) AS INT))) AS bits
-  FROM v
-),
-csel AS (SELECT (1::BIGINT << bits) AS c FROM bitsel),
-cb AS (SELECT vec_id AS cell, emb AS cent FROM v WHERE vec_id < (SELECT c FROM csel)),
-asg AS (
-  SELECT v.vec_id, c.cell, list_cosine_similarity(v.emb, c.cent) AS cs,
-         ROW_NUMBER() OVER (
-           PARTITION BY v.vec_id
-           ORDER BY list_cosine_similarity(v.emb, c.cent) DESC, c.cell ASC
-         ) AS rn
-  FROM v, cb c
-),
-assigned AS (SELECT vec_id, cell, cs AS cent_cos FROM asg WHERE rn = 1),
-cand AS (
-  SELECT a.vec_id AS id1, b.vec_id AS id2
-  FROM assigned a JOIN assigned b ON a.cell = b.cell AND a.vec_id < b.vec_id
-),
-verified AS (
-  SELECT c.id1, c.id2
-  FROM cand c
-  JOIN v v1 ON v1.vec_id = c.id1
-  JOIN v v2 ON v2.vec_id = c.id2
-  WHERE list_cosine_similarity(v1.emb, v2.emb) >= {EMB_NEARDUP_THRESHOLD}
-),
-edges AS (
-  SELECT id1 AS a, id2 AS b FROM verified
-  UNION ALL SELECT id2, id1 FROM verified
-),
-cnodes AS (SELECT DISTINCT a AS id FROM edges),
-walk(id, lbl) AS (
-  SELECT id, id FROM cnodes
-  UNION
-  SELECT e.b, w.lbl FROM walk w JOIN edges e ON w.id = e.a WHERE w.lbl < e.b
-),
-comp AS (SELECT id AS vec_id, MIN(lbl) AS component FROM walk GROUP BY id),
-scored AS (
-  SELECT comp.vec_id, comp.component, ROUND(a.cent_cos, 6) AS cent_cos
-  FROM comp JOIN assigned a USING (vec_id)
-),
-drops AS (
-  SELECT vec_id FROM (
-    SELECT vec_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY component ORDER BY cent_cos ASC, vec_id ASC) AS rnk
-    FROM scored
-  ) WHERE rnk > 1
-)
-SELECT v.vec_id, v.label
-FROM v
-WHERE v.vec_id NOT IN (SELECT vec_id FROM drops)
-"""
-
-
-@query("semantic_dedup_apply", oracle=SEMANTIC_APPLY_ORACLE)
-def semantic_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """END-TO-END semantic dedup: the surviving corpus after dropping
-    every duplicate-component member except its representative (the
-    least-centroid-similar one) — (vec_id, label) rows a curation run
-    would write back. The embedding twin of ``dedup_apply``: one
-    anti-join of the full corpus against the component drop set, which
-    is dup-sized, not corpus-sized. Same policy-sized cells and
-    SF-adaptive oracle as ``semantic_dedup``."""
-    from ..operators.similarity import semantic_dedup
-
-    emb = Catalog(spark, sf_dir).embeddings
-    bits = recommended_bits(emb.count(), max_bits=SEMANTIC_DEDUP_MAX_BITS)
-    codebook = emb.where(F.col("vec_id") < (1 << bits)).select(
-        F.col("vec_id").alias("cell"), F.col("embedding").alias("centroid")
-    )
-    members = semantic_dedup(
-        emb, codebook, id_col="vec_id", vec_col="embedding",
-        threshold=EMB_NEARDUP_THRESHOLD,
-    )
-    drops = members.where(F.col("keep") == 0).select("vec_id")
-    return emb.join(drops, "vec_id", "left_anti").select("vec_id", "label")
 
 
 # --------------------------------------------------------------------------
@@ -1224,198 +1042,4 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, store, q, codebook, cbs,
         id_col="vec_id", vec_col="embedding",
         n_probe=IVF_ARTIFACT_N_PROBE, k=TOP_K,
-    )
-
-
-@query("ann_ivfpq_topk_blas", oracle=_ivfpq_oracle(IVF_ARTIFACT_N_PROBE))
-def ann_ivfpq_topk_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`ann_ivfpq_topk` with the PRODUCTION build path: the store is
-    written with ``use_blas=True`` — one Arrow/numpy pass per batch
-    computes both quantizations (coarse cell + PQ codes) instead of the
-    literal codebook projections, measured 8-10× cheaper at build
-    volume (12.24 s → 1.16 s per 200 k-row PQ encode; the full 1000×
-    build+probe cycle 24.9× literal → 3.1× BLAS). The codes are
-    BIT-IDENTICAL to the literal fold (tie contracts match: argmax
-    first-max / argmin first-min over ascending cell/code axes;
-    equality pytest-pinned in tests/test_similarity.py), so the SAME
-    DuckDB oracle replays this store — grading the build a 100 TB
-    deployment would actually run, not just the oracle-transparent one.
-
-    The probe side is byte-identical to `ann_ivfpq_topk`: cell-pruned
-    parquet scan of codes only, in-projection ADC reconstruction —
-    mapInPandas appears ONLY in the build (executed at plan-build
-    time), never in the registered probe plan, so the zero-row-UDF
-    plan bans still hold.
-    """
-    from ..operators.similarity import (
-        pq_sub_codebooks,
-        ivfpq_topk,
-        write_ivfpq_store,
-    )
-    from .storepaths import process_scoped_store_path
-
-    art = _load_ivf_artifact()
-    emb = Catalog(spark, sf_dir).embeddings
-    codebook = spark.createDataFrame(
-        sorted((int(c), v) for c, v in art["centroids"].items()),
-        ["cell", "centroid"],
-    ).select("cell", F.col("centroid").cast("array<double>").alias("centroid"))
-    cbs = pq_sub_codebooks(emb, m=PQ_M, n_codes=PQ_CODES)
-    store = process_scoped_store_path("ivfpq_store_blas", sf_dir)
-    write_ivfpq_store(emb, codebook, cbs, store, use_blas=True)
-    q = emb.where(F.col("vec_id") < N_QUERY_VECS)
-    return ivfpq_topk(
-        spark, store, q, codebook, cbs,
-        id_col="vec_id", vec_col="embedding",
-        n_probe=IVF_ARTIFACT_N_PROBE, k=TOP_K,
-    )
-
-
-EMBEDDING_DQ_ORACLE = f"""
-WITH v AS (
-  SELECT vec_id,
-    CAST(embedding AS DOUBLE[]) AS emb,
-    len(embedding) AS dim
-  FROM embeddings
-),
-per AS (
-  SELECT vec_id,
-    CASE WHEN dim <> {EMB_DIM} THEN 1 ELSE 0 END AS wrong_dim,
-    CASE WHEN len(list_filter(emb, x -> isnan(x) OR NOT isfinite(x))) > 0
-         THEN 1 ELSE 0 END AS nonfinite,
-    list_sum(list_transform(emb, x -> x * x)) AS sq
-  FROM v
-)
-SELECT COUNT(*) AS n_vectors,
-       CAST(SUM(wrong_dim) AS BIGINT) AS n_wrong_dim,
-       CAST(SUM(nonfinite) AS BIGINT) AS n_nonfinite,
-       CAST(SUM(CASE WHEN nonfinite = 0 AND sq = 0.0 THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_zero_norm,
-       ROUND(MIN(CASE WHEN nonfinite = 0 THEN sqrt(sq) END), 6) AS min_norm,
-       ROUND(MAX(CASE WHEN nonfinite = 0 THEN sqrt(sq) END), 6) AS max_norm
-FROM per
-"""
-
-
-@query("embedding_dq", oracle=EMBEDDING_DQ_ORACLE)
-def embedding_dq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-table data-quality gate — the `dq_violations` family
-    member for vector columns: wrong dimension, non-finite components
-    (NaN/Inf), zero-norm vectors (undefined cosine), and the norm range
-    (rounded 6 dp; an unnormalized batch shows up instantly). Per-row
-    norms fold the array left-to-right in BOTH engines — the array
-    order is fixed, so each row's double sum is deterministic and
-    cross-engine identical; MIN/MAX over the rounded values is
-    order-free. Violation branches are pytest-exercised on a corrupted
-    synthetic table (wrong dim / NaN / Inf / zero vector).
-
-    Scale: one scan, scan-side array expressions (higher-order
-    functions are interpreted, acceptable for an audit pass), one
-    global aggregate with map-side partials. No shuffle beyond the
-    six-accumulator final merge.
-    """
-    from ..operators.similarity import embedding_dq_report
-
-    emb = Catalog(spark, sf_dir).embeddings
-    return embedding_dq_report(emb, vec_col="embedding", dim=EMB_DIM)
-
-
-# --------------------------------------------------------------------------
-# embedding second-moment (Gram) matrix — the whitening/PCA
-# preprocessing statistic, exact at any parallelism
-# --------------------------------------------------------------------------
-
-GRAM_ORACLE = f"""
-WITH v AS (SELECT CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-t AS (
-  SELECT CAST(a.i AS INT) - 1 AS i, CAST(b.j AS INT) - 1 AS j,
-         CAST(ROUND(v.emb[CAST(a.i AS INT)] * v.emb[CAST(b.j AS INT)]
-                    * 1000000000.0, 0) AS BIGINT) AS t
-  FROM v, range(1, {EMB_DIM + 1}) a(i), range(1, {EMB_DIM + 1}) b(j)
-)
-SELECT i, j, ROUND(CAST(SUM(t) AS DOUBLE) / 1000000000.0, 6) AS g
-FROM t GROUP BY i, j
-"""
-
-
-@query("embedding_gram_matrix", oracle=GRAM_ORACLE)
-def embedding_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 64×64 second-moment matrix of the embedding corpus
-    (``operators/similarity.py gram_matrix``) — the statistic PCA/
-    whitening preprocessing needs before semantic dedup or ANN
-    indexing. Module-pattern exact: per-row products integer-scaled
-    before a DECIMAL(38,0) order-free sum, so the matrix hash-matches
-    at any parallelism (and DuckDB's HUGEINT sum).
-
-    Scale: the shuffle carries d² partial rows PER MAP PARTITION
-    regardless of corpus size (map-side combine); the scan-side d²-fold
-    measured 5.14× at 100× embeddings. A bit-identical Arrow/numpy
-    twin was measured and LOST (70.7 vs 45.3 s at 100× — per-term
-    rounding forces full-size numpy temporaries; the operator docstring
-    has the analysis), so the codegen form is both the oracle-replay
-    AND the production path. Driver-side `pca_components` (eigh on the
-    collected d² rows — control-plane) + the scan-side `pca_project`
-    folds complete the family in pytest.
-    """
-    from ..operators.similarity import gram_matrix
-
-    emb = Catalog(spark, sf_dir).embeddings
-    return gram_matrix(emb, vec_col="embedding", dim=EMB_DIM)
-
-
-ANN_MULTIPROBE_ORACLE = f"""
-WITH v AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
-),
-sigs AS MATERIALIZED (
-{{sigs}}
-),
-q0 AS (SELECT vec_id, tbl, bucket FROM sigs WHERE vec_id < {N_QUERY_VECS}),
-qp AS (
-  SELECT vec_id, tbl, bucket FROM q0
-  UNION ALL
-  SELECT vec_id, tbl, xor(bucket, (1 << CAST(t.i AS INT))) AS bucket
-  FROM q0, UNNEST(range(0, {LSH_BITS})) AS t(i)
-),
-cand AS (
-  SELECT DISTINCT q.vec_id AS query_id, e.vec_id AS neighbor_id
-  FROM qp q JOIN sigs e ON q.tbl = e.tbl AND q.bucket = e.bucket
-   AND q.vec_id <> e.vec_id
-),
-scored AS (
-  SELECT c.query_id, c.neighbor_id,
-         list_cosine_similarity(vq.emb, ve.emb) AS cos_raw
-  FROM cand c
-  JOIN v vq ON vq.vec_id = c.query_id
-  JOIN v ve ON ve.vec_id = c.neighbor_id
-)
-SELECT query_id, neighbor_id,
-       ROUND(cos_raw, 6) AS cosine,
-       CAST(ROW_NUMBER() OVER (
-         PARTITION BY query_id ORDER BY cos_raw DESC, neighbor_id ASC
-       ) AS INT) AS rank
-FROM scored
-QUALIFY rank <= {TOP_K}
-"""
-
-
-@query(
-    "ann_lsh_multiprobe_topk",
-    oracle=ANN_MULTIPROBE_ORACLE.format(sigs=_sigs_cte()),
-)
-def ann_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-probe LSH top-k (Lv et al. 2007): queries probe their
-    bucket + every Hamming-1 neighbor bucket per table — recall
-    comparable to ~L·(bits+1) tables while the CORPUS keeps L
-    signatures per vector (probe fan-out is query-side only,
-    broadcast-sized). The storage/recall dial the plain `ann_lsh_topk`
-    lacks.
-    """
-    from ..operators.similarity import lsh_multiprobe_topk
-
-    emb = Catalog(spark, sf_dir).embeddings
-    q = emb.where(F.col("vec_id") < N_QUERY_VECS)
-    return lsh_multiprobe_topk(
-        emb, q, id_col="vec_id", vec_col="embedding",
-        dim=EMB_DIM, k=TOP_K, bits=LSH_BITS, tables=LSH_TABLES,
     )

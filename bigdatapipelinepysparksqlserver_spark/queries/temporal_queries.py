@@ -1,11 +1,10 @@
-"""Temporal-join and multidimensional-aggregation query surface.
+"""Temporal-join and event-sequence query surface.
 
 As-of join and banded range join are the two interval operators Spark has
-no built-in for (``operators/temporal.py``); rollup/pivot exercise the
-multidimensional GROUP BY surface. All four are oracle-checked — the
-as-of/range oracles are written as window/inequality SQL DuckDB executes
-exactly, with (ts, event_id) total-order tie-breaks so both engines pick
-the same row at timestamp collisions.
+no built-in for (``operators/temporal.py``). Every query here is
+oracle-checked — the as-of/range oracles are written as window/inequality
+SQL DuckDB executes exactly, with (ts, event_id) total-order tie-breaks so
+both engines pick the same row at timestamp collisions.
 """
 
 from __future__ import annotations
@@ -137,88 +136,10 @@ def range_error_context(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# ROLLUP: event_type × day with subtotal levels
-# --------------------------------------------------------------------------
-
-EVENTS_ROLLUP_ORACLE = """
-SELECT event_type, day,
-       CAST(GROUPING(event_type) * 2 + GROUPING(day) AS INTEGER) AS lvl,
-       COUNT(*) AS event_count,
-       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_sum
-FROM (SELECT event_type, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day, value
-      FROM events) t
-GROUP BY ROLLUP (event_type, day)
-"""
-
-
-@query("events_rollup", oracle=EVENTS_ROLLUP_ORACLE)
-def events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP (event_type, day): detail rows + per-type subtotals + grand
-    total in one pass, with an explicit grouping-level column (the CASE the
-    two engines' differing GROUPING_ID bit orders is avoided by computing
-    the level from individual GROUPING flags identically on both).
-
-    Scale: Spark plans rollup as a single Expand + one hash aggregate —
-    3 grouping sets here, so the shuffle carries 3× the (small) group
-    domain, not 3× the input; partial aggregation still applies below the
-    exchange.
-    """
-    ev = Catalog(spark, sf_dir).events
-    base = ev.select(
-        "event_type", F.date_trunc("day", "ts").alias("day"), "value"
-    )
-    return (
-        base.rollup("event_type", "day")
-        .agg(
-            (F.grouping("event_type") * 2 + F.grouping("day"))
-            .cast("int")
-            .alias("lvl"),
-            F.count(F.lit(1)).alias("event_count"),
-            F.sum(dec("value")).cast("double").alias("value_sum"),
-        )
-        .select("event_type", "day", "lvl", "event_count", "value_sum")
-    )
-
-
-# --------------------------------------------------------------------------
 # PIVOT: daily event-type count matrix
 # --------------------------------------------------------------------------
 
 EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
-
-EVENTS_PIVOT_ORACLE = """
-SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-       COUNT(CASE WHEN event_type = 'click'    THEN 1 END) AS click,
-       COUNT(CASE WHEN event_type = 'error'    THEN 1 END) AS error,
-       COUNT(CASE WHEN event_type = 'purchase' THEN 1 END) AS purchase,
-       COUNT(CASE WHEN event_type = 'signup'   THEN 1 END) AS signup,
-       COUNT(CASE WHEN event_type = 'view'     THEN 1 END) AS view
-FROM events
-GROUP BY 1
-"""
-
-
-@query("events_pivot", oracle=EVENTS_PIVOT_ORACLE)
-def events_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily event-type count matrix via an EXPLICIT-values pivot.
-
-    Scale: passing the pivot values up front matters — without them Spark
-    runs an extra distinct-collect job over the full input to discover the
-    columns before it can even plan. With fixed values the pivot compiles
-    to conditional aggregates (same plan as the oracle's CASE columns):
-    one scan, one shuffle on day. Missing cells are 0 (count semantics),
-    matching COUNT(CASE …) which never returns NULL.
-    """
-    ev = Catalog(spark, sf_dir).events
-    out = (
-        ev.select(F.date_trunc("day", "ts").alias("day"), "event_type")
-        .groupBy("day")
-        .pivot("event_type", list(EVENT_TYPES))
-        .agg(F.count(F.lit(1)))
-    )
-    return out.select(
-        "day", *[F.coalesce(F.col(c), F.lit(0)).alias(c) for c in EVENT_TYPES]
-    )
 
 
 # --------------------------------------------------------------------------
@@ -255,151 +176,6 @@ FROM per_user
 """
 
 
-@query("event_funnel", oracle=FUNNEL_ORACLE)
-def event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered-funnel analysis: users who viewed, then clicked strictly
-    after the first view, then purchased strictly after that click.
-
-    Scale: the sequential-pattern match is three conditional-min window
-    passes over ONE user_id partitioning — a single shuffle, three
-    chained Window operators, no self-joins and no per-user event-list
-    materialization. The final rollup is a user-level aggregate that
-    reuses the same partitioning."""
-    from pyspark.sql import Window
-
-    ev = Catalog(spark, sf_dir).events
-    w = Window.partitionBy("user_id")
-    ts, typ = F.col("ts"), F.col("event_type")
-    staged = (
-        ev.select("user_id", "ts", "event_type")
-        .withColumn("t1", F.min(F.when(typ == "view", ts)).over(w))
-        .withColumn(
-            "t2", F.min(F.when((typ == "click") & (ts > F.col("t1")), ts)).over(w)
-        )
-        .withColumn(
-            "t3",
-            F.min(F.when((typ == "purchase") & (ts > F.col("t2")), ts)).over(w),
-        )
-    )
-    per_user = staged.groupBy("user_id").agg(
-        F.max("t1").alias("t1"), F.max("t2").alias("t2"), F.max("t3").alias("t3")
-    )
-    return per_user.agg(
-        F.count("t1").alias("n_viewed"),
-        F.count("t2").alias("n_clicked_after_view"),
-        F.count("t3").alias("n_purchased_after_click"),
-    )
-
-
-# --------------------------------------------------------------------------
-# cohort retention: signup-month cohorts × months-since activity
-# --------------------------------------------------------------------------
-
-COHORT_ORACLE = """
-WITH user_days AS (
-  SELECT DISTINCT user_id,
-         DATE_DIFF('day', DATE '1970-01-01', CAST(ts AS DATE)) AS ad
-  FROM events
-),
-cohorts AS (
-  SELECT user_id, MIN(ad) AS cd FROM user_days GROUP BY user_id
-)
-SELECT c.cd AS cohort_day_index,
-       u.ad - c.cd AS days_since,
-       COUNT(*) AS n_users
-FROM user_days u JOIN cohorts c USING (user_id)
-GROUP BY 1, 2
-"""
-
-
-@query("cohort_retention", oracle=COHORT_ORACLE)
-def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention matrix: users grouped by first-activity day,
-    counted on each subsequent active day (linearized epoch-day index —
-    portable integer arithmetic on both engines; swap the truncation
-    expression for weekly/monthly cohorts on longer horizons).
-
-    Scale: no events self-join and no separate distinct pass — ONE
-    user_id shuffle builds each user's active-day set (collect_set
-    dedups map-side; its size is bounded by the calendar horizon, not
-    the event count), the cohort day is array_min of that set, and the
-    exploded (cohort, days_since) pairs aggregate into the
-    cohort-matrix-sized output."""
-    ev = Catalog(spark, sf_dir).events
-    ad = F.datediff(F.to_date("ts"), F.lit("1970-01-01").cast("date")).alias("ad")
-    per_user = (
-        ev.select("user_id", ad)
-        .groupBy("user_id")
-        .agg(F.collect_set("ad").alias("days"))
-        .select(F.array_min("days").alias("cd"), F.explode("days").alias("ad"))
-    )
-    return per_user.groupBy(
-        F.col("cd").alias("cohort_day_index"),
-        (F.col("ad") - F.col("cd")).alias("days_since"),
-    ).agg(F.count(F.lit(1)).alias("n_users"))
-
-
-# --------------------------------------------------------------------------
-# CUBE: nation × order-year with ALL subtotal combinations
-# --------------------------------------------------------------------------
-
-SALES_CUBE_ORACLE = """
-SELECT n_name, order_year,
-       CAST(GROUPING(n_name) * 2 + GROUPING(order_year) AS INTEGER) AS lvl,
-       COUNT(*) AS order_count,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS price_sum
-FROM (SELECT n.n_name, CAST(EXTRACT(year FROM o.o_orderdate) AS INT) AS order_year,
-             o.o_totalprice
-      FROM orders o
-      JOIN customer c ON c.c_custkey = o.o_custkey
-      JOIN nation n ON n.n_nationkey = c.c_nationkey) t
-GROUP BY CUBE (n_name, order_year)
-"""
-
-
-@query("sales_cube", oracle=SALES_CUBE_ORACLE)
-def sales_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE (nation, order_year): every subtotal combination — detail,
-    per-nation, per-year, grand total — in one pass, completing the
-    multidimensional-agg family next to ``events_rollup`` (ROLLUP) and
-    ``events_pivot`` (PIVOT). The grouping level is computed from
-    individual GROUPING flags (engine GROUPING_ID bit orders differ).
-
-    Scale: Spark plans cube as one Expand (4 grouping sets) over rows
-    already reduced by the joins' projection — the dims join broadcast
-    (nation, customer), and partial aggregation below the exchange
-    means the shuffle carries 4× the small group domain, not 4× the
-    orders table.
-    """
-    cat = Catalog(spark, sf_dir)
-    t = (
-        cat.orders.join(
-            F.broadcast(cat.customer.select("c_custkey", "c_nationkey")),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .join(
-            F.broadcast(cat.nation.select("n_nationkey", "n_name")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .select(
-            "n_name",
-            F.year("o_orderdate").cast("int").alias("order_year"),
-            "o_totalprice",
-        )
-    )
-    return (
-        t.cube("n_name", "order_year")
-        .agg(
-            (F.grouping("n_name") * 2 + F.grouping("order_year"))
-            .cast("int")
-            .alias("lvl"),
-            F.count(F.lit(1)).alias("order_count"),
-            F.sum(dec("o_totalprice")).cast("double").alias("price_sum"),
-        )
-        .select("n_name", "order_year", "lvl", "order_count", "price_sum")
-    )
-
-
 # --------------------------------------------------------------------------
 # calendar-spine densification: explicit gap rows for time-series work
 # --------------------------------------------------------------------------
@@ -430,7 +206,7 @@ def user_activity_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: ONE user_id shuffle builds each user's active-day set
     (collect_set dedups map-side; its size is bounded by the calendar
-    horizon, not the event count — the cohort_retention contract), and
+    horizon, not the event count), and
     the spine is a per-user sequence explode whose output is
     users × horizon rows; no join back to events, no events×days
     cross product. At an unbounded horizon, window the spine per
@@ -610,49 +386,6 @@ def session_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# UNPIVOT: wide metric matrix back to long (metric, value) rows
-# --------------------------------------------------------------------------
-
-EVENTS_UNPIVOT_ORACLE = """
-WITH wide AS (
-  SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-         COUNT(CASE WHEN event_type = 'click'    THEN 1 END) AS click,
-         COUNT(CASE WHEN event_type = 'error'    THEN 1 END) AS error,
-         COUNT(CASE WHEN event_type = 'purchase' THEN 1 END) AS purchase,
-         COUNT(CASE WHEN event_type = 'signup'   THEN 1 END) AS signup,
-         COUNT(CASE WHEN event_type = 'view'     THEN 1 END) AS view
-  FROM events GROUP BY 1
-)
-SELECT day, metric, CAST(n AS BIGINT) AS n
-FROM wide
-UNPIVOT (n FOR metric IN (click, error, purchase, signup, view))
-"""
-
-
-@query("events_unpivot", oracle=EVENTS_UNPIVOT_ORACLE)
-def events_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNPIVOT/melt — the inverse reshape of `events_pivot`: the wide
-    per-day metric matrix back to long (day, metric, n) rows, the form
-    a generic metrics store or alerting rule consumes. Completes the
-    reshape family (pivot ⇄ unpivot, rollup, cube).
-
-    Scale: `stack()` lowers to a row-local Expand (5 output rows per
-    input row, no shuffle of its own); the only exchange is the
-    upstream day aggregate. UNPIVOT semantics note: SQL UNPIVOT drops
-    NULL cells — these never arise here (COUNT is 0, not NULL), and
-    the pivot side coalesces to 0 under the same contract.
-    """
-    wide = events_pivot(spark, sf_dir)
-    stack_args = ", ".join(f"'{t}', {t}" for t in EVENT_TYPES)
-    return wide.select(
-        "day",
-        F.expr(
-            f"stack({len(EVENT_TYPES)}, {stack_args})"
-        ).alias("metric", "n"),
-    )
-
-
-# --------------------------------------------------------------------------
 # multi-touch attribution: time-decay credit over a look-back band
 # --------------------------------------------------------------------------
 
@@ -783,114 +516,6 @@ def multitouch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# funnel latency: time-to-convert quantiles per funnel step
-# --------------------------------------------------------------------------
-
-FUNNEL_LATENCY_ORACLE = """
-WITH s1 AS (
-  SELECT user_id, ts, event_type,
-         MIN(CASE WHEN event_type = 'view' THEN ts END)
-           OVER (PARTITION BY user_id) AS t1
-  FROM events
-),
-s2 AS (
-  SELECT user_id, ts, event_type, t1,
-         MIN(CASE WHEN event_type = 'click' AND ts > t1 THEN ts END)
-           OVER (PARTITION BY user_id) AS t2
-  FROM s1
-),
-s3 AS (
-  SELECT user_id, t1, t2,
-         MIN(CASE WHEN event_type = 'purchase' AND ts > t2 THEN ts END)
-           OVER (PARTITION BY user_id) AS t3
-  FROM s2
-),
-u AS (
-  SELECT user_id, MAX(t1) AS t1, MAX(t2) AS t2, MAX(t3) AS t3
-  FROM s3 GROUP BY user_id
-),
-lat AS (
-  SELECT 'view_to_click' AS step,
-         (epoch_us(t2) - epoch_us(t1)) // 1000 AS ms
-  FROM u WHERE t2 IS NOT NULL
-  UNION ALL
-  SELECT 'click_to_purchase',
-         (epoch_us(t3) - epoch_us(t2)) // 1000
-  FROM u WHERE t3 IS NOT NULL
-)
-SELECT step, COUNT(*) AS n,
-       ROUND(quantile_cont(CAST(ms AS DOUBLE), 0.5), 6) AS p50_ms,
-       ROUND(quantile_cont(CAST(ms AS DOUBLE), 0.95), 6) AS p95_ms
-FROM lat GROUP BY step
-"""
-
-
-@query("funnel_time_to_convert", oracle=FUNNEL_LATENCY_ORACLE)
-def funnel_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-to-convert distribution per funnel step: for users who
-    progressed view→click→purchase (same strictly-ordered semantics as
-    `event_funnel`), the median and p95 latency of each transition —
-    the product metric behind "how long does conversion take".
-
-    Exactness: latencies are integer milliseconds from epoch-micros
-    arithmetic (`div 1000`, never double `/`); `percentile` ≡ DuckDB
-    `quantile_cont` with 6-dp rounding (the hourly-percentile-band
-    contract). Per-step groups hold one row per CONVERTING user.
-
-    Scale: the three conditional-min windows share one user_id
-    shuffle (the funnel plan); the latency relation is converter-
-    sized; exact per-group percentiles sort within two groups — for
-    unbounded converter counts the GK sketch family
-    (`sketch_price_quantiles`) is the documented scale path.
-    """
-    from pyspark.sql import Window as W
-
-    ev = Catalog(spark, sf_dir).events
-    w = W.partitionBy("user_id")
-    ts, typ = F.col("ts"), F.col("event_type")
-    staged = (
-        ev.select("user_id", "ts", "event_type")
-        .withColumn("t1", F.min(F.when(typ == "view", ts)).over(w))
-        .withColumn(
-            "t2",
-            F.min(F.when((typ == "click") & (ts > F.col("t1")), ts)).over(w),
-        )
-        .withColumn(
-            "t3",
-            F.min(
-                F.when((typ == "purchase") & (ts > F.col("t2")), ts)
-            ).over(w),
-        )
-    )
-    per_user = staged.groupBy("user_id").agg(
-        F.max("t1").alias("t1"),
-        F.max("t2").alias("t2"),
-        F.max("t3").alias("t3"),
-    )
-    vc = per_user.where(F.col("t2").isNotNull()).select(
-        F.lit("view_to_click").alias("step"),
-        F.expr("(unix_micros(t2) - unix_micros(t1)) div 1000").alias("ms"),
-    )
-    cp = per_user.where(F.col("t3").isNotNull()).select(
-        F.lit("click_to_purchase").alias("step"),
-        F.expr("(unix_micros(t3) - unix_micros(t2)) div 1000").alias("ms"),
-    )
-    return (
-        vc.unionByName(cp)
-        .groupBy("step")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.expr("percentile(CAST(ms AS DOUBLE), 0.5)"), 6).alias(
-                "p50_ms"
-            ),
-            F.round(F.expr("percentile(CAST(ms AS DOUBLE), 0.95)"), 6).alias(
-                "p95_ms"
-            ),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
 # trailing-window distinct: 7-day rolling active users per calendar day
 # --------------------------------------------------------------------------
 
@@ -959,130 +584,6 @@ def rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.explode(F.sequence("mn", "mx")).alias("win_di"))
     return spine.join(counts, "win_di", "left").select(
         "win_di", F.coalesce("au", F.lit(0)).alias("active_users_7d")
-    )
-
-
-# --------------------------------------------------------------------------
-# resample + gap-fill: hourly series densified by linear interpolation
-# --------------------------------------------------------------------------
-
-INTERPOLATE_ORACLE = """
-WITH hourly AS (
-  SELECT event_type, epoch_us(ts) // 3600000000 AS h,
-         CAST(COUNT(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-),
-b AS (
-  SELECT event_type, MIN(h) AS mn, MAX(h) AS mx
-  FROM hourly GROUP BY event_type
-),
-spine AS (
-  SELECT b.event_type, g.h FROM b, UNNEST(generate_series(mn, mx)) AS g(h)
-),
-j AS (
-  SELECT s.event_type, s.h, hourly.c
-  FROM spine s LEFT JOIN hourly
-    ON hourly.event_type = s.event_type AND hourly.h = s.h
-),
-w AS (
-  SELECT event_type, h, c,
-         LAST_VALUE(c IGNORE NULLS) OVER (
-           PARTITION BY event_type ORDER BY h
-           ROWS UNBOUNDED PRECEDING) AS yp,
-         LAST_VALUE(CASE WHEN c IS NOT NULL THEN h END IGNORE NULLS) OVER (
-           PARTITION BY event_type ORDER BY h
-           ROWS UNBOUNDED PRECEDING) AS hp,
-         FIRST_VALUE(c IGNORE NULLS) OVER (
-           PARTITION BY event_type ORDER BY h
-           ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS yn,
-         FIRST_VALUE(CASE WHEN c IS NOT NULL THEN h END IGNORE NULLS) OVER (
-           PARTITION BY event_type ORDER BY h
-           ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS hn
-  FROM j
-)
-SELECT event_type, h,
-       CASE WHEN c IS NOT NULL THEN CAST(c AS DOUBLE)
-            ELSE ROUND(CAST(yp * (hn - h) + yn * (h - hp) AS DOUBLE)
-                       / CAST(hn - hp AS DOUBLE), 6)
-       END AS filled,
-       c IS NOT NULL AS observed
-FROM w
-"""
-
-
-@query("hourly_value_interpolate", oracle=INTERPOLATE_ORACLE)
-def hourly_value_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-series resample + gap-fill: per-type hourly event volume
-    densified to every hour between the type's first and last active
-    hour, silent hours filled by LINEAR INTERPOLATION between the
-    nearest observed neighbors — the resample-then-interpolate
-    primitive (pandas ``resample().interpolate()``) feeding anomaly
-    detectors and forecasting features, where aggregating raw events
-    silently skips the gaps that matter.
-
-    Exactness: observed hours emit the exact count; interpolated hours
-    compute (y_prev·(h_next−h) + y_next·(h−h_prev)) / (h_next−h_prev)
-    — integer numerator/denominator, ONE double division, ROUND 6 —
-    identical on both engines. Spine endpoints are observed hours by
-    construction, so prev/next always exist on gap rows.
-
-    Scale: the events scan collapses to (type, hour) counts first
-    (map-side combined); the spine explode and the four ignore-nulls
-    running picks all run on the HOUR DOMAIN per type — window input
-    is horizon-sized, never event-sized; carry-forward/backward needs
-    one frame pass each direction.
-    """
-    ev = Catalog(spark, sf_dir).events
-    hourly = (
-        ev.select(
-            "event_type",
-            F.expr("unix_micros(ts) div 3600000000").alias("h"),
-        )
-        .groupBy("event_type", "h")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    b = hourly.groupBy("event_type").agg(
-        F.min("h").alias("mn"), F.max("h").alias("mx")
-    )
-    spine = b.select(
-        "event_type", F.explode(F.sequence("mn", "mx")).alias("h")
-    )
-    j = spine.join(hourly, ["event_type", "h"], "left")
-    w_prev = (
-        Window.partitionBy("event_type")
-        .orderBy("h")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_next = (
-        Window.partitionBy("event_type")
-        .orderBy("h")
-        .rowsBetween(0, Window.unboundedFollowing)
-    )
-    obs_h = F.when(F.col("c").isNotNull(), F.col("h"))
-    w = j.select(
-        "event_type",
-        "h",
-        "c",
-        F.last("c", ignorenulls=True).over(w_prev).alias("yp"),
-        F.last(obs_h, ignorenulls=True).over(w_prev).alias("hp"),
-        F.first("c", ignorenulls=True).over(w_next).alias("yn"),
-        F.first(obs_h, ignorenulls=True).over(w_next).alias("hn"),
-    )
-    interp = F.round(
-        (
-            F.col("yp") * (F.col("hn") - F.col("h"))
-            + F.col("yn") * (F.col("h") - F.col("hp"))
-        ).cast("double")
-        / (F.col("hn") - F.col("hp")).cast("double"),
-        6,
-    )
-    return w.select(
-        "event_type",
-        "h",
-        F.when(F.col("c").isNotNull(), F.col("c").cast("double"))
-        .otherwise(interp)
-        .alias("filled"),
-        F.col("c").isNotNull().alias("observed"),
     )
 
 

@@ -9,29 +9,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..operators.text import (
-    fingerprints,
-    language_scores,
-    quality_scores,
-    token_counts,
-)
+from ..operators.text import quality_scores
 from ..sources.catalog import Catalog
 from .registry import query
-
-TOKEN_COUNT_ORACLE = r"""
-SELECT doc_id,
-  CASE WHEN length(trim(text)) = 0 THEN 0
-       ELSE len(string_split_regex(trim(text), '\s+')) END AS ws_tokens,
-  len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS regex_tokens
-FROM documents
-"""
-
-
-@query("text_token_count", oracle=TOKEN_COUNT_ORACLE)
-def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whitespace + BPE-ish regex token counts (pure codegen, no UDF)."""
-    docs = Catalog(spark, sf_dir).documents
-    return token_counts(docs, text_col="text", id_col="doc_id")
 
 
 QUALITY_ORACLE = r"""
@@ -64,81 +44,6 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic document-quality features + composite score."""
     docs = Catalog(spark, sf_dir).documents
     return quality_scores(docs, text_col="text", id_col="doc_id")
-
-
-FINGERPRINT_ORACLE = """
-SELECT doc_id,
-  md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g'))) AS fingerprint
-FROM documents
-"""
-
-
-@query("doc_fingerprint", oracle=FINGERPRINT_ORACLE)
-def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Normalization fingerprint (md5 of canonicalized text)."""
-    docs = Catalog(spark, sf_dir).documents
-    return fingerprints(docs, text_col="text", id_col="doc_id")
-
-
-LANG_ID_ORACLE = r"""
-WITH scored AS (
-  SELECT doc_id,
-    len(regexp_extract_all(lower(text), '\b(der|die|das|und|ist|ein)\b')) AS score_de,
-    len(regexp_extract_all(lower(text), '\b(the|and|of|is|in|to)\b')) AS score_en,
-    len(regexp_extract_all(lower(text), '\b(el|la|de|que|y|en)\b')) AS score_es,
-    len(regexp_extract_all(lower(text), '\b(le|la|les|de|et|est)\b')) AS score_fr
-  FROM documents
-)
-SELECT doc_id, score_de, score_en, score_es, score_fr,
-  CASE WHEN greatest(score_de, score_en, score_es, score_fr) = 0 THEN 'und'
-       WHEN score_de = greatest(score_de, score_en, score_es, score_fr) THEN 'de'
-       WHEN score_en = greatest(score_de, score_en, score_es, score_fr) THEN 'en'
-       WHEN score_es = greatest(score_de, score_en, score_es, score_fr) THEN 'es'
-       ELSE 'fr' END AS predicted_lang
-FROM scored
-"""
-
-
-@query("text_language_id", oracle=LANG_ID_ORACLE)
-def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Marker-stopword language identification with deterministic argmax."""
-    docs = Catalog(spark, sf_dir).documents
-    return language_scores(docs, text_col="text", id_col="doc_id")
-
-
-SAMPLE_DOCUMENTS_ORACLE = """
-SELECT lang,
-       COUNT(*) AS sampled_docs,
-       CAST(SUM(n_chars) AS BIGINT) AS sampled_chars
-FROM documents
-WHERE md5(CAST(doc_id AS VARCHAR)) < '28'
-GROUP BY lang
-"""
-
-
-@query("sample_documents", oracle=SAMPLE_DOCUMENTS_ORACLE)
-def sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reproducible ~15.6% corpus sample (md5(doc_id) < '28') with
-    per-language counts — the deterministic-sampling primitive every
-    training-data pipeline needs for eval splits and ablations.
-
-    Membership is a pure function of doc_id: stable under repartitioning,
-    re-runs, and corpus growth (rows never migrate in/out of the sample
-    as OTHER rows change — unlike ``df.sample``, whose per-partition
-    seeding reshuffles membership with the file layout). Oracle-checkable
-    because md5 hex strings compare identically in both engines.
-    """
-    from ..operators.sampling import hash_sample
-
-    docs = Catalog(spark, sf_dir).documents
-    return (
-        hash_sample(docs, "doc_id", "28")
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("sampled_docs"),
-            F.sum("n_chars").alias("sampled_chars"),
-        )
-    )
 
 
 SOURCE_ROLLUP_ORACLE = r"""
@@ -199,71 +104,6 @@ def source_quality_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("quality_score"), 6).alias("avg_quality"),
             F.round(F.avg(F.col("n_tokens").cast("double")), 6).alias("avg_tokens"),
         )
-    )
-
-
-# --------------------------------------------------------------------------
-# bloom-filtered point lookup as a graded end-to-end query
-# --------------------------------------------------------------------------
-
-# present at every test SF (doc_id 0..49 exist even at sf0.001) plus two
-# absent ids — bloom filters may only ever ADD row-group reads (false
-# positives), never drop rows, so the absent probes must return nothing
-# on both engines.
-POINT_LOOKUP_IDS = (0, 1, 7, 13, 21, 34, 42, 49, 987654321, 123456789)
-
-POINT_LOOKUP_ORACLE = f"""
-SELECT doc_id, source, length(text) AS n_chars
-FROM documents
-WHERE doc_id IN {POINT_LOOKUP_IDS}
-"""
-
-
-def _bloom_store_path(sf_dir: str) -> str:
-    """Per-(user, process, sf_dir) temp location with dead-sibling
-    sweeping — see queries/storepaths.py for the isolation + GC
-    contract (never writes inside the read-only testdata tree)."""
-    from .storepaths import process_scoped_store_path
-
-    return process_scoped_store_path("bloom_store", sf_dir)
-
-
-@query("doc_point_lookup", oracle=POINT_LOOKUP_ORACLE)
-def doc_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Point lookup through the bloom-filtered corpus store as a graded
-    end-to-end query: build `sources/lake.py write_bloom_store` from the
-    documents table (kept in its natural source-cluster order, per-row-
-    group bloom filters on doc_id, small row groups so even graded SFs
-    produce several), then fetch a fixed id set with `point_lookup` —
-    the pushed `IN` predicate reaches parquet-mr's stats→dictionary→
-    bloom row-group filter. Two probe ids are absent by construction:
-    bloom false positives may only ADD reads, never drop or invent
-    rows, so the result must equal a plain relational IN scan — which
-    is exactly what the DuckDB oracle runs.
-
-    Scale: the store build is one scan + clustered write (amortized
-    over every subsequent lookup in production; rebuilt per call here
-    so the graded query covers the whole build+probe cycle); the probe
-    reads ~(matching + fpp·total) row groups of a corpus whose id
-    column min/max stats cannot prune at all.
-    """
-    from ..sources.lake import point_lookup, write_bloom_store
-
-    docs = Catalog(spark, sf_dir).documents.select(
-        "doc_id", "source", F.length("text").alias("n_chars"), "text"
-    )
-    store = _bloom_store_path(sf_dir)
-    write_bloom_store(
-        docs.drop("text"),
-        store,
-        key="doc_id",
-        ndv=200_000,
-        cluster_col="source",
-        num_files=2,
-        row_group_bytes=16 * 1024,
-    )
-    return point_lookup(spark, store, "doc_id", list(POINT_LOOKUP_IDS)).select(
-        "doc_id", "source", "n_chars"
     )
 
 
@@ -733,148 +573,6 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------------------------------------
-# per-language adaptive quality gate: threshold = in-language median
-# --------------------------------------------------------------------------
-
-_QUALITY_EXPR = r"""
-  ROUND(
-    0.4 * (CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
-           / CAST(length(text) AS DOUBLE))
-  + 0.3 * (CAST(len(regexp_extract_all(lower(text), '\b(the|a|an|and|or|of|to|in|is|it)\b')) AS DOUBLE)
-           / CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-                       ELSE len(string_split_regex(trim(text), '\s+')) END AS DOUBLE))
-  + 0.3 * least(CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-                          ELSE len(string_split_regex(trim(text), '\s+')) END AS DOUBLE) / 64.0, 1.0)
-  , 6)
-"""
-
-QUALITY_GATE_BY_LANG_ORACLE = rf"""
-WITH q AS (
-  SELECT doc_id, {_QUALITY_EXPR} AS quality_score FROM documents
-),
-ls AS (
-  SELECT doc_id,
-    len(regexp_extract_all(lower(text), '\b(der|die|das|und|ist|ein)\b')) AS score_de,
-    len(regexp_extract_all(lower(text), '\b(the|and|of|is|in|to)\b')) AS score_en,
-    len(regexp_extract_all(lower(text), '\b(el|la|de|que|y|en)\b')) AS score_es,
-    len(regexp_extract_all(lower(text), '\b(le|la|les|de|et|est)\b')) AS score_fr
-  FROM documents
-),
-l AS (
-  SELECT doc_id,
-    CASE WHEN greatest(score_de, score_en, score_es, score_fr) = 0 THEN 'und'
-         WHEN score_de = greatest(score_de, score_en, score_es, score_fr) THEN 'de'
-         WHEN score_en = greatest(score_de, score_en, score_es, score_fr) THEN 'en'
-         WHEN score_es = greatest(score_de, score_en, score_es, score_fr) THEN 'es'
-         ELSE 'fr' END AS predicted_lang
-  FROM ls
-),
-j AS (
-  SELECT q.doc_id, q.quality_score, l.predicted_lang
-  FROM q JOIN l USING (doc_id)
-),
-t AS (
-  SELECT predicted_lang,
-         ROUND(quantile_cont(quality_score, 0.5), 6) AS threshold
-  FROM j GROUP BY predicted_lang
-)
-SELECT j.predicted_lang, t.threshold,
-       COUNT(*) AS n_docs,
-       CAST(SUM(CASE WHEN j.quality_score >= t.threshold THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_kept
-FROM j JOIN t USING (predicted_lang)
-GROUP BY j.predicted_lang, t.threshold
-"""
-
-
-@query("quality_gate_by_lang", oracle=QUALITY_GATE_BY_LANG_ORACLE)
-def quality_gate_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language ADAPTIVE quality gate: the keep threshold is each
-    language's own in-corpus quality median (exact interpolated
-    percentile, Spark ``percentile`` ≡ DuckDB ``quantile_cont``, 6-dp
-    rounded on both sides so the kept-set compare is engine-identical)
-    — the curation rule that fixes what a single global cutoff gets
-    wrong on multilingual corpora, where score distributions shift per
-    language. Output: (predicted_lang, threshold, n_docs, n_kept).
-
-    Scale: two scans of documents (quality features; language argmax)
-    joined on 8-byte doc ids; the per-language thresholds are a
-    languages-sized aggregate broadcast back — no global sort, the
-    exact percentile shuffles (lang, score) pairs only.
-    """
-    from ..operators.text import language_scores, quality_scores
-
-    docs = Catalog(spark, sf_dir).documents
-    q = quality_scores(docs, text_col="text", id_col="doc_id").select(
-        "doc_id", "quality_score"
-    )
-    lang = language_scores(docs, text_col="text", id_col="doc_id").select(
-        "doc_id", "predicted_lang"
-    )
-    j = q.join(lang, "doc_id")
-    t = j.groupBy("predicted_lang").agg(
-        F.round(F.expr("percentile(quality_score, 0.5)"), 6).alias("threshold")
-    )
-    return (
-        j.join(F.broadcast(t), "predicted_lang")
-        .groupBy("predicted_lang", "threshold")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(
-                (F.col("quality_score") >= F.col("threshold")).cast("long")
-            ).alias("n_kept"),
-        )
-    )
-
-
-# doc-length histogram bounds: fixed literals so the oracle is one
-# static string at every SF (n_chars spans ~44-577 in the synthetic
-# corpus; the clamp makes out-of-range lengths land in the edge bins
-# rather than vanish)
-LEN_HIST_LO = 0
-LEN_HIST_HI = 640
-LEN_HIST_BINS = 16
-_LEN_W = (LEN_HIST_HI - LEN_HIST_LO) // LEN_HIST_BINS
-
-DOC_LENGTH_HISTOGRAM_ORACLE = f"""
-WITH counts AS (
-  SELECT (GREATEST({LEN_HIST_LO}, LEAST({LEN_HIST_HI - 1}, n_chars))
-          - {LEN_HIST_LO}) // {_LEN_W} AS bin_id,
-         COUNT(*) AS cnt
-  FROM documents GROUP BY 1
-)
-SELECT g.bin_id,
-       {LEN_HIST_LO} + g.bin_id * {_LEN_W} AS bin_lo,
-       {LEN_HIST_LO} + (g.bin_id + 1) * {_LEN_W} AS bin_hi,
-       COALESCE(c.cnt, CAST(0 AS BIGINT)) AS cnt
-FROM range({LEN_HIST_BINS}) g(bin_id)
-LEFT JOIN counts c USING (bin_id)
-"""
-
-
-@query("doc_length_histogram", oracle=DOC_LENGTH_HISTOGRAM_ORACLE)
-def doc_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-width document-length distribution — the corpus-profiling
-    dashboard primitive (always exactly ``LEN_HIST_BINS`` rows, empty
-    bins at zero, out-of-range lengths clamped into the edge bins).
-
-    Exactness: the clamp precedes the division, so the bin id is an
-    integer ``DIV`` on non-negative BIGINTs — identical in Spark and
-    DuckDB, no doubles anywhere in the plan.
-
-    Scale: map-side partials collapse every task to ≤ 16 rows before
-    the shuffle (O(tasks × bins) network, independent of corpus size);
-    the grid join is bins-sized. Flat at 100 TB.
-    """
-    from ..operators.relational import fixed_width_histogram
-
-    docs = Catalog(spark, sf_dir).documents
-    return fixed_width_histogram(
-        docs, "n_chars", lo=LEN_HIST_LO, hi=LEN_HIST_HI, bins=LEN_HIST_BINS
-    )
-
-
 DECILE_BINS = 10
 _DECILE_FRACS = ", ".join(str(i / DECILE_BINS) for i in range(1, DECILE_BINS))
 _DECILE_CASE = " ".join(
@@ -900,11 +598,10 @@ FROM range({DECILE_BINS}) g(bin_id) LEFT JOIN c USING (bin_id)
 @query("doc_length_deciles", oracle=DOC_LENGTH_DECILES_ORACLE)
 def doc_length_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-depth document-length distribution — quantile binning, the
-    skew-robust companion to `doc_length_histogram` (each bin ~N/10
-    docs regardless of how the length distribution stretches). Edges
+    skew-robust form of a length histogram (each bin ~N/10 docs
+    regardless of how the length distribution stretches). Edges
     are exact interpolated percentiles rounded to 6 dp on BOTH engines
-    before any comparison (``percentile`` ≡ ``quantile_cont``, the
-    contract `price_percentiles` pins).
+    before any comparison (``percentile`` ≡ ``quantile_cont``).
 
     Scale: one exact-percentile aggregate (1-row relation broadcast
     back — never driver literals), scan-side CASE, map-side-collapsed
@@ -995,75 +692,6 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         s.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= TFIDF_TOP_K)
         .drop("rk")
-    )
-
-
-# --------------------------------------------------------------------------
-# vocabulary fuzzy pairs — edit-distance-1 typo candidates
-# --------------------------------------------------------------------------
-
-FUZZY_PAIRS_ORACLE = """
-WITH toks AS (
-  SELECT doc_id, t.tok
-  FROM (SELECT doc_id,
-               regexp_split_to_array(lower(trim(text)), '[^a-z0-9]+') AS arr
-        FROM documents),
-       UNNEST(arr) AS t(tok)
-  WHERE t.tok <> ''
-),
-v AS (
-  SELECT tok AS term, COUNT(DISTINCT doc_id) AS df
-  FROM toks WHERE length(tok) >= 3 GROUP BY 1
-)
-SELECT a.term AS term_a, b.term AS term_b, a.df AS df_a, b.df AS df_b
-FROM v a JOIN v b
-  ON a.term < b.term AND levenshtein(a.term, b.term) <= 2
-"""
-
-
-@query("vocab_fuzzy_pairs", oracle=FUZZY_PAIRS_ORACLE)
-def vocab_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary terms within edit distance 2 of each other, with each
-    side's document frequency — the typo-merge candidate list a corpus
-    normalization pass reviews (fold the rare spelling into the common
-    one before frequency-based filtering).
-
-    Scale: the oracle is the naive O(|V|²) levenshtein self-join — fine
-    for DuckDB at test vocabulary size, quadratic poison on a real
-    corpus vocabulary. The engine path (``operators/text.py``
-    ``fuzzy_term_pairs``) blocks by FastSS 2-deletion neighborhoods
-    (complete for distance ≤ 2, vocabulary-sized explode, explicit
-    levenshtein verify for soundness), enumerates only within-bucket
-    pairs, and carries the standard pair-budget pre-flight on the
-    variant buckets.
-    """
-    from ..operators.text import fuzzy_term_pairs
-
-    docs = Catalog(spark, sf_dir).documents
-    toks = docs.select(
-        "doc_id",
-        F.explode(
-            F.split(F.lower(F.trim(F.col("text"))), "[^a-z0-9]+")
-        ).alias("term"),
-    ).where(F.col("term") != "")
-    vocab = (
-        toks.where(F.length("term") >= 3)
-        .groupBy("term")
-        .agg(F.countDistinct("doc_id").alias("df"))
-    )
-    pairs = fuzzy_term_pairs(
-        vocab.select("term"),
-        min_len=3,
-        max_dist=2,
-        pair_budget=5_000_000,
-        scale_path="raise pair_budget, or add a length-band prefilter"
-        " before fuzzy_term_pairs (lev<=1 pairs differ by at most one"
-        " character)",
-    )
-    a = vocab.select(F.col("term").alias("term_a"), F.col("df").alias("df_a"))
-    b = vocab.select(F.col("term").alias("term_b"), F.col("df").alias("df_b"))
-    return pairs.join(a, "term_a").join(b, "term_b").select(
-        "term_a", "term_b", "df_a", "df_b"
     )
 
 
@@ -1180,156 +808,6 @@ def html_extract_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("__ex.n_links").alias("n_links"),
         F.length("__ex.text").cast("long").alias("extracted_len"),
         F.md5(F.col("__ex.text").cast("binary")).alias("extracted_md5"),
-    )
-
-
-# --------------------------------------------------------------------------
-# PMI collocations — corpus-level "which words co-occur more than
-# chance" keyword-pair extraction (the classic collocation statistic,
-# Church & Hanks 1990): PMI = log2(P(ab) / (P(a)P(b))) over adjacent
-# bigrams. All inputs are exact integer counts; PMI is ONE fixed-order
-# double expression ROUND 6 per surviving bigram (the corr/lift
-# convention), and the board orders on the rounded value with a
-# lexicographic tie-break.
-# --------------------------------------------------------------------------
-
-PMI_MIN_COUNT = 5
-PMI_TOP_K = 20
-
-BIGRAM_PMI_ORACLE = f"""
-WITH words AS MATERIALIZED (
-  SELECT string_split(lower(trim(text)), ' ') AS w FROM documents
-),
-toks AS MATERIALIZED (
-  SELECT unnest(w) AS tok FROM words
-),
-uni AS MATERIALIZED (SELECT tok, COUNT(*) AS c FROM toks GROUP BY 1),
-bg AS MATERIALIZED (
-  SELECT w[CAST(t.i AS INT)] AS w1, w[CAST(t.i AS INT) + 1] AS w2
-  FROM words, UNNEST(range(1, len(w))) AS t(i)
-),
-bgc AS MATERIALIZED (
-  SELECT w1, w2, COUNT(*) AS n_ab FROM bg GROUP BY 1, 2
-),
-tot AS (SELECT (SELECT COUNT(*) FROM toks) AS n_tok,
-               (SELECT COUNT(*) FROM bg) AS n_bg)
-SELECT b.w1, b.w2, CAST(b.n_ab AS BIGINT) AS n_ab,
-       CAST(u1.c AS BIGINT) AS n_w1, CAST(u2.c AS BIGINT) AS n_w2,
-       ROUND(log2((CAST(b.n_ab AS DOUBLE) / CAST(t.n_bg AS DOUBLE))
-             / ((CAST(u1.c AS DOUBLE) / CAST(t.n_tok AS DOUBLE))
-                * (CAST(u2.c AS DOUBLE) / CAST(t.n_tok AS DOUBLE)))), 6)
-         AS pmi
-FROM bgc b
-JOIN uni u1 ON u1.tok = b.w1
-JOIN uni u2 ON u2.tok = b.w2
-CROSS JOIN tot t
-WHERE b.n_ab >= {PMI_MIN_COUNT}
-ORDER BY pmi DESC, w1, w2
-LIMIT {PMI_TOP_K}
-"""
-
-
-@query("bigram_pmi_top", oracle=BIGRAM_PMI_ORACLE)
-def bigram_pmi_top(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-k collocations by pointwise mutual information with a
-    minimum bigram count — the phrase-mining companion to
-    `tfidf_top_terms` (TF-IDF ranks terms per doc; PMI ranks PAIRS
-    corpus-wide).
-
-    Scale: two map-side-combined counts (unigrams, adjacent bigrams);
-    the unigram relation is vocabulary-sized and broadcast to the
-    bigram counts; the two corpus totals are control-plane scalars
-    (the bigram-LM convention); top-k lowers to TakeOrderedAndProject.
-    """
-    from ..caching import scoped_persist
-
-    docs = Catalog(spark, sf_dir).documents
-    words = F.split(F.lower(F.trim(F.col("text"))), " ")
-    n = F.size(words)
-    base = scoped_persist(docs.select(words.alias("w"), n.alias("n")))
-    toks = base.select(F.explode("w").alias("tok"))
-    uni = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
-    bgs = base.where(F.col("n") >= 2).select(
-        F.explode(
-            F.zip_with(
-                F.slice("w", 1, F.col("n") - 1),
-                F.slice("w", 2, F.col("n") - 1),
-                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-            )
-        ).alias("p")
-    ).select("p.w1", "p.w2")
-    n_tok = toks.agg(F.count(F.lit(1))).first()[0]
-    n_bg = bgs.agg(F.count(F.lit(1))).first()[0]
-    bgc = (
-        bgs.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-        .where(F.col("n_ab") >= PMI_MIN_COUNT)
-    )
-    u1 = uni.select(F.col("tok").alias("w1"), F.col("c").alias("n_w1"))
-    u2 = uni.select(F.col("tok").alias("w2"), F.col("c").alias("n_w2"))
-    pmi = F.round(
-        F.log2(
-            (F.col("n_ab").cast("double") / F.lit(float(n_bg)))
-            / (
-                (F.col("n_w1").cast("double") / F.lit(float(n_tok)))
-                * (F.col("n_w2").cast("double") / F.lit(float(n_tok)))
-            )
-        ),
-        6,
-    )
-    return (
-        bgc.join(F.broadcast(u1), "w1")
-        .join(F.broadcast(u2), "w2")
-        .select(
-            "w1",
-            "w2",
-            F.col("n_ab").cast("bigint").alias("n_ab"),
-            F.col("n_w1").cast("bigint").alias("n_w1"),
-            F.col("n_w2").cast("bigint").alias("n_w2"),
-            pmi.alias("pmi"),
-        )
-        .orderBy(F.desc("pmi"), "w1", "w2")
-        .limit(PMI_TOP_K)
-    )
-
-
-VOCAB_GROWTH_ORACLE = """
-SELECT source,
-       CAST(COUNT(*) AS BIGINT) AS n_tokens,
-       CAST(COUNT(DISTINCT tok) AS BIGINT) AS n_distinct_words,
-       ROUND(CAST(COUNT(DISTINCT tok) AS DOUBLE)
-             / CAST(COUNT(*) AS DOUBLE), 6) AS vocab_token_ratio
-FROM (
-  SELECT source, unnest(string_split(trim(text), ' ')) AS tok
-  FROM documents
-) WHERE tok <> ''
-GROUP BY source
-"""
-
-
-@query("vocab_growth_by_source", oracle=VOCAB_GROWTH_ORACLE)
-def vocab_growth_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source vocabulary-vs-token counts — the Heaps'-law
-    diagnostic behind the BPE training scale contract (dictionary
-    growth sub-linear in corpus growth) and the first number to check
-    when a source's token distribution drifts.
-
-    Scale: explode + one (source, tok)-keyed distinct folded into the
-    grouped count-distinct — Spark plans it as two-level hash
-    aggregation with map-side partials; no window, no join.
-    """
-    docs = Catalog(spark, sf_dir).documents
-    toks = docs.select(
-        "source", F.explode(F.split(F.trim("text"), " ")).alias("tok")
-    ).where(F.col("tok") != "")
-    return toks.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        F.count_distinct("tok").alias("n_distinct_words"),
-        F.round(
-            F.count_distinct("tok").cast("double")
-            / F.count(F.lit(1)).cast("double"),
-            6,
-        ).alias("vocab_token_ratio"),
     )
 
 
@@ -1459,44 +937,6 @@ fps AS (
          1048575 - (s % 1048576) AS fp_pos
   FROM sel
 )"""
-
-WINNOW_STATS_ORACLE = f"""
-WITH {_WINNOW_CTES}
-SELECT d.source AS source,
-       CAST(COUNT(DISTINCT f.doc_id) AS BIGINT) AS n_docs,
-       CAST(COUNT(*) AS BIGINT) AS n_fingerprints,
-       CAST(COUNT(DISTINCT f.fp_hash) AS BIGINT) AS n_distinct_hashes
-FROM fps f JOIN documents d ON d.doc_id = f.doc_id
-GROUP BY 1
-"""
-
-
-@query("doc_winnow_stats", oracle=WINNOW_STATS_ORACLE)
-def doc_winnow_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source winnowing fingerprint census — the density/coverage
-    observability for the MOSS-style fingerprint layer (a source whose
-    fingerprint density collapses is boilerplate-heavy; one whose
-    distinct-hash ratio collapses is self-copying).
-
-    Scale: gram explode is scan-side; the winnowing window partitions
-    by doc (never global); selection DISTINCT and the census
-    aggregates are all map-side combinable. Fingerprint volume is
-    ~2/(w+1) of gram volume by construction — the operator's entire
-    reason to exist at 100 TB.
-    """
-    from ..operators.text import winnow_fingerprints
-
-    docs = Catalog(spark, sf_dir).documents
-    fps = winnow_fingerprints(docs)
-    return (
-        fps.join(docs.select("doc_id", "source"), "doc_id")
-        .groupBy("source")
-        .agg(
-            F.countDistinct("doc_id").alias("n_docs"),
-            F.count(F.lit(1)).alias("n_fingerprints"),
-            F.countDistinct("fp_hash").alias("n_distinct_hashes"),
-        )
-    )
 
 
 WINNOW_PAIRS_DF_CAP = 50

@@ -1,26 +1,10 @@
-"""Extended TPC-H coverage (q2/q7/q8/q9/q11/q13/q15/q16/q17/q18/q19/
-q20/q21/q22), adapted to the driver testdata's reduced star schema —
-together with q1/q3/q4/q5/q6/q10/q12/q14 in relational_queries.py this
-completes all 22 TPC-H query shapes.
+"""Extended TPC-H coverage (q11/q18/q22), adapted to the testdata's
+reduced star schema; q1/q3/q5 live in relational_queries.py.
 
-Adaptations (the testdata has no partsupp table, no l_commitdate /
-l_receiptdate / l_shipmode / l_shipinstruct / p_container / p_mfgr /
-c_phone / o_comment):
+Adaptations (the testdata has no partsupp table and no c_phone):
 
-- q2 derives part–supplier pairs from lineitem with ``ps_supplycost :=
-  MIN(l_extendedprice)`` (no partsupp).
-- q9 costs from ``p_retailprice`` instead of ``ps_supplycost``.
 - q11 measures nation spend SUM(l_extendedprice) instead of
   supplycost×availqty (no partsupp).
-- q13 filters ``o_orderpriority <> '5-LOW'`` instead of the o_comment
-  NOT-LIKE filter.
-- q16 takes supplier relationships from lineitem (no partsupp) and drops
-  the complaint-supplier subquery (no s_comment).
-- q17/q19 substitute brand+size predicates for brand+container.
-- q20 compares shipped share instead of stocked availability (no
-  partsupp).
-- q21 defines late as ``l_shipdate > o_orderdate + 60 days`` (no
-  commit/receipt dates).
 - q22 derives the "country code" grouping from ``c_nationkey`` instead of
   ``substring(c_phone, 1, 2)``.
 
@@ -41,368 +25,6 @@ from ..functions.expressions import dec
 from ..operators.relational import top_k
 from ..sources.catalog import Catalog
 from .registry import query
-
-# --------------------------------------------------------------------------
-# Q7 — volume shipping between two nations, by year
-# --------------------------------------------------------------------------
-
-TPCH_Q7_ORACLE = """
-SELECT
-  sn.n_name AS supp_nation,
-  cn.n_name AS cust_nation,
-  CAST(EXTRACT(YEAR FROM l.l_shipdate) AS INTEGER) AS l_year,
-  CAST(SUM(CAST(CAST(l.l_extendedprice AS DECIMAL(18,2))
-      * (1 - CAST(l.l_discount AS DECIMAL(18,2))) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-FROM lineitem l
-JOIN orders o   ON l.l_orderkey = o.o_orderkey
-JOIN supplier s ON l.l_suppkey = s.s_suppkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation sn  ON s.s_nationkey = sn.n_nationkey
-JOIN nation cn  ON c.c_nationkey = cn.n_nationkey
-WHERE l.l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND l.l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
-  AND ((sn.n_name = 'NATION_1' AND cn.n_name = 'NATION_2')
-    OR (sn.n_name = 'NATION_2' AND cn.n_name = 'NATION_1'))
-GROUP BY 1, 2, 3
-"""
-
-
-@query("tpch_q7", oracle=TPCH_Q7_ORACLE)
-def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7: bilateral trade volume between two nations by ship year.
-
-    Scale: nation is fixed-cardinality → broadcast both sides; supplier and
-    customer carry no hint (AQE decides from runtime sizes). The nation-pair
-    disjunction is applied AFTER both nation joins as a row filter — it
-    references columns of two different broadcast dims, so it cannot be a
-    join condition of either, but it still prunes before the final agg. The
-    ship-date window pushes to the lineitem parquet scan. One big shuffle:
-    lineitem⋈orders on orderkey.
-    """
-    t = Catalog(spark, sf_dir)
-    sn = t.nation.select(
-        F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
-    )
-    cn = t.nation.select(
-        F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("cust_nation")
-    )
-    li = t.lineitem.where(
-        (F.col("l_shipdate") >= F.lit(datetime(1996, 1, 1)))
-        & (F.col("l_shipdate") < F.lit(datetime(1998, 1, 1)))
-    ).select("l_orderkey", "l_suppkey", "l_shipdate", "l_extendedprice", "l_discount")
-    revenue = (dec("l_extendedprice") * (F.lit(1) - dec("l_discount"))).cast("decimal(18,4)")
-    pair = (
-        (F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2")
-    ) | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
-    return (
-        li.join(t.orders.select("o_orderkey", "o_custkey"), F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t.supplier.select("s_suppkey", "s_nationkey"), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(t.customer.select("c_custkey", "c_nationkey"), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("sn_key"))
-        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn_key"))
-        .where(pair)
-        .groupBy(
-            "supp_nation",
-            "cust_nation",
-            F.year("l_shipdate").alias("l_year"),
-        )
-        .agg(F.sum(revenue).cast("double").alias("revenue"))
-    )
-
-
-# --------------------------------------------------------------------------
-# Q8 — national market share within a region's market
-# --------------------------------------------------------------------------
-
-TPCH_Q8_ORACLE = """
-SELECT
-  o_year,
-  ROUND(CAST(SUM(CASE WHEN supp_nation = 'NATION_5' THEN volume ELSE 0 END) AS DOUBLE)
-        / CAST(SUM(volume) AS DOUBLE), 6) AS mkt_share
-FROM (
-  SELECT
-    CAST(EXTRACT(YEAR FROM o.o_orderdate) AS INTEGER) AS o_year,
-    CAST(CAST(l.l_extendedprice AS DECIMAL(18,2))
-         * (1 - CAST(l.l_discount AS DECIMAL(18,2))) AS DECIMAL(18,4)) AS volume,
-    sn.n_name AS supp_nation
-  FROM lineitem l
-  JOIN part p     ON l.l_partkey = p.p_partkey
-  JOIN orders o   ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN nation cn  ON c.c_nationkey = cn.n_nationkey
-  JOIN region r   ON cn.n_regionkey = r.r_regionkey
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  JOIN nation sn  ON s.s_nationkey = sn.n_nationkey
-  WHERE r.r_name = 'ASIA'
-    AND p.p_type = 'ECONOMY'
-    AND o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-    AND o.o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'
-) all_nations
-GROUP BY o_year
-"""
-
-
-@query("tpch_q8", oracle=TPCH_Q8_ORACLE)
-def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8: market share of one supplier nation inside a region.
-
-    Scale: region→nation prunes the customer side to one region and
-    broadcasts (fixed cardinality); the p_type filter prunes part before its
-    join. The share is a conditional-sum / sum ratio inside one grouped agg —
-    no second pass, no self-join. Decimal sums keep the two-engine hash
-    stable; the final ratio is double ROUND(x, 6) with identical operand
-    order on both engines.
-    """
-    t = Catalog(spark, sf_dir)
-    region_nations = (
-        t.nation.join(
-            F.broadcast(t.region.where(F.col("r_name") == "ASIA")),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        ).select(F.col("n_nationkey").alias("cn_key"))
-    )
-    sn = t.nation.select(
-        F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
-    )
-    part = t.part.where(F.col("p_type") == "ECONOMY").select("p_partkey")
-    orders = t.orders.where(
-        (F.col("o_orderdate") >= F.lit(datetime(1996, 1, 1)))
-        & (F.col("o_orderdate") < F.lit(datetime(1998, 1, 1)))
-    ).select("o_orderkey", "o_custkey", "o_orderdate")
-    volume = (dec("l_extendedprice") * (F.lit(1) - dec("l_discount"))).cast("decimal(18,4)")
-    rows = (
-        t.lineitem.select("l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice", "l_discount")
-        .join(part, F.col("l_partkey") == F.col("p_partkey"))
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t.customer.select("c_custkey", "c_nationkey"), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(region_nations), F.col("c_nationkey") == F.col("cn_key"))
-        .join(t.supplier.select("s_suppkey", "s_nationkey"), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("sn_key"))
-        .select(
-            F.year("o_orderdate").alias("o_year"),
-            volume.alias("volume"),
-            "supp_nation",
-        )
-    )
-    target = F.when(F.col("supp_nation") == "NATION_5", F.col("volume")).otherwise(
-        F.lit(0).cast("decimal(18,4)")
-    )
-    return (
-        rows.groupBy("o_year")
-        .agg(
-            F.round(
-                F.sum(target).cast("double") / F.sum("volume").cast("double"), 6
-            ).alias("mkt_share")
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# Q9 — product-line profit by nation and year (cost from p_retailprice)
-# --------------------------------------------------------------------------
-
-TPCH_Q9_ORACLE = """
-SELECT
-  sn.n_name AS nation,
-  CAST(EXTRACT(YEAR FROM l.l_shipdate) AS INTEGER) AS o_year,
-  CAST(SUM(CAST(CAST(CAST(l.l_extendedprice AS DECIMAL(18,2))
-        * (1 - CAST(l.l_discount AS DECIMAL(18,2))) AS DECIMAL(18,4))
-      - CAST(CAST(p.p_retailprice AS DECIMAL(18,2))
-        * CAST(l.l_quantity AS DECIMAL(18,2)) AS DECIMAL(18,4)) AS DECIMAL(18,4))) AS DOUBLE)
-    AS sum_profit
-FROM lineitem l
-JOIN part p     ON l.l_partkey = p.p_partkey
-JOIN supplier s ON l.l_suppkey = s.s_suppkey
-JOIN nation sn  ON s.s_nationkey = sn.n_nationkey
-WHERE p.p_name LIKE '%gear%'
-GROUP BY 1, 2
-"""
-
-
-@query("tpch_q9", oracle=TPCH_Q9_ORACLE)
-def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9 (adapted): profit by supplier nation × ship year; the
-    testdata has no partsupp, so unit cost is ``p_retailprice`` (reference
-    TPC-H uses ps_supplycost — same plan shape, different cost column).
-
-    Scale: the p_name LIKE filter prunes part before its join (contains-
-    LIKE can't use row-group stats but does apply at the scan); nation
-    broadcasts; part and supplier joins are AQE-sized. No orders join —
-    profit keys off lineitem alone, so the only mandatory shuffle is the
-    final group-by.
-    """
-    t = Catalog(spark, sf_dir)
-    part = t.part.where(F.col("p_name").like("%gear%")).select("p_partkey", "p_retailprice")
-    sn = t.nation.select(F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("nation"))
-    profit = (
-        (dec("l_extendedprice") * (F.lit(1) - dec("l_discount"))).cast("decimal(18,4)")
-        - (dec("p_retailprice") * dec("l_quantity")).cast("decimal(18,4)")
-    ).cast("decimal(18,4)")
-    return (
-        t.lineitem.select(
-            "l_partkey", "l_suppkey", "l_shipdate", "l_quantity", "l_extendedprice", "l_discount"
-        )
-        .join(part, F.col("l_partkey") == F.col("p_partkey"))
-        .join(t.supplier.select("s_suppkey", "s_nationkey"), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("sn_key"))
-        .groupBy(F.col("nation"), F.year("l_shipdate").alias("o_year"))
-        .agg(F.sum(profit).cast("double").alias("sum_profit"))
-    )
-
-
-# --------------------------------------------------------------------------
-# Q13 — distribution of customers by order count
-# --------------------------------------------------------------------------
-
-TPCH_Q13_ORACLE = """
-SELECT c_count, COUNT(*) AS custdist
-FROM (
-  SELECT c.c_custkey, COUNT(o.o_orderkey) AS c_count
-  FROM customer c
-  LEFT JOIN orders o
-    ON c.c_custkey = o.o_custkey AND o.o_orderpriority <> '5-LOW'
-  GROUP BY c.c_custkey
-) c_orders
-GROUP BY c_count
-"""
-
-
-@query("tpch_q13", oracle=TPCH_Q13_ORACLE)
-def tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 (adapted): customer order-count histogram; the priority
-    filter stands in for the original o_comment NOT-LIKE (no o_comment in
-    the testdata). The filter lives in the JOIN CONDITION, not a WHERE —
-    customers with only excluded orders must still appear with count 0.
-
-    Scale: one shuffle joins customer⟕orders on custkey; the per-customer
-    count then re-aggregates by c_count (tiny domain → map-side combine
-    collapses it). COUNT(o_orderkey) — not COUNT(*) — so the null row of
-    order-less customers counts as 0.
-    """
-    t = Catalog(spark, sf_dir)
-    orders = t.orders.where(F.col("o_orderpriority") != "5-LOW").select(
-        "o_orderkey", "o_custkey"
-    )
-    per_customer = (
-        t.customer.select("c_custkey")
-        .join(orders, F.col("c_custkey") == F.col("o_custkey"), "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return per_customer.groupBy("c_count").agg(F.count(F.lit(1)).alias("custdist"))
-
-
-# --------------------------------------------------------------------------
-# Q15 — top supplier(s) by revenue in a quarter
-# --------------------------------------------------------------------------
-
-TPCH_Q15_ORACLE = """
-WITH revenue AS (
-  SELECT
-    l_suppkey AS supplier_no,
-    SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2))
-        * (1 - CAST(l_discount AS DECIMAL(18,2))) AS DECIMAL(18,4))) AS total_revenue
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-    AND l_shipdate <  TIMESTAMP '1996-04-01 00:00:00'
-  GROUP BY l_suppkey
-)
-SELECT s.s_suppkey, s.s_name, CAST(r.total_revenue AS DOUBLE) AS total_revenue
-FROM supplier s
-JOIN revenue r ON s.s_suppkey = r.supplier_no
-WHERE r.total_revenue = (SELECT MAX(total_revenue) FROM revenue)
-"""
-
-
-@query("tpch_q15", oracle=TPCH_Q15_ORACLE)
-def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15: supplier(s) achieving the max quarterly revenue.
-
-    Scale: the scalar max is a broadcast-joined GLOBAL AGGREGATE over the
-    per-supplier revenue, not a single-partition window (an
-    empty-partition-spec window funnels the whole supplier-cardinality
-    aggregate through ONE task — ~1e9 rows at SF100k). The aggregate form
-    is partial-per-partition + 1-row merge, fully distributed. Both
-    branches canonicalize to the same shuffle, so ReuseExchange computes
-    the revenue subtree ONCE (single lineitem scan); the explicit
-    ``l_suppkey IS NOT NULL`` filter exists to keep the two branches
-    canonically identical — without it the supplier join pushes
-    ``isnotnull`` into only the probe branch and reuse is lost.
-    Ties surface every max supplier, same as the spec; decimal comparison
-    is exact, so the argmax is deterministic.
-    """
-    t = Catalog(spark, sf_dir)
-    revenue_expr = (dec("l_extendedprice") * (F.lit(1) - dec("l_discount"))).cast(
-        "decimal(18,4)"
-    )
-    revenue = (
-        t.lineitem.where(
-            (F.col("l_shipdate") >= F.lit(datetime(1996, 1, 1)))
-            & (F.col("l_shipdate") < F.lit(datetime(1996, 4, 1)))
-            & F.col("l_suppkey").isNotNull()
-        )
-        .groupBy("l_suppkey")
-        .agg(F.sum(revenue_expr).alias("total_revenue"))
-    )
-    max_rev = revenue.agg(F.max("total_revenue").alias("max_revenue"))
-    return (
-        revenue.join(F.broadcast(max_rev), F.col("total_revenue") == F.col("max_revenue"))
-        .join(t.supplier, F.col("l_suppkey") == F.col("s_suppkey"))
-        .select("s_suppkey", "s_name", F.col("total_revenue").cast("double").alias("total_revenue"))
-    )
-
-
-# --------------------------------------------------------------------------
-# Q17 — small-quantity-order revenue (correlated avg subquery)
-# --------------------------------------------------------------------------
-
-TPCH_Q17_ORACLE = """
-SELECT ROUND(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0, 6)
-  AS avg_yearly
-FROM lineitem l
-JOIN part p ON l.l_partkey = p.p_partkey
-JOIN (
-  SELECT l_partkey AS avg_pk, 0.2 * AVG(l_quantity) AS qty_threshold
-  FROM lineitem GROUP BY l_partkey
-) pa ON l.l_partkey = pa.avg_pk
-WHERE p.p_brand = 'Brand#23' AND p.p_size < 10
-  AND l.l_quantity < pa.qty_threshold
-"""
-
-
-@query("tpch_q17", oracle=TPCH_Q17_ORACLE)
-def tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 (adapted): revenue lost to small-quantity orders; brand +
-    size predicate stands in for brand + container (no p_container).
-
-    Scale: the correlated scalar subquery (per-part avg quantity) is
-    decorrelated into a groupBy(partkey) aggregate joined back on partkey —
-    exactly what Catalyst's subquery decorrelation would emit, written
-    explicitly. Both the filtered-part join and the avg join share the
-    partkey key, so AQE coalesces them into one exchange of lineitem. The
-    threshold comparison happens on the joined row; the final global sum is
-    a 1-row agg. Note the avg is over ALL parts' lineitems (spec semantics)
-    but only filtered parts survive the part join — the avg side is NOT
-    pre-filtered by brand, matching the correlated-subquery scope.
-    """
-    t = Catalog(spark, sf_dir)
-    part = t.part.where((F.col("p_brand") == "Brand#23") & (F.col("p_size") < 10)).select(
-        "p_partkey"
-    )
-    per_part_avg = (
-        t.lineitem.groupBy(F.col("l_partkey").alias("avg_pk"))
-        .agg((F.lit(0.2) * F.avg("l_quantity")).alias("qty_threshold"))
-    )
-    return (
-        t.lineitem.select("l_partkey", "l_quantity", "l_extendedprice")
-        .join(part, F.col("l_partkey") == F.col("p_partkey"))
-        .join(per_part_avg, F.col("l_partkey") == F.col("avg_pk"))
-        .where(F.col("l_quantity") < F.col("qty_threshold"))
-        .agg(
-            F.round(
-                F.sum(dec("l_extendedprice")).cast("double") / F.lit(7.0), 6
-            ).alias("avg_yearly")
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -455,61 +77,6 @@ def tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(dec("l_quantity")).cast("double").alias("sum_qty"))
     )
     return top_k(agg, [F.col("o_totalprice").desc(), F.col("o_orderkey")], 100)
-
-
-# --------------------------------------------------------------------------
-# Q19 — disjunctive brand/size/quantity predicate revenue
-# --------------------------------------------------------------------------
-
-TPCH_Q19_ORACLE = """
-SELECT
-  CAST(SUM(CAST(CAST(l.l_extendedprice AS DECIMAL(18,2))
-      * (1 - CAST(l.l_discount AS DECIMAL(18,2))) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-FROM lineitem l
-JOIN part p ON l.l_partkey = p.p_partkey
-WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 5
-       AND l.l_quantity >= 1 AND l.l_quantity <= 11)
-   OR (p.p_brand = 'Brand#23' AND p.p_size BETWEEN 1 AND 10
-       AND l.l_quantity >= 10 AND l.l_quantity <= 20)
-   OR (p.p_brand = 'Brand#34' AND p.p_size BETWEEN 1 AND 15
-       AND l.l_quantity >= 20 AND l.l_quantity <= 30)
-"""
-
-
-@query("tpch_q19", oracle=TPCH_Q19_ORACLE)
-def tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19 (adapted): OR-of-ANDs predicate across both join sides;
-    brand+size stands in for brand+container (no p_container).
-
-    Scale: Catalyst factors the disjunction — the part-only implications
-    (brand ∈ {12,23,34}, size ≤ 15) and the lineitem-only implication
-    (quantity ≤ 30) are derivable and push to their scans, while the full
-    cross-table disjunction evaluates post-join. The part side after
-    pushdown is small at any realistic SF, but carries no hint — AQE
-    broadcasts it from its runtime size rather than a compile-time guess.
-    """
-    t = Catalog(spark, sf_dir)
-    joined = t.lineitem.select(
-        "l_partkey", "l_quantity", "l_extendedprice", "l_discount"
-    ).join(
-        t.part.where(F.col("p_brand").isin("Brand#12", "Brand#23", "Brand#34"))
-        .select("p_partkey", "p_brand", "p_size"),
-        F.col("l_partkey") == F.col("p_partkey"),
-    )
-    block = lambda brand, size_hi, q_lo, q_hi: (  # noqa: E731
-        (F.col("p_brand") == brand)
-        & F.col("p_size").between(1, size_hi)
-        & (F.col("l_quantity") >= q_lo)
-        & (F.col("l_quantity") <= q_hi)
-    )
-    revenue = (dec("l_extendedprice") * (F.lit(1) - dec("l_discount"))).cast("decimal(18,4)")
-    return (
-        joined.where(
-            block("Brand#12", 5, 1, 11)
-            | block("Brand#23", 10, 10, 20)
-            | block("Brand#34", 15, 20, 30)
-        ).agg(F.sum(revenue).cast("double").alias("revenue"))
-    )
 
 
 # --------------------------------------------------------------------------
@@ -572,287 +139,6 @@ def tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("numcust"),
             F.sum(dec("c_acctbal")).cast("double").alias("totacctbal"),
         )
-    )
-
-
-# --------------------------------------------------------------------------
-# Q16 — supplier diversity per part attribute (distinct-count semi surface)
-# --------------------------------------------------------------------------
-
-TPCH_Q16_ORACLE = """
-SELECT p.p_brand, p.p_type, p.p_size,
-       COUNT(DISTINCT l.l_suppkey) AS supplier_cnt
-FROM part p
-JOIN lineitem l ON p.p_partkey = l.l_partkey
-WHERE p.p_brand <> 'Brand#45'
-  AND p.p_type <> 'PROMO'
-  AND p.p_size IN (1, 9, 14, 19, 23, 36, 45, 49)
-GROUP BY 1, 2, 3
-"""
-
-
-@query("tpch_q16", oracle=TPCH_Q16_ORACLE)
-def tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q16 (adapted): distinct suppliers per (brand, type, size);
-    supplier relationships come from lineitem (no partsupp in the
-    testdata), and the complaint-supplier NOT-IN subquery is dropped
-    (no s_comment).
-
-    Scale: the brand/type/size predicates prune part at its scan; part
-    broadcasts into lineitem; COUNT(DISTINCT suppkey) plans as a two-phase
-    Expand aggregate — both phases partial-aggregate below their
-    exchanges, so the shuffle carries (group, suppkey) pairs, already
-    deduplicated per map partition.
-    """
-    t = Catalog(spark, sf_dir)
-    part = t.part.where(
-        (F.col("p_brand") != "Brand#45")
-        & (F.col("p_type") != "PROMO")
-        & F.col("p_size").isin(1, 9, 14, 19, 23, 36, 45, 49)
-    ).select("p_partkey", "p_brand", "p_type", "p_size")
-    return (
-        t.lineitem.select("l_partkey", "l_suppkey")
-        .join(part, F.col("l_partkey") == F.col("p_partkey"))
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.count_distinct(F.col("l_suppkey")).alias("supplier_cnt"))
-    )
-
-
-# --------------------------------------------------------------------------
-# Q20 — suppliers carrying a dominant share of a part's shipments
-# --------------------------------------------------------------------------
-
-TPCH_Q20_ORACLE = """
-WITH per_part AS (
-  SELECT l_partkey AS tot_pk,
-         SUM(CAST(l_quantity AS DECIMAL(18,2))) AS part_qty
-  FROM lineitem l
-  WHERE l.l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-    AND l.l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
-  GROUP BY l_partkey
-), dominant AS (
-  SELECT l.l_suppkey
-  FROM lineitem l
-  JOIN part p ON l.l_partkey = p.p_partkey
-  JOIN per_part t ON l.l_partkey = t.tot_pk
-  WHERE p.p_name LIKE '%gear%'
-    AND l.l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-    AND l.l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
-  GROUP BY l.l_suppkey, l.l_partkey, t.part_qty
-  HAVING SUM(CAST(l_quantity AS DECIMAL(18,2))) > 0.3 * t.part_qty
-)
-SELECT DISTINCT s.s_suppkey, s.s_name
-FROM supplier s
-JOIN dominant d ON s.s_suppkey = d.l_suppkey
-"""
-
-
-@query("tpch_q20", oracle=TPCH_Q20_ORACLE)
-def tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q20 (adapted): suppliers shipping > 30% of a 'gear' part's
-    1996 volume. The spec's partsupp availability comparison becomes a
-    shipped-share comparison (no partsupp table) — the same decorrelated
-    correlated-subquery plan shape as the original.
-
-    Scale: the per-part total and the per-(supp, part) sum share the 1996
-    ship-window scan AND the partkey shuffle key (AQE coalesces the
-    exchanges); the part-name-filtered join side is AQE-sized (it grows
-    with SF); the final supplier join is semi-dedup'd before touching
-    supplier.
-    """
-    t = Catalog(spark, sf_dir)
-    window = t.lineitem.where(
-        (F.col("l_shipdate") >= F.lit(datetime(1996, 1, 1)))
-        & (F.col("l_shipdate") < F.lit(datetime(1997, 1, 1)))
-    ).select("l_partkey", "l_suppkey", "l_quantity")
-    per_part = window.groupBy(F.col("l_partkey").alias("tot_pk")).agg(
-        F.sum(dec("l_quantity")).alias("part_qty")
-    )
-    gear = t.part.where(F.col("p_name").like("%gear%")).select("p_partkey")
-    dominant = (
-        window.join(gear, F.col("l_partkey") == F.col("p_partkey"))
-        .join(per_part, F.col("l_partkey") == F.col("tot_pk"))
-        .groupBy("l_suppkey", "l_partkey", "part_qty")
-        .agg(F.sum(dec("l_quantity")).alias("supp_qty"))
-        .where(F.col("supp_qty") > F.lit(0.3) * F.col("part_qty"))
-        .select("l_suppkey")
-        .distinct()
-    )
-    return (
-        t.supplier.join(dominant, F.col("s_suppkey") == F.col("l_suppkey"), "left_semi")
-        .select("s_suppkey", "s_name")
-    )
-
-
-# --------------------------------------------------------------------------
-# Q21 (adapted) — suppliers who kept orders waiting
-# --------------------------------------------------------------------------
-
-TPCH_Q21_ORACLE = """
-WITH late AS (
-  SELECT l.l_orderkey, l.l_suppkey
-  FROM lineitem l
-  JOIN orders o ON l.l_orderkey = o.o_orderkey
-  WHERE o.o_orderstatus = 'F'
-    AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
-)
-SELECT s.s_name, COUNT(*) AS numwait
-FROM late l1
-JOIN supplier s ON s.s_suppkey = l1.l_suppkey
-WHERE EXISTS (
-    SELECT 1 FROM lineitem l2
-    WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey
-  )
-  AND NOT EXISTS (
-    SELECT 1 FROM late l3
-    WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
-  )
-GROUP BY s.s_name
-ORDER BY numwait DESC, s.s_name ASC
-LIMIT 20
-"""
-
-
-@query("tpch_q21", oracle=TPCH_Q21_ORACLE)
-def tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q21 (adapted): suppliers who were the SOLE late supplier on a
-    multi-supplier finished order. Lateness is ``l_shipdate > o_orderdate
-    + 60 days`` (the schema has no commit/receipt dates — reduced-schema
-    adaptation, like q16/q20).
-
-    Scale: the dual correlated subqueries are decorrelated into ORDER-LEVEL
-    aggregates instead of semi/anti self-joins — "another supplier exists"
-    ⇔ the order has ≥2 distinct suppliers, "no other late supplier" ⇔ the
-    order's late rows have exactly 1 distinct supplier (counting l1's rows
-    via the rolled-up row count). That's 2 lineitem-scale shuffles instead
-    of 3, every join runs on order-cardinality pre-aggregated rows, and
-    each groupBy reuses the orderkey partitioning of the join before it
-    (21× faster than the semi/anti-join form at sf0.1: 0.15 s vs 3.2 s).
-    Final top-20 is TakeOrderedAndProject.
-    """
-    t = Catalog(spark, sf_dir)
-    late = (
-        t.lineitem.join(
-            t.orders.where(F.col("o_orderstatus") == "F"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .where(F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS"))
-        .select("l_orderkey", "l_suppkey")
-    )
-    late_solo = (
-        late.groupBy("l_orderkey")
-        .agg(
-            F.count_distinct("l_suppkey").alias("n_late_supp"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.max("l_suppkey").alias("l_suppkey"),
-        )
-        .where(F.col("n_late_supp") == 1)
-    )
-    multi_supp = (
-        t.lineitem.select("l_orderkey", "l_suppkey")
-        .groupBy("l_orderkey")
-        .agg(F.count_distinct("l_suppkey").alias("n_supp"))
-        .where(F.col("n_supp") >= 2)
-        .select(F.col("l_orderkey").alias("m_orderkey"))
-    )
-    return (
-        late_solo.join(multi_supp, F.col("l_orderkey") == F.col("m_orderkey"))
-        .join(t.supplier, F.col("l_suppkey") == F.col("s_suppkey"))
-        .groupBy("s_name")
-        .agg(F.sum("n_rows").alias("numwait"))
-        .orderBy(F.col("numwait").desc(), F.col("s_name").asc())
-        .limit(20)
-    )
-
-
-# --------------------------------------------------------------------------
-# Q2 (adapted) — minimum-cost supplier per part within a region
-# --------------------------------------------------------------------------
-
-TPCH_Q2_ORACLE = """
-WITH ps AS (
-  SELECT l_partkey, l_suppkey,
-         MIN(CAST(l_extendedprice AS DECIMAL(18,2))) AS ps_supplycost
-  FROM lineitem GROUP BY l_partkey, l_suppkey
-),
-eu AS (
-  SELECT s.s_suppkey, s.s_name, s.s_acctbal, n.n_name
-  FROM supplier s
-  JOIN nation n ON s.s_nationkey = n.n_nationkey
-  JOIN region r ON n.n_regionkey = r.r_regionkey
-  WHERE r.r_name = 'EUROPE'
-),
-cand AS (
-  SELECT p.p_partkey, eu.s_name, eu.s_acctbal, eu.n_name, ps.ps_supplycost,
-         MIN(ps.ps_supplycost) OVER (PARTITION BY p.p_partkey) AS min_cost
-  FROM ps
-  JOIN eu ON ps.l_suppkey = eu.s_suppkey
-  JOIN part p ON ps.l_partkey = p.p_partkey
-  WHERE p.p_size = 15 AND p.p_type = 'ECONOMY'
-)
-SELECT s_acctbal, s_name, n_name, p_partkey,
-       CAST(ps_supplycost AS DOUBLE) AS ps_supplycost
-FROM cand WHERE ps_supplycost = min_cost
-ORDER BY s_acctbal DESC, n_name ASC, s_name ASC, p_partkey ASC
-LIMIT 100
-"""
-
-
-@query("tpch_q2", oracle=TPCH_Q2_ORACLE)
-def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2 (adapted): cheapest EUROPE supplier for each 15-size
-    ECONOMY part. The schema has no partsupp, so the part–supplier
-    relationship derives from lineitem (as in q16/q20) with
-    ``ps_supplycost := MIN(l_extendedprice)`` per (part, supplier) —
-    monotonic, decimal-exact, division-free.
-
-    Scale: the correlated min-cost subquery is a window partitioned by
-    partkey over the ALREADY part-filtered candidates — one shuffle of a
-    dimension-sized frame, never a self-join; supplier/nation/region
-    collapse to a broadcast dim; the ps rollup reuses the (partkey,
-    suppkey) shuffle for its aggregate.
-    """
-    from pyspark.sql import Window
-
-    t = Catalog(spark, sf_dir)
-    ps = (
-        t.lineitem.groupBy("l_partkey", "l_suppkey")
-        .agg(F.min(dec("l_extendedprice")).alias("ps_supplycost"))
-    )
-    eu = (
-        t.supplier.join(
-            F.broadcast(
-                t.nation.join(
-                    F.broadcast(t.region.where(F.col("r_name") == "EUROPE")),
-                    F.col("n_regionkey") == F.col("r_regionkey"),
-                ).select("n_nationkey", "n_name")
-            ),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .select("s_suppkey", "s_name", "s_acctbal", "n_name")
-    )
-    parts = t.part.where(
-        (F.col("p_size") == 15) & (F.col("p_type") == "ECONOMY")
-    ).select("p_partkey")
-    cand = (
-        ps.join(eu, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(parts), F.col("l_partkey") == F.col("p_partkey"))
-    )
-    w = Window.partitionBy("p_partkey")
-    return (
-        cand.withColumn("min_cost", F.min("ps_supplycost").over(w))
-        .where(F.col("ps_supplycost") == F.col("min_cost"))
-        .select(
-            "s_acctbal", "s_name", "n_name", "p_partkey",
-            F.col("ps_supplycost").cast("double").alias("ps_supplycost"),
-        )
-        .orderBy(
-            F.col("s_acctbal").desc(),
-            F.col("n_name").asc(),
-            F.col("s_name").asc(),
-            F.col("p_partkey").asc(),
-        )
-        .limit(100)
     )
 
 

@@ -1,10 +1,10 @@
-"""Training-data pipeline query surface — repetition filtering, chunking,
-stratified corpus mixing, PII scrubbing, benchmark decontamination.
+"""Training-data pipeline query surface — repetition filtering, packing,
+token-budget mixing, PII scrubbing, benchmark decontamination.
 
 These extend the reference's ELT capability set (SURVEY §2) with the
 operations a 100 TB LLM-corpus pipeline runs between raw ingest and
-training: quality gates (repetition), example prep (token-window
-chunking), mix control (per-stratum deterministic sampling), compliance
+training: quality gates (repetition), example prep (sequence packing),
+mix control (token-budget selection), compliance
 (PII scrub), and eval hygiene (n-gram decontamination). Every query has
 a DuckDB oracle; the shared tokenizer is single-space word split, the
 shared regex dialect is Java∩RE2.
@@ -13,9 +13,8 @@ shared regex dialect is Java∩RE2.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.sampling import stratified_sample
 from ..operators.text import (
     EMAIL_REGEX,
     PHONE_REGEX,
@@ -63,74 +62,6 @@ def text_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 CHUNK_W, CHUNK_S = 32, 16
 
-CHUNK_ORACLE = f"""
-WITH w AS (
-  SELECT doc_id, string_split(trim(text), ' ') AS words,
-         len(string_split(trim(text), ' ')) AS n
-  FROM documents
-),
-c AS (
-  SELECT doc_id, words, n,
-         CASE WHEN n <= {CHUNK_W} THEN 1
-              ELSE CAST(CEIL(CAST(n - {CHUNK_W} AS DOUBLE) / {CHUNK_S}) AS INT) + 1
-         END AS n_chunks
-  FROM w
-)
-SELECT doc_id,
-       CAST(t.i AS INT) AS chunk_index,
-       CAST(LEAST({CHUNK_W}, n - t.i * {CHUNK_S}) AS INT) AS chunk_tokens,
-       md5(array_to_string(
-             words[CAST(t.i * {CHUNK_S} + 1 AS INT) : CAST(t.i * {CHUNK_S} + {CHUNK_W} AS INT)],
-             ' ')) AS chunk_md5
-FROM c, UNNEST(range(0, n_chunks)) AS t(i)
-"""
-
-
-@query("doc_chunks", oracle=CHUNK_ORACLE)
-def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlapping 32-token / stride-16 training windows per document
-    (map-side explode, chunk identity as md5)."""
-    docs = Catalog(spark, sf_dir).documents
-    return chunk_documents(
-        docs, text_col="text", id_col="doc_id", window=CHUNK_W, stride=CHUNK_S
-    )
-
-
-# per-language keep rates: en 25%, de 12.5%, fr 6.25%, es 3.125%
-MIX_THRESHOLDS = {"en": "40", "de": "20", "fr": "10", "es": "08"}
-
-MIX_ORACLE = """
-SELECT lang,
-       COUNT(*) AS kept_docs,
-       CAST(SUM(n_chars) AS BIGINT) AS kept_chars
-FROM documents
-WHERE CASE lang
-        WHEN 'en' THEN md5(CAST(doc_id AS VARCHAR)) < '40'
-        WHEN 'de' THEN md5(CAST(doc_id AS VARCHAR)) < '20'
-        WHEN 'fr' THEN md5(CAST(doc_id AS VARCHAR)) < '10'
-        WHEN 'es' THEN md5(CAST(doc_id AS VARCHAR)) < '08'
-        ELSE FALSE
-      END
-GROUP BY lang
-"""
-
-
-@query("corpus_mix_sample", oracle=MIX_ORACLE)
-def corpus_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic per-language corpus mixing: each language keeps its
-    own md5-gated fraction (en 1/4 … es 1/32), summarized per language.
-    The mix is reproducible under re-runs, repartitioning, and corpus
-    growth — a pure per-row membership function."""
-    docs = Catalog(spark, sf_dir).documents
-    return (
-        stratified_sample(docs, "lang", "doc_id", MIX_THRESHOLDS)
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("kept_docs"),
-            F.sum("n_chars").alias("kept_chars"),
-        )
-    )
-
 
 SCRUB_ORACLE = f"""
 SELECT doc_id,
@@ -164,75 +95,6 @@ SELECT COUNT(*) AS n_total,
        CAST(SUM(CASE WHEN n_words >= 20 AND dwr >= 0.30 THEN 1 ELSE 0 END) AS BIGINT) AS n_final
 FROM scored
 """
-
-
-@query("corpus_filter_funnel", oracle=FUNNEL_ORACLE)
-def corpus_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-cleaning funnel report: how many documents survive each
-    cumulative quality gate (length, then repetition). One scan-side
-    conditional aggregation — the per-stage drop report every corpus
-    pipeline publishes, with no extra passes over the data."""
-    docs = Catalog(spark, sf_dir).documents
-    t = F.trim(F.col("text"))
-    n_words = F.when(F.length(t) == 0, F.lit(0)).otherwise(
-        F.size(F.split(t, " "))
-    )
-    low_words = F.split(F.lower(t), " ")
-    dwr = F.size(F.array_distinct(low_words)).cast("double") / F.size(
-        low_words
-    ).cast("double")
-    len_ok = n_words >= 20
-    final_ok = len_ok & (dwr >= 0.30)
-    return docs.agg(
-        F.count(F.lit(1)).alias("n_total"),
-        F.sum(len_ok.cast("bigint")).alias("n_len_ok"),
-        F.sum(final_ok.cast("bigint")).alias("n_final"),
-    )
-
-
-TOP_DOCS_ORACLE = r"""
-WITH scored AS (
-  SELECT doc_id, lang,
-    ROUND(
-      0.4 * (CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
-             / CAST(length(text) AS DOUBLE))
-    + 0.3 * (CAST(len(regexp_extract_all(lower(text), '\b(the|a|an|and|or|of|to|in|is|it)\b')) AS DOUBLE)
-             / CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-                         ELSE len(string_split_regex(trim(text), '\s+')) END AS DOUBLE))
-    + 0.3 * least(CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-                            ELSE len(string_split_regex(trim(text), '\s+')) END AS DOUBLE) / 64.0, 1.0)
-    , 6) AS quality_score
-  FROM documents
-),
-ranked AS (
-  SELECT doc_id, lang, quality_score,
-         ROW_NUMBER() OVER (PARTITION BY lang
-                            ORDER BY quality_score DESC, doc_id ASC) AS rank
-  FROM scored
-)
-SELECT lang, rank, doc_id, quality_score FROM ranked WHERE rank <= 5
-"""
-
-
-@query("top_docs_per_lang", oracle=TOP_DOCS_ORACLE)
-def top_docs_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language top-5 documents by quality score (deterministic
-    doc_id tie-break) — operator composition: quality scoring feeding a
-    per-group top-k. Spark plans the rank-filter as WindowGroupLimit
-    (per-partition partial top-k before the shuffle), so the exchange
-    carries ≤ k rows per (lang, input partition), not the corpus."""
-    from ..operators.text import quality_scores
-
-    docs = Catalog(spark, sf_dir).documents
-    scored = quality_scores(docs, text_col="text", id_col="doc_id", keep=("lang",))
-    w = Window.partitionBy("lang").orderBy(
-        F.col("quality_score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 5)
-        .select("lang", "rank", "doc_id", "quality_score")
-    )
 
 
 PROBE_N = 8
@@ -561,134 +423,6 @@ def doc_pack_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pack_chunks(chunks, budget=PACK_BUDGET, shard_hex_chars=1)
 
 
-TOKEN_DF_ORACLE = """
-WITH toks AS (
-  SELECT DISTINCT doc_id, t.tok AS token
-  FROM (SELECT doc_id,
-               regexp_split_to_array(lower(trim(text)), '[^a-z0-9]+') AS arr
-        FROM documents),
-       UNNEST(arr) AS t(tok)
-  WHERE t.tok <> ''
-)
-SELECT token, COUNT(*) AS doc_freq
-FROM toks
-GROUP BY token
-ORDER BY doc_freq DESC, token ASC
-LIMIT 50
-"""
-
-
-@query("token_doc_freq", oracle=TOKEN_DF_ORACLE)
-def token_doc_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary report: top-50 tokens by document frequency.
-
-    Scale: tokens are distinct-ed INSIDE each document before the explode
-    (array_distinct — map-side, no Expand), so the shuffle carries at most
-    one row per (doc, term); partial aggregation then collapses the
-    stopword skew per partition before the exchange, and the final top-50
-    plans as TakeOrderedAndProject (no global sort)."""
-    docs = Catalog(spark, sf_dir).documents
-    toks = docs.select(
-        F.explode(
-            F.array_distinct(F.split(F.lower(F.trim(F.col("text"))), "[^a-z0-9]+"))
-        ).alias("token")
-    ).where(F.col("token") != "")
-    return (
-        toks.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("doc_freq"))
-        .orderBy(F.col("doc_freq").desc(), F.col("token").asc())
-        .limit(50)
-    )
-
-
-CLASSIFIER_ORACLE = """
-WITH toks AS (
-  SELECT doc_id, t.tok AS token
-  FROM (SELECT doc_id,
-               regexp_split_to_array(lower(trim(text)), '[^a-z0-9]+') AS arr
-        FROM documents),
-       UNNEST(arr) AS t(tok)
-  WHERE t.tok <> ''
-),
-weighted AS (
-  SELECT doc_id,
-         CAST(CAST(('0x' || substr(md5(token), 1, 3)) AS INT) % 61 AS DOUBLE)
-           / 30.0 - 1.0 AS w
-  FROM toks
-)
-SELECT doc_id,
-       COUNT(*) AS n_tokens,
-       ROUND(1.0 / (1.0 + EXP(-4.0 * AVG(w))), 6) AS quality_prob
-FROM weighted
-GROUP BY doc_id
-"""
-
-
-@query("quality_classifier_score", oracle=CLASSIFIER_ORACLE)
-def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hashed bag-of-words linear classifier (frozen stand-in weights)
-    scoring every document — the model-based quality gate of a corpus
-    pipeline, with the learned-weight swap point left as a broadcast
-    join."""
-    from ..operators.text import classifier_scores
-
-    docs = Catalog(spark, sf_dir).documents
-    return classifier_scores(docs, text_col="text", id_col="doc_id")
-
-
-SPAN_DUP_ORACLE = f"""
-WITH w AS (
-  SELECT doc_id, string_split(trim(text), ' ') AS words,
-         len(string_split(trim(text), ' ')) AS n
-  FROM documents
-),
-c AS (
-  SELECT doc_id, words, n,
-         CASE WHEN n <= {CHUNK_W} THEN 1
-              ELSE CAST(CEIL(CAST(n - {CHUNK_W} AS DOUBLE) / {CHUNK_S}) AS INT) + 1
-         END AS n_chunks
-  FROM w
-),
-chunks AS (
-  SELECT doc_id,
-         md5(array_to_string(
-               words[CAST(t.i * {CHUNK_S} + 1 AS INT) : CAST(t.i * {CHUNK_S} + {CHUNK_W} AS INT)],
-               ' ')) AS chunk_md5
-  FROM c, UNNEST(range(0, n_chunks)) AS t(i)
-)
-SELECT chunk_md5,
-       COUNT(DISTINCT doc_id) AS n_docs,
-       COUNT(*) AS n_occurrences
-FROM chunks
-GROUP BY chunk_md5
-HAVING COUNT(DISTINCT doc_id) >= 2
-"""
-
-
-@query("chunk_span_dups", oracle=SPAN_DUP_ORACLE)
-def chunk_span_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-document repeated spans: token windows whose md5 appears in
-    ≥2 documents — the boilerplate/template detector that feeds span-level
-    (rather than whole-document) dedup.
-
-    Scale: rides the map-only chunker; the shuffle key is the 16-byte
-    chunk hash and partial aggregation collapses within-partition repeats
-    first. The HAVING prunes to the (rare) repeated spans before any
-    downstream use."""
-    docs = Catalog(spark, sf_dir).documents
-    chunks = chunk_documents(
-        docs, text_col="text", id_col="doc_id", window=CHUNK_W, stride=CHUNK_S
-    )
-    return (
-        chunks.groupBy("chunk_md5")
-        .agg(
-            F.count_distinct("doc_id").alias("n_docs"),
-            F.count(F.lit(1)).alias("n_occurrences"),
-        )
-        .where(F.col("n_docs") >= 2)
-    )
-
-
 # Budgets straddle the per-source supply at every local SF (25 docs ×
 # ~100 tokens per source at sf0.01, ~10× either way at the neighbors):
 # src0 is cut mid-bucket at all SFs, src1 exhausts below budget at the
@@ -723,8 +457,8 @@ def token_budget_mix_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-mix construction by TOKEN BUDGET: per source, keep
     documents in deterministic md5 order until the budget is filled
     (the crossing document included — coverage ≥ budget when supply
-    suffices). The rate-based mix (`corpus_mix_sample`) answers "keep
-    X% of each source"; this answers the question a data-mixing recipe
+    suffices). A rate-based mix answers "keep X% of each source";
+    this answers the question a data-mixing recipe
     actually states — "N billion tokens of web, M of books".
 
     Scale: NOT a per-source running-sum window (that serializes a 10 TB
@@ -740,422 +474,11 @@ def token_budget_mix_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return token_budget_mix(docs, MIX_BUDGETS)
 
 
-BIGRAM_LM_ORACLE = """
-WITH w AS (
-  SELECT doc_id, string_split(lower(trim(text)), ' ') AS ws FROM documents
-),
-v AS (SELECT COUNT(DISTINCT u.w) AS vocab FROM w, UNNEST(w.ws) AS u(w)),
-bg AS (
-  SELECT doc_id,
-    CAST('0x' || substr(md5(ws[i] || ' ' || ws[i+1]), 1, 15) AS BIGINT) AS bgh,
-    CAST('0x' || substr(md5(ws[i]), 1, 15) AS BIGINT) AS ctxh
-  FROM w, UNNEST(range(1, len(ws))) AS t(i)
-  WHERE len(ws) >= 2
-),
-cb AS (SELECT bgh, COUNT(*) AS c FROM bg GROUP BY bgh),
-cc AS (SELECT ctxh, COUNT(*) AS c FROM bg GROUP BY ctxh),
-m AS (
-  SELECT bg.doc_id,
-    CAST(ROUND(log2((cb.c + 1.0) / (cc.c + 1.0 * (SELECT vocab FROM v)))
-               * 1000000.0, 0) AS BIGINT) AS milli
-  FROM bg JOIN cb USING (bgh) JOIN cc USING (ctxh)
-)
-SELECT doc_id, COUNT(*) AS n_bigrams,
-  ROUND(CAST(SUM(milli) AS DOUBLE) / COUNT(*) / 1000000.0, 6) AS avg_log2p
-FROM m GROUP BY doc_id
-"""
-
-
-@query("bigram_lm_score", oracle=BIGRAM_LM_ORACLE)
-def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-trained bigram LM quality scoring — the KenLM/CCNet
-    perplexity-filter stage: add-1-smoothed bigram conditionals trained
-    on the corpus itself, every document scored by mean
-    log2 P(w_i | w_{i-1}).
-
-    Determinism contract: per-bigram logp = one division + log2 over
-    EXACT integer counts, immediately integer-scaled (round(logp·10⁶));
-    per-doc totals are integer sums — no double ever crosses an
-    unordered aggregate, so both engines land on identical 6-dp
-    values. Joins ride 60-bit md5-prefix keys (8-byte shuffle rows;
-    collisions merge counts identically cross-engine).
-    """
-    from ..operators.text import bigram_lm_scores
-
-    docs = Catalog(spark, sf_dir).documents
-    return bigram_lm_scores(docs)
-
-
-CONTAMINATION_ORACLE = """
-WITH toks AS (
-  SELECT source, string_split(lower(trim(text)), ' ') AS ws FROM documents
-),
-fp AS (
-  SELECT DISTINCT source,
-    CAST('0x' || substr(
-      md5(list_aggregate(ws[i : i+7], 'string_agg', ' ')), 1, 15) AS BIGINT)
-      AS h
-  FROM toks, UNNEST(range(1, len(ws) - 6)) t(i)
-  WHERE len(ws) >= 8
-)
-SELECT a.source AS source_a, b.source AS source_b,
-       COUNT(*) AS shared_ngrams
-FROM fp a JOIN fp b ON a.h = b.h AND a.source < b.source
-GROUP BY 1, 2
-"""
-
-
-@query("source_contamination_matrix", oracle=CONTAMINATION_ORACLE)
-def source_contamination_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-source span-level contamination: distinct shared 8-grams
-    per source pair. Exact-dup matrices are empty on curated corpora
-    (verified on this one); span overlap is where recycling shows —
-    the diagnostic that decides which source pair needs cross-source
-    dedup before mixing. Corpus collapses to distinct (source, gram
-    hash) before the hash-keyed self-join, so per-hash fanout is
-    bounded by the source count."""
-    from ..operators.text import source_ngram_overlap
-
-    return source_ngram_overlap(Catalog(spark, sf_dir).documents, n=8)
-
-
 LM_PROBE_DOCS = 20
-LM_OOV_TEXT = "zzqa zzqb zzqa zzqc"  # every bigram + context unseen
-
-BIGRAM_LM_STORE_ORACLE = f"""
-WITH w AS (
-  SELECT doc_id, string_split(lower(trim(text)), ' ') AS ws FROM documents
-),
-v AS (SELECT COUNT(DISTINCT u.w) AS vocab FROM w, UNNEST(w.ws) AS u(w)),
-cbg AS (
-  SELECT CAST('0x' || substr(md5(ws[i] || ' ' || ws[i+1]), 1, 15) AS BIGINT)
-           AS bgh,
-         CAST('0x' || substr(md5(ws[i]), 1, 15) AS BIGINT) AS ctxh
-  FROM w, UNNEST(range(1, len(ws))) AS t(i)
-  WHERE len(ws) >= 2
-),
-cb AS (SELECT bgh, COUNT(*) AS c FROM cbg GROUP BY bgh),
-cc AS (SELECT ctxh, COUNT(*) AS c FROM cbg GROUP BY ctxh),
-batch AS (
-  SELECT doc_id, text FROM documents WHERE doc_id < {LM_PROBE_DOCS}
-  UNION ALL SELECT -1 AS doc_id, '{LM_OOV_TEXT}' AS text
-),
-bw AS (
-  SELECT doc_id, string_split(lower(trim(text)), ' ') AS ws FROM batch
-),
-bbg AS (
-  SELECT doc_id,
-    CAST('0x' || substr(md5(ws[i] || ' ' || ws[i+1]), 1, 15) AS BIGINT) AS bgh,
-    CAST('0x' || substr(md5(ws[i]), 1, 15) AS BIGINT) AS ctxh
-  FROM bw, UNNEST(range(1, len(ws))) AS t(i)
-  WHERE len(ws) >= 2
-),
-m AS (
-  SELECT b.doc_id,
-    CAST(ROUND(log2(
-      (COALESCE(cb.c, 0) + 1.0)
-      / (COALESCE(cc.c, 0) + 1.0 * (SELECT vocab FROM v))
-    ) * 1000000.0, 0) AS BIGINT) AS milli
-  FROM bbg b
-  LEFT JOIN cb ON cb.bgh = b.bgh
-  LEFT JOIN cc ON cc.ctxh = b.ctxh
-)
-SELECT doc_id, COUNT(*) AS n_bigrams,
-  ROUND(CAST(SUM(milli) AS DOUBLE) / COUNT(*) / 1000000.0, 6) AS avg_log2p
-FROM m GROUP BY doc_id
-"""
-
-
-@query("bigram_lm_store_probe", oracle=BIGRAM_LM_STORE_ORACLE)
-def bigram_lm_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The stored-LM form graded end-to-end: train the bigram LM on
-    the corpus (three exact-integer relations on disk), then score an
-    ingest batch — the first 20 corpus docs PLUS a literal all-OOV doc
-    — against the STORE. The OOV doc takes the LEFT-join/COALESCE
-    branch the self-scoring query (`bigram_lm_score`) can never reach:
-    every bigram backs off to the add-1 floor log2(1/V). Build+probe
-    per call so the graded query covers the whole cycle; production
-    amortizes the build over every batch (`build_bigram_lm_store` /
-    `bigram_lm_score_from_store`).
-    """
-    from ..operators.text import (
-        bigram_lm_score_from_store,
-        build_bigram_lm_store,
-    )
-    from .storepaths import process_scoped_store_path
-
-    docs = Catalog(spark, sf_dir).documents
-    store = process_scoped_store_path("bigram_lm_store", sf_dir)
-    build_bigram_lm_store(docs, store)
-    batch = (
-        docs.where(F.col("doc_id") < LM_PROBE_DOCS)
-        .select("doc_id", "text")
-        .unionByName(
-            docs.sparkSession.createDataFrame(
-                [(-1, LM_OOV_TEXT)], "doc_id long, text string"
-            )
-        )
-    )
-    return bigram_lm_score_from_store(spark, store, batch)
-
-
-EVAL_SAMPLE_K = 5
-
-EVAL_SAMPLE_ORACLE = f"""
-SELECT doc_id, source FROM (
-  SELECT doc_id, source,
-    ROW_NUMBER() OVER (
-      PARTITION BY source
-      ORDER BY md5('gk:' || CAST(doc_id AS VARCHAR)), doc_id
-    ) AS rk
-  FROM documents
-) WHERE rk <= {EVAL_SAMPLE_K}
-"""
-
-
-@query("eval_sample_per_source", oracle=EVAL_SAMPLE_ORACLE)
-def eval_sample_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exactly-k-per-group deterministic sample (k=5 per source) — the
-    human-eval draw. Rate sampling (`sample_documents`) can't hit a
-    fixed per-group budget; rank-in-hash-order can, and Spark lowers
-    the rank ≤ k filter to a per-partition WindowGroupLimit BELOW the
-    exchange, so at most k rows per (group, task) ever shuffle."""
-    from ..operators.sampling import per_group_sample_k
-
-    docs = Catalog(spark, sf_dir).documents
-    return per_group_sample_k(docs, "source", "doc_id", EVAL_SAMPLE_K).select(
-        "doc_id", "source"
-    )
 
 
 # train/val/test hex boundaries: ~95.7% / ~2.0% / ~2.3% of md5 space
 SPLIT_BOUNDS = (("train", "f5"), ("val", "fa"), ("test", None))
-
-CORPUS_SPLIT_ORACLE = """
-WITH labeled AS (
-  SELECT source, n_chars,
-    CASE WHEN md5(CAST(doc_id AS VARCHAR)) < 'f5' THEN 'train'
-         WHEN md5(CAST(doc_id AS VARCHAR)) < 'fa' THEN 'val'
-         ELSE 'test' END AS split
-  FROM documents
-)
-SELECT split, source,
-       COUNT(*) AS n_docs,
-       CAST(SUM(n_chars) AS BIGINT) AS n_chars_sum
-FROM labeled
-GROUP BY split, source
-"""
-
-
-@query("corpus_split_counts", oracle=CORPUS_SPLIT_ORACLE)
-def corpus_split_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic train/val/test split scoreboard — docs and chars
-    per (split, source). The split label is a pure function of the doc
-    id (``hash_split``), so the assignment survives re-runs, layout
-    changes, and corpus growth; the scoreboard is what a release
-    checklist reads to confirm val/test didn't starve on any source.
-
-    Scale: label is a scan-side CASE over one md5 (no shuffle); the
-    groupBy keys are (3 splits × sources) — map-side partials collapse
-    each task to that constant before the exchange.
-    """
-    from ..operators.sampling import hash_split
-
-    docs = Catalog(spark, sf_dir).documents
-    return hash_split(docs, "doc_id", SPLIT_BOUNDS).groupBy(
-        "split", "source"
-    ).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("n_chars_sum"),
-    )
-
-
-LEAKAGE_SAFE_SPLIT_ORACLE = """
-WITH fp AS (
-  SELECT doc_id,
-         md5(array_to_string(string_split(text, ' ')[1:4], ' ')) AS fp
-  FROM documents
-),
-reps AS (
-  SELECT fp, MIN(doc_id) AS rep FROM fp GROUP BY fp
-),
-lab AS (
-  SELECT f.doc_id, f.fp,
-    CASE WHEN md5(CAST(r.rep AS VARCHAR)) < 'f5' THEN 'train'
-         WHEN md5(CAST(r.rep AS VARCHAR)) < 'fa' THEN 'val'
-         ELSE 'test' END AS split,
-    CASE WHEN md5(CAST(f.doc_id AS VARCHAR)) < 'f5' THEN 'train'
-         WHEN md5(CAST(f.doc_id AS VARCHAR)) < 'fa' THEN 'val'
-         ELSE 'test' END AS naive
-  FROM fp f JOIN reps r USING (fp)
-)
-SELECT split,
-       COUNT(*) AS n_docs,
-       COUNT(DISTINCT fp) AS n_groups,
-       CAST(SUM(CASE WHEN naive <> split THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_rerouted
-FROM lab GROUP BY split
-"""
-
-
-@query("leakage_safe_split", oracle=LEAKAGE_SAFE_SPLIT_ORACLE)
-def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Split-leakage fix: assign train/val/test by the hash of each
-    content GROUP's representative, not the doc's own id — so related
-    documents can never straddle splits (the classic corpus bug: a test
-    doc whose near-duplicate sits in train). The group key here is an
-    opening-shingle fingerprint (md5 of the first 4 tokens — a cheap
-    boilerplate-family proxy that actually groups this corpus at every
-    SF; substitute any cluster relation, e.g. `dedup_clusters` output,
-    for production near-dup semantics). Scoreboard per split: docs,
-    groups, and how many docs the group-keyed split re-routed relative
-    to the naive per-doc split (nonzero exactly when leakage WOULD have
-    happened). The no-straddle invariant itself is pytest-asserted
-    group-by-group.
-
-    Scale: fingerprints are scan-side; the groupBy-MIN and the
-    fp-equality join share one 16-byte-key shuffle layout (text never
-    moves); both split labels are scan-side CASEs over md5.
-    """
-    from ..operators.sampling import hash_split
-
-    docs = Catalog(spark, sf_dir).documents
-    fp = docs.select(
-        "doc_id",
-        F.md5(
-            F.array_join(
-                F.slice(F.split(F.col("text"), " "), 1, 4), " "
-            ).cast("binary")
-        ).alias("fp"),
-    )
-    reps = fp.groupBy("fp").agg(F.min("doc_id").alias("rep"))
-    lab = fp.join(reps, "fp")
-    lab = hash_split(lab, "rep", SPLIT_BOUNDS, label_col="split")
-    lab = hash_split(lab, "doc_id", SPLIT_BOUNDS, label_col="naive")
-    return lab.groupBy("split").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.countDistinct("fp").alias("n_groups"),
-        F.sum((F.col("naive") != F.col("split")).cast("long")).alias(
-            "n_rerouted"
-        ),
-    )
-
-
-# --------------------------------------------------------------------------
-# temperature-weighted source mixing (the multilingual-LM sampling recipe)
-# --------------------------------------------------------------------------
-
-MIX_ALPHA = 0.3  # the mT5/XLM-R default temperature
-
-TEMPERATURE_MIX_ORACLE = rf"""
-WITH toks AS (
-  SELECT doc_id, source,
-    CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-         ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT) AS tokens
-  FROM documents
-),
-tot AS (
-  SELECT source, CAST(SUM(tokens) AS BIGINT) AS tokens_total FROM toks GROUP BY source
-),
-w AS (
-  SELECT source, tokens_total,
-         POW(CAST(tokens_total AS DOUBLE)
-             / SUM(CAST(tokens_total AS DOUBLE)) OVER (),
-             {MIX_ALPHA} - 1.0) AS wgt
-  FROM tot
-),
-r AS (
-  SELECT source, tokens_total, ROUND(wgt / MAX(wgt) OVER (), 6) AS rate
-  FROM w
-),
-kept AS (
-  SELECT t.source, t.tokens
-  FROM toks t JOIN r USING (source)
-  WHERE CAST('0x' || substr(md5(CAST(t.doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-        < CAST(FLOOR(r.rate * 1152921504606846976.0) AS BIGINT)
-)
-SELECT r.source, r.tokens_total, r.rate,
-       COUNT(*) AS docs_kept,
-       CAST(SUM(k.tokens) AS BIGINT) AS tokens_kept
-FROM kept k JOIN r USING (source)
-GROUP BY r.source, r.tokens_total, r.rate
-"""
-
-
-@query("temperature_mix_report", oracle=TEMPERATURE_MIX_ORACLE)
-def temperature_mix_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-weighted source mixing at alpha=0.3 (the mT5/XLM-R
-    recipe): per-source keep rates ∝ share^(alpha-1) so kept tokens
-    follow share^alpha — low-resource sources upweighted, membership a
-    deterministic md5 gate. The scoreboard (rates, kept docs/tokens
-    per source) is the audit artifact a mixing run publishes.
-
-    Oracle is SF-adaptive: DuckDB recomputes the shares, the POW
-    weights, and the 6-dp rates from its own token sums — one static
-    string valid at every SF; the 60-bit md5-prefix gate replays with
-    FLOOR (Python int() truncates where SQL CAST rounds).
-    """
-    from ..operators.sampling import temperature_mix
-
-    docs = Catalog(spark, sf_dir).documents
-    return temperature_mix(docs, alpha=MIX_ALPHA)
-
-
-# --------------------------------------------------------------------------
-# weighted sampling without replacement (Efraimidis-Spirakis top-k)
-# --------------------------------------------------------------------------
-
-WEIGHTED_SAMPLE_K = 10
-
-WEIGHTED_SAMPLE_ORACLE = rf"""
-WITH t AS (
-  SELECT doc_id, source,
-    CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-         ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT) AS tokens
-  FROM documents
-),
-k AS (
-  SELECT doc_id, source, tokens,
-         ROUND(POW(
-           CAST(CAST('0x' || substr(md5('ws:' || CAST(doc_id AS VARCHAR)),
-                                    1, 15) AS BIGINT) AS DOUBLE)
-           / 1152921504606846976.0,
-           1.0 / CAST(tokens AS DOUBLE)), 12) AS sample_key
-  FROM t WHERE tokens > 0
-)
-SELECT source, doc_id, tokens, sample_key
-FROM (
-  SELECT *, ROW_NUMBER() OVER (
-    PARTITION BY source ORDER BY sample_key DESC, doc_id ASC) AS rk
-  FROM k
-) WHERE rk <= {WEIGHTED_SAMPLE_K}
-"""
-
-
-@query("weighted_sample_per_source", oracle=WEIGHTED_SAMPLE_ORACLE)
-def weighted_sample_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-weighted sample of 10 docs per source WITHOUT replacement
-    (Efraimidis-Spirakis u^(1/w) top-k): longer documents are
-    proportionally likelier, membership is a pure function of the
-    corpus — the draw a curation pipeline uses when "uniform by doc"
-    over-represents short documents' text distribution.
-
-    Scale: rank ≤ k lowers to WindowGroupLimit below the exchange —
-    at most k rows per (source, task) shuffle; the md5 draw and the
-    POW key are scan-side codegen expressions.
-    """
-    from ..operators.sampling import weighted_sample_k
-    from ..operators.text import _ws_token_count
-
-    docs = Catalog(spark, sf_dir).documents
-    base = docs.select(
-        "doc_id",
-        "source",
-        _ws_token_count(F.col("text")).cast("bigint").alias("tokens"),
-    )
-    return weighted_sample_k(
-        base, "source", "doc_id", F.col("tokens"), WEIGHTED_SAMPLE_K
-    ).select("source", "doc_id", "tokens", "sample_key")
 
 
 # --------------------------------------------------------------------------
@@ -1374,7 +697,7 @@ FROM sc GROUP BY doc_id
 @query("trigram_lm_store_probe", oracle=TRIGRAM_LM_STORE_ORACLE)
 def trigram_lm_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trigram LM with stupid backoff (Brants et al. 2007), stored and
-    probed end to end — the order-3 upgrade of `bigram_lm_store_probe`
+    probed end to end — the order-3 upgrade of a stored bigram LM
     and the honest distributed step toward the CCNet-style 5-gram KenLM
     gate. The probe batch exercises EVERY branch: the first 20 corpus
     docs hit the trigram conditional (self-trained, every trigram
@@ -1479,11 +802,6 @@ def _bpe_cte_block(px: str = "", doc_filter: str = "") -> str:
 
 _BPE_CTES = "\nWITH " + _bpe_cte_block() + "\n"
 
-BPE_MERGES_ORACLE = _BPE_CTES + " UNION ALL ".join(
-    f"SELECT {r} AS merge_round, a AS sym_a, b AS sym_b,"
-    f" CAST(pc AS BIGINT) AS pair_count FROM m{r}"
-    for r in range(1, BPE_ROUNDS + 1)
-)
 
 BPE_VOCAB_ORACLE = _BPE_CTES + f"""
 SELECT tok AS token, CAST(SUM(freq) AS BIGINT) AS corpus_count,
@@ -1500,25 +818,6 @@ def _bpe_trained(spark: SparkSession, sf_dir: str):
     docs = Catalog(spark, sf_dir).documents
     wc = scoped_persist(word_counts(docs))
     return bpe_train(wc, BPE_ROUNDS)
-
-
-@query("bpe_train_merges", oracle=BPE_MERGES_ORACLE)
-def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The learned merge table: round, symbol pair, exact weighted pair
-    count. K rows assembled from K one-row control-plane argmax
-    collects (the per-round scalar handoff — the corpus never crosses
-    the driver; the word dictionary never does either).
-
-    Scale: ONE corpus-sized shuffle total (word_counts, map-side
-    combined); each of the 8 rounds is a dictionary-sized integer-sum
-    shuffle. At 100 TB the dictionary is Heaps-law sub-linear and the
-    round cost is independent of corpus growth past it — measured flat
-    vs corpus in the 100x slope row.
-    """
-    merges, _ = _bpe_trained(spark, sf_dir)
-    return spark.createDataFrame(
-        merges, "merge_round int, sym_a string, sym_b string, pair_count bigint"
-    )
 
 
 @query("bpe_vocab_top", oracle=BPE_VOCAB_ORACLE)
@@ -1607,8 +906,8 @@ def bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 # This audit trains twice (full corpus vs md5-gated half) and compares
 # the merge tables round by round, in-engine and oracle-replayed: the
 # agreement column is the measured answer to "was the sample
-# representative", the same philosophy as dedup_minhash_recall
-# (measure the approximation against truth, don't assert it).
+# representative" (measure the approximation against truth, don't
+# assert it).
 
 BPE_SAMPLE_FILTER_SQL = (
     "WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)"

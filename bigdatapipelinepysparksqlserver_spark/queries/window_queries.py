@@ -1,7 +1,7 @@
 """Analytic window-function surface: offset functions (lag/lead), framed
-moving aggregates, and exact interpolated percentiles — each with a DuckDB
-oracle twin. Orders are made TOTAL with an (ts, event_id) tie-break so the
-two engines agree row-for-row.
+moving aggregates, SCD2 history and point-in-time joins — each with a
+DuckDB oracle twin. Orders are made TOTAL with an (ts, event_id)
+tie-break so the two engines agree row-for-row.
 """
 
 from __future__ import annotations
@@ -51,243 +51,6 @@ def event_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         (us - F.lag(us).over(w)).alias("gap_us"),
         F.lead("event_type").over(w).alias("next_type"),
         F.round(F.avg("value").over(frame), 6).alias("moving_avg"),
-    )
-
-
-# --------------------------------------------------------------------------
-# exact interpolated percentiles (the sketch twin is sketch_price_quantiles)
-# --------------------------------------------------------------------------
-
-PRICE_PERCENTILES_ORACLE = """
-SELECT l_returnflag,
-       ROUND(quantile_cont(l_extendedprice, 0.25), 6) AS p25,
-       ROUND(quantile_cont(l_extendedprice, 0.50), 6) AS p50,
-       ROUND(quantile_cont(l_extendedprice, 0.75), 6) AS p75
-FROM lineitem
-GROUP BY l_returnflag
-"""
-
-
-@query("price_percentiles", oracle=PRICE_PERCENTILES_ORACLE)
-def price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact linear-interpolated quartiles of extended price per return
-    flag (Spark ``percentile`` ≡ DuckDB ``quantile_cont``).
-
-    Scale: exact percentile buffers each group's values — fine for a
-    handful of groups, wrong for high-cardinality ones; the registered
-    ``sketch_price_quantiles`` (approx_percentile / GK sketch) is the
-    100 TB path, this query is its exact twin for auditability.
-    """
-    li = Catalog(spark, sf_dir).lineitem
-    # ONE percentile aggregate with an array argument — one sort buffer per
-    # group instead of three; the post-agg projection splits the array.
-    ps = F.percentile("l_extendedprice", F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)))
-    return (
-        li.groupBy("l_returnflag")
-        .agg(ps.alias("__ps"))
-        .select(
-            "l_returnflag",
-            *[
-                F.round(F.element_at("__ps", i + 1), 6).alias(p)
-                for i, p in enumerate(("p25", "p50", "p75"))
-            ],
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# semi-structured (JSON) property extraction — §2.7 function surface
-# --------------------------------------------------------------------------
-
-JSON_PROPS_ORACLE = """
-SELECT event_type,
-       CAST(SUM(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS k_sum,
-       ROUND(AVG(CAST(json_extract(props, '$.k') AS BIGINT)), 6) AS k_avg,
-       COUNT(*) AS n
-FROM events
-GROUP BY event_type
-"""
-
-
-@query("json_props_agg", oracle=JSON_PROPS_ORACLE)
-def json_props_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Typed extraction from the semi-structured ``props`` JSON column,
-    aggregated per event type.
-
-    Scale: ``get_json_object`` is a JVM-side path evaluation (no Python,
-    no full JSON parse into a struct — single-path extraction). For hot
-    multi-key access at 100 TB, promote to ``from_json`` with an explicit
-    schema once per row instead of N path scans; with one key, the path
-    form is the cheaper plan. The extraction happens BELOW the aggregate,
-    so the shuffle carries (type, long), never the JSON string.
-    """
-    ev = Catalog(spark, sf_dir).events
-    k = F.get_json_object(F.col("props"), "$.k").cast("long")
-    return ev.groupBy("event_type").agg(
-        F.sum(k).alias("k_sum"),
-        F.round(F.avg(k), 6).alias("k_avg"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
-# --------------------------------------------------------------------------
-# NTILE: per-nation customer spend quartiles — §2 window-function surface
-# --------------------------------------------------------------------------
-
-SPEND_QUARTILES_ORACLE = """
-WITH spend AS (
-  SELECT n.n_name, c.c_custkey,
-         CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS spend
-  FROM orders o
-  JOIN customer c ON c.c_custkey = o.o_custkey
-  JOIN nation n ON n.n_nationkey = c.c_nationkey
-  GROUP BY n.n_name, c.c_custkey
-)
-SELECT n_name, c_custkey, spend,
-       CAST(NTILE(4) OVER (
-         PARTITION BY n_name ORDER BY spend DESC, c_custkey ASC
-       ) AS INT) AS quartile
-FROM spend
-"""
-
-
-@query("customer_spend_quartiles", oracle=SPEND_QUARTILES_ORACLE)
-def customer_spend_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-nation customer spend quartiles via NTILE(4) — the bucketed
-    ranking shape (loyalty tiers, spend segmentation) completing the
-    window-function surface next to rank/lag/percentile. Deterministic
-    tie-break (spend DESC, custkey ASC) makes bucket boundaries
-    engine-identical.
-
-    Scale: the window partitions by NATION — never a global
-    single-partition sort (banned suite-wide). The per-nation total
-    order is real work (≈ customers/nations rows per task); at 100 TB
-    segment-by-quantile instead via approx percentiles per nation
-    (``price_percentiles`` pattern) — NTILE is the exact-assignment
-    form for domains that fit a partition, which nation-sized customer
-    sets do.
-    """
-    cat = Catalog(spark, sf_dir)
-    spend = (
-        cat.orders.join(
-            F.broadcast(cat.customer.select("c_custkey", "c_nationkey")),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .join(
-            F.broadcast(cat.nation.select("n_nationkey", "n_name")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .groupBy("n_name", "c_custkey")
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("spend")
-        )
-    )
-    w = Window.partitionBy("n_name").orderBy(
-        F.col("spend").desc(), F.col("c_custkey").asc()
-    )
-    return spend.select(
-        "n_name", "c_custkey", "spend",
-        F.ntile(4).over(w).cast("int").alias("quartile"),
-    )
-
-
-# --------------------------------------------------------------------------
-# behavior-sequence building: per-user ordered event-type sequences
-# --------------------------------------------------------------------------
-
-_SEQ_K = 20
-
-USER_EVENT_SEQUENCES_ORACLE = f"""
-SELECT user_id,
-       array_to_string(LIST(event_type ORDER BY ts, event_id)[1:{_SEQ_K}], ' ')
-         AS seq,
-       CAST(LEAST(COUNT(*), {_SEQ_K}) AS INT) AS seq_len
-FROM events
-GROUP BY user_id
-"""
-
-
-@query("user_event_sequences", oracle=USER_EVENT_SEQUENCES_ORACLE)
-def user_event_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user ordered behavior sequences — each user's first
-    {_SEQ_K} events (by (ts, event_id), a total order) rendered as an
-    event-type string: the sequence-corpus building step behind
-    behavioral/recommendation model training.
-
-    Scale: the sequence is TRUNCATED BEFORE collection — a row_number
-    window keeps rank ≤ K, so per-user state is bounded by K
-    everywhere (collect-then-slice would buffer each user's full
-    history in one aggregation row — unbounded at 100 TB). The window
-    and the groupBy share one user_id exchange (the ``sessionize``
-    pattern)."""
-    ev = Catalog(spark, sf_dir).events
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").asc(), F.col("event_id").asc()
-    )
-    ranked = (
-        ev.select("user_id", "ts", "event_id", "event_type")
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= _SEQ_K)
-    )
-    return ranked.groupBy("user_id").agg(
-        F.expr(
-            "array_join(transform(array_sort(collect_list(struct(rn, event_type))),"
-            " x -> x.event_type), ' ')"
-        ).alias("seq"),
-        F.count(F.lit(1)).cast("int").alias("seq_len"),
-    )
-
-
-EVENTS_HOPPING_ORACLE = """
-WITH x AS (
-  SELECT TIMESTAMP '1970-01-01'
-           + to_seconds(900 * (CAST(floor(epoch(ts) / 900) AS BIGINT) - t.k))
-           AS window_start,
-         event_type, value
-  FROM events e, UNNEST(range(4)) t(k)
-)
-SELECT window_start, event_type, COUNT(*) AS event_count,
-       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_sum
-FROM x GROUP BY 1, 2
-"""
-
-
-@query("events_hopping_agg", oracle=EVENTS_HOPPING_ORACLE)
-def events_hopping_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HOPPING (sliding) window aggregation: 1-hour windows advancing
-    every 15 minutes — each event lands in exactly 4 overlapping
-    windows (`F.window(ts, '1 hour', '15 minutes')`; the oracle
-    replays the window-assignment math as epoch arithmetic over
-    UNNEST(range(4)), in NAIVE timestamp space so no engine applies a
-    session timezone). Completes the window-shape family next to the
-    tumbling (`events_hourly_agg`) and session
-    (`sessionize_session_window`) forms; the same expression runs
-    streaming with a watermark.
-
-    Scale: Spark plans the slide as a 4-row Expand below ONE
-    aggregation — a single shuffle on (window, type) keys, partials
-    map-side-combined; state in streaming mode is bounded by
-    (horizon/slide) × key cardinality.
-    """
-    ev = Catalog(spark, sf_dir).events
-    return (
-        ev.groupBy(
-            F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type"
-        )
-        .agg(
-            F.count(F.lit(1)).alias("event_count"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("value_sum"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "event_count",
-            "value_sum",
-        )
     )
 
 

@@ -103,13 +103,6 @@ class ExpectationError(ValueError):
         )
 
 
-class CdfGapError(RuntimeError):
-    """The writer-recorded change-data feed cannot cover the requested
-    snapshot range (a publish recorded no CDF, a manifest aged out, or
-    the lineage crossed a rollback). Recoverable: fall back to
-    ``snapshot_diff_rows``, which recomputes the diff by scanning the
-    changed partitions."""
-
 # Hive/Spark partition-path escaping (ADVICE r9): the writer escapes
 # these characters as %XX in partition directory names (Spark's
 # ExternalCatalogUtils.escapePathName, mirroring Hive FileUtils), and a
@@ -218,9 +211,9 @@ def _merge_schema(prior, new):
     plus safe type WIDENING on existing columns (see :func:`_widened`;
     the merged schema records the wider type and readers upcast narrow
     history in place). Anything else — narrowing-only-one-way is fine,
-    but an incompatible change (string -> int, double -> decimal,
-    column rename) — is refused by name: rewriting history is a
-    migration, not an evolution."""
+    but an incompatible change (string -> int, double -> decimal) — is
+    refused by name: rewriting history is a migration, not an
+    evolution."""
     if prior is None:
         return new
     from pyspark.sql.types import StructField, StructType
@@ -706,51 +699,6 @@ class SnapshotLakeTable:
             for r in typed
         }
 
-    @staticmethod
-    def _current_name_of(name: str, renames) -> str:
-        """Follow the rename chain forward from a (possibly retired)
-        name to its current spelling."""
-        for _at, frm, to in renames:
-            if frm == name:
-                name = to
-        return name
-
-    @classmethod
-    def _check_retired(cls, cols, retired, renames) -> None:
-        """Refuse any incoming column spelled as a RETIRED physical
-        name: files written before the rename still carry that column,
-        so a new field under the same name would silently read their
-        stale bytes (the no-reuse rule that makes name-based rename
-        sound without parquet field IDs)."""
-        reused = sorted(set(cols) & set(retired))
-        if reused:
-            hints = ", ".join(
-                f"{n!r} (renamed to {cls._current_name_of(n, renames)!r})"
-                for n in reused
-            )
-            raise ValueError(
-                f"publish rejected: column name(s) {hints} were "
-                "renamed away and a physical name is never reused "
-                "(files written before the rename still carry it); "
-                "use the current name"
-            )
-
-    @staticmethod
-    def _physical_map(names, renames, file_txn: int) -> dict[str, str]:
-        """{current field name -> physical column name} for data files
-        written at ``file_txn``, by unwinding every rename NEWER than
-        the file (renames are metadata-only: a file keeps the column
-        names current when it was written, forever). ``renames`` is the
-        doc-recorded chronological ``[[at_txn, from, to], ...]``."""
-        phys = {n: n for n in names}
-        for at, frm, to in reversed(renames):
-            if at > file_txn:
-                for cur, p in phys.items():
-                    if p == to:
-                        phys[cur] = frm
-                        break
-        return phys
-
     def live_schema(self):
         """The live snapshot's full (evolved) schema: the manifest's
         recorded schema when present, else the declared one."""
@@ -808,61 +756,17 @@ class SnapshotLakeTable:
         txns, stats = self._read_manifest_full(cur)
         return self._prune_txns(txns, stats, ranges)
 
-    def _scan_rels(
-        self, man: dict[str, int], rels, rec=None, renames=None
-    ) -> DataFrame:
+    def _scan_rels(self, man: dict[str, int], rels, rec=None) -> DataFrame:
         """Explicit-path scan of manifest entries. ``rec`` (a recorded
         evolved schema) makes files missing later-added columns fill
-        NULL; the discovered ``txn`` partition level is dropped.
-        ``renames`` (the doc's rename history) reads files that predate
-        a column rename under their PHYSICAL names and aliases them to
-        the current ones — rels are grouped by owning-txn rename
-        signature, so the number of scans is bounded by the number of
-        rename events (tiny), never the partition count."""
+        NULL; the discovered ``txn`` partition level is dropped."""
         if not rels:
             return self.spark.createDataFrame([], rec or self.schema)
-        names = [f.name for f in rec.fields] if rec is not None else []
-        groups: dict = {}
-        for rel in sorted(rels):
-            sig = None
-            if rec is not None and renames:
-                pm = self._physical_map(names, renames, man[rel])
-                if any(k != v for k, v in pm.items()):
-                    sig = tuple(pm[n] for n in names)
-            groups.setdefault(sig, []).append(rel)
-        from pyspark.sql.types import StructField, StructType
-
-        frames = []
-        for sig in sorted(groups, key=lambda s: (s is not None, s)):
-            paths = [
-                f"{self.root}/data/txn={man[rel]}/{rel}" for rel in groups[sig]
-            ]
-            reader = self.spark.read.option("basePath", f"{self.root}/data")
-            if rec is None:
-                frames.append(reader.parquet(*paths).drop("txn"))
-                continue
-            if sig is None:
-                frames.append(reader.schema(rec).parquet(*paths).drop("txn"))
-                continue
-            phys_schema = StructType(
-                [
-                    StructField(p, f.dataType, f.nullable, f.metadata)
-                    for p, f in zip(sig, rec.fields)
-                ]
-            )
-            df = reader.schema(phys_schema).parquet(*paths).drop("txn")
-            frames.append(
-                df.select(
-                    *[
-                        F.col(p).alias(f.name)
-                        for p, f in zip(sig, rec.fields)
-                    ]
-                )
-            )
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
+        paths = [f"{self.root}/data/txn={man[rel]}/{rel}" for rel in sorted(rels)]
+        reader = self.spark.read.option("basePath", f"{self.root}/data")
+        if rec is not None:
+            reader = reader.schema(rec)
+        return reader.parquet(*paths).drop("txn")
 
     def read_pruned(self, ranges: dict) -> DataFrame:
         """Scan the live snapshot restricted to partitions whose zone
@@ -882,9 +786,7 @@ class SnapshotLakeTable:
         doc = self._read_manifest_doc(cur)
         txns, stats = self._read_manifest_full(cur, doc=doc)
         keep = self._prune_txns(txns, stats, ranges)
-        return self._scan_rels(
-            keep, list(keep), self._schema_from_doc(doc), doc.get("renames")
-        )
+        return self._scan_rels(keep, list(keep), self._schema_from_doc(doc))
 
     def read_where(self, predicate: str) -> DataFrame:
         """Zone-map-aware scan from a plain SQL predicate (VERDICT r10
@@ -934,10 +836,8 @@ class SnapshotLakeTable:
         metadata — no file listing, no data scan. Columns: the
         snapshot id, the parent it was composed against, whether it is
         live, partition / freshly-written-partition counts, zone-map
-        coverage, schema width, cumulative rename count, whether the
-        publish was row-neutral (a rename), and whether it recorded a
-        change-data feed. The operational first stop before
-        ``read_snapshot`` / ``rollback`` / ``changes_between``."""
+        coverage and schema width. The operational first stop before
+        ``read_snapshot`` / ``rollback`` / ``snapshot_diff_rows``."""
         rows = []
         cur = self.current_id()
         for mid in self._manifest_ids():
@@ -953,17 +853,13 @@ class SnapshotLakeTable:
                     sum(1 for t in txns.values() if t == mid),
                     len(stats),
                     None if sch is None else len(sch.fields),
-                    len(doc.get("renames", []) or []),
-                    bool(doc.get("no_row_changes")),
-                    self.fs.is_dir(f"{self.root}/data/txn={mid}/_cdf"),
                 )
             )
         return self.spark.createDataFrame(
             sorted(rows, reverse=True),
             "snapshot_id int, parent int, is_live boolean, "
             "partitions int, partitions_written int, zoned_partitions int, "
-            "schema_columns int, renames int, row_neutral boolean, "
-            "has_cdf boolean",
+            "schema_columns int",
         )
 
     def read_snapshot(self, mid: int) -> DataFrame:
@@ -974,14 +870,10 @@ class SnapshotLakeTable:
         read is exactly the table as of that publish ("what did the
         June partitions look like before this morning's CDC run").
         Time travel reads under the snapshot's OWN recorded schema —
-        a later evolution does not retroactively add columns, and a
-        later RENAME does not retroactively rename them (each doc
-        carries its own rename history)."""
+        a later evolution does not retroactively add columns."""
         doc = self._read_manifest_doc(mid)
         m, _ = self._read_manifest_full(mid, doc=doc)
-        return self._scan_rels(
-            m, list(m), self._schema_from_doc(doc), doc.get("renames")
-        )
+        return self._scan_rels(m, list(m), self._schema_from_doc(doc))
 
     def snapshot_diff(self, from_mid: int, to_mid: int) -> dict:
         """What changed between two retained snapshots, at PARTITION
@@ -1005,12 +897,7 @@ class SnapshotLakeTable:
         comparison is ``exceptAll`` both ways (duplicate-correct).
         Across a schema evolution both sides read under the MERGED
         schema, so a pre-evolution row diffs with NULL in the later
-        columns rather than failing to align; across a column RENAME
-        the diff is reported under the ``to`` snapshot's (current)
-        names. The two snapshots must share a rename lineage (the
-        ``from`` doc's rename history a prefix of the ``to`` doc's) —
-        diffing across a rollback that abandoned a rename is refused
-        rather than silently mis-aligned."""
+        columns rather than failing to align."""
         a_doc = self._read_manifest_doc(from_mid)
         b_doc = self._read_manifest_doc(to_mid)
         a, _ = self._read_manifest_full(from_mid, doc=a_doc)
@@ -1020,38 +907,10 @@ class SnapshotLakeTable:
         new_rels = d["added"] + d["rewritten"]
         sa = self._schema_from_doc(a_doc)
         sb = self._schema_from_doc(b_doc)
-        a_ren = a_doc.get("renames", []) or []
-        b_ren = b_doc.get("renames", []) or []
-        if a_ren != b_ren[: len(a_ren)]:
-            raise ValueError(
-                f"snapshots m{from_mid} and m{to_mid} are on divergent "
-                "rename lineages (a rollback abandoned a rename between "
-                "them); re-derive the diff from reads of each snapshot"
-            )
-        if sa is not None and b_ren:
-            # express the from-side schema under the to-side's names
-            # (renames recorded AFTER from_mid applied forward) so the
-            # merge/diff aligns renamed columns instead of treating the
-            # rename as a drop+add
-            from pyspark.sql.types import StructField, StructType
-
-            pairs = [[f.name, f] for f in sa.fields]
-            for at, frm, to in b_ren:
-                if at > from_mid:
-                    for p in pairs:
-                        if p[0] == frm:
-                            p[0] = to
-                            break
-            sa = StructType(
-                [
-                    StructField(n, f.dataType, f.nullable, f.metadata)
-                    for n, f in pairs
-                ]
-            )
         merged = sa if sb is None else (_merge_schema(sa, sb) if sa else sb)
 
-        old_df = self._scan_rels(a, old_rels, merged, b_ren)
-        new_df = self._scan_rels(b, new_rels, merged, b_ren)
+        old_df = self._scan_rels(a, old_rels, merged)
+        new_df = self._scan_rels(b, new_rels, merged)
         cols = new_df.columns
         return (
             new_df.exceptAll(old_df.select(cols))
@@ -1062,132 +921,6 @@ class SnapshotLakeTable:
                 .withColumn("change", F.lit("delete"))
             )
         )
-
-    def changes_between(self, from_mid: int, to_mid: int) -> DataFrame:
-        """The writer-RECORDED change-data feed between two snapshots
-        (VERDICT r10 #5): the union of every publish's ``changes``
-        record along the parent chain to_mid → … → from_mid. Unlike
-        :meth:`snapshot_diff_rows` — which must SCAN both versions of
-        every changed partition to recompute the diff by exceptAll —
-        this reads only the recorded diff rows themselves, so the cost
-        is ∝ diff ROWS at any partition size: the regime where one hot
-        month holds 90k rows and the change is 2k.
-
-        The chain is walked by each manifest's recorded ``parent`` (the
-        snapshot the publish was composed against), so it is correct
-        across rollbacks and skipped ids. Raises :class:`CdfGapError`
-        when any hop lacks a recorded CDF (or a manifest aged out of
-        the retain window) — callers fall back to
-        :meth:`snapshot_diff_rows`, which is always available."""
-        from pyspark.sql.types import StringType, StructField, StructType
-
-        if to_mid == from_mid:
-            rec = self._manifest_schema(to_mid)
-            base = rec or self.spark.createDataFrame([], self.schema).schema
-            empty = StructType(
-                list(base.fields) + [StructField("change", StringType())]
-            )
-            return self.spark.createDataFrame([], empty)
-        chain: list[int] = []
-        cur = to_mid
-        while cur != from_mid:
-            if cur < from_mid:
-                raise CdfGapError(
-                    f"snapshot m{to_mid}'s parent chain reached m{cur} "
-                    f"without passing m{from_mid} — the lineage between "
-                    "them crossed a rollback or a full rewrite; use "
-                    "snapshot_diff_rows"
-                )
-            try:
-                doc = self._read_manifest_doc(cur)
-            except FileNotFoundError as e:  # aged out of the retain
-                # window — the one RECOVERABLE miss. Anything else
-                # (corrupt JSON, fs faults) propagates: downgrading an
-                # infrastructure error to the scan fallback would just
-                # re-hit it with a more confusing stack.
-                raise CdfGapError(
-                    f"manifest m{cur} is not readable (reaped past the "
-                    f"retain window?): {e}; use snapshot_diff_rows "
-                    "between retained snapshots"
-                ) from e
-            if not doc.get("no_row_changes"):
-                chain.append(cur)
-            parent = doc.get("parent")
-            if parent is None or parent >= cur:
-                raise CdfGapError(
-                    f"snapshot m{cur} records no usable parent — "
-                    "published before CDF support or a first publish; "
-                    "use snapshot_diff_rows"
-                )
-            if cur == to_mid:
-                to_doc = doc
-            cur = parent
-        for i in chain:
-            if not self.fs.is_dir(f"{self.root}/data/txn={i}/_cdf"):
-                raise CdfGapError(
-                    f"publish m{i} recorded no change-data feed (pass "
-                    "changes= at publish time); use snapshot_diff_rows"
-                )
-        rec = self._schema_from_doc(to_doc)
-        renames = to_doc.get("renames", []) or []
-        if rec is None:
-            if not chain:
-                base = self.spark.createDataFrame([], self.schema).schema
-                return self.spark.createDataFrame(
-                    [],
-                    StructType(
-                        list(base.fields)
-                        + [StructField("change", StringType())]
-                    ),
-                )
-            return self.spark.read.parquet(
-                *[f"{self.root}/data/txn={i}/_cdf" for i in chain]
-            )
-        full = StructType(
-            list(rec.fields) + [StructField("change", StringType())]
-        )
-        if not chain:
-            return self.spark.createDataFrame([], full)
-        # a hop's CDF files carry the column names current AT that
-        # publish; group hops by rename signature and alias back to the
-        # to-side (current) names — same per-group discipline as
-        # _scan_rels, bounded by the rename count
-        names = [f.name for f in full.fields]
-        groups: dict = {}
-        for i in chain:
-            pm = self._physical_map(names, renames, i)
-            sig = (
-                tuple(pm[n] for n in names)
-                if any(k != v for k, v in pm.items())
-                else None
-            )
-            groups.setdefault(sig, []).append(i)
-        frames = []
-        for sig, hops in groups.items():
-            paths = [f"{self.root}/data/txn={i}/_cdf" for i in hops]
-            if sig is None:
-                frames.append(self.spark.read.schema(full).parquet(*paths))
-                continue
-            phys = StructType(
-                [
-                    StructField(p, f.dataType, f.nullable, f.metadata)
-                    for p, f in zip(sig, full.fields)
-                ]
-            )
-            frames.append(
-                self.spark.read.schema(phys)
-                .parquet(*paths)
-                .select(
-                    *[
-                        F.col(p).alias(f.name)
-                        for p, f in zip(sig, full.fields)
-                    ]
-                )
-            )
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
 
     def rollback(self, mid: int) -> int:
         """Point the live pointer BACK at a retained manifest — the
@@ -1216,9 +949,7 @@ class SnapshotLakeTable:
             return self._scan_rels({}, [])
         doc = self._read_manifest_doc(cur)
         m, _ = self._read_manifest_full(cur, doc=doc)
-        return self._scan_rels(
-            m, list(m), self._schema_from_doc(doc), doc.get("renames")
-        )
+        return self._scan_rels(m, list(m), self._schema_from_doc(doc))
 
     def partitions(self) -> DataFrame:
         """Distinct live partition values — decoded from the MANIFEST
@@ -1254,21 +985,16 @@ class SnapshotLakeTable:
         """Initial full load: one txn owning every partition."""
         return self._publish(df, replace_all=True)
 
-    def overwrite_partitions(
-        self, df: DataFrame, changes: DataFrame | None = None
-    ) -> list[str]:
+    def overwrite_partitions(self, df: DataFrame) -> list[str]:
         """M6 twin: replace exactly the partitions present in ``df``,
         atomically for readers (one pointer swap, not one commit per
-        partition). ``changes`` optionally records the writer's
-        change-data feed for this publish (insert/delete rows with a
-        ``change`` column) — see :meth:`changes_between`."""
-        return self._publish(df, replace_all=False, changes=changes)
+        partition)."""
+        return self._publish(df, replace_all=False)
 
     def apply_rebuild(
         self,
         df: DataFrame,
         changed_year_months: Sequence | None = None,
-        changes: DataFrame | None = None,
     ) -> list[str]:
         """One CDC rebuild as ONE visibility event: write ``df``'s
         partitions to a fresh txn and swap in a manifest where every
@@ -1278,10 +1004,7 @@ class SnapshotLakeTable:
         stale-partition-drop two-step — and removes the extra
         distinct-partitions Spark job the two-step needed."""
         return self._publish(
-            df,
-            replace_all=False,
-            changed_year_months=changed_year_months,
-            changes=changes,
+            df, replace_all=False, changed_year_months=changed_year_months
         )
 
     def drop_partition_values(self, rows: Sequence[Sequence]) -> None:
@@ -1305,97 +1028,12 @@ class SnapshotLakeTable:
             rels.add(rel if rel is not None else self._rel_of(vals))
         self._publish_manifest({r: t for r, t in cur.items() if r not in rels})
 
-    def rename_column(self, old: str, new: str) -> int:
-        """Column RENAME as pure metadata (no data rewrite): publish a
-        manifest whose recorded schema, zone maps, and rename history
-        carry ``old`` -> ``new``; every reader maps files written
-        before the rename back to their physical column name on the
-        fly (``_scan_rels``). Completes the evolution lattice next to
-        additive columns and type widening.
-
-        Name-mapping discipline (the table-format rule that makes
-        name-based rename sound without parquet field IDs): a renamed-
-        away name is RETIRED forever — a later publish or rename
-        reusing it is refused, because files written before the rename
-        still carry that physical column and a new field with the same
-        name would silently read their stale bytes. Partition columns
-        cannot be renamed (their name is the directory layout).
-
-        Row-neutral: the manifest records ``no_row_changes``, so
-        :meth:`changes_between` crosses the rename as an empty hop
-        (with later hops' CDF files name-mapped) instead of raising.
-        Returns the published manifest id."""
-        cur = self.current_id()
-        if cur is None:
-            raise ValueError(
-                "rename_column needs a live snapshot (write_full first)"
-            )
-        if old in self.partition_cols or new in self.partition_cols:
-            raise ValueError(
-                f"cannot rename partition column {old!r} -> {new!r}: "
-                "partition names are the directory layout"
-            )
-        doc = self._read_manifest_doc(cur)
-        txns, stats = self._read_manifest_full(cur, doc=doc)
-        schema = self._schema_from_doc(doc)
-        if schema is None:
-            schema = self.spark.createDataFrame([], self.schema).schema
-        names = [f.name for f in schema.fields]
-        if old not in names:
-            raise ValueError(f"no column {old!r} to rename (have {names})")
-        if new in names:
-            raise ValueError(f"rename target {new!r} already exists")
-        retired = doc.get("retired", []) or []
-        if new in retired:
-            raise ValueError(
-                f"rename target {new!r} is a retired physical name "
-                "(files written before its rename still carry it); "
-                "pick a fresh name"
-            )
-        from pyspark.sql.types import StructField, StructType
-
-        nxt, observed = self._proto.begin()
-        if self._proto._parse(observed) != cur:
-            self._proto.abort(nxt)
-            raise ConcurrentPublishError(
-                f"snapshot moved (expected m{cur}) during rename; retry"
-            )
-        new_schema = StructType(
-            [
-                StructField(
-                    new if f.name == old else f.name,
-                    f.dataType,
-                    f.nullable,
-                    f.metadata,
-                )
-                for f in schema.fields
-            ]
-        )
-        new_stats = {
-            rel: {(new if c == old else c): z for c, z in zones.items()}
-            for rel, zones in stats.items()
-        }
-        renames = list(doc.get("renames", []) or []) + [[nxt, old, new]]
-        self._commit_manifest(
-            txns, nxt, observed, new_stats, new_schema,
-            renames=renames, retired=retired + [old],
-            no_row_changes=True,
-        )
-        # keep this instance's zone-probe config aligned; other
-        # instances probing the old name just lose pruning (zones keyed
-        # by the new name no longer match), which is conservative
-        self.stats_cols = tuple(
-            new if c == old else c for c in self.stats_cols
-        )
-        return nxt
-
     def merge_rows(
         self,
         source: DataFrame,
         key_cols: Sequence[str],
         delete_col: str | None = None,
         validate_keys: bool = True,
-        record_changes: bool = True,
         broadcast_keys: bool = True,
     ) -> dict:
         """Row-level MERGE by key — the lakehouse upsert/delete DML the
@@ -1417,11 +1055,11 @@ class SnapshotLakeTable:
         2. net change = batch-sized ``exceptAll`` both ways between the
            matched old rows and the upserts — an upsert identical to
            its live row cancels out, so untouched-in-practice
-           partitions are NOT rewritten and the recorded CDF equals
+           partitions are NOT rewritten and the net change equals
            ``snapshot_diff_rows`` exactly;
         3. rewrite ONLY partitions carrying a net change (old rows
-           minus net deletes, plus net inserts), publish with the net
-           CDF; a partition merged to empty drops from the manifest.
+           minus net deletes, plus net inserts) in one publish; a
+           partition merged to empty drops from the manifest.
 
         The publish verifies the snapshot hasn't moved since the change
         set was computed (``expect_mid``) and raises the retryable
@@ -1429,9 +1067,9 @@ class SnapshotLakeTable:
         keys must be unique (checked unless ``validate_keys=False``);
         multiple LIVE rows sharing a key all collapse to the single
         source row. Source columns follow the evolution rules (missing
-        table columns fill NULL, widened types merge, retired names are
-        refused). Set ``broadcast_keys=False`` when the batch is too
-        large to broadcast (the locate join then shuffles both sides).
+        table columns fill NULL, widened types merge). Set
+        ``broadcast_keys=False`` when the batch is too large to broadcast
+        (the locate join then shuffles both sides).
         Returns {"written": [...], "replaced": [...]}."""
         key_cols = list(key_cols)
         cur = self.current_id()
@@ -1441,10 +1079,6 @@ class SnapshotLakeTable:
             )
         doc = self._read_manifest_doc(cur)
         txns, stats = self._read_manifest_full(cur, doc=doc)
-        renames = doc.get("renames", []) or []
-        self._check_retired(
-            source.columns, doc.get("retired", []) or [], renames
-        )
         rec = self._schema_from_doc(doc)
         if rec is None:
             rec = self.spark.createDataFrame([], self.schema).schema
@@ -1538,7 +1172,7 @@ class SnapshotLakeTable:
                 }
                 cand = self._prune_txns(txns, stats, rngs)
             loc = semi_on_keys(
-                self._scan_rels(cand, list(cand), merged, renames).select(
+                self._scan_rels(cand, list(cand), merged).select(
                     *key_cols, *self.partition_cols
                 )
             ).select(*self.partition_cols).distinct().collect()
@@ -1562,7 +1196,7 @@ class SnapshotLakeTable:
                 )
             matched_rels = sorted({rel_index[t] for t in loc_tuples})
             matched_old = semi_on_keys(
-                self._scan_rels(txns, matched_rels, merged, renames)
+                self._scan_rels(txns, matched_rels, merged)
             )
             # 2. net change (batch-sized both sides)
             net_del = matched_old.exceptAll(upserts).persist()
@@ -1591,19 +1225,13 @@ class SnapshotLakeTable:
             )
             # 3. rewrite only net-affected partitions
             content = (
-                self._scan_rels(txns, aff_rels, merged, renames)
+                self._scan_rels(txns, aff_rels, merged)
                 .exceptAll(net_del)
                 .unionByName(net_ins)
             )
-            cdf = None
-            if record_changes:
-                cdf = net_del.withColumn(
-                    "change", F.lit("delete")
-                ).unionByName(net_ins.withColumn("change", F.lit("insert")))
             written = self._publish(
                 content,
                 replace_all=False,
-                changes=cdf,
                 replace_rels=set(aff_rels),
                 expect_mid=cur,
             )
@@ -1668,15 +1296,9 @@ class SnapshotLakeTable:
         df: DataFrame,
         replace_all: bool,
         changed_year_months: Sequence | None = None,
-        changes: DataFrame | None = None,
         replace_rels: "set[str] | None" = None,
         expect_mid=...,
     ) -> list[str]:
-        if changes is not None and "change" not in changes.columns:
-            raise ValueError(
-                "changes (the CDF record) must carry a 'change' column "
-                "('insert' | 'delete'; an update is delete+insert)"
-            )
         if replace_rels is not None and changed_year_months is not None:
             raise ValueError(
                 "replace_rels and changed_year_months are exclusive"
@@ -1692,7 +1314,7 @@ class SnapshotLakeTable:
         if expect_mid is not ... and prior_id != expect_mid:
             # the caller composed its change set against a snapshot
             # that is no longer live (merge_rows resolves the snapshot
-            # once and derives replaced partitions + CDF from it) —
+            # once and derives the replaced partitions from it) —
             # proceeding would publish a stale delta over someone
             # else's rows. Same retryable contract as the commit CAS.
             self._proto.abort(nxt)
@@ -1708,20 +1330,7 @@ class SnapshotLakeTable:
             )
             prior_schema = self._schema_from_doc(prior_doc)
         else:
-            prior_doc = {}
             prior_txns, prior_stats, prior_schema = {}, {}, None
-        if replace_all:
-            # a full rewrite references only its own txn, so no mixed
-            # old/new files remain and the rename namespace resets
-            renames, retired = [], []
-        else:
-            renames = prior_doc.get("renames", []) or []
-            retired = prior_doc.get("retired", []) or []
-            try:
-                self._check_retired(df.columns, retired, renames)
-            except ValueError:
-                self._proto.abort(nxt)
-                raise
         # one file per partition, same repartition as LakeTable's
         # writer; the write is invisible — nothing references txn=<nxt>
         # yet
@@ -1748,13 +1357,6 @@ class SnapshotLakeTable:
                 .parquet(txn_dir)
             )
             written = self._walk_partitions(txn_dir, len(self.partition_cols))
-            if changes is not None:
-                # writer-recorded change-data feed: part of the txn's
-                # immutable artifacts (invisible until the pointer
-                # swap, reaped with the txn). The `_cdf` name starts
-                # with '_' so partition walks and explicit-path scans
-                # never see it as data.
-                changes.write.mode("append").parquet(f"{txn_dir}/_cdf")
         except Exception:
             self._proto.abort(nxt)
             raise
@@ -1801,10 +1403,7 @@ class SnapshotLakeTable:
         }
         if self.stats_cols and written:
             stats.update(self._collect_stats(txn_dir, written, rec_schema))
-        self._commit_manifest(
-            manifest, nxt, observed, stats, rec_schema,
-            renames=renames, retired=retired,
-        )
+        self._commit_manifest(manifest, nxt, observed, stats, rec_schema)
         return written
 
     def _collect_stats(
@@ -1891,10 +1490,7 @@ class SnapshotLakeTable:
             prior_doc, prior_stats = {}, {}
         stats = {rel: prior_stats[rel] for rel in manifest if rel in prior_stats}
         self._commit_manifest(
-            manifest, nxt, observed, stats,
-            self._schema_from_doc(prior_doc),
-            renames=prior_doc.get("renames", []) or [],
-            retired=prior_doc.get("retired", []) or [],
+            manifest, nxt, observed, stats, self._schema_from_doc(prior_doc)
         )
 
     def _commit_manifest(
@@ -1904,28 +1500,16 @@ class SnapshotLakeTable:
         observed: str | None,
         stats: dict | None = None,
         rec_schema=None,
-        renames=None,
-        retired=None,
-        no_row_changes: bool = False,
     ) -> None:
         self.fs.makedirs(f"{self.root}/manifests")
         # unique name (the txn claim made <nxt> ours alone) + fsync'd
         # write; invisible until the pointer swap
         doc: dict = {"id": nxt}
-        if renames:
-            doc["renames"] = renames
-        if retired:
-            doc["retired"] = retired
-        if no_row_changes:
-            # a metadata-only publish (rename) changes no rows; the CDF
-            # chain walk treats it as an empty hop instead of a gap
-            doc["no_row_changes"] = True
         parent = self._proto._parse(observed)
         if parent is not None:
-            # the snapshot this publish was composed AGAINST — the CDF
-            # chain link (correct across rollbacks: a publish on top of
-            # a rolled-back-to snapshot records THAT id, so the chain
-            # walk never crosses abandoned history)
+            # the snapshot this publish was composed AGAINST (history's
+            # lineage column; correct across rollbacks: a publish on top
+            # of a rolled-back-to snapshot records THAT id)
             doc["parent"] = parent
         if rec_schema is not None:
             doc["schema"] = rec_schema.jsonValue()
@@ -2006,12 +1590,5 @@ class SnapshotLakeTable:
                     live = True
                 else:
                     self.fs.rmtree(f"{base}/{rel}")
-            # a RETAINED snapshot's txn dir survives with no live
-            # partitions IF it holds a recorded change-data feed — a
-            # deletes-only publish writes nothing BUT its _cdf, and
-            # changes_between must be able to read it for as long as
-            # the manifest itself is retained. A bare reservation dir
-            # (manifest-only publish, empty extract) is reaped as ever.
-            keeps_cdf = txn in retained and self.fs.is_dir(f"{base}/_cdf")
-            if not live and not keeps_cdf:
+            if not live:
                 self.fs.rmtree(base)

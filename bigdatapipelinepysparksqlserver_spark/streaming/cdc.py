@@ -34,8 +34,7 @@ def streaming_hourly_agg(
 ) -> DataFrame:
     """Watermarked tumbling-hour aggregation over the events stream.
 
-    Batch twin: ``queries.relational_queries.events_hourly_agg``. The
-    watermark bounds state: hours older than (max event time − watermark)
+    The watermark bounds state: hours older than (max event time − watermark)
     are finalized and evicted — the streaming version of the reference's
     cutoff lag (load_sales_history.py:33-36).
     """
@@ -942,8 +941,7 @@ def streaming_hopping_agg(
     size: str = "1 hour",
     slide: str = "15 minutes",
 ) -> DataFrame:
-    """Watermarked HOPPING-window aggregation — the streaming twin of
-    the graded batch query `events_hopping_agg` (each event lands in
+    """Watermarked HOPPING-window aggregation (each event lands in
     size/slide overlapping windows; Spark plans the slide as an Expand
     under one aggregation). State is bounded by (watermark horizon /
     slide) × key cardinality — the slide multiplies open-window state

@@ -1,9 +1,6 @@
-"""Column RENAME evolution and row-level MERGE on the snapshot lake
-(r11): rename is pure metadata with retired-name discipline — readers
-map pre-rename files back to their physical column names on the fly —
-and merge_rows is a keyed upsert/delete whose net-change CDF equals
-the scan-computed snapshot diff exactly, rewriting only partitions
-that carry a net change."""
+"""Row-level MERGE on the snapshot lake (r11): merge_rows is a keyed
+upsert/delete whose net change equals the scan-computed snapshot diff
+exactly, rewriting only partitions that carry a net change."""
 
 from __future__ import annotations
 
@@ -40,129 +37,14 @@ def _mk(spark, tmp_path, **kw):
     return lake
 
 
-def test_rename_column_metadata_only(spark, tmp_path):
-    """Rename = one manifest publish, zero data movement: the live
-    schema and reads use the new name (old files name-mapped on the
-    fly), time travel keeps each snapshot's own names, the retired
-    physical name can never come back, and zone maps follow the
-    rename so read_where stays load-bearing."""
-    lake = _mk(spark, tmp_path, stats_cols=("id",))
-    m1 = lake.current_id()
-    data_before = sorted(
-        p for p in (tmp_path / "lake" / "data").rglob("*.parquet")
-    )
-
-    lake.rename_column("amt", "amount")
-    assert [f.name for f in lake.live_schema().fields] == [
-        "id", "amount", "note", "ym",
-    ]
-    # no data file was written, moved, or rewritten
-    assert data_before == sorted(
-        p for p in (tmp_path / "lake" / "data").rglob("*.parquet")
-    )
-    assert sorted(
-        (r.id, r.amount, r.note) for r in lake.read().collect()
-    ) == [(1, 1.0, "a"), (2, 2.0, "b"), (3, 3.0, "c")]
-    # time travel under the snapshot's OWN (old) name
-    assert "amt" in lake.read_snapshot(m1).columns
-    assert "amount" not in lake.read_snapshot(m1).columns
-
-    # post-rename publish under the NEW name mixes with old files
-    lake.overwrite_partitions(
-        spark.createDataFrame(
-            [(4, 4.0, "d", 202407)],
-            "id int, amount double, note string, ym int",
-        )
-    )
-    assert sorted(
-        (r.id, r.amount) for r in lake.read().collect()
-    ) == [(1, 1.0), (2, 2.0), (3, 3.0), (4, 4.0)]
-    # zone maps were renamed with the column: a probe on the renamed
-    # stats column still prunes (and stays correct)
-    assert sorted(
-        r.id for r in lake.read_where("id >= 3").collect()
-    ) == [3, 4]
-
-    # the retired physical name is refused forever — for publishes...
-    with pytest.raises(ValueError, match="'amt'.*renamed to 'amount'"):
-        lake.overwrite_partitions(
-            spark.createDataFrame(
-                [(9, 9.0, "z", 202408)],
-                "id int, amt double, note string, ym int",
-            )
-        )
-    # ...and as a rename target
-    lake.rename_column("note", "comment")
-    with pytest.raises(ValueError, match="retired physical name"):
-        lake.rename_column("comment", "amt")
-    # rename chains resolve per-file: amount kept, note->comment
-    assert sorted(
-        (r.id, r.amount, r.comment) for r in lake.read().collect()
-    ) == [(1, 1.0, "a"), (2, 2.0, "b"), (3, 3.0, "c"), (4, 4.0, "d")]
-
-    # guard rails
-    with pytest.raises(ValueError, match="partition"):
-        lake.rename_column("ym", "month")
-    with pytest.raises(ValueError, match="already exists"):
-        lake.rename_column("id", "amount")
-    with pytest.raises(ValueError, match="no column"):
-        lake.rename_column("ghost", "x")
-
-
-def test_rename_diff_and_cdf_alignment(spark, tmp_path):
-    """snapshot_diff_rows across a rename reports under the CURRENT
-    names (renamed columns align instead of reading as drop+add), and
-    changes_between crosses the rename as an empty hop, name-mapping
-    CDF files recorded before it."""
-    lake = _mk(spark, tmp_path)
-    m1 = lake.current_id()
-
-    # publish WITH a recorded CDF under the old name
-    ins = spark.createDataFrame(
-        [(4, 4.0, "d", 202406)], "id int, amt double, note string, ym int"
-    )
-    content = lake.read().where(F.col("ym") == 202406).unionByName(ins)
-    lake.apply_rebuild(
-        content,
-        changed_year_months=[202406],
-        changes=ins.withColumn("change", F.lit("insert")),
-    )
-    lake.rename_column("amt", "amount")
-    # and one more CDF publish under the NEW name
-    ins2 = spark.createDataFrame(
-        [(5, 5.0, "e", 202407)],
-        "id int, amount double, note string, ym int",
-    )
-    lake.apply_rebuild(
-        ins2,
-        changed_year_months=[202407],
-        changes=ins2.withColumn("change", F.lit("insert")),
-    )
-    m_now = lake.current_id()
-
-    cdf = lake.changes_between(m1, m_now)
-    assert cdf.columns == ["id", "amount", "note", "ym", "change"]
-    assert sorted((r.change, r.id, r.amount) for r in cdf.collect()) == [
-        ("insert", 4, 4.0),
-        ("insert", 5, 5.0),
-    ]
-    diff = lake.snapshot_diff_rows(m1, m_now)
-    assert sorted(map(tuple, cdf.collect())) == sorted(
-        map(tuple, diff.collect())
-    )
-    # a rename-only interval is an empty (not gap) change feed
-    pre_rename = m1 + 1
-    mid_cdf = lake.changes_between(pre_rename, pre_rename + 1)
-    assert mid_cdf.count() == 0
-
-
 @pytest.mark.slow
 def test_merge_rows_upsert_delete_move(spark, tmp_path):
     """One merge batch: update-in-place, update that MOVES partitions,
     insert, delete, and an identical (no-op) upsert. Net-change
     discipline: the no-op row's partition is rewritten only because
     other rows touch it; a fully-untouched partition keeps its owning
-    txn; the recorded CDF equals snapshot_diff_rows exactly."""
+    txn; snapshot_diff_rows over the publish is exactly the net
+    change."""
     lake = SnapshotLakeTable(
         spark,
         str(tmp_path / "lake"),
@@ -203,13 +85,9 @@ def test_merge_rows_upsert_delete_move(spark, tmp_path):
     ]
     # untouched partition was not rewritten (same owning txn)
     assert lake.current_manifest()["ym=202407"] == untouched_txn
-    # recorded CDF == scan-computed diff, exactly
-    cdf = lake.changes_between(pre, lake.current_id())
+    # the scan-computed diff is exactly the net change
     diff = lake.snapshot_diff_rows(pre, lake.current_id())
-    assert sorted(map(tuple, cdf.collect())) == sorted(
-        map(tuple, diff.collect())
-    )
-    assert sorted((r.change, r.id) for r in cdf.collect()) == [
+    assert sorted((r.change, r.id) for r in diff.collect()) == [
         ("delete", 2),
         ("delete", 3),
         ("insert", 2),
@@ -274,9 +152,9 @@ def test_merge_zone_pruned_location_scan(spark, tmp_path):
     scanned: list[list[str]] = []
     orig = lake._scan_rels
 
-    def spy(man, rels, rec=None, renames=None):
+    def spy(man, rels, rec=None):
         scanned.append(sorted(rels))
-        return orig(man, rels, rec, renames)
+        return orig(man, rels, rec)
 
     lake._scan_rels = spy
     lake.merge_rows(
@@ -313,31 +191,21 @@ def test_merge_refuses_stale_snapshot(spark, tmp_path):
         )
 
 
-def test_merge_after_rename_and_evolution(spark, tmp_path):
-    """merge_rows composes with the evolution lattice: after a rename,
-    a merge batch under the CURRENT names updates pre-rename files
-    (name-mapped old rows), a batch missing a table column NULL-fills
-    it, and a batch using the retired name is refused."""
+def test_merge_null_fills_columns_the_batch_lacks(spark, tmp_path):
+    """merge_rows follows the evolution rules: a merge batch missing a
+    table column NULL-fills it in the replaced row and leaves the other
+    rows of the partition as they were."""
     lake = _mk(spark, tmp_path)
-    lake.rename_column("amt", "amount")
 
     res = lake.merge_rows(
-        spark.createDataFrame(
-            [(2, 22.0, 202405)], "id int, amount double, ym int"
-        ),
+        spark.createDataFrame([(2, 22.0, 202405)], "id int, amt double, ym int"),
         key_cols=["id"],
     )
     assert res["replaced"] == ["ym=202405"]
-    rows = {r.id: (r.amount, r.note) for r in lake.read().collect()}
+    rows = {r.id: (r.amt, r.note) for r in lake.read().collect()}
     # the merged row NULL-fills the note column it didn't carry
     assert rows[2] == (22.0, None)
     assert rows[1] == (1.0, "a")
-
-    with pytest.raises(ValueError, match="renamed to 'amount'"):
-        lake.merge_rows(
-            spark.createDataFrame([(3, 3.5, 202406)], "id int, amt double, ym int"),
-            key_cols=["id"],
-        )
 
 
 @pytest.mark.slow
@@ -410,8 +278,8 @@ def test_foreach_batch_keyed_merge_replay_safe(spark, tmp_path):
 
 def test_history_metadata_board(spark, tmp_path):
     """history(): one metadata row per readable snapshot, newest
-    first — parent chain, live flag, written-partition counts, rename
-    and CDF markers — without listing a single data file."""
+    first — parent chain, live flag, written-partition counts, zone
+    coverage and schema width — without listing a single data file."""
     lake = SnapshotLakeTable(
         spark,
         str(tmp_path / "lake"),
@@ -425,11 +293,12 @@ def test_history_metadata_board(spark, tmp_path):
             [(1, 1.0, 202405), (2, 2.0, 202406)], "id int, amt double, ym int"
         )
     )
-    ins = spark.createDataFrame([(3, 3.0, 202407)], "id int, amt double, ym int")
     lake.overwrite_partitions(
-        ins, changes=ins.withColumn("change", F.lit("insert"))
+        spark.createDataFrame([(3, 3.0, 202407)], "id int, amt double, ym int")
     )
-    lake.rename_column("amt", "amount")
+    lake.overwrite_partitions(
+        spark.createDataFrame([(4, 4.0, 202407)], "id int, amt double, ym int")
+    )
 
     h = {r.snapshot_id: r for r in lake.history().collect()}
     assert sorted(h) == [1, 2, 3]
@@ -438,16 +307,14 @@ def test_history_metadata_board(spark, tmp_path):
 
     assert h[1].parent is None and not h[1].is_live
     assert h[1].partitions == 2 and h[1].partitions_written == 2
-    assert h[1].zoned_partitions == 2 and not h[1].has_cdf
+    assert h[1].zoned_partitions == 2
 
     assert h[2].parent == 1 and h[2].partitions == 3
-    assert h[2].partitions_written == 1 and h[2].has_cdf
-    assert not h[2].row_neutral
+    assert h[2].partitions_written == 1 and not h[2].is_live
 
     assert h[3].parent == 2 and h[3].is_live
-    assert h[3].row_neutral and h[3].renames == 1
-    assert h[3].partitions_written == 0 and not h[3].has_cdf
-    assert h[3].schema_columns == 3
+    assert h[3].partitions == 3 and h[3].partitions_written == 1
+    assert h[3].zoned_partitions == 3 and h[3].schema_columns == 3
 
 
 def test_read_where_lower_bound_spelling_soundness(spark, tmp_path):
@@ -562,6 +429,8 @@ def test_merge_null_key_replay_safe(spark, tmp_path):
     assert sorted(
         ((r.id, r.amt) for r in lake.read().collect()), key=str
     ) == sorted([(1, 1.0), (None, 10.0)], key=str)
+    # a merge writes its partitions and nothing else: no change feed
+    assert not [p for p in (tmp_path / "lake").rglob("_cdf") if p.is_dir()]
 
 
 def test_apply_rebuild_drop_single_level_partitioning(spark, tmp_path):
@@ -654,14 +523,13 @@ def test_publish_expectations_gate(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_randomized_merge_rename_lifecycle_matches_model(spark, tmp_path):
+def test_randomized_merge_lifecycle_matches_model(spark, tmp_path):
     """Model-based check over the NEW surface: a deterministic random
-    sequence of merges (upsert/move/delete), renames, partition
-    overwrites, and rollbacks must track a plain {id: row} dict model
-    exactly after EVERY step, with the live column name following the
-    rename history; every merge's recorded CDF must equal
-    snapshot_diff_rows over its own publish. Extends the r10 lifecycle
-    model test to the r11 operations instead of hand-reasoning them."""
+    sequence of merges (upsert/move/delete), partition overwrites, and
+    rollbacks must track a plain {id: row} dict model exactly after
+    EVERY step; snapshot_diff_rows over each merge's publish must equal
+    the model's net change. Extends the r10 lifecycle model test to
+    the r11 operations instead of hand-reasoning them."""
     import random
 
     rng = random.Random(7)
@@ -674,15 +542,11 @@ def test_randomized_merge_rename_lifecycle_matches_model(spark, tmp_path):
         retain=2,
     )
     model: dict = {}          # id -> (id, paid, ym)
-    cur_name = ["v0"]         # the paid column's current spelling
-    name_seq = [0]
     next_id = [0]
-    states: dict = {}         # mid -> (model snapshot, name)
+    states: dict = {}         # mid -> model snapshot
 
-    def df_of(rows, extra_cols=""):
-        return spark.createDataFrame(
-            rows, f"id long, {cur_name[0]} double, ym int{extra_cols}"
-        )
+    def df_of(rows):
+        return spark.createDataFrame(rows, "id long, v0 double, ym int")
 
     def fresh_rows(n):
         out = []
@@ -694,19 +558,17 @@ def test_randomized_merge_rename_lifecycle_matches_model(spark, tmp_path):
         return out
 
     def check():
-        df = lake.read()
-        assert cur_name[0] in df.columns
-        got = sorted((r["id"], r[cur_name[0]], r["ym"]) for r in df.collect())
+        got = sorted((r.id, r.v0, r.ym) for r in lake.read().collect())
         assert got == sorted(model.values())
 
     seed = fresh_rows(6)
     lake.write_full(df_of(seed))
     model = {r[0]: r for r in seed}
-    states[lake.current_id()] = (dict(model), cur_name[0])
+    states[lake.current_id()] = dict(model)
     check()
 
     for step in range(18):
-        op = rng.choice(["merge", "merge", "rename", "overwrite", "rollback"])
+        op = rng.choice(["merge", "merge", "overwrite", "rollback"])
         if op == "merge":
             batch = []
             live = sorted(model)
@@ -727,6 +589,7 @@ def test_randomized_merge_rename_lifecycle_matches_model(spark, tmp_path):
             if not batch:
                 continue
             pre = lake.current_id()
+            before = set(model.values())
             res = lake.merge_rows(
                 df_of(
                     [(b[0], b[1], b[2]) for b in batch]
@@ -744,18 +607,15 @@ def test_randomized_merge_rename_lifecycle_matches_model(spark, tmp_path):
                     model.pop(b[0], None)
                 else:
                     model[b[0]] = (b[0], b[1], b[2])
+            after = set(model.values())
             if res != {"written": [], "replaced": []}:
-                post = lake.current_id()
-                cdf = lake.changes_between(pre, post)
-                diff = lake.snapshot_diff_rows(pre, post)
-                assert sorted(map(tuple, cdf.collect())) == sorted(
-                    map(tuple, diff.collect())
+                diff = lake.snapshot_diff_rows(pre, lake.current_id())
+                assert sorted(map(tuple, diff.collect())) == sorted(
+                    [(*r, "insert") for r in after - before]
+                    + [(*r, "delete") for r in before - after]
                 )
-        elif op == "rename":
-            name_seq[0] += 1
-            new = f"v{name_seq[0]}"
-            lake.rename_column(cur_name[0], new)
-            cur_name[0] = new
+            else:
+                assert before == after
         elif op == "overwrite":
             ym = rng.choice(YMS)
             rows = [r for r in fresh_rows(2)]
@@ -772,10 +632,8 @@ def test_randomized_merge_rename_lifecycle_matches_model(spark, tmp_path):
                 continue
             target = older[-1]
             lake.rollback(target)
-            snap, nm = states[target]
-            model = dict(snap)
-            cur_name[0] = nm
+            model = dict(states[target])
         mid = lake.current_id()
         if mid is not None:
-            states[mid] = (dict(model), cur_name[0])
+            states[mid] = dict(model)
         check()

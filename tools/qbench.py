@@ -1,8 +1,9 @@
-"""Per-query A/B micro-bench: bench.py's exact methodology (2 untimed
-warm executions, then min of N timed runs, clearCache + release_caches
-around every execution) over a NAMED subset of registered queries, so an
-optimization's before/after can be measured without paying a full bench
-sweep. Prints one JSON line compatible with bench.py's ``queries`` map.
+"""Per-query A/B micro-bench: bench.py's timing loop
+(``bench.time_query``: 2 untimed warm executions, then min of N timed
+runs, clearCache + release_caches around every execution) over a NAMED
+subset of registered queries, so an optimization's before/after can be
+measured without paying a full bench sweep. Prints one JSON line
+compatible with bench.py's ``queries`` map.
 
 Usage: python tools/qbench.py [-n RUNS] <query> [query ...]
 
@@ -14,21 +15,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bigdatapipelinepysparksqlserver_spark.caching import release_caches  # noqa: E402
+from bench import loadavg, time_query  # noqa: E402
 from bigdatapipelinepysparksqlserver_spark.queries import REGISTRY  # noqa: E402
 from bigdatapipelinepysparksqlserver_spark.session import get_spark  # noqa: E402
-
-
-def _loadavg() -> list[float]:
-    try:
-        with open("/proc/loadavg") as f:
-            return [float(x) for x in f.read().split()[:3]]
-    except OSError:
-        return []
 
 
 def main() -> None:
@@ -44,29 +36,15 @@ def main() -> None:
     # same warmup the bench uses (JVM/codegen startup out of the numbers)
     REGISTRY["mart_client_count"].fn(spark, sf_dir).collect()
 
-    load_before = _loadavg()
-    timings: dict[str, float] = {}
-    for name in names:
-        spec = REGISTRY[name]
-        for _ in range(2):
-            spark.catalog.clearCache()
-            spec.fn(spark, sf_dir).collect()
-            release_caches()
-        best = float("inf")
-        for _ in range(runs):
-            spark.catalog.clearCache()
-            t0 = time.time()
-            spec.fn(spark, sf_dir).collect()
-            best = min(best, time.time() - t0)
-            release_caches()
-        timings[name] = round(best, 3)
+    load_before = loadavg()
+    timings = {n: time_query(spark, REGISTRY[n].fn, sf_dir, runs) for n in names}
     print(
         json.dumps(
             {
                 "queries": timings,
                 "total": round(sum(timings.values()), 3),
                 "loadavg_before": load_before,
-                "loadavg_after": _loadavg(),
+                "loadavg_after": loadavg(),
                 "runs_per_query": runs,
             }
         )

@@ -8,6 +8,11 @@ ratio per query next to the data ratio. A bucketed/linear operator should
 scale ~= the data ratio (with fixed overheads making small-data ratios
 LOWER); anything super-linear is flagged.
 
+It keeps its own timing loop rather than ``bench.time_query``: each run
+writes to a noop sink instead of collecting (the slope of interest is the
+plan's, not the cost of pulling result rows into Python) and there are no
+untimed warm runs, so its numbers measure something else than bench.py's.
+
 Output: one JSON line + a markdown table (paste into BASELINE.md).
 """
 
