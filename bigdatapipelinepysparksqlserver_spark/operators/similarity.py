@@ -1270,57 +1270,6 @@ def pq_reconstruct(codes_col, sub_codebooks):
     ), cb_lit
 
 
-def pq_assign_blas(
-    vectors: DataFrame,
-    sub_codebooks,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow-batched PQ assignment — the SCALE path for
-    :func:`pq_assign`, whose literal-centroid projection evaluates
-    M × C interpreted HOF folds per row (128 at M=8/C=16 — the
-    steepest per-row constant in the ANN family, see BASELINE r7).
-    One numpy pass per Arrow batch: for each subspace, squared-L2 via
-    the expansion ``‖x‖² − 2x·Cᵀ + ‖c‖²`` (the ‖x‖² term is
-    argmin-invariant and dropped), argmin along the code axis.
-
-    Determinism note: the expansion's summation order differs from the
-    literal fold in low-order bits, so near-ties can flip — this path
-    is for scale regimes (no oracle replay); ties break to the LOWEST
-    code (np.argmin first-min over the ascending code axis — same
-    contract as the literal path). pytest pins full agreement with
-    :func:`pq_assign` on the synthetic corpus."""
-    import numpy as np
-    import pandas as pd
-
-    m = len(sub_codebooks)
-    sub = len(sub_codebooks[0][0][1])
-    mats = [
-        np.array([cent for _, cent in sub_cb], dtype=np.float64)
-        for sub_cb in sub_codebooks
-    ]
-    bc = vectors.sparkSession.sparkContext.broadcast(mats)
-
-    def assign(batches):
-        cbs = bc.value
-        c2 = [(cb * cb).sum(axis=1) for cb in cbs]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            v = np.stack([np.asarray(x, dtype=np.float64) for x in pdf[vec_col]])
-            codes = np.empty((len(v), m), dtype=np.int32)
-            for s in range(m):
-                xs = v[:, s * sub : (s + 1) * sub]
-                codes[:, s] = (c2[s] - 2.0 * (xs @ cbs[s].T)).argmin(axis=1)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy(), "codes": list(codes)}
-            )
-
-    return vectors.select(id_col, vec_col).mapInPandas(
-        assign, f"{id_col} long, codes array<int>"
-    )
-
-
 def pq_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -1328,7 +1277,6 @@ def pq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
-    use_blas: bool = False,
 ) -> DataFrame:
     """Approximate top-k by cosine against PQ-RECONSTRUCTED corpus
     vectors (asymmetric: raw query vs reconstructed neighbor — ADC) —
@@ -1336,11 +1284,8 @@ def pq_topk(
     vector. 32× compression at 64d/M=8/C=16; recall degrades with
     quantization error (pytest pins overlap vs exact on the synthetic
     corpus). The scan reads codes, reconstructs in-projection from
-    literal codebooks, and reuses the brute-force top-k machinery.
-    ``use_blas`` swaps the assignment for :func:`pq_assign_blas` —
-    the documented scale path once per-row HOF cost dominates."""
-    assigner = pq_assign_blas if use_blas else pq_assign
-    codes = assigner(vectors, sub_codebooks, id_col=id_col, vec_col=vec_col)
+    literal codebooks, and reuses the brute-force top-k machinery."""
+    codes = pq_assign(vectors, sub_codebooks, id_col=id_col, vec_col=vec_col)
     recon_expr, cb_lit = pq_reconstruct(F.col("codes"), sub_codebooks)
     recon = codes.withColumn("__cb", cb_lit).select(
         F.col(id_col), recon_expr.alias("__recon")
@@ -1371,7 +1316,6 @@ def write_ivfpq_store(
     vec_col: str = "embedding",
     cell_col: str = "cell",
     cent_col: str = "centroid",
-    use_blas: bool = False,
 ) -> None:
     """Cell-partitioned PQ-CODED vector store: rows are (id, codes) —
     M small ints, never the raw vector — written ``partitionBy(cell)``.
@@ -1379,70 +1323,17 @@ def write_ivfpq_store(
     and the per-subspace argmin-L2 codes), so the build is a single
     pass + partitioned write with no shuffle beyond the write's own
     partitioning.
-
-    ``use_blas`` computes both quantizations in ONE Arrow/numpy pass
-    per batch instead of the literal projections — the build-side scale
-    path (the literal PQ encoding alone measures 12.24 s per 200 k rows
-    vs 1.16 s BLAS; at a 2 M-vector build the literal store write
-    dominates the whole graded cycle). Tie contracts match the literal
-    paths (argmax first-max / argmin first-min over the ascending
-    cell/code axes); store equality is pytest-pinned, so the graded
-    `ann_ivfpq_topk` (literal fold, which the oracle textually replays)
-    vouches for this path too — the codes are bit-identical.
     """
     cells = _collect_codebook(codebook, cell_col, cent_col, "write_ivfpq_store")
-    if use_blas:
-        import numpy as np
-        import pandas as pd
-
-        m = len(sub_codebooks)
-        sub = len(sub_codebooks[0][0][1])
-        pq_mats = [
-            np.array([cent for _, cent in sub_cb], dtype=np.float64)
-            for sub_cb in sub_codebooks
-        ]
-        cell_ids = np.array([c for c, _ in cells], dtype=np.int64)
-        cmat = np.array([cent for _, cent in cells], dtype=np.float64)
-        cmat = cmat / np.linalg.norm(cmat, axis=1, keepdims=True)
-        bc = vectors.sparkSession.sparkContext.broadcast(
-            (pq_mats, cell_ids, cmat)
+    encoded = (
+        vectors.select(F.col(id_col), F.col(vec_col).alias("__v"))
+        .withColumn("__vnorm", F.expr(_IVF_VNORM_SQL))
+        .select(
+            id_col,
+            F.expr(_pq_codes_expr(sub_codebooks)).alias("codes"),
+            F.expr(_ivf_argmax_sql(cells)).alias("cell"),
         )
-
-        def enc(batches):
-            mats, cids, cm = bc.value
-            c2 = [(cb * cb).sum(axis=1) for cb in mats]
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                v = np.stack(
-                    [np.asarray(x, dtype=np.float64) for x in pdf[vec_col]]
-                )
-                codes = np.empty((len(v), m), dtype=np.int32)
-                for s in range(m):
-                    xs = v[:, s * sub : (s + 1) * sub]
-                    codes[:, s] = (c2[s] - 2.0 * (xs @ mats[s].T)).argmin(axis=1)
-                sims = (v @ cm.T) / np.linalg.norm(v, axis=1)[:, None]
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col].to_numpy(),
-                        "codes": list(codes),
-                        "cell": cids[sims.argmax(axis=1)].astype("int32"),
-                    }
-                )
-
-        encoded = vectors.select(id_col, vec_col).mapInPandas(
-            enc, f"{id_col} long, codes array<int>, cell int"
-        )
-    else:
-        encoded = (
-            vectors.select(F.col(id_col), F.col(vec_col).alias("__v"))
-            .withColumn("__vnorm", F.expr(_IVF_VNORM_SQL))
-            .select(
-                id_col,
-                F.expr(_pq_codes_expr(sub_codebooks)).alias("codes"),
-                F.expr(_ivf_argmax_sql(cells)).alias("cell"),
-            )
-        )
+    )
     encoded.write.mode("overwrite").partitionBy("cell").parquet(path)
 
 

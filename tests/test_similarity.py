@@ -535,33 +535,6 @@ def test_pq_codes_and_reconstruction_contract(spark, emb):
     assert sum(recalls) / len(recalls) >= 0.2
 
 
-@pytest.mark.slow
-def test_pq_assign_blas_agrees_with_literal_path(spark, emb):
-    """The Arrow/numpy assignment (the scale path — 10.6x faster at
-    200k rows, measured) must produce the SAME codes as the literal
-    HOF projection on the synthetic corpus, including the tie-to-
-    lowest-code contract on the codebook vectors themselves."""
-    from bigdatapipelinepysparksqlserver_spark.operators.similarity import (
-        pq_assign,
-        pq_assign_blas,
-        pq_sub_codebooks,
-        pq_topk,
-    )
-
-    cbs = pq_sub_codebooks(emb)
-    lit = {r["vec_id"]: list(r["codes"]) for r in pq_assign(emb, cbs).collect()}
-    bl = {
-        r["vec_id"]: list(r["codes"])
-        for r in pq_assign_blas(emb, cbs).collect()
-    }
-    assert lit == bl
-    # end-to-end: the BLAS-assigned search equals the literal one
-    q = emb.where(F.col("vec_id") < 4)
-    a = sorted(map(tuple, pq_topk(emb, q, cbs, k=5).collect()))
-    b = sorted(map(tuple, pq_topk(emb, q, cbs, k=5, use_blas=True).collect()))
-    assert a == b
-
-
 def test_ivfpq_recall_floor_and_store_shape(spark, emb, tmp_path):
     """IVFPQ keeps meaningful recall vs exact (both compressions
     engaged: cell pruning on top of 32x PQ), and the store on disk is
@@ -603,37 +576,6 @@ def test_ivfpq_recall_floor_and_store_shape(spark, emb, tmp_path):
     recalls = [len(e[k_] & p[k_]) / len(e[k_]) for k_ in e]
     # floor documents measured behavior (~0.27 at sf0.01, chance 0.02)
     assert sum(recalls) / len(recalls) >= 0.15
-
-
-def test_ivfpq_blas_build_equals_literal_store(spark, emb, tmp_path):
-    """The Arrow/numpy one-pass store build (codes + cell) must produce
-    the SAME store rows as the literal-projection build."""
-    from bigdatapipelinepysparksqlserver_spark.operators.similarity import (
-        pq_sub_codebooks,
-        write_ivfpq_store,
-    )
-    from bigdatapipelinepysparksqlserver_spark.queries.similarity_queries import (
-        _load_ivf_artifact,
-    )
-
-    art = _load_ivf_artifact()
-    codebook = spark.createDataFrame(
-        sorted((int(c), v) for c, v in art["centroids"].items()),
-        ["cell", "centroid"],
-    ).select("cell", F.col("centroid").cast("array<double>").alias("centroid"))
-    cbs = pq_sub_codebooks(emb)
-    lit_path, blas_path = str(tmp_path / "lit"), str(tmp_path / "blas")
-    write_ivfpq_store(emb, codebook, cbs, lit_path)
-    write_ivfpq_store(emb, codebook, cbs, blas_path, use_blas=True)
-    lit = sorted(
-        (r.vec_id, tuple(r.codes), r.cell)
-        for r in spark.read.parquet(lit_path).collect()
-    )
-    blas = sorted(
-        (r.vec_id, tuple(r.codes), r.cell)
-        for r in spark.read.parquet(blas_path).collect()
-    )
-    assert lit == blas
 
 
 def test_gram_matrix_exact_reference_and_pca(spark):
