@@ -1041,60 +1041,6 @@ def quantized_topk(
     return brute_force_topk(qv, qq, id_col=id_col, vec_col="qvec", k=k)
 
 
-def kmeans_refine(
-    vectors: DataFrame,
-    codebook: DataFrame,
-    iters: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "cell",
-    cent_col: str = "centroid",
-) -> DataFrame:
-    """Distributed Lloyd refinement of a coarse-quantizer codebook:
-    ``iters`` rounds of (argmax-cosine assign → per-cell per-dim mean),
-    returning the refined (cell, centroid) codebook.
-
-    The spherical-k-means step behind IVF codebook training, expressed
-    so every round is ORACLE-REPLAYABLE: assignment is the literal
-    scan-side projection (:func:`ivf_assign`), the mean is a
-    posexplode + (cell, dim) aggregate whose shuffle is model-sized
-    (cells × dims after map-side combine), and each refined component is
-    ROUNDED to 6 dp before it feeds the next round's literals — both
-    engines then argmax over the identical doubles. Per round the
-    driver collects exactly cells × dims doubles (the codebook — the
-    same control-plane unit Spark ML's own KMeans aggregates per
-    iteration); data-sized rows never reach the driver. Cells that end
-    a round empty drop out of the codebook (standard Lloyd degeneracy;
-    callers wanting fixed K re-seed — the graded query's K stays
-    populated on the synthetic corpus).
-
-    For production-size training runs prefer seeded Spark ML KMeans
-    (:func:`train_ivf_codebook`) — this refiner exists to make the
-    iterative mechanism itself part of the graded, DuckDB-checked
-    surface.
-    """
-    refined = codebook
-    for _ in range(iters):
-        cells = _collect_codebook(refined, cell_col, cent_col, "kmeans_refine")
-        assigned = ivf_assign(vectors, cells, id_col=id_col, vec_col=vec_col)
-        refined = (
-            assigned.select(
-                "cell", F.posexplode(F.col(vec_col)).alias("pos", "v")
-            )
-            .groupBy("cell", (F.col("pos") + 1).cast("int").alias("dim"))
-            .agg(F.round(F.avg(F.col("v").cast("double")), 6).alias("val"))
-            .groupBy("cell")
-            .agg(
-                F.expr(
-                    "transform(array_sort(collect_list(struct(dim, val))),"
-                    " s -> s.val)"
-                ).alias(cent_col)
-            )
-            .withColumnRenamed("cell", cell_col)
-        )
-    return refined
-
-
 def semantic_dedup_incremental(
     spark,
     store_path: str,
@@ -1176,8 +1122,8 @@ def pq_sub_codebooks(
 ):
     """Deterministic sub-codebooks: the first ``n_codes`` vectors'
     slices per subspace — the first-ids codebook stand-in
-    convention (production trains per-subspace k-means offline, e.g.
-    via :func:`kmeans_refine` on the slices, and versions the result).
+    convention (production trains per-subspace k-means offline on the
+    slices and versions the result).
     Returns ``[[(code, centroid_slice), …] per subspace]``; collect is
     control-plane (n_codes rows).
     """
@@ -1446,110 +1392,6 @@ def embedding_dq_report(df, vec_col: str = "embedding", dim: int = 64):
             F.max(F.when(F.col("nonfinite") == 0, F.sqrt(F.col("sq")))), 6
         ).alias("max_norm"),
     )
-
-
-# ---------------------------------------------------------------------------
-# Embedding second-moment (Gram) matrix + PCA projection — the
-# whitening/dimensionality-reduction preprocessing a 100 TB embedding
-# pipeline runs before semantic dedup or ANN indexing. The Gram
-# accumulation is the canonical distributed covariance pattern: every
-# row contributes a d×d outer product, partials combine map-side, and
-# ONLY d² aggregates ever shuffle — data-sized work never leaves the
-# scan.
-# ---------------------------------------------------------------------------
-
-GRAM_SCALE = 10**9
-
-
-def gram_matrix(
-    vectors: DataFrame,
-    vec_col: str = "embedding",
-    dim: int = 64,
-    scale: int = GRAM_SCALE,
-) -> DataFrame:
-    """Exact second-moment matrix G[i][j] = Σ_rows v[i]·v[j] as
-    (i, j, g) rows, g rounded to 6 dp.
-
-    Exactness (module pattern): each per-row product is ONE double
-    multiply immediately integer-scaled (round(x·y·scale) → BIGINT);
-    the cross-row reduction sums DECIMAL(38,0) — exact and order-free
-    at any parallelism and corpus size (BIGINT would overflow past
-    ~10⁹ rows at scale 10⁹; DuckDB's HUGEINT sum matches).
-
-    Scale: shuffle volume is d² rows per map partition regardless of
-    corpus size (map-side partial sums); the scan-side d²-fold (one
-    posexplode of the flattened outer product) is the cost center and
-    measured 5.14× at 100× embeddings — sub-linear. Measured negative
-    result (the repo's measure-don't-guess rule): an Arrow/numpy
-    mapInPandas twin with bit-identical integer arithmetic LOST to this
-    codegen form, 70.7 s vs 45.3 s at the 100× corpus — the exactness
-    contract forces rounding each of the r×d² terms BEFORE summation,
-    so numpy must materialize r×4096 float64 temporaries per batch
-    (einsum + copysign + floor full-size intermediates, memory-bound)
-    while whole-stage codegen streams one term at a time; the fast
-    BLAS form (vᵀv, float accumulation) would break bit-exact replay.
-    """
-    outer = F.expr(
-        f"flatten(transform(__v, x -> transform(__v,"
-        f" y -> CAST(round(x * y * {float(scale)}, 0) AS BIGINT))))"
-    )
-    rows = vectors.select(
-        F.col(vec_col).cast("array<double>").alias("__v")
-    ).select(F.posexplode(outer).alias("pos", "t"))
-    return (
-        rows.groupBy("pos")
-        .agg(F.sum(F.col("t").cast("decimal(38,0)")).alias("__g"))
-        .select(
-            F.expr(f"CAST(pos div {dim} AS INT)").alias("i"),
-            F.expr(f"CAST(pos % {dim} AS INT)").alias("j"),
-            F.round(
-                F.col("__g").cast("double") / F.lit(float(scale)), 6
-            ).alias("g"),
-        )
-    )
-
-
-def pca_components(gram_rows, dim: int = 64, k: int = 8):
-    """Top-k principal directions from collected (i, j, g) Gram rows —
-    driver-side numpy eigh on the d×d matrix (control-plane by
-    contract: d² ≤ thousands of doubles, never data-sized). Returns a
-    (k, dim) list-of-lists, each eigenvector sign-normalized (largest-
-    magnitude coordinate positive) so the basis is deterministic."""
-    import numpy as np
-
-    g = np.zeros((dim, dim))
-    for r in gram_rows:
-        g[r["i"]][r["j"]] = r["g"]
-    w, v = np.linalg.eigh(g)
-    comps = []
-    for idx in np.argsort(w)[::-1][:k]:
-        e = v[:, idx]
-        m = np.argmax(np.abs(e))
-        comps.append(list(e if e[m] >= 0 else -e))
-    return comps
-
-
-def pca_project(
-    vectors: DataFrame,
-    components,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Project vectors onto literal principal directions — scan-side
-    in-row folds (one ordered aggregate per component: deterministic
-    left-to-right summation), no shuffle, no UDF. Output
-    (id, pc0..pc{k-1}) rounded to 6 dp."""
-    v = F.col(vec_col).cast("array<double>")
-    cols = [F.col(id_col)]
-    for kk, comp in enumerate(components):
-        arr = F.array(*[F.lit(float(x)) for x in comp])
-        fold = F.aggregate(
-            F.zip_with(v, arr, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        cols.append(F.round(fold, 6).alias(f"pc{kk}"))
-    return vectors.select(*cols)
 
 
 def lsh_multiprobe_topk(

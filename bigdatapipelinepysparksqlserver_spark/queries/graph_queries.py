@@ -2,9 +2,8 @@
 lists. Connected-components queries live with the dedup family
 (`dedup_clusters`, `emb_neardup_clusters*`); this module adds the
 iterative-rank shape — PageRank in fixed-point integer arithmetic, so
-a 3-round iterative algorithm is exactly DuckDB-replayable (the
-kmeans_refine trick taken further: not a 6-dp handoff but EXACT
-integers end to end)."""
+a 3-round iterative algorithm is exactly DuckDB-replayable (EXACT
+integers end to end, not a rounded handoff between rounds)."""
 
 from __future__ import annotations
 

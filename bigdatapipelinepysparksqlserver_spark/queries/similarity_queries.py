@@ -917,8 +917,8 @@ def ann_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     the uncompressed baselines; recall vs exact is pytest-pinned.
     Deterministic sub-codebooks = the first-16 vectors' slices (the
     artifact stand-in convention; production trains per-subspace
-    k-means via ``kmeans_refine`` and versions it), so assignment,
-    reconstruction, and ranking all replay in SQL."""
+    k-means and versions it), so assignment, reconstruction, and
+    ranking all replay in SQL."""
     from ..operators.similarity import pq_sub_codebooks, pq_topk
 
     emb = Catalog(spark, sf_dir).embeddings

@@ -416,34 +416,6 @@ def test_quantize_zero_vector_guard(spark):
     assert rows[2]["qvec"][:2] == [64, -127] and rows[2]["qscale"] == 1.0
 
 
-def test_kmeans_refine_moves_centroids_and_drops_empty_cells(spark):
-    """Lloyd semantics: after one round each centroid is the 6-dp mean
-    of its assigned members, a cell that attracts nothing drops out,
-    and refinement is deterministic (same input → same codebook)."""
-    from bigdatapipelinepysparksqlserver_spark.operators.similarity import (
-        kmeans_refine,
-    )
-
-    # two tight groups near axes 0 and 7; a decoy centroid at axis 33
-    # that wins no assignments
-    rows = [
-        (1, _vec(0, 0.10)), (2, _vec(0, 0.20)),
-        (3, _vec(7, 0.10)), (4, _vec(7, 0.30)),
-    ]
-    vectors = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cb0 = spark.createDataFrame(
-        [(0, _vec(0)), (1, _vec(7)), (2, _vec(33))],
-        "cell int, centroid array<double>",
-    )
-    out = {r["cell"]: r["centroid"] for r in kmeans_refine(vectors, cb0).collect()}
-    assert set(out) == {0, 1}  # decoy cell 2 dropped (no members)
-    # cell 0 centroid = mean of vectors 1, 2: dim0 = 1.0, dim1 = 0.15
-    assert out[0][0] == 1.0 and abs(out[0][1] - 0.15) < 1e-9
-    assert out[1][7] == 1.0 and abs(out[1][8] - 0.2) < 1e-9
-    out2 = {r["cell"]: r["centroid"] for r in kmeans_refine(vectors, cb0).collect()}
-    assert out == out2
-
-
 @pytest.mark.slow
 def test_semantic_dedup_incremental_probe_semantics(spark, emb, tmp_path):
     """Store-probe contract: (a) batch-batch pairs are never reported,
@@ -576,61 +548,6 @@ def test_ivfpq_recall_floor_and_store_shape(spark, emb, tmp_path):
     recalls = [len(e[k_] & p[k_]) / len(e[k_]) for k_ in e]
     # floor documents measured behavior (~0.27 at sf0.01, chance 0.02)
     assert sum(recalls) / len(recalls) >= 0.15
-
-
-def test_gram_matrix_exact_reference_and_pca(spark):
-    """Gram family contracts: (a) the Gram matrix equals a numpy
-    reference computed with the same scaled-integer arithmetic
-    (per-term HALF-AWAY rounding, exact int64 sums);
-    (b) pca_components returns an orthonormal basis ordered by
-    eigenvalue and pca_project reproduces numpy's projection."""
-    import numpy as np
-    import pyspark.sql.functions as F  # noqa: F401
-
-    from bigdatapipelinepysparksqlserver_spark.operators.similarity import (
-        gram_matrix,
-        pca_components,
-        pca_project,
-    )
-    from bigdatapipelinepysparksqlserver_spark.sources.catalog import Catalog
-
-    emb = Catalog(spark, "/root/testdata/sf0.001").embeddings
-    lit_rows = sorted(
-        map(tuple, gram_matrix(emb, dim=64).collect())
-    )
-    assert len(lit_rows) == 64 * 64
-
-    v = np.stack(
-        [np.asarray(r.embedding, dtype=np.float64) for r in emb.collect()]
-    )
-    p = np.einsum("ri,rj->rij", v, v) * 1e9
-    t = np.copysign(np.floor(np.abs(p) + 0.5), p).astype(np.int64)
-    # final 6-dp rounding must be HALF-AWAY like Spark/DuckDB ROUND —
-    # np.round is banker's and flips exact …500 ties
-    s6 = t.sum(axis=0) / 1e9 * 1e6
-    want = (np.copysign(np.floor(np.abs(s6) + 0.5), s6) / 1e6).reshape(64, 64)
-    got = np.zeros((64, 64))
-    for i, j, g in lit_rows:
-        got[i][j] = g
-    assert np.array_equal(got, want)
-
-    comps = pca_components(
-        [{"i": i, "j": j, "g": g} for i, j, g in lit_rows], dim=64, k=8
-    )
-    c = np.array(comps)
-    assert np.allclose(c @ c.T, np.eye(8), atol=1e-9)  # orthonormal
-    # projection matches numpy (6-dp rounded)
-    ids = [r.vec_id for r in emb.select("vec_id").collect()]
-    proj = {
-        r.vec_id: [r[f"pc{k}"] for k in range(8)]
-        for r in pca_project(emb, comps).collect()
-    }
-    ref = np.round(v @ c.T, 6)
-    for row, vid in enumerate(ids):
-        assert np.allclose(proj[vid], ref[row], atol=1e-6)
-    # variance concentrates: top-1 component captures the most energy
-    energy = (v @ c.T).var(axis=0)
-    assert energy[0] >= energy[1:].max() - 1e-9
 
 
 def test_multiprobe_recall_dominates_single_probe(spark, emb):
