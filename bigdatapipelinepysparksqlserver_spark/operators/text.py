@@ -11,10 +11,6 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-# word-ish tokens: letter runs, digit runs, or single punctuation — a
-# BPE-ish pre-tokenization regex (shared verbatim with the DuckDB oracle).
-TOKEN_REGEX = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
-
 STOPWORDS_REGEX = r"\b(the|a|an|and|or|of|to|in|is|it)\b"
 
 # character-class inventories for translate()-based counting. Counting
@@ -331,88 +327,6 @@ def classifier_scores(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def bigram_lm_scores(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    add_k: float = 1.0,
-) -> DataFrame:
-    """Corpus-trained bigram language-model quality score (the
-    KenLM/CCNet filtering stage shape): train add-k-smoothed bigram
-    conditionals ON the corpus itself, score every document by its
-    mean log2 P(w_i | w_{i-1}), flag outliers downstream. Documents
-    with fewer than 2 tokens have no bigrams and are excluded.
-
-    Cross-engine determinism: per-bigram logp is computed from EXACT
-    integer counts (one double division + log2 — a fixed two-op
-    expression) and immediately scaled to an INTEGER
-    (``round(logp·10⁶)``); per-doc totals are integer sums — exact and
-    order-independent — divided once at the end. No double ever flows
-    through an unordered aggregate.
-
-    Scale: bigrams join on 60-bit md5-prefix keys (8-byte shuffle
-    rows, the repo's span-dup convention; collisions merge counts
-    identically on both engines). The exploded (doc, bg_hash,
-    ctx_hash) relation is persisted between the count pass and the
-    scoring pass — ~24 B/row regardless of text size. Counts are
-    map-side-combined; the vocabulary scalar is a control-plane
-    ``first()``.
-    """
-    from ..caching import scoped_persist
-
-    words = F.split(F.lower(F.trim(F.col(text_col))), " ")
-    n = F.size(words)
-    bgs = F.zip_with(
-        F.slice(words, 1, n - 1),
-        F.slice(words, 2, n - 1),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
-    h = lambda c: F.conv(F.substring(F.md5(c.cast("binary")), 1, 15), 16, 10).cast(
-        "long"
-    )
-    exploded = scoped_persist(
-        df.where(n >= 2)
-        .select(F.col(id_col), F.explode(bgs).alias("__bg"))
-        .select(
-            id_col,
-            h(F.col("__bg")).alias("__bgh"),
-            h(F.split(F.col("__bg"), " ").getItem(0)).alias("__ctxh"),
-        )
-    )
-    vocab = (
-        df.select(F.explode(words).alias("__w"))
-        .agg(F.count_distinct("__w").alias("v"))
-        .first()["v"]
-    )
-    cb = exploded.groupBy("__bgh").agg(F.count(F.lit(1)).alias("__cb"))
-    cc = exploded.groupBy("__ctxh").agg(F.count(F.lit(1)).alias("__cc"))
-    logp = F.log2(
-        (F.col("__cb").cast("double") + F.lit(float(add_k)))
-        / (F.col("__cc").cast("double") + F.lit(float(add_k) * vocab))
-    )
-    milli = F.round(logp * F.lit(1000000.0), 0).cast("long")
-    scored = (
-        exploded.join(cb, "__bgh")
-        .join(cc, "__ctxh")
-        .select(id_col, milli.alias("__milli"))
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.sum("__milli").alias("__sum"),
-        )
-    )
-    return scored.select(
-        id_col,
-        "n_bigrams",
-        F.round(
-            F.col("__sum").cast("double")
-            / F.col("n_bigrams").cast("double")
-            / F.lit(1000000.0),
-            6,
-        ).alias("avg_log2p"),
-    )
-
-
 def source_ngram_overlap(
     df: DataFrame,
     n: int = 8,
@@ -462,9 +376,8 @@ def source_ngram_overlap(
 def _bigram_explode(
     df: DataFrame, text_col: str, id_col: str
 ) -> DataFrame:
-    """(id, __bgh, __ctxh) — one row per bigram occurrence, hashed to
-    the repo's 60-bit md5-prefix keys (shared by the corpus-scan scorer
-    and the stored-LM path so their statistics compose)."""
+    """(id, __bgh) — one row per bigram occurrence, hashed to the
+    repo's 60-bit md5-prefix key."""
     words = F.split(F.lower(F.trim(F.col(text_col))), " ")
     n = F.size(words)
     bgs = F.zip_with(
@@ -472,122 +385,10 @@ def _bigram_explode(
         F.slice(words, 2, n - 1),
         lambda a, b: F.concat(a, F.lit(" "), b),
     )
-    h = lambda c: F.conv(
-        F.substring(F.md5(c.cast("binary")), 1, 15), 16, 10
-    ).cast("long")
     return (
         df.where(n >= 2)
         .select(F.col(id_col), F.explode(bgs).alias("__bg"))
-        .select(
-            id_col,
-            h(F.col("__bg")).alias("__bgh"),
-            h(F.split(F.col("__bg"), " ").getItem(0)).alias("__ctxh"),
-        )
-    )
-
-
-def build_bigram_lm_store(
-    docs: DataFrame,
-    path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> None:
-    """Persist a corpus bigram LM as three exact-integer relations —
-    the stored-index form of :func:`bigram_lm_scores` (train once,
-    score every future batch without rescanning the corpus):
-
-    - ``{path}/bigrams``  (bgh, cb) — distinct-bigram occurrence counts,
-      written sorted by bgh so parquet row-group min/max prune selective
-      probes;
-    - ``{path}/contexts`` (ctxh, cc) — context occurrence counts;
-    - ``{path}/stats`` one row (vocab) — the add-k denominator scalar.
-
-    All three are exact integers, so (like the postings store) stores
-    built from disjoint corpus shards recompose by SUM — an append
-    layer can reuse `compact_store_batches`' recomposition contract if
-    the LM ever needs incremental TRAINING; scoring only needs reads.
-    """
-    ex = _bigram_explode(docs, text_col, id_col)
-    (
-        ex.groupBy("__bgh")
-        .agg(F.count(F.lit(1)).alias("cb"))
-        .select(F.col("__bgh").alias("bgh"), "cb")
-        .sort("bgh")
-        .write.mode("overwrite")
-        .parquet(f"{path}/bigrams")
-    )
-    (
-        ex.groupBy("__ctxh")
-        .agg(F.count(F.lit(1)).alias("cc"))
-        .select(F.col("__ctxh").alias("ctxh"), "cc")
-        .sort("ctxh")
-        .write.mode("overwrite")
-        .parquet(f"{path}/contexts")
-    )
-    words = F.split(F.lower(F.trim(F.col(text_col))), " ")
-    (
-        docs.select(F.explode(words).alias("__w"))
-        .agg(F.count_distinct("__w").cast("long").alias("vocab"))
-        .write.mode("overwrite")
-        .parquet(f"{path}/stats")
-    )
-
-
-def bigram_lm_score_from_store(
-    spark,
-    path: str,
-    batch: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    add_k: float = 1.0,
-) -> DataFrame:
-    """Score an ingest batch against a STORED bigram LM — the shape a
-    production quality gate runs (LM trained on the reference corpus,
-    every incoming batch scored without touching the corpus again).
-
-    Unlike the corpus-scan scorer, this path meets OUT-OF-VOCABULARY
-    mass: an unseen bigram backs off to count 0 (logp = log2(k/(cc +
-    k·V))), an unseen context to the add-k floor log2(1/V) — LEFT joins
-    + COALESCE(0), the branch the self-scoring query can never take.
-    Same integer-scaled determinism contract as
-    :func:`bigram_lm_scores`.
-
-    Scale: the batch side is small by contract — AQE broadcasts it, so
-    the stored count relations stream join-side with no shuffle; the
-    bgh-sorted layout lets selective probes prune row groups.
-    """
-    ex = _bigram_explode(batch, text_col, id_col)
-    cb = spark.read.parquet(f"{path}/bigrams")
-    cc = spark.read.parquet(f"{path}/contexts")
-    vocab = int(spark.read.parquet(f"{path}/stats").first()["vocab"])
-    joined = (
-        ex.join(cb, ex["__bgh"] == cb["bgh"], "left")
-        .join(cc, ex["__ctxh"] == cc["ctxh"], "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("cb"), F.lit(0)).alias("__cb"),
-            F.coalesce(F.col("cc"), F.lit(0)).alias("__cc"),
-        )
-    )
-    logp = F.log2(
-        (F.col("__cb").cast("double") + F.lit(float(add_k)))
-        / (F.col("__cc").cast("double") + F.lit(float(add_k) * vocab))
-    )
-    milli = F.round(logp * F.lit(1000000.0), 0).cast("long")
-    return (
-        joined.select(id_col, milli.alias("__milli"))
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("n_bigrams"), F.sum("__milli").alias("__sum"))
-        .select(
-            id_col,
-            "n_bigrams",
-            F.round(
-                F.col("__sum").cast("double")
-                / F.col("n_bigrams").cast("double")
-                / F.lit(1000000.0),
-                6,
-            ).alias("avg_log2p"),
-        )
+        .select(id_col, _md5h60(F.col("__bg")).alias("__bgh"))
     )
 
 
@@ -743,8 +544,8 @@ def html_extract(
 # Trigram LM with stupid backoff (Brants et al. 2007) — the honest
 # distributed step toward the CCNet-style 5-gram KenLM quality gate
 # (VERDICT r7 #7): trigram conditional when seen, α·bigram when only
-# the shorter context is, α²·add-1 unigram floor otherwise. Same
-# integer-scaled determinism pattern as the bigram family.
+# the shorter context is, α²·add-1 unigram floor otherwise. Each
+# log-probability is integer-scaled so per-doc sums are exact.
 # ---------------------------------------------------------------------------
 
 BACKOFF_ALPHA = 0.4  # Brants et al.'s stupid-backoff discount
@@ -792,8 +593,7 @@ def build_trigram_lm_store(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> None:
-    """Persist a corpus trigram LM as four exact-integer relations —
-    the order-3 extension of :func:`build_bigram_lm_store`:
+    """Persist a corpus trigram LM as four exact-integer relations:
 
     - ``{path}/trigrams``  (tgh, c3) — trigram occurrence counts;
     - ``{path}/bigrams``   (bgh, c2) — bigram occurrence counts (serves
@@ -864,10 +664,9 @@ def trigram_lm_score_from_store(
     Determinism: each branch is ONE fixed-operand-order double
     expression over exact integer counts, immediately integer-scaled
     (round(logp·10⁶) → BIGINT) — per-doc totals are integer sums, so
-    both engines land on identical 6-dp values (the bigram family's
-    contract, one order up). Per-doc branch counts (n_hits3,
-    n_backoff2, n_floor) are reported so a drifting OOV share is
-    observable without re-scoring.
+    both engines land on identical 6-dp values. Per-doc branch counts
+    (n_hits3, n_backoff2, n_floor) are reported so a drifting OOV share
+    is observable without re-scoring.
 
     Scale: the batch side is small by contract — AQE broadcasts it
     against the five hash-sorted count relations (row-group pruning on

@@ -573,46 +573,6 @@ def test_token_budget_mix_equals_sequential_reference(spark, data, budgets):
     assert got == sorted(want)
 
 
-@settings(max_examples=5, deadline=None)
-@given(
-    corpus=st.lists(
-        st.lists(
-            st.sampled_from(
-                ["a", "b", "BÉTA", "béta", "x1", "'", "naïve", "ß", "日本", ""]
-            ),
-            min_size=0,
-            max_size=12,
-        ),
-        min_size=1,
-        max_size=25,
-    ),
-    batch_pick=st.integers(min_value=0, max_value=4),
-)
-@pytest.mark.slow
-def test_bigram_lm_store_probe_equals_scan_on_randomized_corpora(
-    spark, tmp_path_factory, corpus, batch_pick
-):
-    """Property: scoring in-corpus docs from the STORED LM equals the
-    corpus-scan scorer on randomized corpora with unicode/case/empty
-    token edge cases — the stored path's exact-integer recomposition
-    and join plumbing against the one-pass twin."""
-    from bigdatapipelinepysparksqlserver_spark.operators.text import (
-        bigram_lm_score_from_store,
-        bigram_lm_scores,
-        build_bigram_lm_store,
-    )
-
-    rows = [(i, " ".join(words)) for i, words in enumerate(corpus)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    store = str(tmp_path_factory.mktemp("lm_prop"))
-    build_bigram_lm_store(docs, store)
-    scan = sorted(map(tuple, bigram_lm_scores(docs).collect()))
-    probe = sorted(
-        map(tuple, bigram_lm_score_from_store(spark, store, docs).collect())
-    )
-    assert probe == scan
-
-
 # --- hash_split / hash_fold / equi-depth (r7 profiling primitives) ---------
 
 import hashlib as _hl

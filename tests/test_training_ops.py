@@ -285,37 +285,6 @@ def test_token_budget_mix_two_pass_equals_naive_window(spark):
     assert coarse == got
 
 
-def test_bigram_lm_scores_semantics(spark):
-    """Hand-computable LM contract: in a corpus where one doc repeats a
-    frequent bigram and another is all-novel, the repetitive doc scores
-    HIGHER (less surprising under the corpus LM); single-token docs are
-    excluded; counts are exact."""
-    from bigdatapipelinepysparksqlserver_spark.operators.text import (
-        bigram_lm_scores,
-    )
-
-    docs = _docs(
-        spark,
-        [
-            (1, "a b a b a b a b"),      # frequent bigrams
-            (2, "q r s t u v w x"),      # every bigram unique
-            (3, "lonely"),               # no bigram -> excluded
-        ],
-    )
-    got = {r.doc_id: r for r in bigram_lm_scores(docs).collect()}
-    assert set(got) == {1, 2}
-    assert got[1].n_bigrams == 7 and got[2].n_bigrams == 7
-    assert got[1].avg_log2p > got[2].avg_log2p
-    # exact integer path: rerun equals bit-for-bit, layout-independent
-    again = {
-        r.doc_id: r
-        for r in bigram_lm_scores(docs.repartition(5)).collect()
-    }
-    assert {k: (v.n_bigrams, v.avg_log2p) for k, v in got.items()} == {
-        k: (v.n_bigrams, v.avg_log2p) for k, v in again.items()
-    }
-
-
 def test_source_ngram_overlap_counts_distinct_shared_grams(spark):
     """Hand corpus: sources sharing one 8-gram count it ONCE regardless
     of how many docs repeat it; disjoint sources never pair; pairs are
@@ -340,42 +309,6 @@ def test_source_ngram_overlap_counts_distinct_shared_grams(spark):
     assert got[("sA", "sB")] == 1          # the shared span, counted once
     assert all(a < b for a, b in got)
     assert not any("sC" in p or "sD" in p for p in got)
-
-
-def test_bigram_lm_store_probe_matches_scan_and_oov_floor(spark, tmp_path):
-    """Stored-LM contract: scoring in-corpus docs from the store equals
-    the corpus-scan scorer exactly; an all-OOV doc scores the add-1
-    floor -log2(V) on every bigram."""
-    import math
-
-    from bigdatapipelinepysparksqlserver_spark.operators.text import (
-        bigram_lm_score_from_store,
-        bigram_lm_scores,
-        build_bigram_lm_store,
-    )
-
-    docs = _docs(
-        spark,
-        [
-            (1, "a b a b c"),
-            (2, "c a b d e"),
-            (3, "e d c b a"),
-        ],
-    )
-    store = str(tmp_path / "lm")
-    build_bigram_lm_store(docs, store)
-    scan = sorted(map(tuple, bigram_lm_scores(docs).collect()))
-    probe = sorted(
-        map(tuple, bigram_lm_score_from_store(spark, store, docs).collect())
-    )
-    assert probe == scan
-
-    oov = _docs(spark, [(9, "zz1 zz2 zz3")])
-    got = bigram_lm_score_from_store(spark, store, oov).collect()[0]
-    vocab = 5  # a b c d e
-    floor = round(round(math.log2(1.0 / vocab) * 1e6) / 1e6, 6)
-    assert got.n_bigrams == 2
-    assert got.avg_log2p == floor
 
 
 def test_temperature_mix_matches_reference_python(spark):
