@@ -1,6 +1,6 @@
 """Exact-moment statistics over integer-scaled columns.
 
-The cross-engine exactness pattern (shared with the bigram LM):
+The cross-engine exactness pattern (shared with the trigram LM):
 continuous values are integer-scaled PER ROW
 (``CAST(ROUND(v * 1e6, 0) AS BIGINT)`` — one deterministic double op
 per row, never compounded), every aggregate runs on exact integers
@@ -398,61 +398,4 @@ def mann_whitney_u(
         F.col("nb").alias("n_cur"),
         u.alias("u_ref"),
         z.alias("z"),
-    )
-
-
-def grouped_ols(
-    df: DataFrame,
-    keys: Sequence[str],
-    x: Column,
-    y: Column,
-    y_scale: int = 1_000_000,
-) -> DataFrame:
-    """Per-group simple linear regression (OLS y = a + b·x) from exact
-    integer moments — the closed-form normal equations, no iteration.
-
-    ``x`` and ``y`` must already be integer (BIGINT) expressions; for a
-    continuous ``y`` pass :func:`scaled_bigint` output and its scale as
-    ``y_scale`` so the fitted coefficients come back in ORIGINAL units.
-    The five moments (n, Σx, Σy, Σx², Σxy) aggregate as DECIMAL(38,0)
-    (exact, order-free); slope and intercept derive per group from
-    exact DECIMAL numerators/denominators in ONE fixed-operand-order
-    double expression each, ROUND(…, 6):
-
-        slope     = (n·Σxy − Σx·Σy) / (n·Σx² − Σx²ᵗᵒᵗ) / y_scale
-        intercept = (Σy·Σx² − Σx·Σxy) / (n·Σx² − Σx²ᵗᵒᵗ) / y_scale
-
-    Zero-x-variance groups yield NULL coefficients (a vertical fit has
-    no finite slope). Caller guarantees the DECIMAL(38,0) products
-    n·Σxy and Σy·Σx² fit 38 digits (true for 1e6-scaled values up to
-    ~1e9 across ~1e12 rows with |x| ≤ ~1e4).
-
-    Scale: one scan-side projection + one groupBy with map-side
-    partials (five 16-byte accumulators per key) — a COUNT/SUM rollup
-    shape; no window, no join, no second pass.
-    """
-    xx = x.cast(_D)
-    yy = y.cast(_D)
-    m = df.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.sum(xx).alias("__sx"),
-        F.sum(yy).alias("__sy"),
-        F.sum((x * x).cast(_D)).alias("__sxx"),
-        F.sum((x * y).cast(_D)).alias("__sxy"),
-    )
-    nd = F.col("__n").cast(_D)
-    sx, sy = F.col("__sx"), F.col("__sy")
-    sxx, sxy = F.col("__sxx"), F.col("__sxy")
-    den = (nd * sxx - sx * sx).cast("double")
-    slope = F.round(
-        (nd * sxy - sx * sy).cast("double") / den / F.lit(float(y_scale)), 6
-    )
-    intercept = F.round(
-        (sy * sxx - sx * sxy).cast("double") / den / F.lit(float(y_scale)), 6
-    )
-    return m.select(
-        *keys,
-        F.col("__n").alias("n"),
-        F.when(den > F.lit(0.0), slope).alias("slope"),
-        F.when(den > F.lit(0.0), intercept).alias("intercept"),
     )

@@ -1,5 +1,5 @@
 """Python-reference tests for the r8-continuation analytics batch:
-rolling distinct actives, closed-form OLS, Pareto frontier, FIR EWMA,
+rolling distinct actives, Pareto frontier, FIR EWMA,
 column profile, median/MAD outliers, and the prefix-filtered Jaccard
 join. Each query is exercised off a synthetic parquet sf_dir (the
 user_decay_score pattern) against an independently-coded reference —
@@ -11,7 +11,6 @@ from __future__ import annotations
 import itertools
 from datetime import datetime
 
-import pyspark.sql.functions as F
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -61,51 +60,6 @@ def test_rolling_active_users_python_reference(spark, tmp_path):
     expect = {d0 + k: 2 for k in range(7)}
     expect[d0 + 7] = 0
     expect[d0 + 8] = 1
-    assert got == expect
-
-
-@settings(max_examples=10, deadline=None)
-@given(
-    rows=st.lists(
-        st.tuples(
-            st.integers(0, 2),  # group
-            st.integers(0, 23),  # x
-            st.integers(-1000, 1000),  # y (already integer units)
-        ),
-        min_size=2,
-        max_size=40,
-    )
-)
-def test_grouped_ols_matches_closed_form(spark, rows):
-    """grouped_ols ≡ the closed-form normal equations computed in exact
-    Python integers (float division last) — including NULL coefficients
-    for zero-x-variance groups."""
-    from bigdatapipelinepysparksqlserver_spark.operators.stats import (
-        grouped_ols,
-    )
-
-    df = spark.createDataFrame(rows, "g int, x long, y long")
-    got = {
-        r["g"]: (r["n"], r["slope"], r["intercept"])
-        for r in grouped_ols(
-            df, ["g"], F.col("x"), F.col("y"), y_scale=1
-        ).collect()
-    }
-    expect = {}
-    for g in {r[0] for r in rows}:
-        pts = [(x, y) for gg, x, y in rows if gg == g]
-        n = len(pts)
-        sx = sum(x for x, _ in pts)
-        sy = sum(y for _, y in pts)
-        sxx = sum(x * x for x, _ in pts)
-        sxy = sum(x * y for x, y in pts)
-        den = n * sxx - sx * sx
-        if den > 0:
-            slope = round(float(n * sxy - sx * sy) / float(den) / 1.0, 6)
-            inter = round(float(sy * sxx - sx * sxy) / float(den) / 1.0, 6)
-        else:
-            slope = inter = None
-        expect[g] = (n, slope, inter)
     assert got == expect
 
 
