@@ -11,8 +11,6 @@ never a document body.
 
 from __future__ import annotations
 
-from functools import reduce
-
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
@@ -429,53 +427,6 @@ def minhash_band_store(
     return band_rows(sigs, id_col, num_hashes, bands)
 
 
-def minhash_band_store_bucketed(
-    spark,
-    docs: DataFrame,
-    table: str,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 3,
-    num_buckets: int = 32,
-    path: "str | None" = None,
-) -> DataFrame:
-    """The band index as a BUCKETED catalog table — the disk layout that
-    removes the base-side shuffle from every future incremental probe.
-
-    :func:`minhash_near_duplicates_incremental` joins batch band rows
-    against the base index on (band, bh). With the index stored as a
-    plain parquet file both sides shuffle per probe — at 100 TB the base
-    side is ``bands × corpus`` rows and re-shuffling it per ingest batch
-    is the dominant cost of the join. Bucketing the store by (band, bh)
-    (the hash partitioning baked into the file layout) makes
-    the stored side Exchange-FREE at probe time: only the batch-sized
-    probe side shuffles, so per-batch join cost is O(batch) network no
-    matter how large the corpus index grows. Paid once at ingest, like
-    all bucketing (see ``sources.lake.write_bucketed_table``). Bucketed
-    AND sorted on (band, bh) — both join keys, as Spark's co-partition
-    check requires — so the sort-merge probe reads pre-sorted buckets.
-
-    Returns the re-read table DataFrame, ready to pass as
-    ``base_bands=``. Appending a new accepted batch = re-write of the
-    table (or insertInto for true appends); the streaming form keeps
-    per-batch directories instead because exactly-once replay needs
-    batch-scoped overwrites.
-    """
-    from ..sources.lake import write_bucketed_table
-
-    store = minhash_band_store(
-        docs, text_col, id_col,
-        num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
-    )
-    write_bucketed_table(
-        spark, store, table, bucket_col=["band", "bh"], num_buckets=num_buckets,
-        sort_col=["band", "bh"], path=path,
-    )
-    return spark.table(table)
-
-
 def minhash_near_duplicates_incremental(
     base: DataFrame,
     batch: DataFrame,
@@ -539,10 +490,11 @@ def minhash_near_duplicates_incremental(
     )
     # TWO joins, not one join against (base ∪ batch): unioning the base
     # index with the probe rows would erase the base relation's physical
-    # layout — in particular a BUCKETED band store
-    # (minhash_band_store_bucketed) joins here Exchange-free on its side,
-    # which a union would forfeit. probe×(base∪probe) ≡ (probe×base) ∪
-    # (probe×probe), and the batch-batch join is batch-sized.
+    # layout — in particular a band store bucketed on (band, bh)
+    # (``sources.lake.write_bucketed_table``) joins here Exchange-free on
+    # its side, which a union would forfeit. probe×(base∪probe) ≡
+    # (probe×base) ∪ (probe×probe), and the batch-batch join is
+    # batch-sized.
     # No broadcast HINT on either: the probe side is small by contract
     # but not by construction — AQE broadcasts it when it is actually
     # under the threshold and falls back to a bucket-keyed shuffle join

@@ -967,8 +967,7 @@ def winnow_store_bucketed(
     path: "str | None" = None,
 ) -> DataFrame:
     """The corpus fingerprint index as a BUCKETED catalog table — the
-    repeated-use form of winnowing (same economics as
-    ``dedup.minhash_band_store_bucketed``): bucketed AND sorted on
+    repeated-use form of winnowing: bucketed AND sorted on
     ``fp_hash``, so an incremental copy-probe joins batch fingerprints
     against the corpus index with NO Exchange on the stored side —
     per-batch network is O(batch) regardless of corpus size.

@@ -66,98 +66,6 @@ def test_bucketed_groupby_has_no_exchange(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_events_b")
 
 
-@pytest.mark.slow
-def test_bucketed_band_store_probe_exchange_free(spark, tmp_path):
-    """The MinHash band index as a bucketed table: an incremental probe
-    must (a) return exactly the plain-store results, and (b) join
-    WITHOUT an Exchange on the stored side — only the batch-sized probe
-    shuffles, which is what makes per-batch ingest O(batch) network at
-    any corpus size."""
-    from bigdatapipelinepysparksqlserver_spark.caching import release_caches
-    from bigdatapipelinepysparksqlserver_spark.operators.dedup import (
-        minhash_band_store,
-        minhash_band_store_bucketed,
-        minhash_near_duplicates_incremental,
-    )
-
-    body = "the quick brown fox jumps over the lazy dog near the river today"
-    base = spark.createDataFrame(
-        [(i, f"{body} base{i}") for i in range(40)], "doc_id long, text string"
-    )
-    batch = spark.createDataFrame(
-        [(100, f"{body} base7"), (101, "entirely different content about glaciers and moraine debris")],
-        "doc_id long, text string",
-    )
-    kw = dict(text_col="text", id_col="doc_id", num_hashes=16, bands=4)
-
-    bucketed = minhash_band_store_bucketed(
-        spark, base, "t_band_store_b", num_buckets=8,
-        path=str(tmp_path / "band_store_b"), **kw,
-    )
-    plain = minhash_band_store(base, **kw)
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        got = minhash_near_duplicates_incremental(
-            base, batch, threshold=0.2, base_bands=bucketed, **kw
-        )
-        want = minhash_near_duplicates_incremental(
-            base, batch, threshold=0.2, base_bands=plain, **kw
-        )
-        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-        assert got.count() > 0  # the probe really matched the base
-
-        # physical claim, asserted on the isolated probe⋈store join
-        # (the operator's full executed-plan STRING reprints cached
-        # subtrees once per consumer, making whole-plan Exchange counts
-        # meaningless): the store scan rides its baked-in buckets
-        # (SelectedBucketsCount) and contributes NO Exchange — the one
-        # (band, bh) shuffle is the batch-sized probe side.
-        import re
-
-        # drop the operator runs' scoped caches first: the cache manager
-        # would otherwise substitute InMemoryRelations (with their own
-        # nested plan printouts) into this join's plan text
-        release_caches()
-        spark.catalog.clearCache()
-        probe_rows = minhash_band_store(batch, **kw).select(
-            "band", "bh", F.col("doc_id").alias("__pid")
-        )
-        j = probe_rows.join(
-            bucketed.select("band", "bh", F.col("doc_id").alias("__cid")),
-            ["band", "bh"],
-        )
-        j.collect()  # finalize AQE
-
-        def final_plan(df) -> str:
-            # strip ONLY the OUTER "== Initial Plan ==" duplicate (the
-            # LAST marker): cached subtrees print their own nested
-            # markers earlier, and cutting at the first would drop the
-            # store branch that prints after them
-            return _plan(df).rsplit("== Initial Plan ==", 1)[0]
-
-        # all assertions read the SAME final-plan section
-        plan = final_plan(j)
-        store_scan = [
-            ln for ln in plan.splitlines()
-            if "FileScan" in ln and "t_band_store_b" in ln
-        ]
-        assert store_scan and "SelectedBucketsCount" in store_scan[0], plan
-        n_exchanges = len(re.findall(r"Exchange hashpartitioning\(band#", plan))
-        assert n_exchanges == 1, f"expected only the probe-side shuffle:\n{plan}"
-        # and that single Exchange partitions the PROBE side's columns,
-        # not the store's (store attrs come from the table scan line)
-        m = re.search(r"Exchange hashpartitioning\(band#(\d+)", plan)
-        store_attrs = re.findall(r"band#(\d+)", store_scan[0])
-        assert store_attrs, store_scan[0]
-        assert m.group(1) not in store_attrs, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS t_band_store_b")  # path dies with tmp_path
-        release_caches()
-
-
 def test_winnow_store_probe_exchange_free(spark, tmp_path):
     """The winnowing fingerprint index as a bucketed table: the
     incremental copy-probe must (a) find the planted copy and miss the
