@@ -34,29 +34,8 @@ from pyspark.sql.types import (
     FloatType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
-)
-
-# typed metadata struct: filterable WITHOUT touching the payload
-MEDIA_META = StructType(
-    [
-        StructField("media_type", StringType(), False),  # image|audio|video
-        StructField("codec", StringType(), True),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("duration_ms", LongType(), True),
-        StructField("n_bytes", LongType(), False),
-    ]
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("payload", BinaryType(), False),
-        StructField("meta", MEDIA_META, False),
-    ]
 )
 
 IMAGE_FEATURES_SCHEMA = StructType(
