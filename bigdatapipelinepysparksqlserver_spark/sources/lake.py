@@ -206,7 +206,11 @@ class LakeTable:
                     f"expected {len(self.partition_cols)} values {self.partition_cols}, got {vals!r}"
                 )
             d = os.path.join(
-                root, *[f"{k}={v}" for k, v in zip(self.partition_cols, vals)]
+                root,
+                *[
+                    f"{k}={escape_partition_value(v)}"
+                    for k, v in zip(self.partition_cols, vals)
+                ],
             )
             if os.path.isdir(d):
                 shutil.rmtree(d)

@@ -159,6 +159,26 @@ def test_partitions_listing_and_drop(spark, tmp_path):
     assert {r.year_month for r in lake.read().collect()} == {202402}
 
 
+def test_drop_partition_values_matches_escaped_dirs(spark, tmp_path):
+    """A drop composed from RAW values must find the directories the
+    writer escaped: ':' is written as %3A and NULL as
+    __HIVE_DEFAULT_PARTITION__."""
+    lake = LakeTable(spark, str(tmp_path / "lake"))
+    lake.write_full(
+        spark.createDataFrame(
+            [
+                (1, "a", 202405, "US:east"),
+                (2, "b", 202405, "a/b=c"),
+                (3, "c", 202406, None),
+                (4, "d", 202406, "plain"),
+            ],
+            "id long, v string, year_month int, country string",
+        )
+    )
+    lake.drop_partition_values([(202405, "US:east"), (202406, None)])
+    assert sorted(r.id for r in lake.read().collect()) == [2, 4]
+
+
 def test_one_file_per_partition(spark, tmp_path):
     """Small-files contract: each partition dir holds exactly one data file."""
     import glob
