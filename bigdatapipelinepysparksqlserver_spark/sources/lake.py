@@ -178,27 +178,12 @@ class LakeTable:
                 out.extend(os.path.join(name, rel) for rel in sub)
         return out
 
-    def drop_partitions(self, values: Sequence[int | str], key: str | None = None) -> None:
-        """S5 — explicit partition drop (ALTER TABLE ... DROP PARTITION).
-
-        Rarely needed (overwrite_partitions subsumes rebuilds); exists for
-        retention/cleanup semantics. Implemented as metadata-only directory
-        removal on the first-level partition key.
-        """
-        key = key or self.partition_cols[0]
-        if key != self.partition_cols[0]:
-            raise ValueError(f"can only drop on leading partition key {self.partition_cols[0]!r}")
-        for v in values:
-            d = os.path.join(self.path, f"{key}={v}")
-            if os.path.isdir(d):
-                shutil.rmtree(d)
-
     def drop_partition_values(self, rows: Sequence[Sequence]) -> None:
-        """Drop fully-qualified partitions, one (value per partition col,
-        in ``partition_cols`` order) tuple each. Rebuilds do not need it
-        (``overwrite_partitions``' ``replace`` removes partitions whose
-        content disappeared); this is the explicit retention/cleanup
-        drop below the leading key."""
+        """S5 — explicit partition drop (ALTER TABLE ... DROP PARTITION)
+        for retention and cleanup: one tuple per partition, holding its
+        raw value for each partition col in ``partition_cols`` order.
+        Rebuilds do not need it (``overwrite_partitions``' ``replace``
+        removes partitions whose content disappeared)."""
         root = os.path.abspath(self.path)
         for vals in rows:
             if len(vals) != len(self.partition_cols):
@@ -400,67 +385,6 @@ def write_bucketed_table(
     if path is not None:
         w = w.option("path", os.path.abspath(path))
     w.saveAsTable(name)
-
-
-def zorder_value(scaled_cols: Sequence, bits: int = 12):
-    """Morton (z-curve) interleave of pre-scaled long columns.
-
-    Each input must already be scaled into ``[0, 2**bits)``; the result
-    interleaves their bits (col j supplies bit position ``i*n + j``) so
-    rows close in ALL dimensions get close z-values. Pure bitwise
-    shift/and/or expressions — codegen'd, no UDF.
-    """
-    n = len(scaled_cols)
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        for j, c in enumerate(scaled_cols):
-            bit = F.shiftright(c.cast("long"), i).bitwiseAND(F.lit(1))
-            z = z.bitwiseOR(F.shiftleft(bit, i * n + j))
-    return z
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    zcols: Sequence[str],
-    num_files: int,
-    bits: int = 12,
-) -> None:
-    """Multi-dimensional clustering: write ``df`` as ``num_files`` parquet
-    files range-partitioned and sorted on the z-value of ``zcols``.
-
-    Linear sort keys cluster one dimension and scatter the rest; the
-    z-curve keeps every listed dimension locally clustered, so parquet
-    min/max footer stats stay TIGHT on all of them and predicates on any
-    subset of ``zcols`` skip most files/row-groups (the lake-layout
-    optimization Delta's OPTIMIZE ZORDER applies; here as a plain-parquet
-    write). One extra stats pass computes min/max per column to scale
-    values into the ``bits``-wide grid — at 100 TB, run it on the
-    partition being compacted, not the whole table.
-
-    Scale: repartitionByRange samples z-values to draw file boundaries
-    (no global sort); each output task writes one locally-sorted file.
-    """
-    mins = [F.min(c).alias(f"mn_{c}") for c in zcols]
-    maxs = [F.max(c).alias(f"mx_{c}") for c in zcols]
-    st = df.agg(*mins, *maxs).first()
-    top = (1 << bits) - 1
-    scaled = []
-    for c in zcols:
-        mn, mx = st[f"mn_{c}"], st[f"mx_{c}"]
-        span = max(int(mx) - int(mn), 1)
-        scaled.append(
-            ((F.col(c).cast("long") - F.lit(int(mn))) * top / span).cast("long")
-        )
-    z = zorder_value(scaled, bits=bits)
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(num_files, F.col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
 
 
 def write_bloom_store(

@@ -155,8 +155,10 @@ def test_partitions_listing_and_drop(spark, tmp_path):
     lake.write_full(_df(spark, [(1, "a", 202401, "PT"), (2, "b", 202402, "PT")]))
     parts = {(r.year_month, r.country) for r in lake.partitions().collect()}
     assert parts == {(202401, "PT"), (202402, "PT")}
-    lake.drop_partitions([202401])
+    lake.drop_partition_values([(202401, "PT")])
     assert {r.year_month for r in lake.read().collect()} == {202402}
+    # the emptied leading-key directory goes with its last partition
+    assert not os.path.exists(tmp_path / "lake" / "year_month=202401")
 
 
 def test_drop_partition_values_matches_escaped_dirs(spark, tmp_path):
@@ -304,69 +306,6 @@ def test_schema_evolution_merge_schema(spark, tmp_path):
     assert got == {(1, None), (2, "web")}
     # old partition physically untouched — evolution cost ∝ new data only
     assert lake.read(merge_schema=True).count() == 2
-
-
-def _files_hit(path, col_ranges):
-    """Count parquet files whose footer min/max intersect every predicate
-    range — exactly the pruning decision a stats-based reader makes."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    hit = total = 0
-    for f in glob.glob(os.path.join(path, "*.parquet")):
-        md = pq.ParquetFile(f).metadata
-        total += 1
-        lo: dict[str, int] = {}
-        hi: dict[str, int] = {}
-        for rg in range(md.num_row_groups):
-            for ci in range(md.num_columns):
-                col = md.row_group(rg).column(ci)
-                name = col.path_in_schema
-                if name in col_ranges and col.statistics is not None:
-                    s = col.statistics
-                    lo[name] = min(lo.get(name, s.min), s.min)
-                    hi[name] = max(hi.get(name, s.max), s.max)
-        if all(hi[c] >= a and lo[c] <= b for c, (a, b) in col_ranges.items()):
-            hit += 1
-    return hit, total
-
-
-@pytest.mark.slow
-def test_zorder_layout_skips_files_on_every_dimension(spark, tmp_path):
-    from bigdatapipelinepysparksqlserver_spark.sources.lake import write_zordered
-
-    n, files = 40_000, 64
-    df = spark.range(n).select(
-        F.pmod(F.xxhash64("id", F.lit(1)), F.lit(1000)).alias("x"),
-        F.pmod(F.xxhash64("id", F.lit(2)), F.lit(1000)).alias("y"),
-    )
-    linear, zord = str(tmp_path / "linear"), str(tmp_path / "zord")
-    (
-        df.repartitionByRange(files, "x")
-        .sortWithinPartitions("x")
-        .write.parquet(linear)
-    )
-    write_zordered(df, zord, zcols=["x", "y"], num_files=files)
-
-    # same rows either way
-    assert spark.read.parquet(zord).count() == n
-
-    # predicate on y only: the linear-x layout scatters y across every
-    # file; the z-layout clusters it
-    y_box = {"y": (100, 199)}
-    lin_hit, lin_total = _files_hit(linear, y_box)
-    z_hit, z_total = _files_hit(zord, y_box)
-    assert lin_total == z_total == files
-    assert lin_hit == files  # linear layout prunes nothing on y
-    assert z_hit < files // 2
-
-    # 2-D box: z-layout must prune at least as well as the 1-D sort
-    box = {"x": (100, 199), "y": (100, 199)}
-    lin_box, _ = _files_hit(linear, box)
-    z_box, _ = _files_hit(zord, box)
-    assert z_box <= lin_box
-    assert z_box < files // 4
 
 
 # ---------------------------------------------------------------------------
@@ -528,4 +467,3 @@ def test_cbo_stats_flip_filtered_join_to_broadcast(spark, tmp_path):
         spark.conf.set("spark.sql.cbo.enabled", prev_cbo)
         for name in (fact, dim):
             spark.sql(f"DROP TABLE IF EXISTS {name}")
-
