@@ -365,30 +365,13 @@ def run_pipeline_2(
     """Aggregate the lake into both mart tables and publish atomically.
 
     Full-scan form (the reference's semantics, O(lake) per run) — the
-    bootstrap / repair / validation twin of
-    :func:`run_pipeline_2_incremental`.
+    bootstrap / repair / validation twin of the incremental publish in
+    :func:`sales_pipeline_cycle`.
     """
     lake_df = lake.read()
     return _publish_marts(
         mart, mart_client_count_df(lake_df, now), mart_sales_agg_df(lake_df, now), now
     )
-
-
-def run_pipeline_2_incremental(
-    spark: SparkSession,
-    partials: "IncrementalMart",
-    mart: MartPublisher,
-    changed_partitions: list,
-    now: datetime,
-) -> dict:
-    """Incremental mart publish: refresh only the partial-table
-    partitions pipeline 1 just rebuilt, re-aggregate the (compact)
-    partials, publish atomically. Per-run cost ∝ change set — the form
-    that survives a 15-minute cadence at 100 TB, where
-    :func:`run_pipeline_2`'s full lake scan cannot.
-    """
-    partials.refresh(changed_partitions)
-    return _publish_marts(mart, partials.client_count(now), partials.sales_agg(now), now)
 
 
 def _publish_marts(
@@ -410,7 +393,7 @@ class PipelineScheduler:
 
     ``cycle`` is a callable ``(fire_time: datetime) -> dict`` wrapping
     one pipeline run (see :func:`sales_pipeline_cycle` for the bound
-    ``run_pipeline_1 >> run_pipeline_2_incremental`` form). The
+    ``run_pipeline_1 >> run_pipeline_2`` form). The
     scheduler owns three behaviors the cycle doesn't:
 
     - **grid cadence**: fire instants are ``anchor + n*interval`` (the
@@ -538,8 +521,8 @@ def sales_pipeline_cycle(
     supplied (the 15-minute-cadence form), full-scan otherwise. With
     ``partials``, pipeline 1's validation step refreshes them from the
     same read-back that reconcile checks, so pipeline 2 only stages and
-    publishes — the result equals ``run_pipeline_1 >>
-    run_pipeline_2_incremental`` with one lake read-back fewer."""
+    publishes the re-aggregated partials: per-run cost ∝ change set,
+    and the published snapshots equal the full-scan form's."""
 
     def _cycle(fire: datetime) -> dict:
         rep1 = run_pipeline_1(spark, src, lake, ledger, now=fire, partials=partials)

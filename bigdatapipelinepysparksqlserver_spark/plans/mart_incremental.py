@@ -28,10 +28,9 @@ COUNT(id)/SUM(paid) over every row of those partitions, observed on the
 same read-back: the scheduled cycle (``pipelines.sales_pipeline_cycle``
 with partials) calls it in pipeline 1's validation step and hands the
 totals to ``plans.reconcile``, so validating needs no lake scan of its
-own; other callers (``run_pipeline_2_incremental``, the streaming sink)
-ignore them. Refresh cost is ∝ change set; the full-scan path remains
-available as the bootstrap / repair / validation twin
-(``pipelines.mart_*_df``).
+own; the other caller, the streaming sink, ignores them. Refresh cost
+is ∝ change set; the full-scan path remains available as the
+bootstrap / repair / validation twin (``pipelines.mart_*_df``).
 """
 
 from __future__ import annotations

@@ -150,26 +150,43 @@ def test_delete_to_empty_partition_drops_partials(spark, env):
 
 
 @pytest.mark.slow
-def test_pipeline_2_incremental_publishes_same_snapshot(spark, env, tmp_path):
-    from bigdatapipelinepysparksqlserver_spark.pipelines import (
-        run_pipeline_2,
-        run_pipeline_2_incremental,
-    )
-
+def test_cycle_publishes_same_snapshot_with_and_without_partials(
+    spark, env, tmp_path
+):
+    """The scheduled cycle's two mart paths publish identical snapshots:
+    the full-lake recompute (no ``partials``) and the incremental one,
+    whose partials pipeline 1's validation step refreshes. Two cycles
+    over one source, the second with updates and deletes."""
     src, gen, lake, ledger, mart = env
-    gen.insert_sales(200, batch=1, now=T1, spread_days=30)
-    rep1 = run_pipeline_1(spark, src, lake, ledger, now=T1)
-
-    pub_full = MartPublisher(str(tmp_path / "mart_full"))
     pub_inc = MartPublisher(str(tmp_path / "mart_inc"))
-    run_pipeline_2(spark, lake, pub_full, now=REFRESH)
-    run_pipeline_2_incremental(
-        spark, mart, pub_inc, rep1["rebuilt_partitions"], now=REFRESH
-    )
-    for table in ("sales_history_1", "sales_history_2"):
-        full = sorted(map(tuple, pub_full.read(spark, table).collect()))
-        inc = sorted(map(tuple, pub_inc.read(spark, table).collect()))
-        assert full == inc
+    pub_full = MartPublisher(str(tmp_path / "mart_full"))
+    cycles = [
+        sales_pipeline_cycle(spark, src, lake, ledger, pub_inc, partials=mart),
+        sales_pipeline_cycle(
+            spark,
+            src,
+            LakeTable(spark, str(tmp_path / "lake_full")),
+            RunLedger(spark, str(tmp_path / "ledger_full")),
+            pub_full,
+        ),
+    ]
+
+    def run(fire):
+        for cycle in cycles:
+            rep = cycle(fire)["pipeline_1"]
+            assert rep["validation"].status == "SUCCESSFUL", rep["validation"]
+        for table in ("sales_history_1", "sales_history_2"):
+            full = sorted(map(tuple, pub_full.read(spark, table).collect()))
+            inc = sorted(map(tuple, pub_inc.read(spark, table).collect()))
+            assert full == inc
+
+    gen.insert_sales(200, batch=1, now=T1, spread_days=30)
+    run(T1)
+    t = T2 - timedelta(hours=1)
+    gen.insert_sales(40, batch=2, now=t, spread_days=1)
+    assert gen.update_sales(batch=2, now=t, p=0.05) > 0
+    assert gen.delete_sales(batch=2, now=t, p=0.03) > 0
+    run(T2)
 
 
 @pytest.mark.slow
