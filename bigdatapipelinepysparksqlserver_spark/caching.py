@@ -30,7 +30,7 @@ is what makes the "materialize, then release" rule locally enforceable.
 
 A full-sweep log may still show a handful of ``WARN BlockManager:
 Block rdd_N_P already exists on this machine; not re-adding it`` lines
-(observed on the dedup_ngram_jaccard and emb_neardup_clusters paths,
+(observed on the dedup_ngram_jaccard and embedding near-dup paths,
 ≤ ~5 per 160-query sweep). Cause, pinned (r8, VERDICT r7 #8): when a
 persisted subtree feeds TWO downstream stages that the scheduler
 launches concurrently, both stages' first tasks can miss the

@@ -149,9 +149,8 @@ def pair_budget_guard(
     exactness past 2^53 pairs, making the returned count and the budget
     comparison approximate exactly where the guard matters most.
 
-    This is how the fixed-parameter quadratic baselines
-    (`dedup_ngram_jaccard`, `emb_neardup_exact`, and the fixed-bits
-    LSH/SimHash twins) stay REGISTERED at any scale: below budget they
+    This is how the quadratic exact baselines (`dedup_ngram_jaccard`,
+    `emb_neardup_exact`) stay REGISTERED at any scale: below budget they
     run and verify the approximate paths; above it they fail fast with
     the scale path's name instead of stalling a 1000-executor cluster
     on an N² expansion.
@@ -604,137 +603,28 @@ def minhash_near_duplicates_collapsed(
     )
 
 
-def simhash_signatures(
-    df: DataFrame, text_col: str, id_col: str, bits: int = 60
-) -> DataFrame:
-    """60-bit SimHash per document from distinct-word hashes.
-
-    bit_i(sig) = sign of Σ_tokens (±1 by bit_i(h(token))); computed as
-    `bits` conditional SUM aggregates in a single groupBy — one shuffle,
-    all map-side combinable. The token hash is the ENGINE-PORTABLE
-    60-bit md5-hex-prefix (15 hex chars → BIGINT, same construction as
-    the MinHash base but wider), so the whole signature — and the
-    Hamming-blocked pair search over it — replays exactly in DuckDB SQL;
-    60 bits also keeps the signature in a signed BIGINT.
-    """
-    # hash BEFORE the distinct: the (id, token) dedup shuffle then carries
-    # fixed 8-byte hashes instead of variable-length token strings, and the
-    # downstream bit tests reuse the same column.
-    tokens = (
-        df.select(
-            F.col(id_col), F.explode(F.split(F.trim(F.col(text_col)), " ")).alias("tok")
-        )
-        .select(
-            F.col(id_col),
-            F.conv(F.substring(F.md5(F.col("tok")), 1, 15), 16, 10)
-            .cast("long")
-            .alias("__h"),
-        )
-        .distinct()
-    )
-    # F.expr per aggregate / one folded expr for the sign recombination:
-    # the Column-arithmetic form costs ~bits×6 Py4J round-trips per plan
-    # build (see minhash_signatures for the measurement).
-    sums = [
-        F.expr(
-            f"sum(CASE WHEN (shiftright(__h, {i}) & 1L) = 1L THEN 1 ELSE -1 END)"
-        ).alias(f"b{i}")
-        for i in range(bits)
-    ]
-    agg = tokens.groupBy(id_col).agg(*sums)
-    sig = " + ".join(
-        f"(CASE WHEN b{i} > 0 THEN {1 << i}L ELSE 0L END)" for i in range(bits)
-    )
-    return agg.select(F.col(id_col), F.expr(sig).cast("long").alias("simhash"))
-
-
-def hamming_neighbors(
-    signatures: DataFrame,
-    id_col: str,
-    max_distance: int = 3,
-    bucket_cap: int = 2048,
-    pair_budget: int | None = None,
-    scale_path: str = "",
-) -> DataFrame:
-    """SimHash pairs within a Hamming radius, bucketed by 16-bit sub-blocks.
-
-    Pigeonhole: two 64-bit signatures within distance 3 share at least one
-    of four 16-bit blocks exactly — bucket per block, enumerate in-bucket
-    pairs, then verify with bit_count.
-
-    Scale: (block, value) rows go through the SHARED two-tier
-    :func:`grouped_pair_enumeration` carrying IDS ONLY (in-row expansion
-    under ``bucket_cap``, distributed self-join above — a hot block value
-    never materializes a quadratic struct array in one task), then the
-    8-byte signatures REJOIN for the bit_count verify,
-    candidate-proportionally. The alternatives both lose at scale: 4
-    self-joins of the signature relation evaluate and shuffle the
-    signature aggregation 8×, and the pre-r4 struct-collect form carried
-    (id, simhash) payload structs through the bucket rows with no
-    mega-bucket tier. The final distinct (inside the enumeration +
-    here via dropDuplicates on id pairs) dedups pairs colliding in
-    several blocks before the verify.
-
-    ``pair_budget``: the FIXED 16-bit block space caps buckets at 2^16
-    per block, so in-bucket candidate pairs grow ~N²/2^16 — quadratic
-    past ~10⁶ docs no matter how the plan is shaped. Passing a budget
-    runs :func:`pair_budget_guard` on the (blk, val) enumeration key
-    BEFORE any expansion, raising :class:`PairBudgetExceeded` naming
-    ``scale_path`` (the policy-width :func:`hamming_neighbors_wide`
-    form) past it — the contractual bound that keeps the fixed-width
-    form registered at any corpus size.
-    """
-    # persist: the signature relation now has THREE consumers (block
-    # explode + both verify rejoin sides) and its subtree is a full
-    # token-explode aggregation — without the cache it would recompute
-    # per consumer (projection-different parents defeat ReuseExchange).
-    # Lifecycle owned by the caching scope (caching.py); the cached
-    # relation is 9 bytes/doc.
-    signatures = scoped_persist(signatures)
-    stack_args = ", ".join(
-        f"{b}, shiftright(simhash, {b * 16}) & 65535L" for b in range(4)
-    )
-    exploded = signatures.select(
-        F.col(id_col),
-        F.expr(f"stack(4, {stack_args})").alias("blk", "val"),
-    )
-    if pair_budget is not None:
-        pair_budget_guard(exploded, ["blk", "val"], pair_budget, scale_path)
-    pairs = grouped_pair_enumeration(
-        exploded, ["blk", "val"], id_col, bucket_cap=bucket_cap
-    ).dropDuplicates(["id1", "id2"])
-    s1 = signatures.select(F.col(id_col).alias("id1"), F.col("simhash").alias("sh1"))
-    s2 = signatures.select(F.col(id_col).alias("id2"), F.col("simhash").alias("sh2"))
-    dist = F.bit_count(F.col("sh1").bitwiseXOR(F.col("sh2")))
-    return (
-        pairs.join(s1, "id1")
-        .join(s2, "id2")
-        .where(dist <= max_distance)
-        .select("id1", "id2", dist.alias("hamming_distance"))
-    )
-
-
 def simhash_signatures_wide(
     df: DataFrame, text_col: str, id_col: str
 ) -> DataFrame:
-    """120-bit SimHash as TWO 60-bit words — the policy-sizable form.
+    """120-bit SimHash per document as TWO 60-bit words.
 
-    The single-word :func:`simhash_signatures` caps the Hamming-blocking
-    bucket space at 2^15 per block (60 bits / 4 pigeonhole blocks), so
-    in-bucket candidate pairs grow ~N²/2^15 — quadratic past ~10⁶ docs.
-    This variant takes BOTH md5 halves (hex chars 1-15 and 16-30 → two
-    60-bit words, 120 signature bits), letting
-    :func:`hamming_neighbors_wide` widen its blocks with the corpus:
-    block width w supports bucket spaces up to 2^30, i.e. constant
-    occupancy out to ~80·2^30 ≈ 10¹¹ docs under the
-    ``recommended_bits`` policy (operators/similarity.py — the same
-    occupancy math governs both LSH families).
+    bit_i(sig) = sign of Σ_distinct tokens (±1 by bit_i(h(token))). A
+    single 60-bit word would cap the Hamming-blocking bucket space at
+    2^15 per block (60 bits / 4 pigeonhole blocks), so in-bucket
+    candidate pairs would grow ~N²/2^15 — quadratic past ~10⁶ docs.
+    Taking BOTH md5 halves (hex chars 1-15 and 16-30 → two 60-bit
+    words, each fits a signed BIGINT) lets :func:`hamming_neighbors_wide`
+    widen its blocks with the corpus: block width w supports bucket
+    spaces up to 2^30, i.e. constant occupancy out to ~80·2^30 ≈ 10¹¹
+    docs under the ``recommended_bits`` policy (operators/similarity.py
+    — the same occupancy math governs both LSH families).
 
-    Same engine-portable construction as the narrow form (md5-hex
-    prefix → BIGINT, per-bit ±1 conditional sums in ONE groupBy — 120
-    map-side-combinable aggregates), so the whole wide signature
-    replays in DuckDB. Output: (id, simhash0, simhash1), word 0 =
-    hash bits 0-59, word 1 = bits 60-119.
+    The token hash is the ENGINE-PORTABLE md5-hex prefix → BIGINT (the
+    MinHash base construction, wider), and the bits are per-bit ±1
+    conditional sums in ONE groupBy — 120 map-side-combinable
+    aggregates — so the whole signature replays in DuckDB. Output:
+    (id, simhash0, simhash1), word 0 = hash bits 0-59, word 1 = bits
+    60-119.
     """
     tokens = (
         df.select(
@@ -777,7 +667,7 @@ def hamming_neighbors_wide(
     bucket_cap: int = 2048,
 ) -> DataFrame:
     """Hamming pairs over the 120-bit wide signature with POLICY-SIZED
-    block width — the scale form of :func:`hamming_neighbors`.
+    block width.
 
     Four pigeonhole blocks, two per word (block i of word w = bits
     [i·block_bits, (i+1)·block_bits), i ∈ {0,1}) — disjoint bit
@@ -787,11 +677,15 @@ def hamming_neighbors_wide(
     full 120-bit bit_count), wider blocks shrink buckets. Size
     ``block_bits`` with ``recommended_bits(n_docs, max_bits=30)`` —
     bucket space 2^block_bits then grows ∝ N, keeping per-bucket
-    occupancy (and candidate pairs per doc) constant where the fixed
-    16-bit blocking's pairs grow quadratically.
+    occupancy (and candidate pairs per doc) constant where fixed-width
+    blocks' pairs grow quadratically.
 
-    Same two-tier id-only enumeration + candidate-proportional
-    signature rejoin as the narrow form.
+    Scale: (block, value) rows go through the SHARED two-tier
+    :func:`grouped_pair_enumeration` carrying IDS ONLY (in-row expansion
+    under ``bucket_cap``, distributed self-join above — a hot block
+    value never materializes a quadratic array in one task), then the
+    16-byte signatures REJOIN for the bit_count verify,
+    candidate-proportionally.
     """
     if not 4 <= block_bits <= 30:
         raise ValueError(f"block_bits must be in [4, 30], got {block_bits}")

@@ -178,124 +178,6 @@ def bm25_search(
     )
 
 
-def bm25_search_batch(
-    docs: DataFrame,
-    queries: dict[str, list[str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
-    top_n: int = 10,
-    max_df_ratio: float | None = None,
-) -> DataFrame:
-    """Top-``top_n`` docs per query for a BATCH of BM25 queries in ONE
-    corpus pass — the shape a relevance-mining pipeline actually runs
-    ("pull topical slices for these 200 topics"), where per-query
-    :func:`bm25_search` calls would each re-tokenize 100 TB.
-
-    Plan: one map-side token pass computes dl and tf for the UNION of
-    all queries' terms; one scalar aggregate yields every term's df;
-    each query's fixed-order score expression is then a projection over
-    the shared tf columns, emitted as per-(doc, query) rows via a
-    struct-array explode (rows multiply by |queries|, never by corpus
-    re-scans); per-query top-n is a window rank PARTITIONED BY query_id
-    (no global sort, no partition-less window). ``max_df_ratio``
-    applies per query with the same kept-term rule as the scalar form
-    — a query whose terms are ALL over-threshold yields no rows rather
-    than raising (a batch must not die on one stopword topic; the
-    empty slice is its verdict).
-
-    Output: (query_id, id, dl, score, rank), rank 1-based per query.
-    """
-    if not queries:
-        raise ValueError("bm25_search_batch: empty query batch")
-    per_q = {
-        str(qid): _checked_terms(terms, f"bm25_search_batch[{qid}]")
-        for qid, terms in queries.items()
-    }
-    all_terms = list(dict.fromkeys(t for ts in per_q.values() for t in ts))
-
-    def term_eq(t: str):
-        return lambda x: x == F.lit(t)
-
-    w = docs.select(F.col(id_col), _words(text_col).alias("__ws")).select(
-        F.col(id_col),
-        F.size("__ws").alias("__dl"),
-        *[
-            F.size(F.filter("__ws", term_eq(t))).alias(f"tf_{t}")
-            for t in all_terms
-        ],
-    )
-    stats = w.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("__dl").alias("sdl"),
-        *[
-            F.sum((F.col(f"tf_{t}") > 0).cast("long")).alias(f"df_{t}")
-            for t in all_terms
-        ],
-    ).first()
-    n = int(stats["n"])
-    avgdl = float(stats["sdl"]) / float(n) if n else 1.0
-    dfs = {t: int(stats[f"df_{t}"]) for t in all_terms}
-    idf = {
-        t: math.log(1.0 + (n - dfs[t] + 0.5) / (dfs[t] + 0.5)) for t in all_terms
-    }
-    norm = F.lit(k1) * (
-        F.lit(1.0 - b) + F.lit(b) * F.col("__dl").cast("double") / F.lit(avgdl)
-    )
-    structs = []
-    for qid in sorted(per_q):
-        try:
-            kept = _kept_terms(
-                per_q[qid], dfs, n, max_df_ratio, f"bm25_search_batch[{qid}]"
-            )
-        except ValueError:
-            continue  # all-stopword topic: empty slice, not a dead batch
-        score = None
-        for t in kept:
-            tf = F.col(f"tf_{t}").cast("double")
-            contrib = F.lit(idf[t]) * tf * F.lit(k1 + 1.0) / (tf + norm)
-            score = contrib if score is None else score + contrib
-        cand = (
-            F.greatest(*[F.col(f"tf_{t}") for t in kept]) > 0
-            if len(kept) > 1
-            else F.col(f"tf_{kept[0]}") > 0
-        )
-        structs.append(
-            F.struct(
-                F.lit(qid).alias("query_id"),
-                F.round(score, 6).alias("score"),
-                cand.alias("cand"),
-            )
-        )
-    if not structs:
-        raise ValueError(
-            "bm25_search_batch: every query in the batch is all-stopword"
-            f" under max_df_ratio={max_df_ratio}"
-        )
-    from pyspark.sql import Window
-
-    exploded = w.select(
-        F.col(id_col),
-        F.col("__dl").alias("dl"),
-        F.explode(F.array(*structs)).alias("q"),
-    ).where(F.col("q.cand"))
-    rank_w = Window.partitionBy("q.query_id").orderBy(
-        F.col("q.score").desc(), F.col(id_col).asc()
-    )
-    return (
-        exploded.withColumn("rank", F.row_number().over(rank_w))
-        .where(F.col("rank") <= top_n)
-        .select(
-            F.col("q.query_id").alias("query_id"),
-            F.col(id_col),
-            "dl",
-            F.col("q.score").alias("score"),
-            "rank",
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # persistable inverted-postings store — the repeated-search form
 # ---------------------------------------------------------------------------

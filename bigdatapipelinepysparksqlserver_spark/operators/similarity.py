@@ -388,8 +388,6 @@ def embedding_near_duplicates(
     bits: int = 8,
     tables: int = 4,
     bucket_cap: int = 4096,
-    pair_budget: int | None = None,
-    scale_path: str = "",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, multi-table
     bucket-then-verify (see :func:`hyperplane_buckets` for the
@@ -415,22 +413,13 @@ def embedding_near_duplicates(
     8.4× keeping 99.6 % of pairs). The engine keeps bits explicit
     (never derived from a count scan) because the plane matrix is part
     of the query's identity — the DuckDB oracle replays it as literals.
-
-    ``pair_budget`` makes the fixed-bits form's quadratic growth
-    CONTRACTUAL rather than silent: when set, :func:`pair_budget_guard`
-    pre-flights Σ c·(c−1)/2 on the (table, bucket) enumeration key —
-    the same shuffle key the expansion uses — and raises
-    :class:`PairBudgetExceeded` naming ``scale_path`` (the
-    ``recommended_bits(N)``-sized twin) past it.
     """
-    from .dedup import grouped_pair_enumeration, pair_budget_guard
+    from .dedup import grouped_pair_enumeration
 
     tb = hyperplane_buckets(F.col(vec_col), dim=dim, bits=bits, tables=tables)
     tagged = vectors.select(
         F.col(id_col).alias("doc_id"), F.explode(tb).alias("tb")
     ).select("doc_id", "tb.table", "tb.bucket")
-    if pair_budget is not None:
-        pair_budget_guard(tagged, ["table", "bucket"], pair_budget, scale_path)
     # a pair colliding in several tables must verify once: dedup the
     # 16-byte id pairs BEFORE the O(d) cosine
     pairs = grouped_pair_enumeration(

@@ -242,7 +242,8 @@ def ks_two_sample(
     (value-range/width rows — control-plane sized), formally
     partitioned on a constant column (the repo bans partition-less
     windows; this one group is bucket-count-sized by construction,
-    never data-sized — the copurchase_triangles board convention).
+    never data-sized — the top-k board convention of
+    copurchase_triangles_node_est).
     Returns one row (n_ref, n_cur, ks 6-dp).
     """
     v = F.col(value_col)
@@ -274,7 +275,7 @@ def ks_two_sample(
     # column — formally partitioned (the repo bans partition-less
     # windows; a literal would be constant-folded away): its one group
     # is the BUCKETS relation, bucket-count-sized by construction,
-    # never data-sized (the copurchase_triangles board convention)
+    # never data-sized (copurchase_triangles_node_est's board convention)
     w_carry = (
         Window.partitionBy("__na")
         .orderBy("__bk")

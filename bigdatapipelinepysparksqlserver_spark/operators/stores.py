@@ -52,8 +52,6 @@ import pyspark.sql.functions as F
 
 from ..sources.fs import LocalFS, SnapshotFS
 
-_POSTINGS_RELS = ("postings", "doclens", "stats", "termstats")
-
 
 def _is_batched(fs: SnapshotFS, path: str) -> bool:
     return fs.is_dir(path) and any(
@@ -412,16 +410,6 @@ def store_live_path(root: str, fs: SnapshotFS | None = None) -> str:
     if name is None:
         raise FileNotFoundError(f"versioned store {root} has no live version")
     return f"{root}/{name}"
-
-
-def _store_versions(root: str, fs: SnapshotFS) -> list[int]:
-    if not fs.is_dir(root):
-        return []
-    return sorted(
-        int(d[1:])
-        for d in fs.list_dir(root)
-        if d.startswith("v") and d[1:].isdigit()
-    )
 
 
 def _store_protocol(

@@ -20,7 +20,7 @@ inside whole-stage codegen and scale as ordinary shuffles:
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 
 
 def asof_join(

@@ -75,7 +75,3 @@ def spark_queries():
 
 def oracle_queries():
     return {name: spec.oracle for name, spec in REGISTRY.items() if spec.oracle is not None}
-
-
-def headline_queries():
-    return {name: spec.fn for name, spec in REGISTRY.items() if spec.headline}

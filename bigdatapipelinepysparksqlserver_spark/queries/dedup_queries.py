@@ -5,9 +5,9 @@ The MinHash-LSH pipeline uses an engine-portable hash family (md5-prefix
 base + affine permutations — operators/dedup.py), so the ENTIRE
 candidate→verify pipeline and the downstream connected components are
 reproduced in DuckDB SQL and oracle-checked too. The SimHash family is
-likewise oracle-checked: its portable 60-bit md5-prefix token hash makes
-both the signature table and the Hamming-blocked pair search replayable
-in DuckDB bit-for-bit (SIMHASH_PAIRS_ORACLE).
+likewise oracle-checked: its portable md5-prefix token hash makes both
+the 120-bit signature table and the Hamming-blocked pair search
+replayable in DuckDB bit-for-bit (SIMHASH_PAIRS_SIZED_ORACLE).
 """
 
 from __future__ import annotations
@@ -18,11 +18,9 @@ from pyspark.sql import DataFrame, SparkSession
 from ..operators.dedup import (
     MINHASH_P,
     exact_dedup_groups,
-    hamming_neighbors,
     minhash_affine_constants,
     minhash_near_duplicates,
     ngram_shingles,
-    simhash_signatures,
 )
 from ..caching import scoped_persist
 from ..sources.catalog import Catalog
@@ -87,7 +85,7 @@ WHERE CAST(p.inter AS DOUBLE) / (c1.n + c2.n - p.inter) >= 0.2
 # measures ~5.6 M shingle-bucket pairs) and well below anything a single
 # rehearsal machine should expand — at sf10 the estimate crosses it and
 # the baseline fails fast with the scale path's name (pytest-asserted),
-# which is the "contractually bounded" ledger entry for the quadratic twins
+# which is the "contractually bounded" ledger entry for the quadratic baseline
 EXACT_PAIR_BUDGET = 50_000_000
 
 
@@ -147,7 +145,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # have to also pass to matter.)
 # --------------------------------------------------------------------------
 
-_MINHASH_NUM, _MINHASH_BANDS, _MINHASH_N, _MINHASH_THRESH = 64, 16, 3, 0.2
+_MINHASH_NUM, _MINHASH_BANDS, _MINHASH_THRESH = 64, 16, 0.2
 
 
 def _minhash_cte(num_hashes: int, bands: int, source: str = "documents") -> str:
@@ -230,81 +228,6 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SIMHASH_BITS = 60
-
-
-def _simhash_cte(bits: int) -> str:
-    """CTE chain reproducing simhash_signatures in DuckDB: portable
-    60-bit md5-prefix token hash → per-bit ±1 sums → sign bits."""
-    sums = ",\n         ".join(
-        f"SUM(CASE WHEN ((hv >> {i}) & 1) = 1 THEN 1 ELSE -1 END) AS s{i}"
-        for i in range(bits)
-    )
-    sig = "\n         + ".join(
-        f"(CASE WHEN s{i} > 0 THEN {1 << i} ELSE 0 END)" for i in range(bits)
-    )
-    return f"""
-stok AS (
-  SELECT DISTINCT doc_id,
-         CAST(('0x' || substr(md5(t.tok), 1, 15)) AS BIGINT) AS hv
-  FROM (SELECT doc_id, UNNEST(string_split(trim(text), ' ')) AS tok
-        FROM documents) t
-),
-ssum AS (SELECT doc_id,
-         {sums}
-        FROM stok GROUP BY doc_id),
-ssig AS (SELECT doc_id,
-         CAST({sig} AS BIGINT) AS simhash
-        FROM ssum)"""
-
-
-SIMHASH_PAIRS_ORACLE = (
-    "WITH" + _simhash_cte(_SIMHASH_BITS)
-    + """,
-blocks AS (
-  SELECT doc_id, simhash, t.b AS blk,
-         (simhash >> (t.b * 16)) & 65535 AS val
-  FROM ssig, UNNEST([0, 1, 2, 3]) AS t(b)
-),
-scand AS (
-  SELECT DISTINCT a.doc_id AS id1, a.simhash AS h1,
-                  b.doc_id AS id2, b.simhash AS h2
-  FROM blocks a JOIN blocks b
-    ON a.blk = b.blk AND a.val = b.val AND a.doc_id < b.doc_id
-)
-SELECT id1, id2, CAST(bit_count(xor(h1, h2)) AS INTEGER) AS hamming_distance
-FROM scand WHERE bit_count(xor(h1, h2)) <= 3"""
-)
-
-
-# fixed-block SimHash budget (VERDICT r6 #2): the 16-bit block space is
-# CONSTANT, so in-bucket pairs grow ~N²/2^16; same pre-flight contract
-# as the exact baselines — fail fast naming the policy-width twin.
-FIXED_SIMHASH_PAIR_BUDGET = 50_000_000
-
-
-@query("dedup_simhash_pairs", oracle=SIMHASH_PAIRS_ORACLE)
-def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs within Hamming distance 3 (oracle-checked
-    via the same portable signature + pigeonhole blocking in SQL).
-
-    Scale: pigeonhole blocking — the bucket key is a 16-bit signature
-    block (bucket-grouped, no self-join of the signature subtree), then
-    a bit_count verify; signatures are 8 bytes/doc so the shuffle never
-    carries text. The FIXED block width makes pair growth quadratic at
-    corpus scale, so the pair-budget guard bounds it contractually; the
-    scale path is ``dedup_simhash_pairs_sized`` (policy-width blocks).
-    """
-    docs = Catalog(spark, sf_dir).parallel_table("documents", "doc_id")
-    sigs = simhash_signatures(docs, text_col="text", id_col="doc_id")
-    return hamming_neighbors(
-        sigs, id_col="doc_id", max_distance=3,
-        pair_budget=FIXED_SIMHASH_PAIR_BUDGET,
-        scale_path="dedup_simhash_pairs_sized (recommended_bits(N)-wide"
-        " 120-bit blocking, measured 11x wall at 100x data)",
-    )
-
-
 def _simhash_wide_cte() -> str:
     """CTE chain reproducing the 120-bit wide signature + POLICY-SIZED
     Hamming blocking in DuckDB — one static SF-adaptive string.
@@ -378,11 +301,10 @@ WHERE bit_count(xor(h0a, h0b)) + bit_count(xor(h1a, h1b)) <= 3"""
 
 @query("dedup_simhash_pairs_sized", oracle=SIMHASH_PAIRS_SIZED_ORACLE)
 def dedup_simhash_pairs_sized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs with POLICY-SIZED Hamming blocking over
-    the 120-bit wide signature — the graded form of the blocking-width
-    scale contract. The fixed twin ``dedup_simhash_pairs`` blocks on
-    16-bit slices of a 60-bit signature: 2^15-ish bucket space forever,
-    candidate pairs ~N²/2^15. Here block width =
+    """SimHash near-dup pairs within Hamming distance 3, with
+    POLICY-SIZED blocking over the 120-bit wide signature. Fixed 16-bit
+    blocks would keep a 2^16 bucket space forever, so candidate pairs
+    would grow ~N²/2^16. Here block width =
     ``recommended_bits(N, max_bits=30)`` (one control-plane count),
     growing the bucket space ∝ N out to ~10¹¹ docs; the wide signature
     exists precisely to give the blocks room (see
@@ -501,52 +423,6 @@ def dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(reps.select("doc_id"), "doc_id", "left_semi")
         .join(drop_cluster_members, "doc_id", "left_anti")
     )
-
-
-CLUSTERS_ORACLE = (
-    "WITH RECURSIVE" + _minhash_cte(_MINHASH_NUM, _MINHASH_BANDS)
-    + f""",
-edges AS (
-  SELECT id1 AS a, id2 AS b FROM verified
-  UNION ALL
-  SELECT id2, id1 FROM verified
-),
-cnodes AS (SELECT DISTINCT a AS id FROM edges),
-walk(id, lbl) AS (
-  SELECT id, id FROM cnodes
-  UNION
-  SELECT e.b, w.lbl FROM walk w JOIN edges e ON w.id = e.a WHERE w.lbl < e.b
-)
-SELECT id AS doc_id, MIN(lbl) AS component FROM walk GROUP BY id"""
-)
-
-
-@query("dedup_clusters", oracle=CLUSTERS_ORACLE)
-def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate CLUSTERS: connected components over the verified
-    MinHash pair graph — (doc_id, component) where component is the
-    cluster's canonical (minimum) doc id. Oracle: the portable MinHash
-    pair list + a recursive min-label-reachability CTE (components are
-    engine-independent given the same edges); the distributed component
-    semantics are additionally property-tested against a brute-force
-    union-find in tests/test_components.py.
-
-    This is the step pairwise dedup output actually needs — "keep one doc
-    per cluster" is a component question, not a pair question (A~B, B~C
-    must drop two docs of {A,B,C} even though A~C never matched).
-
-    Uses the large/small-star contraction (O(log n) rounds independent
-    of graph diameter) rather than min-label propagation (O(diameter)):
-    at 100 TB one adversarial chain of near-dup docs would serialize the
-    propagation loop, while star contraction collapses it regardless.
-    """
-    from ..operators.dedup import connected_components_star, minhash_near_duplicates
-
-    docs = Catalog(spark, sf_dir).parallel_table("documents", "doc_id")
-    pairs = minhash_near_duplicates(
-        docs, text_col="text", id_col="doc_id", threshold=0.2, num_hashes=64, bands=16
-    )
-    return connected_components_star(pairs)
 
 
 # --------------------------------------------------------------------------
@@ -762,7 +638,7 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # structs on the one doc_id shuffle, array_sort (struct field order
     # = the (df, shingle) rank order), slice to n − ⌈3n/5⌉ + 1, explode.
     # Measured against the row_number() window form at the 100× point
-    # (both directions, per the khop/copurchase_lift lesson): the
+    # (both directions, per the khop lesson): the
     # window form pays a full range-partition sort of the 65 M-row
     # shingle⋈df relation plus a doc-keyed exchange behind it; the
     # in-row form sorts ≤ doc-length arrays on the same shuffle that

@@ -1,7 +1,7 @@
 """Graph-analytics queries: rank propagation over relational edge
-lists. Connected-components queries live with the dedup family
-(`dedup_clusters`, `emb_neardup_clusters*`); this module adds the
-iterative-rank shape — PageRank in fixed-point integer arithmetic, so
+lists. Connected components run inside the dedup family's queries
+(`dedup_apply`, `dedup_keep_best`, `semantic_dedup`); this module adds
+the iterative-rank shape — PageRank in fixed-point integer arithmetic, so
 a 3-round iterative algorithm is exactly DuckDB-replayable (EXACT
 integers end to end, not a rounded handoff between rounds)."""
 
@@ -81,275 +81,6 @@ def part_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pagerank(edges, iters=PR_ITERS).select(
         F.col("node").alias("part_id"), "rank"
     )
-
-
-LIFT_MIN_SUPPORT = 2
-LIFT_TOP_K = 20
-
-COPURCHASE_LIFT_ORACLE = f"""
-WITH b AS (
-  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-),
-n AS (SELECT COUNT(DISTINCT l_orderkey) AS n_orders FROM b),
-item AS (SELECT l_partkey, COUNT(*) AS s FROM b GROUP BY 1),
-pair AS (
-  SELECT x.l_partkey AS part_a, y.l_partkey AS part_b, COUNT(*) AS s_ab
-  FROM b x JOIN b y
-    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey
-  GROUP BY 1, 2
-),
-scored AS (
-  SELECT p.part_a, p.part_b, p.s_ab, ia.s AS s_a, ib.s AS s_b,
-    ROUND((CAST(p.s_ab AS DOUBLE) * CAST(n.n_orders AS DOUBLE))
-          / (CAST(ia.s AS DOUBLE) * CAST(ib.s AS DOUBLE)), 6) AS lift
-  FROM pair p
-  JOIN item ia ON ia.l_partkey = p.part_a
-  JOIN item ib ON ib.l_partkey = p.part_b
-  CROSS JOIN n
-  WHERE p.s_ab >= {LIFT_MIN_SUPPORT}
-)
-SELECT part_a, part_b, s_ab, s_a, s_b, lift
-FROM scored
-ORDER BY lift DESC, part_a, part_b
-LIMIT {LIFT_TOP_K}
-"""
-
-
-@query("copurchase_lift", oracle=COPURCHASE_LIFT_ORACLE)
-def copurchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Association rules over order baskets: top-k part pairs by
-    lift = P(A∧B) / (P(A)·P(B)) with a minimum pair support — the
-    market-basket family (support/lift) as a graded query. Every count
-    is an exact integer; lift is ONE fixed-order double expression
-    ROUND(…, 6), and the top-k orders on the ROUNDED value with a
-    (part_a, part_b) tie-break so the board is deterministic
-    cross-engine.
-
-    Scale: pair enumeration self-joins baskets per order — fanout
-    bounded by basket size (TPC-H ≤ 7 items → ≤ 21 pairs/order), the
-    same contract as the PageRank edge builder; pair and item supports
-    are 8/16-byte-key groupBys with map-side partials; the order-count
-    relation is 1 row broadcast back; top-k lowers to
-    TakeOrderedAndProject (per-partition heaps, no global sort).
-    """
-    li = Catalog(spark, sf_dir).lineitem.select("l_orderkey", "l_partkey")
-    b = li.distinct()
-    n = b.agg(F.countDistinct("l_orderkey").alias("n_orders"))
-    item = b.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("s"))
-    x = b.alias("x")
-    y = b.alias("y")
-    pair = (
-        x.join(
-            y,
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_partkey") < F.col("y.l_partkey")),
-        )
-        .groupBy(
-            F.col("x.l_partkey").alias("part_a"),
-            F.col("y.l_partkey").alias("part_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("s_ab"))
-        .where(F.col("s_ab") >= LIFT_MIN_SUPPORT)
-    )
-    ia = item.select(
-        F.col("l_partkey").alias("part_a"), F.col("s").alias("s_a")
-    )
-    ib = item.select(
-        F.col("l_partkey").alias("part_b"), F.col("s").alias("s_b")
-    )
-    scored = (
-        pair.join(ia, "part_a")
-        .join(ib, "part_b")
-        .crossJoin(F.broadcast(n))
-        .select(
-            "part_a", "part_b", "s_ab", "s_a", "s_b",
-            F.round(
-                (F.col("s_ab").cast("double") * F.col("n_orders").cast("double"))
-                / (F.col("s_a").cast("double") * F.col("s_b").cast("double")),
-                6,
-            ).alias("lift"),
-        )
-    )
-    return scored.orderBy(
-        F.col("lift").desc(), "part_a", "part_b"
-    ).limit(LIFT_TOP_K)
-
-
-# --------------------------------------------------------------------------
-# triangle counting: clustering structure of the co-purchase graph
-# --------------------------------------------------------------------------
-
-TRIANGLES_TOP_K = 10
-
-TRIANGLES_ORACLE = f"""
-WITH b AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-e AS (
-  SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-  FROM b x JOIN b y
-    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey
-),
-tri AS (
-  SELECT e1.a, e1.b, e2.b AS c
-  FROM e e1
-  JOIN e e2 ON e2.a = e1.b
-  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b
-),
-nodes AS (
-  SELECT t.node, COUNT(*) AS tri_count
-  FROM (
-    SELECT a AS node FROM tri
-    UNION ALL SELECT b FROM tri
-    UNION ALL SELECT c FROM tri
-  ) t GROUP BY 1
-),
-total AS (SELECT CAST(COUNT(*) AS BIGINT) AS total_triangles FROM tri)
-SELECT node AS part_id, tri_count,
-       CAST(ROW_NUMBER() OVER (ORDER BY tri_count DESC, node) AS INT)
-         AS rank,
-       total_triangles
-FROM nodes, total
-ORDER BY tri_count DESC, node
-LIMIT {TRIANGLES_TOP_K}
-"""
-
-
-@query("copurchase_triangles", oracle=TRIANGLES_ORACLE)
-def copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Triangle counting over the co-purchase graph: the top-10 parts
-    by triangle participation plus the global triangle count — the
-    graph-pattern-matching shape (clustering coefficient numerator)
-    next to PageRank's rank iteration and k-hop's frontier iteration.
-
-    Scale: DEGREE-ORDERED orientation (``operators/graph.py
-    triangle_counts``) — each edge points from its (degree, id)-smaller
-    endpoint, so wedges enumerate only through low-degree endpoints
-    (Σ outdeg² = O(E^1.5) worst case) — closed by a hash join against
-    the (persisted, multi-consumer) oriented edge relation. A
-    pair-budget pre-flight (exact Σ c·(c−1)/2 over the oriented
-    out-neighbor lists, DECIMAL(38,0)) fails fast past budget, naming
-    "raise wedge_budget … or sample wedges" as the scale path; the
-    measured 100× path is `copurchase_triangles_sampled` (DOULION
-    edge-sampling estimator). Top-k lowers to TakeOrderedAndProject.
-    """
-    from ..caching import scoped_persist
-    from ..operators.graph import triangle_counts
-
-    li = Catalog(spark, sf_dir).lineitem.select("l_orderkey", "l_partkey")
-    grouped = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("ps")
-    )
-    pair_structs = F.expr(
-        "flatten(transform(sequence(0, size(ps) - 2),"
-        " i -> transform(sequence(i + 1, size(ps) - 1),"
-        " j -> struct(element_at(ps, i + 1) AS a,"
-        " element_at(ps, j + 1) AS b))))"
-    )
-    edges = scoped_persist(
-        grouped.where(F.size("ps") > 1)
-        .select(F.explode(pair_structs).alias("p"))
-        .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .distinct()
-    )
-    nodes = triangle_counts(edges, wedge_budget=500_000_000)
-    total = nodes.agg(
-        (F.sum("tri_count") / F.lit(3)).cast("long").alias("total_triangles")
-    )
-    ranked = nodes.crossJoin(F.broadcast(total)).select(
-        F.col("node").alias("part_id"), "tri_count", "total_triangles"
-    )
-    from pyspark.sql import Window as W
-
-    # rank runs AFTER the top-k limit (≤ 10 rows by construction) and
-    # partitions on the constant total_triangles column — formally
-    # partitioned (the repo bans partition-less windows), and the one
-    # "group" is the already-limited board, never the node table
-    rk = F.row_number().over(
-        W.partitionBy("total_triangles").orderBy(
-            F.col("tri_count").desc(), F.col("part_id")
-        )
-    )
-    return (
-        ranked.orderBy(F.col("tri_count").desc(), "part_id")
-        .limit(TRIANGLES_TOP_K)
-        .withColumn("rank", rk.cast("int"))
-        .select("part_id", "tri_count", "rank", "total_triangles")
-    )
-
-
-# --------------------------------------------------------------------------
-# DOULION sampled triangle estimate: the triangle family's measured
-# scale path (the exact form fail-fasts past its wedge budget at 100×)
-# --------------------------------------------------------------------------
-
-TRIANGLES_SAMPLED_ORACLE = f"""
-WITH b AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-e AS (
-  SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-  FROM b x JOIN b y
-    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey
-),
-s AS (
-  SELECT a, b FROM e
-  WHERE CAST('0x' || substr(
-          md5(CAST(a AS VARCHAR) || ':' || CAST(b AS VARCHAR)), 1, 15)
-        AS BIGINT) < {1 << 58}
-),
-tri AS (
-  SELECT COUNT(*) AS t
-  FROM s e1
-  JOIN s e2 ON e2.a = e1.b
-  JOIN s e3 ON e3.a = e1.a AND e3.b = e2.b
-),
-ec AS (SELECT COUNT(*) AS n FROM s)
-SELECT CAST(ec.n AS BIGINT) AS sampled_edges,
-       CAST(tri.t AS BIGINT) AS sampled_triangles,
-       CAST(tri.t * 64 AS BIGINT) AS est_triangles
-FROM ec, tri
-"""
-
-
-@query("copurchase_triangles_sampled", oracle=TRIANGLES_SAMPLED_ORACLE)
-def copurchase_triangles_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DOULION (Tsourakakis et al. 2009) triangle-count estimate over
-    the co-purchase graph: keep each edge with p = 1/4 via the
-    deterministic md5 gate, count triangles EXACTLY on the sparsified
-    graph (same degree-ordered counter as `copurchase_triangles`),
-    estimate T = T'·64. The triangle family's measured 100× row: the
-    exact form's 4.1 G-wedge space at the 100× graph trips its budget
-    by design; sampling shrinks wedges ~p² (→ ~256 M, under budget)
-    and triangle work ~p³ while the estimate stays unbiased — and the
-    judge-checkable twist is that the estimate is still EXACT-replayed
-    by the oracle, because the sample is a hash gate, not rand(): both
-    engines materialize the identical sparsified graph. The error
-    corridor vs the exact truth is pytest-pinned where the full count
-    is feasible (`copurchase_triangles`' oracle provides the truth).
-
-    Scale: one orderkey shuffle builds edges (in-row pair expansion,
-    basket-size-bounded); the sampler is a scan-side codegen filter;
-    the sampled counter inherits the wedge-budget pre-flight; the
-    output is three integers — both aggregates are 1-row broadcasts
-    (the legitimate scalar-subquery shape).
-    """
-    from ..caching import scoped_persist
-    from ..operators.graph import triangle_count_estimate
-
-    li = Catalog(spark, sf_dir).lineitem.select("l_orderkey", "l_partkey")
-    grouped = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("ps")
-    )
-    pair_structs = F.expr(
-        "flatten(transform(sequence(0, size(ps) - 2),"
-        " i -> transform(sequence(i + 1, size(ps) - 1),"
-        " j -> struct(element_at(ps, i + 1) AS a,"
-        " element_at(ps, j + 1) AS b))))"
-    )
-    edges = scoped_persist(
-        grouped.where(F.size("ps") > 1)
-        .select(F.explode(pair_structs).alias("p"))
-        .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .distinct()
-    )
-    return triangle_count_estimate(edges, wedge_budget=500_000_000)
 
 
 # ---------------------------------------------------------------------------
@@ -453,6 +184,8 @@ def copurchase_cheapest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
 # orientation, gate, and closure, so the estimate is exact-checked.
 # --------------------------------------------------------------------------
 
+TRIANGLES_TOP_K = 10
+
 TRIANGLES_NODE_EST_ORACLE = f"""
 WITH b AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
 e AS (
@@ -505,11 +238,10 @@ LIMIT {TRIANGLES_TOP_K}
 
 @query("copurchase_triangles_node_est", oracle=TRIANGLES_NODE_EST_ORACLE)
 def copurchase_triangles_node_est(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-10 parts by ESTIMATED triangle participation — the sampled
-    companion that keeps the per-node board available past the exact
-    form's wedge budget (`copurchase_triangles` fail-fasts at the 100x
-    graph by design; the 1-row `copurchase_triangles_sampled` only
-    estimates the global count).
+    """Top-10 parts by ESTIMATED triangle participation — the per-node
+    triangle board at a wedge cost that stays under budget at the 100x
+    graph, where the exact counter (``triangle_counts``) fail-fasts by
+    design.
 
     Estimator (operators/graph.py triangle_node_estimates): wedge
     sampling at p = 1/4 via the deterministic md5 edge gate — a
@@ -558,8 +290,9 @@ def copurchase_triangles_node_est(spark: SparkSession, sf_dir: str) -> DataFrame
     from pyspark.sql import Window as W
 
     # rank runs AFTER the top-k limit (<= 10 rows) and partitions on
-    # the constant est_total_triangles column — same formally-
-    # partitioned shape as copurchase_triangles' board
+    # the constant est_total_triangles column — formally partitioned
+    # (the repo bans partition-less windows), and the one "group" is
+    # the already-limited board, never the node table
     rk = F.row_number().over(
         W.partitionBy("est_total_triangles").orderBy(
             F.col("sampled_tri_count").desc(), F.col("node")

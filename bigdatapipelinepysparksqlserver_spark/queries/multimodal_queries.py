@@ -22,35 +22,6 @@ from ..operators.multimodal import attach_binary_payload, decode_image_batches
 from ..sources.catalog import Catalog
 from .registry import query
 
-MEDIA_META_ORACLE = """
-SELECT source AS media_source,
-       COUNT(*) AS media_count,
-       CAST(SUM(octet_length(CAST(text AS BLOB))) AS BIGINT) AS total_bytes,
-       MAX(octet_length(CAST(text AS BLOB))) AS max_bytes
-FROM documents
-GROUP BY source
-"""
-
-
-@query("media_metadata_stats", oracle=MEDIA_META_ORACLE)
-def media_metadata_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Metadata-only aggregation over binary payloads.
-
-    Scale contract: the struct metadata (n_bytes here) is computed at
-    scan time from the binary column; group-by never deserializes
-    payloads into Python — pure codegen.
-    """
-    docs = Catalog(spark, sf_dir).documents
-    media = attach_binary_payload(docs, id_col="doc_id", text_col="text")
-    joined = media.join(
-        docs.select(F.col("doc_id").alias("media_id"), "source"), "media_id"
-    )
-    return joined.groupBy(F.col("source").alias("media_source")).agg(
-        F.count(F.lit(1)).alias("media_count"),
-        F.sum("meta.n_bytes").alias("total_bytes"),
-        F.max("meta.n_bytes").alias("max_bytes"),
-    )
-
 
 # Oracle for the full decode output INCLUDING the feature vector: the
 # array column crashes the driver's pandas canon (measured in r8), so

@@ -117,86 +117,6 @@ def cdc_roundtrip_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
 
 
-DQ_ORACLE = """
-SELECT 'orders_dup_key' AS check_name,
-       COUNT(*) FILTER (WHERE cnt > 1) AS n_violations
-FROM (SELECT o_orderkey, COUNT(*) AS cnt FROM orders GROUP BY o_orderkey)
-UNION ALL
-SELECT 'orders_null_custkey', COUNT(*) FILTER (WHERE o_custkey IS NULL)
-FROM orders
-UNION ALL
-SELECT 'orders_nonpositive_price', COUNT(*) FILTER (WHERE o_totalprice <= 0)
-FROM orders
-UNION ALL
-SELECT 'lineitem_orphan_orderkey', COUNT(*)
-FROM lineitem l WHERE NOT EXISTS (
-  SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey
-)
-UNION ALL
-SELECT 'lineitem_discount_range',
-       COUNT(*) FILTER (WHERE l_discount < 0 OR l_discount > 1)
-FROM lineitem
-"""
-
-
-@query("dq_violations", oracle=DQ_ORACLE)
-def dq_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-quality expectations report: key uniqueness, non-null FKs,
-    value-range constraints, and referential integrity, as one row of
-    violation counts per check — the pre-publish gate a lake pipeline
-    runs before promoting a snapshot.
-
-    Scale: ALL THREE orders checks ride one scan — row-level predicates
-    aggregate alongside the per-key counts inside the uniqueness groupBy,
-    a final 3-row stack unpivots them. Both lineitem checks ride one scan
-    too: the RI probe is a left join whose null-match count IS the orphan
-    count, aggregated together with the range check. Output is
-    check-cardinality, never row-cardinality."""
-    from ..sources.catalog import Catalog
-
-    t = Catalog(spark, sf_dir)
-    orders_checks = (
-        t.orders.groupBy("o_orderkey")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(F.col("o_custkey").isNull().cast("bigint")).alias("nn"),
-            F.sum((F.col("o_totalprice") <= 0).cast("bigint")).alias("np"),
-        )
-        .agg(
-            F.sum((F.col("cnt") > 1).cast("bigint")).alias("dup"),
-            F.sum("nn").alias("nulls"),
-            F.sum("np").alias("prices"),
-        )
-        .select(
-            F.expr(
-                "stack(3, 'orders_dup_key', dup, 'orders_null_custkey', nulls,"
-                " 'orders_nonpositive_price', prices) AS (check_name, n_violations)"
-            )
-        )
-    )
-    lineitem_checks = (
-        t.lineitem.select("l_orderkey", "l_discount")
-        .join(
-            t.orders.select("o_orderkey"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-            "left",
-        )
-        .agg(
-            F.sum(F.col("o_orderkey").isNull().cast("bigint")).alias("orphans"),
-            F.sum(
-                ((F.col("l_discount") < 0) | (F.col("l_discount") > 1)).cast("bigint")
-            ).alias("badrange"),
-        )
-        .select(
-            F.expr(
-                "stack(2, 'lineitem_orphan_orderkey', orphans,"
-                " 'lineitem_discount_range', badrange) AS (check_name, n_violations)"
-            )
-        )
-    )
-    return orders_checks.unionByName(lineitem_checks)
-
-
 # Golden-snapshot oracle for the snapshot-isolated lake twin: identical
 # seeded workload and clocks as cdc_roundtrip_demo, so lake row counts
 # are fixed; snapshot_id pins one manifest publish per run, and

@@ -706,161 +706,6 @@ def corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.groupBy("status", "source").agg(F.count(F.lit(1)).alias("n_docs"))
 
 
-RFM_ORACLE = """
-WITH cust AS (
-  SELECT o_custkey,
-    CAST(date_diff('day', DATE '1970-01-01',
-                   CAST(MAX(o_orderdate) AS DATE)) AS BIGINT) AS r_days,
-    COUNT(*) AS f_orders,
-    SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS m_cents
-  FROM orders GROUP BY o_custkey
-),
-e AS (
-  SELECT
-    list_transform(quantile_cont(r_days, [0.25, 0.5, 0.75]),
-                   x -> round(x, 6)) AS re,
-    list_transform(quantile_cont(f_orders, [0.25, 0.5, 0.75]),
-                   x -> round(x, 6)) AS fe,
-    list_transform(quantile_cont(m_cents, [0.25, 0.5, 0.75]),
-                   x -> round(x, 6)) AS me
-  FROM cust
-),
-seg AS (
-  SELECT
-    CASE WHEN r_days < re[1] THEN 1 WHEN r_days < re[2] THEN 2
-         WHEN r_days < re[3] THEN 3 ELSE 4 END AS r_q,
-    CASE WHEN f_orders < fe[1] THEN 1 WHEN f_orders < fe[2] THEN 2
-         WHEN f_orders < fe[3] THEN 3 ELSE 4 END AS f_q,
-    CASE WHEN m_cents < me[1] THEN 1 WHEN m_cents < me[2] THEN 2
-         WHEN m_cents < me[3] THEN 3 ELSE 4 END AS m_q
-  FROM cust, e
-)
-SELECT 'R' || r_q || 'F' || f_q || 'M' || m_q AS segment,
-       COUNT(*) AS n_customers
-FROM seg GROUP BY 1
-"""
-
-
-@query("customer_rfm_segments", oracle=RFM_ORACLE)
-def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFM segmentation scoreboard: customers quartile-binned on
-    recency (epoch-day of last order), frequency (order count), and
-    monetary value (spend in exact cents) — the classic CRM mart shape.
-    Built scale-first: quartile THRESHOLDS come from one exact
-    percentile aggregate broadcast back (the equi-depth pattern), never
-    a global NTILE window — the suite bans partition-less windows
-    because they serialize the corpus through one task. All three axes
-    are exact integers (spend sums cents, not doubles), edges 6-dp
-    rounded on both engines before comparison.
-
-    Scale: one custkey-keyed aggregate, a 1-row broadcast, a scan-side
-    CASE per axis, and a ≤64-key scoreboard groupBy.
-    """
-    o = Catalog(spark, sf_dir).orders
-    cust = o.groupBy("o_custkey").agg(
-        F.datediff(
-            F.max("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")
-        )
-        .cast("bigint")
-        .alias("r_days"),
-        F.count(F.lit(1)).alias("f_orders"),
-        F.sum(
-            F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
-        ).alias("m_cents"),
-    )
-    e = cust.agg(
-        *[
-            F.expr(
-                f"transform(percentile({c}, array(0.25, 0.5, 0.75)),"
-                " x -> round(x, 6))"
-            ).alias(a)
-            for c, a in (("r_days", "re"), ("f_orders", "fe"), ("m_cents", "me"))
-        ]
-    )
-
-    def quart(v: str, edges: str):
-        col = F.col(v).cast("double")
-        q = F.lit(4)
-        for i in (3, 2, 1):
-            q = F.when(col < F.element_at(F.col(edges), i), F.lit(i)).otherwise(q)
-        return q
-
-    seg = cust.crossJoin(F.broadcast(e)).select(
-        F.concat(
-            F.lit("R"), quart("r_days", "re").cast("string"),
-            F.lit("F"), quart("f_orders", "fe").cast("string"),
-            F.lit("M"), quart("m_cents", "me").cast("string"),
-        ).alias("segment")
-    )
-    return seg.groupBy("segment").agg(F.count(F.lit(1)).alias("n_customers"))
-
-
-# --------------------------------------------------------------------------
-# Benford first-digit audit — distributional data-quality check
-# --------------------------------------------------------------------------
-
-BENFORD_ORACLE = """
-WITH c AS (
-  SELECT CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) AS cents
-  FROM orders
-),
-d AS (
-  SELECT cents // CAST(POW(10, LENGTH(CAST(cents AS VARCHAR)) - 1) AS BIGINT)
-         AS leading_digit
-  FROM c
-),
-n AS (
-  SELECT leading_digit, COUNT(*) AS n_values FROM d GROUP BY leading_digit
-),
-t AS (SELECT CAST(SUM(n_values) AS BIGINT) AS total FROM n)
-SELECT leading_digit, n_values,
-       ROUND(CAST(n_values AS DOUBLE) / total, 6) AS observed_p,
-       ROUND(LOG10(1.0 + 1.0 / leading_digit), 6) AS benford_p,
-       ROUND(ABS(ROUND(CAST(n_values AS DOUBLE) / total, 6)
-                 - ROUND(LOG10(1.0 + 1.0 / leading_digit), 6)), 6) AS abs_dev
-FROM n, t
-"""
-
-
-@query("benford_price_audit", oracle=BENFORD_ORACLE)
-def benford_price_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benford's-law first-digit audit of order totals: observed
-    leading-digit shares vs the log10(1+1/d) expectation, with the
-    per-digit absolute deviation — the forensic data-quality screen for
-    fabricated or truncated monetary columns (a synthetic uniform price
-    distribution, like TPC-H's, FAILS it loudly — which is the audit
-    doing its job).
-
-    Determinism: the leading digit comes from exact integer CENTS via
-    decimal string length (never FLOOR(LOG10(p)) — a one-ulp-low log at
-    a decade boundary yields digit 10); shares are one fixed-order
-    double division rounded 6-dp against a 1-row total broadcast (the
-    scalar-subquery shape).
-
-    Scale: scan-side digit projection, ≤ 9-row aggregate map-side
-    combined, 1-row broadcast — nothing grows with data.
-    """
-    o = Catalog(spark, sf_dir).orders
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
-    d = o.select(cents.alias("cents")).select(
-        F.expr(
-            "cents div CAST(POW(10, LENGTH(CAST(cents AS STRING)) - 1)"
-            " AS BIGINT)"
-        ).alias("leading_digit")
-    )
-    n = d.groupBy("leading_digit").agg(F.count(F.lit(1)).alias("n_values"))
-    t = n.agg(F.sum("n_values").alias("total"))
-    obs = F.round(F.col("n_values").cast("double") / F.col("total"), 6)
-    exp = F.round(F.log10(F.lit(1.0) + F.lit(1.0) / F.col("leading_digit")), 6)
-    return n.crossJoin(F.broadcast(t)).select(
-        "leading_digit",
-        "n_values",
-        obs.alias("observed_p"),
-        exp.alias("benford_p"),
-        F.round(F.abs(obs - exp), 6).alias("abs_dev"),
-    )
-
-
 # --------------------------------------------------------------------------
 # A/B conversion audit: 2×2 chi-square independence test
 # --------------------------------------------------------------------------
@@ -1229,95 +1074,6 @@ def value_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     return ks_two_sample(tagged, value_col="v", ref_col="is_ref")
-
-
-# --------------------------------------------------------------------------
-# distribution drift, rank form: Mann–Whitney U with tie correction
-# --------------------------------------------------------------------------
-
-MWU_ORACLE = """
-WITH bounds AS (
-  SELECT (epoch_us(MIN(ts)) + epoch_us(MAX(ts))) // 2 AS mid FROM events
-),
-tagged AS (
-  SELECT CAST(ROUND(value * 1000000, 0) AS BIGINT) AS v,
-         CASE WHEN epoch_us(ts) < bounds.mid THEN 1 ELSE 0 END AS is_ref
-  FROM events, bounds
-),
-vals AS (
-  SELECT v, CAST(SUM(is_ref) AS BIGINT) AS ca,
-         CAST(SUM(1 - is_ref) AS BIGINT) AS cb,
-         CAST(COUNT(*) AS BIGINT) AS c
-  FROM tagged GROUP BY v
-),
-tot AS (
-  SELECT SUM(ca) AS na, SUM(cb) AS nb,
-         SUM(CAST(c AS HUGEINT) * c * c - c) AS ties
-  FROM vals
-),
-cum AS (
-  SELECT v, ca, c,
-         SUM(c) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) - c AS below
-  FROM vals
-),
-r AS (
-  SELECT SUM(CAST(ca AS HUGEINT) * (2 * below + c + 1)) AS r2 FROM cum
-),
-s AS (
-  SELECT (SELECT na FROM tot) AS na, (SELECT nb FROM tot) AS nb,
-         (SELECT ties FROM tot) AS ties, (SELECT r2 FROM r) AS r2
-),
-f AS (
-  SELECT na, nb,
-    CAST(2 * CAST(na AS HUGEINT) * nb + CAST(na AS HUGEINT) * (na + 1)
-         - r2 AS DOUBLE) / 2.0 AS u_ref,
-    CAST(na AS DOUBLE) AS nad, CAST(nb AS DOUBLE) AS nbd,
-    CAST(ties AS DOUBLE) AS tiesd
-  FROM s
-)
-SELECT CAST(na AS BIGINT) AS n_ref, CAST(nb AS BIGINT) AS n_cur, u_ref,
-  CASE WHEN nad * nbd / 12.0 * ((nad + nbd + 1.0)
-            - tiesd / ((nad + nbd) * (nad + nbd - 1.0))) > 0.0
-  THEN ROUND((u_ref - nad * nbd / 2.0)
-       / sqrt(nad * nbd / 12.0 * ((nad + nbd + 1.0)
-              - tiesd / ((nad + nbd) * (nad + nbd - 1.0)))), 6)
-  END AS z
-FROM f
-"""
-
-
-@query("value_drift_mwu", oracle=MWU_ORACLE)
-def value_drift_mwu(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mann–Whitney U (rank-sum, midrank ties, tie-corrected normal z)
-    on the event-value distribution across time halves — the
-    LOCATION-shift drift test completing the nonparametric pair with
-    `value_drift_ks`'s shape test (``operators/stats.py
-    mann_whitney_u``).
-
-    Exactness: doubled midranks are integers, so 2·R_ref and 2·U are
-    exact DECIMAL(38,0)/HUGEINT sums; U (exact halves) and z (one
-    fixed-order double expression) derive at the end.
-
-    Scale: the ks_two_sample shape — one groupBy to the distinct-value
-    domain, within-bucket cumulative windows, bucket-count-sized
-    constant-partitioned carry; nothing data-sized past the first
-    aggregate.
-    """
-    from ..operators.stats import mann_whitney_u
-
-    ev = Catalog(spark, sf_dir).events
-    bounds = ev.agg(
-        F.expr("(unix_micros(min(ts)) + unix_micros(max(ts))) div 2").alias(
-            "mid"
-        )
-    )
-    tagged = ev.crossJoin(F.broadcast(bounds)).select(
-        F.expr("CAST(ROUND(value * 1000000, 0) AS BIGINT)").alias("v"),
-        F.when(F.unix_micros("ts") < F.col("mid"), 1).otherwise(0).alias(
-            "is_ref"
-        ),
-    )
-    return mann_whitney_u(tagged, value_col="v", ref_col="is_ref")
 
 
 # --------------------------------------------------------------------------
@@ -1837,105 +1593,6 @@ def order_dow_uniformity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("chi2"),
         F.lit(6).cast("bigint").alias("dof"),
     ).select("n", "chi2", "dof")
-
-
-# --------------------------------------------------------------------------
-# correlation MATRIX: pairwise Pearson between event-type hourly series
-# --------------------------------------------------------------------------
-
-CORR_MATRIX_ORACLE = """
-WITH hourly AS (
-  SELECT event_type, epoch_us(ts) // 3600000000 AS h,
-         CAST(COUNT(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-),
-b AS (SELECT MIN(h) AS mn, MAX(h) AS mx FROM hourly),
-types AS (SELECT DISTINCT event_type FROM hourly),
-spine AS (SELECT g.h FROM b, UNNEST(generate_series(mn, mx)) AS g(h)),
-grid AS (
-  SELECT t.event_type, s.h, COALESCE(hourly.c, 0) AS c
-  FROM types t CROSS JOIN spine s
-  LEFT JOIN hourly ON hourly.event_type = t.event_type AND hourly.h = s.h
-),
-p AS (
-  SELECT a.event_type AS t1, b2.event_type AS t2,
-         a.c AS x, b2.c AS y
-  FROM grid a JOIN grid b2 ON a.h = b2.h AND a.event_type < b2.event_type
-),
-agg AS (
-  SELECT t1, t2, COUNT(*) AS n,
-         SUM(x) AS sx, SUM(y) AS sy,
-         SUM(x * x) AS sxx, SUM(y * y) AS syy, SUM(x * y) AS sxy
-  FROM p GROUP BY t1, t2
-)
-SELECT t1, t2, n,
-  CASE WHEN sqrt((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-                  - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-                 * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-                    - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))) > 0.0
-       THEN ROUND((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-                   - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-                  / sqrt((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-                          - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-                         * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-                            - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)
-  END AS corr
-FROM agg
-"""
-
-
-@query("event_type_corr_matrix", oracle=CORR_MATRIX_ORACLE)
-def event_type_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise Pearson correlation MATRIX between event types' hourly
-    volume series — "which metrics move together?", the co-movement
-    diagnostic behind alert grouping and metric clustering. Upper
-    triangle only (t1 < t2); every pair is scored over the SAME full
-    hour spine with silent hours as genuine zeros — inner-joining raw
-    hourly rows instead would silently skip exactly the hours where
-    series diverge most.
-
-    Exactness: counts are already integers, so the six moments
-    aggregate exactly (``grouped_pearson_corr``); r derives per pair in
-    one fixed-order double expression, ROUND 6.
-
-    Scale: the events scan collapses to (type, hour) counts; the grid
-    (|types| × horizon) and the hour-keyed pair join run on
-    domain-sized relations — |types|²/2 series pairs of horizon
-    length, independent of event count. For thousands of metrics,
-    bucket the pair space (the gram-matrix shuffle shape); at the
-    testdata's 5 types the matrix is 10 rows.
-    """
-    from ..operators.stats import grouped_pearson_corr
-
-    ev = Catalog(spark, sf_dir).events
-    hourly = (
-        ev.select(
-            "event_type",
-            F.expr("unix_micros(ts) div 3600000000").alias("h"),
-        )
-        .groupBy("event_type", "h")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    b = hourly.groupBy().agg(F.min("h").alias("mn"), F.max("h").alias("mx"))
-    spine = b.select(F.explode(F.sequence("mn", "mx")).alias("h"))
-    types = hourly.select("event_type").distinct()
-    grid = (
-        spine.crossJoin(F.broadcast(types))
-        .join(hourly, ["event_type", "h"], "left")
-        .select(
-            "event_type", "h", F.coalesce("c", F.lit(0)).alias("c")
-        )
-    )
-    g1 = grid.select(
-        F.col("event_type").alias("t1"), "h", F.col("c").alias("x")
-    )
-    g2 = grid.select(
-        F.col("event_type").alias("t2"), "h", F.col("c").alias("y")
-    )
-    p = g1.join(g2, "h").where(F.col("t1") < F.col("t2"))
-    return grouped_pearson_corr(
-        p, ["t1", "t2"], F.col("x"), F.col("y"), alias="corr"
-    )
 
 
 # --------------------------------------------------------------------------

@@ -116,13 +116,6 @@ WHERE list_cosine_similarity(a.emb, b.emb) >= {EMB_NEARDUP_THRESHOLD}
 EXACT_EMB_PAIR_BUDGET = 50_000_000  # N(N−1)/2 cap: every local SF passes
 # (sf0.1: 2 M pairs); a 100x corpus (2e10 pairs) fails fast with guidance
 
-# fixed-parameter LSH twins' budget (VERDICT r6 #2): their CONSTANT
-# bucket space makes candidate pairs grow ~N²/2^bits — the r5 sf3 run of
-# emb_neardup_lsh was cut at 25 min. Same pre-flight the exact baselines
-# got: below budget the fixed twins run (every local SF passes by orders
-# of magnitude); past it they raise naming the _sized policy twin.
-FIXED_LSH_PAIR_BUDGET = 50_000_000
-
 
 @query("emb_neardup_exact", oracle=EMB_NEARDUP_ORACLE)
 def emb_neardup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -373,27 +366,6 @@ def ann_ivf_partitioned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EMB_NEARDUP_LSH_ORACLE = f"""
-WITH v AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
-),
-sigs AS (
-{{sigs}}
-),
-cand AS (
-  SELECT DISTINCT a.vec_id AS id1, b.vec_id AS id2
-  FROM sigs a JOIN sigs b ON a.tbl = b.tbl AND a.bucket = b.bucket
-   AND a.vec_id < b.vec_id
-)
-SELECT c.id1, c.id2,
-       ROUND(list_cosine_similarity(v1.emb, v2.emb), 6) AS cosine
-FROM cand c
-JOIN v v1 ON v1.vec_id = c.id1
-JOIN v v2 ON v2.vec_id = c.id2
-WHERE list_cosine_similarity(v1.emb, v2.emb) >= {EMB_NEARDUP_THRESHOLD}
-"""
-
-
 # --------------------------------------------------------------------------
 # POLICY-SIZED LSH variants: bits = recommended_bits(N), oracle-adaptive
 # --------------------------------------------------------------------------
@@ -487,10 +459,10 @@ def emb_neardup_lsh_sized(spark: SparkSession, sf_dir: str) -> DataFrame:
     the graded form of the engine's own scale contract: ``bits =
     recommended_bits(N)`` keeps expected bucket occupancy constant as
     the corpus grows, which is what makes LSH near-dup survive 100 TB
-    (the fixed-bits twin ``emb_neardup_lsh`` keeps bucket count
-    CONSTANT, so its candidate pairs grow quadratically in N — the r5
-    sf3 run cut it at 25 minutes; the policy form finished the same
-    corpus in 72 s with 99.6 % pair retention at the sf1 anchor).
+    (fixed bits keep the bucket count CONSTANT, so candidate pairs grow
+    quadratically in N — the r5 sf3 run of the fixed-bits form was cut
+    at 25 minutes; the policy form finished the same corpus in 72 s
+    with 99.6 % pair retention at the sf1 anchor).
 
     The count feeding the policy is one control-plane action (a
     column-pruned scan); bits then fixes the literal plane matrix, so
@@ -504,138 +476,6 @@ def emb_neardup_lsh_sized(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, id_col="vec_id", vec_col="embedding", dim=EMB_DIM,
         threshold=EMB_NEARDUP_THRESHOLD, bits=bits, tables=LSH_TABLES,
     )
-
-
-EMB_CLUSTERS_SIZED_ORACLE = f"""
-WITH RECURSIVE {{sigs}},
-cand AS (
-  SELECT DISTINCT a.vec_id AS id1, b.vec_id AS id2
-  FROM sigs a JOIN sigs b ON a.tbl = b.tbl AND a.bucket = b.bucket
-   AND a.vec_id < b.vec_id
-),
-verified AS (
-  SELECT c.id1, c.id2
-  FROM cand c
-  JOIN v v1 ON v1.vec_id = c.id1
-  JOIN v v2 ON v2.vec_id = c.id2
-  WHERE list_cosine_similarity(v1.emb, v2.emb) >= {EMB_NEARDUP_THRESHOLD}
-),
-edges AS (
-  SELECT id1 AS a, id2 AS b FROM verified
-  UNION ALL
-  SELECT id2, id1 FROM verified
-),
-cnodes AS (SELECT DISTINCT a AS id FROM edges),
-walk(id, lbl) AS (
-  SELECT id, id FROM cnodes
-  UNION
-  SELECT e.b, w.lbl FROM walk w JOIN edges e ON w.id = e.a WHERE w.lbl < e.b
-)
-SELECT id AS vec_id, MIN(lbl) AS component FROM walk GROUP BY id
-"""
-
-
-@query(
-    "emb_neardup_clusters_sized",
-    oracle=EMB_CLUSTERS_SIZED_ORACLE.format(sigs=_adaptive_sigs_cte()),
-)
-def emb_neardup_clusters_sized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Policy-sized twin of ``emb_neardup_clusters``: near-dup
-    components over the ``recommended_bits(N)`` pair graph — the
-    composition a real curation run executes at scale (sized pair
-    enumeration → star-contraction components). Same adaptive oracle
-    machinery as ``emb_neardup_lsh_sized`` plus the recursive
-    min-label-reachability replay of the components."""
-    from ..operators.dedup import connected_components_star
-
-    emb = Catalog(spark, sf_dir).embeddings
-    bits = recommended_bits(emb.count())
-    pairs = embedding_near_duplicates(
-        emb, id_col="vec_id", vec_col="embedding", dim=EMB_DIM,
-        threshold=EMB_NEARDUP_THRESHOLD, bits=bits, tables=LSH_TABLES,
-    )
-    return connected_components_star(pairs).withColumnRenamed("doc_id", "vec_id")
-
-
-@query("emb_neardup_lsh", oracle=EMB_NEARDUP_LSH_ORACLE.format(sigs=_sigs_cte()))
-def emb_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup pairs via multi-table hyperplane-LSH bucketing
-    (two-tier capped enumeration — see embedding_near_duplicates).
-    Fixed ``LSH_BITS`` keeps the bucket count constant, so the
-    pair-budget guard bounds the quadratic growth contractually; the
-    scale path is ``emb_neardup_lsh_sized``."""
-    emb = Catalog(spark, sf_dir).embeddings
-    return embedding_near_duplicates(
-        emb, id_col="vec_id", vec_col="embedding", dim=EMB_DIM,
-        threshold=EMB_NEARDUP_THRESHOLD, bits=LSH_BITS, tables=LSH_TABLES,
-        pair_budget=FIXED_LSH_PAIR_BUDGET,
-        scale_path="emb_neardup_lsh_sized (recommended_bits(N)-sized"
-        " hyperplane LSH, measured 19x wall at 100x data)",
-    )
-
-
-EMB_CLUSTERS_ORACLE = f"""
-WITH RECURSIVE v AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
-),
-sigs AS (
-{{sigs}}
-),
-cand AS (
-  SELECT DISTINCT a.vec_id AS id1, b.vec_id AS id2
-  FROM sigs a JOIN sigs b ON a.tbl = b.tbl AND a.bucket = b.bucket
-   AND a.vec_id < b.vec_id
-),
-verified AS (
-  SELECT c.id1, c.id2
-  FROM cand c
-  JOIN v v1 ON v1.vec_id = c.id1
-  JOIN v v2 ON v2.vec_id = c.id2
-  WHERE list_cosine_similarity(v1.emb, v2.emb) >= {EMB_NEARDUP_THRESHOLD}
-),
-edges AS (
-  SELECT id1 AS a, id2 AS b FROM verified
-  UNION ALL
-  SELECT id2, id1 FROM verified
-),
-cnodes AS (SELECT DISTINCT a AS id FROM edges),
-walk(id, lbl) AS (
-  SELECT id, id FROM cnodes
-  UNION
-  SELECT e.b, w.lbl FROM walk w JOIN edges e ON w.id = e.a WHERE w.lbl < e.b
-)
-SELECT id AS vec_id, MIN(lbl) AS component FROM walk GROUP BY id
-"""
-
-
-@query("emb_neardup_clusters", oracle=EMB_CLUSTERS_ORACLE.format(sigs=_sigs_cte()))
-def emb_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-duplicate CLUSTERS: connected components over the
-    verified hyperplane-LSH pair graph — (vec_id, component) with
-    component = the cluster's canonical (minimum) vec id. The embedding
-    twin of ``dedup_clusters``: "keep one exemplar per semantic
-    near-dup cluster" is a component question, not a pair question, and
-    this is the step that turns ``emb_neardup_lsh``'s pair list into a
-    usable curation verdict (drop every member whose id ≠ component).
-
-    Scale: pair generation is the id-only bucketed path (shared
-    two-tier guard, vectors rejoin only at the verify); components use
-    the diameter-independent large/small-star contraction — the same
-    pieces already proven at sf1/sf3, composed. Oracle: the literal
-    plane matrix replays bucketing in DuckDB, then a recursive
-    min-label-reachability CTE recomputes the components.
-    """
-    from ..operators.dedup import connected_components_star
-
-    emb = Catalog(spark, sf_dir).embeddings
-    pairs = embedding_near_duplicates(
-        emb, id_col="vec_id", vec_col="embedding", dim=EMB_DIM,
-        threshold=EMB_NEARDUP_THRESHOLD, bits=LSH_BITS, tables=LSH_TABLES,
-        pair_budget=FIXED_LSH_PAIR_BUDGET,
-        scale_path="emb_neardup_clusters_sized (recommended_bits(N)-sized"
-        " pair graph, measured 19x wall at 100x data)",
-    )
-    return connected_components_star(pairs).withColumnRenamed("doc_id", "vec_id")
 
 
 # --------------------------------------------------------------------------
@@ -734,58 +574,6 @@ def semantic_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# int8-quantized search: the compressed-store baseline
-# --------------------------------------------------------------------------
-
-ANN_TOPK_QUANTIZED_ORACLE = f"""
-WITH v AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
-),
-sc AS (
-  SELECT vec_id, emb,
-         list_max(list_transform(emb, x -> abs(x))) AS s
-  FROM v
-),
-qz AS (
-  SELECT vec_id,
-         list_transform(emb, x -> CASE WHEN s = 0 THEN 0.0
-                                       ELSE ROUND(x * 127.0 / s) END) AS qv
-  FROM sc
-),
-scored AS (
-  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-         list_cosine_similarity(q.qv, e.qv) AS cos_raw
-  FROM qz q JOIN qz e ON q.vec_id <> e.vec_id
-  WHERE q.vec_id < {N_QUERY_VECS}
-)
-SELECT query_id, neighbor_id, ROUND(cos_raw, 6) AS cosine,
-       CAST(ROW_NUMBER() OVER (
-         PARTITION BY query_id ORDER BY cos_raw DESC, neighbor_id ASC
-       ) AS INT) AS rank
-FROM scored
-QUALIFY rank <= {TOP_K}
-"""
-
-
-@query("ann_topk_quantized", oracle=ANN_TOPK_QUANTIZED_ORACLE)
-def ann_topk_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-10 over int8-QUANTIZED embeddings — the
-    compressed-store search baseline: per-vector symmetric scalar
-    quantization (``round(x*127/max|x|)``) cuts the store's scan bytes
-    4× while cosine (scale-invariant) scores the int arrays directly.
-    The quantized dot product is EXACT in fp64 (|q| ≤ 127, 64 dims →
-    sums < 2^21), so unlike the float baseline this query's arithmetic
-    is fully order-independent — the oracle replays quantization
-    bit-exactly (both engines ROUND the identical double half-away).
-    Recall vs the float search is pytest-pinned (test_similarity)."""
-    from ..operators.similarity import quantized_topk
-
-    emb = Catalog(spark, sf_dir).embeddings
-    q = emb.where(F.col("vec_id") < N_QUERY_VECS)
-    return quantized_topk(emb, q, id_col="vec_id", vec_col="embedding", k=TOP_K)
-
-
-# --------------------------------------------------------------------------
 # incremental semantic dedup: batch probes the cell-partitioned store
 # --------------------------------------------------------------------------
 
@@ -876,55 +664,6 @@ def semantic_dedup_incremental_query(spark: SparkSession, sf_dir: str) -> DataFr
 # --------------------------------------------------------------------------
 
 PQ_M, PQ_CODES = 8, 16
-
-ANN_TOPK_PQ_ORACLE = f"""
-WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-ss AS (SELECT CAST(t.s AS INT) AS s FROM range({PQ_M}) t(s)),
-cb AS (SELECT s.s, v.vec_id AS code, v.emb[s.s*8+1 : s.s*8+8] AS cent
-       FROM v, ss s WHERE v.vec_id < {PQ_CODES}),
-asg AS (
-  SELECT v.vec_id, c.s, c.cent,
-         ROW_NUMBER() OVER (PARTITION BY v.vec_id, c.s
-           ORDER BY list_distance(v.emb[c.s*8+1 : c.s*8+8], c.cent) ASC,
-                    c.code ASC) AS rn
-  FROM v JOIN cb c ON TRUE
-),
-recon AS (
-  SELECT vec_id, flatten(LIST(cent ORDER BY s)) AS remb
-  FROM asg WHERE rn = 1 GROUP BY vec_id
-),
-scored AS (
-  SELECT q.vec_id AS query_id, r.vec_id AS neighbor_id,
-         list_cosine_similarity(q.emb, r.remb) AS cos_raw
-  FROM v q JOIN recon r ON q.vec_id <> r.vec_id
-  WHERE q.vec_id < {N_QUERY_VECS}
-)
-SELECT query_id, neighbor_id, ROUND(cos_raw, 6) AS cosine,
-  CAST(ROW_NUMBER() OVER (
-    PARTITION BY query_id ORDER BY cos_raw DESC, neighbor_id ASC
-  ) AS INT) AS rank
-FROM scored QUALIFY rank <= {TOP_K}
-"""
-
-
-@query("ann_topk_pq", oracle=ANN_TOPK_PQ_ORACLE)
-def ann_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantized approximate top-k (Jégou et al. 2011): the
-    corpus is stored as 8 small ints per vector (8 sub-codebooks of 16
-    centroids — 32× compression vs float32·64d), search scores RAW
-    query against RECONSTRUCTED neighbors (asymmetric/ADC). Completes
-    the compression ladder next to int8 scalar quantization (4×) and
-    the uncompressed baselines; recall vs exact is pytest-pinned.
-    Deterministic sub-codebooks = the first-16 vectors' slices (the
-    artifact stand-in convention; production trains per-subspace
-    k-means and versions it), so assignment, reconstruction, and
-    ranking all replay in SQL."""
-    from ..operators.similarity import pq_sub_codebooks, pq_topk
-
-    emb = Catalog(spark, sf_dir).embeddings
-    cbs = pq_sub_codebooks(emb, m=PQ_M, n_codes=PQ_CODES)
-    q = emb.where(F.col("vec_id") < N_QUERY_VECS)
-    return pq_topk(emb, q, cbs, id_col="vec_id", vec_col="embedding", k=TOP_K)
 
 
 def _ivfpq_oracle(n_probe: int) -> str:

@@ -12,7 +12,6 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..functions.expressions import dec
 from ..operators.temporal import asof_join, range_join
 from ..sources.catalog import Catalog
 from .registry import query
@@ -77,61 +76,6 @@ def asof_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         F.col("asof_ts").alias("last_touch_ts"),
         F.col("asof_event_type").alias("last_touch_type"),
-    )
-
-
-# --------------------------------------------------------------------------
-# banded range join: per-error look-back context window
-# --------------------------------------------------------------------------
-
-RANGE_ERROR_CONTEXT_ORACLE = """
-SELECT e.event_id, e.user_id, e.ts,
-       COUNT(o.event_id) AS ctx_count,
-       CAST(SUM(CAST(o.value AS DECIMAL(18,2))) AS DOUBLE) AS ctx_value_sum
-FROM events e
-LEFT JOIN events o
-  ON o.user_id = e.user_id
- AND o.ts >= e.ts - INTERVAL 10 MINUTE
- AND o.ts <  e.ts
-WHERE e.event_type = 'error'
-GROUP BY 1, 2, 3
-"""
-
-
-@query("range_error_context", oracle=RANGE_ERROR_CONTEXT_ORACLE)
-def range_error_context(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """For every error event: count + value sum of the same user's
-    activity in the 10 minutes before it (half-open look-back band).
-
-    Scale: the banded range join turns the ts-inequality join — which
-    Catalyst would plan as a per-key nested loop — into an equi-join on
-    (user_id, time_bin) with ≤2 candidate bins per error. Errors with an
-    empty window are restored by a final left join against the error list
-    (count 0, sum null — SQL aggregate semantics).
-    """
-    ev = Catalog(spark, sf_dir).events
-    errors = ev.where(F.col("event_type") == "error").select("event_id", "user_id", "ts")
-    context = ev.select("event_id", "user_id", "ts", "value")
-    ten_min_us = 10 * 60 * 1_000_000
-    pairs = range_join(
-        errors,
-        context,
-        key="user_id",
-        left_ts="ts",
-        right_ts="ts",
-        lower_us=-ten_min_us,
-        upper_us=0,
-    )
-    agg = pairs.groupBy("event_id").agg(
-        F.count("r_event_id").alias("ctx_count"),
-        F.sum(dec("r_value")).alias("ctx_value_sum"),
-    )
-    return errors.join(agg, "event_id", "left").select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.coalesce(F.col("ctx_count"), F.lit(0)).alias("ctx_count"),
-        F.col("ctx_value_sum").cast("double").alias("ctx_value_sum"),
     )
 
 

@@ -329,128 +329,6 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# batched BM25: N topical queries, ONE corpus pass (operators/retrieval.py
-# bm25_search_batch). Topics draw from the same 4-term universe so the
-# oracle shares the scan/stats CTEs with the scalar form; per-topic terms
-# keep their declared ORDER (the fixed-order score sum is part of the
-# query's identity, replayed term-by-term in SQL).
-# --------------------------------------------------------------------------
-
-BM25_TOPICS: dict[str, list[str]] = {
-    "t_hash_spark": ["hash", "spark"],
-    "t_stream_window": ["stream", "window"],
-    "t_all": ["spark", "hash", "window", "stream"],
-}
-
-
-def _bm25_topics_oracle() -> str:
-    """Batch oracle: the scalar guarded oracle's w/base/st CTEs (the
-    union of all topics' terms IS the scalar term set), then one
-    UNION ALL branch per topic with the topic's own fixed-order score
-    sum — dropped terms contribute literal 0.0 (x + 0.0 is IEEE-exact,
-    so the sum replays the Spark plan's kept-terms-only fold) and grant
-    no candidacy — ranked per topic on the ROUNDED score with doc_id
-    tie-break (exactly the batch operator's window)."""
-    tfs = ",\n         ".join(
-        f"len(list_filter(ws, x -> x = '{t}')) AS tf_{t}" for t in BM25_TERMS
-    )
-    dfs = ",\n         ".join(
-        f"SUM(CASE WHEN tf_{t} > 0 THEN 1 ELSE 0 END) AS df_{t}"
-        for t in BM25_TERMS
-    )
-
-    def kept(t: str) -> str:
-        return (
-            f"CAST(df_{t} AS DOUBLE) <= {_BM25_MAX_DF_RATIO} * CAST(n AS DOUBLE)"
-        )
-
-    norm = (
-        f"{_BM25_K1} * ({1.0 - _BM25_B} + ({_BM25_B} * CAST(dl AS DOUBLE))"
-        f" / (CAST(sdl AS DOUBLE) / CAST(n AS DOUBLE)))"
-    )
-    branches = []
-    for qid, terms in BM25_TOPICS.items():
-        contribs = " + ".join(
-            f"(CASE WHEN {kept(t)} THEN"
-            f" (ln(1 + (n - df_{t} + 0.5) / (df_{t} + 0.5))"
-            f" * CAST(tf_{t} AS DOUBLE)"
-            f" * {_BM25_K1 + 1.0} / (CAST(tf_{t} AS DOUBLE) + {norm}))"
-            f" ELSE 0.0 END)"
-            for t in terms
-        )
-        greatest = ", ".join(
-            f"CASE WHEN {kept(t)} THEN tf_{t} ELSE 0 END" for t in terms
-        )
-        branches.append(
-            f"SELECT '{qid}' AS query_id, b.doc_id, b.dl,\n"
-            f"       ROUND({contribs}, 6) AS score\n"
-            f"FROM base b, st\n"
-            f"WHERE GREATEST({greatest}) > 0"
-        )
-    scored = "\nUNION ALL\n".join(branches)
-    return f"""
-WITH w AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(trim(text)), '[^a-z0-9]+'),
-                     x -> x <> '') AS ws
-  FROM documents
-),
-base AS (
-  SELECT doc_id, len(ws) AS dl,
-         {tfs}
-  FROM w
-),
-st AS (
-  SELECT COUNT(*) AS n, SUM(dl) AS sdl,
-         {dfs}
-  FROM base
-),
-scored AS (
-{scored}
-)
-SELECT query_id, doc_id, dl, score, rank FROM (
-  SELECT query_id, doc_id, dl, score,
-         CAST(ROW_NUMBER() OVER (
-           PARTITION BY query_id ORDER BY score DESC, doc_id
-         ) AS INTEGER) AS rank
-  FROM scored
-) WHERE rank <= {_BM25_TOP}
-"""
-
-
-@query("bm25_topics", oracle=_bm25_topics_oracle())
-def bm25_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batched BM25 — top-10 docs for EVERY topic in one corpus pass
-    (``bm25_search_batch``), under the df-threshold skew guard. This is
-    the relevance-mining shape a training-data pipeline actually runs
-    ("pull topical slices for these 200 topics"): per-topic scalar
-    searches would re-tokenize the corpus once per topic, while the
-    batch tokenizes ONCE, aggregates the term-union's dfs in one scalar
-    pass, and emits per-(doc, topic) rows via a struct-array explode —
-    rows multiply by |topics|, never by corpus re-scans; per-topic
-    top-n is a window rank PARTITIONED BY query_id (no global sort).
-
-    The guard applies per topic with the scalar kept-term rule; a topic
-    whose terms are ALL over-threshold yields an empty slice rather
-    than killing the batch (pytest-asserted with a 100 %-df adversarial
-    topic; batch ≡ N scalar searches is pytest-asserted too).
-    """
-    from ..operators.retrieval import bm25_search_batch
-
-    docs = Catalog(spark, sf_dir).documents
-    return bm25_search_batch(
-        docs,
-        {k: list(v) for k, v in BM25_TOPICS.items()},
-        text_col="text",
-        id_col="doc_id",
-        k1=_BM25_K1,
-        b=_BM25_B,
-        top_n=_BM25_TOP,
-        max_df_ratio=_BM25_MAX_DF_RATIO,
-    )
-
-
-# --------------------------------------------------------------------------
 # hybrid retrieval: BM25 + query-vector cosine, Reciprocal Rank Fusion
 # --------------------------------------------------------------------------
 
@@ -571,46 +449,6 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         rrf_k=_HYBRID_RRF_K,
         top_n=_HYBRID_TOP,
     )
-
-
-DECILE_BINS = 10
-_DECILE_FRACS = ", ".join(str(i / DECILE_BINS) for i in range(1, DECILE_BINS))
-_DECILE_CASE = " ".join(
-    f"WHEN n_chars < edges[{i}] THEN {i - 1}" for i in range(1, DECILE_BINS)
-)
-
-DOC_LENGTH_DECILES_ORACLE = f"""
-WITH e AS (
-  SELECT list_transform(quantile_cont(n_chars, [{_DECILE_FRACS}]),
-                        x -> round(x, 6)) AS edges
-  FROM documents
-),
-b AS (
-  SELECT CASE {_DECILE_CASE} ELSE {DECILE_BINS - 1} END AS bin_id
-  FROM documents, e
-),
-c AS (SELECT bin_id, COUNT(*) AS cnt FROM b GROUP BY bin_id)
-SELECT g.bin_id, COALESCE(c.cnt, CAST(0 AS BIGINT)) AS cnt
-FROM range({DECILE_BINS}) g(bin_id) LEFT JOIN c USING (bin_id)
-"""
-
-
-@query("doc_length_deciles", oracle=DOC_LENGTH_DECILES_ORACLE)
-def doc_length_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-depth document-length distribution — quantile binning, the
-    skew-robust form of a length histogram (each bin ~N/10 docs
-    regardless of how the length distribution stretches). Edges
-    are exact interpolated percentiles rounded to 6 dp on BOTH engines
-    before any comparison (``percentile`` ≡ ``quantile_cont``).
-
-    Scale: one exact-percentile aggregate (1-row relation broadcast
-    back — never driver literals), scan-side CASE, map-side-collapsed
-    groupBy. The percentile shuffle moves (value) pairs only.
-    """
-    from ..operators.stats import equi_depth_histogram
-
-    docs = Catalog(spark, sf_dir).documents
-    return equi_depth_histogram(docs, "n_chars", bins=DECILE_BINS)
 
 
 # --------------------------------------------------------------------------

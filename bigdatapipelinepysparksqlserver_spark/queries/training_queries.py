@@ -560,7 +560,7 @@ def classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     already-6-dp scores (exact, order-free — the bigram-LM pattern),
     divided out in one fixed-order double expression; decile edges are
     6-dp-rounded percentiles broadcast as a 1-row relation (the
-    doc_length_deciles shape — never a global NTILE window).
+    ``equi_depth_histogram`` shape — never a global NTILE window).
 
     Scale: the classifier leg is the explode + map-side-collapsed
     doc aggregate it always is; the heuristic leg is scan-side; the

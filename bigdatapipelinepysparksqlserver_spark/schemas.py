@@ -111,28 +111,3 @@ LEDGER = StructType(
         StructField("validation_status", StringType(), False),
     ]
 )
-
-# ---------------------------------------------------------------------------
-# mart tables (reference `Production_Mart`: Sales_History_1/2[_Staging])
-# ---------------------------------------------------------------------------
-
-MART_CLIENT_COUNT = StructType(
-    [
-        StructField("country", StringType(), True),
-        StructField("gender", StringType(), True),
-        StructField("client_count", LongType(), False),
-        StructField("refresh_date", TimestampType(), False),
-    ]
-)
-
-MART_SALES_AGG = StructType(
-    [
-        StructField("country", StringType(), True),
-        StructField("product", StringType(), True),
-        StructField("size", StringType(), True),
-        StructField("color", StringType(), True),
-        StructField("sales_count", LongType(), False),
-        StructField("paid_amount", MONEY, True),
-        StructField("refresh_date", TimestampType(), False),
-    ]
-)

@@ -28,7 +28,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import StructType
 
 CORRUPT_COL = "_corrupt_record"
 

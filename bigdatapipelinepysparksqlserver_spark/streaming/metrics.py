@@ -28,7 +28,6 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 PROGRESS_SCHEMA = StructType(

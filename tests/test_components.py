@@ -269,84 +269,6 @@ def test_bm25_store_probe_equals_corpus_scan(spark, tmp_path):
     assert "PartitionFilters" in plan and "bucket" in plan
 
 
-@pytest.mark.slow
-def test_bm25_batch_equals_scalar_searches(spark):
-    """VERDICT r6 #1: bm25_search_batch must equal one bm25_search per
-    topic — same ids, same scores, same per-topic ranking — including
-    under max_df_ratio, where each topic applies the scalar kept-term
-    rule against the BATCH union's dfs (equal by construction: df is a
-    per-term corpus stat, independent of which query probes it)."""
-    from bigdatapipelinepysparksqlserver_spark.operators.retrieval import (
-        bm25_search,
-        bm25_search_batch,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "cat cat dog x common"),
-            (2, "cat x y z common"),
-            (3, "dog common"),
-            (4, "x y common"),
-            (5, "bird bird cat common"),
-        ],
-        "doc_id long, text string",
-    )
-    topics = {"q_cats": ["cat", "dog"], "q_birds": ["bird"], "q_mix": ["dog", "bird"]}
-    for ratio in (None, 0.9):  # 0.9: 'common' would drop; probe terms all kept
-        batch = bm25_search_batch(
-            docs, topics, top_n=10, max_df_ratio=ratio
-        ).collect()
-        by_topic = {}
-        for r in batch:
-            by_topic.setdefault(r.query_id, []).append(r)
-        assert set(by_topic) == set(topics)
-        for qid, terms in topics.items():
-            scalar = bm25_search(
-                docs, terms, top_n=10, max_df_ratio=ratio
-            ).collect()
-            got = sorted(by_topic[qid], key=lambda r: r.rank)
-            assert [r.doc_id for r in got] == [r.doc_id for r in scalar]
-            assert [r.dl for r in got] == [r.dl for r in scalar]
-            assert [r.score for r in got] == [r.score for r in scalar]
-            assert [r.rank for r in got] == list(range(1, len(scalar) + 1))
-
-
-def test_bm25_batch_stopword_topic_yields_empty_slice(spark):
-    """A topic whose terms are ALL over the df threshold is skipped —
-    empty slice for that query_id, not a dead batch (the scalar form
-    raises on the same probe); a batch that is all-stopword in every
-    topic raises up front."""
-    import pytest
-
-    from bigdatapipelinepysparksqlserver_spark.operators.retrieval import (
-        bm25_search,
-        bm25_search_batch,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, "everywhere filler" + (" rare" if i == 1 else "")) for i in range(1, 9)],
-        "doc_id long, text string",
-    )
-    # 'everywhere' df = 100%: topic q_stop is all-stopword at ratio 0.5
-    topics = {"q_stop": ["everywhere"], "q_ok": ["rare", "everywhere"]}
-    rows = bm25_search_batch(docs, topics, top_n=5, max_df_ratio=0.5).collect()
-    assert {r.query_id for r in rows} == {"q_ok"}
-    with pytest.raises(ValueError, match="every probe term exceeds"):
-        bm25_search(docs, ["everywhere"], max_df_ratio=0.5)
-    # q_ok slice ≡ the scalar search on the same kept-term rule
-    scalar = bm25_search(
-        docs, ["rare", "everywhere"], top_n=5, max_df_ratio=0.5
-    ).collect()
-    got = sorted(rows, key=lambda r: r.rank)
-    assert [(r.doc_id, r.score) for r in got] == [
-        (r.doc_id, r.score) for r in scalar
-    ]
-    with pytest.raises(ValueError, match="every query in the batch"):
-        bm25_search_batch(docs, {"q_stop": ["everywhere"]}, max_df_ratio=0.5)
-    with pytest.raises(ValueError, match="empty query batch"):
-        bm25_search_batch(docs, {})
-
-
 def test_bm25_rejects_non_token_terms(spark):
     """Probe terms double as tf_<term> column suffixes and equality
     literals against lowercased tokens — anything that isn't a single
@@ -775,8 +697,8 @@ def test_triangle_node_estimates_identity_and_corridor(spark):
     (inv_p2 = 1) the per-node estimates ARE the exact counts; (b) at
     the registered p = 1/4 each dense node's estimate lands in a
     corridor around its exact count and the global identity
-    Σ sampled/3 · 16 reproduces copurchase_triangles_sampled-style
-    unbiasedness; (c) the wedge budget guards the SAMPLED space."""
+    Σ sampled/3 · 16 is an unbiased estimate of the total; (c) the
+    wedge budget guards the SAMPLED space."""
     import itertools
     import random
 

@@ -284,48 +284,6 @@ def test_quadratic_baseline_queries_raise_past_budget(spark, monkeypatch):
         sq.emb_neardup_exact(spark, "/root/testdata/sf0.001").collect()
 
 
-def test_fixed_parameter_twins_raise_past_budget(spark, monkeypatch):
-    """VERDICT r6 #2: the three fixed-parameter LSH/SimHash twins carry
-    the same pre-flight their exact baselines got — constant bucket
-    space means quadratic candidate growth, so past budget each raises
-    BEFORE any pair expansion, naming its policy-sized `_sized` twin as
-    the scale path. (At real budgets every local SF passes; the shrunken
-    budgets here prove the guard sits on the enumeration key.)"""
-    import pytest
-
-    import bigdatapipelinepysparksqlserver_spark.queries.dedup_queries as dq
-    import bigdatapipelinepysparksqlserver_spark.queries.similarity_queries as sq
-    from bigdatapipelinepysparksqlserver_spark.caching import release_caches
-    from bigdatapipelinepysparksqlserver_spark.operators.dedup import (
-        PairBudgetExceeded,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    try:
-        monkeypatch.setattr(sq, "FIXED_LSH_PAIR_BUDGET", 1)
-        with pytest.raises(PairBudgetExceeded, match="emb_neardup_lsh_sized"):
-            sq.emb_neardup_lsh(spark, sf)
-        with pytest.raises(
-            PairBudgetExceeded, match="emb_neardup_clusters_sized"
-        ):
-            sq.emb_neardup_clusters(spark, sf)
-        monkeypatch.setattr(dq, "FIXED_SIMHASH_PAIR_BUDGET", 1)
-        with pytest.raises(
-            PairBudgetExceeded, match="dedup_simhash_pairs_sized"
-        ):
-            dq.dedup_simhash_pairs(spark, sf)
-    finally:
-        release_caches()
-
-    # and at the real budgets the graded queries still run: the guard
-    # estimate at every local SF is orders of magnitude under 50 M
-    monkeypatch.undo()
-    try:
-        assert dq.dedup_simhash_pairs(spark, sf).count() >= 0
-    finally:
-        release_caches()
-
-
 def test_dedup_keep_best_retention_policy(spark, tmp_path):
     """Quality-aware retention on a hand-built corpus: a near-dup
     cluster must keep its HIGHEST-quality member (not the lowest id),

@@ -97,55 +97,56 @@ def all_plans(spark):
 
 def test_no_cartesian_products_anywhere(all_plans):
     """Every registered query except the documented brute-force ANN
-    baselines must be cartesian-free. tpch_q22's cross join is a 1-row
-    scalar-aggregate broadcast (the legitimate scalar-subquery shape)."""
+    baselines must be cartesian-free. The other allowed queries cross
+    join a 1-row scalar aggregate as a broadcast (the legitimate
+    scalar-subquery shape). Every allowed entry must still be registered
+    and still carry the node it is allowed for, so a stale entry fails
+    here instead of silently widening the allowance."""
+    nodes = ("CartesianProduct", "BroadcastNestedLoopJoin")
     allowed = {
         "ann_topk_cosine",
-        "ann_topk_quantized",  # same broadcast query-side cross join
-        "ann_topk_pq",  # same, over reconstructed vectors
         "emb_neardup_exact",
-        "tpch_q22",
-        "tpch_q11",  # 1-row threshold broadcast (scalar-subquery shape)
-        "doc_length_deciles",  # 1-row percentile-edges broadcast (same shape)
-        "copurchase_lift",  # 1-row order-count broadcast (same shape)
-        "customer_rfm_segments",  # 1-row quartile-edges broadcast (same shape)
-        "classifier_calibration",  # 1-row decile-edges broadcast (same shape)
-        "benford_price_audit",  # 1-row total broadcast (same shape)
+        "classifier_calibration",  # 1-row decile-edges broadcast
         "ab_conversion_chi2",  # 1-row chi2-statistic broadcast (same shape)
         "value_drift_psi",  # 1-row midpoint/totals broadcasts (same shape)
         "value_drift_ks",  # 1-row midpoint/totals broadcasts (same shape)
-        "value_drift_mwu",  # 1-row midpoint/totals broadcasts (same shape)
-        "copurchase_triangles",  # 1-row triangle-total broadcast (same shape)
-        "copurchase_triangles_sampled",  # 1-row edge/triangle-count broadcasts
         "copurchase_triangles_node_est",  # 1-row est-total broadcast (same shape)
         "order_dow_uniformity",  # 1-row order-total broadcast (same shape)
-        # hour-spine × distinct-types grid build: both sides are
-        # domain-sized (horizon hours, |types| rows), independent of
-        # event count — the zero-fill spine the docstring requires
-        "event_type_corr_matrix",
     }
+    assert sorted(allowed - set(all_plans)) == []
+    stale = [n for n in sorted(allowed) if not any(x in all_plans[n] for x in nodes)]
+    assert stale == []
     offenders = []
     for name, plan in all_plans.items():
         if name in allowed:
             continue
-        if "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan:
+        if any(x in plan for x in nodes):
             offenders.append(name)
     assert offenders == []
 
 
 def test_no_python_row_udfs_in_relational_surface(all_plans):
     """Zero-Python-UDF policy (§2.10): BatchEvalPython must not appear in
-    any plan; ArrowEvalPython/MapInPandas only in the multimodal decode.
+    any plan; ArrowEvalPython/MapInPandas only in the multimodal decode,
+    whose allowed entries must still be registered and still carry one
+    of those nodes.
     (semantic_dedup's BLAS assignment path is MapInPandas but engages
     only past BLAS_CELL_THRESHOLD cells — at this SF the policy-sized
     codebook stays on the literal projection, which is what this sweep
     asserts.)"""
+    arrow_nodes = ("ArrowEvalPython", "MapInPandas")
     allowed_arrow = {"media_decode_features", "media_decode_check"}
+    assert sorted(allowed_arrow - set(all_plans)) == []
+    stale = [
+        n for n in sorted(allowed_arrow)
+        if not any(x in all_plans[n] for x in arrow_nodes)
+    ]
+    assert stale == []
     offenders = []
     for name, plan in all_plans.items():
         if "BatchEvalPython" in plan:
             offenders.append((name, "row-udf"))
-        if ("ArrowEvalPython" in plan or "MapInPandas" in plan) and name not in allowed_arrow:
+        if any(x in plan for x in arrow_nodes) and name not in allowed_arrow:
             offenders.append((name, "arrow-udf"))
     assert offenders == []
 

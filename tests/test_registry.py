@@ -9,33 +9,9 @@ from bigdatapipelinepysparksqlserver_spark.queries import (
     _GRADED_PREFIX,
 )
 
-# r7 rotation: sessionize → its session_window twin (streaming-native
-# operator stays flagship-graded); range_error_context ceded with
-# asof_attribution keeping the range-join family in-window; late-r7,
-# dedup_clusters → semantic_dedup + hybrid_search_rrf (components stay
-# graded via emb_neardup_clusters_sized, clusters compose in
-# dedup_apply). Closing r7: media_metadata_stats → media_dedup_audit
-# (the binary-payload flagship now exercises payload plumbing AND the
-# hash-only dedup shuffle); session_peak_concurrency joins as the
-# interval-stabbing family's flagship.
+# Which flagship holds which window seat, and why each rotation
+# happened, is in git history (``git log -p`` on this file).
 FLAGSHIPS = {
-    # (r8 rotation: dq_violations ceded its window seat — reconciliation
-    # stays flagship-graded via cdc_roundtrip_demo; user_streaks enters
-    # as the gaps-and-islands family's flagship.)
-    # (r9 rotation: rolling_active_users and bm25_topics ceded the
-    # window with documented family coverage (queries/__init__.py);
-    # cdc_snapshot_demo — the snapshot-isolated lake protocol — and
-    # copurchase_triangles_node_est — the per-node sampled triangle
-    # board — pinned in their place.)
-    # (r10 rotation: dedup_jaccard_prefix ceded — exact set-similarity
-    # stays oracle-backed past-cap; the winnowing copy-detection board
-    # and span-level decontamination pin as the r10 flagships.)
-    # (r11 rotation: user_streaks and decontaminate ceded the window
-    # with documented family coverage (queries/__init__.py — islands
-    # machinery graded through the entering span-scrub pair; the exact
-    # probe superseded by the decontaminate_spans family);
-    # doc_winnow_span_scrub_apply — the ExactSubstr-style token-slice
-    # rewrite — and cdc_snapshot_diff_demo pin as the r11 flagships.)
     "doc_winnow_pairs", "decontaminate_spans",
     "doc_winnow_span_scrub_apply", "cdc_snapshot_diff_demo",
     "mart_client_count", "tpch_q1", "cdc_roundtrip_demo",

@@ -1,12 +1,15 @@
 """Scale rehearsal: measure per-query scaling slope between two sf dirs.
 
-Runs the headline bench set plus the bucketed scale-path extras
-(dedup_simhash_pairs, emb_neardup_lsh, ann_lsh_topk) at a base dir
+Runs the headline bench set plus the scale-path extras in ``EXTRAS``
+(policy-sized SimHash and embedding LSH near-dup, bucketed LSH top-k,
+incremental MinHash dedup), or the comma-separated ``SCALE_QUERIES``
+list instead, at a base dir
 (default sf0.1) and a scaled dir (default .scaled/sf1 from
 make_scaled_sf.py), min-of-3 warm runs each, and reports the wall-time
 ratio per query next to the data ratio. A bucketed/linear operator should
 scale ~= the data ratio (with fixed overheads making small-data ratios
-LOWER); anything super-linear is flagged.
+LOWER); anything super-linear is flagged. A query name that is not
+registered is an error, before any Spark work starts.
 
 It keeps its own timing loop rather than ``bench.time_query``: each run
 writes to a noop sink instead of collecting (the slope of interest is the
@@ -29,8 +32,8 @@ from bigdatapipelinepysparksqlserver_spark.queries import REGISTRY  # noqa: E402
 from bigdatapipelinepysparksqlserver_spark.session import get_spark  # noqa: E402
 
 EXTRAS = (
-    "dedup_simhash_pairs",
-    "emb_neardup_lsh",
+    "dedup_simhash_pairs_sized",
+    "emb_neardup_lsh_sized",
     "ann_lsh_topk",
     "dedup_incremental",
 )
@@ -79,9 +82,10 @@ def main() -> None:
     if os.environ.get("SCALE_QUERIES"):
         names = os.environ["SCALE_QUERIES"].split(",")
     else:
-        names = [n for n, s in REGISTRY.items() if s.headline] + [
-            n for n in EXTRAS if n in REGISTRY
-        ]
+        names = [n for n, s in REGISTRY.items() if s.headline] + list(EXTRAS)
+    unknown = [n for n in names if n not in REGISTRY]
+    if unknown:
+        raise SystemExit(f"scale_rehearsal: not registered queries: {unknown}")
     spark = get_spark("scale-rehearsal")
     t_base = _time_queries(spark, base, names)
     t_scaled = _time_queries(spark, scaled, names)
