@@ -95,6 +95,14 @@ def all_plans(spark):
     return {name: plan_of(spec.fn(spark, SF)) for name, spec in REGISTRY.items()}
 
 
+def _assert_allow_list_live(all_plans, allowed, nodes):
+    """Every allow-listed query is registered, and its plan still has
+    one of the nodes it is allowed for."""
+    assert sorted(allowed - set(all_plans)) == []
+    stale = [n for n in sorted(allowed) if not any(x in all_plans[n] for x in nodes)]
+    assert stale == []
+
+
 def test_no_cartesian_products_anywhere(all_plans):
     """Every registered query except the documented brute-force ANN
     baselines must be cartesian-free. The other allowed queries cross
@@ -113,9 +121,7 @@ def test_no_cartesian_products_anywhere(all_plans):
         "copurchase_triangles_node_est",  # 1-row est-total broadcast (same shape)
         "order_dow_uniformity",  # 1-row order-total broadcast (same shape)
     }
-    assert sorted(allowed - set(all_plans)) == []
-    stale = [n for n in sorted(allowed) if not any(x in all_plans[n] for x in nodes)]
-    assert stale == []
+    _assert_allow_list_live(all_plans, allowed, nodes)
     offenders = []
     for name, plan in all_plans.items():
         if name in allowed:
@@ -136,12 +142,7 @@ def test_no_python_row_udfs_in_relational_surface(all_plans):
     asserts.)"""
     arrow_nodes = ("ArrowEvalPython", "MapInPandas")
     allowed_arrow = {"media_decode_features", "media_decode_check"}
-    assert sorted(allowed_arrow - set(all_plans)) == []
-    stale = [
-        n for n in sorted(allowed_arrow)
-        if not any(x in all_plans[n] for x in arrow_nodes)
-    ]
-    assert stale == []
+    _assert_allow_list_live(all_plans, allowed_arrow, arrow_nodes)
     offenders = []
     for name, plan in all_plans.items():
         if "BatchEvalPython" in plan:
