@@ -38,21 +38,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB twins for ALL 211 registered queries (100% oracle-backed
-    since r9; r10 added winnow-based span decontamination + its apply
-    census, exact copy-span verification, and the snapshot-diff/
-    zone-map golden; r11 adds the duplicate-span scrub APPLY — the
-    token-slice rewrite replayed from the scrub plan's own CTE chain —
-    the zone-map-pruned read_where demo, and the CDF-fed row-level
-    mart demo, both replaying oracles over orders) — including the
-    full MinHash/SimHash/hyperplane-LSH
-    pipelines via engine-portable hash families, the HLL-distinct and
-    approx-top-k sketches via error-corridor / exact-regime oracles,
-    and (since r6) the POLICY-SIZED LSH forms, whose oracles recompute
-    the sizing policy from COUNT(*) and regenerate the hyperplane
-    constants from the same LCG inside SQL — one static string valid
-    at every SF. r9 closed the last rows-only entry: the mapInPandas
-    decode output (`media_decode_features`) carries its feature vector
-    as a fixed-point string (the array column crashes the driver's
-    pandas canon), with DuckDB recomputing from hex(BLOB)."""
+    """DuckDB twin SQL for every registered query, keyed by query name.
+    Approximate and hashed operators (MinHash/SimHash/hyperplane LSH,
+    HLL and top-k sketches, policy-sized LSH) replay in DuckDB through
+    engine-portable hash families, literal constants, or exact-regime
+    and error-corridor checks."""
     return oracle_queries()

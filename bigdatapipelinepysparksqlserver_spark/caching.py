@@ -42,8 +42,7 @@ BlockManager (a dedup guard, not a leak or a double-free — the r6
 redundant partition computation at worst, and cannot be suppressed
 from the API without serializing the consumers (a real regression).
 Distinct from the also-benign "Asked to cache already cached data"
-(re-persisting a structurally identical plan), which
-:func:`scoped_register` exists to avoid.
+(re-persisting a structurally identical plan).
 
 ``localCheckpoint`` needs special handling: its persistence lives at
 the RDD level, OUTSIDE the SQL CacheManager, so ``DataFrame.
@@ -83,14 +82,6 @@ def scoped_persist(df: DataFrame) -> DataFrame:
     """``df.persist()`` registered for this THREAD's next
     :func:`release_caches`."""
     df = df.persist()
-    _scoped().append(df.unpersist)
-    return df
-
-
-def scoped_register(df: DataFrame) -> DataFrame:
-    """Register an ALREADY-persisted DataFrame for this thread's next
-    :func:`release_caches` — persisting again would only emit an
-    "already cached" warning."""
     _scoped().append(df.unpersist)
     return df
 

@@ -8,7 +8,7 @@ Reference parity:
 - F4 NaT/string ts repair    -> native ``to_timestamp``; the reference's
   RDD-map UDF (load_sales_history.py:140-153) is unnecessary once data never
   round-trips through pandas.
-- F6 cutoff truncate+lag     -> ``cutoff_expr``            (load_sales_history.py:33-36)
+- F6 cutoff truncate+lag     -> ``plans.ledger.default_cutoff`` (load_sales_history.py:33-36)
 - F7 year_month derivation   -> ``year_month``             (data_generation.py:38)
 - P2 half-open window        -> ``half_open_window``       (load_sales_history.py:76-94)
 """
@@ -65,14 +65,6 @@ def half_open_window(ts: Column | str, start: datetime | None, end: datetime) ->
     if start is None:
         return upper
     return (c >= F.lit(start)) & upper
-
-
-def cutoff_expr(lag_minutes: int = 5) -> Column:
-    """``date_trunc('minute', now) - INTERVAL lag MINUTES`` — the watermark
-    arithmetic (minute truncation + safety lag for in-flight transactions)."""
-    return F.date_trunc("minute", F.current_timestamp()) - F.expr(
-        f"INTERVAL {int(lag_minutes)} MINUTES"
-    )
 
 
 def dec(c: Column | str, precision: int = 18, scale: int = 2) -> Column:

@@ -6,45 +6,22 @@ The pattern for a 100 TB training-data pipeline:
 - media lives in a BINARY column (or a reference + byte-range into an
   object store); metadata (codec, dims, duration) is a typed STRUCT
   column so filters on it prune BEFORE any decode work;
-- decode / feature-extraction runs as ``mapInPandas`` — Arrow moves
-  each partition to Python in columnar batches (no per-row pickling),
-  and the decode cost parallelizes with the scan;
-- decoded outputs are fixed-width arrays/structs so downstream ops
-  (dedup, ANN) stay native.
-
-Decoder seam: ``decode_image_batches`` carries TWO kernels behind one
-schema — a REAL decoder (PIL: decode → grayscale → mean luma +
-luminance histogram feature) used when Pillow imports on the workers,
-and a deterministic SURROGATE (raw byte statistics) for environments
-without codec libraries, like this container. ``decoder="auto"``
-(default) picks per-environment; both kernels exercise the identical
-distributed path — Arrow batching, partitioning, fixed-width outputs —
-so swapping in the real codec changes no plan shape.
+- decode / transform runs as ``mapInPandas`` — Arrow moves each
+  partition to Python in columnar batches (no per-row pickling), and
+  the decode cost parallelizes with the scan;
+- transformed outputs are fixed-size so downstream ops stay native.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
-    FloatType,
     IntegerType,
     LongType,
     StructField,
     StructType,
-)
-
-IMAGE_FEATURES_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("n_bytes", LongType(), False),
-        StructField("mean_luma", FloatType(), False),
-        StructField("feature_vec", ArrayType(FloatType(), False), False),
-    ]
 )
 
 
@@ -82,110 +59,6 @@ def pil_available() -> bool:
         return False
 
 
-def _surrogate_kernel(dim: int):
-    """Deterministic surrogate: per-payload BYTE statistics. Exercises
-    the full distributed path (Arrow binary serialization, batching,
-    fixed-width outputs) in codec-less environments."""
-
-    def kernel(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                buf = np.frombuffer(payload, dtype=np.uint8)
-                n = int(buf.size)
-                mean = float(buf.mean()) if n else 0.0
-                # deterministic "embedding": bucketed byte histogram,
-                # L1-normalized. Math in FLOAT64 (storage narrows to the
-                # schema's float32): exact-count ÷ exact-count in double
-                # is reproducible arithmetic an external oracle can
-                # replay, where float32 intermediate math is not.
-                hist = np.bincount(buf % dim, minlength=dim).astype("float64")
-                tot = hist.sum()
-                vec = (hist / tot if tot else hist).tolist()
-                out.append((mid, n, mean, vec))
-            yield pd.DataFrame(
-                out, columns=["media_id", "n_bytes", "mean_luma", "feature_vec"]
-            )
-
-    return kernel
-
-
-def _pil_kernel(dim: int):
-    """Real decoder: PIL decode → grayscale → mean luminance + an
-    L1-normalized ``dim``-bin luminance histogram as the feature vector.
-    Payloads that fail to decode (corrupt/unsupported codec) degrade to
-    zero features instead of failing the batch — at corpus scale a
-    poison row must never kill the job."""
-
-    def kernel(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import io
-
-        import numpy as np
-        import pandas as pd
-        from PIL import Image
-
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                n = len(payload)
-                try:
-                    img = Image.open(io.BytesIO(payload)).convert("L")
-                    luma = np.asarray(img, dtype=np.uint8).ravel()
-                    mean = float(luma.mean()) if luma.size else 0.0
-                    hist = np.bincount(
-                        (luma.astype(np.int32) * dim) // 256, minlength=dim
-                    ).astype("float32")
-                    tot = hist.sum()
-                    vec = (hist / tot if tot else hist).tolist()
-                except Exception:
-                    mean, vec = 0.0, [0.0] * dim
-                out.append((mid, n, mean, vec))
-            yield pd.DataFrame(
-                out, columns=["media_id", "n_bytes", "mean_luma", "feature_vec"]
-            )
-
-    return kernel
-
-
-def decode_image_batches(
-    media: DataFrame, dim: int = 8, decoder: str = "auto"
-) -> DataFrame:
-    """Decode + feature-extract via ``mapInPandas`` (Arrow batches).
-
-    ``decoder``:
-
-    - ``"real"`` — PIL decode → grayscale → luminance features; raises
-      ImportError where Pillow is absent.
-    - ``"surrogate"`` — deterministic byte-statistics stand-in, no codec
-      dependency.
-    - ``"auto"`` — real when Pillow imports, surrogate otherwise.
-
-    Both kernels share IMAGE_FEATURES_SCHEMA and the identical plan —
-    the decoder choice swaps only the Python kernel body, so promoting
-    an environment from surrogate to real changes no Spark semantics.
-
-    Scale: decode cost is per-row CPU in Python workers — size
-    ``spark.sql.execution.arrow.maxRecordsPerBatch`` so a batch of
-    payloads fits worker memory, and partition the input by size (e.g.
-    bucket big videos separately) to avoid stragglers.
-    """
-    if decoder not in ("auto", "real", "surrogate"):
-        raise ValueError(f"unknown decoder: {decoder!r}")
-    if decoder == "auto":
-        decoder = "real" if pil_available() else "surrogate"
-    if decoder == "real" and not pil_available():
-        raise ImportError(
-            "decoder='real' requires Pillow; install it or use decoder='auto'"
-        )
-    kernel = _pil_kernel(dim) if decoder == "real" else _surrogate_kernel(dim)
-    return media.select("media_id", "payload").mapInPandas(
-        kernel, schema=IMAGE_FEATURES_SCHEMA
-    )
-
-
 RESIZED_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -200,8 +73,7 @@ def resize_image_batches(
     media: DataFrame, width: int = 32, height: int = 32, decoder: str = "auto"
 ) -> DataFrame:
     """Resize via ``mapInPandas`` — the batch-transform shape of the
-    multimodal pipeline (decode → transform → RE-ENCODED binary out),
-    complementing :func:`decode_image_batches` (decode → features out).
+    multimodal pipeline (decode → transform → RE-ENCODED binary out).
 
     ``decoder="real"`` (PIL): decode → bilinear resize to
     (width, height) → grayscale raw-byte payload of exactly
@@ -213,9 +85,9 @@ def resize_image_batches(
     output contract) with no codec dependency. ``"auto"`` picks per
     environment; the plan is identical either way.
 
-    Scale: same contract as decode — per-row Python CPU behind an Arrow
-    batch boundary; size ``arrow.maxRecordsPerBatch`` against payload
-    size, pre-partition by size class to avoid stragglers. Output
+    Scale: per-row Python CPU behind an Arrow batch boundary; size
+    ``arrow.maxRecordsPerBatch`` against payload size, pre-partition by
+    size class to avoid stragglers. Output
     payloads are FIXED-SIZE by construction, so downstream batching
     (training shards, tensor packing) needs no per-row length handling.
     """
@@ -278,7 +150,7 @@ def sample_frames(
 ) -> DataFrame:
     """Video frame-sampling PLAN (native side): explode a frame-index
     sequence per video from metadata only — the decode of each sampled
-    frame is then a mapInPandas kernel like ``decode_image_batches``.
+    frame is then a mapInPandas kernel like ``resize_image_batches``.
 
     Keeping the index generation native means the (video × frame) work
     list is built by codegen and can be repartitioned to balance decode

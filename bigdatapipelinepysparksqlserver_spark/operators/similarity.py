@@ -1168,19 +1168,6 @@ def _pq_codes_expr(sub_codebooks) -> str:
     )
 
 
-def pq_assign(
-    vectors: DataFrame,
-    sub_codebooks,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, codes array<int>) — per-subspace argmin-L2 codes, one scan,
-    all M argmins in a single projection over literal centroids."""
-    return vectors.select(
-        F.col(id_col), F.col(vec_col).alias("__v")
-    ).select(id_col, F.expr(_pq_codes_expr(sub_codebooks)).alias("codes"))
-
-
 def pq_reconstruct(codes_col, sub_codebooks):
     """array<double> reconstruction: concat of each subspace's coded
     centroid — ``flatten(transform(codes, code → cb_s[code]))`` with
@@ -1203,34 +1190,6 @@ def pq_reconstruct(codes_col, sub_codebooks):
             " element_at(codes, s + 1) + 1))".replace("{m}", str(m - 1))
         )
     ), cb_lit
-
-
-def pq_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    sub_codebooks,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-) -> DataFrame:
-    """Approximate top-k by cosine against PQ-RECONSTRUCTED corpus
-    vectors (asymmetric: raw query vs reconstructed neighbor — ADC) —
-    the search shape over a store that keeps only M small ints per
-    vector. 32× compression at 64d/M=8/C=16; recall degrades with
-    quantization error (pytest pins overlap vs exact on the synthetic
-    corpus). The scan reads codes, reconstructs in-projection from
-    literal codebooks, and reuses the brute-force top-k machinery."""
-    codes = pq_assign(vectors, sub_codebooks, id_col=id_col, vec_col=vec_col)
-    recon_expr, cb_lit = pq_reconstruct(F.col("codes"), sub_codebooks)
-    recon = codes.withColumn("__cb", cb_lit).select(
-        F.col(id_col), recon_expr.alias("__recon")
-    )
-    # the query side stays RAW (asymmetric ADC); the neighbor norm is over
-    # the RECONSTRUCTED vector, once per code row
-    pairs = _side(recon, "neighbor", id_col, "__recon").crossJoin(
-        F.broadcast(_side(queries, "query", id_col, vec_col))
-    )
-    return _exact_rerank(pairs.where(F.col("query_id") != F.col("neighbor_id")), k)
 
 
 # ---------------------------------------------------------------------------

@@ -302,101 +302,3 @@ def ks_two_sample(
             6,
         ).alias("ks"),
     )
-
-
-def mann_whitney_u(
-    tagged: DataFrame,
-    value_col: str = "v",
-    ref_col: str = "is_ref",
-    bucket_width: int = 25_000_000,
-) -> DataFrame:
-    """Exact Mann–Whitney U (rank-sum) statistic with midrank tie
-    handling and the tie-corrected normal approximation — the
-    location-shift drift test next to :func:`ks_two_sample`'s
-    shape test. Input rows: (value_col BIGINT integer-scaled,
-    ref_col 1/0).
-
-    Exactness: doubled midranks are integers
-    (mr2(v) = 2·cum_below(v) + c(v) + 1), so 2·R_ref = Σ ca(v)·mr2(v)
-    and 2·U = 2·na·nb + na(na+1) − 2·R_ref are exact DECIMAL(38,0)
-    sums; U and the tie-corrected z derive in fixed-order double
-    expressions at the very end (z's denominator uses
-    Σ(t³−t) over tie groups — also an exact integer sum).
-
-    Scale: identical shape to :func:`ks_two_sample` — one data-sized
-    groupBy to the distinct-value domain, within-bucket cumulative
-    windows, a bucket-count-sized constant-partitioned carry. Returns
-    one row (n_ref, n_cur, u_ref, z) — u_ref exact (halves possible
-    under ties), z rounded 6 dp.
-    """
-    v = F.col(value_col)
-    vals = tagged.groupBy(v.alias("__v")).agg(
-        F.sum(F.col(ref_col)).alias("__ca"),
-        F.sum(F.lit(1) - F.col(ref_col)).alias("__cb"),
-    ).select(
-        "__v", "__ca", "__cb",
-        (F.col("__ca") + F.col("__cb")).alias("__c"),
-        F.expr(f"__v div {bucket_width}").alias("__bk"),
-    )
-    # cum_below(v): total count of strictly smaller values across both
-    # samples — the inclusive within-bucket prefix minus the row's own
-    # count, plus the bucket carry
-    w_in = (
-        Window.partitionBy("__bk")
-        .orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    within = vals.select(
-        "__v", "__bk", "__ca", "__c",
-        (F.sum("__c").over(w_in) - F.col("__c")).alias("__ibelow"),
-    )
-    per_bucket = vals.groupBy("__bk").agg(F.sum("__c").alias("__sc"))
-    tot = vals.groupBy().agg(
-        F.sum("__ca").alias("__na"),
-        F.sum("__cb").alias("__nb"),
-        F.sum((F.col("__c") * F.col("__c") * F.col("__c") - F.col("__c"))
-              .cast(_D)).alias("__ties"),
-    )
-    w_carry = (
-        Window.partitionBy("__na")
-        .orderBy("__bk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = per_bucket.crossJoin(F.broadcast(tot)).select(
-        "__bk", "__na", "__nb", "__ties",
-        F.coalesce(F.sum("__sc").over(w_carry), F.lit(0)).alias("__pc"),
-    )
-    cum = within.join(carry, "__bk")
-    mr2 = (
-        F.lit(2) * (F.col("__pc") + F.col("__ibelow")) + F.col("__c") + 1
-    ).cast(_D)
-    agg = cum.groupBy().agg(
-        F.max("__na").alias("na"),
-        F.max("__nb").alias("nb"),
-        F.max("__ties").alias("ties"),
-        F.sum(F.col("__ca").cast(_D) * mr2).alias("r2"),
-    )
-    na = F.col("na").cast("double")
-    nb = F.col("nb").cast("double")
-    n = na + nb
-    u2 = (
-        F.lit(2) * F.col("na").cast(_D) * F.col("nb").cast(_D)
-        + F.col("na").cast(_D) * (F.col("na") + 1).cast(_D)
-        - F.col("r2")
-    )
-    u = u2.cast("double") / F.lit(2.0)
-    mean_u = na * nb / F.lit(2.0)
-    var_u = (
-        na * nb / F.lit(12.0)
-        * ((n + F.lit(1.0)) - F.col("ties").cast("double") / (n * (n - F.lit(1.0))))
-    )
-    z = F.when(
-        var_u > F.lit(0.0),
-        F.round((u - mean_u) / F.sqrt(var_u), 6),
-    )
-    return agg.select(
-        F.col("na").alias("n_ref"),
-        F.col("nb").alias("n_cur"),
-        u.alias("u_ref"),
-        z.alias("z"),
-    )

@@ -1,5 +1,5 @@
-"""Batched-store compaction — the store analogue of the lake's
-small-file `compact_partitions` hook (sources/lake.py).
+"""Batched-store compaction: merging the append-only stores' batch
+levels back into one file set.
 
 The two growing stores (`postings_store_append_batch` in
 operators/retrieval.py and `ivf_store_append_batch` in

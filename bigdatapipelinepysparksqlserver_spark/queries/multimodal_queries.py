@@ -1,16 +1,7 @@
 """Multimodal query surface over `documents` (payload = text bytes).
 
-The metadata path (binary length stats, shard plan) is
-SQL-expressible and oracle-checked. The Pandas-UDF decode path runs the
-REAL mapInPandas pipeline with the deterministic surrogate decoder —
-`media_decode_features` grades the full decode output with the feature
-vector carried as a fixed-point string (oracle-backed since r9; the
-underlying operator still returns the production array form), and
-`media_decode_check` is the per-scalar twin: same kernel, exploded to
-scalar rows, with DuckDB recomputing the byte statistics from
-hex(BLOB) and replicating the float32 storage narrowing via REAL casts
-— so the whole Arrow batch path (binary serialization, per-partition
-batching, schema) is value-verified.
+The metadata path (payload dedup audit, shard plan) is
+SQL-expressible and oracle-checked.
 """
 
 from __future__ import annotations
@@ -18,152 +9,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.multimodal import attach_binary_payload, decode_image_batches
+from ..operators.multimodal import attach_binary_payload
 from ..sources.catalog import Catalog
 from .registry import query
-
-
-# Oracle for the full decode output INCLUDING the feature vector: the
-# array column crashes the driver's pandas canon (measured in r8), so
-# the graded form carries it as a comma-joined fixed-point (1e-6)
-# string. Safe because media_decode_check already proves each feature
-# double BIT-equal across engines (REAL narrowing reproduces float32
-# identically), so ROUND(x*1e6) of identical doubles yields identical
-# integers on both sides — no formatting divergence can exist.
-MEDIA_DECODE_FEATURES_ORACLE = """
-WITH m AS (
-  SELECT doc_id AS media_id, CAST(text AS BLOB) AS payload FROM documents
-),
-b AS (
-  SELECT media_id,
-         CAST(('0x' || substr(hex(payload), 2 * t.i - 1, 2)) AS INTEGER) AS byte
-  FROM m, UNNEST(range(1, octet_length(payload) + 1)) AS t(i)
-),
-stats AS (
-  SELECT media_id,
-         CAST(CAST(AVG(byte) AS REAL) AS DOUBLE) AS mean_luma
-  FROM b GROUP BY media_id
-),
-hist AS (
-  SELECT media_id, byte % 8 AS pos, COUNT(*) AS c
-  FROM b GROUP BY 1, 2
-),
-tot AS (SELECT media_id, SUM(c) AS tot FROM hist GROUP BY 1),
-grid AS (
-  SELECT m.media_id, octet_length(m.payload) AS n, t.p AS pos
-  FROM m, UNNEST(range(0, 8)) AS t(p)
-),
-cells AS (
-  SELECT g.media_id,
-         CAST(g.n AS BIGINT) AS n_bytes,
-         COALESCE(s.mean_luma, 0.0) AS mean_luma,
-         g.pos,
-         CAST(CAST(COALESCE(h.c, 0) / CAST(COALESCE(t.tot, 1) AS DOUBLE) AS REAL)
-              AS DOUBLE) AS feature
-  FROM grid g
-  LEFT JOIN stats s ON s.media_id = g.media_id
-  LEFT JOIN hist h ON h.media_id = g.media_id AND h.pos = g.pos
-  LEFT JOIN tot t ON t.media_id = g.media_id
-)
-SELECT media_id, n_bytes, mean_luma,
-       string_agg(CAST(CAST(ROUND(feature * 1e6, 0) AS BIGINT) AS VARCHAR),
-                  ',' ORDER BY pos) AS feature_fp6
-FROM cells GROUP BY media_id, n_bytes, mean_luma
-"""
-
-
-@query("media_decode_features", oracle=MEDIA_DECODE_FEATURES_ORACLE)
-def media_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-batched decode: mapInPandas over binary payloads →
-    fixed-width feature vectors. Pinned to the SURROGATE kernel for
-    determinism across grading environments; production picks
-    decoder="auto", which swaps in the real PIL kernel (same schema,
-    same plan) wherever Pillow is installed.
-
-    Graded encoding (VERDICT r8 #2): the production ARRAY feature
-    column crashes the driver's pandas canon, so this form carries the
-    vector as a comma-joined fixed-point (×1e6) string — a pure
-    projection over the identical mapInPandas plan (the array form
-    stays the operator's output, pytest-covered). The integers match
-    DuckDB exactly because media_decode_check proves each feature
-    double bit-equal across engines before rounding."""
-    docs = Catalog(spark, sf_dir).documents
-    media = attach_binary_payload(docs, id_col="doc_id", text_col="text")
-    feats = decode_image_batches(media, dim=8, decoder="surrogate")
-    return feats.select(
-        "media_id",
-        "n_bytes",
-        F.col("mean_luma").cast("double").alias("mean_luma"),
-        F.array_join(
-            F.transform(
-                "feature_vec",
-                lambda x: F.round(x.cast("double") * 1e6, 0).cast("bigint").cast("string"),
-            ),
-            ",",
-        ).alias("feature_fp6"),
-    )
-
-
-MEDIA_DECODE_CHECK_ORACLE = """
-WITH m AS (
-  SELECT doc_id AS media_id, CAST(text AS BLOB) AS payload FROM documents
-),
-b AS (
-  SELECT media_id,
-         CAST(('0x' || substr(hex(payload), 2 * t.i - 1, 2)) AS INTEGER) AS byte
-  FROM m, UNNEST(range(1, octet_length(payload) + 1)) AS t(i)
-),
-stats AS (
-  SELECT media_id,
-         CAST(CAST(AVG(byte) AS REAL) AS DOUBLE) AS mean_luma
-  FROM b GROUP BY media_id
-),
-hist AS (
-  SELECT media_id, byte % 8 AS pos, COUNT(*) AS c
-  FROM b GROUP BY 1, 2
-),
-tot AS (SELECT media_id, SUM(c) AS tot FROM hist GROUP BY 1),
-grid AS (
-  SELECT m.media_id, octet_length(m.payload) AS n, t.p AS pos
-  FROM m, UNNEST(range(0, 8)) AS t(p)
-)
-SELECT g.media_id,
-       CAST(g.n AS BIGINT) AS n_bytes,
-       COALESCE(s.mean_luma, 0.0) AS mean_luma,
-       CAST(g.pos AS INTEGER) AS dim,
-       CAST(CAST(COALESCE(h.c, 0) / CAST(COALESCE(t.tot, 1) AS DOUBLE) AS REAL)
-            AS DOUBLE) AS feature
-FROM grid g
-LEFT JOIN stats s ON s.media_id = g.media_id
-LEFT JOIN hist h ON h.media_id = g.media_id AND h.pos = g.pos
-LEFT JOIN tot t ON t.media_id = g.media_id
-"""
-
-
-@query("media_decode_check", oracle=MEDIA_DECODE_CHECK_ORACLE)
-def media_decode_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-checked twin of the decode path: the SAME mapInPandas
-    surrogate kernel, exploded to (media_id, n_bytes, mean_luma, dim,
-    feature) scalar rows so the driver canon can hash it. The oracle
-    recomputes every byte statistic from hex(BLOB) in DuckDB and
-    narrows through REAL to replicate the schema's float32 storage —
-    end-to-end value verification of Arrow binary serialization,
-    batching, and the kernel arithmetic."""
-    docs = Catalog(spark, sf_dir).documents
-    media = attach_binary_payload(docs, id_col="doc_id", text_col="text")
-    feats = decode_image_batches(media, dim=8, decoder="surrogate")
-    return feats.select(
-        "media_id",
-        "n_bytes",
-        F.col("mean_luma").cast("double").alias("mean_luma"),
-        F.posexplode("feature_vec").alias("dim", "feature"),
-    ).select(
-        "media_id",
-        "n_bytes",
-        "mean_luma",
-        F.col("dim").cast("int").alias("dim"),
-        F.col("feature").cast("double").alias("feature"),
-    )
 
 
 # --------------------------------------------------------------------------

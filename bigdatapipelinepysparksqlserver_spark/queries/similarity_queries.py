@@ -6,8 +6,9 @@ rounded cosines hash-match). The hyperplane-LSH variants are ALSO
 oracle-checked: the planes are literal constants
 (operators/similarity.py hyperplane_constants), so DuckDB reproduces the
 bucket assignment with list_dot_product sign tests. The IVF variants are
-oracle-checked too: `ann_ivf_topk` searches against the offline-trained
-versioned codebook artifact whose 6-dp centroid literals replay in SQL.
+oracle-checked too: `ann_ivf_partitioned_topk` and `ann_ivfpq_topk` search
+against the offline-trained versioned codebook artifact whose 6-dp
+centroid literals replay in SQL.
 (KMeans training — `train_ivf_codebook`, run by
 `tools/train_ivf_codebook.py` — stays outside every registered query
 path.)
@@ -293,31 +294,6 @@ QUALIFY rank <= {TOP_K}
 IVF_ARTIFACT_N_PROBE = 6
 
 
-@query("ann_ivf_topk", oracle=_ivf_artifact_oracle(IVF_ARTIFACT_N_PROBE))
-def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate top-k against the OFFLINE-TRAINED versioned
-    codebook artifact (tools/train_ivf_codebook.py): no training in the
-    query path — assignment is an argmax-cosine projection over literal
-    centroids during the scan, then a cell-id bucket join and exact
-    re-rank. The data-adaptive alternative to ``ann_lsh_topk`` —
-    centroid cells balance on clustered embeddings where oblivious
-    hyperplanes don't; n_probe is the recall/cost dial. Fully
-    oracle-checked since the artifact's 6-dp literals replay in SQL."""
-    from ..operators.similarity import ivf_codebook_topk
-
-    art = _load_ivf_artifact()
-    emb = Catalog(spark, sf_dir).embeddings
-    codebook = spark.createDataFrame(
-        sorted((int(c), v) for c, v in art["centroids"].items()),
-        ["cell", "centroid"],
-    ).select("cell", F.col("centroid").cast("array<double>").alias("centroid"))
-    q = emb.where(F.col("vec_id") < N_QUERY_VECS)
-    return ivf_codebook_topk(
-        emb, q, codebook, id_col="vec_id", vec_col="embedding",
-        n_probe=IVF_ARTIFACT_N_PROBE, k=TOP_K,
-    )
-
-
 def _ivf_store_path(sf_dir: str) -> str:
     """Per-(user, process, sf_dir) location for the cell-partitioned
     vector store with dead-sibling sweeping — see queries/storepaths.py
@@ -339,9 +315,9 @@ def ann_ivf_partitioned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes at the FILE-LISTING level (Hive partition pruning,
     ``PartitionFilters`` in the executed plan — asserted in
     tests/test_plans.py). Results are identical to the
-    projection-assignment search ``ann_ivf_topk`` by construction (the
-    driver-side probe twin folds doubles in the same order as the
-    scan-side SQL), so the SAME codebook-literal oracle replays both.
+    projection-assignment search ``ivf_codebook_topk`` by construction
+    (the driver-side probe twin folds doubles in the same order as the
+    scan-side SQL), so one codebook-literal oracle replays it.
 
     Scale: the store build is one scan + partitioned write (amortized
     over every subsequent search in production — rebuilt here per call

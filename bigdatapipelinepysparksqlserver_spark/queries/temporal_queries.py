@@ -87,40 +87,6 @@ EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 
 
 # --------------------------------------------------------------------------
-# funnel: view → click → purchase, strictly ordered per user
-# --------------------------------------------------------------------------
-
-FUNNEL_ORACLE = """
-WITH s1 AS (
-  SELECT user_id, ts, event_type,
-         MIN(CASE WHEN event_type = 'view' THEN ts END)
-           OVER (PARTITION BY user_id) AS t1
-  FROM events
-),
-s2 AS (
-  SELECT user_id, ts, event_type, t1,
-         MIN(CASE WHEN event_type = 'click' AND ts > t1 THEN ts END)
-           OVER (PARTITION BY user_id) AS t2
-  FROM s1
-),
-s3 AS (
-  SELECT user_id, t1, t2,
-         MIN(CASE WHEN event_type = 'purchase' AND ts > t2 THEN ts END)
-           OVER (PARTITION BY user_id) AS t3
-  FROM s2
-),
-per_user AS (
-  SELECT user_id, MAX(t1) AS t1, MAX(t2) AS t2, MAX(t3) AS t3
-  FROM s3 GROUP BY user_id
-)
-SELECT COUNT(t1) AS n_viewed,
-       COUNT(t2) AS n_clicked_after_view,
-       COUNT(t3) AS n_purchased_after_click
-FROM per_user
-"""
-
-
-# --------------------------------------------------------------------------
 # calendar-spine densification: explicit gap rows for time-series work
 # --------------------------------------------------------------------------
 

@@ -81,22 +81,6 @@ def scrub_pii_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scrub_pii(docs, text_col="text", id_col="doc_id")
 
 
-FUNNEL_ORACLE = """
-WITH scored AS (
-  SELECT doc_id,
-    CASE WHEN length(trim(text)) = 0 THEN 0
-         ELSE len(string_split(trim(text), ' ')) END AS n_words,
-    CAST(len(list_distinct(string_split(lower(trim(text)), ' '))) AS DOUBLE)
-      / CAST(len(string_split(lower(trim(text)), ' ')) AS DOUBLE) AS dwr
-  FROM documents
-)
-SELECT COUNT(*) AS n_total,
-       CAST(SUM(CASE WHEN n_words >= 20 THEN 1 ELSE 0 END) AS BIGINT) AS n_len_ok,
-       CAST(SUM(CASE WHEN n_words >= 20 AND dwr >= 0.30 THEN 1 ELSE 0 END) AS BIGINT) AS n_final
-FROM scored
-"""
-
-
 PROBE_N = 8
 
 DECONTAMINATE_ORACLE = f"""

@@ -7,9 +7,11 @@ only ``master`` and resource conf change, never the plan code.
 
 Defaults chosen for 100 TB-scale behavior:
 - AQE on (runtime coalescing, skew-join splitting, dynamic join re-plan)
-- dynamic partition overwrite, which ``LakeTable.compact_partitions``
-  needs to rewrite partitions in place (the CDC rebuild's staged swap
-  does not depend on it)
+- dynamic partition overwrite: a ``mode("overwrite").partitionBy(...)``
+  write replaces only the partitions its output holds. The partitioned
+  store writes (``retrieval``'s postings stores,
+  ``similarity.write_ivfpq_store``, ``stores.vector_store_delete_ids``)
+  rely on it; the lake's staged swap does not
 - Arrow for any pandas interchange (the reference's driver-side pandas funnel
   is eliminated, but Pandas-UDF extension ops use Arrow batches)
 """

@@ -211,15 +211,16 @@ class LakeTable:
         self, only_under: Sequence[str] | None = None
     ) -> list[tuple[str, int, int]]:
         """Per-partition (relative_dir, file_count, total_bytes) from
-        filesystem metadata only — no data scan. The observability half
-        of compaction: a 100 TB lake's scan cost is driven by file count
-        as much as byte count (per-file open/footer overhead, task
-        scheduling), so fragmentation must be measurable cheaply.
+        filesystem metadata only — no data scan. A 100 TB lake's scan
+        cost is driven by file count as much as byte count (per-file
+        open/footer overhead, task scheduling), so the layout must be
+        measurable cheaply.
 
         ``only_under`` restricts the walk to the given partition-dir
         prefixes (e.g. ``["year_month=202406"]``) — the change-set-bounded
-        form the post-CDC compaction hook uses: listing cost then scales
-        with the partitions just touched, never the table.
+        form ``IncrementalMart.refresh`` uses to see whether a rebuild
+        wrote any file: listing cost then scales with the partitions just
+        touched, never the table.
         """
         root = os.path.abspath(self.path)
         roots = (
@@ -242,80 +243,6 @@ class LakeTable:
                 )
                 stats.append((os.path.relpath(dirpath, root), len(data), nbytes))
         return stats
-
-    def compact_partitions(
-        self,
-        target_file_bytes: int = 128 << 20,
-        min_files: int = 2,
-        only_under: Sequence[str] | None = None,
-    ) -> list[str]:
-        """File-layout repair: rewrite exactly the partitions whose file
-        count is wrong for their byte size — MERGE when fragmented
-        (> ceil(bytes/target) files and ≥ ``min_files``), SPLIT when
-        files are oversized (< ceil(bytes/target) files, i.e. average
-        file > target). Healthy partitions' files are left physically
-        untouched. Returns the rewritten partition dirs.
-
-        Continuous ingest (streaming foreachBatch, frequent small CDC
-        runs) fragments partitions — per-file open/footer overhead and
-        task-scheduling cost then dominate scans; conversely a giant
-        single file caps scan parallelism at 1 task per
-        maxPartitionBytes range but still pays row-group skew. At scale
-        the fix must be (a) incremental — cost ∝ unhealthy partitions,
-        never the table — and (b) idempotent/atomic per partition,
-        which dynamic partition overwrite gives for free. Each
-        rewritten partition comes back as ceil(bytes/target) files via
-        a salted repartition.
-
-        ``only_under`` bounds BOTH the stats listing and the candidate
-        set to the given partition-dir prefixes — the post-CDC hook
-        passes the just-rebuilt ``year_month=…`` dirs so a
-        15-min-cadence pipeline pays compaction cost ∝ its change set.
-        """
-        todo: list[tuple[str, int]] = []
-        for rel, nfiles, nbytes in self.partition_file_stats(only_under=only_under):
-            want = max(1, -(-nbytes // target_file_bytes))
-            fragmented = nfiles >= min_files and nfiles > want
-            oversized = nfiles < want
-            if fragmented or oversized:
-                todo.append((rel, want))
-        if not todo:
-            return []
-        mode = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        if (mode or "").lower() != "dynamic":
-            raise RuntimeError(
-                "partitionOverwriteMode must be 'dynamic' for compaction "
-                f"(got {mode!r}); static mode would drop healthy partitions"
-            )
-        # match partitions by their dir path rendered from the data —
-        # identical formatting to what the writer produced the dirs from
-        rel_expr = F.concat_ws(
-            "/",
-            *[
-                F.concat(F.lit(f"{c}="), F.col(c).cast("string"))
-                for c in self.partition_cols
-            ],
-        )
-        # the common case — fragmented partitions merging to 1 file each —
-        # is ONE write through the table's writer regardless of how many
-        # partitions qualify: its keyed repartition (fixed at the
-        # default parallelism) sends each partition to one task, so one
-        # file. Splits are rarer and need an exact file count per
-        # partition, which a keyed shuffle cannot give (every row of a
-        # partition hashes to the same task), so each oversized
-        # partition is its own round-robin repartition(want) rewrite.
-        merge_rels = [rel for rel, want in todo if want == 1]
-        if merge_rels:
-            frag = self.read().where(rel_expr.isin(merge_rels))
-            self._writer(frag).mode("overwrite").parquet(self.path)
-        for rel, want in todo:
-            if want == 1:
-                continue
-            part = self.read().where(rel_expr == rel).repartition(want)
-            part.write.partitionBy(*self.partition_cols).mode("overwrite").parquet(
-                self.path
-            )
-        return [rel for rel, _ in todo]
 
     def register_catalog_table(self, name: str) -> None:
         """S4 — catalog DDL: CREATE TABLE IF NOT EXISTS ... USING PARQUET
@@ -341,9 +268,7 @@ class LakeTable:
 
     def _writer(self, df: DataFrame):
         # one file per partition, written by every core (see
-        # one_file_per_partition). A partition too big for one file is
-        # compact_partitions' split path, which uses an explicit
-        # round-robin repartition instead.
+        # one_file_per_partition)
         return one_file_per_partition(df, self.partition_cols).write.partitionBy(
             *self.partition_cols
         )

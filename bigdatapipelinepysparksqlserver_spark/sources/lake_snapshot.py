@@ -53,8 +53,8 @@ Scale notes (100 TB):
   partition to a bounded file set on every rebuild.
 - fragmentation-across-runs cannot occur by construction: a partition
   is wholly owned by the single txn that last rebuilt it (the hash
-  repartition in the writer yields one file per partition), so the
-  LakeTable.compact_partitions repair loop has nothing to do here.
+  repartition in the writer yields one file per partition), so there
+  is nothing to compact.
 - GC reaps manifests behind the retain window and any data partition
   directory no retained manifest references; ``retain`` bounds how
   long an in-flight reader's snapshot stays valid, identical to the

@@ -494,58 +494,6 @@ def test_pagerank_fixed_point_properties(spark):
     assert again == got
 
 
-def test_khop_reach_bruteforce(spark):
-    """2-hop BFS counts vs a python BFS over a hand-built edge list,
-    including a hop-2 node reachable via two different hop-1 nodes
-    (dedup) and a cycle back to the seed (visited pruning)."""
-    from collections import defaultdict
-
-    import pyspark.sql.functions as F
-
-    from bigdatapipelinepysparksqlserver_spark.queries import REGISTRY  # noqa: F401
-
-    edges = [
-        (1, 2), (2, 1), (1, 3), (3, 1), (2, 4), (4, 2), (3, 4), (4, 3),
-        (4, 1), (1, 4), (5, 6), (6, 5),
-    ]
-    adj = defaultdict(set)
-    for s, d in edges:
-        adj[s].add(d)
-
-    def bfs(seed):
-        h1 = adj[seed] - {seed}
-        h2 = set()
-        for n in h1:
-            h2 |= adj[n]
-        h2 -= h1 | {seed}
-        return len(h1), len(h2)
-
-    df = spark.createDataFrame(edges, "src long, dst long")
-    seeds = (
-        df.select(F.col("src").alias("seed")).distinct().orderBy("seed").limit(2)
-    )
-    h1 = (
-        F.broadcast(seeds)
-        .join(df, F.col("seed") == F.col("src"))
-        .where(F.col("dst") != F.col("seed"))
-        .select("seed", F.col("dst").alias("node"))
-        .distinct()
-    )
-    h2cand = (
-        h1.join(df, h1["node"] == df["src"])
-        .select("seed", F.col("dst").alias("node"))
-        .distinct()
-    )
-    visited = h1.unionByName(seeds.select("seed", F.col("seed").alias("node")))
-    h2 = h2cand.join(visited, ["seed", "node"], "left_anti")
-    got1 = {r["seed"]: r["n"] for r in h1.groupBy("seed").agg(F.count(F.lit(1)).alias("n")).collect()}
-    got2 = {r["seed"]: r["n"] for r in h2.groupBy("seed").agg(F.count(F.lit(1)).alias("n")).collect()}
-    for seed in (1, 2):
-        w1, w2 = bfs(seed)
-        assert got1.get(seed, 0) == w1
-        assert got2.get(seed, 0) == w2
-
-
 def test_triangle_counts_bruteforce_and_guard(spark):
     """Per-node triangle counts vs itertools on a hand-built graph
     (shared edges between triangles, a square with one diagonal, an

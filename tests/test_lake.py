@@ -43,8 +43,7 @@ def _stages(root):
 def test_static_session_mode_replaces_only_df_partitions(spark, tmp_path):
     """The staged swap does not depend on partitionOverwriteMode: under
     a static session it still replaces only the partitions ``df``
-    produces and leaves every other partition byte-identical.
-    compact_partitions still writes in place, so it keeps its guard."""
+    produces and leaves every other partition byte-identical."""
     root = str(tmp_path / "lake")
     lake = LakeTable(spark, root)
     lake.write_full(
@@ -60,8 +59,6 @@ def test_static_session_mode_replaces_only_df_partitions(spark, tmp_path):
         lake.overwrite_partitions(
             _df(spark, [(9, "z", 202401, "PT"), (4, "d", 202403, "PT")])
         )
-        with pytest.raises(RuntimeError, match="dynamic"):
-            lake.compact_partitions(target_file_bytes=1, min_files=1)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     after = _tree(root)
@@ -219,73 +216,6 @@ def test_register_catalog_table(spark, tmp_path):
         lake.register_catalog_table("sales_history_cat_test")
     finally:
         spark.sql("DROP TABLE IF EXISTS sales_history_cat_test")
-
-
-def test_compaction_rewrites_only_fragmented_partitions(spark, tmp_path):
-    """Compaction: fragmented partition collapses to 1 file with identical
-    content; a healthy partition's files are left physically untouched."""
-    import glob
-    import os
-
-    lake = LakeTable(spark, str(tmp_path / "lake"))
-    lake.write_full(_df(spark, [(1, "a", 202401, "PT"), (2, "b", 202402, "PT")]))
-    # simulate streaming/CDC appends fragmenting (202401, PT): three
-    # appended files alongside the original
-    for i in range(3):
-        (
-            _df(spark, [(10 + i, "frag", 202401, "PT")])
-            .coalesce(1)
-            .write.mode("append")
-            .partitionBy("year_month", "country")
-            .parquet(str(tmp_path / "lake"))
-        )
-    frag_dir = str(tmp_path / "lake" / "year_month=202401" / "country=PT")
-    healthy_dir = str(tmp_path / "lake" / "year_month=202402" / "country=PT")
-    assert len(glob.glob(frag_dir + "/*.parquet")) == 4
-    healthy_before = {
-        (f, os.path.getmtime(f)) for f in glob.glob(healthy_dir + "/*.parquet")
-    }
-    before = {tuple(r) for r in lake.read().collect()}
-
-    stats = {rel: (n, b) for rel, n, b in lake.partition_file_stats()}
-    assert stats["year_month=202401/country=PT"][0] == 4
-
-    rewritten = lake.compact_partitions(min_files=2)
-    assert rewritten == ["year_month=202401/country=PT"]
-    assert len(glob.glob(frag_dir + "/*.parquet")) == 1
-    # data identical, healthy partition files untouched (same inodes/mtimes)
-    assert {tuple(r) for r in lake.read().collect()} == before
-    healthy_after = {
-        (f, os.path.getmtime(f)) for f in glob.glob(healthy_dir + "/*.parquet")
-    }
-    assert healthy_after == healthy_before
-    # second run: nothing left to do
-    assert lake.compact_partitions(min_files=2) == []
-
-
-def test_compaction_splits_oversized_partition(spark, tmp_path):
-    """The split path: a partition whose bytes exceed the target file size
-    comes back as ceil(bytes/target) files, not one."""
-    import glob
-
-    lake = LakeTable(spark, str(tmp_path / "lake"))
-    rows = [(i, "x" * 50, 202401, "PT") for i in range(2000)]
-    lake.write_full(_df(spark, rows))
-    # fragment it so compaction triggers
-    _df(spark, [(99999, "y", 202401, "PT")]).coalesce(1).write.mode(
-        "append"
-    ).partitionBy("year_month", "country").parquet(str(tmp_path / "lake"))
-    before = {tuple(r) for r in lake.read().collect()}
-
-    [(rel, nfiles, nbytes)] = lake.partition_file_stats()
-    target = nbytes // 3  # force want ≈ 3-4 files
-    assert lake.compact_partitions(target_file_bytes=target, min_files=2) == [rel]
-    d = str(tmp_path / "lake" / "year_month=202401" / "country=PT")
-    got_files = len(glob.glob(d + "/*.parquet"))
-    want = -(-nbytes // target)
-    # salted split: expect >1 file, bounded by the requested count
-    assert 1 < got_files <= want
-    assert {tuple(r) for r in lake.read().collect()} == before
 
 
 def test_schema_evolution_merge_schema(spark, tmp_path):

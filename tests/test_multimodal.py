@@ -1,4 +1,4 @@
-"""Multimodal plumbing: binary payloads, Arrow-batched decode, frame plan."""
+"""Multimodal plumbing: binary payloads, Arrow-batched resize, frame plan."""
 
 from __future__ import annotations
 
@@ -6,7 +6,6 @@ import pytest
 
 from bigdatapipelinepysparksqlserver_spark.operators.multimodal import (
     attach_binary_payload,
-    decode_image_batches,
     sample_frames,
 )
 
@@ -25,44 +24,6 @@ def test_payload_schema_and_metadata(media):
     assert dict(media.dtypes)["payload"] == "binary"
     rows = {r.media_id: r.meta.n_bytes for r in media.collect()}
     assert rows == {1: 11, 2: 3, 3: 0}
-
-
-def test_real_decoder_seam(media):
-    from bigdatapipelinepysparksqlserver_spark.operators.multimodal import (
-        IMAGE_FEATURES_SCHEMA,
-        pil_available,
-    )
-
-    if pil_available():
-        # real kernel present: same schema, corrupt payloads degrade to
-        # zero features instead of failing the batch
-        out = decode_image_batches(media, dim=8, decoder="real")
-        assert out.schema == IMAGE_FEATURES_SCHEMA
-        rows = {r.media_id: r for r in out.collect()}
-        assert rows[1].n_bytes == 11
-        assert rows[1].feature_vec == [0.0] * 8  # "hello world" isn't an image
-    else:
-        with pytest.raises(ImportError, match="Pillow"):
-            decode_image_batches(media, decoder="real")
-        # auto degrades to the surrogate, same schema
-        out = decode_image_batches(media, dim=8, decoder="auto")
-        assert out.schema == IMAGE_FEATURES_SCHEMA
-        assert out.count() == 3
-    with pytest.raises(ValueError, match="unknown decoder"):
-        decode_image_batches(media, decoder="nope")
-
-
-def test_fake_decode_deterministic_and_fixed_width(media):
-    out1 = {r.media_id: (r.n_bytes, r.mean_luma, tuple(r.feature_vec))
-            for r in decode_image_batches(media, dim=8, decoder="surrogate").collect()}
-    out2 = {r.media_id: (r.n_bytes, r.mean_luma, tuple(r.feature_vec))
-            for r in decode_image_batches(media, dim=8, decoder="surrogate").collect()}
-    assert out1 == out2  # deterministic across runs
-    assert all(len(v[2]) == 8 for v in out1.values())  # fixed-width
-    assert out1[1][0] == 11
-    # histogram is L1-normalized for non-empty payloads
-    assert abs(sum(out1[1][2]) - 1.0) < 1e-6
-    assert sum(out1[3][2]) == 0.0  # empty payload → zero vector, no NaN
 
 
 def test_frame_plan_clamps(spark):

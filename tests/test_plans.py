@@ -95,14 +95,6 @@ def all_plans(spark):
     return {name: plan_of(spec.fn(spark, SF)) for name, spec in REGISTRY.items()}
 
 
-def _assert_allow_list_live(all_plans, allowed, nodes):
-    """Every allow-listed query is registered, and its plan still has
-    one of the nodes it is allowed for."""
-    assert sorted(allowed - set(all_plans)) == []
-    stale = [n for n in sorted(allowed) if not any(x in all_plans[n] for x in nodes)]
-    assert stale == []
-
-
 def test_no_cartesian_products_anywhere(all_plans):
     """Every registered query except the documented brute-force ANN
     baselines must be cartesian-free. The other allowed queries cross
@@ -121,7 +113,9 @@ def test_no_cartesian_products_anywhere(all_plans):
         "copurchase_triangles_node_est",  # 1-row est-total broadcast (same shape)
         "order_dow_uniformity",  # 1-row order-total broadcast (same shape)
     }
-    _assert_allow_list_live(all_plans, allowed, nodes)
+    assert sorted(allowed - set(all_plans)) == []
+    stale = [n for n in sorted(allowed) if not any(x in all_plans[n] for x in nodes)]
+    assert stale == []
     offenders = []
     for name, plan in all_plans.items():
         if name in allowed:
@@ -132,23 +126,14 @@ def test_no_cartesian_products_anywhere(all_plans):
 
 
 def test_no_python_row_udfs_in_relational_surface(all_plans):
-    """Zero-Python-UDF policy (§2.10): BatchEvalPython must not appear in
-    any plan; ArrowEvalPython/MapInPandas only in the multimodal decode,
-    whose allowed entries must still be registered and still carry one
-    of those nodes.
+    """Zero-Python-UDF policy (§2.10): no registered plan has a
+    BatchEvalPython, ArrowEvalPython or MapInPandas node.
     (semantic_dedup's BLAS assignment path is MapInPandas but engages
     only past BLAS_CELL_THRESHOLD cells — at this SF the policy-sized
     codebook stays on the literal projection, which is what this sweep
     asserts.)"""
-    arrow_nodes = ("ArrowEvalPython", "MapInPandas")
-    allowed_arrow = {"media_decode_features", "media_decode_check"}
-    _assert_allow_list_live(all_plans, allowed_arrow, arrow_nodes)
-    offenders = []
-    for name, plan in all_plans.items():
-        if "BatchEvalPython" in plan:
-            offenders.append((name, "row-udf"))
-        if any(x in plan for x in arrow_nodes) and name not in allowed_arrow:
-            offenders.append((name, "arrow-udf"))
+    nodes = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas")
+    offenders = [name for name, plan in all_plans.items() if any(x in plan for x in nodes)]
     assert offenders == []
 
 
@@ -159,10 +144,7 @@ def test_ivf_partitioned_probe_prunes_to_probed_cells(spark):
     directories are excluded at file-listing time, never opened."""
     import re
 
-    from bigdatapipelinepysparksqlserver_spark.operators.similarity import (
-        _collect_codebook,
-        _ivf_py_scores,
-    )
+    from bigdatapipelinepysparksqlserver_spark.operators.similarity import _ivf_py_scores
     from bigdatapipelinepysparksqlserver_spark.queries.similarity_queries import (
         IVF_ARTIFACT_N_PROBE,
         N_QUERY_VECS,

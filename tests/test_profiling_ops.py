@@ -493,58 +493,3 @@ def test_ks_two_sample_known_values(spark):
     # the same statistic (values span several buckets at width=10)
     assert run(a, b, width=10) == want
     assert run(a, b, width=10**12) == want
-
-
-def test_mann_whitney_u_known_values(spark):
-    """MWU against a scipy-free reference: no-ties case matches the
-    classic rank-sum formula by hand; midrank tie handling matches an
-    explicit midrank computation; identical samples give z = 0; and
-    bucket decomposition is width-invariant."""
-    from bigdatapipelinepysparksqlserver_spark.operators.stats import (
-        mann_whitney_u,
-    )
-
-    def ref(a, b):
-        import math
-
-        xs = sorted(a + b)
-        # midranks
-        ranks = {}
-        i = 0
-        while i < len(xs):
-            j = i
-            while j < len(xs) and xs[j] == xs[i]:
-                j += 1
-            for _ in range(i, j):
-                ranks.setdefault(xs[i], (i + 1 + j) / 2)
-            i = j
-        ra = sum(ranks[v] for v in a)
-        na, nb = len(a), len(b)
-        u = na * nb + na * (na + 1) / 2 - ra
-        n = na + nb
-        groups = {v: xs.count(v) for v in set(xs)}
-        ties = sum(t**3 - t for t in groups.values())
-        var = na * nb / 12 * ((n + 1) - ties / (n * (n - 1)))
-        z = round((u - na * nb / 2) / math.sqrt(var), 6) if var > 0 else None
-        return u, z
-
-    def run(a, b, width=25_000_000):
-        rows = [(v, 1) for v in a] + [(v, 0) for v in b]
-        df = spark.createDataFrame(rows, "v long, is_ref int")
-        r = mann_whitney_u(df, bucket_width=width).collect()[0]
-        assert (r.n_ref, r.n_cur) == (len(a), len(b))
-        return r.u_ref, r.z
-
-    a = [1, 4, 6, 40_000_000, 90_000_000]
-    b = [2, 3, 5, 50_000_000]
-    assert run(a, b) == ref(a, b)
-
-    at = [1, 2, 2, 3, 60_000_000]
-    bt = [2, 3, 3, 60_000_000, 60_000_001]
-    assert run(at, bt) == ref(at, bt)
-    assert run(at, bt, width=7) == ref(at, bt)
-    assert run(at, bt, width=10**12) == ref(at, bt)
-
-    same = [5, 6, 7, 30_000_000]
-    u, z = run(same, same)
-    assert u == len(same) ** 2 / 2 and z == 0.0

@@ -97,8 +97,7 @@ def test_postings_store_compaction_probe_equivalence(spark, tmp_path):
 def test_postings_compaction_bounds_files_across_many_appends(spark, tmp_path):
     """The maintenance loop the operator exists for: 6 appends + compact
     keeps the postings file count constant instead of linear in batch
-    count (the store analogue of lake compact_partitions' bounded-file
-    pytest)."""
+    count."""
     from bigdatapipelinepysparksqlserver_spark.operators.retrieval import (
         bm25_from_store,
         postings_store_append_batch,
@@ -614,7 +613,6 @@ def test_edge_store_compaction_probe_equals_batched(spark, tmp_path):
     from bigdatapipelinepysparksqlserver_spark.operators.graph import (
         copurchase_edges,
         edge_store_append_batch,
-        read_edge_store_batched,
     )
     from bigdatapipelinepysparksqlserver_spark.operators.stores import (
         compact_store_batches,

@@ -619,8 +619,6 @@ def test_bpe_oracle_parity_on_vocabulary_exhaustion(spark, tmp_path):
     import duckdb
     import pandas as pd
 
-    from bigdatapipelinepysparksqlserver_spark.queries import training_queries as tq
-
     # 'ab' exhausts after one merge; doc_ids on both sides of the md5
     # sample gate so the sampled training is non-empty too
     pdf = pd.DataFrame(

@@ -2,10 +2,11 @@
 
 Trains the seeded KMeans coarse quantizer ONCE, offline, and versions
 the resulting codebook as a JSON artifact inside the package
-(`bigdatapipelinepysparksqlserver_spark/artifacts/`). The `ann_ivf_topk`
-query then loads the artifact and delegates to `ivf_codebook_topk`, so
-the query path contains NO training — assignment is a pure scan-side
-projection over literal centroids, replayable in the DuckDB oracle.
+(`bigdatapipelinepysparksqlserver_spark/artifacts/`). The queries
+`ann_ivf_partitioned_topk`, `ann_ivfpq_topk` and
+`semantic_dedup_incremental` load the artifact, so their query paths
+contain NO training — assignment is a pure scan-side projection over
+literal centroids, replayable in the DuckDB oracle.
 
 Centroid components are rounded to 6 dp by the trainer
 (operators/similarity.py `train_ivf_codebook`), so the JSON text, the
