@@ -12,8 +12,8 @@ Layout
                    text analysis)
 - ``plans``      — driver-level plan steps: run-ledger/lineage state machine,
                    incremental partition rebuild (CDC), reconciliation comparator
-- ``streaming``  — Structured Streaming CDC equivalents (watermarked aggs,
-                   bounded-state dedup, foreachBatch partition overwrite)
+- ``streaming``  — Structured Streaming sinks and transforms that no
+                   pipeline runs yet (only tests drive them)
 - ``pipelines``  — end-to-end compositions of the reference's two pipelines,
                    incl. the atomic mart publish protocol
 - ``workload``   — seeded synthetic OLTP workload generator (CDC round-trip tests)

@@ -21,16 +21,16 @@ blocks that never materialized are a no-op, so over-releasing is always
 safe; the one rule is not to release BETWEEN building a plan and
 collecting it.
 
-The registry is THREAD-LOCAL: a streaming micro-batch sink (which runs
-on the stream-execution thread and releases its own registrations at
-the end of each batch) cannot have its not-yet-materialized caches
-evicted by a concurrent ``release_caches()`` on the main thread, and
-vice versa — each thread owns exactly the caches it registered, which
-is what makes the "materialize, then release" rule locally enforceable.
+The registry is THREAD-LOCAL: two threads that share one session (a
+harness running queries on worker threads, a sink that releases its
+own registrations after each batch) cannot evict each other's
+not-yet-materialized caches with a concurrent ``release_caches()`` —
+each thread owns exactly the caches it registered, which is what makes
+the "materialize, then release" rule locally enforceable.
 
 A full-sweep log may still show a handful of ``WARN BlockManager:
 Block rdd_N_P already exists on this machine; not re-adding it`` lines
-(observed on the dedup_ngram_jaccard and embedding near-dup paths,
+(observed on the exact n-gram and embedding near-dup paths,
 ≤ ~5 per 160-query sweep). Cause, pinned (r8, VERDICT r7 #8): when a
 persisted subtree feeds TWO downstream stages that the scheduler
 launches concurrently, both stages' first tasks can miss the

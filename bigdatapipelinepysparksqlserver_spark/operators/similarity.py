@@ -606,32 +606,6 @@ def ivf_codebook_topk(
     return _exact_rerank(cands, k)
 
 
-def write_ivf_partitioned(
-    vectors: DataFrame,
-    codebook: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "cell",
-    cent_col: str = "centroid",
-) -> None:
-    """Cell-partitioned vector store: assign each vector to its IVF cell
-    (argmax-cosine against the codebook, a pure scan-side projection)
-    and write ``partitionBy(cell)`` — the DISK layout of an IVF index.
-
-    At 100 TB this is what makes ANN probes cheap: a search that probes
-    ``n_probe`` of ``n_cells`` cells reads only those PARTITION
-    DIRECTORIES (Hive-style partition pruning — the scan never lists,
-    opens, or decodes the other cells' files). The codebook is the same
-    versioned artifact the query side uses, so assignment here and probe
-    selection there agree by construction.
-    """
-    cells = _collect_codebook(codebook, cell_col, cent_col, "write_ivf_partitioned")
-    ivf_assign(vectors, cells, id_col=id_col, vec_col=vec_col).write.mode(
-        "overwrite"
-    ).partitionBy("cell").parquet(path)
-
-
 def ivf_assign(
     vectors: DataFrame,
     cells,
@@ -659,24 +633,22 @@ def ivf_store_append_batch(
     vec_col: str = "embedding",
 ) -> None:
     """Append one ingest batch to a GROWING cell-partitioned vector
-    store: assign the batch's vectors (same codebook projection as
-    :func:`write_ivf_partitioned`) and overwrite ``{path}/batch=N``
-    partitioned by cell.
+    store: assign the batch's vectors (:func:`ivf_assign`) and overwrite
+    ``{path}/batch=N`` partitioned by cell.
 
     Layout ``batch=N/cell=C/``: partition discovery reads both levels,
     so a probe's ``cell IN (…)`` predicate still prunes at the
     file-listing level inside every batch directory — the store keeps
     its index property as it grows, with no rewrite of prior batches.
     Overwriting the batch's OWN directory (never appending files into
-    shared cell dirs) makes a replay of batch N idempotent — the
-    exactly-once pattern the streaming corpus-dedup store uses.
+    shared cell dirs) makes a replay of batch N idempotent.
 
     ``cells`` is the COLLECTED versioned codebook (sorted
     (cell, centroid) tuples — model-sized by contract); it must be the
     same artifact the probes use: mixing codebooks across batches would
     break the assignment↔probe agreement that makes pruning lossless.
-    Re-training (cell drift) is a full :func:`write_ivf_partitioned`
-    rebuild under a new store version.
+    Re-training (cell drift) is a full rebuild under a new store
+    version.
     """
     if not cells:
         raise ValueError("ivf_store_append_batch: empty codebook")
@@ -697,7 +669,7 @@ def ivf_partitioned_topk(
     n_probe: int = 4,
     k: int = 10,
 ) -> DataFrame:
-    """IVF top-k over a :func:`write_ivf_partitioned` store, probing via
+    """IVF top-k over a :func:`ivf_store_append_batch` store, probing via
     PARTITION PRUNING: only the probed cells' directories are scanned.
 
     The query set is collected driver-side (it is the broadcast-small
@@ -1030,70 +1002,6 @@ def quantized_topk(
     return brute_force_topk(qv, qq, id_col=id_col, vec_col="qvec", k=k)
 
 
-def semantic_dedup_incremental(
-    spark,
-    store_path: str,
-    batch: DataFrame,
-    codebook: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "cell",
-    cent_col: str = "centroid",
-    threshold: float = 0.4,
-) -> DataFrame:
-    """Incremental semantic dedup: which INCOMING embeddings duplicate
-    the stored corpus — (batch_id, corpus_id, cosine) pairs with
-    cosine ≥ threshold, batch assigned to IVF cells and compared ONLY
-    against the matching cell partitions of a
-    :func:`write_ivf_partitioned` store.
-
-    The embedding twin of the MinHash ``dedup_incremental``: daily
-    ingest probes a persistent index instead of re-enumerating
-    corpus×corpus pairs. Scale: the batch's DISTINCT probe cells — at
-    most the codebook size, a control-plane collect — become a literal
-    ``cell IN (…)`` predicate, so the store scan prunes at the
-    FILE-LISTING level (Hive partition pruning, same contract as
-    ``ivf_partitioned_topk``); probe work is Σ_probed batch_c ×
-    store_c, linear in the batch under the constant-occupancy sizing
-    policy, and batch-batch pairs are never examined (new-new dups are
-    the NEXT rebuild's in-cell problem — same division of labor as the
-    MinHash form).
-    """
-    cells = _collect_codebook(codebook, cell_col, cent_col, "semantic_dedup_incremental")
-    # norms hoisted per row (r11, bit-identical — see brute_force_topk)
-    assigned = ivf_assign(batch, cells, id_col=id_col, vec_col=vec_col).select(
-        F.col(id_col).alias("batch_id"),
-        F.col(vec_col).alias("batch_vec"),
-        norm(F.col(vec_col)).alias("__bn"),
-        "cell",
-    )
-    probe_cells = sorted(
-        r["cell"] for r in assigned.select("cell").distinct().collect()
-    )
-    store = spark.read.parquet(store_path).where(F.col("cell").isin(probe_cells))
-    scored = (
-        store.select(
-            F.col(id_col).alias("corpus_id"),
-            F.col(vec_col).alias("corpus_vec"),
-            norm(F.col(vec_col)).alias("__cn"),
-            "cell",
-        )
-        .join(assigned, "cell")
-        .where(F.col("batch_id") != F.col("corpus_id"))
-        .select(
-            "batch_id",
-            "corpus_id",
-            (
-                dot(F.col("batch_vec"), F.col("corpus_vec"))
-                / (F.col("__bn") * F.col("__cn"))
-            ).alias("cos_raw"),
-        )
-    )
-    return scored.where(F.col("cos_raw") >= threshold).select(
-        "batch_id", "corpus_id", F.round("cos_raw", 6).alias("cosine")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Product quantization (Jégou et al. 2011): split the vector into M
 # subspaces, quantize each against its own small codebook — M log2(C)
@@ -1271,40 +1179,6 @@ def ivfpq_topk(
         .dropDuplicates(["query_id", "neighbor_id"])
     )
     return _exact_rerank(cands, k)
-
-
-def ivfpq_store_append_batch(
-    vectors: DataFrame,
-    codebook: DataFrame,
-    sub_codebooks,
-    path: str,
-    batch_id: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "cell",
-    cent_col: str = "centroid",
-) -> None:
-    """Append one ingest batch to a growing IVFPQ store: the batch is
-    encoded and written by :func:`write_ivfpq_store` itself (same
-    literal codebooks — mixing codebooks across batches would break
-    assignment↔probe agreement) into ``{path}/batch=N``, partitioned by
-    cell. Same layout/exactly-once contract as
-    :func:`ivf_store_append_batch` (two-level partition discovery keeps
-    ``cell IN (…)`` pruning inside every batch level; overwriting the
-    batch's own dir makes replays idempotent), and
-    :func:`~..operators.stores.compact_store_batches` flattens it — the
-    payload-generic cell re-home covers PQ-coded rows unchanged.
-    """
-    write_ivfpq_store(
-        vectors,
-        codebook,
-        sub_codebooks,
-        f"{path}/batch={batch_id}",
-        id_col=id_col,
-        vec_col=vec_col,
-        cell_col=cell_col,
-        cent_col=cent_col,
-    )
 
 
 def embedding_dq_report(df, vec_col: str = "embedding", dim: int = 64):

@@ -1,9 +1,9 @@
 """Batched-store compaction: merging the append-only stores' batch
 levels back into one file set.
 
-The two growing stores (`postings_store_append_batch` in
-operators/retrieval.py and `ivf_store_append_batch` in
-operators/similarity.py) trade write amplification for append cheapness:
+The growing stores (`ivf_store_append_batch` in operators/similarity.py
+and `edge_store_append_batch` in operators/graph.py) trade write
+amplification for append cheapness:
 every daily batch adds a `batch=N` partition level, so after a year the
 probe side lists 365 × the directories and opens 365 × the files for the
 same logical rows — partition pruning still bounds WHAT is read, but the
@@ -218,166 +218,6 @@ def _compact_edges(spark, path: str, tmp: str) -> None:
     )
 
 
-def postings_store_delete_docs(
-    spark,
-    path: str,
-    doc_ids,
-    fs: SnapshotFS | None = None,
-) -> dict:
-    """Delete documents from a FLAT postings store — the
-    right-to-be-forgotten maintenance op completing the store
-    lifecycle (build → append → compact → DELETE). All four relations
-    recompose exactly because every statistic is an exact-integer sum
-    over per-doc terms:
-
-    - postings/doclens: anti-join out the deleted ids;
-    - stats: (n_docs, total_dl) minus the DELETED docs' exact sums;
-    - termstats: df per (bucket, term) minus the deleted docs' distinct
-      term appearances (computed from the deleted postings rows
-      themselves — no re-tokenization of anything); terms reaching
-      df = 0 drop out entirely.
-
-    Guarantee (pytest-asserted): probe(after delete) ≡ probe(store
-    built from the surviving corpus alone). Batched stores must be
-    compacted first — per-batch stats rows make in-place decrements
-    ambiguous, and compaction is the documented maintenance step
-    anyway. ``doc_ids`` is a DataFrame with an ``id`` column (deletion
-    sets are corpus-scaled at 100 TB — never a driver list). Same
-    staging + directory-swap discipline as compaction.
-    """
-    fs = fs or LocalFS()
-    if not fs.is_dir(f"{path}/postings"):
-        raise ValueError(f"postings_store_delete_docs: no store at {path}")
-    if _is_batched(fs, f"{path}/postings"):
-        raise ValueError(
-            "postings_store_delete_docs: batched store — run "
-            "compact_store_batches first"
-        )
-    ids = doc_ids.select(F.col(doc_ids.columns[0]).alias("id")).distinct()
-    postings = spark.read.parquet(f"{path}/postings")
-    doclens = spark.read.parquet(f"{path}/doclens")
-    stats = spark.read.parquet(f"{path}/stats")
-    termstats = spark.read.parquet(f"{path}/termstats")
-
-    gone_post = postings.join(ids, "id", "left_semi")
-    gone_lens = doclens.join(ids, "id", "left_semi")
-    dec_stats = gone_lens.agg(
-        F.count(F.lit(1)).cast("long").alias("dn"),
-        F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("ddl"),
-    ).first()
-    dec_df = (
-        gone_post.groupBy("bucket", "term")
-        .agg(F.count(F.lit(1)).cast("long").alias("ddf"))
-    )
-
-    tmp = f"{path}.__delete__"
-    if fs.is_dir(tmp):
-        fs.rmtree(tmp)
-    (
-        postings.join(ids, "id", "left_anti")
-        .repartition(F.col("bucket"))
-        .sortWithinPartitions("bucket", "term")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{tmp}/postings")
-    )
-    doclens.join(ids, "id", "left_anti").write.mode("overwrite").parquet(
-        f"{tmp}/doclens"
-    )
-    (
-        stats.select(
-            (F.col("n_docs") - F.lit(int(dec_stats["dn"])))
-            .cast("long")
-            .alias("n_docs"),
-            (F.col("total_dl") - F.lit(int(dec_stats["ddl"])))
-            .cast("long")
-            .alias("total_dl"),
-        )
-        .write.mode("overwrite")
-        .parquet(f"{tmp}/stats")
-    )
-    (
-        termstats.join(dec_df, ["bucket", "term"], "left")
-        .select(
-            "term",
-            (F.col("df") - F.coalesce(F.col("ddf"), F.lit(0)))
-            .cast("long")
-            .alias("df"),
-            "bucket",
-        )
-        .where(F.col("df") > 0)
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{tmp}/termstats")
-    )
-    old = f"{path}.__old__"
-    if fs.is_dir(old):
-        fs.rmtree(old)
-    fs.rename_dir(path, old)
-    fs.rename_dir(tmp, path)
-    fs.rmtree(old)
-    return {"deleted_docs": int(dec_stats["dn"])}
-
-
-def vector_store_delete_ids(
-    spark,
-    path: str,
-    vec_ids,
-    id_col: str = "vec_id",
-    fs: SnapshotFS | None = None,
-) -> dict:
-    """Delete vectors from a FLAT cell-partitioned store (IVF or IVFPQ
-    — payload-generic, like compaction): only the cells that actually
-    CONTAIN deleted ids are rewritten (dynamic partition overwrite),
-    so deletion cost is ∝ affected cells, not store size — at 32 k
-    cells a thousand-id deletion touching 800 cells rewrites 2.5 % of
-    the store. Batched stores must be compacted first. ``vec_ids`` is
-    a DataFrame (first column = ids).
-    """
-    fs = fs or LocalFS()
-    if not fs.is_dir(path):
-        raise ValueError(f"vector_store_delete_ids: no store at {path}")
-    if _is_batched(fs, path):
-        raise ValueError(
-            "vector_store_delete_ids: batched store — run "
-            "compact_store_batches first"
-        )
-    ids = vec_ids.select(F.col(vec_ids.columns[0]).alias("__del")).distinct()
-    store = spark.read.parquet(path)
-    affected = [
-        int(r["cell"])
-        for r in store.join(ids, store[id_col] == ids["__del"], "left_semi")
-        .select("cell")
-        .distinct()
-        .collect()
-    ]
-    if not affected:
-        return {"affected_cells": 0}
-    survivors = store.where(F.col("cell").isin(affected)).join(
-        ids, store[id_col] == ids["__del"], "left_anti"
-    )
-    # dynamic overwrite only rewrites partitions PRESENT in the output:
-    # a cell whose vectors are ALL deleted would keep its old files —
-    # remove fully-emptied cells' directories explicitly
-    alive = {int(r["cell"]) for r in survivors.select("cell").distinct().collect()}
-    emptied = [c for c in affected if c not in alive]
-    # rewrite ONLY the affected cell directories (partition-pruned read,
-    # dynamic overwrite leaves every other cell's files untouched)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        if alive:
-            survivors.write.mode("overwrite").partitionBy("cell").parquet(path)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    for c in emptied:
-        fs.rmtree(f"{path}/cell={c}")
-    return {"affected_cells": len(affected), "emptied_cells": len(emptied)}
-
-
 # ---------------------------------------------------------------------------
 # Live-reader-safe maintenance (VERDICT r7 #6): the versioned-pointer
 # composition the compact_store_batches docstring points at. Store
@@ -388,8 +228,7 @@ def vector_store_delete_ids(
 # half-swapped layout: they resolve the pointer, see either v{N}
 # (whole, untouched) or v{N+1} (whole, published), never a mix — the
 # reader-hammer pytest (tests/test_store_compaction.py) proves it over
-# LocalFS AND the non-atomic-rename ObjectStoreSimFS, the same
-# asymmetry the mart test covers.
+# LocalFS AND the non-atomic-rename ObjectStoreSimFS.
 #
 # Appends stay in-place on the live snapshot (copying a 100 TB store
 # per daily batch would defeat the append design): they are ADDITIVE —

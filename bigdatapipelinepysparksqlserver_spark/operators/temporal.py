@@ -1,5 +1,5 @@
-"""Temporal join operators Spark lacks as built-ins: as-of join and
-banded range join.
+"""Temporal operators Spark lacks as built-ins: as-of join, banded range
+join, and session_window sessionization that also runs on a stream.
 
 Both are implemented as compositions of existing DataFrame operators (the
 brief's option (a)) — no Pandas UDFs, no mapPartitions — so they stay
@@ -246,4 +246,45 @@ def peak_concurrency(
     return with_carry.groupBy("day").agg(
         F.sum("n_starts").alias("active_intervals"),
         F.max(F.col("carry") + F.col("max_prefix")).alias("peak_concurrent"),
+    )
+
+
+def streaming_sessionize(
+    events: DataFrame,
+    ts_col: str = "ts",
+    user_col: str = "user_id",
+    gap: str = "30 minutes",
+    watermark: str = "10 minutes",
+) -> DataFrame:
+    """Gap-based sessionization via native ``session_window`` — the
+    streaming-capable twin of the batch lag/running-sum sessionize
+    (queries.relational_queries.sessionize).
+
+    Semantics note: ``session_window`` closes a session when the next
+    event is ≥ gap after the previous (window is [start, last+gap)), so
+    ``session_end`` here is last_event + gap, and an event EXACTLY at
+    the gap boundary starts a new session (the batch query's ``>``
+    keeps it; a difference only for timestamp collisions at exact gap
+    multiples).
+
+    Scale: one shuffle on (user, session-window merge); state per OPEN
+    session only, bounded by the watermark horizon — this is the form
+    that runs on an unbounded stream, where the lag/running-sum window
+    (whole-history sort per user) cannot.
+    """
+    src = events
+    if events.isStreaming:
+        src = events.withWatermark(ts_col, watermark)
+    return (
+        src.groupBy(
+            F.session_window(F.col(ts_col), gap).alias("sw"),
+            F.col(user_col),
+        )
+        .agg(F.count(F.lit(1)).alias("events_in_session"))
+        .select(
+            F.col(user_col),
+            F.col("sw.start").alias("session_start"),
+            F.col("sw.end").alias("session_end"),
+            "events_in_session",
+        )
     )

@@ -292,41 +292,6 @@ def pack_chunks(
     )
 
 
-def classifier_scores(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Fasttext-style hashed linear quality classifier, as pure expressions.
-
-    Bag-of-words → 4096 hashed buckets (first 3 hex chars of md5(token))
-    → fixed per-bucket weight ``(bucket % 61)/30 - 1`` (a frozen stand-in
-    model: deterministic, engine-agnostic) → doc score
-    ``sigmoid(4 * mean(weight))``. The real-model swap point is the weight
-    expression — a broadcast join against a learned weight table keeps the
-    exact same plan shape.
-
-    Scale: explode + groupBy(doc) aggregates the token stream; partial
-    aggregation collapses each document's tokens map-side (explode keeps a
-    doc's tokens in one partition), so the exchange carries one partial
-    sum per document, not per token.
-    """
-    toks = df.select(
-        F.col(id_col),
-        F.explode(
-            F.split(F.lower(F.trim(F.col(text_col))), "[^a-z0-9]+")
-        ).alias("__tok"),
-    ).where(F.col("__tok") != "")
-    bucket = F.conv(F.substring(F.md5(F.col("__tok")), 1, 3), 16, 10).cast("int")
-    weight = (bucket % 61).cast("double") / 30.0 - 1.0
-    return (
-        toks.select(F.col(id_col), weight.alias("__w"))
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.round(
-                F.lit(1.0) / (F.lit(1.0) + F.exp(F.lit(-4.0) * F.avg("__w"))), 6
-            ).alias("quality_prob"),
-        )
-    )
-
-
 def source_ngram_overlap(
     df: DataFrame,
     n: int = 8,

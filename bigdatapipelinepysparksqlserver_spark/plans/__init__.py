@@ -9,7 +9,3 @@ declarative DataFrame jobs.
 - ``incremental`` — changed-partition detection + partition rebuild (C2, C3, M6)
 - ``reconcile``   — two-sided COUNT/SUM comparator (C6)
 """
-
-from .incremental import IncrementalLoader  # noqa: F401
-from .ledger import RunLedger  # noqa: F401
-from .reconcile import reconcile  # noqa: F401

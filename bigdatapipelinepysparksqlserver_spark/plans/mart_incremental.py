@@ -28,7 +28,7 @@ COUNT(id)/SUM(paid) over every row of those partitions, observed on the
 same read-back: the scheduled cycle (``pipelines.sales_pipeline_cycle``
 with partials) calls it in pipeline 1's validation step and hands the
 totals to ``plans.reconcile``, so validating needs no lake scan of its
-own; the other caller, the streaming sink, ignores them. Refresh cost
+own; a caller that does not validate ignores them. Refresh cost
 is ∝ change set; the full-scan path remains available as the
 bootstrap / repair / validation twin (``pipelines.mart_*_df``).
 """

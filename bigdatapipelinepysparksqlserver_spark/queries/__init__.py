@@ -6,7 +6,7 @@ the entire operator surface.
 Import side effect: importing this package registers all queries.
 """
 
-from .registry import REGISTRY, QuerySpec, query  # noqa: F401
+from .registry import REGISTRY
 from . import relational_queries  # noqa: F401,E402
 from . import tpch_extra  # noqa: F401,E402
 from . import temporal_queries  # noqa: F401,E402

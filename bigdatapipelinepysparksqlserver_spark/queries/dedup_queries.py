@@ -20,7 +20,6 @@ from ..operators.dedup import (
     exact_dedup_groups,
     minhash_affine_constants,
     minhash_near_duplicates,
-    ngram_shingles,
 )
 from ..caching import scoped_persist
 from ..sources.catalog import Catalog
@@ -57,82 +56,12 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # baseline the MinHash variant approximates; threshold keeps output small
 # --------------------------------------------------------------------------
 
-NGRAM_JACCARD_ORACLE = """
-WITH tok AS (
-  SELECT doc_id, string_split(trim(text), ' ') AS words FROM documents
-),
-sh AS (
-  SELECT DISTINCT doc_id,
-         words[i] || ' ' || words[i+1] || ' ' || words[i+2] AS shingle
-  FROM tok, UNNEST(range(1, greatest(len(words) - 1, 1))) AS t(i)
-),
-card AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-pair AS (
-  SELECT a.doc_id AS id1, b.doc_id AS id2, COUNT(*) AS inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT p.id1, p.id2,
-       ROUND(CAST(p.inter AS DOUBLE) / (c1.n + c2.n - p.inter), 6) AS jaccard
-FROM pair p
-JOIN card c1 ON p.id1 = c1.doc_id
-JOIN card c2 ON p.id2 = c2.doc_id
-WHERE CAST(p.inter AS DOUBLE) / (c1.n + c2.n - p.inter) >= 0.2
-"""
-
 
 # exact-baseline pair budget: well above every local SF's estimate (sf0.1
 # measures ~5.6 M shingle-bucket pairs) and well below anything a single
 # rehearsal machine should expand — at sf10 the estimate crosses it and
 # the baseline fails fast with the scale path's name (pytest-asserted),
 # which is the "contractually bounded" ledger entry for the quadratic baseline
-EXACT_PAIR_BUDGET = 50_000_000
-
-
-@query("dedup_ngram_jaccard", oracle=NGRAM_JACCARD_ORACLE)
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact word-3-gram Jaccard similarity pairs above a threshold.
-
-    Scale: the PAIR COUNT is inherently quadratic in docs sharing a
-    shingle — this is the correctness baseline; ``dedup_minhash`` is the
-    near-linear scale path. The shuffle plan is not quadratic though:
-    intersection sizes come from bucket-grouped pair enumeration (one
-    shuffle on the shingle, in-bucket expansion with the shared
-    mega-bucket guard) instead of a shingle-equality self-join, which
-    would scan and shuffle the shingle relation twice. A pre-flight
-    pair-budget guard (``pair_budget_guard``) makes the quadratic cost
-    contractual: past ``EXACT_PAIR_BUDGET`` estimated pairs the query
-    raises with guidance instead of running.
-    """
-    docs = Catalog(spark, sf_dir).parallel_table("documents", "doc_id")
-    # persist: the shingle relation now has three consumers (the eager
-    # guard aggregate, per-doc cardinalities, and the enumeration) — the
-    # guard's action materializes the cache the other two reuse
-    sh = scoped_persist(
-        ngram_shingles(docs, text_col="text", id_col="doc_id", n=3)
-        .select("doc_id", "shingle")
-        .distinct()
-    )
-    card = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    from ..operators.dedup import grouped_pair_enumeration, pair_budget_guard
-
-    pair_budget_guard(
-        sh, ["shingle"], EXACT_PAIR_BUDGET,
-        "dedup_minhash (bucketed MinHash-LSH, measured 2.8x wall at 100x data)",
-    )
-
-    inter = (
-        grouped_pair_enumeration(sh, ["shingle"], "doc_id")
-        .groupBy("id1", "id2")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    jac = F.col("inter").cast("double") / (F.col("n1") + F.col("n2") - F.col("inter"))
-    return (
-        inter.join(card.select(F.col("doc_id").alias("id1"), F.col("n").alias("n1")), "id1")
-        .join(card.select(F.col("doc_id").alias("id2"), F.col("n").alias("n2")), "id2")
-        .where(jac >= 0.2)
-        .select("id1", "id2", F.round(jac, 6).alias("jaccard"))
-    )
 
 
 # --------------------------------------------------------------------------
@@ -431,270 +360,9 @@ def dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 # run (the canonical copy should be the cleanest, not the lowest id)
 # --------------------------------------------------------------------------
 
-_QUALITY_SQL = r"""ROUND(
-      0.4 * (CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
-             / CAST(length(text) AS DOUBLE))
-    + 0.3 * (CAST(len(regexp_extract_all(lower(text),
-                 '\b(the|a|an|and|or|of|to|in|is|it)\b')) AS DOUBLE)
-             / CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-                         ELSE len(string_split_regex(trim(text), '\s+')) END
-                    AS DOUBLE))
-    + 0.3 * least(CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-                            ELSE len(string_split_regex(trim(text), '\s+')) END
-                       AS DOUBLE) / 64.0, 1.0)
-    , 6)"""
-
-DEDUP_KEEP_BEST_ORACLE = (
-    f"""WITH RECURSIVE qs AS (
-  SELECT doc_id, {_QUALITY_SQL} AS quality_score FROM documents
-),
-g AS (SELECT doc_id, md5(text) AS gh FROM documents),
-reps AS (
-  SELECT md5(text) AS gh, MIN(doc_id) AS doc_id, MIN(text) AS text
-  FROM documents GROUP BY md5(text)
-),"""
-    + _minhash_cte(_MINHASH_NUM, _MINHASH_BANDS, source="reps")
-    + """,
-edges AS (
-  SELECT id1 AS a, id2 AS b FROM verified
-  UNION ALL
-  SELECT id2, id1 FROM verified
-),
-cnodes AS (SELECT DISTINCT a AS id FROM edges),
-walk(id, lbl) AS (
-  SELECT id, id FROM cnodes
-  UNION
-  SELECT e.b, w.lbl FROM walk w JOIN edges e ON w.id = e.a WHERE w.lbl < e.b
-),
-comp AS (SELECT id, MIN(lbl) AS component FROM walk GROUP BY id),
-rc AS (
-  SELECT r.gh, COALESCE(c.component, r.doc_id) AS cluster
-  FROM reps r LEFT JOIN comp c ON c.id = r.doc_id
-),
-member AS (
-  SELECT g.doc_id, rc.cluster FROM g JOIN rc USING (gh)
-),
-ranked AS (
-  SELECT m.doc_id, m.cluster, q.quality_score,
-         ROW_NUMBER() OVER (PARTITION BY m.cluster
-                            ORDER BY q.quality_score DESC, m.doc_id) AS rn,
-         COUNT(*) OVER (PARTITION BY m.cluster) AS n_members
-  FROM member m JOIN qs q USING (doc_id)
-)
-SELECT doc_id, cluster, CAST(n_members AS BIGINT) AS n_members,
-       quality_score
-FROM ranked WHERE rn = 1"""
-)
-
-
-@query("dedup_keep_best", oracle=DEDUP_KEEP_BEST_ORACLE)
-def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-aware dedup retention: the full duplicate clusters
-    (exact md5 groups ∪ MinHash near-dup components over their reps —
-    the same machinery `dedup_apply` keeps min-ids from) keep their
-    HIGHEST-`quality_score` member instead (tie → lowest doc_id) — the
-    policy production curation actually wants: when a document exists
-    in several near-identical copies, the canonical one should be the
-    cleanest, not an accident of id order. Returns one row per
-    surviving doc: (doc_id, cluster, n_members, quality_score).
-
-    Cross-engine determinism: the quality score is the graded
-    `text_quality_score` formula (6-dp pinned), so ORDER BY on it ties
-    out bit-for-bit; cluster labels are min-label components over the
-    portable MinHash pair list.
-
-    Scale: quality is a scan-side projection; the cluster machinery is
-    dedup_apply's (fixed-width-key shuffles, distinct-text LSH); the
-    retention pick is ONE cluster-partitioned window — row_number ≤ 1
-    lowers to WindowGroupLimit (per-partition top-1 below the
-    exchange), with the member count riding the same shuffle.
-    """
-    from pyspark.sql import Window
-
-    from ..operators.dedup import connected_components_star
-    from ..operators.text import quality_scores
-
-    docs = Catalog(spark, sf_dir).parallel_table("documents", "doc_id")
-    q = quality_scores(docs, text_col="text", id_col="doc_id").select(
-        "doc_id", "quality_score"
-    )
-    gh = F.md5(F.col("text").cast("binary"))
-    groups = docs.groupBy(gh.alias("__gh")).agg(
-        F.min("doc_id").alias("doc_id"), F.min("text").alias("text")
-    )
-    reps = scoped_persist(groups.select("__gh", "doc_id", "text"))
-    pairs = minhash_near_duplicates(
-        reps.select("doc_id", "text"), text_col="text", id_col="doc_id",
-        threshold=_MINHASH_THRESH, num_hashes=_MINHASH_NUM,
-        bands=_MINHASH_BANDS,
-    )
-    comp = connected_components_star(pairs)
-    rc = reps.select("__gh", "doc_id").join(comp, "doc_id", "left").select(
-        "__gh", F.coalesce("component", "doc_id").alias("cluster")
-    )
-    member = (
-        docs.select("doc_id", gh.alias("__gh"))
-        .join(rc, "__gh")
-        .select("doc_id", "cluster")
-    )
-    w = Window.partitionBy("cluster").orderBy(
-        F.col("quality_score").desc(), F.col("doc_id").asc()
-    )
-    ranked = (
-        member.join(q, "doc_id")
-        .withColumn("rn", F.row_number().over(w))
-        .withColumn(
-            "n_members",
-            F.count(F.lit(1)).over(Window.partitionBy("cluster")),
-        )
-    )
-    return ranked.where(F.col("rn") == 1).select(
-        "doc_id", "cluster", F.col("n_members").cast("long").alias("n_members"),
-        "quality_score",
-    )
-
 
 # --------------------------------------------------------------------------
 # prefix-filtered set-similarity join (PPJoin-style candidate generation)
 # --------------------------------------------------------------------------
 
-JACCARD_PREFIX_ORACLE = """
-WITH tok AS (
-  SELECT doc_id, string_split(trim(text), ' ') AS words FROM documents
-),
-sh AS (
-  SELECT DISTINCT doc_id,
-         words[i] || ' ' || words[i+1] || ' ' || words[i+2] AS s
-  FROM tok, UNNEST(range(1, greatest(len(words) - 1, 1))) AS t(i)
-),
-card AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-dfreq AS (SELECT s, COUNT(*) AS df FROM sh GROUP BY s),
-ranked AS (
-  SELECT sh.doc_id, sh.s,
-         ROW_NUMBER() OVER (
-           PARTITION BY sh.doc_id ORDER BY dfreq.df, sh.s
-         ) AS rnk,
-         COUNT(*) OVER (PARTITION BY sh.doc_id) AS sz
-  FROM sh JOIN dfreq USING (s)
-),
-prefix AS (
-  SELECT doc_id, s FROM ranked
-  WHERE rnk <= sz - ((3 * sz + 4) // 5) + 1
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-  FROM prefix a JOIN prefix b ON a.s = b.s AND a.doc_id < b.doc_id
-),
-inter AS (
-  SELECT c.id1, c.id2, COUNT(*) AS o
-  FROM cand c
-  JOIN sh ta ON ta.doc_id = c.id1
-  JOIN sh tb ON tb.doc_id = c.id2 AND tb.s = ta.s
-  GROUP BY c.id1, c.id2
-)
-SELECT i.id1, i.id2,
-       ROUND(CAST(o AS DOUBLE) / CAST(c1.n + c2.n - o AS DOUBLE), 6)
-         AS jaccard
-FROM inter i
-JOIN card c1 ON c1.doc_id = i.id1
-JOIN card c2 ON c2.doc_id = i.id2
-WHERE 8 * o >= 3 * (c1.n + c2.n)
-"""
 
-
-@query("dedup_jaccard_prefix", oracle=JACCARD_PREFIX_ORACLE)
-def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact shingle-set Jaccard ≥ 0.6 pairs via PREFIX FILTERING — the
-    lossless candidate pruning of the PPJoin family, and the exact-answer
-    scale path between the quadratic share-a-shingle baseline
-    (``dedup_ngram_jaccard``) and the approximate MinHash-LSH path.
-
-    Principle: order every doc's shingles by ascending global document
-    frequency (ties by shingle); any pair with Jaccard ≥ τ MUST share a
-    token inside each doc's first |T| − ⌈τ·|T|⌉ + 1 shingles, so joining
-    on PREFIX shingles only is lossless while skipping the stopword-like
-    high-df shingles that generate almost all share-a-shingle pairs
-    (measured at sf0.01: 165 candidates vs 11 533 — 70× fewer, same 25
-    final pairs). ⌈3n/5⌉ is computed as (3n+4) div 5 — pure integers,
-    never float ceil (0.6·n carries ulp error that can shorten the
-    prefix and break losslessness); the τ-test is the exact integer
-    form 8·o ≥ 3·(n₁+n₂) ⇔ o/(n₁+n₂−o) ≥ 3/5… with o, n exact counts.
-
-    Scale: df ordering is one shingle-keyed aggregate; per-doc ranks one
-    doc-keyed window (frame bounded by doc length); candidates come from
-    bucket-grouped enumeration over RARE-by-construction prefix shingles
-    (mega-bucket guarded); the verify is candidate-proportional. All
-    shuffles key on shingles or doc ids — no corpus-sized quadratic
-    stage, unlike the baseline this replaces.
-    """
-    docs = Catalog(spark, sf_dir).parallel_table("documents", "doc_id")
-    sh = scoped_persist(
-        ngram_shingles(docs, text_col="text", id_col="doc_id", n=3)
-        .select("doc_id", "shingle")
-        .distinct()
-    )
-    dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    # prefix via doc-LOCAL array sort: collect each doc's (df, shingle)
-    # structs on the one doc_id shuffle, array_sort (struct field order
-    # = the (df, shingle) rank order), slice to n − ⌈3n/5⌉ + 1, explode.
-    # Measured against the row_number() window form at the 100× point
-    # (both directions, per the khop lesson): the
-    # window form pays a full range-partition sort of the 65 M-row
-    # shingle⋈df relation plus a doc-keyed exchange behind it; the
-    # in-row form sorts ≤ doc-length arrays on the same shuffle that
-    # already builds per-doc state — 177 s → measured below at 100×.
-    prefix = (
-        sh.join(dfreq, "shingle")
-        .groupBy("doc_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("df", "shingle"))
-            ).alias("arr")
-        )
-        .select(
-            "doc_id",
-            F.explode(
-                F.slice(
-                    "arr",
-                    1,
-                    F.expr(
-                        "size(arr) - (3 * size(arr) + 4) div 5 + 1"
-                    ),
-                )
-            ).alias("p"),
-        )
-        .select("doc_id", F.col("p.shingle").alias("shingle"))
-    )
-
-    from ..operators.dedup import grouped_pair_enumeration
-
-    # persist: two consumers (the id prune and the final pair join)
-    cand = scoped_persist(
-        grouped_pair_enumeration(prefix, ["shingle"], "doc_id").distinct()
-    )
-    # LeftSemi candidate-doc prune BEFORE building shingle arrays (the
-    # minhash-verify convention): only docs that appear in a candidate
-    # pair pay the collect_list, so the arrays relation is
-    # candidate-sized, never corpus-sized — without it the planner must
-    # hash/broadcast a corpus-wide array table (OOM'd at the 100× point).
-    cand_ids = (
-        cand.select(F.col("id1").alias("doc_id"))
-        .unionByName(cand.select(F.col("id2").alias("doc_id")))
-        .distinct()
-    )
-    arrs = (
-        sh.join(cand_ids, "doc_id", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list("shingle")).alias("arr"))
-    )
-    s1 = arrs.select(F.col("doc_id").alias("id1"), F.col("arr").alias("a1"))
-    s2 = arrs.select(F.col("doc_id").alias("id2"), F.col("arr").alias("a2"))
-    o = F.size(F.array_intersect("a1", "a2"))
-    n1, n2 = F.size("a1"), F.size("a2")
-    jac = o.cast("double") / (n1 + n2 - o).cast("double")
-    return (
-        cand.join(s1, "id1")
-        .join(s2, "id2")
-        .where(F.lit(8) * o >= F.lit(3) * (n1 + n2))
-        .select("id1", "id2", F.round(jac, 6).alias("jaccard"))
-    )

@@ -1,6 +1,6 @@
 """Graph-analytics queries: rank propagation over relational edge
 lists. Connected components run inside the dedup family's queries
-(`dedup_apply`, `dedup_keep_best`, `semantic_dedup`); this module adds
+(`dedup_apply`, `semantic_dedup`); this module adds
 the iterative-rank shape — PageRank in fixed-point integer arithmetic, so
 a 3-round iterative algorithm is exactly DuckDB-replayable (EXACT
 integers end to end, not a rounded handoff between rounds)."""

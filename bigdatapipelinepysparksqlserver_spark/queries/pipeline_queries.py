@@ -381,105 +381,5 @@ def lake_zone_readwhere_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every 307th) is replayed by DuckDB as plain set algebra over orders.
 # Any merge defect (missed match, wrong partition routing, double
 # apply, lost row) diverges from the straight replay.
-LAKE_MERGE_ORACLE = """
-WITH base AS (
-  SELECT o_orderkey AS okey,
-         CAST(o_totalprice AS DECIMAL(18,2)) AS price,
-         CAST(strftime(o_orderdate, '%Y%m') AS INTEGER) AS ym
-  FROM orders
-), after AS (
-  SELECT okey,
-         CASE WHEN okey % 101 = 0 THEN price + 5 ELSE price END AS price,
-         ym
-  FROM base
-  WHERE NOT (okey % 211 = 0 AND okey % 101 <> 0)
-  UNION ALL
-  SELECT -okey, price + 1, ym FROM base WHERE okey % 307 = 0 AND okey <> 0
-)
-SELECT ym,
-       CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(SUM(CAST(price * 100 AS BIGINT)) AS BIGINT) AS cents
-FROM after
-GROUP BY 1
-ORDER BY 1
-"""
 
 
-@query("lake_merge_demo", oracle=LAKE_MERGE_ORACLE)
-def lake_merge_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row-level MERGE (keyed upsert/delete) on the snapshot lake
-    (r11, ``SnapshotLakeTable.merge_rows``): orders seed a month-
-    partitioned lake with key zone maps; ONE merge batch updates every
-    101st key in place, deletes every 211th (non-updated) key, and
-    inserts a mirrored ``-key`` row for every 307th — one CAS-committed
-    publish. The post-merge per-month aggregate is returned; DuckDB
-    replays the whole merge from orders as plain set algebra. This is
-    the only oracle check of ``merge_rows``, which the streaming
-    keyed-merge sink (``foreach_batch_keyed_merge``) runs per batch.
-
-    Scale: the matched-key location pass is a column-pruned scan
-    zone-prunable on the key column; the rewrite touches only
-    partitions carrying a NET change (an upsert identical to its live
-    row cancels out and rewrites nothing); the net-change computation
-    is batch-sized exceptAll, never lake-sized. The one full-width
-    read is of the affected partitions themselves — the same regime
-    as the CDC rebuild it composes with.
-    """
-    from ..sources.catalog import Catalog
-    from ..sources.lake_snapshot import SnapshotLakeTable
-
-    orders = Catalog(spark, sf_dir).orders
-    base = orders.select(
-        F.col("o_orderkey").alias("okey"),
-        F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
-        F.date_format("o_orderdate", "yyyyMM").cast("int").alias("ym"),
-    )
-    root = tempfile.mkdtemp(prefix="lake_merge_")
-    try:
-        lake = SnapshotLakeTable(
-            spark,
-            f"{root}/lake",
-            partition_cols=("ym",),
-            schema=base.schema,
-            retain=4,
-            stats_cols=("okey",),
-        )
-        lake.write_full(base)
-
-        upd = base.where(F.col("okey") % 101 == 0).withColumn(
-            "price", (F.col("price") + 5).cast("decimal(18,2)")
-        ).withColumn("is_del", F.lit(False))
-        dele = base.where(
-            (F.col("okey") % 211 == 0) & (F.col("okey") % 101 != 0)
-        ).withColumn("is_del", F.lit(True))
-        ins = base.where(
-            (F.col("okey") % 307 == 0) & (F.col("okey") != 0)
-        ).select(
-            (-F.col("okey")).alias("okey"),
-            (F.col("price") + 1).cast("decimal(18,2)").alias("price"),
-            F.col("ym"),
-            F.lit(False).alias("is_del"),
-        )
-        lake.merge_rows(
-            upd.unionByName(dele).unionByName(ins),
-            key_cols=["okey"],
-            delete_col="is_del",
-        )
-
-        agg = (
-            lake.read()
-            .groupBy("ym")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum((F.col("price") * 100).cast("long")).alias("cents"),
-            )
-            .orderBy("ym")
-        )
-        # materialize before the temp lake is removed (months-sized,
-        # control-plane)
-        rows = [(r.ym, r.n_rows, r.cents) for r in agg.collect()]
-        return spark.createDataFrame(
-            rows, "ym int, n_rows bigint, cents bigint"
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)

@@ -313,31 +313,6 @@ def window_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # O-extension: deterministic top-k (TakeOrderedAndProject, no global sort)
 # --------------------------------------------------------------------------
 
-TOP_CUSTOMERS_ORACLE = """
-SELECT c.c_custkey AS client_id, c.c_name AS client_name,
-       CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spend
-FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
-GROUP BY 1, 2
-ORDER BY total_spend DESC, client_id
-LIMIT 10
-"""
-
-
-@query("top_customers", oracle=TOP_CUSTOMERS_ORACLE)
-def top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-k by aggregate with deterministic tie-break.
-
-    Scale: Spark plans ORDER BY+LIMIT as TakeOrderedAndProject — per-partition
-    top-k heaps merged on the driver, no global sort shuffle.
-    """
-    t = Catalog(spark, sf_dir)
-    spend = (
-        t.customer.join(t.orders, F.col("c_custkey") == F.col("o_custkey"))
-        .groupBy(F.col("c_custkey").alias("client_id"), F.col("c_name").alias("client_name"))
-        .agg(F.sum(dec("o_totalprice")).cast("double").alias("total_spend"))
-    )
-    return top_k(spend, [F.col("total_spend").desc(), F.col("client_id")], 10)
-
 
 # --------------------------------------------------------------------------
 # TPC-H Q3 (shipping priority) — join-heavy with selective filters
@@ -484,7 +459,7 @@ def sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum → per-session agg).
 
     Scale: one shuffle on user_id; within-partition sort by (ts, event_id).
-    This is the batch shape; ``streaming.cdc.streaming_sessionize``
+    This is the batch shape; ``operators.temporal.streaming_sessionize``
     (registered as `sessionize_session_window`) is the session_window
     form that runs on unbounded input with per-open-session state.
     """
@@ -518,7 +493,7 @@ def sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # session_window sessionization — the streaming-capable twin of `sessionize`
-# (same plan runs on readStream with a watermark; see streaming/cdc.py)
+# (same plan runs on readStream with a watermark; see operators/temporal.py)
 # --------------------------------------------------------------------------
 
 SESSION_WINDOW_ORACLE = """
@@ -554,7 +529,7 @@ def sessionize_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     of whole-history per-user sort — the only form viable on an unbounded
     stream.
     """
-    from ..streaming.cdc import streaming_sessionize
+    from ..operators.temporal import streaming_sessionize
 
     ev = Catalog(spark, sf_dir).events
     return streaming_sessionize(ev, ts_col="ts", user_col="user_id", gap="30 minutes")
@@ -1379,157 +1354,6 @@ def value_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # CUSUM level-shift detection: the sequential monitor, made parallel
 # --------------------------------------------------------------------------
-
-CUSUM_ORACLE = """
-WITH hourly AS (
-  SELECT event_type, epoch_us(ts) // 3600000000 AS h,
-         CAST(COUNT(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-),
-b AS (
-  SELECT event_type, MIN(h) AS mn, MAX(h) AS mx,
-         CAST(SUM(c) AS BIGINT) AS total,
-         (MAX(h) - MIN(h) + 1) AS nh
-  FROM hourly GROUP BY event_type
-),
-spine AS (
-  SELECT b.event_type, g.h, b.total, b.nh
-  FROM b, UNNEST(generate_series(mn, mx)) AS g(h)
-),
-x AS (
-  SELECT s.event_type, s.h, s.total, s.nh,
-         s.nh * COALESCE(hourly.c, 0) - s.total AS xd
-  FROM spine s LEFT JOIN hourly
-    ON hourly.event_type = s.event_type AND hourly.h = s.h
-),
-p0 AS (
-  SELECT event_type, h, total, nh,
-         SUM(xd) OVER (PARTITION BY event_type ORDER BY h
-                       ROWS UNBOUNDED PRECEDING) AS pf
-  FROM x
-),
-p AS (
-  SELECT event_type, h, total, nh, pf,
-         LEAST(0, MIN(pf) OVER (PARTITION BY event_type ORDER BY h
-                                ROWS UNBOUNDED PRECEDING)) AS minp
-  FROM p0
-),
-s AS (
-  SELECT event_type, h, total, nh, pf - minp AS cusum FROM p
-),
-m AS (
-  SELECT event_type, MAX(cusum) AS maxs FROM s GROUP BY event_type
-)
-SELECT s.event_type,
-       CAST(SUM(CASE WHEN s.cusum > 5 * s.total THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_alarms,
-       ROUND(CAST(m.maxs AS DOUBLE) / CAST(s.nh AS DOUBLE), 6)
-         AS peak_cusum,
-       MIN(CASE WHEN s.cusum = m.maxs THEN s.h END) AS peak_hour
-FROM s JOIN m ON m.event_type = s.event_type
-GROUP BY s.event_type, m.maxs, s.nh
-"""
-
-
-@query("value_cusum_alarm", oracle=CUSUM_ORACLE)
-def value_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUSUM level-shift detection over per-type hourly event volume —
-    the classic SEQUENTIAL changepoint monitor S_t = max(0, S_{t−1} +
-    x_t − k), parallelized through the prefix identity
-    S_t = P_t − min(0, min_{j≤t} P_j) with P_t = Σ_{j≤t}(x_j − k):
-    a cumulative sum and a running min replace the recurrence, so the
-    scan-resistant detector (many SMALL deviations accumulate where a
-    3σ spike test stays silent) runs as two window passes instead of a
-    sequential fold.
-
-    Exactness: the drift k is the type's own hourly mean total/H —
-    kept EXACT by scaling every term by H (x′ = H·x − total, pure
-    BIGINTs; silent hours contribute −total via the spine). Alarms
-    fire on the exact integer test S′ > 5·total (i.e. CUSUM > 5 hours
-    of average volume); the reported peak divides back by H in one
-    fixed-order double expression, ROUND 6; the peak hour is the
-    deterministic MIN hour achieving the max.
-
-    Scale: the events scan collapses to (type, hour) counts first;
-    spine, prefix sum, running min, and max all run on the HOUR DOMAIN
-    per type — horizon-sized windows, never event-sized.
-    """
-    from pyspark.sql import Window
-
-    ev = Catalog(spark, sf_dir).events
-    hourly = (
-        ev.select(
-            "event_type",
-            F.expr("unix_micros(ts) div 3600000000").alias("h"),
-        )
-        .groupBy("event_type", "h")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    b = hourly.groupBy("event_type").agg(
-        F.min("h").alias("mn"),
-        F.max("h").alias("mx"),
-        F.sum("c").cast("bigint").alias("total"),
-        (F.max("h") - F.min("h") + 1).alias("nh"),
-    )
-    spine = b.select(
-        "event_type",
-        F.explode(F.sequence("mn", "mx")).alias("h"),
-        "total",
-        "nh",
-    )
-    x = spine.join(hourly, ["event_type", "h"], "left").select(
-        "event_type",
-        "h",
-        "total",
-        "nh",
-        (
-            F.col("nh") * F.coalesce("c", F.lit(0)) - F.col("total")
-        ).alias("xd"),
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("h")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    p = x.select(
-        "event_type", "h", "total", "nh", F.sum("xd").over(w).alias("pf")
-    ).select(
-        "event_type",
-        "h",
-        "total",
-        "nh",
-        "pf",
-        F.least(F.lit(0), F.min("pf").over(w)).alias("minp"),
-    )
-    s = p.select(
-        "event_type",
-        "h",
-        "total",
-        "nh",
-        (F.col("pf") - F.col("minp")).alias("cusum"),
-    )
-    w_all = Window.partitionBy("event_type")
-    sm = s.select(
-        "event_type", "h", "total", "nh", "cusum",
-        F.max("cusum").over(w_all).alias("maxs"),
-    )
-    return sm.groupBy("event_type", "maxs", "nh").agg(
-        F.sum(
-            F.when(F.col("cusum") > F.lit(5) * F.col("total"), 1).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("n_alarms"),
-        F.min(
-            F.when(F.col("cusum") == F.col("maxs"), F.col("h"))
-        ).alias("peak_hour"),
-    ).select(
-        "event_type",
-        "n_alarms",
-        F.round(
-            F.col("maxs").cast("double") / F.col("nh").cast("double"), 6
-        ).alias("peak_cusum"),
-        "peak_hour",
-    )
 
 
 # --------------------------------------------------------------------------

@@ -5,10 +5,10 @@ engines compute the dot product as a sequential double fold, so 6-dp
 rounded cosines hash-match). The hyperplane-LSH variants are ALSO
 oracle-checked: the planes are literal constants
 (operators/similarity.py hyperplane_constants), so DuckDB reproduces the
-bucket assignment with list_dot_product sign tests. The IVF variants are
-oracle-checked too: `ann_ivf_partitioned_topk` and `ann_ivfpq_topk` search
-against the offline-trained versioned codebook artifact whose 6-dp
-centroid literals replay in SQL.
+bucket assignment with list_dot_product sign tests. The IVF variant is
+oracle-checked too: `ann_ivfpq_topk` searches against the
+offline-trained versioned codebook artifact whose 6-dp centroid
+literals replay in SQL.
 (KMeans training — `train_ivf_codebook`, run by
 `tools/train_ivf_codebook.py` — stays outside every registered query
 path.)
@@ -103,70 +103,8 @@ def ann_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # at sf0.01); 0.4 keeps the "near-dup" set small but non-empty.
 EMB_NEARDUP_THRESHOLD = 0.4
 
-EMB_NEARDUP_ORACLE = f"""
-WITH v AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
-)
-SELECT a.vec_id AS id1, b.vec_id AS id2,
-       ROUND(list_cosine_similarity(a.emb, b.emb), 6) AS cosine
-FROM v a JOIN v b ON a.vec_id < b.vec_id
-WHERE list_cosine_similarity(a.emb, b.emb) >= {EMB_NEARDUP_THRESHOLD}
-"""
 
-
-EXACT_EMB_PAIR_BUDGET = 50_000_000  # N(N−1)/2 cap: every local SF passes
 # (sf0.1: 2 M pairs); a 100x corpus (2e10 pairs) fails fast with guidance
-
-
-@query("emb_neardup_exact", oracle=EMB_NEARDUP_ORACLE)
-def emb_neardup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact all-pairs cosine ≥ threshold — the near-dup correctness baseline.
-
-    Deliberately quadratic (documented baseline, like dedup_ngram_jaccard);
-    the scale path is ``emb_neardup_lsh_sized`` which buckets by
-    policy-sized hyperplane signature before verifying. The pair count
-    here is exactly N(N−1)/2, so the budget guard is one control-plane
-    count: past ``EXACT_EMB_PAIR_BUDGET`` the query raises with guidance
-    instead of expanding the cross join (the contractual bound that
-    keeps the baseline registered at any scale).
-    """
-    from ..operators.dedup import PairBudgetExceeded
-    from ..operators.similarity import dot, norm
-
-    emb = Catalog(spark, sf_dir).embeddings
-    n = emb.count()
-    if n * (n - 1) // 2 > EXACT_EMB_PAIR_BUDGET:
-        raise PairBudgetExceeded(
-            f"{n:,} vectors -> {n * (n - 1) // 2:,} exact pairs exceeds the"
-            f" {EXACT_EMB_PAIR_BUDGET:,} pair budget — use the near-linear"
-            " scale path instead: emb_neardup_lsh_sized (policy-sized"
-            " hyperplane LSH, measured 19x wall at 100x data)"
-        )
-    # norms hoisted per vector row (r11): the interpreted HOF norm fold
-    # runs N times per side instead of N²/2 times per side inside the
-    # per-pair cosine; dot/(na·nb) is exactly cosine()'s expansion —
-    # bit-identical result.
-    a = emb.select(
-        F.col("vec_id").alias("id1"),
-        F.col("embedding").alias("va"),
-        norm(F.col("embedding")).alias("__na"),
-    )
-    b = emb.select(
-        F.col("vec_id").alias("id2"),
-        F.col("embedding").alias("vb"),
-        norm(F.col("embedding")).alias("__nb"),
-    )
-    pairs = a.join(b, F.col("id1") < F.col("id2"))
-    scored = pairs.select(
-        "id1",
-        "id2",
-        (
-            dot(F.col("va"), F.col("vb")) / (F.col("__na") * F.col("__nb"))
-        ).alias("cos_raw"),
-    )
-    return scored.where(F.col("cos_raw") >= EMB_NEARDUP_THRESHOLD).select(
-        "id1", "id2", F.round("cos_raw", 6).alias("cosine")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -234,112 +172,7 @@ def _load_ivf_artifact() -> dict:
         return json.load(f)
 
 
-def _ivf_artifact_oracle(n_probe: int) -> str:
-    """Oracle for the artifact-codebook IVF search: the 6-dp centroid
-    literals paste into DuckDB as the exact doubles the Spark plan uses,
-    so index build (argmax assignment), probe list, and re-rank all
-    replay in SQL."""
-    art = _load_ivf_artifact()
-    rows = ",\n        ".join(
-        f"({cell}, [" + ", ".join(repr(x) for x in cent) + "]::DOUBLE[])"
-        for cell, cent in sorted((int(c), v) for c, v in art["centroids"].items())
-    )
-    return f"""
-WITH v AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
-),
-cb (cell, cent) AS (
-  SELECT * FROM (VALUES
-        {rows}) t
-),
-asg AS (
-  SELECT v.vec_id, c.cell,
-         ROW_NUMBER() OVER (
-           PARTITION BY v.vec_id
-           ORDER BY list_cosine_similarity(v.emb, c.cent) DESC, c.cell ASC
-         ) AS rn
-  FROM v, cb c
-),
-assigned AS (SELECT vec_id AS neighbor_id, cell FROM asg WHERE rn = 1),
-qprobe AS (
-  SELECT v.vec_id AS query_id, c.cell,
-         ROW_NUMBER() OVER (
-           PARTITION BY v.vec_id
-           ORDER BY list_cosine_similarity(v.emb, c.cent) DESC, c.cell ASC
-         ) AS rn
-  FROM v, cb c WHERE v.vec_id < {N_QUERY_VECS}
-),
-probes AS (SELECT query_id, cell FROM qprobe WHERE rn <= {n_probe}),
-cand AS (
-  SELECT DISTINCT p.query_id, a.neighbor_id
-  FROM probes p JOIN assigned a ON a.cell = p.cell
-  WHERE a.neighbor_id <> p.query_id
-),
-scored AS (
-  SELECT c.query_id, c.neighbor_id,
-         list_cosine_similarity(q.emb, n.emb) AS cos_raw
-  FROM cand c
-  JOIN v q ON q.vec_id = c.query_id
-  JOIN v n ON n.vec_id = c.neighbor_id
-)
-SELECT query_id, neighbor_id, ROUND(cos_raw, 6) AS cosine,
-       CAST(ROW_NUMBER() OVER (
-         PARTITION BY query_id ORDER BY cos_raw DESC, neighbor_id ASC
-       ) AS INT) AS rank
-FROM scored
-QUALIFY rank <= {TOP_K}
-"""
-
-
 IVF_ARTIFACT_N_PROBE = 6
-
-
-def _ivf_store_path(sf_dir: str) -> str:
-    """Per-(user, process, sf_dir) location for the cell-partitioned
-    vector store with dead-sibling sweeping — see queries/storepaths.py
-    for the isolation + GC contract. Within one process the path is
-    stable, which is what the plan-audit test relies on to re-probe the
-    registered query's store."""
-    from .storepaths import process_scoped_store_path
-
-    return process_scoped_store_path("ivf_store", sf_dir)
-
-
-@query("ann_ivf_partitioned_topk", oracle=_ivf_artifact_oracle(IVF_ARTIFACT_N_PROBE))
-def ann_ivf_partitioned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF top-k over the CELL-PARTITIONED vector store — the 100 TB ANN
-    disk layout as a graded end-to-end query: build the store
-    (argmax-cosine assignment against the versioned codebook artifact,
-    ``partitionBy(cell)`` parquet), then probe it with
-    ``ivf_partitioned_topk``, whose ``cell IN (probed…)`` predicate
-    prunes at the FILE-LISTING level (Hive partition pruning,
-    ``PartitionFilters`` in the executed plan — asserted in
-    tests/test_plans.py). Results are identical to the
-    projection-assignment search ``ivf_codebook_topk`` by construction
-    (the driver-side probe twin folds doubles in the same order as the
-    scan-side SQL), so one codebook-literal oracle replays it.
-
-    Scale: the store build is one scan + partitioned write (amortized
-    over every subsequent search in production — rebuilt here per call
-    so the graded query covers the whole build+probe cycle); each probe
-    reads only n_probe of n_cells partition directories.
-    """
-    from ..operators.similarity import ivf_partitioned_topk, write_ivf_partitioned
-
-    art = _load_ivf_artifact()
-    emb = Catalog(spark, sf_dir).embeddings
-    codebook = spark.createDataFrame(
-        sorted((int(c), v) for c, v in art["centroids"].items()),
-        ["cell", "centroid"],
-    ).select("cell", F.col("centroid").cast("array<double>").alias("centroid"))
-    store = _ivf_store_path(sf_dir)
-    write_ivf_partitioned(emb, codebook, store)
-    q = emb.where(F.col("vec_id") < N_QUERY_VECS)
-    return ivf_partitioned_topk(
-        spark, store, q, codebook,
-        id_col="vec_id", vec_col="embedding",
-        n_probe=IVF_ARTIFACT_N_PROBE, k=TOP_K,
-    )
 
 
 # --------------------------------------------------------------------------
@@ -552,87 +385,6 @@ def semantic_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # incremental semantic dedup: batch probes the cell-partitioned store
 # --------------------------------------------------------------------------
-
-SEM_INC_BATCH_N = 64  # incoming batch = vec_id < 64; stored corpus = the rest
-
-
-def _semantic_inc_oracle() -> str:
-    """Literal-codebook replay of the store probe: assignment for both
-    sides, then batch×corpus pairs WITHIN cells only (the store's
-    partition layout), thresholded — the probe's partition pruning is
-    a pure I/O optimization, so the oracle is partition-free."""
-    art = _load_ivf_artifact()
-    rows = ",\n        ".join(
-        f"({cell}, [" + ", ".join(repr(x) for x in cent) + "]::DOUBLE[])"
-        for cell, cent in sorted((int(c), v) for c, v in art["centroids"].items())
-    )
-    return f"""
-WITH v AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
-),
-cb (cell, cent) AS (
-  SELECT * FROM (VALUES
-        {rows}) t
-),
-asg AS (
-  SELECT v.vec_id, c.cell,
-         ROW_NUMBER() OVER (
-           PARTITION BY v.vec_id
-           ORDER BY list_cosine_similarity(v.emb, c.cent) DESC, c.cell ASC
-         ) AS rn
-  FROM v, cb c
-),
-assigned AS (SELECT vec_id, cell FROM asg WHERE rn = 1),
-pairs AS (
-  SELECT b.vec_id AS batch_id, a.vec_id AS corpus_id,
-         list_cosine_similarity(vb.emb, va.emb) AS cos_raw
-  FROM assigned b
-  JOIN assigned a ON a.cell = b.cell
-  JOIN v vb ON vb.vec_id = b.vec_id
-  JOIN v va ON va.vec_id = a.vec_id
-  WHERE b.vec_id < {SEM_INC_BATCH_N} AND a.vec_id >= {SEM_INC_BATCH_N}
-)
-SELECT batch_id, corpus_id, ROUND(cos_raw, 6) AS cosine
-FROM pairs
-WHERE cos_raw >= {EMB_NEARDUP_THRESHOLD}
-"""
-
-
-@query("semantic_dedup_incremental", oracle=_semantic_inc_oracle())
-def semantic_dedup_incremental_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental semantic dedup against the CELL-PARTITIONED store:
-    the corpus (vec_id ≥ 64) is written ``partitionBy(cell)`` under the
-    versioned artifact codebook, then the incoming batch (vec_id < 64)
-    is assigned and compared only against its cells' partition
-    directories — (batch_id, corpus_id, cosine ≥ 0.4). The embedding
-    twin of ``dedup_incremental``: ingest probes a persistent index,
-    corpus×corpus pairs are never re-enumerated, and the probe's
-    ``cell IN (…)`` predicate prunes at the file-listing level
-    (PartitionFilters — asserted in tests/test_plans.py). Graded per
-    call as build+probe, covering the whole cycle; the oracle replays
-    assignment and the within-cell batch×corpus comparison from the
-    codebook literals (pruning is I/O-only, so the oracle needs no
-    partition concept)."""
-    from ..operators.similarity import (
-        semantic_dedup_incremental,
-        write_ivf_partitioned,
-    )
-    from .storepaths import process_scoped_store_path
-
-    art = _load_ivf_artifact()
-    emb = Catalog(spark, sf_dir).embeddings
-    codebook = spark.createDataFrame(
-        sorted((int(c), v) for c, v in art["centroids"].items()),
-        ["cell", "centroid"],
-    ).select("cell", F.col("centroid").cast("array<double>").alias("centroid"))
-    store = process_scoped_store_path("semdedup_store", sf_dir)
-    write_ivf_partitioned(
-        emb.where(F.col("vec_id") >= SEM_INC_BATCH_N), codebook, store
-    )
-    batch = emb.where(F.col("vec_id") < SEM_INC_BATCH_N)
-    return semantic_dedup_incremental(
-        spark, store, batch, codebook, threshold=EMB_NEARDUP_THRESHOLD
-    )
 
 
 # --------------------------------------------------------------------------

@@ -299,35 +299,6 @@ def bm25_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("bm25_search", oracle=_bm25_oracle())
-def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed BM25 over the corpus for a fixed probe-term set —
-    query-relevance mining without an embedding index. Corpus stats
-    (N, avgdl, per-term df) are exact-integer aggregates; idf weights
-    are driver-side scalars baked into a fixed-order scoring
-    projection, so the DuckDB oracle replays the ranking exactly
-    (ordering on the ROUNDED score with doc_id tie-break absorbs any
-    last-ulp libm divergence).
-
-    Scale: one map-side token pass computes dl and the probe-term
-    frequencies (no corpus explode — per-doc array scans of the probe
-    terms only), one scalar aggregate for the stats, one
-    candidate-filtered top-n. Probe-term count is the only multiplier.
-    """
-    from ..operators.retrieval import bm25_search as _bm25
-
-    docs = Catalog(spark, sf_dir).documents
-    return _bm25(
-        docs,
-        list(BM25_TERMS),
-        text_col="text",
-        id_col="doc_id",
-        k1=_BM25_K1,
-        b=_BM25_B,
-        top_n=_BM25_TOP,
-    )
-
-
 # --------------------------------------------------------------------------
 # hybrid retrieval: BM25 + query-vector cosine, Reciprocal Rank Fusion
 # --------------------------------------------------------------------------

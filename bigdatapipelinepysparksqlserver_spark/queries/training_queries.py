@@ -469,121 +469,6 @@ SPLIT_BOUNDS = (("train", "f5"), ("val", "fa"), ("test", None))
 # classifier calibration: heuristic quality by model-score decile
 # --------------------------------------------------------------------------
 
-_DEC_EDGES = "[0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]"
-
-CALIBRATION_ORACLE = rf"""
-WITH toks AS (
-  SELECT doc_id, t.tok AS token
-  FROM (SELECT doc_id,
-               regexp_split_to_array(lower(trim(text)), '[^a-z0-9]+') AS arr
-        FROM documents),
-       UNNEST(arr) AS t(tok)
-  WHERE t.tok <> ''
-),
-weighted AS (
-  SELECT doc_id,
-         CAST(CAST(('0x' || substr(md5(token), 1, 3)) AS INT) % 61 AS DOUBLE)
-           / 30.0 - 1.0 AS w
-  FROM toks
-),
-cls AS (
-  SELECT doc_id, ROUND(1.0 / (1.0 + EXP(-4.0 * AVG(w))), 6) AS prob
-  FROM weighted GROUP BY doc_id
-),
-q AS (
-  SELECT doc_id,
-    ROUND(
-      0.4 * (CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
-             / CAST(length(text) AS DOUBLE))
-    + 0.3 * (CAST(len(regexp_extract_all(lower(text), '\b(the|a|an|and|or|of|to|in|is|it)\b')) AS DOUBLE)
-             / CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-                         ELSE len(string_split_regex(trim(text), '\s+')) END AS DOUBLE))
-    + 0.3 * least(CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-                            ELSE len(string_split_regex(trim(text), '\s+')) END AS DOUBLE) / 64.0, 1.0)
-    , 6) AS quality_score
-  FROM documents
-),
-e AS (
-  SELECT list_transform(quantile_cont(prob, {_DEC_EDGES}),
-                        x -> round(x, 6)) AS ed
-  FROM cls
-),
-b AS (
-  SELECT c.prob, q.quality_score,
-         1 + (CASE WHEN c.prob >= ed[1] THEN 1 ELSE 0 END)
-           + (CASE WHEN c.prob >= ed[2] THEN 1 ELSE 0 END)
-           + (CASE WHEN c.prob >= ed[3] THEN 1 ELSE 0 END)
-           + (CASE WHEN c.prob >= ed[4] THEN 1 ELSE 0 END)
-           + (CASE WHEN c.prob >= ed[5] THEN 1 ELSE 0 END)
-           + (CASE WHEN c.prob >= ed[6] THEN 1 ELSE 0 END)
-           + (CASE WHEN c.prob >= ed[7] THEN 1 ELSE 0 END)
-           + (CASE WHEN c.prob >= ed[8] THEN 1 ELSE 0 END)
-           + (CASE WHEN c.prob >= ed[9] THEN 1 ELSE 0 END) AS decile
-  FROM cls c JOIN q USING (doc_id), e
-)
-SELECT decile,
-       COUNT(*) AS n_docs,
-       ROUND(CAST(CAST(SUM(CAST(ROUND(prob * 1000000.0, 0) AS BIGINT))
-                  AS BIGINT) AS DOUBLE) / 1000000.0 / COUNT(*), 6) AS mean_prob,
-       ROUND(CAST(CAST(SUM(CAST(ROUND(quality_score * 1000000.0, 0) AS BIGINT))
-                  AS BIGINT) AS DOUBLE) / 1000000.0 / COUNT(*), 6) AS mean_quality
-FROM b GROUP BY decile
-"""
-
-
-@query("classifier_calibration", oracle=CALIBRATION_ORACLE)
-def classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Model-calibration table: documents binned into model-score
-    deciles (exact interpolated percentile edges of the classifier's
-    quality_prob), each decile reporting mean model score vs mean
-    HEURISTIC quality — the eval artifact that answers "is the learned
-    gate monotone against the rule-based one, and where does it
-    disagree" before a filtering threshold ships.
-
-    Determinism: both means accumulate 1e6-scaled BIGINTs of the
-    already-6-dp scores (exact, order-free — the bigram-LM pattern),
-    divided out in one fixed-order double expression; decile edges are
-    6-dp-rounded percentiles broadcast as a 1-row relation (the
-    ``equi_depth_histogram`` shape — never a global NTILE window).
-
-    Scale: the classifier leg is the explode + map-side-collapsed
-    doc aggregate it always is; the heuristic leg is scan-side; the
-    doc_id join shuffles doc-sized score pairs (16 B/row), and the
-    final groupBy collapses to ≤ 10 rows per task map-side.
-    """
-    from ..operators.text import classifier_scores, quality_scores
-
-    docs = Catalog(spark, sf_dir).documents
-    cls = classifier_scores(docs, "text", "doc_id").select(
-        "doc_id", F.col("quality_prob").alias("prob")
-    )
-    q = quality_scores(docs, "text", "doc_id").select("doc_id", "quality_score")
-    edges = cls.agg(
-        F.expr(
-            f"transform(percentile(prob, array({_DEC_EDGES[1:-1]})),"
-            " x -> round(x, 6))"
-        ).alias("ed")
-    )
-    j = cls.join(q, "doc_id").crossJoin(F.broadcast(edges))
-    dec = F.lit(1)
-    for i in range(1, 10):
-        dec = dec + (F.col("prob") >= F.element_at("ed", i)).cast("int")
-    scaled = lambda c: F.round(F.col(c) * 1e6, 0).cast("bigint")  # noqa: E731
-    return (
-        j.select(dec.alias("decile"), scaled("prob").alias("ps"),
-                 scaled("quality_score").alias("qs"))
-        .groupBy("decile")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.round(
-                F.sum("ps").cast("double") / F.lit(1e6) / F.count(F.lit(1)), 6
-            ).alias("mean_prob"),
-            F.round(
-                F.sum("qs").cast("double") / F.lit(1e6) / F.count(F.lit(1)), 6
-            ).alias("mean_quality"),
-        )
-    )
-
 
 # --------------------------------------------------------------------------
 # trigram LM with stupid backoff — the order-3 upgrade of the stored
@@ -826,65 +711,6 @@ def bpe_vocab_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-BPE_TOKEN_COUNT_ORACLE = _BPE_CTES + f"""
-, seg AS MATERIALIZED (
-  SELECT word, len(string_split(state, ' ')) AS n_syms FROM s{BPE_ROUNDS}
-)
-SELECT d.doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
-       CAST(SUM(seg.n_syms) AS BIGINT) AS n_bpe_tokens,
-       ROUND(CAST(SUM(seg.n_syms) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6)
-         AS tokens_per_word
-FROM (
-  SELECT doc_id, unnest(string_split(trim(text), ' ')) AS word FROM documents
-) d JOIN seg USING (word)
-WHERE d.word <> ''
-GROUP BY 1
-"""
-
-
-@query("bpe_token_count", oracle=BPE_TOKEN_COUNT_ORACLE)
-def bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Apply the trained BPE vocabulary back to the corpus: per-document
-    token counts under the 8-merge tokenizer (the number that actually
-    feeds token budgets once the tokenizer is learned, closing the
-    train -> apply loop next to token_budget_mix's whitespace counts).
-
-    Scale: the trained segmentation is a DICTIONARY-sized relation
-    (word -> symbol count) broadcast to the corpus-side word explode —
-    the corpus never shuffles by word; the only wide exchange is the
-    doc-keyed count, map-side combined because explode keeps a doc's
-    words in one partition. At a real corpus the dictionary is
-    Heaps-law sub-linear; at the replica-scaled rehearsal it grows
-    100x and the broadcast still holds (measured row).
-    """
-    docs = Catalog(spark, sf_dir).documents
-    _, state = _bpe_trained(spark, sf_dir)
-    seg = state.select(
-        "word", F.size(F.split("state", " ")).alias("n_syms")
-    )
-    words = docs.select(
-        "doc_id", F.explode(F.split(F.trim("text"), " ")).alias("word")
-    ).where(F.col("word") != "")
-    return (
-        words.join(F.broadcast(seg), "word")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("n_syms").alias("n_bpe_tokens"),
-        )
-        .select(
-            "doc_id",
-            F.col("n_words").cast("bigint").alias("n_words"),
-            F.col("n_bpe_tokens").cast("bigint").alias("n_bpe_tokens"),
-            F.round(
-                F.col("n_bpe_tokens").cast("double")
-                / F.col("n_words").cast("double"),
-                6,
-            ).alias("tokens_per_word"),
-        )
-    )
-
-
 # At 100 TB nobody trains a tokenizer on the full corpus — you train on
 # a deterministic sample and need to KNOW the sample was big enough.
 # This audit trains twice (full corpus vs md5-gated half) and compares
@@ -893,80 +719,4 @@ def bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 # representative" (measure the approximation against truth, don't
 # assert it).
 
-BPE_SAMPLE_FILTER_SQL = (
-    "WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)"
-    " AS BIGINT) % 2 = 0"
-)
 
-BPE_SAMPLE_AUDIT_ORACLE = (
-    "\nWITH "
-    + _bpe_cte_block(px="f")
-    + ",\n"
-    + _bpe_cte_block(px="g", doc_filter=BPE_SAMPLE_FILTER_SQL)
-    + "\n"
-    + " UNION ALL ".join(
-        f"""SELECT {r} AS merge_round,
-       (SELECT a FROM fm{r}) AS full_a, (SELECT b FROM fm{r}) AS full_b,
-       (SELECT a FROM gm{r}) AS sample_a, (SELECT b FROM gm{r}) AS sample_b,
-       CAST((SELECT a FROM fm{r}) = (SELECT a FROM gm{r})
-            AND (SELECT b FROM fm{r}) = (SELECT b FROM gm{r}) AS BOOLEAN)
-         AS agree"""
-        for r in range(1, BPE_ROUNDS + 1)
-    )
-)
-
-
-@query("bpe_sample_audit", oracle=BPE_SAMPLE_AUDIT_ORACLE)
-def bpe_sample_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-by-round agreement between the full-corpus BPE merge table
-    and one trained on a deterministic 50% document sample (md5 hash
-    gate — both engines materialize the identical sample). Disagreement
-    at round r means the sample's pair statistics diverge at that
-    vocabulary depth — the signal to widen the sample BEFORE shipping
-    the tokenizer.
-
-    Scale: the sampled training is the production path (corpus → dict
-    once, over half the data); the full training is the audit's truth
-    side, run at audit time only. Both dictionaries are vocabulary-
-    sized; the comparison is 8 rows.
-    """
-    from ..caching import scoped_persist
-    from ..operators.text import bpe_train, word_counts
-
-    docs = Catalog(spark, sf_dir).documents
-    gate = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10
-        ).cast("long")
-        % 2
-        == 0
-    )
-    full_m, _ = bpe_train(
-        scoped_persist(word_counts(docs)), BPE_ROUNDS
-    )
-    samp_m, _ = bpe_train(
-        scoped_persist(word_counts(docs.where(gate))), BPE_ROUNDS
-    )
-    # Align by round, padded to BPE_ROUNDS: either training may stop
-    # early on vocabulary exhaustion (empty pair relation), and the
-    # oracle's scalar subqueries then yield NULL symbols with a NULL
-    # agree (NULL = x). A plain zip would silently truncate rows the
-    # oracle still emits. Unreachable on the real corpus (8 merges
-    # never exhaust it) but pinned for degenerate inputs.
-    full_by_r = {r: (a, b) for (r, a, b, _c) in full_m}
-    samp_by_r = {r: (a, b) for (r, a, b, _c) in samp_m}
-    rows = []
-    for r in range(1, BPE_ROUNDS + 1):
-        fa, fb = full_by_r.get(r, (None, None))
-        sa, sb = samp_by_r.get(r, (None, None))
-        agree = (
-            None
-            if None in (fa, fb, sa, sb)
-            else (fa == sa and fb == sb)
-        )
-        rows.append((r, fa, fb, sa, sb, agree))
-    return spark.createDataFrame(
-        rows,
-        "merge_round int, full_a string, full_b string,"
-        " sample_a string, sample_b string, agree boolean",
-    )

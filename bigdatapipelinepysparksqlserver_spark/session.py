@@ -10,8 +10,8 @@ Defaults chosen for 100 TB-scale behavior:
 - dynamic partition overwrite: a ``mode("overwrite").partitionBy(...)``
   write replaces only the partitions its output holds. The partitioned
   store writes (``retrieval``'s postings stores,
-  ``similarity.write_ivfpq_store``, ``stores.vector_store_delete_ids``)
-  rely on it; the lake's staged swap does not
+  ``similarity.write_ivfpq_store``) rely on it; the lake's staged swap
+  does not
 - Arrow for any pandas interchange (the reference's driver-side pandas funnel
   is eliminated, but Pandas-UDF extension ops use Arrow batches)
 """

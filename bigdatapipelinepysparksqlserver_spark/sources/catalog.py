@@ -153,10 +153,6 @@ def load_table_ts_window(
     return out
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLE_NAMES)}
-
-
 # Upper bound for the small-scan parallelism normalizer: scans whose total
 # file bytes exceed this are left alone (they already split into enough
 # tasks; an extra exchange would shuffle real data volume for nothing).

@@ -64,8 +64,7 @@ Writer topology: publishes are normally serialized by the pipeline's
 single-flight ledger (C5). Since r10 the publish lifecycle is the
 shared :class:`~.pointer.VersionedPointerPublisher` protocol, whose
 COMMIT is a conditional pointer put (``SnapshotFS.set_pointer_if``):
-if two publishers do race — the scheduler and a streaming foreachBatch
-publisher are both capable — exactly one wins and the loser's txn/
+if two publishers do race, exactly one wins and the loser's txn/
 manifest are reaped with an explicit retryable
 :class:`~.pointer.ConcurrentPublishError`, never a silent last-writer-
 wins clobber. Pass ``grace_seconds`` > the longest publish when
@@ -564,7 +563,7 @@ class SnapshotLakeTable:
         # publish-time data-quality gates: {name: SQL predicate} every
         # written row must satisfy (SQL CHECK semantics — NULL passes),
         # enforced on the change set of EVERY publish path (full load,
-        # CDC rebuild, merge, streaming sinks) BEFORE anything is
+        # CDC rebuild, merge, partition overwrite) BEFORE anything is
         # claimed or written; a violation raises ExpectationError with
         # per-expectation counts and the lake is untouched. One extra
         # change-set-sized aggregate per gated publish.

@@ -38,7 +38,7 @@ Multi-writer grace window: with the default ``grace_seconds=0`` the
 protocol assumes the single-flight ledger (C5) serializes publishes —
 crashed orphans are reaped immediately at the next ``begin()`` and
 version numbers are reused, the engine's historical behavior. When two
-publishers MAY overlap (scheduler + streaming foreachBatch), set
+publishers MAY overlap, set
 ``grace_seconds`` larger than the longest publish: an in-flight
 claim is then indistinguishable from a crashed orphan only until it
 ages past the grace, so ``begin()`` leaves young claims alone and the

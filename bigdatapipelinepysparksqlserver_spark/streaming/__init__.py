@@ -1,36 +1,8 @@
-"""Structured Streaming equivalents of the engine's batch-CDC semantics.
+"""Structured Streaming sinks and transforms over the engine's batch-CDC
+semantics.
 
-- ``cdc`` — watermarked windowed aggregation, streaming dedup, and a
-  foreachBatch partition-rebuild sink (the streaming twin of
-  ``plans.incremental``).
+- ``cdc`` — watermarked windowed aggregation, streaming dedup, and
+  foreachBatch sinks (partition rebuild, incremental marts, stores).
 - ``metrics`` — a StreamingQueryListener that renders per-batch health
   (input rows, rates, batch duration, watermark) as a DataFrame.
 """
-
-from .cdc import (  # noqa: F401
-    foreach_batch_drift_monitor,
-    foreach_batch_edge_store_append,
-    foreach_batch_incremental_mart,
-    foreach_batch_incremental_mart_publish,
-    foreach_batch_ivf_store_upsert,
-    foreach_batch_lm_quality_gate,
-    foreach_batch_online_copy_gate,
-    foreach_batch_online_corpus_dedup,
-    foreach_batch_online_semantic_dedup,
-    foreach_batch_token_budget_ingest,
-    streaming_hopping_agg,
-    foreach_batch_partition_overwrite,
-    streaming_dedup,
-    streaming_enrich,
-    streaming_hourly_agg,
-    streaming_interval_join,
-    streaming_rolling_actives,
-    streaming_running_totals,
-    streaming_transition_counts,
-    streaming_transition_counts_event_time,
-    streaming_sessionize,
-)
-from .metrics import (  # noqa: F401
-    StreamingHealthListener,
-    attach_health_listener,
-)

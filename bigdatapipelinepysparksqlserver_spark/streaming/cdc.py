@@ -78,47 +78,6 @@ def streaming_dedup(
     return src.dropDuplicates(list(key_cols))
 
 
-def streaming_sessionize(
-    events: DataFrame,
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-    gap: str = "30 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Gap-based sessionization via native ``session_window`` — the
-    streaming-capable twin of the batch lag/running-sum sessionize
-    (queries.relational_queries.sessionize).
-
-    Semantics note: ``session_window`` closes a session when the next
-    event is ≥ gap after the previous (window is [start, last+gap)), so
-    ``session_end`` here is last_event + gap, and an event EXACTLY at
-    the gap boundary starts a new session (the batch query's ``>``
-    keeps it; a difference only for timestamp collisions at exact gap
-    multiples).
-
-    Scale: one shuffle on (user, session-window merge); state per OPEN
-    session only, bounded by the watermark horizon — this is the form
-    that runs on an unbounded stream, where the lag/running-sum window
-    (whole-history sort per user) cannot.
-    """
-    src = events
-    if events.isStreaming:
-        src = events.withWatermark(ts_col, watermark)
-    return (
-        src.groupBy(
-            F.session_window(F.col(ts_col), gap).alias("sw"),
-            F.col(user_col),
-        )
-        .agg(F.count(F.lit(1)).alias("events_in_session"))
-        .select(
-            F.col(user_col),
-            F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
-            "events_in_session",
-        )
-    )
-
-
 def streaming_enrich(
     events: DataFrame,
     dim: DataFrame,
@@ -141,51 +100,6 @@ def streaming_enrich(
     return events.join(F.broadcast(cols), on, "left")
 
 
-def streaming_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str = "user_id",
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    max_delay: str = "1 hour",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Stream-stream equi+interval join: each LEFT event matches RIGHT
-    events with the same key whose timestamp falls in
-    ``[left_ts, left_ts + max_delay]`` — the streaming twin of the batch
-    banded range join (``operators.temporal.range_join``), e.g. "views
-    followed by a purchase within the hour".
-
-    Both sides carry watermarks and the join predicate bounds event-time
-    distance, which is exactly what Structured Streaming needs to EVICT
-    buffered rows: a right row is droppable once the left watermark
-    passes right_ts, a left row once the right watermark passes
-    left_ts + max_delay. Without the time bound the state store grows
-    without limit — the interval predicate is load-bearing, not an
-    optimization. One shuffle per side (hash on the key), state
-    partitioned the same way, so it scales horizontally.
-
-    On batch frames the identical plan is a plain range join (unified
-    semantics), which is how the tests cross-check results.
-    """
-    lw = left.withWatermark(left_ts, watermark) if left.isStreaming else left
-    rw = right.withWatermark(right_ts, watermark) if right.isStreaming else right
-    lhs = lw.alias("l")
-    rhs = rw.alias("r")
-    lts, rts = F.col(f"l.{left_ts}"), F.col(f"r.{right_ts}")
-    return lhs.join(
-        rhs,
-        (F.col(f"l.{key}") == F.col(f"r.{key}"))
-        & (rts >= lts)
-        & (rts <= lts + F.expr(f"INTERVAL {max_delay}")),
-    ).select(
-        F.col(f"l.{key}").alias(key),
-        lts.alias("left_ts"),
-        rts.alias("right_ts"),
-        (rts.cast("double") - lts.cast("double")).alias("delay_seconds"),
-    )
-
-
 def foreach_batch_partition_overwrite(
     lake: LakeTable, transform: Callable[[DataFrame], DataFrame] | None = None
 ) -> Callable[[DataFrame, int], None]:
@@ -200,54 +114,6 @@ def foreach_batch_partition_overwrite(
         if out.isEmpty():
             return
         lake.overwrite_partitions(out)
-
-    return _sink
-
-
-def foreach_batch_keyed_merge(
-    lake,
-    key_cols,
-    delete_col: str | None = None,
-    transform: Callable[[DataFrame], DataFrame] | None = None,
-    max_retries: int = 3,
-) -> Callable[[DataFrame, int], None]:
-    """foreachBatch sink: each micro-batch row-level MERGEs into a
-    :class:`~..sources.lake_snapshot.SnapshotLakeTable` by key
-    (``merge_rows`` — upsert, cross-partition move, ``delete_col``
-    deletes), one CAS-committed publish per batch.
-
-    Exactly-once EFFECTS without a batch ledger: replay safety falls
-    out of merge's net-change discipline, not checkpoint bookkeeping.
-    A crashed-and-replayed micro-batch re-merges rows that are already
-    live, the batch-sized ``exceptAll`` cancels them to an EMPTY
-    change set, and merge publishes nothing — the lake (snapshot id
-    included) is untouched. This holds for deletes too (the key is
-    already gone → no matched row → no net change). The only
-    requirement is the standard foreachBatch one: ``transform`` must
-    be deterministic per batch.
-
-    Concurrency: another publisher (the scheduler's CDC rebuild, a
-    second stream) racing this sink trips either the ``expect_mid``
-    guard or the commit CAS; both raise the retryable
-    :class:`~..sources.pointer.ConcurrentPublishError`, and the sink
-    recomputes against the new live snapshot up to ``max_retries``
-    times — each retry re-reads the moved snapshot, so the merge is
-    never applied twice. Pass a lake constructed with
-    ``grace_seconds`` > the longest publish when writers overlap.
-    """
-    from ..sources.pointer import ConcurrentPublishError
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        out = transform(batch_df) if transform else batch_df
-        if out.isEmpty():
-            return
-        for attempt in range(max_retries + 1):
-            try:
-                lake.merge_rows(out, key_cols=key_cols, delete_col=delete_col)
-                return
-            except ConcurrentPublishError:
-                if attempt == max_retries:
-                    raise
 
     return _sink
 
@@ -345,9 +211,8 @@ def foreach_batch_ivf_store_upsert(
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch sink: continuously-growing IVF cell-partitioned
     vector store — the streaming ingest path of the ANN disk layout
-    (``operators.similarity.write_ivf_partitioned`` is the batch build,
-    ``ivf_partitioned_topk`` the probe; this maintains the store as new
-    embeddings arrive).
+    (``operators.similarity.ivf_partitioned_topk`` is the probe; this
+    maintains the store as new embeddings arrive).
 
     Each micro-batch is cell-assigned with the SAME versioned codebook
     the probes use (``codebook_cells`` = (cell, centroid) tuples, the
@@ -393,118 +258,6 @@ def _prior_batches(spark, path: str, batch_id: int) -> bool:
     )
 
 
-def foreach_batch_online_corpus_dedup(
-    store_path: str,
-    threshold: float = 0.2,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-) -> Callable[[DataFrame, int], None]:
-    """foreachBatch sink: continuously-deduplicated corpus ingestion.
-
-    The streaming form of :func:`~..operators.dedup.
-    minhash_near_duplicates_incremental` — each micro-batch of documents
-    (doc_id, text) is near-dup-probed against everything accepted so
-    far, survivors are appended, and the corpus's LSH band index is
-    maintained as a first-class stored artifact:
-
-    - ``{store}/docs/batch=N``  — accepted (doc_id, text)
-    - ``{store}/bands/batch=N`` — their (doc_id, band, bh) index rows
-
-    Per-batch cost is O(batch) hashing + one bucket join against the
-    fixed-width index — the base corpus is NEVER re-hashed (the index
-    is what makes this viable at 100 TB: re-hashing the base per batch
-    would be O(corpus) per micro-batch forever).
-
-    Accept rule: a batch doc is dropped iff it near-dups an
-    already-accepted doc, or a smaller-id doc of the SAME batch (greedy
-    pairwise over id1 < id2). Guarantee: NO two accepted docs are
-    near-duplicates — the invariant the batch `dedup_apply` query
-    establishes once, maintained online. Like component-canonical
-    dedup, the failure mode is one-sided: a doc can be dropped because
-    of a neighbor that was itself dropped (over-drop, never a kept
-    near-dup pair).
-
-    Exactly-once: both writes go to ``batch=N`` subdirectories in
-    overwrite mode, so a micro-batch replay after a crash rewrites the
-    same directories to the same content (the accept decision is a pure
-    function of the store state before batch N, which replays
-    identically because batch N's own dirs are overwritten, not
-    appended).
-    """
-    import os
-
-    from ..operators.dedup import (
-        minhash_band_store,
-        minhash_near_duplicates_incremental,
-    )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        docs = batch_df.select("doc_id", "text")
-        if docs.isEmpty():
-            return
-        docs = docs.persist()
-        docs_dir = os.path.join(store_path, "docs")
-        bands_dir = os.path.join(store_path, "bands")
-        # exclude THIS batch's dirs so a replay recomputes against the
-        # same base state it saw the first time
-        have_store = _prior_batches(spark, docs_dir, batch_id)
-        if have_store:
-            base = spark.read.parquet(docs_dir).where(
-                F.col("batch") != batch_id
-            ).select("doc_id", "text")
-            base_bands = spark.read.parquet(bands_dir).where(
-                F.col("batch") != batch_id
-            ).select("doc_id", "band", "bh")
-        else:
-            base = spark.createDataFrame([], "doc_id long, text string")
-            base_bands = spark.createDataFrame(
-                [], "doc_id long, band int, bh long"
-            )
-        pairs = minhash_near_duplicates_incremental(
-            base, docs, text_col="text", id_col="doc_id",
-            threshold=threshold, num_hashes=num_hashes, bands=bands,
-            shingle_n=shingle_n, base_bands=base_bands,
-        )
-        base_ids = base.select(F.col("doc_id").alias("bid"))
-        # drop the batch side of every base-batch pair, and the larger
-        # id of every batch-batch pair
-        p = pairs.join(
-            base_ids.withColumnRenamed("bid", "id1"), "id1", "left_semi"
-        ).select(F.col("id2").alias("doc_id"))
-        q = pairs.join(
-            base_ids.withColumnRenamed("bid", "id2"), "id2", "left_semi"
-        ).select(F.col("id1").alias("doc_id"))
-        bb = (
-            pairs.join(base_ids.withColumnRenamed("bid", "id1"), "id1", "left_anti")
-            .join(base_ids.withColumnRenamed("bid", "id2"), "id2", "left_anti")
-            .select(F.col("id2").alias("doc_id"))
-        )
-        drops = p.unionByName(q).unionByName(bb).distinct()
-        accepted = docs.join(drops, "doc_id", "left_anti").persist()
-        accepted.write.mode("overwrite").parquet(
-            os.path.join(docs_dir, f"batch={batch_id}")
-        )
-        minhash_band_store(
-            accepted, "text", "doc_id",
-            num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
-        ).write.mode("overwrite").parquet(
-            os.path.join(bands_dir, f"batch={batch_id}")
-        )
-        docs.unpersist()
-        accepted.unpersist()
-        # drain the scoped persists the incremental-dedup operator
-        # registered on THIS (stream-execution) thread: both writes are
-        # done, and without the release a long-running stream would
-        # accumulate two pinned caches per micro-batch forever — the
-        # scope registry holds strong references, so not even the
-        # ContextCleaner could reclaim them.
-        release_caches()
-
-    return _sink
-
-
 def foreach_batch_online_semantic_dedup(
     store_path: str,
     codebook_cells: list,
@@ -513,8 +266,7 @@ def foreach_batch_online_semantic_dedup(
     vec_col: str = "embedding",
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch sink: continuously semantically-deduplicated
-    embedding ingestion — the streaming form of
-    :func:`~..operators.similarity.semantic_dedup_incremental`.
+    embedding ingestion.
 
     Each micro-batch of vectors is cell-assigned with the versioned
     codebook (``codebook_cells`` = collected (cell, centroid) tuples),
@@ -668,15 +420,6 @@ def streaming_transition_counts(
     ARRIVAL order within the watermark — an event arriving after a
     later-timestamped neighbor was already consumed cannot retract the
     pair it split; the batch twin is the replayable exact form.
-
-    .. deprecated:: prefer
-        :func:`streaming_transition_counts_event_time` for new
-        pipelines — it buffers per-key events until the WATERMARK seals
-        them, so pairs are emitted in event-time order regardless of
-        arrival order (shuffled-arrival pytest ≡ the batch twin), at
-        the cost of watermark-bounded state and emission latency. Use
-        THIS arrival-order form only when sub-watermark latency matters
-        more than late-event exactness.
     """
     import pandas as pd  # local import: only the streaming path needs it
     from pyspark.sql.streaming.state import GroupStateTimeout
@@ -734,129 +477,6 @@ def streaming_transition_counts(
         stateStructType=state_schema,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_transition_counts_event_time(
-    events: DataFrame,
-    watermark: str = "10 minutes",
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """EVENT-TIME-correct streaming transition counter (VERDICT r8 #6):
-    unlike :func:`streaming_transition_counts` (arrival order inside
-    the watermark — an out-of-order event cannot retract the pair it
-    splits), this form BUFFERS each key's events in state and emits a
-    (from_type, to_type) pair only once the watermark has passed the
-    later event — at which point no earlier-timestamped arrival is
-    admissible, so the pair is FINAL. Online results therefore equal
-    the batch ``event_transition_matrix`` over the finalized region
-    under ANY arrival reordering the watermark admits (pytest shuffles
-    arrivals across micro-batches deliberately).
-
-    Mechanics per key:
-    - state = (buffered (ts, id, type) triples not yet finalizable,
-      last finalized type) — O(events inside the watermark horizon)
-      per key, the price of exactness under reordering; the horizon
-      bounds it, exactly like any event-time stream join.
-    - each invocation merges new rows into the buffer (dropping rows
-      already behind the watermark — they are late by contract), then
-      finalizes the sorted prefix with ts < current watermark: pairs
-      chain from the carried last finalized type through the prefix.
-    - an ``EventTimeTimeout`` set at the earliest buffered ts wakes
-      the key when the watermark passes it even if no new events for
-      that key arrive, so finalization never needs a same-key arrival.
-
-    Emitted deltas are final (never revised): downstream sums are
-    exact counts over events the watermark has sealed.
-    """
-    import pandas as pd  # local import: only the streaming path needs it
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    key_type = events.schema[key_col].dataType.simpleString()
-    id_type = events.schema[id_col].dataType.simpleString()
-    out_schema = (
-        f"{key_col} {key_type}, from_type string, to_type string, delta long"
-    )
-    state_schema = (
-        f"buf_ts array<long>, buf_id array<{id_type}>, "
-        "buf_type array<string>, last_type string"
-    )
-
-    def update(key, pdfs, state):
-        (k,) = key
-        if state.exists:
-            buf_ts, buf_id, buf_type, last_type = state.get
-            buf = list(zip(buf_ts, buf_id, buf_type))
-        else:
-            buf, last_type = [], None
-        wm_us = (state.getCurrentWatermarkMs() or 0) * 1000
-        if not state.hasTimedOut:
-            rows = pd.concat(list(pdfs), ignore_index=True)
-            for t, i, ty in zip(
-                rows["__ts_us"].astype("int64").tolist(),
-                rows[id_col].tolist(),
-                rows[type_col].tolist(),
-            ):
-                # late by contract: the watermark already passed this
-                # ts, so pairs around it were (or may have been)
-                # finalized — admitting it would re-split them
-                if t >= wm_us:
-                    buf.append((t, i, ty))
-        # (ts, id) — the batch twin's exact order; ids are homogeneous
-        # within a stream, so native comparison is correct for ints AND
-        # strings (str()-coercing an int id would order "10" < "9" and
-        # diverge from the LEAD window on timestamp ties)
-        buf.sort(key=lambda e: (e[0], e[1]))
-        pairs: dict = {}
-        keep = []
-        for e in buf:
-            if e[0] < wm_us:
-                if last_type is not None:
-                    pr = (last_type, e[2])
-                    pairs[pr] = pairs.get(pr, 0) + 1
-                last_type = e[2]
-            else:
-                keep.append(e)
-        state.update(
-            (
-                [e[0] for e in keep],
-                [e[1] for e in keep],
-                [e[2] for e in keep],
-                last_type,
-            )
-        )
-        if keep:
-            # wake when the watermark passes the earliest buffered event
-            state.setTimeoutTimestamp(keep[0][0] // 1000 + 1)
-        if pairs:
-            yield pd.DataFrame(
-                {
-                    key_col: [k] * len(pairs),
-                    "from_type": [a for a, _ in pairs],
-                    "to_type": [b for _, b in pairs],
-                    "delta": list(pairs.values()),
-                }
-            )
-
-    # the watermark column itself must flow through the projection (a
-    # derived column does not inherit it); the micros twin rides along
-    # so the kernel never touches pandas datetime units
-    src = events.withWatermark(ts_col, watermark).select(
-        F.col(key_col),
-        F.col(ts_col),
-        F.unix_micros(F.col(ts_col)).alias("__ts_us"),
-        F.col(id_col),
-        F.col(type_col),
-    )
-    return src.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
 
 
@@ -1020,71 +640,6 @@ def foreach_batch_drift_monitor(
         )
 
     return sink
-
-
-def foreach_batch_lm_quality_gate(
-    lm_store_path: str,
-    out_path: str,
-    min_avg_log2p: float,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> Callable[[DataFrame, int], None]:
-    """foreachBatch sink: stored-LM perplexity gate on an ingest stream
-    — the online consumer the trigram store exists for (CCNet-style:
-    train once on the reference corpus, gate every incoming batch).
-    Each micro-batch is scored with
-    :func:`~..operators.text.trigram_lm_score_from_store` (stupid
-    backoff, per-doc branch counts) and split:
-
-    - ``{out}/accepted/batch=N`` — docs with ``avg_log2p ≥ threshold``
-      (and ≥ 1 trigram), with their scores and branch counts attached;
-    - ``{out}/rejected/batch=N`` — the rest (too-perplexing docs AND
-      sub-3-token docs, which the scorer cannot rate — a quality gate
-      that silently passed unscorable docs would be a hole), with a
-      ``reject_reason`` column ('low_score' / 'too_short').
-
-    Exactly-once: the verdict for a doc is a pure function of the
-    FROZEN store and the doc text, so a crash-replay of batch N
-    rewrites both dirs (overwrite, not append) to identical content —
-    the drift-monitor convention.
-
-    Scale: the stored-LM probe broadcasts the batch against the
-    hash-sorted count relations (no corpus rescan, no state); the gate
-    itself is a scan-side filter on the scored relation.
-    """
-    import os
-
-    from ..operators.text import trigram_lm_score_from_store
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        docs = batch_df.select(id_col, text_col)
-        if docs.isEmpty():
-            return
-        scored = trigram_lm_score_from_store(
-            spark, lm_store_path, docs, text_col=text_col, id_col=id_col
-        )
-        labeled = docs.join(scored, id_col, "left")
-        accepted = labeled.where(
-            F.col("avg_log2p") >= F.lit(float(min_avg_log2p))
-        )
-        rejected = labeled.where(
-            F.col("avg_log2p").isNull()
-            | (F.col("avg_log2p") < F.lit(float(min_avg_log2p)))
-        ).withColumn(
-            "reject_reason",
-            F.when(F.col("avg_log2p").isNull(), F.lit("too_short")).otherwise(
-                F.lit("low_score")
-            ),
-        )
-        accepted.write.mode("overwrite").parquet(
-            os.path.join(out_path, "accepted", f"batch={batch_id}")
-        )
-        rejected.write.mode("overwrite").parquet(
-            os.path.join(out_path, "rejected", f"batch={batch_id}")
-        )
-
-    return _sink
 
 
 def streaming_rolling_actives(

@@ -11,6 +11,20 @@ from bigdatapipelinepysparksqlserver_spark.session import get_spark  # noqa: E40
 
 
 @pytest.fixture(scope="session")
+def plan_report():
+    """tools/plan_report.py, loaded by path (tools/ is not a package)."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "plan_report",
+        os.path.join(os.path.dirname(__file__), "..", "tools", "plan_report.py"),
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+@pytest.fixture(scope="session")
 def spark():
     s = get_spark("pytest", master="local[4]", shuffle_partitions=4)
     yield s

@@ -322,41 +322,6 @@ def test_store_path_sweeps_dead_process_siblings(tmp_path, monkeypatch):
     assert path.endswith(f"_p{os.getpid()}")
 
 
-@pytest.mark.slow
-def test_postings_store_append_equals_rebuild(spark, tmp_path):
-    """Incremental ingest contract: append(A)+append(B) probe results
-    are BIT-EQUAL to a rebuild over A∪B (exact-integer stats and dfs
-    recompose across batches), and replaying a batch after a crash is
-    idempotent (overwrite-own-directory semantics)."""
-    import pyspark.sql.functions as F
-
-    from bigdatapipelinepysparksqlserver_spark.operators.retrieval import (
-        bm25_from_store,
-        build_postings_store,
-        postings_store_append_batch,
-    )
-    from bigdatapipelinepysparksqlserver_spark.sources.catalog import Catalog
-
-    docs = Catalog(spark, "/root/testdata/sf0.001").documents
-    batch_a = docs.where(F.col("doc_id") % 2 == 0)
-    batch_b = docs.where(F.col("doc_id") % 2 == 1)
-    full = str(tmp_path / "full_store")
-    incr = str(tmp_path / "incr_store")
-    build_postings_store(docs, full)
-    postings_store_append_batch(batch_a, incr, batch_id=0)
-    postings_store_append_batch(batch_b, incr, batch_id=1)
-
-    terms = ["spark", "hash", "window"]
-    want = [tuple(r) for r in bm25_from_store(spark, full, terms, top_n=10).collect()]
-    got = [tuple(r) for r in bm25_from_store(spark, incr, terms, top_n=10).collect()]
-    assert got == want and len(got) == 10
-
-    # crash replay: re-appending batch 1 leaves the store unchanged
-    postings_store_append_batch(batch_b, incr, batch_id=1)
-    again = [tuple(r) for r in bm25_from_store(spark, incr, terms, top_n=10).collect()]
-    assert again == want
-
-
 def test_postings_store_df_guard_bounds_stopword_probe(spark, tmp_path):
     """Skew guard: a term present in EVERY doc (corpus-sized postings —
     the one unbounded object in a term-bucketed store) is dropped

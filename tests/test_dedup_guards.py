@@ -263,41 +263,14 @@ def test_pair_budget_guard_vetoes_and_passes(spark):
         )
 
 
-def test_quadratic_baseline_queries_raise_past_budget(spark, monkeypatch):
-    """Both registered exact baselines engage their guards: shrink the
-    budgets and assert the graded queries fail FAST (pre-flight, before
-    any pair expansion) with the scale path named."""
-    import pytest
+def test_dedup_apply_keeps_one_member_per_cluster(spark, tmp_path):
+    """dedup_apply's retention on a hand-built corpus: a near-dup pair
+    (a MinHash component from connected_components_star) keeps its
+    lowest id, an exact-dup group keeps its min-id canonical, and a
+    singleton survives untouched."""
+    from bigdatapipelinepysparksqlserver_spark.queries.dedup_queries import dedup_apply
 
-    import bigdatapipelinepysparksqlserver_spark.queries.dedup_queries as dq
-    import bigdatapipelinepysparksqlserver_spark.queries.similarity_queries as sq
-    from bigdatapipelinepysparksqlserver_spark.operators.dedup import (
-        PairBudgetExceeded,
-    )
-
-    monkeypatch.setattr(dq, "EXACT_PAIR_BUDGET", 10)
-    with pytest.raises(PairBudgetExceeded, match="dedup_minhash"):
-        dq.dedup_ngram_jaccard(spark, "/root/testdata/sf0.001").collect()
-
-    monkeypatch.setattr(sq, "EXACT_EMB_PAIR_BUDGET", 10)
-    with pytest.raises(PairBudgetExceeded, match="emb_neardup_lsh_sized"):
-        sq.emb_neardup_exact(spark, "/root/testdata/sf0.001").collect()
-
-
-def test_dedup_keep_best_retention_policy(spark, tmp_path):
-    """Quality-aware retention on a hand-built corpus: a near-dup
-    cluster must keep its HIGHEST-quality member (not the lowest id),
-    exact-dup groups fold into their rep's cluster, singletons survive
-    untouched, and every cluster emits exactly one row with the right
-    member count."""
-    import pyspark.sql.functions as F
-
-    from bigdatapipelinepysparksqlserver_spark.queries.dedup_queries import (
-        dedup_keep_best,
-    )
-
-    # near-dup pair: same long text, one word changed, the HIGHER id
-    # (11) gets the cleaner text (more stopwords => higher quality)
+    # near-dup pair: same long text, one word changed
     base = (
         "the quick brown fox jumps over the lazy dog and runs to the "
         "river in the morning light with a calm and steady pace"
@@ -315,15 +288,9 @@ def test_dedup_keep_best_retention_policy(spark, tmp_path):
         F.lit("en").alias("lang"), F.length("text").alias("n_chars"),
         F.lit("src").alias("source"),
     )
-    out = str(tmp_path / "kb_docs")
+    out = str(tmp_path / "apply_docs")
     docs.repartition(4).write.parquet(f"{out}/documents.parquet")
 
-    got = {
-        r.doc_id: r for r in dedup_keep_best(spark, out).collect()
-    }
-    # quality("the quick...base") > quality(near variant): base has one
-    # more stopword-regex hit in the same token count
-    assert set(got) == {11, 20, 30}
-    assert got[11].n_members == 2 and got[11].cluster == 10
-    assert got[20].n_members == 1 and got[20].cluster == 20
-    assert got[30].n_members == 2 and got[30].cluster == 30
+    got = {r.doc_id: r for r in dedup_apply(spark, out).collect()}
+    assert set(got) == {10, 20, 30}
+    assert got[20].n_chars == len(rows[2][1])

@@ -208,74 +208,6 @@ def test_merge_null_fills_columns_the_batch_lacks(spark, tmp_path):
     assert rows[1] == (1.0, "a")
 
 
-@pytest.mark.slow
-def test_foreach_batch_keyed_merge_replay_safe(spark, tmp_path):
-    """The streaming merge sink: a micro-batch merges by key; a
-    REPLAYED batch cancels to an empty net change and publishes
-    nothing (snapshot id unchanged — exactly-once effects from the
-    net-change discipline, no batch ledger); deletes replay safely
-    too; ConcurrentPublishError is retried against the moved
-    snapshot."""
-    from bigdatapipelinepysparksqlserver_spark.streaming.cdc import (
-        foreach_batch_keyed_merge,
-    )
-
-    lake = SnapshotLakeTable(
-        spark,
-        str(tmp_path / "lake"),
-        partition_cols=("ym",),
-        schema="id int, amt double, ym int",
-        retain=6,
-    )
-    lake.write_full(
-        spark.createDataFrame(
-            [(1, 1.0, 202405), (2, 2.0, 202406)], "id int, amt double, ym int"
-        )
-    )
-    sink = foreach_batch_keyed_merge(lake, key_cols=["id"], delete_col="is_del")
-
-    batch = spark.createDataFrame(
-        [(2, 22.0, 202406, False), (3, 3.0, 202407, False), (1, None, None, True)],
-        "id int, amt double, ym int, is_del boolean",
-    )
-    sink(batch, 0)
-    after = lake.current_id()
-    assert sorted((r.id, r.amt) for r in lake.read().collect()) == [
-        (2, 22.0), (3, 3.0),
-    ]
-    # crash-replay of the SAME batch: no-op, no new snapshot
-    sink(batch, 0)
-    assert lake.current_id() == after
-    assert sorted((r.id, r.amt) for r in lake.read().collect()) == [
-        (2, 22.0), (3, 3.0),
-    ]
-    # empty batch: no-op
-    sink(batch.where("id < 0"), 1)
-    assert lake.current_id() == after
-
-    # a concurrent publisher moving the pointer mid-merge: first
-    # attempt raises, the retry recomputes against the new snapshot
-    calls = {"n": 0}
-    orig = lake.merge_rows
-
-    def flaky(*a, **kw):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise ConcurrentPublishError("simulated race")
-        return orig(*a, **kw)
-
-    lake.merge_rows = flaky
-    sink(
-        spark.createDataFrame(
-            [(4, 4.0, 202408, False)], "id int, amt double, ym int, is_del boolean"
-        ),
-        2,
-    )
-    lake.merge_rows = orig
-    assert calls["n"] == 2
-    assert (4, 4.0) in {(r.id, r.amt) for r in lake.read().collect()}
-
-
 def test_history_metadata_board(spark, tmp_path):
     """history(): one metadata row per readable snapshot, newest
     first — parent chain, live flag, written-partition counts, zone

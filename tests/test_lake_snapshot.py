@@ -657,7 +657,7 @@ def test_streaming_sink_publishes_atomic_snapshots(spark, tmp_path):
     manifest publish (continuous CDC with snapshot isolation). Replays
     are idempotent in CONTENT (C4) and an empty batch publishes
     nothing; every batch leaves a whole readable snapshot behind."""
-    from bigdatapipelinepysparksqlserver_spark.streaming import (
+    from bigdatapipelinepysparksqlserver_spark.streaming.cdc import (
         foreach_batch_partition_overwrite,
     )
 

@@ -95,19 +95,17 @@ def all_plans(spark):
     return {name: plan_of(spec.fn(spark, SF)) for name, spec in REGISTRY.items()}
 
 
-def test_no_cartesian_products_anywhere(all_plans):
+def test_no_cartesian_products_anywhere(all_plans, plan_report):
     """Every registered query except the documented brute-force ANN
-    baselines must be cartesian-free. The other allowed queries cross
+    baseline must be cartesian-free. The other allowed queries cross
     join a 1-row scalar aggregate as a broadcast (the legitimate
     scalar-subquery shape). Every allowed entry must still be registered
     and still carry the node it is allowed for, so a stale entry fails
     here instead of silently widening the allowance."""
-    nodes = ("CartesianProduct", "BroadcastNestedLoopJoin")
+    nodes = plan_report.CARTESIAN_NODES
     allowed = {
         "ann_topk_cosine",
-        "emb_neardup_exact",
-        "classifier_calibration",  # 1-row decile-edges broadcast
-        "ab_conversion_chi2",  # 1-row chi2-statistic broadcast (same shape)
+        "ab_conversion_chi2",  # 1-row chi2-statistic broadcast
         "value_drift_psi",  # 1-row midpoint/totals broadcasts (same shape)
         "value_drift_ks",  # 1-row midpoint/totals broadcasts (same shape)
         "copurchase_triangles_node_est",  # 1-row est-total broadcast (same shape)
@@ -125,80 +123,56 @@ def test_no_cartesian_products_anywhere(all_plans):
     assert offenders == []
 
 
-def test_no_python_row_udfs_in_relational_surface(all_plans):
+def test_no_python_row_udfs_in_relational_surface(all_plans, plan_report):
     """Zero-Python-UDF policy (§2.10): no registered plan has a
     BatchEvalPython, ArrowEvalPython or MapInPandas node.
     (semantic_dedup's BLAS assignment path is MapInPandas but engages
     only past BLAS_CELL_THRESHOLD cells — at this SF the policy-sized
     codebook stays on the literal projection, which is what this sweep
     asserts.)"""
-    nodes = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas")
+    nodes = plan_report.PY_UDF_NODES
     offenders = [name for name, plan in all_plans.items() if any(x in plan for x in nodes)]
     assert offenders == []
 
 
 def test_ivf_partitioned_probe_prunes_to_probed_cells(spark):
-    """The graded IVF-store query's probe scan must show PartitionFilters
-    carrying EXACTLY the probed cells (cell IN (...)) — the contract that
-    makes the store's disk layout a real index at 100 TB: non-probed cell
-    directories are excluded at file-listing time, never opened."""
+    """Pruning on the IVFPQ store is REAL, not just present: a 1-query,
+    n_probe=2 probe of the store the graded `ann_ivfpq_topk` builds
+    carries exactly 2 cells in PartitionFilters, a strict subset of the
+    codebook's, so non-probed cell directories are excluded at
+    file-listing time. (test_ivfpq_probe_prunes_and_reads_codes_only
+    checks the graded probe's own cell set.)"""
     import re
 
-    from bigdatapipelinepysparksqlserver_spark.operators.similarity import _ivf_py_scores
+    from bigdatapipelinepysparksqlserver_spark.operators.similarity import (
+        ivfpq_topk,
+        pq_sub_codebooks,
+    )
     from bigdatapipelinepysparksqlserver_spark.queries.similarity_queries import (
-        IVF_ARTIFACT_N_PROBE,
-        N_QUERY_VECS,
+        PQ_CODES,
+        PQ_M,
+        _ivfpq_store_path,
         _load_ivf_artifact,
     )
     from bigdatapipelinepysparksqlserver_spark.sources.catalog import Catalog
 
-    def partition_filter_cells(plan: str) -> set[int]:
-        assert "PartitionFilters: [" in plan
-        tail = plan.split("PartitionFilters: [")[1]
-        m = re.search(r"cell#\d+ (?:INSET ([\d, ]+)|IN \(([\d,\s]+)\))", tail[:400])
-        assert m, f"no cell IN-list in PartitionFilters: {tail[:400]}"
-        return {
-            int(x) for x in (m.group(1) or m.group(2)).split(",") if x.strip()
-        }
-
-    df = REGISTRY["ann_ivf_partitioned_topk"].fn(spark, SF)
-    plan_cells = partition_filter_cells(plan_of(df))
-
-    # independently recompute the expected probe set with the driver twin
-    art = _load_ivf_artifact()
-    cells = sorted((int(c), [float(x) for x in v]) for c, v in art["centroids"].items())
-    q = (
-        Catalog(spark, SF).embeddings
-        .where(F.col("vec_id") < N_QUERY_VECS)
-        .select("vec_id", "embedding")
-        .collect()
+    REGISTRY["ann_ivfpq_topk"].fn(spark, SF)  # writes the store
+    cells = sorted(
+        (int(c), [float(x) for x in v]) for c, v in _load_ivf_artifact()["centroids"].items()
     )
-    expected = set()
-    for r in q:
-        scores = _ivf_py_scores(list(r.embedding), cells)
-        scores.sort(key=lambda t: (-t[0], t[1]))
-        expected.update(c for _, c in scores[:IVF_ARTIFACT_N_PROBE])
-    assert plan_cells == expected
-
-    # pruning is REAL, not just present: a 1-query / n_probe=2 probe of
-    # the same store must carry a strict subset of the cells — non-probed
-    # directories excluded at file-listing time
-    from bigdatapipelinepysparksqlserver_spark.operators.similarity import (
-        ivf_partitioned_topk,
-    )
-    from bigdatapipelinepysparksqlserver_spark.queries.similarity_queries import (
-        _ivf_store_path,
-    )
-
     emb = Catalog(spark, SF).embeddings
     codebook = spark.createDataFrame(cells, ["cell", "centroid"]).select(
         "cell", F.col("centroid").cast("array<double>").alias("centroid")
     )
-    narrow = ivf_partitioned_topk(
-        spark, _ivf_store_path(SF), emb.where(F.col("vec_id") == 0),
-        codebook, n_probe=2, k=5,
+    narrow = ivfpq_topk(
+        spark, _ivfpq_store_path(SF), emb.where(F.col("vec_id") == 0),
+        codebook, pq_sub_codebooks(emb, m=PQ_M, n_codes=PQ_CODES),
+        n_probe=2, k=5,
     )
-    narrow_cells = partition_filter_cells(plan_of(narrow))
+    tail = plan_of(narrow).split("PartitionFilters: [")[1]
+    m = re.search(r"cell#\d+ (?:INSET ([\d, ]+)|IN \(([\d,\s]+)\))", tail[:400])
+    assert m, f"no cell IN-list in PartitionFilters: {tail[:400]}"
+    narrow_cells = {int(x) for x in (m.group(1) or m.group(2)).split(",") if x.strip()}
     assert len(narrow_cells) == 2
     assert narrow_cells < {c for c, _ in cells}
 
@@ -258,7 +232,7 @@ def test_ivfpq_probe_prunes_and_reads_codes_only(spark):
 
 
 def test_topk_plans_as_take_ordered(spark):
-    plan = plan_of(REGISTRY["top_customers"].fn(spark, SF))
+    plan = plan_of(REGISTRY["tpch_q3"].fn(spark, SF))
     assert "TakeOrderedAndProject" in plan  # per-partition heap, no global sort
 
 
@@ -388,16 +362,6 @@ def test_no_single_partition_windows_anywhere(spark):
         if has_global_window(logical):
             offenders.append(name)
     assert offenders == []
-
-
-def test_semantic_incremental_probe_prunes_to_batch_cells(spark):
-    """semantic_dedup_incremental's store scan must carry the batch's
-    probe cells as PartitionFilters — ingest reads only the matching
-    cell directories of the corpus store, never the whole index."""
-    plan = plan_of(REGISTRY["semantic_dedup_incremental"].fn(spark, SF))
-    assert "PartitionFilters: [" in plan
-    seg = plan.split("PartitionFilters")[1][:200]
-    assert "cell" in seg and "IN" in seg.upper()
 
 
 def test_user_streaks_two_exchanges(spark):

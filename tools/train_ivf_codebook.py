@@ -2,10 +2,9 @@
 
 Trains the seeded KMeans coarse quantizer ONCE, offline, and versions
 the resulting codebook as a JSON artifact inside the package
-(`bigdatapipelinepysparksqlserver_spark/artifacts/`). The queries
-`ann_ivf_partitioned_topk`, `ann_ivfpq_topk` and
-`semantic_dedup_incremental` load the artifact, so their query paths
-contain NO training — assignment is a pure scan-side projection over
+(`bigdatapipelinepysparksqlserver_spark/artifacts/`). The query
+`ann_ivfpq_topk` loads the artifact, so its query path contains NO
+training — assignment is a pure scan-side projection over
 literal centroids, replayable in the DuckDB oracle.
 
 Centroid components are rounded to 6 dp by the trainer
