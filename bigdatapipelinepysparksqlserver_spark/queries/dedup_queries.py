@@ -52,19 +52,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# word n-gram Jaccard near-dup (exact, SQL-expressible) — the quadratic
-# baseline the MinHash variant approximates; threshold keeps output small
-# --------------------------------------------------------------------------
-
-
-# exact-baseline pair budget: well above every local SF's estimate (sf0.1
-# measures ~5.6 M shingle-bucket pairs) and well below anything a single
-# rehearsal machine should expand — at sf10 the estimate crosses it and
-# the baseline fails fast with the scale path's name (pytest-asserted),
-# which is the "contractually bounded" ledger entry for the quadratic baseline
-
-
-# --------------------------------------------------------------------------
 # MinHash + LSH near-dup — the 100 TB-scale dedup path. Oracle-checked:
 # the portable hash family lets DuckDB replay signatures → bands →
 # candidates → exact-Jaccard verify and land on the identical pair list.
@@ -352,17 +339,3 @@ def dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(reps.select("doc_id"), "doc_id", "left_semi")
         .join(drop_cluster_members, "doc_id", "left_anti")
     )
-
-
-# --------------------------------------------------------------------------
-# quality-aware dedup retention: keep the BEST member per duplicate
-# cluster, not an arbitrary one — the policy real curation pipelines
-# run (the canonical copy should be the cleanest, not the lowest id)
-# --------------------------------------------------------------------------
-
-
-# --------------------------------------------------------------------------
-# prefix-filtered set-similarity join (PPJoin-style candidate generation)
-# --------------------------------------------------------------------------
-
-

@@ -373,13 +373,3 @@ def lake_zone_readwhere_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(root, ignore_errors=True)
-
-
-# Row-level MERGE oracle: a REPLAYING oracle — the lake is seeded from
-# orders and one deterministic merge batch (update every 101st key,
-# delete every 211th non-updated key, insert a mirrored -key row for
-# every 307th) is replayed by DuckDB as plain set algebra over orders.
-# Any merge defect (missed match, wrong partition routing, double
-# apply, lost row) diverges from the straight replay.
-
-

@@ -310,11 +310,6 @@ def window_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# O-extension: deterministic top-k (TakeOrderedAndProject, no global sort)
-# --------------------------------------------------------------------------
-
-
-# --------------------------------------------------------------------------
 # TPC-H Q3 (shipping priority) — join-heavy with selective filters
 # --------------------------------------------------------------------------
 
@@ -1349,11 +1344,6 @@ def value_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_outliers").cast("bigint").alias("n_outliers"),
         )
     )
-
-
-# --------------------------------------------------------------------------
-# CUSUM level-shift detection: the sequential monitor, made parallel
-# --------------------------------------------------------------------------
 
 
 # --------------------------------------------------------------------------

@@ -95,16 +95,10 @@ def ann_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return brute_force_topk(emb, q, id_col="vec_id", vec_col="embedding", k=TOP_K)
 
 
-# --------------------------------------------------------------------------
-# exact embedding-cosine near-duplicate pairs (oracle-checked)
-# --------------------------------------------------------------------------
-
-# the synthetic embeddings are near-orthogonal (max pairwise cosine ≈ 0.51
-# at sf0.01); 0.4 keeps the "near-dup" set small but non-empty.
+# embedding near-duplicate threshold: the synthetic embeddings are
+# near-orthogonal (max pairwise cosine ≈ 0.51 at sf0.01); 0.4 keeps the
+# "near-dup" set small but non-empty.
 EMB_NEARDUP_THRESHOLD = 0.4
-
-
-# (sf0.1: 2 M pairs); a 100x corpus (2e10 pairs) fails fast with guidance
 
 
 # --------------------------------------------------------------------------
@@ -380,11 +374,6 @@ def semantic_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         vec_col="embedding",
         threshold=EMB_NEARDUP_THRESHOLD,
     )
-
-
-# --------------------------------------------------------------------------
-# incremental semantic dedup: batch probes the cell-partitioned store
-# --------------------------------------------------------------------------
 
 
 # --------------------------------------------------------------------------

@@ -466,11 +466,6 @@ SPLIT_BOUNDS = (("train", "f5"), ("val", "fa"), ("test", None))
 
 
 # --------------------------------------------------------------------------
-# classifier calibration: heuristic quality by model-score decile
-# --------------------------------------------------------------------------
-
-
-# --------------------------------------------------------------------------
 # trigram LM with stupid backoff — the order-3 upgrade of the stored
 # bigram gate (VERDICT r7 #7)
 # --------------------------------------------------------------------------
@@ -709,14 +704,3 @@ def bpe_vocab_top(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("corpus_count"), "token")
         .limit(20)
     )
-
-
-# At 100 TB nobody trains a tokenizer on the full corpus — you train on
-# a deterministic sample and need to KNOW the sample was big enough.
-# This audit trains twice (full corpus vs md5-gated half) and compares
-# the merge tables round by round, in-engine and oracle-replayed: the
-# agreement column is the measured answer to "was the sample
-# representative" (measure the approximation against truth, don't
-# assert it).
-
-
