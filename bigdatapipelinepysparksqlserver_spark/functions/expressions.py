@@ -67,13 +67,13 @@ def half_open_window(ts: Column | str, start: datetime | None, end: datetime) ->
     return (c >= F.lit(start)) & upper
 
 
-def dec(c: Column | str, precision: int = 18, scale: int = 2) -> Column:
-    """Cast to DecimalType — the engine's money type end-to-end.
+def dec(c: Column | str) -> Column:
+    """Cast to DECIMAL(18,2) — the engine's money type end-to-end.
 
     Decimal aggregation is exact and order-independent, which is what makes
     two-engine reconciliation (and the driver's value-hash) deterministic;
     double sums are neither.
     """
     c = F.col(c) if isinstance(c, str) else c
-    return c.cast(f"decimal({precision},{scale})")
+    return c.cast("decimal(18,2)")
 

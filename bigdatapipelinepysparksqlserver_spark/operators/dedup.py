@@ -320,10 +320,10 @@ def pairwise_jaccard(
     pairs: DataFrame,
     text_col: str,
     id_col: str,
-    shingle_n: int = 3,
 ) -> DataFrame:
-    """Exact Jaccard for an explicit (id1, id2) candidate list, computed
-    per pair by array intersection — the verify stage of the LSH path.
+    """Exact Jaccard of word 3-gram shingle sets (``ngram_shingles``'
+    default) for an explicit (id1, id2) candidate list, computed per
+    pair by array intersection — the verify stage of the LSH path.
 
     Scale: cost is proportional to CANDIDATES, never corpus. Each side of
     the pair list joins the docs table once (shingle arrays are computed
@@ -338,7 +338,7 @@ def pairwise_jaccard(
         F.split(F.trim(F.col(text_col)), " ").alias("__words"),
     ).select(
         F.col("__id"),
-        shingle_array_from_words(F.col("__words"), shingle_n).alias("__sh"),
+        shingle_array_from_words(F.col("__words"), 3).alias("__sh"),
     )
     s1 = sh.select(F.col("__id").alias("id1"), F.col("__sh").alias("__sh1"))
     s2 = sh.select(F.col("__id").alias("id2"), F.col("__sh").alias("__sh2"))
@@ -359,9 +359,9 @@ def minhash_near_duplicates(
     threshold: float,
     num_hashes: int = 64,
     bands: int = 16,
-    shingle_n: int = 3,
 ) -> DataFrame:
-    """MinHash→LSH→exact-verify near-duplicate pairs (the 100 TB dedup path).
+    """MinHash→LSH→exact-verify near-duplicate pairs (the 100 TB dedup path)
+    over word 3-gram shingles.
 
     Returns (id1, id2, jaccard rounded to 6dp) for verified pairs ≥ threshold.
     """
@@ -371,7 +371,7 @@ def minhash_near_duplicates(
     # The groupBy's map-side partial MIN collapses the shuffle to
     # ~num_hashes longs per (doc, source partition) — doc-cardinality, not
     # shingle-cardinality — which scales fine.
-    shingled = ngram_shingles(df, text_col=text_col, id_col=id_col, n=shingle_n)
+    shingled = ngram_shingles(df, text_col=text_col, id_col=id_col)
     sigs = minhash_signatures(shingled, id_col=id_col, num_hashes=num_hashes)
     # persist: two consumers (doc prune + verify) must not recompute the
     # LSH subtree. The operator returns a lazy plan referencing cands, so
@@ -391,9 +391,7 @@ def minhash_near_duplicates(
     # scan), then each pair fetches its two shingle sets by id join and
     # intersects row-locally.
     cand_docs = df.join(F.broadcast(cand_ids), id_col, "left_semi")
-    pairs = pairwise_jaccard(
-        cand_docs, cands, text_col=text_col, id_col=id_col, shingle_n=shingle_n
-    )
+    pairs = pairwise_jaccard(cand_docs, cands, text_col=text_col, id_col=id_col)
     return pairs.where(F.col("jaccard") >= threshold).select(
         "id1", "id2", F.round("jaccard", 6).alias("jaccard")
     )
@@ -405,20 +403,14 @@ def minhash_band_store(
     id_col: str,
     num_hashes: int = 64,
     bands: int = 16,
-    shingle_n: int = 3,
 ) -> DataFrame:
-    """The persistable LSH index of a corpus: (id, band, bh) rows.
-
-    This is the artifact a production corpus maintains alongside the
-    documents (computed once per doc at ingest, appended per batch):
-    incremental dedup then probes it directly instead of re-hashing the
-    whole base corpus per batch — see
-    :func:`minhash_near_duplicates_incremental` (``base_bands=``).
-    Fixed-width rows (8 B id + band int +
-    8 B hash), bands× the corpus cardinality.
+    """The LSH index of a corpus over word 3-gram shingles: (id, band,
+    bh) rows, which :func:`minhash_near_duplicates_incremental` probes.
+    Fixed-width rows (8 B id + band int + 8 B hash), bands× the corpus
+    cardinality.
     """
     sigs = minhash_signatures(
-        ngram_shingles(docs, text_col=text_col, id_col=id_col, n=shingle_n),
+        ngram_shingles(docs, text_col=text_col, id_col=id_col),
         id_col=id_col, num_hashes=num_hashes,
     )
     return band_rows(sigs, id_col, num_hashes, bands)
@@ -432,8 +424,6 @@ def minhash_near_duplicates_incremental(
     threshold: float,
     num_hashes: int = 64,
     bands: int = 16,
-    shingle_n: int = 3,
-    base_bands: "DataFrame | None" = None,
 ) -> DataFrame:
     """Incremental corpus dedup: near-dup pairs introduced by a NEW
     batch against an existing base corpus (and within the batch) —
@@ -449,12 +439,7 @@ def minhash_near_duplicates_incremental(
     the base costs bucket_size candidates per probing batch doc —
     linear, not quadratic, so no cap tier is needed on this path.
 
-    In production the base's signature/band relation is a STORED
-    artifact maintained alongside the corpus (computed once per doc at
-    ingest — :func:`minhash_band_store`, appended per accepted batch):
-    pass it as ``base_bands`` and the base corpus is never re-hashed —
-    per-batch cost is then O(batch) hashing + a bucket join against the
-    fixed-width index. With ``base_bands=None`` the index is recomputed
+    The base's band index (:func:`minhash_band_store`) is recomputed
     from ``base``, keeping the call self-contained and oracle-checkable.
 
     Returns (id1 < id2, jaccard ≥ threshold) pairs where at least one
@@ -473,15 +458,12 @@ def minhash_near_duplicates_incremental(
     """
     b_sides = batch.select(F.col(id_col), F.col(text_col))
     a_sides = base.select(F.col(id_col), F.col(text_col))
-    if base_bands is None:
-        base_bands = minhash_band_store(
-            a_sides, text_col, id_col,
-            num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
-        )
+    base_bands = minhash_band_store(
+        a_sides, text_col, id_col, num_hashes=num_hashes, bands=bands
+    )
     probe = scoped_persist(
         minhash_band_store(
-            b_sides, text_col, id_col,
-            num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
+            b_sides, text_col, id_col, num_hashes=num_hashes, bands=bands
         ).select("band", "bh", F.col(id_col).alias("__pid"))
     )
     # TWO joins, not one join against (base ∪ batch): unioning the base
@@ -522,9 +504,7 @@ def minhash_near_duplicates_incremental(
     # backfill batches — a forced broadcast would OOM exactly then. AQE
     # broadcasts when the candidate list is actually small.
     cand_docs = docs.join(cand_ids, id_col, "left_semi")
-    pairs = pairwise_jaccard(
-        cand_docs, cands, text_col=text_col, id_col=id_col, shingle_n=shingle_n
-    )
+    pairs = pairwise_jaccard(cand_docs, cands, text_col=text_col, id_col=id_col)
     return pairs.where(F.col("jaccard") >= threshold).select(
         "id1", "id2", F.round("jaccard", 6).alias("jaccard")
     )
@@ -537,7 +517,6 @@ def minhash_near_duplicates_collapsed(
     threshold: float,
     num_hashes: int = 64,
     bands: int = 16,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Exact-collapse → MinHash near-dup on DISTINCT texts — the
     boilerplate-proof production shape of :func:`minhash_near_duplicates`.
@@ -583,7 +562,6 @@ def minhash_near_duplicates_collapsed(
         threshold=threshold,
         num_hashes=num_hashes,
         bands=bands,
-        shingle_n=shingle_n,
     )
     return (
         pairs.join(counts.withColumnRenamed("__rid", "id1"), "id1")
@@ -661,7 +639,6 @@ def hamming_neighbors_wide(
     id_col: str,
     max_distance: int = 3,
     block_bits: int = 15,
-    bucket_cap: int = 2048,
 ) -> DataFrame:
     """Hamming pairs over the 120-bit wide signature with POLICY-SIZED
     block width.
@@ -679,7 +656,7 @@ def hamming_neighbors_wide(
 
     Scale: (block, value) rows go through the SHARED two-tier
     :func:`grouped_pair_enumeration` carrying IDS ONLY (in-row expansion
-    under ``bucket_cap``, distributed self-join above — a hot block
+    under a 2048-id cap, distributed self-join above — a hot block
     value never materializes a quadratic array in one task), then the
     16-byte signatures REJOIN for the bit_count verify,
     candidate-proportionally.
@@ -698,7 +675,7 @@ def hamming_neighbors_wide(
         F.expr(f"stack(4, {stack_args})").alias("blk", "val"),
     )
     pairs = grouped_pair_enumeration(
-        exploded, ["blk", "val"], id_col, bucket_cap=bucket_cap
+        exploded, ["blk", "val"], id_col, bucket_cap=2048
     ).dropDuplicates(["id1", "id2"])
     s1 = signatures.select(
         F.col(id_col).alias("id1"),
@@ -721,13 +698,8 @@ def hamming_neighbors_wide(
     )
 
 
-def connected_components_star(
-    edges: DataFrame,
-    id1: str = "id1",
-    id2: str = "id2",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Connected components of an undirected pair list: returns
+def connected_components_star(edges: DataFrame) -> DataFrame:
+    """Connected components of an undirected (id1, id2) pair list: returns
     (doc_id, component) for every node on an edge, with component = the
     smallest id in its cluster (the canonical representative a dedup run
     keeps). This is the step that turns pairwise near-dup MATCHES into
@@ -786,8 +758,8 @@ def connected_components_star(
 
     oriented = (
         edges.select(
-            F.greatest(F.col(id1), F.col(id2)).alias("hi"),
-            F.least(F.col(id1), F.col(id2)).alias("lo"),
+            F.greatest(F.col("id1"), F.col("id2")).alias("hi"),
+            F.least(F.col("id1"), F.col("id2")).alias("lo"),
         )
         .where(F.col("hi") != F.col("lo"))
         .distinct()
@@ -856,7 +828,7 @@ def connected_components_star(
 
     cur = contracted
     free_prev = None  # never free contracted mid-loop: nodes reads it lazily
-    for _ in range(max_iter):
+    for _ in range(50):  # a cap: the rounds converge in O(log² n)
         if _is_star_forest(cur):
             break
         # large-star over the symmetrized edges: (v, m(u)) for v > u

@@ -25,19 +25,14 @@ from pyspark.sql import DataFrame
 from ..caching import scoped_persist
 
 PAGERANK_SCALE = 10**12
+PAGERANK_DAMPING_PCT = 85
 
 
-def pagerank(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    iters: int = 3,
-    damping_pct: int = 85,
-    scale: int = PAGERANK_SCALE,
-) -> DataFrame:
-    """Fixed-point PageRank over a directed edge list (pass both
-    directions for an undirected graph). Returns (node, rank) with rank
-    in integer ``scale``-units; ranks sum to ~scale.
+def pagerank(edges: DataFrame, iters: int = 3) -> DataFrame:
+    """Fixed-point PageRank over a directed (src, dst) edge list (pass
+    both directions for an undirected graph). Returns (node, rank) with
+    rank in integer units of scale = ``PAGERANK_SCALE``; ranks sum to
+    ~scale. With d = ``PAGERANK_DAMPING_PCT``:
 
     r₀ = scale DIV N;
     rᵢ₊₁(v) = (scale·(100−d)) DIV (100·N)
@@ -68,11 +63,7 @@ def pagerank(
     small constant by contract (rank deltas decay geometrically; 3
     rounds is the recommendation-feature regime).
     """
-    e = scoped_persist(
-        edges.select(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-        )
-    )
+    e = scoped_persist(edges.select("src", "dst"))
     # (node, outdeg): node-sized, every edge-list node appears (outdeg
     # ≥ 1 by the bidirectional contract), distinct by construction
     outdeg = scoped_persist(
@@ -83,9 +74,9 @@ def pagerank(
     n = outdeg.count()
     if n == 0:
         return outdeg.select("node", F.lit(0).cast("long").alias("rank"))
-    base = (scale * (100 - damping_pct)) // (100 * n)
+    base = (PAGERANK_SCALE * (100 - PAGERANK_DAMPING_PCT)) // (100 * n)
     ranks = outdeg.select(
-        "node", F.lit(scale // n).cast("long").alias("rank")
+        "node", F.lit(PAGERANK_SCALE // n).cast("long").alias("rank")
     )
     for _ in range(iters):
         # `div` (not `/`): Spark's `/` on longs is DOUBLE division — a
@@ -103,7 +94,7 @@ def pagerank(
             "node",
             (
                 F.lit(base).cast("long")
-                + F.expr(f"({damping_pct} * coalesce(s, 0L)) div 100")
+                + F.expr(f"({PAGERANK_DAMPING_PCT} * coalesce(s, 0L)) div 100")
             ).alias("rank"),
         )
     return ranks

@@ -25,10 +25,8 @@ from pyspark.sql.types import (
 )
 
 
-def attach_binary_payload(
-    df: DataFrame, id_col: str, text_col: str, media_type: str = "image"
-) -> DataFrame:
-    """Build a media table from any source column cast to binary.
+def attach_binary_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Build an image media table from any source column cast to binary.
 
     Native expressions only: the payload column is a real BinaryType and
     the metadata struct is computed during the scan (octet_length etc.),
@@ -39,7 +37,7 @@ def attach_binary_payload(
         F.col(id_col).alias("media_id"),
         payload.alias("payload"),
         F.struct(
-            F.lit(media_type).alias("media_type"),
+            F.lit("image").alias("media_type"),
             F.lit("raw").alias("codec"),
             F.lit(None).cast("int").alias("width"),
             F.lit(None).cast("int").alias("height"),

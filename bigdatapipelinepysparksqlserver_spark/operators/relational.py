@@ -16,12 +16,7 @@ from pyspark.sql import Column, DataFrame
 from ..functions.expressions import dec
 
 
-def denormalize(
-    fact: DataFrame,
-    dims: Sequence[tuple[DataFrame, Column]],
-    select: Sequence[Column] | None = None,
-    broadcast_dims: bool = True,
-) -> DataFrame:
+def denormalize(fact: DataFrame, dims: Sequence[tuple[DataFrame, Column]]) -> DataFrame:
     """J1 — star-schema denormalization: fact LEFT OUTER JOIN each dim.
 
     Mirrors ``load_sales_history.py:112-115`` (Sales ⟕ Clients ⟕ Products).
@@ -29,14 +24,13 @@ def denormalize(
 
     Scale: dims are broadcast (hash-join, zero shuffle of the fact side).
     At 100 TB the fact table never moves; each executor streams its parquet
-    splits against an in-memory dim hash map. If a dim outgrows the broadcast
-    threshold, drop ``broadcast_dims`` and AQE picks shuffled hash join.
+    splits against an in-memory dim hash map. Every caller joins the
+    reference's client and product dims, which fit in memory.
     """
     out = fact
     for dim, cond in dims:
-        d = F.broadcast(dim) if broadcast_dims else dim
-        out = out.join(d, cond, "left")
-    return out.select(*select) if select else out
+        out = out.join(F.broadcast(dim), cond, "left")
+    return out
 
 
 def grouped_count_distinct(

@@ -183,11 +183,9 @@ def bm25_search(
 # ---------------------------------------------------------------------------
 
 
-def _store_relations(
-    docs: DataFrame, text_col: str, id_col: str, num_buckets: int
-):
-    """(postings, doclens, stats, termstats) relations for one corpus
-    (or one ingest batch) — the shared tokenize-once step of the store
+def _store_relations(docs: DataFrame, num_buckets: int):
+    """(postings, doclens, stats, termstats) relations for one (doc_id,
+    text) corpus (or one ingest batch) — the shared tokenize-once step of the store
     writers. Postings are sorted by term WITHIN each bucket partition
     so parquet row-group min/max stats on ``term`` can skip a hot
     term's neighbors (the row-group-level half of the skew guard).
@@ -228,7 +226,7 @@ def _store_relations(
     from ..caching import scoped_persist
 
     w = docs.select(
-        F.col(id_col).alias("id"), _words(text_col).alias("__ws")
+        F.col("doc_id").alias("id"), _words("text").alias("__ws")
     ).select("id", F.size("__ws").alias("dl"), F.col("__ws"))
     lens = w.select("id", "dl")
     base = scoped_persist(
@@ -251,14 +249,9 @@ def _store_relations(
     return postings, lens, stats, termstats
 
 
-def build_postings_store(
-    docs: DataFrame,
-    path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_buckets: int = 64,
-) -> None:
-    """The persistable index form of :func:`bm25_search`, completing the
+def build_postings_store(docs: DataFrame, path: str, num_buckets: int = 64) -> None:
+    """The persistable index form of :func:`bm25_search` over a
+    (doc_id, text) corpus, completing the
     retrieval surface the way `minhash_band_store` does for dedup and
     `write_ivfpq_store` does for ANN: pay one corpus tokenization
     at ingest, then every search reads only its probe terms' partitions.
@@ -295,9 +288,7 @@ def build_postings_store(
     per build (postings+termstats share one, doclens the other), not
     four.
     """
-    postings, lens, _stats, termstats = _store_relations(
-        docs, text_col, id_col, num_buckets
-    )
+    postings, lens, _stats, termstats = _store_relations(docs, num_buckets)
     postings.write.mode("overwrite").partitionBy("bucket").parquet(
         f"{path}/postings"
     )
@@ -438,21 +429,17 @@ def rrf_hybrid_search(
     vectors: DataFrame,
     query_terms: list[str],
     query_vec: list[float],
-    text_col: str = "text",
-    doc_id_col: str = "doc_id",
-    vec_id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k1: float = 1.2,
     b: float = 0.75,
     top_lex: int = 20,
     top_vec: int = 20,
     rrf_k: int = 60,
     top_n: int = 10,
-    max_df_ratio: float | None = None,
 ) -> DataFrame:
     """Hybrid lexical+semantic retrieval via Reciprocal Rank Fusion
-    (Cormack et al. 2009): fuse the BM25 ranking for ``query_terms``
-    with the cosine ranking against ``query_vec`` as ``Σ 1/(rrf_k +
+    (Cormack et al. 2009): fuse the BM25 ranking of the (doc_id, text)
+    ``docs`` for ``query_terms`` with the cosine ranking of the
+    (vec_id, embedding) ``vectors`` against ``query_vec`` as ``Σ 1/(rrf_k +
     rank)`` over the lists a doc appears in — the standard RAG-pipeline
     first stage, robust to the two scores' incomparable scales because
     only RANKS enter the fusion.
@@ -477,26 +464,25 @@ def rrf_hybrid_search(
 
     spark = docs.sparkSession
     lex_rows = bm25_search(
-        docs, query_terms, text_col=text_col, id_col=doc_id_col,
-        k1=k1, b=b, top_n=top_lex, max_df_ratio=max_df_ratio,
-    ).select(doc_id_col).collect()
-    lex = [(int(r[doc_id_col]), i + 1) for i, r in enumerate(lex_rows)]
+        docs, query_terms, k1=k1, b=b, top_n=top_lex
+    ).select("doc_id").collect()
+    lex = [(int(r["doc_id"]), i + 1) for i, r in enumerate(lex_rows)]
     qlit = F.array(*[F.lit(float(x)) for x in query_vec])
     vec_rows = (
         vectors.select(
-            F.col(vec_id_col).alias(doc_id_col),
-            F.round(cosine(F.col(vec_col), qlit), 6).alias("__cos"),
+            F.col("vec_id").alias("doc_id"),
+            F.round(cosine(F.col("embedding"), qlit), 6).alias("__cos"),
         )
-        .orderBy(F.col("__cos").desc(), F.col(doc_id_col).asc())
+        .orderBy(F.col("__cos").desc(), F.col("doc_id").asc())
         .limit(top_vec)
-        .select(doc_id_col)
+        .select("doc_id")
         .collect()
     )
-    vec = [(int(r[doc_id_col]), i + 1) for i, r in enumerate(vec_rows)]
-    l_df = spark.createDataFrame(lex, f"{doc_id_col} long, lex_rank int")
-    v_df = spark.createDataFrame(vec, f"{doc_id_col} long, vec_rank int")
-    fused = l_df.join(v_df, doc_id_col, "full_outer").select(
-        doc_id_col,
+    vec = [(int(r["doc_id"]), i + 1) for i, r in enumerate(vec_rows)]
+    l_df = spark.createDataFrame(lex, "doc_id long, lex_rank int")
+    v_df = spark.createDataFrame(vec, "doc_id long, vec_rank int")
+    fused = l_df.join(v_df, "doc_id", "full_outer").select(
+        "doc_id",
         "lex_rank",
         "vec_rank",
         F.round(
@@ -506,5 +492,5 @@ def rrf_hybrid_search(
         ).alias("rrf_score"),
     )
     return fused.orderBy(
-        F.col("rrf_score").desc(), F.col(doc_id_col).asc()
+        F.col("rrf_score").desc(), F.col("doc_id").asc()
     ).limit(top_n)

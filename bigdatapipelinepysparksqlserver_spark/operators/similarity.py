@@ -332,10 +332,10 @@ def train_ivf_codebook(
     vec_col: str = "embedding",
     n_centroids: int = 16,
     seed: int = 42,
-    max_iter: int = 8,
 ) -> DataFrame:
-    """Train the IVF coarse quantizer: seeded KMeans over L2-normalized
-    vectors → (cell, centroid array<double>) codebook DataFrame.
+    """Train the IVF coarse quantizer: seeded KMeans (8 iterations) over
+    L2-normalized vectors → (cell, centroid array<double>) codebook
+    DataFrame.
 
     L2-normalization makes Euclidean KMeans approximate spherical
     k-means (||â−b̂||² = 2−2·cos on unit vectors), matching the
@@ -368,7 +368,7 @@ def train_ivf_codebook(
     # random init (seeded, deterministic): k-means|| init costs ~2 extra
     # distributed passes, pointless precision for a COARSE quantizer whose
     # cell boundaries only gate recall, not correctness of the re-rank.
-    km = KMeans(k=n_centroids, seed=seed, maxIter=max_iter, initMode="random")
+    km = KMeans(k=n_centroids, seed=seed, maxIter=8, initMode="random")
     model = km.fit(feat)
     cells = [
         (i, [round(float(x), 6) for x in c])
@@ -828,12 +828,8 @@ def semantic_dedup(
     codebook: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cell_col: str = "cell",
-    cent_col: str = "centroid",
     threshold: float = 0.4,
-    bucket_cap: int = 4096,
     pair_budget: int | None = None,
-    scale_path: str = "",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster-partition the corpus with a coarse
@@ -870,7 +866,8 @@ def semantic_dedup(
 
     ``pair_budget`` pre-flights Σ c·(c−1)/2 on the cell key for
     fixed-size codebooks (constant cells → quadratic growth), raising
-    past budget with ``scale_path`` naming the policy-sized form.
+    past budget with a message naming the policy-sized form. The
+    (cell, centroid) ``codebook`` is :func:`train_ivf_codebook`'s.
     """
     from .dedup import (
         connected_components_star,
@@ -880,7 +877,7 @@ def semantic_dedup(
 
     from ..caching import scoped_persist
 
-    cells = _collect_codebook(codebook, cell_col, cent_col, "semantic_dedup")
+    cells = _collect_codebook(codebook, "cell", "centroid", "semantic_dedup")
     # persist the assignment (r12): it is consumed by the pair
     # enumeration (eagerly materialized through the components'
     # contracted-edge checkpoint) AND by the final members join —
@@ -892,13 +889,13 @@ def semantic_dedup(
     )
     if pair_budget is not None:
         pair_budget_guard(
-            assigned.select("cell"), ["cell"], pair_budget, scale_path
+            assigned.select("cell"),
+            ["cell"],
+            pair_budget,
+            "the semantic_dedup sized form: a codebook of 2**recommended_bits(N) cells",
         )
     pairs = grouped_pair_enumeration(
-        assigned.select("cell", F.col(id_col).alias("doc_id")),
-        ["cell"],
-        "doc_id",
-        bucket_cap=bucket_cap,
+        assigned.select("cell", F.col(id_col).alias("doc_id")), ["cell"], "doc_id"
     )
     # norms hoisted to the per-VECTOR side projections (r11): norm(v)
     # depends only on the vector, so computing it inside the per-pair
@@ -1010,38 +1007,32 @@ def quantized_topk(
 # ---------------------------------------------------------------------------
 
 
-def pq_sub_codebooks(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = 8,
-    n_codes: int = 16,
-):
-    """Deterministic sub-codebooks: the first ``n_codes`` vectors'
-    slices per subspace — the first-ids codebook stand-in
+def pq_sub_codebooks(vectors: DataFrame, m: int = 8, n_codes: int = 16):
+    """Deterministic sub-codebooks: the first ``n_codes`` (vec_id,
+    embedding) vectors' slices per subspace — the first-ids codebook stand-in
     convention (production trains per-subspace k-means offline on the
     slices and versions the result).
     Returns ``[[(code, centroid_slice), …] per subspace]``; collect is
     control-plane (n_codes rows).
     """
     rows = (
-        vectors.where(F.col(id_col) < n_codes)
-        .select(id_col, vec_col)
+        vectors.where(F.col("vec_id") < n_codes)
+        .select("vec_id", "embedding")
         .collect()
     )
-    rows.sort(key=lambda r: r[id_col])
+    rows.sort(key=lambda r: r["vec_id"])
     if len(rows) < n_codes:
         raise ValueError(
             f"pq_sub_codebooks: corpus has only {len(rows)} of the first "
             f"{n_codes} ids — codebook would be undersized"
         )
-    dim = len(rows[0][vec_col])
+    dim = len(rows[0]["embedding"])
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     sub = dim // m
     return [
         [
-            (int(r[id_col]), [float(x) for x in r[vec_col]][s * sub : (s + 1) * sub])
+            (int(r["vec_id"]), [float(x) for x in r["embedding"]][s * sub : (s + 1) * sub])
             for r in rows
         ]
         for s in range(m)
@@ -1114,24 +1105,21 @@ def write_ivfpq_store(
     codebook: DataFrame,
     sub_codebooks,
     path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "cell",
-    cent_col: str = "centroid",
 ) -> None:
-    """Cell-partitioned PQ-CODED vector store: rows are (id, codes) —
+    """Cell-partitioned PQ-CODED vector store of (vec_id, embedding)
+    vectors: rows are (vec_id, codes) —
     M small ints, never the raw vector — written ``partitionBy(cell)``.
     One scan computes BOTH quantizations (the coarse argmax-cosine cell
     and the per-subspace argmin-L2 codes), so the build is a single
     pass + partitioned write with no shuffle beyond the write's own
     partitioning.
     """
-    cells = _collect_codebook(codebook, cell_col, cent_col, "write_ivfpq_store")
+    cells = _collect_codebook(codebook, "cell", "centroid", "write_ivfpq_store")
     encoded = (
-        vectors.select(F.col(id_col), F.col(vec_col).alias("__v"))
+        vectors.select(F.col("vec_id"), F.col("embedding").alias("__v"))
         .withColumn("__vnorm", F.expr(_IVF_VNORM_SQL))
         .select(
-            id_col,
+            "vec_id",
             F.expr(_pq_codes_expr(sub_codebooks)).alias("codes"),
             F.expr(_ivf_argmax_sql(cells)).alias("cell"),
         )
@@ -1147,8 +1135,6 @@ def ivfpq_topk(
     sub_codebooks,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cell_col: str = "cell",
-    cent_col: str = "centroid",
     n_probe: int = 4,
     k: int = 10,
 ) -> DataFrame:
@@ -1163,7 +1149,7 @@ def ivfpq_topk(
     partition directories AND only M ints per row — both compression
     axes engaged.
     """
-    cells = _collect_codebook(codebook, cell_col, cent_col, "ivfpq_topk")
+    cells = _collect_codebook(codebook, "cell", "centroid", "ivfpq_topk")
     q, probe_cells = _ivf_probe_queries(spark, queries, cells, id_col, vec_col, n_probe)
     recon_expr, cb_lit = pq_reconstruct(F.col("codes"), sub_codebooks)
     store = (

@@ -20,23 +20,21 @@ from pyspark.sql import Column, DataFrame
 from ..caching import scoped_persist
 
 
-def with_salt(df: DataFrame, salt_buckets: int, col_name: str = "__salt") -> DataFrame:
-    """Deterministic per-row salt derived from a whole-row hash (no rand():
+def with_salt(df: DataFrame, salt_buckets: int) -> DataFrame:
+    """Deterministic per-row ``__salt`` derived from a whole-row hash (no rand():
     re-runs and retried tasks produce identical salts, keeping writes
     idempotent)."""
     return df.withColumn(
-        col_name,
+        "__salt",
         F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(salt_buckets)).cast("int"),
     )
 
 
-def replicate_for_salt(
-    df: DataFrame, salt_buckets: int, col_name: str = "__salt"
-) -> DataFrame:
-    """Explode the small side once per salt value (size × salt_buckets —
+def replicate_for_salt(df: DataFrame, salt_buckets: int) -> DataFrame:
+    """Explode the small side once per ``__salt`` value (size × salt_buckets —
     only ever applied to the broadcast-scale side)."""
     return df.withColumn(
-        col_name,
+        "__salt",
         F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1))),
     )
 

@@ -132,19 +132,17 @@ def equi_depth_histogram(
     )
 
 
-def chi2_independence(
-    df: DataFrame,
-    row_col: str,
-    col_col: str,
-    scale: int = 1_000_000_000,
-) -> DataFrame:
+CHI2_SCALE = 1_000_000_000  # integer units of a chi-square cell term
+
+
+def chi2_independence(df: DataFrame, row_col: str, col_col: str) -> DataFrame:
     """Pearson chi-square statistic for independence of two categorical
     columns (the A/B-test / drift-audit significance primitive).
 
     Exactness contract (the module pattern): observed counts and both
     margins are exact BIGINTs from order-free aggregates; each CELL's
     term (o − e)²/e is ONE fixed-operand-order double expression,
-    immediately integer-scaled (``ROUND(term * scale)``); the final sum
+    immediately integer-scaled (``ROUND(term * CHI2_SCALE)``); the final sum
     runs on the integers — so the statistic is bit-identical at any
     parallelism and against a same-shaped DuckDB oracle. The FULL
     nr × nc grid is materialized (distinct row keys × distinct col
@@ -181,13 +179,13 @@ def chi2_independence(
         / F.col("n").cast("double")
     )
     d = F.col("o").cast("double") - e
-    term = F.round(d * d / e * F.lit(float(scale)), 0).cast("bigint")
+    term = F.round(d * d / e * F.lit(float(CHI2_SCALE)), 0).cast("bigint")
     j = o.join(r, row_col).join(c, col_col).crossJoin(F.broadcast(n))
     return j.agg(
         F.max("n").alias("n"),
         ((F.max("nr") - 1) * (F.max("nc") - 1)).alias("dof"),
         F.round(
-            F.sum(term).cast("double") / F.lit(float(scale)), 6
+            F.sum(term).cast("double") / F.lit(float(CHI2_SCALE)), 6
         ).alias("chi2"),
     )
 

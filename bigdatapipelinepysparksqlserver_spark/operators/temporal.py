@@ -254,7 +254,6 @@ def streaming_sessionize(
     ts_col: str = "ts",
     user_col: str = "user_id",
     gap: str = "30 minutes",
-    watermark: str = "10 minutes",
 ) -> DataFrame:
     """Gap-based sessionization via native ``session_window`` — the
     streaming-capable twin of the batch lag/running-sum sessionize
@@ -268,13 +267,13 @@ def streaming_sessionize(
     multiples).
 
     Scale: one shuffle on (user, session-window merge); state per OPEN
-    session only, bounded by the watermark horizon — this is the form
+    session only, bounded by a 10-minute watermark on a stream — this is the form
     that runs on an unbounded stream, where the lag/running-sum window
     (whole-history sort per user) cannot.
     """
     src = events
     if events.isStreaming:
-        src = events.withWatermark(ts_col, watermark)
+        src = events.withWatermark(ts_col, "10 minutes")
     return (
         src.groupBy(
             F.session_window(F.col(ts_col), gap).alias("sw"),

@@ -338,12 +338,10 @@ def source_ngram_overlap(
     )
 
 
-def _bigram_explode(
-    df: DataFrame, text_col: str, id_col: str
-) -> DataFrame:
-    """(id, __bgh) — one row per bigram occurrence, hashed to the
-    repo's 60-bit md5-prefix key."""
-    words = F.split(F.lower(F.trim(F.col(text_col))), " ")
+def _bigram_explode(df: DataFrame) -> DataFrame:
+    """(doc_id, __bgh) — one row per bigram occurrence of ``text``,
+    hashed to the repo's 60-bit md5-prefix key."""
+    words = F.split(F.lower(F.trim(F.col("text"))), " ")
     n = F.size(words)
     bgs = F.zip_with(
         F.slice(words, 1, n - 1),
@@ -352,8 +350,8 @@ def _bigram_explode(
     )
     return (
         df.where(n >= 2)
-        .select(F.col(id_col), F.explode(bgs).alias("__bg"))
-        .select(id_col, _md5h60(F.col("__bg")).alias("__bgh"))
+        .select(F.col("doc_id"), F.explode(bgs).alias("__bg"))
+        .select("doc_id", _md5h60(F.col("__bg")).alias("__bgh"))
     )
 
 
@@ -448,10 +446,7 @@ def html_entity_decode(col: Column) -> Column:
     return out
 
 
-def html_extract(
-    html: Column,
-    min_tokens: int = HTML_MIN_LINE_TOKENS,
-) -> Column:
+def html_extract(html: Column) -> Column:
     """Boilerplate-aware text extraction from an HTML column: returns a
     struct (text, n_lines, n_kept, n_links).
 
@@ -459,7 +454,7 @@ def html_extract(
     simplification): count ``<a `` anchors BEFORE stripping, strip tags
     (``<[^>]+>`` — a common-match positive class, not one of the
     measured regexp cliff shapes; see ALPHA_CHARS note), normalize
-    whitespace, then keep the line iff it has ≥ ``min_tokens`` tokens
+    whitespace, then keep the line iff it has ≥ ``HTML_MIN_LINE_TOKENS`` tokens
     AND link density ≤ 1/3 (exact integer rule ``links*3 <= tokens``).
     Kept lines join with newlines and entities decode once at the end.
 
@@ -488,7 +483,7 @@ def html_extract(
     per = F.transform(lines, line_stats)
     kept = F.filter(
         per,
-        lambda p: (p["t"] >= F.lit(min_tokens))
+        lambda p: (p["t"] >= F.lit(HTML_MIN_LINE_TOKENS))
         & (p["k"] * F.lit(HTML_LINK_DENSITY_DEN) <= p["t"]),
     )
     text = html_entity_decode(
@@ -523,12 +518,13 @@ def _md5h60(c: Column) -> Column:
     )
 
 
-def _trigram_explode(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, __tgh, __c12h, __b23h, __c2h, __w3h) — one row per trigram
+def _trigram_explode(df: DataFrame) -> DataFrame:
+    """(doc_id, __tgh, __c12h, __b23h, __c2h, __w3h) — one row per trigram
     occurrence with the five hashed lookups the backoff chain needs:
     the trigram, its bigram context (w1 w2), the backoff bigram
-    (w2 w3), its unigram context (w2), and the floor unigram (w3)."""
-    words = F.split(F.lower(F.trim(F.col(text_col))), " ")
+    (w2 w3), its unigram context (w2), and the floor unigram (w3), over
+    the ``text`` column."""
+    words = F.split(F.lower(F.trim(F.col("text"))), " ")
     n = F.size(words)
     tgs = F.expr(
         "transform(sequence(1, size(__ws) - 2),"
@@ -539,10 +535,10 @@ def _trigram_explode(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     w1, w2, w3 = parts.getItem(0), parts.getItem(1), parts.getItem(2)
     return (
         df.where(n >= 3)
-        .select(F.col(id_col), words.alias("__ws"))
-        .select(id_col, F.explode(tgs).alias("__tg"))
+        .select(F.col("doc_id"), words.alias("__ws"))
+        .select("doc_id", F.explode(tgs).alias("__tg"))
         .select(
-            id_col,
+            "doc_id",
             _md5h60(F.col("__tg")).alias("__tgh"),
             _md5h60(F.concat(w1, F.lit(" "), w2)).alias("__c12h"),
             _md5h60(F.concat(w2, F.lit(" "), w3)).alias("__b23h"),
@@ -552,13 +548,9 @@ def _trigram_explode(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def build_trigram_lm_store(
-    docs: DataFrame,
-    path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> None:
-    """Persist a corpus trigram LM as four exact-integer relations:
+def build_trigram_lm_store(docs: DataFrame, path: str) -> None:
+    """Persist the trigram LM of a (doc_id, text) corpus as four
+    exact-integer relations:
 
     - ``{path}/trigrams``  (tgh, c3) — trigram occurrence counts;
     - ``{path}/bigrams``   (bgh, c2) — bigram occurrence counts (serves
@@ -570,7 +562,7 @@ def build_trigram_lm_store(
     Every relation is hash-sorted for row-group pruning; all counts are
     exact integers, so shard-built stores recompose by SUM (the
     postings-store contract)."""
-    ex = _trigram_explode(docs, text_col, id_col)
+    ex = _trigram_explode(docs)
     (
         ex.groupBy("__tgh")
         .agg(F.count(F.lit(1)).alias("c3"))
@@ -579,7 +571,7 @@ def build_trigram_lm_store(
         .write.mode("overwrite")
         .parquet(f"{path}/trigrams")
     )
-    bg = _bigram_explode(docs, text_col, id_col)
+    bg = _bigram_explode(docs)
     (
         bg.groupBy("__bgh")
         .agg(F.count(F.lit(1)).alias("c2"))
@@ -588,7 +580,7 @@ def build_trigram_lm_store(
         .write.mode("overwrite")
         .parquet(f"{path}/bigrams")
     )
-    words = F.split(F.lower(F.trim(F.col(text_col))), " ")
+    words = F.split(F.lower(F.trim(F.col("text"))), " ")
     uni = docs.select(F.explode(words).alias("__w")).select(
         _md5h60(F.col("__w")).alias("ugh")
     )
@@ -610,15 +602,8 @@ def build_trigram_lm_store(
     )
 
 
-def trigram_lm_score_from_store(
-    spark,
-    path: str,
-    batch: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    alpha: float = BACKOFF_ALPHA,
-) -> DataFrame:
-    """Score an ingest batch against a STORED trigram LM with stupid
+def trigram_lm_score_from_store(spark, path: str, batch: DataFrame) -> DataFrame:
+    """Score a (doc_id, text) ingest batch against a STORED trigram LM with stupid
     backoff: per trigram (w1 w2 w3) —
 
     - c(w1w2w3) > 0 → log2(c3 / c(w1 w2))              (trigram hit)
@@ -637,7 +622,7 @@ def trigram_lm_score_from_store(
     against the five hash-sorted count relations (row-group pruning on
     selective probes); the floor scalars are a 1-row control-plane
     read."""
-    ex = _trigram_explode(batch, text_col, id_col)
+    ex = _trigram_explode(batch)
     c3 = spark.read.parquet(f"{path}/trigrams")
     c2 = spark.read.parquet(f"{path}/bigrams")
     c1 = spark.read.parquet(f"{path}/unigrams")
@@ -654,7 +639,7 @@ def trigram_lm_score_from_store(
         .join(c1a, ex["__c2h"] == F.col("__k2"), "left")
         .join(c1b, ex["__w3h"] == F.col("__k3"), "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("c3", F.lit(0)).alias("__c3"),
             F.coalesce("__c12", F.lit(0)).alias("__c12"),
             F.coalesce("__c23", F.lit(0)).alias("__c23"),
@@ -662,7 +647,7 @@ def trigram_lm_score_from_store(
             F.coalesce("__cw3", F.lit(0)).alias("__cw3"),
         )
     )
-    a = float(alpha)
+    a = BACKOFF_ALPHA
     logp = (
         F.when(
             F.col("__c3") > 0,
@@ -692,8 +677,8 @@ def trigram_lm_score_from_store(
         .otherwise(F.lit(1))
     )
     return (
-        j.select(id_col, milli.alias("__milli"), branch.alias("__br"))
-        .groupBy(id_col)
+        j.select("doc_id", milli.alias("__milli"), branch.alias("__br"))
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_trigrams"),
             F.sum((F.col("__br") == 3).cast("long")).alias("n_hits3"),
@@ -702,7 +687,7 @@ def trigram_lm_score_from_store(
             F.sum("__milli").alias("__sum"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_trigrams",
             "n_hits3",
             "n_backoff2",
@@ -733,13 +718,13 @@ def trigram_lm_score_from_store(
 # ---------------------------------------------------------------------------
 
 
-def word_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Corpus → (word, freq) dictionary on the shared single-space
+def word_counts(df: DataFrame) -> DataFrame:
+    """Corpus ``text`` → (word, freq) dictionary on the shared single-space
     tokenizer. The ONLY corpus-sized stage of BPE training; partial
     aggregation collapses repeats map-side, so the exchange carries one
     row per distinct word per partition."""
     return (
-        df.select(F.explode(F.split(F.trim(F.col(text_col)), " ")).alias("word"))
+        df.select(F.explode(F.split(F.trim(F.col("text")), " ")).alias("word"))
         .where(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
@@ -829,14 +814,9 @@ WINNOW_W = 4  # grams per winnowing window
 _WINNOW_POS_SPAN = 1 << 20  # pos packed below the 40-bit hash
 
 
-def winnow_fingerprints(
-    df: DataFrame,
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(doc_id, fp_hash, fp_pos) — the winnowed fingerprint set.
+def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(doc_id, fp_hash, fp_pos) — the winnowed fingerprint set of the
+    ``text`` column, with k = ``WINNOW_K`` and w = ``WINNOW_W``.
 
     Selection contract (mirrored exactly by the SQL oracles): grams on
     the shared single-space tokenizer; gram hash = 40-bit md5-hex
@@ -863,9 +843,8 @@ def winnow_fingerprints(
     relation with the match guarantee intact — that is the whole point
     of winnowing over "hash every gram".
     """
-    toks = F.filter(
-        F.split(F.trim(F.col(text_col)), " "), lambda t: t != ""
-    )
+    k, w = WINNOW_K, WINNOW_W
+    toks = F.filter(F.split(F.trim(F.col("text")), " "), lambda t: t != "")
     base = (
         df.repartition(F.col(id_col))
         .select(F.col(id_col), toks.alias("__toks"))
@@ -923,10 +902,6 @@ def winnow_store_bucketed(
     spark,
     docs: DataFrame,
     table: str,
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     df_cap: int = 50,
     num_buckets: int = 32,
     path: "str | None" = None,
@@ -945,11 +920,7 @@ def winnow_store_bucketed(
     """
     from ..sources.lake import write_bucketed_table
 
-    fps = (
-        winnow_fingerprints(docs, k=k, w=w, id_col=id_col, text_col=text_col)
-        .select(id_col, "fp_hash")
-        .distinct()
-    )
+    fps = winnow_fingerprints(docs).select("doc_id", "fp_hash").distinct()
     hcounts = fps.groupBy("fp_hash").agg(
         F.count(F.lit(1)).alias("__df")  # fps already distinct on (id, hash)
     )
@@ -964,19 +935,11 @@ def winnow_store_bucketed(
 
 
 def decontaminate_spans(
-    corpus: DataFrame,
-    eval_docs: DataFrame,
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    eval_id_col: str = "eval_id",
-    df_cap: int = 50,
-    min_shared: int = 1,
+    corpus: DataFrame, eval_docs: DataFrame, df_cap: int = 50
 ) -> DataFrame:
     """Span-level (fuzzy) eval-set decontamination (VERDICT r9 #1):
     (doc_id, eval_id, shared_fps) for every corpus document sharing
-    ≥ ``min_shared`` winnowed fingerprints with an eval item — i.e.
+    a winnowed fingerprint with an eval item — i.e.
     sharing ANY token run of ≥ w+k−1 (= 6) tokens the winnowing
     retained. This is the MOSS guarantee pointed at contamination: one
     edited token inside an exact n-gram probe's window makes
@@ -1002,17 +965,9 @@ def decontaminate_spans(
     # broadcast builds that each re-ran the eval-side winnow without the
     # cache. Eval-suite-sized (small by contract), so the cache is tiny.
     efps = scoped_persist(
-        winnow_fingerprints(
-            eval_docs, k=k, w=w, id_col=eval_id_col, text_col=text_col
-        )
-        .select(F.col(eval_id_col), "fp_hash")
-        .distinct()
+        winnow_fingerprints(eval_docs, id_col="eval_id").select("eval_id", "fp_hash").distinct()
     )
-    cfps = (
-        winnow_fingerprints(corpus, k=k, w=w, id_col=id_col, text_col=text_col)
-        .select(id_col, "fp_hash")
-        .distinct()
-    )
+    cfps = winnow_fingerprints(corpus).select("doc_id", "fp_hash").distinct()
     # broadcast LEFT-SEMI on eval hashes first: survivors are the only
     # corpus fingerprints that matter, and they are distinct on
     # (doc, hash) — so a plain count per hash IS the corpus df there
@@ -1023,29 +978,15 @@ def decontaminate_spans(
             "left_semi",
         )
     )
-    if df_cap is not None:
-        hdf = surv.groupBy("fp_hash").agg(F.count(F.lit(1)).alias("__df"))
-        surv = surv.join(
-            hdf.where(F.col("__df") <= df_cap).select("fp_hash"), "fp_hash"
-        )
-    hits = surv.join(F.broadcast(efps), "fp_hash")
-    return (
-        hits.groupBy(id_col, eval_id_col)
-        .agg(F.count(F.lit(1)).alias("shared_fps"))
-        .where(F.col("shared_fps") >= min_shared)
+    hdf = surv.groupBy("fp_hash").agg(F.count(F.lit(1)).alias("__df"))
+    surv = surv.join(
+        hdf.where(F.col("__df") <= df_cap).select("fp_hash"), "fp_hash"
     )
+    hits = surv.join(F.broadcast(efps), "fp_hash")
+    return hits.groupBy("doc_id", "eval_id").agg(F.count(F.lit(1)).alias("shared_fps"))
 
 
-def decontaminate_spans_stored(
-    spark,
-    table: str,
-    eval_docs: DataFrame,
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-    eval_id_col: str = "eval_id",
-    text_col: str = "text",
-    min_shared: int = 1,
-) -> DataFrame:
+def decontaminate_spans_stored(spark, table: str, eval_docs: DataFrame) -> DataFrame:
     """Repeated-use :func:`decontaminate_spans`: probe the eval set's
     winnow fingerprints against a PRE-BUILT corpus index
     (:func:`winnow_store_bucketed` — fp_hash-bucketed, stop-gram
@@ -1055,32 +996,16 @@ def decontaminate_spans_stored(
     right economics when the same corpus is screened against every new
     eval suite. Same output contract as the inline form under the same
     df-cap (pytest-asserted)."""
-    efps = (
-        winnow_fingerprints(
-            eval_docs, k=k, w=w, id_col=eval_id_col, text_col=text_col
-        )
-        .select(F.col(eval_id_col), "fp_hash")
-        .distinct()
-    )
+    efps = winnow_fingerprints(eval_docs, id_col="eval_id").select("eval_id", "fp_hash").distinct()
     stored = spark.table(table)  # (doc_id, fp_hash), df-capped at build
     return (
         stored.join(F.broadcast(efps), "fp_hash")
-        .groupBy("doc_id", eval_id_col)
+        .groupBy("doc_id", "eval_id")
         .agg(F.count(F.lit(1)).alias("shared_fps"))
-        .where(F.col("shared_fps") >= min_shared)
     )
 
 
-def _winnow_diagonal_runs(
-    docs: DataFrame,
-    pairs: DataFrame,
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-) -> tuple[DataFrame, int]:
+def _winnow_diagonal_runs(docs: DataFrame, pairs: DataFrame) -> tuple[DataFrame, int]:
     """Every maximal common token run between the FLAGGED pairs'
     documents, exactly: one row per (pair, run) with the run's start
     position in each side and its token length. Bounded by
@@ -1091,7 +1016,7 @@ def _winnow_diagonal_runs(
     of matches (consecutive positions on both sides) are the runs — a
     common run of L ≥ g tokens is exactly a chain of L−g+1 consecutive
     g-gram matches on one diagonal. Returns ``(runs, g)`` where runs =
-    (a_col, b_col, pa_start, pb_start, run_tokens).
+    (doc_a, doc_b, pa_start, pb_start, run_tokens).
 
     Plan: gram volume ∝ flagged docs' tokens; the match join is
     per-pair hash-keyed; the run detection is one window partitioned
@@ -1101,20 +1026,20 @@ def _winnow_diagonal_runs(
 
     from ..caching import scoped_persist
 
-    g = k + w - 1
+    g = WINNOW_K + WINNOW_W - 1
     # one id-extraction branch (r12): explode both pair endpoints from
     # the (persisted, ≤ top-k) board in a single pass instead of two
     # aggregate branches unioned
     ids = (
         pairs.select(
-            F.explode(F.array(F.col(a_col), F.col(b_col))).alias("__id")
+            F.explode(F.array(F.col("doc_a"), F.col("doc_b"))).alias("__id")
         ).distinct()
     )
     flagged = docs.join(
-        F.broadcast(ids), F.col(id_col) == F.col("__id"), "left_semi"
+        F.broadcast(ids), F.col("doc_id") == F.col("__id"), "left_semi"
     )
-    toks = F.filter(F.split(F.trim(F.col(text_col)), " "), lambda t: t != "")
-    base = flagged.select(F.col(id_col), toks.alias("__toks")).where(
+    toks = F.filter(F.split(F.trim(F.col("text")), " "), lambda t: t != "")
+    base = flagged.select(F.col("doc_id"), toks.alias("__toks")).where(
         F.size("__toks") >= g
     )
     n_grams = F.size("__toks") - F.lit(g - 1)
@@ -1125,7 +1050,7 @@ def _winnow_diagonal_runs(
     # (guide §5). Bounded: ≤ 2·top-k docs' grams at any corpus size.
     grams = scoped_persist(
         base.select(
-            id_col,
+            "doc_id",
             F.posexplode(
                 F.transform(
                     F.sequence(F.lit(1), n_grams),
@@ -1133,7 +1058,7 @@ def _winnow_diagonal_runs(
                 )
             ).alias("__p0", "__gram"),
         ).select(
-            id_col,
+            "doc_id",
             (F.col("__p0") + 1).alias("pos"),
             F.conv(F.substring(F.md5("__gram"), 1, 10), 16, 10)
             .cast("long")
@@ -1141,13 +1066,13 @@ def _winnow_diagonal_runs(
         )
     )
     ga = grams.select(
-        F.col(id_col).alias(a_col), F.col("pos").alias("pa"), "gh"
+        F.col("doc_id").alias("doc_a"), F.col("pos").alias("pa"), "gh"
     )
     gb = grams.select(
-        F.col(id_col).alias(b_col), F.col("pos").alias("pb"), "gh"
+        F.col("doc_id").alias("doc_b"), F.col("pos").alias("pb"), "gh"
     )
     # ONE victim-keyed exchange for the whole downstream pipeline (r12):
-    # hash-clustering the match rows on b_col satisfies — as a subset
+    # hash-clustering the match rows on doc_b satisfies — as a subset
     # clustering — the match DISTINCT on (a, b, pa, pb), the diagonal
     # window on (a, b, d), the run groupBy, and (because projection
     # aliases preserve partitioning) the span distinct, the interval
@@ -1157,41 +1082,32 @@ def _winnow_diagonal_runs(
     # top-k-bounded (≤ k pairs' grams), so ≤ k-way parallelism here is
     # inherent to the algorithm, not a skew regression.
     matches = (
-        pairs.select(a_col, b_col)
-        .join(ga, a_col)
-        .join(gb, [b_col, "gh"])
-        .select(a_col, b_col, "pa", "pb")
-        .repartition(F.col(b_col))
+        pairs.select("doc_a", "doc_b")
+        .join(ga, "doc_a")
+        .join(gb, ["doc_b", "gh"])
+        .select("doc_a", "doc_b", "pa", "pb")
+        .repartition(F.col("doc_b"))
         .distinct()
     )
     # diagonal runs: consecutive (pa, pb) both advancing by 1 share
     # (pa - pb) and form a contiguous pa sequence — group by
     # (pair, diagonal, pa - row_number) and count (the streak pattern)
     diag = matches.withColumn("__d", F.col("pa") - F.col("pb"))
-    rw = Window.partitionBy(a_col, b_col, "__d").orderBy("pa")
+    rw = Window.partitionBy("doc_a", "doc_b", "__d").orderBy("pa")
     runs = (
         diag.withColumn("__grp", F.col("pa") - F.row_number().over(rw))
-        .groupBy(a_col, b_col, "__d", "__grp")
+        .groupBy("doc_a", "doc_b", "__d", "__grp")
         .agg(
             F.min("pa").alias("pa_start"),
             (F.min("pa") - F.col("__d")).alias("pb_start"),
             (F.count(F.lit(1)) + F.lit(g - 1)).alias("run_tokens"),
         )
-        .select(a_col, b_col, "pa_start", "pb_start", "run_tokens")
+        .select("doc_a", "doc_b", "pa_start", "pb_start", "run_tokens")
     )
     return runs, g
 
 
-def winnow_span_verify(
-    docs: DataFrame,
-    pairs: DataFrame,
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-) -> DataFrame:
+def winnow_span_verify(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Exact longest-common-token-run verification for FLAGGED pairs
     (VERDICT r9 #6): winnowing reports shared-fingerprint counts, which
     bound but do not equal copied-span length; policy thresholds
@@ -1202,29 +1118,17 @@ def winnow_span_verify(
     exactly what a reviewer wants surfaced. Runs come from
     :func:`_winnow_diagonal_runs` (see there for the exactness and
     plan-shape argument)."""
-    runs, _ = _winnow_diagonal_runs(
-        docs, pairs, k=k, w=w, id_col=id_col, text_col=text_col,
-        a_col=a_col, b_col=b_col,
-    )
-    longest = runs.groupBy(a_col, b_col).agg(
+    runs, _ = _winnow_diagonal_runs(docs, pairs)
+    longest = runs.groupBy("doc_a", "doc_b").agg(
         F.max("run_tokens").alias("longest_run_tokens")
     )
-    return pairs.join(longest, [a_col, b_col], "left").withColumn(
+    return pairs.join(longest, ["doc_a", "doc_b"], "left").withColumn(
         "longest_run_tokens",
         F.coalesce(F.col("longest_run_tokens"), F.lit(0)).cast("bigint"),
     )
 
 
-def winnow_span_scrub_plan(
-    docs: DataFrame,
-    pairs: DataFrame,
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-) -> DataFrame:
+def winnow_span_scrub_plan(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Duplicate-SPAN removal plan (the ExactSubstr-dedup shape: keep
     the first occurrence, cut the duplicated span from later documents
     instead of dropping them whole): for every flagged pair (a < b)
@@ -1241,27 +1145,15 @@ def winnow_span_scrub_plan(
     one window partitioned by victim doc ordered by span start
     (cumulative max of prior ends → island ids), never global.
     """
-    islands = _winnow_cut_intervals(
-        docs, pairs, k=k, w=w, id_col=id_col, text_col=text_col,
-        a_col=a_col, b_col=b_col,
-    )
-    return islands.groupBy(id_col).agg(
+    islands = _winnow_cut_intervals(docs, pairs)
+    return islands.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_spans"),
         F.sum(F.col("me") - F.col("ms") + 1).alias("tokens_to_remove"),
     )
 
 
-def _winnow_cut_intervals(
-    docs: DataFrame,
-    pairs: DataFrame,
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-) -> DataFrame:
-    """MERGED cut intervals per victim document: (id_col, ms, me),
+def _winnow_cut_intervals(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """MERGED cut intervals per victim document: (doc_id, ms, me),
     1-based inclusive token positions in the victim's filtered token
     sequence. For every flagged pair (a < b) each exact common run is
     a cut interval in the LARGER-id doc b (keep-first-occurrence);
@@ -1270,16 +1162,13 @@ def _winnow_cut_intervals(
     PLAN (summary) and scrub APPLY (token-slice rewrite)."""
     from pyspark.sql import Window
 
-    runs, _ = _winnow_diagonal_runs(
-        docs, pairs, k=k, w=w, id_col=id_col, text_col=text_col,
-        a_col=a_col, b_col=b_col,
-    )
+    runs, _ = _winnow_diagonal_runs(docs, pairs)
     spans = runs.select(
-        F.col(b_col).alias(id_col),
+        F.col("doc_b").alias("doc_id"),
         F.col("pb_start").alias("s"),
         (F.col("pb_start") + F.col("run_tokens") - 1).alias("e"),
     ).distinct()
-    win = Window.partitionBy(id_col).orderBy("s", "e")
+    win = Window.partitionBy("doc_id").orderBy("s", "e")
     prev_max_end = F.max("e").over(win.rowsBetween(Window.unboundedPreceding, -1))
     return (
         spans.withColumn(
@@ -1291,22 +1180,13 @@ def _winnow_cut_intervals(
                 win.rowsBetween(Window.unboundedPreceding, 0)
             ),
         )
-        .groupBy(id_col, "__isl")
+        .groupBy("doc_id", "__isl")
         .agg(F.min("s").alias("ms"), F.max("e").alias("me"))
-        .select(id_col, "ms", "me")
+        .select("doc_id", "ms", "me")
     )
 
 
-def winnow_span_scrub_apply(
-    docs: DataFrame,
-    pairs: DataFrame,
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-) -> DataFrame:
+def winnow_span_scrub_apply(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Duplicate-span removal APPLY (VERDICT r10 #1 — completes the
     plan/apply split): emit the corpus with every planned cut interval
     actually removed from its victim document. Victims (the larger id
@@ -1318,7 +1198,7 @@ def winnow_span_scrub_apply(
     through BYTE-IDENTICAL. First occurrences are never touched — the
     cut is always on the b side of an (a < b) pair.
 
-    Output: the input docs frame with ``text_col`` rewritten plus
+    Output: the input docs frame with ``text`` rewritten plus
     ``tokens_removed`` (0 for untouched docs). Convergence: re-running
     the winnow pair board on the output finds no cross-doc common run
     ≥ g = w+k−1 tokens against a scrubbed victim (pytest-pinned).
@@ -1329,15 +1209,12 @@ def winnow_span_scrub_apply(
     whole-stage codegen, zero row UDFs, zero extra shuffles beyond the
     one broadcast-or-hash join of cuts onto the corpus.
     """
-    intervals = _winnow_cut_intervals(
-        docs, pairs, k=k, w=w, id_col=id_col, text_col=text_col,
-        a_col=a_col, b_col=b_col,
-    )
-    cuts = intervals.groupBy(id_col).agg(
+    intervals = _winnow_cut_intervals(docs, pairs)
+    cuts = intervals.groupBy("doc_id").agg(
         F.collect_list(F.struct(F.col("ms"), F.col("me"))).alias("__cuts")
     )
     toks = F.filter(
-        F.split(F.trim(F.col(text_col)), " "), lambda t: t != ""
+        F.split(F.trim(F.col("text")), " "), lambda t: t != ""
     )
     kept = F.filter(
         toks,
@@ -1350,7 +1227,7 @@ def winnow_span_scrub_apply(
         F.when(F.col("__cuts").isNull(), F.col(c))
         .otherwise(F.concat_ws(" ", kept))
         .alias(c)
-        if c == text_col
+        if c == "text"
         else F.col(c)
         for c in docs.columns
     ]
@@ -1360,7 +1237,7 @@ def winnow_span_scrub_apply(
     # without the hint the corpus side was EXCHANGED AND SORTED for a
     # SortMergeJoin against ≤ k rows (guide §3.1: broadcast replaces the
     # big side's shuffle at any corpus scale).
-    return docs.join(F.broadcast(cuts), id_col, "left").select(
+    return docs.join(F.broadcast(cuts), "doc_id", "left").select(
         *out_cols,
         F.when(F.col("__cuts").isNull(), F.lit(0))
         .otherwise(F.size(toks) - F.size(kept))
@@ -1370,13 +1247,7 @@ def winnow_span_scrub_apply(
 
 
 def winnow_copies_incremental(
-    base_fps: DataFrame,
-    batch: DataFrame,
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_shared: int = 1,
+    base_fps: DataFrame, batch: DataFrame, min_shared: int = 1
 ) -> DataFrame:
     """Copy-probe of a NEW batch against a corpus fingerprint index:
     (batch_doc, base_doc, shared_fps) for every base document sharing
@@ -1384,18 +1255,18 @@ def winnow_copies_incremental(
     — i.e. every base doc with which a batch doc shares a token run of
     ≥ w+k−1 tokens (on fingerprints the index retained).
 
-    ``base_fps`` is (id, fp_hash) — pass the bucketed store from
+    ``base_fps`` is (doc_id, fp_hash) — pass the bucketed store from
     :func:`winnow_store_bucketed` and the join leaves the stored side
     Exchange-free (pytest-asserted); only the batch's fingerprints
     shuffle. Base-base pairs are never enumerated.
     """
     bfps = (
-        winnow_fingerprints(batch, k=k, w=w, id_col=id_col, text_col=text_col)
-        .select(F.col(id_col).alias("batch_doc"), "fp_hash")
+        winnow_fingerprints(batch)
+        .select(F.col("doc_id").alias("batch_doc"), "fp_hash")
         .distinct()
     )
     probe = bfps.join(
-        base_fps.select(F.col(id_col).alias("base_doc"), "fp_hash"),
+        base_fps.select(F.col("doc_id").alias("base_doc"), "fp_hash"),
         "fp_hash",
     )
     return (

@@ -82,14 +82,16 @@ def run_with_retries(
             do_sleep(retry_delay_seconds)
 
 
+# A RUNNING ledger row younger than this is a live run, not a crash.
+STALE_RUNNING = timedelta(minutes=60)
+
+
 def run_pipeline_1(
     spark: SparkSession,
     src: SourceTables,
     lake: LakeTable,
     ledger: RunLedger,
     now: datetime,
-    lag_minutes: int = 5,
-    stale_running_minutes: int = 60,
     partials: "IncrementalMart | None" = None,
 ) -> dict:
     """One incremental load + validation cycle. Returns a run report.
@@ -105,7 +107,7 @@ def run_pipeline_1(
     writing FAILED (a hard kill never reaches the except-branch). The two
     are indistinguishable from the row alone, so the tiebreak is a
     heartbeat timeout on ``exec_start``: younger than
-    ``stale_running_minutes`` → raise SingleFlightError; older → treat as
+    ``STALE_RUNNING`` → raise SingleFlightError; older → treat as
     crashed and let ``purge_failed`` erase it (its id is ≥ next_run_id by
     construction, since it never became fully successful). Without the
     timeout, one hard crash would brick the pipeline forever behind its
@@ -117,7 +119,7 @@ def run_pipeline_1(
         for r in ledger.rows()
         if r.pipeline_status == RUNNING
         and r.exec_start is not None
-        and (now - r.exec_start) < timedelta(minutes=stale_running_minutes)
+        and (now - r.exec_start) < STALE_RUNNING
     ]
     if fresh:
         raise SingleFlightError(f"run {fresh} still RUNNING")
@@ -125,7 +127,7 @@ def run_pipeline_1(
     run_id = ledger.next_run_id()
     ledger.purge_failed(run_id)  # idempotent restart (C4) — also erases stale RUNNING rows
     prev = ledger.previous_cutoff(run_id)
-    cur = default_cutoff(now, lag_minutes)
+    cur = default_cutoff(now)
     ledger.start_run(run_id, now, prev, cur)
 
     try:

@@ -188,13 +188,3 @@ class IncrementalMart:
             )
             .withColumn("refresh_date", F.lit(refresh))
         )
-
-    def bootstrap(self) -> None:
-        """Full build of both partials from the whole lake — first run or
-        repair path; every subsequent run uses ``refresh``."""
-        lake_df = self.lake.read()
-        parts = [
-            r.year_month
-            for r in lake_df.select("year_month").distinct().collect()
-        ]
-        self.refresh(parts)

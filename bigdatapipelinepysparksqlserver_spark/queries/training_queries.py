@@ -624,10 +624,10 @@ def trigram_lm_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 BPE_ROUNDS = 8
 
 
-def _bpe_round_sql(r: int, px: str = "") -> str:
-    prev = f"{px}s{r - 1}"
+def _bpe_round_sql(r: int) -> str:
+    prev = f"s{r - 1}"
     return f"""
-{px}p{r} AS MATERIALIZED (
+p{r} AS MATERIALIZED (
   SELECT pr.a AS a, pr.b AS b, SUM(freq) AS pc
   FROM (
     SELECT freq,
@@ -637,34 +637,29 @@ def _bpe_round_sql(r: int, px: str = "") -> str:
   )
   GROUP BY 1, 2
 ),
-{px}m{r} AS MATERIALIZED (SELECT a, b, pc FROM {px}p{r} ORDER BY pc DESC, a, b LIMIT 1),
-{px}s{r} AS MATERIALIZED (
+m{r} AS MATERIALIZED (SELECT a, b, pc FROM p{r} ORDER BY pc DESC, a, b LIMIT 1),
+s{r} AS MATERIALIZED (
   SELECT word, freq,
          trim(COALESCE(replace(' ' || state || ' ',
-              ' ' || (SELECT a FROM {px}m{r}) || ' ' || (SELECT b FROM {px}m{r}) || ' ',
-              ' ' || (SELECT a FROM {px}m{r}) || (SELECT b FROM {px}m{r}) || ' '),
+              ' ' || (SELECT a FROM m{r}) || ' ' || (SELECT b FROM m{r}) || ' ',
+              ' ' || (SELECT a FROM m{r}) || (SELECT b FROM m{r}) || ' '),
               state)) AS state
   FROM {prev}
 )"""
 
 
-def _bpe_cte_block(px: str = "", doc_filter: str = "") -> str:
-    """The wc/s0/round CTE chain with every CTE name prefixed ``px``
-    (so two independent trainings can share one WITH) and an optional
-    WHERE clause on the documents scan."""
-    return f"""{px}wc AS MATERIALIZED (
+# the wc/s0/round CTE chain
+_BPE_CTES = f"""
+WITH wc AS MATERIALIZED (
   SELECT tok AS word, COUNT(*) AS freq FROM (
     SELECT unnest(string_split(trim(text), ' ')) AS tok FROM documents
-    {doc_filter}
   ) WHERE tok <> '' GROUP BY 1
 ),
-{px}s0 AS MATERIALIZED (
+s0 AS MATERIALIZED (
   SELECT word, freq, rtrim(regexp_replace(word, '(.)', '\\1 ', 'g')) AS state
-  FROM {px}wc
-),{",".join(_bpe_round_sql(r, px) for r in range(1, BPE_ROUNDS + 1))}"""
-
-
-_BPE_CTES = "\nWITH " + _bpe_cte_block() + "\n"
+  FROM wc
+),{",".join(_bpe_round_sql(r) for r in range(1, BPE_ROUNDS + 1))}
+"""
 
 
 BPE_VOCAB_ORACLE = _BPE_CTES + f"""

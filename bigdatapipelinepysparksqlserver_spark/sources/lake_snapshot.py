@@ -742,14 +742,14 @@ class SnapshotLakeTable:
             "rewritten": sorted(r for r in set(a) & set(b) if a[r] != b[r]),
         }
 
-    def pruned_partitions(self, ranges: dict, mid: int | None = None) -> dict[str, int]:
-        """The manifest entries whose zone maps INTERSECT every range
+    def pruned_partitions(self, ranges: dict) -> dict[str, int]:
+        """The live manifest entries whose zone maps INTERSECT every range
         in ``ranges`` ({col: (lo, hi)}, either bound None = open).
         Conservative: a partition with no recorded stats for a column
         is always kept. Sound only for range/equality predicates on the
         named columns (an IS NULL probe must use :meth:`read` — NULLs
         are invisible to min/max zones)."""
-        cur = mid if mid is not None else self.current_id()
+        cur = self.current_id()
         if cur is None:
             return {}
         txns, stats = self._read_manifest_full(cur)

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import os
 import shutil
-from datetime import datetime, timedelta
+from datetime import datetime
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -126,7 +126,6 @@ class WorkloadGenerator:
         n: int,
         batch: int,
         now: datetime,
-        backdate_days: int = 0,
         spread_days: int = 60,
     ) -> None:
         """Insert ``n`` sales (data_generation.py:41-103 semantics).
@@ -134,8 +133,6 @@ class WorkloadGenerator:
         35% of sales mint a NEW client (appended to Clients first, capturing
         the reference's INSERT-with-OUTPUT id round-trip, :61-66); price
         comes from the product catalog; p=0.01 sales are 0-price promos.
-        ``backdate_days`` > 0 shifts sale_date into the past — the
-        README.md:76 edge case (backdated beyond the cutoff ⇒ skipped).
         """
         spark = self.src.spark
         seed, s = self.seed, batch * 1000
@@ -190,11 +187,10 @@ class WorkloadGenerator:
         )
         self.src.append("clients", new_clients)
 
-        base_ts = now - timedelta(days=backdate_days)
         # unix_micros(lit(ts)) keeps the naive-datetime→session-tz conversion
         # inside Spark, consistent with every other F.lit(timestamp) here.
         sale_ts = F.timestamp_micros(
-            F.unix_micros(F.lit(base_ts))
+            F.unix_micros(F.lit(now))
             - (F.col("age_days") * F.lit(86_400_000_000.0)).cast("long")
         )
         prices = self.src.read("products").select(

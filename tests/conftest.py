@@ -25,6 +25,12 @@ def plan_report():
 
 
 @pytest.fixture(scope="session")
+def executed_plan():
+    """The executed (physical) plan string of a DataFrame."""
+    return lambda df: df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.fixture(scope="session")
 def spark():
     s = get_spark("pytest", master="local[4]", shuffle_partitions=4)
     yield s

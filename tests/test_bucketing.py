@@ -13,12 +13,8 @@ from bigdatapipelinepysparksqlserver_spark.sources.lake import write_bucketed_ta
 import pytest
 
 
-def _plan(df):
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 @pytest.mark.slow
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
+def test_bucketed_join_has_no_exchange(spark, tmp_path, executed_plan):
     orders = spark.range(0, 1000).select(
         F.col("id").alias("o_key"), (F.col("id") % 7).alias("o_val")
     )
@@ -40,7 +36,7 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
             spark.table("t_lines_b"), F.col("o_key") == F.col("l_key")
         )
         assert joined.count() == 5000
-        plan = _plan(joined)
+        plan = executed_plan(joined)
         assert "SortMergeJoin" in plan
         assert "Exchange" not in plan  # co-located: bucket layout IS the shuffle
         assert "Bucketed: true" in plan
@@ -50,7 +46,7 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_lines_b")
 
 
-def test_bucketed_groupby_has_no_exchange(spark, tmp_path):
+def test_bucketed_groupby_has_no_exchange(spark, tmp_path, executed_plan):
     ev = spark.range(0, 2000).select(
         (F.col("id") % 50).alias("user_id"), (F.col("id") % 9).alias("v")
     )
@@ -60,13 +56,13 @@ def test_bucketed_groupby_has_no_exchange(spark, tmp_path):
     try:
         agg = spark.table("t_events_b").groupBy("user_id").agg(F.sum("v").alias("s"))
         assert agg.count() == 50
-        plan = _plan(agg)
+        plan = executed_plan(agg)
         assert "Exchange" not in plan  # aggregation reuses the bucket partitioning
     finally:
         spark.sql("DROP TABLE IF EXISTS t_events_b")
 
 
-def test_winnow_store_probe_exchange_free(spark, tmp_path):
+def test_winnow_store_probe_exchange_free(spark, tmp_path, executed_plan):
     """The winnowing fingerprint index as a bucketed table: the
     incremental copy-probe must (a) find the planted copy and miss the
     unrelated doc, (b) equal the inline (non-stored) probe, and (c)
@@ -123,7 +119,7 @@ def test_winnow_store_probe_exchange_free(spark, tmp_path):
             store.select("fp_hash", F.col("doc_id").alias("__cid")), "fp_hash"
         )
         j.collect()
-        plan = _plan(j).rsplit("== Initial Plan ==", 1)[0]
+        plan = executed_plan(j).rsplit("== Initial Plan ==", 1)[0]
         store_scan = [
             ln for ln in plan.splitlines()
             if "FileScan" in ln and "t_winnow_store" in ln
@@ -136,7 +132,7 @@ def test_winnow_store_probe_exchange_free(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_winnow_store")
 
 
-def test_decontaminate_spans_stored_equals_inline(spark, tmp_path):
+def test_decontaminate_spans_stored_equals_inline(spark, tmp_path, executed_plan):
     """The repeated-use decontamination form (eval fps probed against
     the winnow_store_bucketed corpus index) must equal the inline
     decontaminate_spans under the same df-cap, with NO Exchange at all
@@ -175,7 +171,7 @@ def test_decontaminate_spans_stored_equals_inline(spark, tmp_path):
         assert got == want and {r[0] for r in got} == {1, 3}, (got, want)
         # probe plan: no Exchange anywhere (broadcast join over the
         # bucketed scan; the groupBy keys include the bucket column)
-        plan = stored._jdf.queryExecution().executedPlan().toString()
+        plan = executed_plan(stored)
         assert "BroadcastHashJoin" in plan, plan
     finally:
         spark.sql("DROP TABLE IF EXISTS t_decont_store")

@@ -232,7 +232,7 @@ def test_bm25_search_ranking_and_exclusion(spark):
     assert ids.index(3) < ids.index(2)
 
 
-def test_bm25_store_probe_equals_corpus_scan(spark, tmp_path):
+def test_bm25_store_probe_equals_corpus_scan(spark, tmp_path, executed_plan):
     """The inverted-postings store probe must reproduce the (oracle-
     backed) corpus-scan BM25 exactly, and read only the probe terms'
     bucket partitions."""
@@ -265,7 +265,7 @@ def test_bm25_store_probe_equals_corpus_scan(spark, tmp_path):
 
     # partition pruning: the postings scan carries the bucket IN (...)
     # partition filter — at most one bucket per probe term
-    plan = probe._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(probe)
     assert "PartitionFilters" in plan and "bucket" in plan
 
 
@@ -322,7 +322,7 @@ def test_store_path_sweeps_dead_process_siblings(tmp_path, monkeypatch):
     assert path.endswith(f"_p{os.getpid()}")
 
 
-def test_postings_store_df_guard_bounds_stopword_probe(spark, tmp_path):
+def test_postings_store_df_guard_bounds_stopword_probe(spark, tmp_path, executed_plan):
     """Skew guard: a term present in EVERY doc (corpus-sized postings —
     the one unbounded object in a term-bucketed store) is dropped
     before the postings scan when df > max_df_ratio·N: the pushed
@@ -357,7 +357,7 @@ def test_postings_store_df_guard_bounds_stopword_probe(spark, tmp_path):
     # and NOT the stopword (its postings are never read)
     import re
 
-    plan = probe._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(probe)
     scan_lines = [
         ln
         for ln in plan.splitlines()
@@ -564,7 +564,7 @@ def test_label_propagation_two_cliques(spark):
     assert all(got[n] == 10 for n in (10, 11, 12, 13)), got
 
 
-def test_edge_store_probe_equals_rebuild_and_prunes(spark, tmp_path):
+def test_edge_store_probe_equals_rebuild_and_prunes(spark, tmp_path, executed_plan):
     """Stored-path contract for the graph family: (1) PageRank over the
     store equals PageRank over the inline edge relation exactly;
     (2) a single-source neighborhood probe scans ONLY the source's
@@ -597,7 +597,7 @@ def test_edge_store_probe_equals_rebuild_and_prunes(spark, tmp_path):
     probe = read_edge_store(spark, store).where(
         (F.col("bucket") == 5 % 8) & (F.col("src") == 5)
     )
-    plan = probe._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(probe)
     assert "PartitionFilters: [" in plan
     seg = plan.split("PartitionFilters")[1][:160]
     assert "bucket" in seg

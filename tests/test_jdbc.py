@@ -77,10 +77,10 @@ def test_jdbc_write_read_roundtrip_partitioned(spark, derby_cfg):
     assert sorted((r.id, r.v) for r in back.collect()) == [(i, 2 * i) for i in range(200)]
 
 
-def test_jdbc_filter_pushdown_reaches_scan(spark, derby_cfg):
+def test_jdbc_filter_pushdown_reaches_scan(spark, derby_cfg, executed_plan):
     write_jdbc(spark.range(0, 100).selectExpr("id", "id * 2 AS v"), derby_cfg, "T")
     flt = read_jdbc(spark, derby_cfg, "T").where("v > 100")
-    plan = flt._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(flt)
     assert "PushedFilters" in plan and "GreaterThan(v,100)" in plan.replace("V", "v")
     assert flt.count() == 49  # the filter also actually filtered
 

@@ -190,7 +190,7 @@ def test_one_file_per_partition(spark, tmp_path):
         assert len(files) == 1, d
 
 
-def test_register_catalog_table(spark, tmp_path):
+def test_register_catalog_table(spark, tmp_path, executed_plan):
     """S4: CREATE TABLE ... USING PARQUET + MSCK partition discovery makes
     the lake queryable by name through the SQL catalog."""
     lake = LakeTable(spark, str(tmp_path / "lake"))
@@ -207,9 +207,8 @@ def test_register_catalog_table(spark, tmp_path):
         }
         assert got == {(1, 202401), (2, 202402)}
         # partition pruning reaches the catalog table
-        plan = (
+        plan = executed_plan(
             spark.sql("SELECT id FROM sales_history_cat_test WHERE year_month = 202401")
-            ._jdf.queryExecution().executedPlan().toString()
         )
         assert "202401" in plan
         # idempotent re-register
@@ -289,7 +288,7 @@ def test_bloom_store_prunes_row_groups_stats_cannot(spark, tmp_path):
     assert absent <= max(1, total // 20)  # false positives only
 
 
-def test_bloom_store_point_lookup_exact(spark, tmp_path):
+def test_bloom_store_point_lookup_exact(spark, tmp_path, executed_plan):
     from bigdatapipelinepysparksqlserver_spark.sources.lake import point_lookup
 
     path, base, n = _bloom_store(spark, tmp_path, cluster_col="ts_bucket")
@@ -298,9 +297,7 @@ def test_bloom_store_point_lookup_exact(spark, tmp_path):
     got = point_lookup(spark, path, "doc_id", want + miss).collect()
     assert sorted(r.doc_id for r in got) == sorted(want)
     # the predicate reaches the parquet scan (row-group filtering input)
-    plan = point_lookup(
-        spark, path, "doc_id", want
-    )._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(point_lookup(spark, path, "doc_id", want))
     assert "PushedFilters: [In(doc_id" in plan
 
 
@@ -353,7 +350,7 @@ def test_analyze_table_records_stats(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
-def test_cbo_stats_flip_filtered_join_to_broadcast(spark, tmp_path):
+def test_cbo_stats_flip_filtered_join_to_broadcast(spark, tmp_path, executed_plan):
     """The plan change stats exist for: a selective filter on a
     file-size-big table estimates down to ~size/ndv under CBO, crossing
     the broadcast threshold — fact⋈filtered-fact becomes a broadcast
@@ -375,7 +372,7 @@ def test_cbo_stats_flip_filtered_join_to_broadcast(spark, tmp_path):
             spark.table(fact)
             .join(spark.table(dim).where(F.col("k") == 7), "k")
         )
-        return q._jdf.queryExecution().executedPlan().toString()
+        return executed_plan(q)
 
     prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     prev_cbo = spark.conf.get("spark.sql.cbo.enabled")

@@ -831,7 +831,7 @@ def test_randomized_lifecycle_matches_dict_model(spark, tmp_path):
         check()
 
 
-def test_snapshot_read_keeps_partition_pruning(spark, tmp_path):
+def test_snapshot_read_keeps_partition_pruning(spark, tmp_path, executed_plan):
     """The explicit leaf-dir list under one basePath must preserve
     Catalyst's PartitionFilters pruning on the partition columns (the
     scan property that makes partition-grain CDC affordable), and the
@@ -844,7 +844,7 @@ def test_snapshot_read_keeps_partition_pruning(spark, tmp_path):
     lake.write_full(df)
     probe = lake.read().where(F.col("year_month") == 202402)
     assert "txn" not in probe.columns
-    plan = probe._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(probe)
     assert "PartitionFilters" in plan
     seg = plan.split("PartitionFilters")[1][:200]
     assert "year_month" in seg and "202402" in seg

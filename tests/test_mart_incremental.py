@@ -189,15 +189,6 @@ def test_cycle_publishes_same_snapshot_with_and_without_partials(
     run(T2)
 
 
-@pytest.mark.slow
-def test_bootstrap_equals_refresh_path(spark, env):
-    src, gen, lake, ledger, mart = env
-    gen.insert_sales(150, batch=1, now=T1, spread_days=20)
-    run_pipeline_1(spark, src, lake, ledger, now=T1)
-    mart.bootstrap()
-    _assert_marts_match_full(lake, mart)
-
-
 def test_cycle_runs_no_partition_listing_or_drop(spark, env, tmp_path, monkeypatch):
     """Regression guard for the one-write rebuild: a full scheduler
     cycle (lake load + incremental mart refresh) on a plain LakeTable

@@ -28,7 +28,7 @@ def test_payload_schema_and_metadata(media):
 
 def test_frame_plan_clamps(spark):
     docs = spark.createDataFrame([(1, "x" * 500), (2, "y" * 50)], ["doc_id", "text"])
-    media = attach_binary_payload(docs, "doc_id", "text", media_type="video")
+    media = attach_binary_payload(docs, "doc_id", "text")
     with_dur = media.withColumn(
         "meta",
         F.struct(
@@ -46,7 +46,7 @@ def test_frame_plan_clamps(spark):
     assert sorted(frames[2]) == [(0, 0)]  # sub-second duration → 1 frame
 
 
-def test_resize_fixed_size_deterministic(media, spark):
+def test_resize_fixed_size_deterministic(media, spark, executed_plan):
     """resize_image_batches: every output payload is EXACTLY w×h bytes
     (the fixed-size contract downstream tensor packing relies on),
     deterministic across runs, one row per input, via MapInPandas —
@@ -69,7 +69,7 @@ def test_resize_fixed_size_deterministic(media, spark):
     again = {r.media_id: r.payload for r in
              resize_image_batches(media, width=4, height=3, decoder="surrogate").collect()}
     assert {k: v.payload for k, v in rows.items()} == again
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(out)
     assert "MapInPandas" in plan
 
 

@@ -15,12 +15,8 @@ from bigdatapipelinepysparksqlserver_spark.sources.lake import LakeTable
 SF = "/root/testdata/sf0.001"
 
 
-def plan_of(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_tpch_q1_pushdown_and_partial_agg(spark):
-    plan = plan_of(REGISTRY["tpch_q1"].fn(spark, SF))
+def test_tpch_q1_pushdown_and_partial_agg(spark, executed_plan):
+    plan = executed_plan(REGISTRY["tpch_q1"].fn(spark, SF))
     # filter reaches the parquet scan
     assert "PushedFilters: [" in plan and "l_shipdate" in plan.split("PushedFilters")[1][:200]
     # map-side combine before the exchange
@@ -30,21 +26,21 @@ def test_tpch_q1_pushdown_and_partial_agg(spark):
     assert "l_comment" not in read_schema
 
 
-def test_mart_client_count_broadcasts_dims(spark):
-    plan = plan_of(REGISTRY["mart_client_count"].fn(spark, SF))
+def test_mart_client_count_broadcasts_dims(spark, executed_plan):
+    plan = executed_plan(REGISTRY["mart_client_count"].fn(spark, SF))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     # exact (not approx) distinct aggregation in the final plan
     assert "count(distinct" in plan
 
 
-def test_minhash_verify_is_candidate_pruned(spark):
+def test_minhash_verify_is_candidate_pruned(spark, executed_plan):
     """No shingle-equality join anywhere in the minhash plan (candidate
     generation is bucket-grouped, verification is per-pair array
     intersection), and the docs feeding verification are LeftSemi-pruned
     to candidate ids — the difference between near-linear and all-pairs
     at 100 TB."""
-    plan = plan_of(REGISTRY["dedup_minhash"].fn(spark, SF))
+    plan = executed_plan(REGISTRY["dedup_minhash"].fn(spark, SF))
     assert "Join [shingle" not in plan
     assert "BroadcastHashJoin [shingle" not in plan
     assert "SortMergeJoin [shingle" not in plan
@@ -52,47 +48,47 @@ def test_minhash_verify_is_candidate_pruned(spark):
     assert "collect_list" in plan  # bucket-grouped pair enumeration
 
 
-def test_source_rollup_single_scan(spark):
+def test_source_rollup_single_scan(spark, executed_plan):
     """source_quality_rollup claims ONE scan of documents — the quality
     features, the md5 hash and the source key must ride the same
     projection, not a second scan + self-join."""
-    plan = plan_of(REGISTRY["source_quality_rollup"].fn(spark, SF))
+    plan = executed_plan(REGISTRY["source_quality_rollup"].fn(spark, SF))
     assert plan.count("documents.parquet") == 1
     assert "Join" not in plan
 
 
-def test_incremental_dedup_probe_shape(spark):
+def test_incremental_dedup_probe_shape(spark, executed_plan):
     """dedup_incremental's candidate join must be bucket-keyed (band,
     bh) — never a cartesian/BNLJ — and the base side must feed exactly
     two scans of documents (signature subtree + verify doc fetch), not
     a per-band or per-side explosion."""
-    plan = plan_of(REGISTRY["dedup_incremental"].fn(spark, SF))
+    plan = executed_plan(REGISTRY["dedup_incremental"].fn(spark, SF))
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     # band/bh join key visible in some join (sort-merge or broadcast-hash)
     assert "band" in plan and "bh" in plan
 
 
-def test_lake_partition_pruning(spark, tmp_path):
+def test_lake_partition_pruning(spark, tmp_path, executed_plan):
     lake = LakeTable(spark, str(tmp_path / "lake"))
     lake.write_full(
         spark.createDataFrame(
             [(1, 202401, "PT"), (2, 202402, "ES")], ["id", "year_month", "country"]
         )
     )
-    plan = plan_of(lake.read().where(F.col("year_month") == 202401))
+    plan = executed_plan(lake.read().where(F.col("year_month") == 202401))
     # partition filter resolved at planning, not per-row
     assert "PartitionFilters: [" in plan
     assert "year_month" in plan.split("PartitionFilters")[1][:120]
 
 
 @pytest.fixture(scope="module")
-def all_plans(spark):
+def all_plans(spark, executed_plan):
     """Executed-plan string per registered query, built ONCE for the
     whole-registry hazard sweeps below — several fns run control-plane
     jobs (counts, codebook collects, store builds) at plan-build time,
     so per-test rebuilds double the most expensive part of this
     module."""
-    return {name: plan_of(spec.fn(spark, SF)) for name, spec in REGISTRY.items()}
+    return {name: executed_plan(spec.fn(spark, SF)) for name, spec in REGISTRY.items()}
 
 
 def test_no_cartesian_products_anywhere(all_plans, plan_report):
@@ -135,7 +131,7 @@ def test_no_python_row_udfs_in_relational_surface(all_plans, plan_report):
     assert offenders == []
 
 
-def test_ivf_partitioned_probe_prunes_to_probed_cells(spark):
+def test_ivf_partitioned_probe_prunes_to_probed_cells(spark, executed_plan):
     """Pruning on the IVFPQ store is REAL, not just present: a 1-query,
     n_probe=2 probe of the store the graded `ann_ivfpq_topk` builds
     carries exactly 2 cells in PartitionFilters, a strict subset of the
@@ -169,7 +165,7 @@ def test_ivf_partitioned_probe_prunes_to_probed_cells(spark):
         codebook, pq_sub_codebooks(emb, m=PQ_M, n_codes=PQ_CODES),
         n_probe=2, k=5,
     )
-    tail = plan_of(narrow).split("PartitionFilters: [")[1]
+    tail = executed_plan(narrow).split("PartitionFilters: [")[1]
     m = re.search(r"cell#\d+ (?:INSET ([\d, ]+)|IN \(([\d,\s]+)\))", tail[:400])
     assert m, f"no cell IN-list in PartitionFilters: {tail[:400]}"
     narrow_cells = {int(x) for x in (m.group(1) or m.group(2)).split(",") if x.strip()}
@@ -177,7 +173,7 @@ def test_ivf_partitioned_probe_prunes_to_probed_cells(spark):
     assert narrow_cells < {c for c, _ in cells}
 
 
-def test_ivfpq_probe_prunes_and_reads_codes_only(spark):
+def test_ivfpq_probe_prunes_and_reads_codes_only(spark, executed_plan):
     """The IVFPQ store query engages BOTH compression axes in the plan:
     PartitionFilters carries exactly the probed cells (directory-level
     pruning), and the store scan's column list is (id, codes, cell) —
@@ -185,7 +181,7 @@ def test_ivfpq_probe_prunes_and_reads_codes_only(spark):
     ints per row."""
     import re
 
-    plan = plan_of(REGISTRY["ann_ivfpq_topk"].fn(spark, SF))
+    plan = executed_plan(REGISTRY["ann_ivfpq_topk"].fn(spark, SF))
     tail = plan.split("PartitionFilters: [")[1]
     m = re.search(r"cell#\d+ (?:INSET ([\d, ]+)|IN \(([\d,\s]+)\))", tail[:400])
     assert m, f"no cell IN-list in PartitionFilters: {tail[:400]}"
@@ -231,8 +227,8 @@ def test_ivfpq_probe_prunes_and_reads_codes_only(spark):
         assert "embedding" not in cols
 
 
-def test_topk_plans_as_take_ordered(spark):
-    plan = plan_of(REGISTRY["tpch_q3"].fn(spark, SF))
+def test_topk_plans_as_take_ordered(spark, executed_plan):
+    plan = executed_plan(REGISTRY["tpch_q3"].fn(spark, SF))
     assert "TakeOrderedAndProject" in plan  # per-partition heap, no global sort
 
 
@@ -265,31 +261,31 @@ def test_salted_join_and_agg(spark):
     assert rows == truth
 
 
-def test_nano_window_filter_pushes_raw_range(spark):
+def test_nano_window_filter_pushes_raw_range(spark, executed_plan):
     """window_filter's time range must reach PushedFilters in the raw
     int64-nanos domain (the repair projection would otherwise block
     row-group skipping on the only true-nanos column, events.ts)."""
-    plan = plan_of(REGISTRY["window_filter"].fn(spark, SF))
+    plan = executed_plan(REGISTRY["window_filter"].fn(spark, SF))
     pushed = plan.split("PushedFilters:")[1].splitlines()[0]
     assert "GreaterThanOrEqual(ts," in pushed and "LessThan(ts," in pushed
 
 
-def test_event_gaps_single_window_pass(spark):
+def test_event_gaps_single_window_pass(spark, executed_plan):
     """lag + lead + moving-avg share one (partition, order) spec → ONE
     shuffle and ONE Window operator, not three."""
-    plan = plan_of(REGISTRY["event_gaps"].fn(spark, SF))
+    plan = executed_plan(REGISTRY["event_gaps"].fn(spark, SF))
     assert plan.count("Exchange hashpartitioning") == 1
     assert plan.count("Window ") == 1
 
 
-def test_user_tier_history_two_exchanges(spark):
+def test_user_tier_history_two_exchanges(spark, executed_plan):
     """The SCD2 history build claims two shuffles total: the (user_id,
     day) daily aggregate, then one user_id exchange+sort shared by all
     three window functions (stacked Window operators — lag feeds the
     running sum) AND the island collapse, whose grouping key contains
     user_id, so hashpartitioning(user_id) already satisfies its
     clustering distribution — a third exchange is a plan regression."""
-    plan = plan_of(REGISTRY["user_tier_history"].fn(spark, SF))
+    plan = executed_plan(REGISTRY["user_tier_history"].fn(spark, SF))
     assert plan.count("Exchange hashpartitioning") == 2
     # lag feeds the running sum, so Catalyst stacks two Window operators
     # over ONE Sort — same partitioning, no re-exchange between them
@@ -297,19 +293,19 @@ def test_user_tier_history_two_exchanges(spark):
     assert plan.count("+- Sort ") == 1
 
 
-def test_html_extract_is_shuffle_free_scan(spark):
+def test_html_extract_is_shuffle_free_scan(spark, executed_plan):
     """The HTML extraction stage must stay a one-pass scan-side
     projection: zero exchanges, zero joins — the contract that lets it
     run at scan speed next to quality scoring at 100 TB."""
-    plan = plan_of(REGISTRY["html_extract_clean"].fn(spark, SF))
+    plan = executed_plan(REGISTRY["html_extract_clean"].fn(spark, SF))
     assert "Exchange" not in plan
     assert "Join" not in plan
 
 
-def test_asof_attribution_is_union_window_not_join(spark):
+def test_asof_attribution_is_union_window_not_join(spark, executed_plan):
     """The as-of join must plan as union+window: no join operator, one
     key shuffle — the shape that avoids per-row history explosion."""
-    plan = plan_of(REGISTRY["asof_attribution"].fn(spark, SF))
+    plan = executed_plan(REGISTRY["asof_attribution"].fn(spark, SF))
     assert "Join" not in plan
     assert plan.count("Exchange hashpartitioning") == 1
 
@@ -364,29 +360,29 @@ def test_no_single_partition_windows_anywhere(spark):
     assert offenders == []
 
 
-def test_user_streaks_two_exchanges(spark):
+def test_user_streaks_two_exchanges(spark, executed_plan):
     """Streaks claim two shuffles end to end: the (user, day) distinct,
     then one user_id exchange for the rank window — both downstream
     groupBys key on supersets of user_id and reuse its partitioning."""
-    plan = plan_of(REGISTRY["user_streaks"].fn(spark, SF))
+    plan = executed_plan(REGISTRY["user_streaks"].fn(spark, SF))
     assert plan.count("Exchange hashpartitioning") == 2
 
 
-def test_peak_concurrency_single_scan_three_exchanges(spark):
+def test_peak_concurrency_single_scan_three_exchanges(spark, executed_plan):
     """The sweep-line query must read events ONCE (boundaries come from
     one struct-array explode, not a self-union that would recompute the
     sessionize windows) and shuffle exactly three times: user_id
     (sessionize), (day, bucket) (inner running sum), day (roll-up)."""
-    plan = plan_of(REGISTRY["session_peak_concurrency"].fn(spark, SF))
+    plan = executed_plan(REGISTRY["session_peak_concurrency"].fn(spark, SF))
     assert plan.count("Scan parquet") == 1
     assert plan.count("Exchange hashpartitioning") == 3
 
 
-def test_chi2_and_psi_single_pass_broadcast_stats(spark):
+def test_chi2_and_psi_single_pass_broadcast_stats(spark, executed_plan):
     """Both statistics queries scan their fact table once per
     data-sized aggregate and attach 1-row statistics via broadcast —
     never a shuffled join on a constant key."""
     for name in ("ab_conversion_chi2", "value_drift_psi"):
-        plan = plan_of(REGISTRY[name].fn(spark, SF))
+        plan = executed_plan(REGISTRY[name].fn(spark, SF))
         assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan, name
         assert "CartesianProduct" not in plan, name

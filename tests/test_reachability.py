@@ -1,13 +1,17 @@
-"""Reachability gate: every package definition and every registered
-query has to be reached by something other than a test.
+"""Reachability gate: every package definition (function, class,
+method, constant) and every registered query has to be reached by
+something other than a test, and every option (a parameter with a
+default) has to be set by something other than a test.
 
-ROADMAP items 2 and 4: a definition or query that no graded or headline
-query, pipeline or tool uses has to justify its place or go. Only code
-outside `tests/` keeps anything alive: a test that runs a query, or a
-package `__init__.py` that re-exports a name, does not count as a use. They read source with `ast` only (no git, no
-Spark session), so comments and docstrings never count as a use. Each
-test has an explicit allow-list; an entry that is undefined or that the
-scan would no longer report fails the test, so the list cannot go stale.
+ROADMAP items 2 and 4: a definition, query or option that no graded or
+headline query, pipeline or tool uses has to justify its place or go.
+Only code outside `tests/` keeps anything alive: a test that runs a
+query or sets an option, or a package `__init__.py` that re-exports a
+name, does not count as a use. The tests read source with `ast` only
+(no git, no Spark session), so comments and docstrings never count as
+a use. Each test has an explicit allow-list; an entry that is undefined
+or that the scan would no longer report fails the test, so the list
+cannot go stale.
 """
 
 from __future__ import annotations
@@ -26,9 +30,13 @@ RUNNER_DIRS = (ROOT / "tools", ROOT / "perfbench")
 REFERRER_DIRS = (PKG, *RUNNER_DIRS)
 REFERRER_FILES = (ROOT / "bench.py", ROOT / "__spark_entry__.py")
 
-# Top-level definitions kept although no code outside tests reaches
-# them. A key is a package-relative module path (the whole module) or
-# "module:name"; the value says why it stays.
+
+def _referrers() -> list[Path]:
+    return [p for d in REFERRER_DIRS for p in sorted(d.rglob("*.py"))] + list(REFERRER_FILES)
+
+# Definitions kept although no code outside tests reaches them. A key
+# is a package-relative module path (the whole module), "module:name"
+# or "module:Class.method"; the value says why it stays.
 ALLOWED_DEFS = {
     "sources/jdbc.py": "deployment I/O: the reference extracts SQL Server over JDBC (capability (a))",
     "sources/dialects.py": "deployment I/O: the SQL Server dialect and URL for that extract",
@@ -38,6 +46,10 @@ ALLOWED_DEFS = {
     "corpus.py:build_corpus": "builds the test corpora",
     "operators/graph.py:triangle_counts": "the exact reference the triangle-estimate tests compare against",
     "operators/similarity.py:ivf_codebook_topk": "the IVF search the ANN store tests compare against",
+    **{
+        f"streaming/metrics.py:StreamingHealthListener.{m}": "Spark's listener bus calls it"
+        for m in ("onQueryStarted", "onQueryProgress", "onQueryIdle", "onQueryTerminated")
+    },
 }
 
 
@@ -57,8 +69,6 @@ TEST_ONLY_WORKLIST = {
         "17 tests in test_training_ops, test_profiling_ops and test_properties",
     ),
     "queries/training_queries.py:SPLIT_BOUNDS": "test-only; retires with hash_split",
-    "operators/skew.py": "test-only; retires with test_skew_report_identifies_pathological_key, "
-    "test_salted_join_and_agg and test_salted_agg_equals_direct",
     **_worklist(
         "operators/graph.py",
         "label_propagation write_edge_store read_edge_store triangle_count_estimate "
@@ -87,13 +97,30 @@ TEST_ONLY_WORKLIST = {
         "3 tests in test_training_ops and test_corpus",
     ),
     "operators/relational.py:fixed_width_histogram": "test-only; retires with 3 tests in test_profiling_ops",
-    "streaming/cdc.py": "test-only; retires with 22 tests in test_streaming, "
-    "test_lake_snapshot::test_streaming_sink_publishes_atomic_snapshots and "
-    "test_store_compaction::test_compact_semantic_streaming_store",
-    "streaming/metrics.py": "test-only; retires with "
+    **_worklist(
+        "operators/skew.py",
+        "salted_join salted_agg skew_report",
+        "test_plans::test_salted_join_and_agg, test_properties::test_salted_agg_equals_direct "
+        "and test_components::test_skew_report_identifies_pathological_key",
+    ),
+    **_worklist(
+        "operators/stores.py",
+        "compact_store_batches compact_store_live rollback_store_version",
+        "10 tests in test_store_compaction and 3 in test_pointer_protocol",
+    ),
+    **_worklist(
+        "streaming/cdc.py",
+        "streaming_hourly_agg streaming_dedup streaming_enrich streaming_running_totals "
+        "streaming_transition_counts streaming_hopping_agg streaming_rolling_actives "
+        "foreach_batch_partition_overwrite foreach_batch_incremental_mart_publish "
+        "foreach_batch_ivf_store_upsert foreach_batch_online_semantic_dedup "
+        "foreach_batch_token_budget_ingest foreach_batch_drift_monitor "
+        "foreach_batch_edge_store_append foreach_batch_online_copy_gate",
+        "22 tests in test_streaming, test_lake_snapshot::test_streaming_sink_publishes_atomic_snapshots "
+        "and test_store_compaction::test_compact_semantic_streaming_store",
+    ),
+    "streaming/metrics.py:attach_health_listener": "test-only; retires with "
     "test_streaming::test_streaming_health_listener_captures_progress",
-    "operators/stores.py": "test-only; retires with 10 tests in test_store_compaction "
-    "and 3 in test_pointer_protocol",
     "operators/graph.py:read_edge_store_batched": "test-only; retires with "
     "test_streaming::test_streaming_edge_store_append_recomposes_and_replays",
     "operators/similarity.py:ivf_partitioned_topk": "test-only; retires with "
@@ -106,6 +133,26 @@ TEST_ONLY_WORKLIST = {
         "write_bloom_store point_lookup bloom_prune_audit analyze_table table_stats",
         "5 tests in test_lake",
     ),
+    "sources/lake.py:LakeTable.register_catalog_table": "test-only; retires with "
+    "test_lake::test_register_catalog_table",
+    **_worklist(
+        "pipelines.py",
+        "MartPublisher.recover MartPublisher.list_versions MartPublisher.read_version",
+        "test_mart_publish::test_publish_crash_between_version_rename_and_pointer_swap, "
+        "::test_recover_falls_back_when_pointer_names_missing_dir and "
+        "::test_snapshot_time_travel_reads_retained_version",
+    ),
+    **_worklist(
+        "sources/lake_snapshot.py",
+        "SnapshotLakeTable.live_schema SnapshotLakeTable.current_stats "
+        "SnapshotLakeTable.register_view SnapshotLakeTable.snapshots "
+        "SnapshotLakeTable.read_snapshot",
+        "6 tests in test_lake_snapshot",
+    ),
+    "sources/lake_snapshot.py:SnapshotLakeTable.merge_rows": "test-only; retires with "
+    "test_lake_rename_merge::test_merge_zone_pruned_location_scan, "
+    "::test_merge_null_fills_columns_the_batch_lacks, ::test_merge_boolean_partition_spelling, "
+    "::test_merge_null_key_replay_safe and ::test_publish_expectations_gate",
 }
 
 # Past-cap queries that only tests run, each with the tier-1 tests it
@@ -136,6 +183,61 @@ TEST_ONLY_QUERIES = {
     "value_drift_psi": "test_plans::test_chi2_and_psi_single_pass_broadcast_stats, "
     "test_profiling_ops::test_value_drift_psi_contract",
     "window_filter": "test_plans::test_nano_window_filter_pushes_raw_range",
+}
+
+
+# Parameters with a default that no call outside tests sets, kept as
+# options anyway; the key is "module:function(param)" (a method as
+# "Class.method"), the value says why the option stays.
+_FAKE_FS = "tests substitute a fake filesystem"
+_GUARD = "tests lower the guard threshold to reach it at test scale"
+_INVARIANT = "tests vary it to check that the result does not depend on it"
+_SMALL = "tests use fewer buckets so a small input shares buckets"
+ALLOWED_OPTIONS = {
+    "pipelines.py:MartPublisher.__init__(fs)": _FAKE_FS,
+    "sources/lake_snapshot.py:SnapshotLakeTable.__init__(fs)": _FAKE_FS,
+    "operators/dedup.py:lsh_candidate_pairs(bucket_cap)": _GUARD,
+    "operators/similarity.py:embedding_near_duplicates(bucket_cap)": _GUARD,
+    "operators/similarity.py:semantic_dedup(pair_budget)": _GUARD,
+    "operators/stats.py:ks_two_sample(bucket_width)": _INVARIANT,
+    "operators/temporal.py:peak_concurrency(bucket_us)": _INVARIANT,
+    "operators/temporal.py:range_join(bin_width_us)": _INVARIANT,
+    "operators/sampling.py:token_budget_mix(n_buckets)": _INVARIANT,
+    "operators/retrieval.py:build_postings_store(num_buckets)": _SMALL,
+    "operators/retrieval.py:bm25_from_store(num_buckets)": _SMALL,
+    "operators/text.py:winnow_store_bucketed(num_buckets)": _SMALL,
+    "operators/dedup.py:minhash_near_duplicates_collapsed(num_hashes)": "tests run a "
+    "16-hash, 4-band signature at test scale",
+    "operators/dedup.py:minhash_near_duplicates_collapsed(bands)": "tests run a "
+    "16-hash, 4-band signature at test scale",
+    "operators/graph.py:triangle_node_estimates(threshold)": "tests keep every wedge "
+    "so the estimate equals the exact count",
+    "operators/graph.py:triangle_node_estimates(inv_p2)": "tests keep every wedge "
+    "so the estimate equals the exact count",
+    "operators/similarity.py:recommended_bits(target_bucket)": "tests check the "
+    "sizing rule against its SQL formula at other targets",
+    "operators/similarity.py:recommended_bits(min_bits)": "tests check the "
+    "sizing rule against its SQL formula without its clamp",
+    "plans/ledger.py:default_cutoff(lag_minutes)": "deployment setting: the safety "
+    "lag behind the source database's in-flight transactions",
+    "pipelines.py:MartPublisher.__init__(retain)": "deployment setting: how many "
+    "published versions in-flight readers may still hold",
+    "pipelines.py:MartPublisher.__init__(grace_seconds)": "deployment setting: how long "
+    "a crashed publisher's claim is honoured",
+    "sources/lake_snapshot.py:SnapshotLakeTable.__init__(grace_seconds)": "deployment "
+    "setting: how long a crashed publisher's claim is honoured",
+    "operators/stores.py:publish_store_version(grace_seconds)": "deployment setting: "
+    "how long a crashed publisher's claim is honoured",
+    "sources/lake_snapshot.py:SnapshotLakeTable.__init__(expectations)": "deployment "
+    "setting: the data-quality rules a publish must pass",
+    "pipelines.py:PipelineScheduler.__init__(schedule_interval)": "deployment setting: "
+    "the cycle period",
+    "pipelines.py:PipelineScheduler.__init__(catchup)": "deployment setting: whether "
+    "missed cycles run after an outage",
+    "pipelines.py:PipelineScheduler.__init__(retry_delay_seconds)": "deployment "
+    "setting: the wait before a failed cycle is retried",
+    "session.py:get_spark(shuffle_partitions)": "deployment setting: sized to the "
+    "cluster's cores",
 }
 
 
@@ -170,26 +272,43 @@ def _top_level_names(node) -> list[str]:
     return []
 
 
+def _span(path, node):
+    first = min([node.lineno] + [d.lineno for d in getattr(node, "decorator_list", ())])
+    return (path, first, node.end_lineno)
+
+
+def _definitions(tree):
+    """(key, node) for every top-level definition except `@query` ones,
+    and for every method of a top-level class, keyed "Class.method"."""
+    for node in tree.body:
+        if _query_name(node):
+            continue
+        for name in _top_level_names(node):
+            yield name, node
+        if isinstance(node, ast.ClassDef):
+            for m in node.body:
+                if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    yield f"{node.name}.{m.name}", m
+
+
 def _scan():
-    """(defs, uses, queries): defs maps (module, name) to its (path,
-    first, last) lines; queries maps a registered query name to the same
-    span of its function; uses lists (name, path, line) for every name
-    that code (not a docstring) reads: a bare or dotted name, or a
-    string constant."""
+    """(defs, uses, queries): defs maps (module, key) to its (path,
+    first, last) lines, for the definitions `_definitions` yields except
+    dunder names; queries maps a registered query name to the same span
+    of its function; uses lists (name, path, line) for every name that
+    code (not a docstring) reads: a bare or dotted name, or a string
+    constant."""
     defs, uses, queries = {}, [], {}
-    for path in [p for d in REFERRER_DIRS for p in sorted(d.rglob("*.py"))] + list(REFERRER_FILES):
+    for path in _referrers():
         tree = ast.parse(path.read_text())
         if path.is_relative_to(PKG):
             module = str(path.relative_to(PKG))
             for node in tree.body:
-                first = min([node.lineno] + [d.lineno for d in getattr(node, "decorator_list", ())])
-                span = (path, first, node.end_lineno)
                 if name := _query_name(node):
-                    queries[name] = span
-                    continue
-                for name in _top_level_names(node):
-                    if not name.startswith("__"):
-                        defs[(module, name)] = span
+                    queries[name] = _span(path, node)
+            for key, node in _definitions(tree):
+                if not key.rpartition(".")[2].startswith("__"):
+                    defs[(module, key)] = _span(path, node)
         docs = _docstring_ids(tree)
         for node in ast.walk(tree):
             if isinstance(node, ast.Name) and not isinstance(node.ctx, ast.Store):
@@ -228,9 +347,10 @@ def _unrun_past_cap() -> tuple[set[str], set[str]]:
 
 
 def _dead(defs, uses, roots=frozenset(), dead_spans=()):
-    """Fixed point: a definition is dead when every use of its name lies
-    inside its own body, inside another dead definition or inside one
-    of `dead_spans`. `roots` are kept alive whatever uses them."""
+    """Fixed point: a definition is dead when every use of its name (for
+    a method, its own name without the class) lies inside its own body,
+    inside another dead definition or inside one of `dead_spans`.
+    `roots` are kept alive whatever uses them."""
     where: dict[str, list] = {}
     for name, path, line in uses:
         where.setdefault(name, []).append((path, line))
@@ -244,7 +364,7 @@ def _dead(defs, uses, roots=frozenset(), dead_spans=()):
             inside = spans + [own]
             if all(
                 any(p == sp and a <= line <= b for sp, a, b in inside)
-                for p, line in where.get(key[1], ())
+                for p, line in where.get(key[1].rpartition(".")[2], ())
             ):
                 dead.add(key)
                 grew = True
@@ -252,13 +372,13 @@ def _dead(defs, uses, roots=frozenset(), dead_spans=()):
             return dead
 
 
-def _assert_clean(dead, undefined, stale):
+def _assert_clean(dead, undefined, stale, what="unreached"):
     """One failure that lists every finding: what the scan reports, and
     allow-list entries that name nothing or are no longer needed."""
     problems = [
         f"{label}:\n  " + "\n  ".join(items)
         for label, items in (
-            ("unreached", dead),
+            (what, dead),
             ("allow-list entries that name nothing", undefined),
             ("allow-list entries the scan no longer reports", stale),
         )
@@ -307,6 +427,145 @@ def test_past_cap_queries_are_run():
     )
 
 
+def _options(trees: dict) -> dict:
+    """Every parameter with a default of a function or method that
+    `_definitions` yields from `trees` (module -> tree), as
+    "module:key(param)" -> (def key, called name, param, position,
+    default).
+    The called name is the function's own, or its class's for
+    `__init__`; position is the parameter's index among a call's
+    positional arguments (after a bound `self`), None if keyword-only."""
+    out = {}
+    for module, tree in trees.items():
+        for key, node in _definitions(tree):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            cls, _, name = key.rpartition(".")
+            called = cls if name == "__init__" else name
+            static = any(getattr(d, "id", None) == "staticmethod" for d in node.decorator_list)
+            bound = 1 if cls and not static else 0
+            a = node.args
+            pos = a.posonlyargs + a.args
+            params = [(p, i - bound, d) for i, (p, d) in enumerate(
+                zip(pos, [None] * (len(pos) - len(a.defaults)) + a.defaults)
+            )]
+            params += [(p, None, d) for p, d in zip(a.kwonlyargs, a.kw_defaults)]
+            for p, i, d in params:
+                if d is not None:
+                    out[f"{module}:{key}({p.arg})"] = (
+                        (module, key), called, p.arg, i, ast.unparse(d)
+                    )
+    return out
+
+
+def _calls(trees) -> dict:
+    """Called name -> [(positional arguments before any `*`, whether a
+    `*` splat follows, keywords with None for a `**` splat)] over every
+    call in `trees`. The called name is a bare name (the imported name
+    for an `import ... as` alias) or the attribute of a dotted call;
+    for `super().__init__(...)` it is each base of the enclosing class,
+    and for `Base.__init__(...)` it is `Base`."""
+    out: dict[str, list] = {}
+    for tree in trees:
+        aliases = {
+            a.asname: a.name.rpartition(".")[2]
+            for n in ast.walk(tree)
+            if isinstance(n, (ast.Import, ast.ImportFrom))
+            for a in n.names
+            if a.asname
+        }
+        bases = {}  # id of a node inside a class -> the class's base names
+        for c in ast.walk(tree):
+            if isinstance(c, ast.ClassDef):
+                for n in ast.walk(c):
+                    bases[id(n)] = [getattr(b, "id", getattr(b, "attr", None)) for b in c.bases]
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            if isinstance(f, ast.Name):
+                names = [aliases.get(f.id, f.id)]
+            elif not isinstance(f, ast.Attribute):
+                continue
+            elif f.attr != "__init__":
+                names = [f.attr]
+            elif isinstance(f.value, ast.Call) and getattr(f.value.func, "id", None) == "super":
+                names = bases.get(id(node), [])
+            else:  # Base.__init__(self, ...)
+                names = [getattr(f.value, "id", getattr(f.value, "attr", None))]
+            stars = [i for i, a in enumerate(node.args) if isinstance(a, ast.Starred)]
+            npos = stars[0] if stars else len(node.args)
+            for name in names:
+                out.setdefault(name, []).append((npos, bool(stars), {k.arg for k in node.keywords}))
+    return out
+
+
+def _option_findings(trees, callers, allowed, exempt=frozenset()):
+    """(unset, undefined, stale) for the options scan: each option not
+    on `allowed` that no call in `callers` sets, as
+    "module:key(param=default)"; the `allowed` entries that name no
+    option; and those some call sets. Options of a definition in
+    `exempt`, or of a method whose class is, are skipped."""
+    options = _options(trees)
+    calls = _calls(callers)
+
+    def is_set(called, param, position):
+        return any(
+            param in kws or None in kws or (position is not None and (position < npos or star))
+            for npos, star, kws in calls.get(called, ())
+        )
+
+    unset = {
+        o
+        for o, ((module, key), called, param, position, _) in options.items()
+        if (module, key) not in exempt
+        and (module, key.partition(".")[0]) not in exempt
+        and not is_set(called, param, position)
+    }
+    return (
+        sorted(f"{o[:-1]}={options[o][4]})" for o in unset - set(allowed)),
+        sorted(set(allowed) - set(options)),
+        sorted(set(allowed) & set(options) - unset),
+    )
+
+
+def test_every_option_is_set_outside_tests():
+    """Every parameter with a default, on a package function or method
+    that is not `@query`-registered or on an allow-list, is set by some
+    call outside tests (package, tools/, perfbench/, bench.py,
+    __spark_entry__.py): by keyword, by position or through a `*`/`**`
+    splat. Calls match by the function's name, or by the class's for
+    `__init__`, so a name collision can only hide an option. An option
+    only tests set stays only on `ALLOWED_OPTIONS`, which it must still
+    need."""
+    trees = {str(p.relative_to(PKG)): ast.parse(p.read_text()) for p in sorted(PKG.rglob("*.py"))}
+    keys = {(m, k) for m, tree in trees.items() for k, _ in _definitions(tree)}
+    exempt = set().union(*(_allowed_keys(keys, e) for e in {**ALLOWED_DEFS, **TEST_ONLY_WORKLIST}))
+    callers = [ast.parse(p.read_text()) for p in _referrers()]
+    unset, undefined, stale = _option_findings(trees, callers, ALLOWED_OPTIONS, exempt)
+    _assert_clean(unset, undefined, stale, what="options no call outside tests sets")
+
+
+def test_option_scan_on_literal_source():
+    lib = ast.parse(
+        "def f(a, k=1, *, w=2): pass\n"
+        "def g(a, k=1, w=2): pass\n"
+        "def h(a, k=1): pass\n"
+        "class C:\n"
+        "    def __init__(self, p=0, q=1, r=2): pass\n"
+        "    def m(self, x=3): pass\n"
+        "    @staticmethod\n"
+        "    def s(y=4): pass\n"
+    )
+    caller = ast.parse("f(0, 5)\ng(0, **kw)\nh(0)\nC(7, q=2)\nobj.m(4)\nC.s(*ys)\n")
+    unset, undefined, stale = _option_findings(
+        {"lib.py": lib}, [caller], ["lib.py:C.__init__(r)", "lib.py:f(k)", "lib.py:nope(z)"]
+    )
+    assert unset == ["lib.py:f(w=2)", "lib.py:h(k=1)"]
+    assert undefined == ["lib.py:nope(z)"]
+    assert stale == ["lib.py:f(k)"]
+
+
 def _read_names(tree) -> set[str]:
     """Every name the module reads, including names inside string
     annotations such as ``"list[Callable[[], None]]"``."""
@@ -344,7 +603,7 @@ def _names_imported_through_packages() -> set[tuple[str, str]]:
     """(package, name) for every `from <package> import name` in code
     outside tests."""
     out = set()
-    for path in [p for d in REFERRER_DIRS for p in d.rglob("*.py")] + list(REFERRER_FILES):
+    for path in _referrers():
         for node in ast.walk(ast.parse(path.read_text())):
             if isinstance(node, ast.ImportFrom):
                 out.update((_imported_from(path, node), a.name) for a in node.names)

@@ -239,9 +239,7 @@ def test_semantic_dedup_pair_budget_guard(spark):
         [(0, _vec(0))], "cell int, centroid array<double>"
     )
     with pytest.raises(PairBudgetExceeded, match="semantic_dedup sized"):
-        semantic_dedup(
-            vectors, codebook, pair_budget=10, scale_path="semantic_dedup sized form"
-        ).collect()
+        semantic_dedup(vectors, codebook, pair_budget=10).collect()
 
 
 def test_semantic_dedup_build_job_bound(spark):
@@ -280,7 +278,7 @@ def test_semantic_dedup_build_job_bound(spark):
     assert jobs <= 14, f"{jobs} Spark jobs while building semantic_dedup"
 
 
-def test_assignment_blas_path_matches_literal(spark):
+def test_assignment_blas_path_matches_literal(spark, executed_plan):
     """Large codebooks switch assignment to the Arrow/numpy path
     (MapInPandas in the plan); small ones stay on the literal scan-side
     projection (no Python in the plan). Both must agree on (cell,
@@ -303,9 +301,9 @@ def test_assignment_blas_path_matches_literal(spark):
     small = big[:32]
 
     small_df = ivf_assign_with_cos(vectors, small)
-    assert "MapInPandas" not in small_df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in executed_plan(small_df)
     big_df = ivf_assign_with_cos(vectors, big)
-    assert "MapInPandas" in big_df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in executed_plan(big_df)
 
     # agreement: run the literal path on the big codebook too (bypass
     # the switch by slicing into the two halves and merging driver-side

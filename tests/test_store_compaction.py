@@ -32,7 +32,7 @@ def _batch_dirs(root: str) -> list[str]:
     return out
 
 
-def test_ivf_store_compaction_probe_equivalence(spark, tmp_path):
+def test_ivf_store_compaction_probe_equivalence(spark, tmp_path, executed_plan):
     """IVF: 3 appended batches → compact → flat cell=C layout. The
     partition-pruned probe returns exactly the projection-assignment
     search's rows before AND after, and PartitionFilters still prunes
@@ -79,7 +79,7 @@ def test_ivf_store_compaction_probe_equivalence(spark, tmp_path):
     probe = ivf_partitioned_topk(spark, store, queries, codebook_df, n_probe=4, k=8)
     assert sorted(map(tuple, probe.collect())) == want
     assert _parquet_files(store) < files_before
-    plan = probe._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(probe)
     assert "PartitionFilters" in plan
     assert "cell" in plan.split("PartitionFilters")[1][:300]
 

@@ -423,7 +423,7 @@ def test_streaming_mart_composes_with_jdbc_transactional_publish(spark, tmp_path
     assert publisher.read(spark, publisher.staging_name("sales_history_2")).count() == len(want)
 
 
-def test_streaming_ivf_store_grows_and_keeps_pruning(spark, tmp_path):
+def test_streaming_ivf_store_grows_and_keeps_pruning(spark, tmp_path, executed_plan):
     """Continuously-growing ANN store: embeddings streamed in ≥2
     micro-batches through foreach_batch_ivf_store_upsert land as
     batch=N/cell=C partitions. A probe over the grown store must (a)
@@ -481,7 +481,7 @@ def test_streaming_ivf_store_grows_and_keeps_pruning(spark, tmp_path):
     want = ivf_codebook_topk(emb, queries, codebook_df, n_probe=4, k=8)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
-    plan = got._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(got)
     assert "PartitionFilters" in plan
     assert "cell" in plan.split("PartitionFilters")[1][:300]
 

@@ -54,15 +54,14 @@ def test_asof_tie_on_ts_resolved_by_seq(spark):
     assert out == {10: "same-ts", 1: None}  # seq 5 < 10 joins; 5 > 1 does not
 
 
-def test_asof_single_shuffle_plan(spark):
+def test_asof_single_shuffle_plan(spark, executed_plan):
     left = spark.createDataFrame([(1, 1, _ts(1))], "event_id long, user_id long, ts timestamp")
     right = spark.createDataFrame(
         [(2, 1, _ts(0), "x")], "event_id long, user_id long, ts timestamp, tag string"
     )
-    plan = (
+    plan = executed_plan(
         asof_join(left, right, key="user_id", left_ts="ts", right_ts="ts",
                   payload_cols=["tag"], seq_col="event_id")
-        ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Join" not in plan  # union+window, not a join explosion
     assert plan.count("Exchange") <= 2  # union inputs coalesce into one key shuffle

@@ -155,7 +155,7 @@ def test_ngram_probe_hits_token_aligned(spark):
     assert out == {1: 1, 2: 1}  # doc 3 absent: no token-aligned match
 
 
-def test_deterministic_shuffle_total_order_without_global_sort(spark):
+def test_deterministic_shuffle_total_order_without_global_sort(spark, executed_plan):
     from bigdatapipelinepysparksqlserver_spark.operators.sampling import (
         deterministic_shuffle,
     )
@@ -185,7 +185,7 @@ def test_deterministic_shuffle_total_order_without_global_sort(spark):
     assert order_a[:10] != list(range(10))
 
     # no single-partition stage: the plan must not contain a global Sort
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(out)
     assert "rangepartitioning" in plan.lower()
 
 
@@ -427,7 +427,7 @@ def test_weighted_sample_k_matches_reference_python(spark):
     )
 
 
-def test_weighted_sample_k_plan_lowers_to_group_limit(spark):
+def test_weighted_sample_k_plan_lowers_to_group_limit(spark, executed_plan):
     """rank ≤ k must plan as WindowGroupLimit below the exchange (at
     most k rows per group per task shuffle) — the contract that makes
     the draw group-size-independent."""
@@ -439,12 +439,7 @@ def test_weighted_sample_k_plan_lowers_to_group_limit(spark):
         F.col("id"), (F.col("id") % 5).cast("string").alias("grp"),
         (F.col("id") % 7 + 1).alias("w"),
     )
-    plan = (
-        weighted_sample_k(df, "grp", "id", F.col("w"), 3)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = executed_plan(weighted_sample_k(df, "grp", "id", F.col("w"), 3))
     assert "WindowGroupLimit" in plan
     import pytest
 
