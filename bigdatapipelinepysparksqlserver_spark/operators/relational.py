@@ -47,11 +47,14 @@ def grouped_count_distinct(
 
 
 def changed_partitions(branches: Sequence[DataFrame], key: str = "year_month") -> DataFrame:
-    """U1+A1+O1 — the CDC changed-partition work list.
+    """U1+A1 — the CDC changed-partition work list, unordered.
 
-    UNION-with-dedup of the insert/update/delete branches then sort; T-SQL
-    UNION dedups implicitly, Spark ``union`` is UNION ALL, hence the explicit
+    UNION-with-dedup of the insert/update/delete branches; T-SQL UNION
+    dedups implicitly, Spark ``union`` is UNION ALL, hence the explicit
     ``distinct()`` (SURVEY §7.5 trap #2). Mirrors load_sales_history.py:80-96.
+    Sorting is the caller's, as in the reference, which sorts the collected
+    list on the driver (O1, load_sales_history.py:95-96): a Spark ``orderBy``
+    would cost a range-sampling job and a second shuffle for a handful of keys.
 
     Scale: each branch should already be a single-column projection; distinct
     over a handful of partition keys is a trivially small shuffle.
@@ -59,7 +62,7 @@ def changed_partitions(branches: Sequence[DataFrame], key: str = "year_month") -
     out = branches[0].select(key)
     for b in branches[1:]:
         out = out.union(b.select(key))
-    return out.distinct().orderBy(key)
+    return out.distinct()
 
 
 def reconcile_aggs(df: DataFrame, count_col: str, sum_col: str) -> DataFrame:

@@ -98,9 +98,6 @@ def stratified_sample(
 def token_budget_mix(
     docs: DataFrame,
     budgets: dict,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
     n_buckets: int = 256,
 ) -> DataFrame:
     """Training-mix construction by TOKEN BUDGET: for each source in
@@ -126,10 +123,10 @@ def token_budget_mix(
        1/n_buckets of that source — runs the running-sum window, offset
        by the tokens consumed before it.
 
-    The projected (id, source, tokens, okey) relation is persisted
+    The projected (doc_id, source, tokens, okey) relation is persisted
     between the two passes so the text is tokenized once; the persisted
     payload is ~40 B/row regardless of document size. Sources not in
-    ``budgets`` are dropped. Output: (id, source, tokens).
+    ``budgets`` are dropped. Output: (doc_id, source, tokens).
     """
     import math
 
@@ -140,31 +137,31 @@ def token_budget_mix(
         raise ValueError(f"n_buckets must be a power of 16, got {n_buckets}")
     sources = sorted(budgets)
     okey = F.md5(
-        F.concat(F.lit("mix:"), F.col(id_col).cast("string")).cast("binary")
+        F.concat(F.lit("mix:"), F.col("doc_id").cast("string")).cast("binary")
     )
-    trimmed = F.trim(F.col(text_col))
+    trimmed = F.trim(F.col("text"))
     tokens = (
         F.when(F.length(trimmed) == 0, F.lit(0))
         .otherwise(F.size(F.split(trimmed, r"\s+")))
         .cast("long")
     )
     base = scoped_persist(
-        docs.where(F.col(source_col).isin(sources)).select(
-            F.col(id_col),
-            F.col(source_col),
+        docs.where(F.col("source").isin(sources)).select(
+            F.col("doc_id"),
+            F.col("source"),
             tokens.alias("__tokens"),
             okey.alias("__okey"),
             F.conv(F.substring(okey, 1, p), 16, 10).cast("int").alias("__bucket"),
         )
     )
     stats = (
-        base.groupBy(source_col, "__bucket")
+        base.groupBy("source", "__bucket")
         .agg(F.sum("__tokens").alias("t"))
         .collect()
     )
     per_src: dict = {}
     for r in stats:
-        per_src.setdefault(r[source_col], []).append((r["__bucket"], r["t"]))
+        per_src.setdefault(r["source"], []).append((r["__bucket"], r["t"]))
     # first bucket whose cumulative sum REACHES the budget: a bucket is
     # wholly kept only while cum_end < budget — at cum_end == budget a
     # ZERO-token row ending the bucket would sit at pre == budget, which
@@ -186,11 +183,11 @@ def token_budget_mix(
         out = base
     else:
         bdf = spark.createDataFrame(
-            bnd_rows, f"{source_col} string, __bnd int, __off long, __budget long"
+            bnd_rows, "source string, __bnd int, __off long, __budget long"
         )
-        j = base.join(F.broadcast(bdf), source_col, "left")
+        j = base.join(F.broadcast(bdf), "source", "left")
         whole = j.where(F.col("__bnd").isNull() | (F.col("__bucket") < F.col("__bnd")))
-        w = Window.partitionBy(source_col).orderBy("__okey", id_col)
+        w = Window.partitionBy("source").orderBy("__okey", "doc_id")
         edge = (
             j.where(F.col("__bucket") == F.col("__bnd"))
             .withColumn(
@@ -199,11 +196,11 @@ def token_budget_mix(
             )
             .where(F.col("__pre") < F.col("__budget"))
         )
-        out = whole.select(id_col, source_col, "__tokens").unionByName(
-            edge.select(id_col, source_col, "__tokens")
+        out = whole.select("doc_id", "source", "__tokens").unionByName(
+            edge.select("doc_id", "source", "__tokens")
         )
     return out.select(
-        F.col(id_col), F.col(source_col), F.col("__tokens").alias("tokens")
+        F.col("doc_id"), F.col("source"), F.col("__tokens").alias("tokens")
     )
 
 

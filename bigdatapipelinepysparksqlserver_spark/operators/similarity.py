@@ -606,21 +606,16 @@ def ivf_codebook_topk(
     return _exact_rerank(cands, k)
 
 
-def ivf_assign(
-    vectors: DataFrame,
-    cells,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, vec, cell) — argmax-cosine cell assignment against a
-    collected codebook (``cells`` = sorted (cell, centroid) tuples from
+def ivf_assign(vectors: DataFrame, cells) -> DataFrame:
+    """(vec_id, embedding, cell) — argmax-cosine cell assignment against
+    a collected codebook (``cells`` = sorted (cell, centroid) tuples from
     :func:`_collect_codebook`), as a pure scan-side projection."""
     return (
         vectors.select(
-            F.col(id_col), F.col(vec_col), F.col(vec_col).alias("__v")
+            F.col("vec_id"), F.col("embedding"), F.col("embedding").alias("__v")
         )
         .withColumn("__vnorm", F.expr(_IVF_VNORM_SQL))
-        .select(id_col, vec_col, F.expr(_ivf_argmax_sql(cells)).alias("cell"))
+        .select("vec_id", "embedding", F.expr(_ivf_argmax_sql(cells)).alias("cell"))
     )
 
 
@@ -629,8 +624,6 @@ def ivf_store_append_batch(
     cells: list,
     path: str,
     batch_id: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> None:
     """Append one ingest batch to a GROWING cell-partitioned vector
     store: assign the batch's vectors (:func:`ivf_assign`) and overwrite
@@ -652,7 +645,7 @@ def ivf_store_append_batch(
     """
     if not cells:
         raise ValueError("ivf_store_append_batch: empty codebook")
-    ivf_assign(vectors, cells, id_col=id_col, vec_col=vec_col).write.mode(
+    ivf_assign(vectors, cells).write.mode(
         "overwrite"
     ).partitionBy("cell").parquet(f"{path}/batch={batch_id}")
 

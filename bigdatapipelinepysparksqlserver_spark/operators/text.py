@@ -1246,14 +1246,12 @@ def winnow_span_scrub_apply(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     )
 
 
-def winnow_copies_incremental(
-    base_fps: DataFrame, batch: DataFrame, min_shared: int = 1
-) -> DataFrame:
+def winnow_copies_incremental(base_fps: DataFrame, batch: DataFrame) -> DataFrame:
     """Copy-probe of a NEW batch against a corpus fingerprint index:
     (batch_doc, base_doc, shared_fps) for every base document sharing
-    ≥ ``min_shared`` winnowed fingerprint hashes with a batch document
-    — i.e. every base doc with which a batch doc shares a token run of
-    ≥ w+k−1 tokens (on fingerprints the index retained).
+    a winnowed fingerprint hash with a batch document — i.e. every base
+    doc with which a batch doc shares a token run of ≥ w+k−1 tokens (on
+    fingerprints the index retained).
 
     ``base_fps`` is (doc_id, fp_hash) — pass the bucketed store from
     :func:`winnow_store_bucketed` and the join leaves the stored side
@@ -1269,8 +1267,6 @@ def winnow_copies_incremental(
         base_fps.select(F.col("doc_id").alias("base_doc"), "fp_hash"),
         "fp_hash",
     )
-    return (
-        probe.groupBy("batch_doc", "base_doc")
-        .agg(F.count(F.lit(1)).alias("shared_fps"))
-        .where(F.col("shared_fps") >= min_shared)
+    return probe.groupBy("batch_doc", "base_doc").agg(
+        F.count(F.lit(1)).alias("shared_fps")
     )

@@ -9,6 +9,8 @@ current_cutoff) — the boundary semantics that make CDC exactly-once
    inserts  (sale_date   in window)
    updates  (updated_date in window)
    deletes  (tombstone deleted_date in window, from `removed`)
+   (inserts and updates are one scan of `sales`), deduplicated by
+   Spark and sorted on the driver
 2. re-extract ONLY those partitions from the source, denormalized
    through the dim joins (J1)
 3. replace those year_months in the lake with the extract in one
@@ -62,18 +64,21 @@ class IncrementalLoader:
         self, previous_cutoff: datetime | None, current_cutoff: datetime
     ) -> list[int]:
         """U1 3-branch changed-partition detection
-        (load_sales_history.py:70-97). First run (previous_cutoff None)
-        returns every partition with data before current_cutoff."""
+        (load_sales_history.py:70-97), sorted on the driver. The insert
+        and update branches read the same table, so they are one scan
+        whose filter ORs their windows (a NULL ``updated_date`` is in no
+        window): the same keys as their union, for one scan of ``sales``
+        instead of two. First run (previous_cutoff None) returns every
+        partition with data before current_cutoff."""
         in_window = lambda c: half_open_window(c, previous_cutoff, current_cutoff)  # noqa: E731
-        inserts = self.sales.where(in_window(F.col("sale_date")))
-        updates = self.sales.where(
-            F.col("updated_date").isNotNull() & in_window(F.col("updated_date"))
+        upserts = self.sales.where(
+            in_window(F.col("sale_date")) | in_window(F.col("updated_date"))
         )
         deletes = self.removed.where(
             (F.col("table") == "sales") & in_window(F.col("deleted_date"))
         )
-        wl = changed_partitions([inserts, updates, deletes], key="year_month")
-        return [r.year_month for r in wl.collect()]
+        wl = changed_partitions([upserts, deletes], key="year_month")
+        return sorted(r.year_month for r in wl.collect())
 
     # -- step 2: extract ---------------------------------------------------
 

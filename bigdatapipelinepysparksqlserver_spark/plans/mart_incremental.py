@@ -51,6 +51,7 @@ from pyspark.sql.types import (
 from ..functions.expressions import decode_map
 from ..operators.relational import reconcile_aggs, reconcile_cols
 from ..sources.lake import LakeTable
+from ..sources.lake_snapshot import one_file_per_partition
 
 SALES_AGG_PARTIAL = StructType(
     [
@@ -105,18 +106,26 @@ class IncrementalMart:
         with ``partials``) compares against the source.
 
         Both partial writes scan the rebuilt partitions from the lake's
-        files (partition-pruned), and the totals are observed
+        files (partition-pruned; after the lake's own write the scan
+        needs no schema-inference job), and the totals are observed
         (``DataFrame.observe``) on the sales-partial write's scan, so
         they cost neither a job nor a scan of their own; with
         ``reconcile`` taking them, a cycle reads the rebuilt partitions
-        twice instead of three times. (Persisting one read-back for both
-        writes measured no faster and used more memory.) An observation
-        is reported only if the plan that carries it ran to the end:
-        when no changed row is paid, AQE swaps the empty write for an
-        empty relation and ``Observation.get`` fails or can block for
-        good. So the observation is read only when the sales partial
-        received rows; otherwise the totals come from an aggregate over
-        the same partitions.
+        twice instead of three times. Each write is two Spark jobs, one
+        shuffle and the write, so the refresh is four: each write hashes
+        its paid rows once by ``year_month`` (see :meth:`_partials`),
+        which is already the clustering its aggregate and the partial's
+        own write need. The price is that the changed partitions' raw
+        paid rows cross that shuffle, not partially aggregated ones.
+        (Persisting one read-back for both writes has not been measured
+        with this plan; with two shuffles per write it was no faster and
+        used more memory.) An observation is reported only if the plan
+        that carries it ran to the end: when no changed row is paid, AQE
+        swaps the empty write for an empty relation and
+        ``Observation.get`` fails or can block for good. So the
+        observation is read only when the sales partial received rows;
+        otherwise the totals come from an aggregate over the same
+        partitions.
 
         Idempotent (C4): each partial's changed year_months are
         replaced whole by a pure function of the lake's current content,
@@ -125,11 +134,31 @@ class IncrementalMart:
         """
         if not changed:
             return 0, 0
-        rows = self.lake.read().where(F.col("year_month").isin(changed))
+        scan = self.lake.read().where(F.col("year_month").isin(changed))
         totals = Observation()
+        sales, pairs = self._partials(scan, totals)
+        self.sales_partial.apply_rebuild(sales, changed_year_months=changed)
+        self.client_partial.apply_rebuild(pairs, changed_year_months=changed)
+        if self.sales_partial.partition_file_stats(
+            only_under=[f"year_month={v}" for v in changed]
+        ):
+            got = totals.get
+            return got["sale_count"], got["paid_sum"]
+        return tuple(reconcile_aggs(scan, "id", "paid").first())
+
+    @staticmethod
+    def _partials(scan: DataFrame, totals: Observation) -> tuple:
+        """The (sales, pairs) partial frames of the lake rows ``scan``,
+        ``totals`` observed on the sales frame's scan. Each hashes its
+        paid rows by ``year_month`` with :func:`one_file_per_partition`,
+        the partitioning the partial's write asks for too, so the
+        aggregate and the write reuse that one shuffle (Spark drops the
+        write's repartition as redundant)."""
+        def paid(df: DataFrame) -> DataFrame:
+            return one_file_per_partition(df, ("year_month",)).where(F.col("paid") > 0)
+
         sales = (
-            rows.observe(totals, *reconcile_cols("id", "paid"))
-            .where(F.col("paid") > 0)
+            paid(scan.observe(totals, *reconcile_cols("id", "paid")))
             .groupBy("year_month", "country", "product", "size", "color")
             .agg(
                 F.count("id").alias("sales_count"),
@@ -138,18 +167,11 @@ class IncrementalMart:
             .select([f.name for f in SALES_AGG_PARTIAL.fields])
         )
         pairs = (
-            rows.where(F.col("paid") > 0)
+            paid(scan)
             .select("country", "gender", "client_id", "year_month")
             .distinct()
         )
-        self.sales_partial.apply_rebuild(sales, changed_year_months=changed)
-        self.client_partial.apply_rebuild(pairs, changed_year_months=changed)
-        if self.sales_partial.partition_file_stats(
-            only_under=[f"year_month={v}" for v in changed]
-        ):
-            got = totals.get
-            return got["sale_count"], got["paid_sum"]
-        return tuple(reconcile_aggs(rows, "id", "paid").first())
+        return sales, pairs
 
     # -- final marts (small aggregates over partials) ---------------------
 
@@ -157,10 +179,13 @@ class IncrementalMart:
         """Mart query 1 from partials: distinct pairs union exactly, so
         COUNT(DISTINCT) over the partial tuples equals the full-lake
         answer (gender decoded, refresh stamped — A2+F2+F3 parity with
-        ``pipelines.mart_client_count_df``)."""
+        ``pipelines.mart_client_count_df``). Hashing the tuples by
+        (country, gender) first lets the distinct and the count share
+        that one shuffle."""
         return (
             self.client_partial.read()
             .select("country", "gender", "client_id")
+            .repartition("country", "gender")
             .distinct()
             .groupBy("country", "gender")
             .agg(F.count(F.lit(1)).alias("client_count"))

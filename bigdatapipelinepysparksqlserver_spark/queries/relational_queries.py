@@ -232,7 +232,7 @@ def changed_partitions_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.where((F.col("event_type") == et) & window).select(key)
         for et in ("purchase", "click", "error")
     ]
-    return changed_partitions(branches, "partition_day")
+    return changed_partitions(branches, "partition_day").orderBy("partition_day")
 
 
 # --------------------------------------------------------------------------

@@ -65,6 +65,10 @@ class LakeTable:
 
             schema = SALES_HISTORY
         self.schema = schema
+        # the schema of this instance's last write, and the schema an
+        # inferring read returned after a write of that schema (see read)
+        self._written = None
+        self._read_schema = None
 
     def exists(self) -> bool:
         return os.path.isdir(self.path) and any(
@@ -76,6 +80,19 @@ class LakeTable:
         the partition columns (verify via PartitionFilters in .explain).
         An empty/absent table reads as zero rows of ``self.schema``.
 
+        Parquet schema inference is a one-task Spark job per read, so
+        after this instance's own write the read skips it: the schema
+        the first inferring read returned is passed back with
+        ``.schema(...)`` while the instance's writes keep the schema of
+        the write that read followed. Being inference's own answer, it
+        carries the inferred partition column types (from directory
+        names: ``year_month`` reads as ``int`` even when the written
+        frame held ``long``). It is remembered only when its data
+        columns are the written ones, so a table whose older files have
+        another schema keeps inferring; a write with another schema
+        drops it, and an instance that never wrote always infers. Like
+        the writes, this assumes a single writer per table.
+
         ``merge_schema=True`` unions the schemas of ALL partition files
         (columns added by later CDC runs read as NULL in older
         partitions) — schema evolution without rewriting history, which
@@ -84,10 +101,16 @@ class LakeTable:
         should use the latest schema it already knows."""
         if not self.exists():
             return self.spark.createDataFrame([], self.schema)
-        reader = self.spark.read
         if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(self.path)
+            return self.spark.read.option("mergeSchema", "true").parquet(self.path)
+        if self._read_schema is not None:
+            return self.spark.read.schema(self._read_schema).parquet(self.path)
+        df = self.spark.read.parquet(self.path)
+        if self._written is not None and _data_cols(df.schema, self.partition_cols) == (
+            _data_cols(self._written, self.partition_cols)
+        ):
+            self._read_schema = df.schema
+        return df
 
     def write_full(self, df: DataFrame) -> None:
         """Initial full load (reference: first run, empty partition list →
@@ -269,9 +292,15 @@ class LakeTable:
     def _writer(self, df: DataFrame):
         # one file per partition, written by every core (see
         # one_file_per_partition)
-        return one_file_per_partition(df, self.partition_cols).write.partitionBy(
-            *self.partition_cols
-        )
+        out = one_file_per_partition(df, self.partition_cols)
+        if out.schema != self._written:
+            self._written, self._read_schema = out.schema, None
+        return out.write.partitionBy(*self.partition_cols)
+
+
+def _data_cols(schema, partition_cols: Sequence[str]) -> list:
+    """(name, type) of the non-partition columns of ``schema``."""
+    return [(f.name, f.dataType) for f in schema.fields if f.name not in partition_cols]
 
 
 def write_bucketed_table(

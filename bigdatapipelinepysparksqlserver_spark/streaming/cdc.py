@@ -119,9 +119,7 @@ def foreach_batch_partition_overwrite(
 
 
 def foreach_batch_incremental_mart(
-    lake: LakeTable,
-    partials,
-    transform: Callable[[DataFrame], DataFrame] | None = None,
+    lake: LakeTable, partials
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch sink composing the partition rebuild with incremental
     mart maintenance: each micro-batch overwrites the lake partitions it
@@ -147,13 +145,12 @@ def foreach_batch_incremental_mart(
     def _sink(batch_df: DataFrame, batch_id: int) -> bool:
         # returns whether the batch wrote anything (Spark ignores the
         # return value; the publish wrapper composes on it so emptiness
-        # and the transform are evaluated exactly ONCE per batch)
-        out = transform(batch_df) if transform else batch_df
-        if out.isEmpty():
+        # is evaluated exactly ONCE per batch)
+        if batch_df.isEmpty():
             return False
-        lake.overwrite_partitions(out)
+        lake.overwrite_partitions(batch_df)
         changed = [
-            r.year_month for r in out.select("year_month").distinct().collect()
+            r.year_month for r in batch_df.select("year_month").distinct().collect()
         ]
         partials.refresh(changed)
         return True
@@ -167,7 +164,6 @@ def foreach_batch_incremental_mart_publish(
     publisher,
     now_fn: Callable[[], "object"],
     tables: tuple = ("sales_history_1", "sales_history_2"),
-    transform: Callable[[DataFrame], DataFrame] | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch sink closing the FULL reference loop continuously:
     micro-batch → lake partition overwrite → incremental mart partials →
@@ -187,7 +183,7 @@ def foreach_batch_incremental_mart_publish(
     set: the partials refresh only touched partitions, and the mart
     aggregate read off the partials is partial-table-sized.
     """
-    inner = foreach_batch_incremental_mart(lake, partials, transform=transform)
+    inner = foreach_batch_incremental_mart(lake, partials)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         if not inner(batch_df, batch_id):
@@ -206,8 +202,6 @@ def foreach_batch_incremental_mart_publish(
 def foreach_batch_ivf_store_upsert(
     store_path: str,
     codebook_cells: list,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch sink: continuously-growing IVF cell-partitioned
     vector store — the streaming ingest path of the ANN disk layout
@@ -229,12 +223,10 @@ def foreach_batch_ivf_store_upsert(
         raise ValueError("foreach_batch_ivf_store_upsert: empty codebook")
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        vecs = batch_df.select(id_col, vec_col)
+        vecs = batch_df.select("vec_id", "embedding")
         if vecs.isEmpty():
             return
-        ivf_store_append_batch(
-            vecs, cells, store_path, batch_id, id_col=id_col, vec_col=vec_col
-        )
+        ivf_store_append_batch(vecs, cells, store_path, batch_id)
 
     return _sink
 
@@ -262,8 +254,6 @@ def foreach_batch_online_semantic_dedup(
     store_path: str,
     codebook_cells: list,
     threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch sink: continuously semantically-deduplicated
     embedding ingestion.
@@ -299,43 +289,43 @@ def foreach_batch_online_semantic_dedup(
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        vecs = batch_df.select(id_col, vec_col)
+        vecs = batch_df.select("vec_id", "embedding")
         if vecs.isEmpty():
             return
         vecs_dir = os.path.join(store_path, "vecs")
-        assigned = ivf_assign(vecs, cells, id_col=id_col, vec_col=vec_col).persist()
+        assigned = ivf_assign(vecs, cells).persist()
         probe_cells = sorted(
             r["cell"] for r in assigned.select("cell").distinct().collect()
         )
         b1 = assigned.select(
-            F.col(id_col).alias("id1"), F.col(vec_col).alias("v1"), "cell"
+            F.col("vec_id").alias("id1"), F.col("embedding").alias("v1"), "cell"
         )
         b2 = assigned.select(
-            F.col(id_col).alias("id2"), F.col(vec_col).alias("v2"), "cell"
+            F.col("vec_id").alias("id2"), F.col("embedding").alias("v2"), "cell"
         )
         # within-batch greedy pairwise: the larger id of each in-cell pair
         bb = (
             b1.join(b2, "cell")
             .where(F.col("id1") < F.col("id2"))
             .where(cosine(F.col("v1"), F.col("v2")) >= threshold)
-            .select(F.col("id2").alias(id_col))
+            .select(F.col("id2").alias("vec_id"))
         )
         if _prior_batches(spark, vecs_dir, batch_id):
             base = (
                 spark.read.parquet(vecs_dir)
                 .where(F.col("batch") != batch_id)
                 .where(F.col("cell").isin(probe_cells))
-                .select(F.col(id_col).alias("id1"), F.col(vec_col).alias("v1"), "cell")
+                .select(F.col("vec_id").alias("id1"), F.col("embedding").alias("v1"), "cell")
             )
             cross = (
                 base.join(b2, "cell")
                 .where(cosine(F.col("v1"), F.col("v2")) >= threshold)
-                .select(F.col("id2").alias(id_col))
+                .select(F.col("id2").alias("vec_id"))
             )
             drops = bb.unionByName(cross).distinct()
         else:
             drops = bb.distinct()
-        accepted = assigned.join(drops, id_col, "left_anti")
+        accepted = assigned.join(drops, "vec_id", "left_anti")
         accepted.write.mode("overwrite").partitionBy("cell").parquet(
             os.path.join(vecs_dir, f"batch={batch_id}")
         )
@@ -483,16 +473,13 @@ def streaming_transition_counts(
 def foreach_batch_token_budget_ingest(
     store_path: str,
     budgets: dict,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch sink: budget-bounded corpus ingestion — the
     streaming form of :func:`~..operators.sampling.token_budget_mix`.
     Each micro-batch admits documents per source until the source's
     token budget is exhausted ACROSS the whole stream:
 
-    - ``{store}/docs/batch=N`` — accepted (id, source, tokens, text)
+    - ``{store}/docs/batch=N`` — accepted (doc_id, source, tokens, text)
 
     Accept rule: a doc is admitted iff tokens consumed by prior
     batches PLUS the tokens of batch peers ordered before it (md5
@@ -520,7 +507,7 @@ def foreach_batch_token_budget_ingest(
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        docs = batch_df.select(id_col, source_col, text_col)
+        docs = batch_df.select("doc_id", "source", "text")
         if docs.isEmpty():
             return
         docs_dir = os.path.join(store_path, "docs")
@@ -529,24 +516,18 @@ def foreach_batch_token_budget_ingest(
             rows = (
                 spark.read.parquet(docs_dir)
                 .where(F.col("batch") != batch_id)
-                .groupBy(source_col)
+                .groupBy("source")
                 .agg(F.sum("tokens").alias("t"))
                 .collect()
             )
-            consumed = {r[source_col]: int(r["t"]) for r in rows}
+            consumed = {r["source"]: int(r["t"]) for r in rows}
         remaining = {
             s: max(0, int(b) - consumed.get(s, 0)) for s, b in budgets.items()
         }
-        accepted = token_budget_mix(
-            docs,
-            remaining,
-            id_col=id_col,
-            text_col=text_col,
-            source_col=source_col,
-        )
+        accepted = token_budget_mix(docs, remaining)
         (
-            accepted.join(docs.select(id_col, text_col), id_col)
-            .select(id_col, source_col, "tokens", text_col)
+            accepted.join(docs.select("doc_id", "text"), "doc_id")
+            .select("doc_id", "source", "tokens", "text")
             .write.mode("overwrite")
             .parquet(os.path.join(docs_dir, f"batch={batch_id}"))
         )
@@ -731,7 +712,6 @@ def foreach_batch_edge_store_append(
 
 def foreach_batch_online_copy_gate(
     store_path: str,
-    min_shared: int = 1,
     df_cap: int = 50,
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch sink: continuously copy-gated corpus ingestion over
@@ -739,8 +719,8 @@ def foreach_batch_online_copy_gate(
     ``operators.text.winnow_copies_incremental`` and the third member
     of the online-ingest trio (LSH set-similarity dedup, semantic
     dedup, and now MOSS-style copied-run detection: a batch doc is
-    rejected when it shares ≥ ``min_shared`` winnowed fingerprints —
-    i.e. a ≥ w+k−1-token run — with anything accepted so far, or with
+    rejected when it shares a winnowed fingerprint — i.e. a
+    ≥ w+k−1-token run — with anything accepted so far, or with
     a smaller-id doc of its own batch).
 
     Store layout (exactly-once by batch-scoped overwrite, the same
@@ -791,9 +771,9 @@ def foreach_batch_online_copy_gate(
             base_fps = base_all.join(base_ok, "fp_hash")
         else:
             base_fps = spark.createDataFrame([], "doc_id long, fp_hash long")
-        cross = winnow_copies_incremental(
-            base_fps, docs, min_shared=min_shared
-        ).select(F.col("batch_doc").alias("doc_id"))
+        cross = winnow_copies_incremental(base_fps, docs).select(
+            F.col("batch_doc").alias("doc_id")
+        )
         # within-batch: greedy pairwise, larger id drops; the same
         # df_cap bounds a boilerplate gram's B² pair blowup
         bfps_all = (
@@ -808,9 +788,6 @@ def foreach_batch_online_copy_gate(
         within = (
             a.join(b, "fp_hash")
             .where(F.col("id1") < F.col("id2"))
-            .groupBy("id1", "id2")
-            .agg(F.count(F.lit(1)).alias("s"))
-            .where(F.col("s") >= min_shared)
             .select(F.col("id2").alias("doc_id"))
         )
         drops = cross.unionByName(within).distinct()

@@ -54,16 +54,16 @@ class StreamingHealthListener(StreamingQueryListener):
     schema — join it, window it, or sink it with the same operators as
     any other table (e.g. alert when ``batch_duration_ms`` trends above
     the trigger interval, the classic falling-behind signal). ``clear()``
-    truncates after a sink flush; ``max_batches`` bounds memory for
-    long-lived sessions (oldest entries drop first — the health table is
-    a gauge, not an audit log; sink snapshots periodically if history
-    matters).
+    truncates after a sink flush; the buffer keeps the newest 10,000
+    batches, which bounds memory for long-lived sessions (oldest entries
+    drop first — the health table is a gauge, not an audit log; sink
+    snapshots periodically if history matters).
     """
 
-    def __init__(self, max_batches: int = 10_000):
+    def __init__(self):
         self._rows: list[tuple] = []
         self._lock = threading.Lock()
-        self._max = max_batches
+        self._max = 10_000
 
     # -- listener callbacks (driver listener-bus thread) --------------
     def onQueryStarted(self, event) -> None:  # noqa: N802 (Spark API)
@@ -107,12 +107,10 @@ class StreamingHealthListener(StreamingQueryListener):
             self._rows.clear()
 
 
-def attach_health_listener(
-    spark: SparkSession, max_batches: int = 10_000
-) -> StreamingHealthListener:
+def attach_health_listener(spark: SparkSession) -> StreamingHealthListener:
     """Create + register a health listener on this session's listener
     bus; returns the listener (caller keeps the handle to snapshot /
     clear / remove via ``spark.streams.removeListener``)."""
-    listener = StreamingHealthListener(max_batches=max_batches)
+    listener = StreamingHealthListener()
     spark.streams.addListener(listener)
     return listener

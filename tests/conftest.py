@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -34,3 +36,28 @@ def executed_plan():
 def spark():
     s = get_spark("pytest", master="local[4]", shuffle_partitions=4)
     yield s
+
+
+@pytest.fixture()
+def jobs_launched(spark):
+    """``with jobs_launched() as jobs:`` runs the block in a job group of
+    its own; on leaving it, the group the thread had is restored and
+    ``jobs`` holds the ids of the Spark jobs the block launched."""
+    sc = spark.sparkContext
+    props = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
+    @contextlib.contextmanager
+    def launched():
+        old = {p: sc.getLocalProperty(p) for p in props}
+        group = f"jobs-launched-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "jobs_launched")
+        jobs: list = []
+        try:
+            yield jobs
+        finally:
+            for p, v in old.items():
+                sc.setLocalProperty(p, v)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs.extend(sorted(sc.statusTracker().getJobIdsForGroup(group)))
+
+    return launched

@@ -237,6 +237,50 @@ def test_schema_evolution_merge_schema(spark, tmp_path):
     assert lake.read(merge_schema=True).count() == 2
 
 
+def test_read_after_own_write_runs_no_inference_job(spark, tmp_path, jobs_launched):
+    """After the instance's own write, a read reuses the schema its first
+    read inferred: no Spark job, and the same schema inference gives,
+    ``year_month`` as the ``int`` its directory names infer although the
+    written frame held ``long``."""
+    path = str(tmp_path / "lake")
+    lake = LakeTable(spark, path)
+    lake.write_full(_df(spark, [(1, "a", 202401, "PT"), (2, "b", 202402, "ES")]))
+    lake.read()
+    lake.overwrite_partitions(_df(spark, [(3, "c", 202401, "PT")]))
+    with jobs_launched() as jobs:
+        df = lake.read()
+    assert jobs == []
+    assert df.schema == spark.read.parquet(path).schema
+    assert df.schema["year_month"].dataType.simpleString() == "int"
+    assert {(r.id, r.year_month) for r in df.collect()} == {(3, 202401), (2, 202402)}
+
+
+def test_read_after_write_adding_column_matches_inference(spark, tmp_path):
+    """A write with another schema drops the remembered one: the next
+    plain reads return what inference returns on the directory."""
+    path = str(tmp_path / "lake")
+    lake = LakeTable(spark, path)
+    lake.write_full(_df(spark, [(1, "a", 202401, "PT")]))
+    lake.read()
+    evolved = _df(spark, [(2, "b", 202402, "PT")]).withColumn("channel", F.lit("web"))
+    lake.overwrite_partitions(evolved.select("id", "v", "channel", "year_month", "country"))
+    for _ in range(2):
+        assert lake.read().schema == spark.read.parquet(path).schema
+
+
+def test_fresh_instance_over_existing_table_infers(spark, tmp_path, jobs_launched):
+    """An instance that never wrote knows nothing of the files' schema
+    and infers it, one job per read."""
+    path = str(tmp_path / "lake")
+    LakeTable(spark, path).write_full(_df(spark, [(1, "a", 202401, "PT")]))
+    fresh = LakeTable(spark, path)
+    for _ in range(2):
+        with jobs_launched() as jobs:
+            df = fresh.read()
+        assert len(jobs) == 1
+    assert df.schema == spark.read.parquet(path).schema
+
+
 # ---------------------------------------------------------------------------
 # bloom-filtered point-lookup store
 # ---------------------------------------------------------------------------

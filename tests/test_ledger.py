@@ -194,22 +194,16 @@ def test_interrupted_mutation_keeps_previous_ledger(spark, tmp_path, monkeypatch
     assert [r.id for r in led.rows()] == [1, 2]
 
 
-def test_ledger_cycle_launches_no_spark_job(spark, tmp_path):
+def test_ledger_cycle_launches_no_spark_job(spark, tmp_path, jobs_launched):
     """A full start_run → finish_validation sequence, with the id, purge
     and cutoff lookups around it, stays on the driver."""
-    sc = spark.sparkContext
     led = RunLedger(spark, str(tmp_path / "ledger"))
     _run(led, 1, T0)  # the first write creates the directory
-    group = f"ledger-no-jobs-{os.getpid()}"
-    sc.setJobGroup(group, "ledger cycle")
-    try:
+    with jobs_launched() as jobs:
         t1 = datetime(2024, 6, 2, 8, 0)
         run_id = led.next_run_id()
         led.purge_failed(run_id)
         _run(led, run_id, t1)
         led.rows()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert jobs == []
     assert [r.id for r in led.rows()] == [1, 2]

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 import threading
 from datetime import datetime, timedelta
 from decimal import Decimal
@@ -15,6 +16,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql import Observation
 
 from bigdatapipelinepysparksqlserver_spark.pipelines import (
     MartPublisher,
@@ -27,6 +29,7 @@ from bigdatapipelinepysparksqlserver_spark.pipelines import (
 from bigdatapipelinepysparksqlserver_spark.plans.ledger import RunLedger
 from bigdatapipelinepysparksqlserver_spark.plans.mart_incremental import IncrementalMart
 from bigdatapipelinepysparksqlserver_spark.sources.lake import LakeTable
+from bigdatapipelinepysparksqlserver_spark.sources.lake_snapshot import one_file_per_partition
 from bigdatapipelinepysparksqlserver_spark.workload import (
     SourceTables,
     WorkloadGenerator,
@@ -228,6 +231,59 @@ def test_cycle_runs_no_partition_listing_or_drop(spark, env, tmp_path, monkeypat
         "sales_agg_partial",
     ]
     _assert_marts_match_full(lake, mart)
+
+
+def test_scheduled_cycles_stay_within_job_budget(spark, env, tmp_path, jobs_launched):
+    """A scheduled cycle after the full load runs at most 16 Spark jobs,
+    for an append and for a cycle with updates and deletes alike:
+    detection 2, lake rewrite 4 (two dim broadcasts, the shuffle, the
+    write), partials 4, reconcile 2, mart staging 4. No read after a
+    table's own write infers its schema, detection sorts on the driver,
+    and each partial and the client-count mart shuffle once."""
+    src, gen, lake, ledger, mart = env
+    cycle = sales_pipeline_cycle(
+        spark, src, lake, ledger, MartPublisher(str(tmp_path / "mart")), partials=mart
+    )
+    gen.insert_sales(120, batch=1, now=T1 - timedelta(hours=1), spread_days=60)
+    cycle(T1)
+    t = T2 - timedelta(hours=1)
+    gen.insert_sales(20, batch=2, now=t, spread_days=1)
+    with jobs_launched() as append:
+        rep = cycle(T2)
+    assert rep["pipeline_1"]["validation"].status == "SUCCESSFUL"
+    t = T3 - timedelta(hours=1)
+    gen.insert_sales(20, batch=3, now=t, spread_days=1)
+    assert gen.update_sales(batch=3, now=t, p=0.1) > 0
+    assert gen.delete_sales(batch=3, now=t, p=0.05) > 0
+    with jobs_launched() as restate:
+        rep = cycle(T3)
+    assert rep["pipeline_1"]["validation"].status == "SUCCESSFUL"
+    assert max(len(append), len(restate)) <= 16, (append, restate)
+    _assert_marts_match_full(lake, mart)
+
+
+def _exchanges(plan: str) -> list:
+    """What follows each shuffle ``Exchange`` node of a physical plan."""
+    return re.findall(r"\bExchange (.*)", plan)
+
+
+def test_partials_and_client_count_shuffle_once(spark, env, executed_plan):
+    """The refresh hashes its read-back once by ``year_month``, with the
+    partition count of the partial writes' own repartition, so each
+    partial frame as written holds exactly that one shuffle; the
+    client-count mart's distinct and count share one shuffle too. A
+    changed count on either side would bring a second shuffle back."""
+    src, gen, lake, ledger, mart = env
+    gen.insert_sales(60, batch=1, now=T1 - timedelta(hours=1), spread_days=40)
+    months = run_pipeline_1(spark, src, lake, ledger, now=T1, partials=mart)[
+        "rebuilt_partitions"
+    ]
+    n = spark.sparkContext.defaultParallelism
+    scan = lake.read().where(F.col("year_month").isin(months))
+    for df in IncrementalMart._partials(scan, Observation()):
+        (exchange,) = _exchanges(executed_plan(one_file_per_partition(df, ("year_month",))))
+        assert re.match(rf"hashpartitioning\(year_month#\d+, {n}\)", exchange), exchange
+    assert len(_exchanges(executed_plan(mart.client_count(REFRESH)))) == 1
 
 
 def _in_thread(fn, timeout=180.0):

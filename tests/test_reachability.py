@@ -206,6 +206,9 @@ ALLOWED_OPTIONS = {
     "operators/retrieval.py:build_postings_store(num_buckets)": _SMALL,
     "operators/retrieval.py:bm25_from_store(num_buckets)": _SMALL,
     "operators/text.py:winnow_store_bucketed(num_buckets)": _SMALL,
+    "operators/graph.py:edge_store_append_batch(buckets)": _SMALL,
+    "operators/stores.py:publish_store_version(fs)": _FAKE_FS,
+    "operators/stores.py:store_live_path(fs)": _FAKE_FS,
     "operators/dedup.py:minhash_near_duplicates_collapsed(num_hashes)": "tests run a "
     "16-hash, 4-band signature at test scale",
     "operators/dedup.py:minhash_near_duplicates_collapsed(bands)": "tests run a "
@@ -228,6 +231,12 @@ ALLOWED_OPTIONS = {
     "setting: how long a crashed publisher's claim is honoured",
     "operators/stores.py:publish_store_version(grace_seconds)": "deployment setting: "
     "how long a crashed publisher's claim is honoured",
+    "operators/stores.py:publish_store_version(retain)": "deployment setting: how many "
+    "published versions in-flight readers may still hold",
+    "sources/lake_snapshot.py:SnapshotLakeTable._publish(expect_mid)": "a test publishes "
+    "a change set computed against a stale snapshot to check the compare-and-swap",
+    "sources/lake_snapshot.py:SnapshotLakeTable._publish(replace_rels)": "a test publishes "
+    "a change set computed against a stale snapshot to check the compare-and-swap",
     "sources/lake_snapshot.py:SnapshotLakeTable.__init__(expectations)": "deployment "
     "setting: the data-quality rules a publish must pass",
     "pipelines.py:PipelineScheduler.__init__(schedule_interval)": "deployment setting: "
@@ -458,13 +467,24 @@ def _options(trees: dict) -> dict:
     return out
 
 
-def _calls(trees) -> dict:
+def _walk(tree, skip=frozenset()):
+    """`ast.walk`, without the subtrees whose node ids are in `skip`."""
+    todo = [tree]
+    while todo:
+        node = todo.pop()
+        if id(node) not in skip:
+            yield node
+            todo.extend(ast.iter_child_nodes(node))
+
+
+def _calls(trees, skip=frozenset()) -> dict:
     """Called name -> [(positional arguments before any `*`, whether a
     `*` splat follows, keywords with None for a `**` splat)] over every
-    call in `trees`. The called name is a bare name (the imported name
-    for an `import ... as` alias) or the attribute of a dotted call;
-    for `super().__init__(...)` it is each base of the enclosing class,
-    and for `Base.__init__(...)` it is `Base`."""
+    call in `trees` outside the nodes whose ids are in `skip`. The
+    called name is a bare name (the imported name for an `import ... as`
+    alias) or the attribute of a dotted call; for `super().__init__(...)`
+    it is each base of the enclosing class, and for `Base.__init__(...)`
+    it is `Base`."""
     out: dict[str, list] = {}
     for tree in trees:
         aliases = {
@@ -479,7 +499,7 @@ def _calls(trees) -> dict:
             if isinstance(c, ast.ClassDef):
                 for n in ast.walk(c):
                     bases[id(n)] = [getattr(b, "id", getattr(b, "attr", None)) for b in c.bases]
-        for node in ast.walk(tree):
+        for node in _walk(tree, skip):
             if not isinstance(node, ast.Call):
                 continue
             f = node.func
@@ -500,14 +520,15 @@ def _calls(trees) -> dict:
     return out
 
 
-def _option_findings(trees, callers, allowed, exempt=frozenset()):
+def _option_findings(trees, callers, allowed, exempt=frozenset(), skip=frozenset()):
     """(unset, undefined, stale) for the options scan: each option not
     on `allowed` that no call in `callers` sets, as
     "module:key(param=default)"; the `allowed` entries that name no
     option; and those some call sets. Options of a definition in
-    `exempt`, or of a method whose class is, are skipped."""
+    `exempt`, or of a method whose class is, are skipped. Calls inside
+    the definitions whose node ids are in `skip` set nothing."""
     options = _options(trees)
-    calls = _calls(callers)
+    calls = _calls(callers, skip)
 
     def is_set(called, param, position):
         return any(
@@ -535,14 +556,21 @@ def test_every_option_is_set_outside_tests():
     call outside tests (package, tools/, perfbench/, bench.py,
     __spark_entry__.py): by keyword, by position or through a `*`/`**`
     splat. Calls match by the function's name, or by the class's for
-    `__init__`, so a name collision can only hide an option. An option
-    only tests set stays only on `ALLOWED_OPTIONS`, which it must still
-    need."""
+    `__init__`, so a name collision can only hide an option. A call
+    inside a `TEST_ONLY_WORKLIST` definition is test-only code and sets
+    nothing. An option only tests set stays only on `ALLOWED_OPTIONS`,
+    which it must still need."""
     trees = {str(p.relative_to(PKG)): ast.parse(p.read_text()) for p in sorted(PKG.rglob("*.py"))}
     keys = {(m, k) for m, tree in trees.items() for k, _ in _definitions(tree)}
     exempt = set().union(*(_allowed_keys(keys, e) for e in {**ALLOWED_DEFS, **TEST_ONLY_WORKLIST}))
-    callers = [ast.parse(p.read_text()) for p in _referrers()]
-    unset, undefined, stale = _option_findings(trees, callers, ALLOWED_OPTIONS, exempt)
+    test_only = set().union(*(_allowed_keys(keys, e) for e in TEST_ONLY_WORKLIST))
+    skip = {
+        id(node) for m, tree in trees.items() for k, node in _definitions(tree) if (m, k) in test_only
+    }
+    callers = list(trees.values()) + [
+        ast.parse(p.read_text()) for p in _referrers() if not p.is_relative_to(PKG)
+    ]
+    unset, undefined, stale = _option_findings(trees, callers, ALLOWED_OPTIONS, exempt, skip)
     _assert_clean(unset, undefined, stale, what="options no call outside tests sets")
 
 
@@ -557,9 +585,13 @@ def test_option_scan_on_literal_source():
         "    @staticmethod\n"
         "    def s(y=4): pass\n"
     )
-    caller = ast.parse("f(0, 5)\ng(0, **kw)\nh(0)\nC(7, q=2)\nobj.m(4)\nC.s(*ys)\n")
+    caller = ast.parse(
+        "f(0, 5)\ng(0, **kw)\nh(0)\nC(7, q=2)\nobj.m(4)\nC.s(*ys)\n"
+        "def only_tests():\n    h(0, k=9)\n"
+    )
     unset, undefined, stale = _option_findings(
-        {"lib.py": lib}, [caller], ["lib.py:C.__init__(r)", "lib.py:f(k)", "lib.py:nope(z)"]
+        {"lib.py": lib}, [caller], ["lib.py:C.__init__(r)", "lib.py:f(k)", "lib.py:nope(z)"],
+        skip={id(caller.body[-1])},
     )
     assert unset == ["lib.py:f(w=2)", "lib.py:h(k=1)"]
     assert undefined == ["lib.py:nope(z)"]

@@ -242,7 +242,7 @@ def test_semantic_dedup_pair_budget_guard(spark):
         semantic_dedup(vectors, codebook, pair_budget=10).collect()
 
 
-def test_semantic_dedup_build_job_bound(spark):
+def test_semantic_dedup_build_job_bound(spark, jobs_launched):
     """semantic_dedup runs its eager Spark jobs while the plan is built
     (codebook collect, the contracted-edge checkpoint, the star-forest
     test). On this corpus every duplicate group is a clique inside one
@@ -263,19 +263,12 @@ def test_semantic_dedup_build_job_bound(spark):
         [(0, _vec(0)), (1, _vec(7)), (2, _vec(33))],
         "cell int, centroid array<double>",
     )
-    sc = spark.sparkContext
-    group = f"semantic-dedup-build-{id(vectors)}"
-    sc.setJobGroup(group, "semantic_dedup build")
-    try:
+    with jobs_launched() as jobs:
         out = semantic_dedup(vectors, codebook, threshold=0.9)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     got = {(r.vec_id, r.component) for r in out.collect()}
     release_caches()
     assert got == {(i, 10) for i in range(10, 14)} | {(i, 20) for i in (20, 21, 22)}
-    assert jobs <= 14, f"{jobs} Spark jobs while building semantic_dedup"
+    assert len(jobs) <= 14, f"{len(jobs)} Spark jobs while building semantic_dedup"
 
 
 def test_assignment_blas_path_matches_literal(spark, executed_plan):
